@@ -194,17 +194,29 @@ object Bench {
       ((t0 - tq0) / 1e9, (System.nanoTime() - t0) / 1e9)
     }
 
+    /** Ids of the RDDs persisted right now — taken before each gate so
+      * [[clearAll]] frees only what that gate created. */
+    def persistedIds(): Set[Int] =
+      spark.sparkContext.getPersistentRDDs.keySet.toSet
+
     /** Between-query cleanup. `clearCache` drops SQL-cached relations,
       * but LOCALCHECKPOINT blocks (the Lineage plan cuts) are plain
       * persisted RDDs the catalog never sees — without the RDD sweep
       * they accumulate across 231 queries × 3 executions and lean on
-      * storage memory for the whole suite (r15 advisor finding). Safe
-      * here: every execution builds a fresh DataFrame, nothing reads a
-      * previous execution's blocks, and shared gate fixtures live on
-      * disk (Fixtures.sharedDir), not in block storage. */
-    def clearAll(): Unit = {
+      * storage memory for the whole suite (r15 advisor finding). Only
+      * the RDDs persisted since `before` (the gate's own) are freed —
+      * anything persisted before the gate is not its to drop — and a
+      * gate RDD still persisted afterwards fails the gate loudly
+      * instead of leaking into the next one. */
+    def clearAll(before: Set[Int]): Unit = {
       spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      spark.sparkContext.getPersistentRDDs
+        .collect { case (id, rdd) if !before(id) => rdd }
+        .foreach(_.unpersist(false))
+      val left = persistedIds() -- before
+      if (left.nonEmpty)
+        throw new IllegalStateException(
+          s"gate left persisted RDDs ${left.mkString(",")} after cleanup")
     }
 
     /** One timed run — (exec_sec, load, prepare_sec); the load sample
@@ -283,6 +295,7 @@ object Bench {
         } catch { case _: Throwable => None }
       }.nextOption().getOrElse((None, Map.empty))
     names.foreach { name =>
+      val before = persistedIds()
       try {
         execute(name) // warm-up (not timed)
         val a = timed(name)
@@ -294,7 +307,7 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         results(name) = M(-1.0, -1.0, -1.0, 0)
-      } finally clearAll()
+      } finally clearAll(before)
     }
 
     // defense pass: re-time every query whose two runs disagreed OR
@@ -315,6 +328,7 @@ object Bench {
         while (tries < 2 &&
           (cur.spread > SpreadThresh || overPrior(name, cur.secs))) {
           tries += 1
+          val before = persistedIds()
           try {
             val (s, l, p) = timed(name)
             val agree = math.max(s, cur.secs) / math.max(1e-9, math.min(s, cur.secs))
@@ -325,7 +339,7 @@ object Bench {
           } catch { case e: Throwable =>
             System.err.println(s"[bench] retime $name failed: ${e.getMessage}")
             tries = 2
-          } finally clearAll()
+          } finally clearAll(before)
         }
         results(name) = cur
       }

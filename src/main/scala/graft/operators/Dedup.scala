@@ -692,63 +692,37 @@ object Dedup {
     * banded LSH join key, by contrast, spreads every doc across all
     * bands — an index derived at join time, not a storage layout.
     * Bucket count rides in a `meta` sidecar (same contract as the
-    * embedding store's [[Similarity.writeStandingStore]]). */
-  /** `$path/$dataDir` as a DataFrame under either commit protocol:
-    * versioned stores ([[StoreSwap.isVersioned]]) resolve through the
-    * latest committed manifest — an atomic SNAPSHOT, immune to
-    * concurrent mutation — while legacy stores list the live dir.
-    * Filters on `partCol` prune files in both modes (the partition
-    * column infers from the dir names either way). */
-  private def dirDf(spark: SparkSession, path: String, dataDir: String,
-                    partCol: String): DataFrame =
-    StoreSwap.readDir(spark, path, dataDir, partCol)
-
-  /** Whether `dataDir` exists under either protocol — a committed
-    * manifest (versioned) or a live directory (legacy). */
-  private def dirExists(spark: SparkSession, path: String,
-                        dataDir: String): Boolean =
-    StoreSwap.dirExists(spark, path, dataDir)
-
-  /** Full write of a store dataDir under the store's commit protocol
-    * (writers auto-follow a versioned store; `forceVersioned` starts
-    * one). */
-  private def writeDir(spark: SparkSession, path: String, dataDir: String,
-                       partCol: String, df: DataFrame, sortCols: Seq[Column],
-                       forceVersioned: Boolean = false): Unit =
-    StoreSwap.overwriteDir(spark, path, dataDir, partCol, df, sortCols,
-      forceVersioned)
-
-  /** @param versioned start the store on the versioned-manifest commit
-    *                  protocol ([[StoreSwap]]'s snapshot mode): every
-    *                  later mutation of data/bands/bands_inv/shingles
-    *                  commits reader-atomically (a concurrent reader
-    *                  sees the old or the new complete store, never a
-    *                  missing bucket), at the cost of manifest
-    *                  indirection on reads. Legacy (default) keeps the
-    *                  in-place bucket swap, whose swap instant requires
-    *                  a maintenance window for readers. */
+    * embedding store's [[Similarity.writeStandingStore]]). Every
+    * dataDir (`data`, `bands`, `bands_inv`, `shingles`) commits
+    * through [[StoreSwap]]'s store manifest.
+    * @param versioned accepted only as `true`: kept so callers written
+    *                  when the store had a legacy commit mode still
+    *                  compile; there is no other mode now. */
   def writeSignatureStore(sigs: DataFrame, path: String, idCol: String,
                           buckets: Int = 64,
-                          versioned: Boolean = false): Unit = {
+                          versioned: Boolean = true): Unit = {
+    require(versioned, "writeSignatureStore(versioned = false): the" +
+      " legacy unversioned store layout no longer exists — every store" +
+      " commits through the store manifest")
     require(buckets >= 1, s"need buckets >= 1, got $buckets")
     val spark = sigs.sparkSession
-    writeDir(spark, path, "data", "d_bucket",
+    StoreSwap.overwriteDir(spark, path, "data", "d_bucket",
       sigs.withColumn("d_bucket",
         pmod(col(idCol), lit(buckets.toLong)).cast("int")),
-      Seq(col(idCol), col("k")), forceVersioned = versioned)
+      Seq(col(idCol), col("k")))
     spark.range(1).select(lit(buckets).as("buckets"))
       .write.mode("overwrite").parquet(path + "/meta")
   }
 
   /** Absorb a load into the signature store via the q109 merge law,
     * executed BUCKET-LOCALLY: only the delta's doc buckets are read,
-    * union-min-re-aggregated with the delta, and swapped in through
-    * [[StoreSwap.stagedRewrite]] (staged to disk, manifest-committed,
-    * crash rolled forward — a merge can never leave a bucket half
-    * absorbed); untouched buckets' files never open. Because the store
-    * co-locates each doc's rows, re-ingesting a document is idempotent
-    * (identical signatures MIN to themselves) and a NEW doc's bucket
-    * materializes on first touch. The merge shuffle is bounded by the
+    * union-min-re-aggregated with the delta, and committed through
+    * [[StoreSwap.stagedRewrite]] (staged to disk, manifest-committed —
+    * a merge can never leave a bucket half absorbed); untouched
+    * buckets' files never open. Because the store co-locates each
+    * doc's rows, re-ingesting a document is idempotent (identical
+    * signatures MIN to themselves) and a NEW doc's bucket materializes
+    * on first touch. The merge shuffle is bounded by the
     * touched buckets' contents — delta-footprint, not corpus. Returns
     * the touched bucket ids. */
   def mergeIntoSignatureStore(spark: SparkSession, path: String,
@@ -780,25 +754,18 @@ object Dedup {
     * content-harmless; what the ledger adds is the SKIP — an acked
     * batchId returns before `deltaDocs` is even evaluated, so a
     * redelivered batch costs one manifest read instead of three
-    * store mutations. Ack ordering: merges first,
-    * [[StoreSwap.ackBatch]] LAST — a crash between them re-runs the
-    * idempotent merges on redelivery and THEN acks; a crash after the
-    * ack skips outright. Requires the store's data dir on the
-    * versioned protocol when `batchId` is used. */
+    * store mutations. The three merges AND the ledger ack are ONE
+    * [[StoreSwap.transact]]: a crash anywhere inside leaves the store
+    * at its pre-batch version with the batch unacked, so redelivery
+    * re-runs from scratch against unchanged state. */
   def ingestBatchIntoStore(spark: SparkSession, path: String,
                            deltaDocs: DataFrame, idCol: String,
                            textCol: String,
                            batchId: Option[Long] = None,
                            n: Int = 3, numHashes: Int = 16): Unit =
-    StoreSwap.withLease(spark, path) {
-    if (batchId.isDefined)
-      require(StoreSwap.dataDirVersioned(spark, path, "data"),
-        s"$path is not versioned: the batch ledger needs the manifest" +
-          " commit protocol (writeSignatureStore with versioned = true)")
-    if (batchId.exists(
-        StoreSwap.committedBatches(spark, path, "data").contains))
-      return // redelivered batch: already fully absorbed and acked
-    def run(): Unit = {
+    storeTxn(spark, path) {
+    if (!batchId.exists(
+        StoreSwap.committedBatches(spark, path, "data").contains)) {
       mergeIntoSignatureStore(spark, path,
         minhashSignatures(deltaDocs, idCol, textCol, n, numHashes), idCol)
       if (shingleSidecarExists(spark, path))
@@ -807,63 +774,49 @@ object Dedup {
         mergeIntoBandIndex(spark, path,
           deltaDocs.select(col(idCol)), idCol)
       batchId.foreach(StoreSwap.ackBatch(spark, path, "data", _))
-    }
-    // a UNIFIED store upgrades the composed flow from idempotence+
-    // ack-last to a real transaction: the three merges AND the ledger
-    // ack publish in ONE manifest rename — a crash anywhere inside
-    // leaves the store at its pre-batch version with the batch
-    // unacked, so redelivery re-runs from scratch against unchanged
-    // state. Per-dataDir stores keep the ack-last protocol (each merge
-    // commits separately; idempotence covers the gaps).
-    if (StoreSwap.isUnified(spark, path))
-      StoreSwap.transact(spark, path) { run() }
-    else run()
+    } // else: redelivered batch, already fully absorbed and acked
   }
 
-  /** Migrate a signature store (and every serving structure it
-    * carries) to [[StoreSwap]]'s UNIFIED manifest: `data`, `bands`,
-    * `bands_inv`, and `shingles` stop versioning independently and
-    * every commit — including [[ingestBatchIntoStore]]'s composed
-    * three-merge ingest, which becomes a single-rename transaction —
-    * publishes one store-wide snapshot. Any retained version is then
-    * a CONSISTENT state of the whole store, which is what makes
-    * [[lshJudgeStoreAt]]'s historical judgment replay exact. */
-  def unifySignatureStore(spark: SparkSession, path: String): Unit = {
-    // seed the versioned layout record from the live sidecar INTO the
-    // migration manifest: a band index built BEFORE migration thereby
-    // gets its constants pinned at the cutover, so historical
-    // judgments of the migration snapshot survive a later rebuild
-    // under a different graft.lsh.bandIndexBuckets (bandsMetaAt would
-    // otherwise have to fail fast on those versions)
-    val bm = new org.apache.hadoop.fs.Path(path + "/bands_meta")
-    val seed =
+  /** [[StoreSwap.open]] for a signature store: an older on-disk layout
+    * migrates once, with the band index's layout constants seeded from
+    * the live `bands_meta` sidecar INTO the migration manifest — so
+    * historical judgments of the cutover snapshot survive a later
+    * rebuild under a different graft.lsh.bandIndexBuckets
+    * ([[bandsMetaAt]] would otherwise have to fail fast on them).
+    * Idempotent; a no-op on a store already on the manifest. */
+  def unifySignatureStore(spark: SparkSession, path: String): Unit =
+    StoreSwap.open(spark, path, {
+      val bm = new org.apache.hadoop.fs.Path(path + "/bands_meta")
       if (bm.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .exists(bm)) {
         val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
         val (b, r, ib) = bandsMeta(spark, path, buckets)
         bandsMetaEntries(b, r, ib)
       } else Map.empty[String, Seq[Long]]
-    StoreSwap.unifyVersioning(spark, path,
-      Seq("data", "bands", "bands_inv", "shingles"), seedMeta = seed)
+    })
+
+  /** One commit of the signature store ([[StoreSwap.transact]]), opened
+    * through [[unifySignatureStore]] first. */
+  private def storeTxn[T](spark: SparkSession, path: String)
+                         (body: => T): T = {
+    unifySignatureStore(spark, path)
+    StoreSwap.transact(spark, path)(body)
   }
 
-  /** The full signature store plus its recorded bucket count, with any
-    * committed-but-unapplied bucket swap of a crashed mutation rolled
-    * forward first ([[StoreSwap.recover]]). */
+  /** The full signature store plus its recorded bucket count. */
   def readSignatureStore(spark: SparkSession,
                          path: String): (DataFrame, Int) = {
-    StoreSwap.recover(spark, path)
+    unifySignatureStore(spark, path)
     val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    (dirDf(spark, path, "data", "d_bucket"), buckets)
+    (StoreSwap.readDir(spark, path, "data", "d_bucket"), buckets)
   }
 
-  /** TIME-TRAVEL read of a VERSIONED signature store — the text twin
-    * of [[Similarity.readStandingStoreAt]]: any retained manifest
-    * version of the data resolves to a complete historical snapshot
-    * (retention = `graft.store.snapshotKeep`). Band index, inventory,
-    * and shingle sidecar version independently (own manifests per
-    * dataDir), so a historical JUDGMENT replay should rebuild those
-    * from the pinned signatures; this read serves the signature state
+  /** TIME-TRAVEL read of the signature store — the text twin of
+    * [[Similarity.readStandingStoreAt]]: any retained manifest version
+    * of the data resolves to a complete historical snapshot (retention
+    * = `graft.store.snapshotKeep`). The band index, inventory, and
+    * shingle sidecar pin at the same version — [[lshJudgeStoreAt]]
+    * replays whole judgments; this read serves the signature state
     * itself — audits, diffs, forget verification. Schema-equal to
     * [[readSignatureStore]]: the `d_bucket` partition column is kept
     * in both. */
@@ -874,10 +827,10 @@ object Dedup {
       buckets)
   }
 
-  /** Retained (readable) manifest versions of a versioned signature
-    * store's data, ascending; last = live. */
+  /** Retained (readable) manifest versions of the signature store,
+    * ascending; last = live. */
   def signatureStoreVersions(spark: SparkSession, path: String): Seq[Int] =
-    StoreSwap.snapshotVersions(spark, path, "data")
+    StoreSwap.snapshotVersions(spark, path)
 
   /** MANIFEST-PRUNED CDC for the SIGNATURE store — the text twin of
     * [[Similarity.standingStoreDiff]]: a doc-level change feed between
@@ -931,18 +884,14 @@ object Dedup {
     * The rewrite is staged and manifest-committed
     * ([[StoreSwap.stagedRewrite]]), so a crash mid-forget can never
     * resurrect the forgotten signatures — including the fully-emptied-
-    * bucket case, whose directory drop rides in the same commit. A
-    * shingle sidecar, when present, drops the docs' rows in the same
-    * mutation (its own staged swap — a crash between the two swaps
-    * leaves the forget incomplete, and re-running it, the documented
-    * recovery for every store mutation, completes idempotently; a
-    * lingering sidecar row alone can never resurface a verdict, since
-    * candidates come from the band index). One outer lease brackets
-    * both swaps. Returns signature rows removed. */
+    * bucket case, whose bucket leaves the manifest in the same commit.
+    * A shingle sidecar, when present, drops the docs' rows in the same
+    * transaction (one manifest rename publishes both rewrites).
+    * Returns signature rows removed. */
   def forgetDocsFromSignatureStore(spark: SparkSession, path: String,
                                    docIds: DataFrame,
                                    idCol: String): Long =
-    StoreSwap.withLeaseAtomic(spark, path) {
+    storeTxn(spark, path) {
     val (standing, buckets) = readSignatureStore(spark, path)
     val ids = docIds.select(col(idCol)).distinct()
     val touched = ids
@@ -956,7 +905,7 @@ object Dedup {
     val removed = before - StoreSwap.stagedRewrite(spark, path, "d_bucket",
       touched, kept, Seq(col(idCol), col("k")))
     if (shingleSidecarExists(spark, path)) {
-      val shKept = dirDf(spark, path, "shingles", "d_bucket")
+      val shKept = StoreSwap.readDir(spark, path, "shingles", "d_bucket")
         .filter(col("d_bucket").isin(touched: _*))
         .join(ids.select(col(idCol).as("id")), Seq("id"), "left_anti")
       StoreSwap.stagedRewrite(spark, path, "d_bucket", touched, shKept,
@@ -988,10 +937,9 @@ object Dedup {
     * discards, and [[reindexDocsInBandIndex]] repairs.) */
   def writeShingleSidecar(spark: SparkSession, path: String,
                           docs: DataFrame, idCol: String, textCol: String,
-                          n: Int = 3): Unit = StoreSwap.withLease(spark, path) {
-    StoreSwap.recover(spark, path)
+                          n: Int = 3): Unit = storeTxn(spark, path) {
     val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    writeDir(spark, path, "shingles", "d_bucket",
+    StoreSwap.overwriteDir(spark, path, "shingles", "d_bucket",
       shinglePolyHashes(docs, idCol, textCol, n)
         .withColumn("d_bucket",
           pmod(col("id"), lit(buckets.toLong)).cast("int")),
@@ -1003,21 +951,20 @@ object Dedup {
   /** Whether `path` carries the shingle-hash sidecar. */
   private[operators] def shingleSidecarExists(spark: SparkSession,
                                               path: String): Boolean =
-    dirExists(spark, path, "shingles")
+    StoreSwap.dirExists(spark, path, "shingles")
 
   /** Absorb a delta load into the shingle sidecar — REPLACE semantics
     * per doc (the sidecar mirrors current text; see
     * [[writeShingleSidecar]]'s content contract): the delta ids'
     * buckets are DERIVED (id mod buckets), their old rows anti-joined
     * out, the fresh distinct shingle hashes merged in, all through the
-    * crash-atomic staged swap. Runs with the signature merge in the
-    * ingest flow: merge signatures, merge shingles, merge band index.
-    * Returns touched buckets. */
+    * staged rewrite. Runs with the signature merge in the ingest flow:
+    * merge signatures, merge shingles, merge band index. Returns
+    * touched buckets. */
   def mergeShinglesIntoStore(spark: SparkSession, path: String,
                              deltaDocs: DataFrame, idCol: String,
                              textCol: String): Seq[Int] =
-    StoreSwap.withLease(spark, path) {
-    StoreSwap.recover(spark, path)
+    storeTxn(spark, path) {
     require(shingleSidecarExists(spark, path),
       s"$path has no shingle sidecar — build it with writeShingleSidecar")
     val n = spark.read.parquet(path + "/shingles_meta").head.getInt(0)
@@ -1029,7 +976,7 @@ object Dedup {
     if (touched.isEmpty) return Seq.empty
     val fresh = shinglePolyHashes(deltaDocs, idCol, textCol, n)
       .withColumn("d_bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
-    val kept = dirDf(spark, path, "shingles", "d_bucket")
+    val kept = StoreSwap.readDir(spark, path, "shingles", "d_bucket")
       .filter(col("d_bucket").isin(touched: _*))
       .join(ids, Seq("id"), "left_anti")
       .select(col("id"), col("x"), col("d_bucket"))
@@ -1080,7 +1027,7 @@ object Dedup {
     * search. Bands/rowsPerBand ride in a `bands_meta` sidecar. */
   def writeBandIndex(spark: SparkSession, path: String, idCol: String,
                      bands: Int = 8): Unit =
-    StoreSwap.withLeaseAtomic(spark, path) {
+    storeTxn(spark, path) {
     val (sigs, buckets) = readSignatureStore(spark, path)
     // one aggregation pass serves both constants: the hash count and
     // the standing doc count the layout auto-selection needs
@@ -1111,14 +1058,14 @@ object Dedup {
     // count at the measured crossover ([[autoBandIndexBuckets]]): the
     // store bucket count below it (= r14's measured best at 50k/500k),
     // scaling as docs/125k past ≥500M docs per the recorded break-even.
-    // The manual knob stays as override. Recorded in bands_meta (and,
-    // on unified stores, the pinned manifest) so every later mutation/
-    // judgment derives the same layout.
+    // The manual knob stays as override. Recorded in bands_meta and the
+    // store manifest so every later mutation/judgment derives the same
+    // layout.
     val nDocs = aggRow.getLong(1) / numHashes // one row per (doc, k)
     val idxBuckets = spark.conf.getOption("graft.lsh.bandIndexBuckets")
       .flatMap(_.toIntOption).filter(_ >= 1)
       .getOrElse(autoBandIndexBuckets(buckets, nDocs))
-    writeDir(spark, path, "bands", "bb_bucket",
+    StoreSwap.overwriteDir(spark, path, "bands", "bb_bucket",
       bandRows(sigs.select(col(idCol), col("k"), col("mh")),
         idCol, bands, r, idxBuckets),
       Seq(col("band"), col("bsig"), col("id")))
@@ -1131,8 +1078,8 @@ object Dedup {
     // remedy. Derived from the JUST-WRITTEN index (a cheap column scan)
     // rather than re-running the corpus-scale band derivation a second
     // time — the rebuild's dominant compute would otherwise double.
-    writeDir(spark, path, "bands_inv", "d_bucket",
-      dirDf(spark, path, "bands", "bb_bucket")
+    StoreSwap.overwriteDir(spark, path, "bands_inv", "d_bucket",
+      StoreSwap.readDir(spark, path, "bands", "bb_bucket")
         .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
         .withColumn("d_bucket",
           pmod(col("id"), lit(buckets.toLong)).cast("int")),
@@ -1140,15 +1087,14 @@ object Dedup {
     spark.range(1).select(lit(bands).as("bands"),
         lit(r).as("rows_per_band"), lit(idxBuckets).as("idx_buckets"))
       .write.mode("overwrite").parquet(path + "/bands_meta")
-    // On unified stores the layout constants ALSO version through the
-    // manifest (same rename as the band rows, via withLeaseAtomic): a
-    // historical judgment resolves bands/r/idx_buckets from its pinned
-    // version, so a rebuild under a different graft.lsh.bandIndexBuckets
-    // inside the retention window can never make a replay compute delta
-    // bb_buckets under the NEW layout against band rows written under
-    // the OLD one (which silently drops candidates).
-    if (StoreSwap.isUnified(spark, path))
-      putBandsMeta(spark, path, bands, r, idxBuckets)
+    // The layout constants ALSO version through the manifest (same
+    // rename as the band rows): a historical judgment resolves
+    // bands/r/idx_buckets from its pinned version, so a rebuild under a
+    // different graft.lsh.bandIndexBuckets inside the retention window
+    // can never make a replay compute delta bb_buckets under the NEW
+    // layout against band rows written under the OLD one (which
+    // silently drops candidates).
+    putBandsMeta(spark, path, bands, r, idxBuckets)
   }
 
   /** AUTO band-index directory granularity from the standing doc
@@ -1191,7 +1137,7 @@ object Dedup {
   /** Whether `path` carries the per-doc band inventory (indexes built
     * before it existed lack one until the next [[writeBandIndex]]). */
   private def bandInvExists(spark: SparkSession, path: String): Boolean =
-    dirExists(spark, path, "bands_inv")
+    StoreSwap.dirExists(spark, path, "bands_inv")
 
   /** The inventory's rows for `docIds` — doc-bucket pruned. */
   private def invRowsForDocs(spark: SparkSession, path: String,
@@ -1201,7 +1147,7 @@ object Dedup {
     val db = ids
       .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq
-    dirDf(spark, path, "bands_inv", "d_bucket")
+    StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .join(ids, Seq("id"), "left_semi")
       .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
@@ -1274,7 +1220,7 @@ object Dedup {
   /** Absorb docs into the band index AFTER their
     * [[mergeIntoSignatureStore]]: their current (post-MIN-merge) band
     * rows are union-distinct-merged into the touched `bb_bucket`s via
-    * the crash-atomic staged swap. Re-ingesting identical text is
+    * a staged rewrite. Re-ingesting identical text is
     * idempotent (identical rows collapse in the distinct). A re-ingest
     * that CHANGED a doc's signature leaves its old band rows stale —
     * stale rows cost false candidates that the judge's exact
@@ -1284,14 +1230,13 @@ object Dedup {
     * touched buckets. */
   def mergeIntoBandIndex(spark: SparkSession, path: String,
                          docIds: DataFrame,
-                         idCol: String): Seq[Int] = StoreSwap.withLeaseAtomic(
-      spark, path) {
+                         idCol: String): Seq[Int] = storeTxn(spark, path) {
     val rows = bandRowsForDocs(spark, path, docIds, idCol)
       .localCheckpoint(true) // |docs|·bands rows, referenced twice
     val touched = rows.select(col("bb_bucket")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     if (touched.isEmpty) return Seq.empty
-    val slice = dirDf(spark, path, "bands", "bb_bucket")
+    val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
     val merged = slice.select(col("id"), col("band"), col("bsig"),
         col("bb_bucket"))
@@ -1299,18 +1244,15 @@ object Dedup {
     StoreSwap.stagedRewrite(spark, path, "bb_bucket", touched, merged,
       Seq(col("band"), col("bsig"), col("id")), "bands")
     // inventory upkeep: after the merge the docs own old ∪ fresh rows
-    // in the index — record exactly that, so a later repair or forget
-    // can find the old rows without a corpus scan. Index swap FIRST:
-    // a crash here leaves the inventory missing the fresh rows, and
-    // re-running the merge (the documented recovery for every store
-    // mutation) completes it idempotently.
+    // in the index — record exactly that (same commit), so a later
+    // repair or forget can find the old rows without a corpus scan
     if (bandInvExists(spark, path)) {
       val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
       val ids = docIds.select(col(idCol).as("id")).distinct()
       val db = ids
         .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      val invSlice = dirDf(spark, path, "bands_inv", "d_bucket")
+      val invSlice = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
         .filter(col("d_bucket").isin(db: _*))
         .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
       val invMerged = invSlice.unionByName(rows).distinct()
@@ -1331,9 +1273,7 @@ object Dedup {
     * changed signatures are missed. Returns rows removed. */
   def forgetFromBandIndex(spark: SparkSession, path: String,
                           docIds: DataFrame,
-                          idCol: String): Long = StoreSwap.withLeaseAtomic(
-      spark, path) {
-    StoreSwap.recover(spark, path)
+                          idCol: String): Long = storeTxn(spark, path) {
     val hasInv = bandInvExists(spark, path)
     val rows =
       if (hasInv) {
@@ -1344,23 +1284,21 @@ object Dedup {
       .collect().map(_.getInt(0)).toSeq.sorted
     if (touched.isEmpty) return 0L
     val ids = docIds.select(col(idCol).as("id")).distinct()
-    val slice = dirDf(spark, path, "bands", "bb_bucket")
+    val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
     val kept = slice.join(ids, Seq("id"), "left_anti")
     val before = slice.count()
     val removed = before - StoreSwap.stagedRewrite(spark, path,
       "bb_bucket", touched, kept,
       Seq(col("band"), col("bsig"), col("id")), "bands")
-    // drop the docs' inventory rows too (index swap first — a crash
-    // between the swaps re-runs to a no-op index rewrite, then
-    // completes the inventory)
+    // drop the docs' inventory rows too, in the same commit
     if (hasInv) {
       val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
       val db = ids
         .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).toSeq.sorted
       if (db.nonEmpty) {
-        val invKept = dirDf(spark, path, "bands_inv", "d_bucket")
+        val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
           .filter(col("d_bucket").isin(db: _*))
           .join(ids, Seq("id"), "left_anti")
         StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invKept,
@@ -1378,16 +1316,13 @@ object Dedup {
     * the band inventory (their own d_buckets — no scan); rows the
     * current signatures no longer produce are anti-joined OUT of their
     * index buckets, the fresh rows are union-merged in, and the
-    * inventory is reset to exactly the fresh rows. Index swap FIRST,
-    * inventory second: a crash between the swaps re-runs with
-    * `stale` already absent — the repair is idempotent. Cost tracks
+    * inventory is reset to exactly the fresh rows, in one commit.
+    * Cost tracks
     * the docs' band footprint (old ∪ new buckets), never the corpus.
     * Returns the number of stale rows removed. */
   def reindexDocsInBandIndex(spark: SparkSession, path: String,
                              docIds: DataFrame,
-                             idCol: String): Long = StoreSwap.withLeaseAtomic(
-      spark, path) {
-    StoreSwap.recover(spark, path)
+                             idCol: String): Long = storeTxn(spark, path) {
     require(bandInvExists(spark, path),
       s"$path has no band inventory — rebuild with writeBandIndex first")
     val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
@@ -1402,7 +1337,7 @@ object Dedup {
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
     if (touched.isEmpty) return 0L
     val nStale = stale.count()
-    val slice = dirDf(spark, path, "bands", "bb_bucket")
+    val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
     val kept = slice
       .join(stale.select(col("id"), col("band"), col("bsig")),
@@ -1417,7 +1352,7 @@ object Dedup {
     val db = ids
       .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    val invKept = dirDf(spark, path, "bands_inv", "d_bucket")
+    val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
       .join(ids, Seq("id"), "left_anti")
@@ -1455,14 +1390,15 @@ object Dedup {
                     numHashes: Int = 16, seed: Long = 7L,
                     threshold: Double = 0.5,
                     asOf: Option[Int] = None): DataFrame = {
-    require(asOf.isEmpty || StoreSwap.isUnified(spark, path),
-      s"$path: historical judgment (asOf) needs the UNIFIED manifest -" +
-        " per-dataDir versions pin signatures only (bands and sidecar" +
-        " version independently); migrate with unifySignatureStore")
-    // a judgment-only process must also roll forward a crashed index
-    // mutation's committed swap, or it serves stale band rows
-    StoreSwap.recover(spark, path)
+    unifySignatureStore(spark, path)
     val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    // resolved first: a version outside the retained window fails here
+    // with the retention/cutover message
+    val sidecarPresent = asOf match {
+      case Some(v) =>
+        StoreSwap.snapshotEntriesAt(spark, path, "shingles", v).nonEmpty
+      case None => shingleSidecarExists(spark, path)
+    }
     // layout constants resolve from the PINNED manifest on historical
     // replays (a post-pin rebuild may have changed them); live from the
     // bands_meta sidecar
@@ -1473,12 +1409,7 @@ object Dedup {
     def storeDir(dataDir: String, partCol: String): DataFrame = asOf match {
       case Some(v) =>
         StoreSwap.readVersionedAt(spark, path, dataDir, partCol, v)
-      case None => dirDf(spark, path, dataDir, partCol)
-    }
-    val sidecarPresent = asOf match {
-      case Some(v) =>
-        StoreSwap.snapshotEntriesAt(spark, path, "shingles", v).nonEmpty
-      case None => shingleSidecarExists(spark, path)
+      case None => StoreSwap.readDir(spark, path, dataDir, partCol)
     }
     if (asOf.isDefined) require(sidecarPresent,
       s"$path has no shingle sidecar at version ${asOf.get} - historical" +
@@ -1560,12 +1491,10 @@ object Dedup {
   }
 
   /** HISTORICAL JUDGMENT REPLAY: judge `delta` against the store AS OF
-    * retained unified version `version` - the band index AND the
-    * shingle sidecar resolve from the SAME pinned manifest, so the
-    * verdicts are bit-exactly what [[lshJudgeStore]] returned when
-    * that version was live (the consistency the unified manifest
-    * exists for; per-dataDir versioning cannot offer this - its
-    * time-travel pins signatures only). Audits, incident replay,
+    * retained version `version` - the band index AND the shingle
+    * sidecar resolve from the SAME pinned manifest, so the verdicts are
+    * bit-exactly what [[lshJudgeStore]] returned when that version was
+    * live. Audits, incident replay,
     * "what would yesterday's corpus have said about this batch". */
   def lshJudgeStoreAt(spark: SparkSession, path: String,
                       delta: DataFrame, idCol: String, textCol: String,

@@ -42,11 +42,15 @@ object Lineage {
   /** Session conf key selecting the cut mechanism (see class doc). */
   val ModeKey = "graft.plan.cuts"
 
+  /** Cut `df` with the session's mechanism. Any value other than the
+    * three documented ones is a configuration error, not a default. */
   def cut(df: DataFrame): DataFrame =
     df.sparkSession.conf.get(ModeKey, "checkpoint") match {
-      case "off"     => df
-      case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK)
-      case _         => df.localCheckpoint(false)
+      case "checkpoint" => df.localCheckpoint(false)
+      case "persist"    => df.persist(StorageLevel.MEMORY_AND_DISK)
+      case "off"        => df
+      case other => throw new IllegalArgumentException(
+        s"$ModeKey must be one of checkpoint, persist, off; got '$other'")
     }
 
   /** Chain-friendly syntax: `relation.planCut` ≡ `Lineage.cut(relation)`. */

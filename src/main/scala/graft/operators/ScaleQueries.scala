@@ -433,25 +433,34 @@ object ScaleQueries {
       .orderBy(col("doc_id"), col("k"))
   }
 
-  /** q198: CRASH RECOVERY of an interrupted store mutation
-    * ([[graft.operators.StoreSwap.recover]], value-gated) — the q196
-    * store with a fabricated "crashed mid-mutation" state layered on
-    * top: replacement content staged for buckets 2 and 5 (only the
-    * doc_id % 11 = 5 docs' signatures survive there), bucket 9 recorded
-    * as emptied, manifest committed — and the process "dies" before the
-    * swap applies. The next read must roll the commit FORWARD: buckets
-    * 2/5 hold exactly the staged rows, bucket 9 holds nothing, every
-    * other bucket is untouched. The oracle predicts the surviving set
-    * closed-form from the bucket arithmetic — if recovery replayed too
-    * little (stale rows resurrect) or too much (untouched buckets
-    * change), the hash breaks. */
+  /** q198: MIGRATION of a legacy store with an interrupted mutation
+    * ([[graft.operators.StoreSwap.open]], value-gated) — the q196 store
+    * content written in the LEGACY on-disk layout (live
+    * `data/d_bucket=…` dirs, no manifest) with a fabricated "crashed
+    * mid-mutation" state layered on top: replacement content staged
+    * for buckets 2 and 5 (only the doc_id % 11 = 5 docs' signatures
+    * survive there), bucket 9 recorded as emptied, `_pending_swap`
+    * committed — and the process "dies" before the swap applies. The
+    * first open must roll that commit FORWARD and then migrate the
+    * store onto the manifest: buckets 2/5 hold exactly the staged rows,
+    * bucket 9 holds nothing, every other bucket is untouched. The
+    * oracle predicts the surviving set closed-form from the bucket
+    * arithmetic — if the migration replayed too little (stale rows
+    * resurrect), too much (untouched buckets change), or dropped a
+    * bucket, the hash breaks. */
   def q198SigStoreRecover(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val delta = Dedup.minhashSignatures(
       docs.filter(col("doc_id") % 3 === 0), "doc_id", "text")
-    val store = Fixtures.cloneDir(
-      sharedPartialSigStore(spark, dir), "graft-q198-")
-    Dedup.mergeIntoSignatureStore(spark, store, delta, "doc_id")
+    val merged = Fixtures.cloneDir(
+      sharedPartialSigStore(spark, dir), "graft-q198m-")
+    Dedup.mergeIntoSignatureStore(spark, merged, delta, "doc_id")
+    // the same content in the legacy layout
+    val store = Fixtures.tempDir("graft-q198-").resolve("s").toString
+    Dedup.readSignatureStore(spark, merged)._1
+      .repartition(col("d_bucket"))
+      .write.partitionBy("d_bucket").parquet(store + "/data")
+    spark.read.parquet(merged + "/meta").write.parquet(store + "/meta")
     // the crashed mutation's committed-but-unapplied state
     Dedup.minhashSignatures(
         docs.filter(col("doc_id") % 11 === 5 &&
@@ -492,31 +501,30 @@ object ScaleQueries {
     // judgment-only gate: reads the SHARED base store in place (the
     // sidecar means verification reads candidate docs' own buckets,
     // not the standing corpus text — standingDocs is ignored with it)
-    val store = sharedTextStore(spark, dir, versioned = false)
+    val store = sharedTextStore(spark, dir)
     Dedup.lshJudgeStore(spark, store, standing, delta, "doc_id", "text")
       .orderBy(col("id_a"), col("id_b"))
   }
 
   /** The composed text-store gates' shared corpus-scale base — the
     * FULL standing corpus's signature store (buckets = 16) plus band
-    * index (bands = 8) plus shingle sidecar, in legacy and VERSIONED
-    * flavors. Built ONCE per flavor per JVM ([[Fixtures.sharedDir]]);
+    * index (bands = 8) plus shingle sidecar. Built ONCE per JVM
+    * ([[Fixtures.sharedDir]]);
     * gates that mutate store state clone it ([[Fixtures.cloneDir]]),
     * judgment-only gates read it in place. The build closure is the
     * exact sequence the gates used to run inline per invocation
     * (r14 query_prepare: rebuilding it per gate per run put the
     * harness prepare bill at 605 s), so every oracle replays the same
     * closed form against identical content. */
-  private[operators] def sharedTextStore(spark: SparkSession, dir: String,
-                                         versioned: Boolean): String =
-    Fixtures.sharedDir(s"textstore-${if (versioned) "v" else "l"}-$dir") {
-      p =>
+  private[operators] def sharedTextStore(spark: SparkSession,
+                                         dir: String): String =
+    Fixtures.sharedDir(s"textstore-$dir") { p =>
         val standing = Tables.documents(spark, dir)
           .select(col("doc_id"), col("text"))
         val store = p.toString
         Dedup.writeSignatureStore(
           Dedup.minhashSignatures(standing, "doc_id", "text"),
-          store, "doc_id", buckets = 16, versioned = versioned)
+          store, "doc_id", buckets = 16)
         Dedup.writeBandIndex(spark, store, "doc_id", bands = 8)
         Dedup.writeShingleSidecar(spark, store, standing, "doc_id",
           "text")
@@ -536,7 +544,7 @@ object ScaleQueries {
     val delta2 = nearDupDelta(standing, 5, 200000L, 2)
     // mutating gate: a private clone of the shared base store
     val store = Fixtures.cloneDir(
-      sharedTextStore(spark, dir, versioned = false), "graft-q206-")
+      sharedTextStore(spark, dir), "graft-q206-")
     Dedup.mergeIntoSignatureStore(spark, store,
       Dedup.minhashSignatures(delta1, "doc_id", "text"), "doc_id")
     // the ingest flow's sidecar half: delta1's shingle hashes land in
@@ -561,7 +569,7 @@ object ScaleQueries {
     val delta = nearDupDelta(standing, 3, 100000L, 1)
     // mutating gate (forget): a private clone of the shared base store
     val store = Fixtures.cloneDir(
-      sharedTextStore(spark, dir, versioned = false), "graft-q207-")
+      sharedTextStore(spark, dir), "graft-q207-")
     val doomed = standing.filter(col("doc_id") % 7 === 3)
       .select(col("doc_id"))
     Dedup.forgetFromBandIndex(spark, store, doomed, "doc_id")
@@ -598,31 +606,30 @@ object ScaleQueries {
     // shingle sidecar goes unused here — the gate dumps bands only,
     // and none of the three mutations below consult it)
     val store = Fixtures.cloneDir(
-      sharedTextStore(spark, dir, versioned = false), "graft-q211-")
+      sharedTextStore(spark, dir), "graft-q211-")
     Dedup.mergeIntoSignatureStore(spark, store,
       Dedup.minhashSignatures(changed, "doc_id", "text"), "doc_id")
     Dedup.mergeIntoBandIndex(spark, store,
       changed.select(col("doc_id")), "doc_id")
     Dedup.reindexDocsInBandIndex(spark, store,
       changed.select(col("doc_id")), "doc_id")
-    spark.read.parquet(store + "/bands")
+    StoreSwap.readDir(spark, store, "bands", "bb_bucket")
       .select(col("id").as("doc_id"), col("band").cast("long").as("band"),
         col("bsig"))
       .orderBy(col("doc_id"), col("band"), col("bsig"))
   }
 
-  /** q220: the COMPOSED text lifecycle on a VERSIONED store
-    * ([[graft.operators.StoreSwap]]'s snapshot mode): build (data +
-    * band index + shingle sidecar) → ingest delta1 (signature
-    * MIN-merge, shingle replace-merge, index + inventory merge) →
-    * forget a seventh of the original standing → judge delta2. q206's
-    * daily flow plus a forget, with every mutation committing through
-    * one manifest rename into immutable generation dirs instead of
-    * in-place bucket swaps — a concurrent reader resolves a complete
-    * old or new snapshot, never a mid-swap hole. The oracle replays
-    * the whole chain closed-form; equality proves the versioned commit
-    * protocol content-invariant (SignatureStoreSpec proves the reader
-    * guarantees it adds). */
+  /** q220: the COMPOSED text lifecycle on the store manifest
+    * ([[graft.operators.StoreSwap]]): build (data + band index +
+    * shingle sidecar) → ingest delta1 (signature MIN-merge, shingle
+    * replace-merge, index + inventory merge) → forget a seventh of the
+    * original standing → judge delta2. q206's daily flow plus a
+    * forget, with every mutation committing through one manifest
+    * rename into immutable generation dirs — a concurrent reader
+    * resolves a complete old or new snapshot, never a mid-swap hole.
+    * The oracle replays the whole chain closed-form; equality proves
+    * the commit protocol content-invariant (VersionedStoreSpec proves
+    * the reader guarantees it adds). */
   def q220VersionedStore(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val standing = docs.select(col("doc_id"), col("text"))
@@ -630,7 +637,7 @@ object ScaleQueries {
     val delta2 = nearDupDelta(standing, 5, 200000L, 2)
     // mutating gate: a private clone of the shared VERSIONED base
     val store = Fixtures.cloneDir(
-      sharedTextStore(spark, dir, versioned = true), "graft-q220-")
+      sharedTextStore(spark, dir), "graft-q220-")
     Dedup.mergeIntoSignatureStore(spark, store,
       Dedup.minhashSignatures(delta1, "doc_id", "text"), "doc_id")
     Dedup.mergeShinglesIntoStore(spark, store, delta1, "doc_id", "text")
@@ -670,7 +677,7 @@ object ScaleQueries {
     // additionally rewrites the sidecar's doomed buckets, which does
     // not touch data's version line
     val store = Fixtures.cloneDir(
-      sharedTextStore(spark, dir, versioned = true), "graft-q226-")
+      sharedTextStore(spark, dir), "graft-q226-")
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Dedup.signatureStoreVersions(spark, store).last
@@ -687,15 +694,14 @@ object ScaleQueries {
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
-  /** q227: HISTORICAL JUDGMENT REPLAY over the UNIFIED text store —
-    * what the per-dataDir protocol cannot do: `data`, `bands`,
-    * `bands_inv`, and `shingles` pin TOGETHER under one retained
-    * `store.v<N>` manifest ([[graft.operators.StoreSwap
-    * .unifyVersioning]]), so judging a batch AS OF a version replays
-    * the verdicts that version's live judgment produced, bit-exactly.
-    * The gate ingests delta1 through the composed exactly-once flow —
-    * which on a unified store is a REAL transaction: three merges plus
-    * the ledger ack in ONE manifest rename ([[graft.operators.StoreSwap
+  /** q227: HISTORICAL JUDGMENT REPLAY over the text store — `data`,
+    * `bands`, `bands_inv`, and `shingles` pin TOGETHER under one
+    * retained `store.v<N>` manifest ([[graft.operators.StoreSwap]]),
+    * so judging a batch AS OF a version replays the verdicts that
+    * version's live judgment produced, bit-exactly. The gate ingests
+    * delta1 through the composed exactly-once flow — a REAL
+    * transaction: three merges plus the ledger ack in ONE manifest
+    * rename ([[graft.operators.StoreSwap
     * .transact]]) — then judges delta2 as of the PRE-ingest version;
     * the oracle replays the judgment against the original standing
     * corpus only. A leaked delta1 band row, sidecar row, or signature
@@ -705,11 +711,9 @@ object ScaleQueries {
     val standing = docs.select(col("doc_id"), col("text"))
     val delta1 = nearDupDelta(standing, 3, 100000L, 1)
     val delta2 = nearDupDelta(standing, 5, 200000L, 2)
-    // mutating gate: a private clone of the shared VERSIONED base,
-    // migrated to the unified manifest (the migration itself mutates)
+    // mutating gate: a private clone of the shared base
     val store = Fixtures.cloneDir(
-      sharedTextStore(spark, dir, versioned = true), "graft-q227-")
-    Dedup.unifySignatureStore(spark, store)
+      sharedTextStore(spark, dir), "graft-q227-")
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Dedup.signatureStoreVersions(spark, store).last

@@ -530,7 +530,7 @@ object SelectionQueries {
   /** q229: HISTORICAL SEMANTIC JUDGMENT REPLAY
     * ([[Similarity.semanticJudgeStoreAt]]) — q227's embedding twin:
     * the standing store AND its coarse codebook pin together under one
-    * retained unified manifest version, so judging a delta AS OF a
+    * retained manifest version, so judging a delta AS OF a
     * version replays the verdicts that version's live judgment would
     * have produced, bit-exactly. After pinning v0 the gate mutates
     * BOTH halves of the judgment state: it appends reversed copies of
@@ -546,8 +546,7 @@ object SelectionQueries {
     * pruning bug that drops or leaks a cluster ALSO breaks the hash —
     * the flat-per-decade read SemanticReplayProbe measures is the
     * gated path. Pruned ≡ unpruned equivalence is spec-gated in
-    * StandingStoreSpec; the per-dataDir refusal (codebook and data
-    * versioning independently cannot pin together) likewise. */
+    * StandingStoreSpec. */
   def q229SemanticReplay(spark: SparkSession, dir: String): DataFrame = {
     def emb() = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
@@ -563,9 +562,8 @@ object SelectionQueries {
       .withColumn("nrm", Similarity.norm(col("embedding")))
     val store = Fixtures.tempDir("graft-q229-").resolve("standing").toString
     Similarity.writeStandingStore(assigned(base, cents), store, "cluster",
-      buckets = 8, versioned = true)
+      buckets = 8)
     Similarity.writeCodebook(spark, store, cents)
-    Similarity.unifyStandingStore(spark, store)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Similarity.standingStoreVersions(spark, store).last
@@ -625,14 +623,15 @@ object SelectionQueries {
       .withColumn("nrm", Similarity.norm(col("embedding")))
     val store = Fixtures.tempDir("graft-q231-").resolve("standing").toString
     Similarity.writeStandingStore(assigned(base, cents), store, "cluster",
-      buckets = 8, versioned = true)
+      buckets = 8)
     Similarity.writeCodebook(spark, store, cents)
-    Similarity.unifyStandingStore(spark, store)
     // non-vacuity: with fewer delta rows than buckets, the touched
     // bucket set is a proper subset — the prune must actually prune
-    require(sparse.count() < 8,
-      "q231's delta must stay cluster-sparse (fewer rows than buckets)" +
-        " or the pruned-read gate degenerates to q229's full read")
+    val n = sparse.count()
+    require(n >= 1 && n < 8,
+      s"q231's delta must be non-empty and cluster-sparse (fewer rows" +
+        s" than buckets), got $n rows: an empty delta gates nothing and" +
+        " a dense one degenerates to q229's full read")
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Similarity.standingStoreVersions(spark, store).last
@@ -761,7 +760,7 @@ object SelectionQueries {
     Similarity.deleteFromStandingStore(spark, store,
       base.filter(col("vec_id") % 10 === 3).select(col("vec_id")), "vec_id")
     Similarity.compactStandingStore(spark, store, maxFilesPerBucket = 1)
-    spark.read.parquet(store + "/data")
+    Similarity.readStandingStore(spark, store)._1
       .groupBy(col("cluster"))
       .agg(count(lit(1)).cast("long").as("n_vectors"),
         sum(when(col("vec_id") < 100000L, 1L).otherwise(0L))
@@ -798,7 +797,7 @@ object SelectionQueries {
         Similarity.assignCluster(col("embedding"), cents).cast("long"))
       .withColumn("nrm", Similarity.norm(col("embedding")))
     Similarity.writeStandingStore(assigned(base), store, "cluster",
-      buckets = 16, versioned = true)
+      buckets = 16)
     val deltaAssigned = assigned(delta).cache()
     val verdicts = Similarity.semDedupIncrementalStore(spark, store,
       deltaAssigned, "vec_id", "embedding", "cluster", "nrm",
@@ -855,7 +854,7 @@ object SelectionQueries {
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       Similarity.writeStandingStore(assigned(base), store, "cluster",
-        buckets = 16, versioned = true)
+        buckets = 16)
       val v0 = Similarity.standingStoreVersions(spark, store).last
       Similarity.appendToStandingStore(assigned(delta), store, "cluster")
       Similarity.deleteFromStandingStore(spark, store,
@@ -898,7 +897,7 @@ object SelectionQueries {
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       Similarity.writeStandingStore(assigned(base), store, "cluster",
-        buckets = 16, versioned = true)
+        buckets = 16)
       val v0 = Similarity.standingStoreVersions(spark, store).last
       Similarity.appendToStandingStore(assigned(delta), store, "cluster")
       Similarity.deleteFromStandingStore(spark, store,
@@ -1007,7 +1006,7 @@ object SelectionQueries {
       "vec_id")
     Similarity.refitStoreDriftedClusters(spark, store, "vec_id",
       "embedding", drifted, targetClusterSize = 50, iters = 2)
-    spark.read.parquet(store + "/data")
+    Similarity.readStandingStore(spark, store)._1
       .groupBy(col("cluster"))
       .agg(count(lit(1)).cast("long").as("n_vectors"),
         min(col("vec_id")).cast("long").as("first_vec"))
@@ -1105,7 +1104,7 @@ object SelectionQueries {
     Similarity.writeCodebook(spark, store, standing)
     Similarity.refitStoreDriftedClusters(spark, store, "vec_id",
       "embedding", drifted, targetClusterSize = 50, iters = 2)
-    spark.read.parquet(store + "/data")
+    Similarity.readStandingStore(spark, store)._1
       .groupBy(col("cluster"))
       .agg(count(lit(1)).cast("long").as("n_vectors"),
         min(col("vec_id")).cast("long").as("first_vec"))
@@ -1302,9 +1301,8 @@ object SelectionQueries {
       .orderBy(col("query_id"), col("rank"))
   }
 
-  /** q228: IVF-PQ SEARCH THROUGH THE UNIFIED TRIPLE — q199's search
-    * run end-to-end on the UNIFIED protocol: the store is versioned
-    * and migrated ([[Similarity.unifyStandingStore]]), the sidecar's
+  /** q228: IVF-PQ SEARCH THROUGH THE VERSIONED TRIPLE — q199's search
+    * run end-to-end on the store manifest: the sidecar's
     * codebook/meta/codes commit as versioned dataDirs in ONE
     * [[graft.operators.StoreSwap.transact]] manifest rename, and the
     * search resolves all three artifacts AT ONE PINNED STORE VERSION
@@ -1325,9 +1323,8 @@ object SelectionQueries {
         .withColumn("cluster",
           Similarity.assignCluster(col("embedding"), cents).cast("long"))
         .withColumn("nrm", Similarity.norm(col("embedding"))),
-      store, "cluster", buckets = 8, versioned = true)
+      store, "cluster", buckets = 8)
     Similarity.writeCodebook(spark, store, cents)
-    Similarity.unifyStandingStore(spark, store)
     Similarity.writePqSidecar(spark, store, "vec_id", "embedding",
       m = 4, dsub = 16, ksub = 8, residual = true)
     Similarity.writePqSidecar(spark, store, "vec_id", "embedding",

@@ -796,29 +796,18 @@ object Similarity {
     * `assigned` must carry (idCol, vecCol, clusterCol, nrmCol) —
     * exactly what [[semDedupIncrementalPrepped]] consumes; parquet
     * round-trips floats/doubles/longs bit-exactly, so verdicts through
-    * the store equal the in-memory path's (q187 gates this). */
-  /** @param versioned start `data` on [[StoreSwap]]'s versioned-manifest
-    *                  commit protocol: every later rewrite/append of the
-    *                  data commits reader-atomically (old or new complete
-    *                  snapshot, never a mid-swap hole). The PQ sidecar's
-    *                  three artifacts keep their own `_pending_pq`
-    *                  crash-atomic swap on per-dataDir stores (splitting
-    *                  `pq_codes` into a SEPARATE manifest would reopen the
-    *                  codebook/codes split-brain that protocol closes);
-    *                  on a UNIFIED store ([[unifyStandingStore]]) the
-    *                  triple instead commits inside one
-    *                  [[StoreSwap.transact]] manifest rename — reader-
-    *                  atomic, no maintenance window. */
+    * the store equal the in-memory path's (q187 gates this). Every
+    * later rewrite or append — data, codebook, PQ sidecar — commits
+    * through [[StoreSwap]]'s store manifest, reader-atomically. */
   def writeStandingStore(assigned: DataFrame, path: String,
                          clusterCol: String = "cluster",
-                         buckets: Int = 64,
-                         versioned: Boolean = false): Unit = {
+                         buckets: Int = 64): Unit = {
     require(buckets >= 1, s"need buckets >= 1, got $buckets")
     val spark = assigned.sparkSession
     StoreSwap.overwriteDir(spark, path, "data", "c_bucket",
       assigned.withColumn("c_bucket",
         pmod(col(clusterCol), lit(buckets.toLong)).cast("int")),
-      Seq(col(clusterCol)), forceVersioned = versioned)
+      Seq(col(clusterCol)))
     spark.range(1).select(lit(buckets).as("buckets"))
       .write.mode("overwrite").parquet(path + "/meta")
   }
@@ -827,17 +816,15 @@ object Similarity {
     * `c_bucket` partition column is KEPT (derivable, but retained so
     * bucket filters prune files without recomputation) — the time-
     * travel read [[readStandingStoreAt]] keeps it too, so the two
-    * paths are schema-equal. Rolls forward any bucket swap a crashed
-    * mutation left committed-but-unapplied ([[StoreSwap.recover]])
-    * before listing data files. */
+    * paths are schema-equal. */
   def readStandingStore(spark: SparkSession, path: String): (DataFrame, Int) = {
-    StoreSwap.recover(spark, path)
+    StoreSwap.open(spark, path)
     val buckets = spark.read.parquet(path + "/meta")
       .head.getInt(0)
     (StoreSwap.readDir(spark, path, "data", "c_bucket"), buckets)
   }
 
-  /** TIME-TRAVEL read of a VERSIONED standing store: the data AS OF
+  /** TIME-TRAVEL read of a standing store: the data AS OF
     * committed manifest `version` — the pre-mutation snapshot an
     * auditor or a long-running training job pins while the store keeps
     * mutating underneath. Only versions inside the GC grace window
@@ -854,43 +841,10 @@ object Similarity {
       buckets)
   }
 
-  /** Retained (readable) manifest versions of a versioned standing
-    * store's data, ascending; last = the live version. */
+  /** Retained (readable) manifest versions of a standing store,
+    * ascending; last = the live version. */
   def standingStoreVersions(spark: SparkSession, path: String): Seq[Int] =
-    StoreSwap.snapshotVersions(spark, path, "data")
-
-  /** Migrate an embedding standing store to [[StoreSwap]]'s UNIFIED
-    * manifest. `data` migrates directly; a legacy COARSE CODEBOOK is
-    * re-committed as a versioned dataDir in the same maintenance
-    * window (migration already holds the lease and is the documented
-    * offline cutover), so from then on codebook updates version WITH
-    * the memberships they assign — the consistency
-    * [[semanticJudgeStoreAt]]'s historical replay needs (a refit's new
-    * centroids must never be applied to a pinned version's members).
-    * A legacy PQ sidecar keeps serving through its `_pending_pq`
-    * protocol until the next [[writePqSidecar]], which rewrites the
-    * triple as versioned dataDirs committed in ONE
-    * [[StoreSwap.transact]] rename — from then on sidecar rewrites are
-    * reader-atomic (a concurrent flavored read pins codebook, meta,
-    * and codes at one store version via [[pqPin]] and can never
-    * observe a mixed triple). */
-  def unifyStandingStore(spark: SparkSession, path: String): Unit = {
-    StoreSwap.unifyVersioning(spark, path, Seq("data"))
-    val legacy = new org.apache.hadoop.fs.Path(path + "/codebook")
-    val fs = legacy.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(legacy)) {
-      if (!codebookVersioned(spark, path)) {
-        val rows = spark.read.parquet(path + "/codebook")
-          .select(col("cid"), col("cent")).localCheckpoint(true)
-        writeCodebookDf(spark, path, rows) // versioned from here on
-      }
-      // idempotent cleanup even when the codebook is ALREADY versioned:
-      // a crash between writeCodebookDf's commit and this delete would
-      // otherwise leave the stale legacy dir permanently (the re-run
-      // used to skip the whole branch once codebookVersioned was true)
-      fs.delete(legacy, true)
-    }
-  }
+    StoreSwap.snapshotVersions(spark, path)
 
   /** MANIFEST-PRUNED CDC between two retained versions of a versioned
     * standing store: (change, vec_id, cluster) rows where `change` is
@@ -932,17 +886,13 @@ object Similarity {
 
   /** HISTORICAL SEMANTIC JUDGMENT — [[Dedup.lshJudgeStoreAt]]'s
     * embedding twin: incremental semantic dedup of `delta` AS OF a
-    * retained unified-store `version`, with the CODEBOOK and the
-    * MEMBERS both resolved from that ONE pinned manifest. The hazard
-    * this closes is artifacts straddling a commit: on a per-dataDir
-    * store the codebook and the data version independently, so "judge
-    * as of yesterday" can silently apply today's refit centroids to
-    * yesterday's members (different assignments → different
-    * co-membership → different verdicts). Requires the store unified
-    * AND its codebook migrated ([[unifyStandingStore]]); per-dataDir
-    * stores are REFUSED rather than given a best-effort answer.
-    * Verdict contract identical to [[semDedupIncrementalAssigned]]:
-    * (idCol, cluster, keep) per delta row. Delta-footprint at scale:
+    * retained store `version`, with the CODEBOOK and the MEMBERS both
+    * resolved from that ONE pinned manifest — so "judge as of
+    * yesterday" can never apply today's refit centroids to yesterday's
+    * members (different assignments → different co-membership →
+    * different verdicts). Verdict contract identical to
+    * [[semDedupIncrementalAssigned]]: (idCol, cluster, keep) per delta
+    * row. Delta-footprint at scale:
     * the pinned members prune by the delta's clusters exactly like the
     * live path — ON by default (verdict-invariant by construction:
     * clusters absent from the delta contribute no pairs, and the q229
@@ -957,11 +907,7 @@ object Similarity {
                            vecCol: String, version: Int, minCos: Double,
                            pruneBaseByDeltaClusters: Boolean = true)
       : DataFrame = {
-    require(StoreSwap.isUnified(spark, path) &&
-      codebookVersioned(spark, path),
-      s"$path versions its codebook and data independently — a" +
-        " historical judgment cannot pin both; migrate with" +
-        " unifyStandingStore to the UNIFIED manifest first")
+    StoreSwap.open(spark, path)
     val cents = readCodebookAt(spark, path, version)
     val d = delta.select(col(idCol), col(vecCol))
       .withColumn("__cluster",
@@ -1018,9 +964,9 @@ object Similarity {
     * the mod-bucket choice buys). Appends never rewrite existing files;
     * fragmentation from many small batches is the compaction job's
     * problem, not the ingest path's. `assigned` must carry the same
-    * (id, vec, clusterCol, nrm) shape the store holds. */
-  /** @param batchId exactly-once key for streaming ingest into a
-    *                 VERSIONED store: recorded atomically with the
+    * (id, vec, clusterCol, nrm) shape the store holds.
+    * @param batchId exactly-once key for streaming ingest: recorded
+    *                 atomically with the
     *                 appended rows ([[StoreSwap.appendDir]]'s manifest
     *                 ledger), so a micro-batch redelivered after an
     *                 unacknowledged epoch is skipped instead of
@@ -1029,7 +975,7 @@ object Similarity {
                             clusterCol: String = "cluster",
                             batchId: Option[Long] = None): Unit = {
     val spark = assigned.sparkSession
-    StoreSwap.withLease(spark, path) {
+    StoreSwap.transact(spark, path) {
     val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
     StoreSwap.appendDir(spark, path, "data", "c_bucket",
       assigned.withColumn("c_bucket",
@@ -1053,49 +999,32 @@ object Similarity {
         .toDF("cid", "cent"))
   }
 
-  /** The codebook write under the store's commit protocol: a versioned
-    * dataDir on unified stores (so codebook updates version WITH the
-    * members they assign — one manifest rename inside an enclosing
-    * [[StoreSwap.transact]], and historical judgment can pin both at
-    * one version), the legacy write-once dir otherwise. The constant
-    * `part=0` partition column exists because the versioned reader
-    * infers partition columns from dir names (same move as the PQ
-    * triple's codebook). */
+  /** The codebook write: a dataDir of the store manifest, so codebook
+    * updates version WITH the members they assign (one manifest rename
+    * inside an enclosing [[StoreSwap.transact]], and historical
+    * judgment can pin both at one version). The constant `part=0`
+    * partition column exists because the manifest reader infers
+    * partition columns from dir names (same move as the PQ triple's
+    * codebook). */
   private def writeCodebookDf(spark: SparkSession, path: String,
                               df: DataFrame): Unit =
-    if (StoreSwap.isUnified(spark, path))
-      StoreSwap.overwriteDir(spark, path, "codebook", "part",
-        df.withColumn("part", lit(0)), Seq(col("cid")),
-        forceVersioned = true)
-    else
-      df.coalesce(1).write.mode("overwrite").parquet(path + "/codebook")
+    StoreSwap.overwriteDir(spark, path, "codebook", "part",
+      df.withColumn("part", lit(0)), Seq(col("cid")))
 
-  /** Whether the store's coarse codebook commits through the unified
-    * manifest (migrated by [[unifyStandingStore]] or first written
-    * after unification). */
-  private def codebookVersioned(spark: SparkSession, path: String): Boolean =
-    StoreSwap.isUnified(spark, path) &&
-      StoreSwap.latestSnapshot(spark, path, "codebook").isDefined
-
-  /** The codebook relation (cid, cent) under the store's protocol,
-    * pinned to store version `pin` when given (unified stores only —
-    * the consistency point of [[semanticJudgeStoreAt]] and the
-    * residual ADC path). */
+  /** The codebook relation (cid, cent), pinned to store version `pin`
+    * when given (the consistency point of [[semanticJudgeStoreAt]] and
+    * the residual ADC path). The live read resolves the current view,
+    * so an open [[StoreSwap.transact]] sees the codebook its own
+    * earlier step committed (read-your-own-writes) — the hazard of
+    * composing a codebook update with a residual re-encode in one
+    * transaction. */
   private def codebookDf(spark: SparkSession, path: String,
-                         pin: Option[Int] = None): DataFrame =
-    if (codebookVersioned(spark, path)) pin match {
-      case Some(v) =>
-        StoreSwap.readVersionedAt(spark, path, "codebook", "part", v)
-          .drop("part")
-      case None =>
-        // the LIVE read goes through latestSnapshot so an open
-        // [[StoreSwap.transact]] sees the codebook its own earlier
-        // step committed (read-your-own-writes), not the pre-txn disk
-        // manifest — the hazard of composing a codebook update with a
-        // residual re-encode in one transaction
-        StoreSwap.readVersioned(spark, path, "codebook", "part")
-          .drop("part")
-    } else spark.read.parquet(path + "/codebook")
+                         pin: Option[Int] = None): DataFrame = {
+    StoreSwap.open(spark, path)
+    pin.fold(StoreSwap.readDir(spark, path, "codebook", "part"))(v =>
+      StoreSwap.readVersionedAt(spark, path, "codebook", "part", v))
+      .drop("part")
+  }
 
   /** The persisted codebook, in training order. */
   def readCodebook(spark: SparkSession, path: String): Seq[Seq[Double]] =
@@ -1103,7 +1032,7 @@ object Similarity {
       .orderBy(col("cid")).collect()
       .map(_.getSeq[Double](1).toSeq).toSeq
 
-  /** The codebook AS OF a pinned unified-store version — the model
+  /** The codebook AS OF a pinned store version — the model
     * half of a historical judgment: assignments replayed at `version`
     * must use the centroids that version's live judgments used, not
     * the latest refit's. */
@@ -1235,95 +1164,29 @@ object Similarity {
   /** The PQ sidecar's three artifacts — codebook, flavor marker, codes
     * — must change TOGETHER: any live mix of old and new (old codes
     * under a new flavor marker, old codes under a new codebook) serves
-    * silently wrong distances. Two protocols, by store mode:
+    * silently wrong distances. They are dataDirs of the store manifest
+    * committed inside ONE [[StoreSwap.transact]] — a single manifest
+    * rename publishes the whole triple, and every flavored read
+    * resolves codebook, meta, and codes AT ONE PINNED STORE VERSION
+    * ([[pqPin]]), so a reader racing the rewrite sees the old or the
+    * new TRIPLE, never a mix. The codebook and meta carry a constant
+    * `part=0` partition column (the manifest reader infers partition
+    * columns from dir names; harmless to every consumer).
     *
-    *  - '''Legacy / per-dataDir-versioned stores''': [[writePqSidecar]]
-    *    stages all three under dot-dirs (invisible to readers), commits
-    *    with one marker-file create, and swaps each with one rename;
-    *    [[pqRecover]] — called by every sidecar read/mutation entry —
-    *    rolls a committed-but-unapplied swap forward. The guarantee is
-    *    CRASH-atomicity: a process dying at any point leaves either the
-    *    old sidecar or (after roll-forward) the new one. The three
-    *    post-commit renames are NOT reader-atomic, so concurrent reads
-    *    during a sidecar rewrite need a maintenance window (the store
-    *    contract already excludes them).
-    *  - '''UNIFIED stores''' ([[StoreSwap.unifyVersioning]]): the three
-    *    artifacts are ordinary versioned dataDirs committed inside ONE
-    *    [[StoreSwap.transact]] — a single manifest rename publishes the
-    *    whole triple, and every flavored read resolves codebook, meta,
-    *    and codes AT ONE PINNED STORE VERSION ([[pqPin]]), so a reader
-    *    racing the rewrite sees the old or the new TRIPLE, never a mix:
-    *    fully reader-atomic, no maintenance window. The ONE-TIME
-    *    cutover rewrite of a store unified after its sidecar was built
-    *    is the exception: it leaves the legacy dirs in place (readers
-    *    that resolved them pre-commit finish safely) and the NEXT
-    *    rewrite retires them — a reader still running across both
-    *    rewrites falls under the legacy maintenance-window contract it
-    *    started under. The codebook and meta gain a constant `part=0`
-    *    partition column (the versioned reader infers partition
-    *    columns from dir names; harmless to every consumer). */
-  private val PqSidecarDirs = Seq("pq_codebook", "pq_meta", "pq_codes")
-
-  /** Whether the sidecar commits through the unified store manifest:
-    * the flavor marker is a versioned dataDir there. */
-  private def pqVersioned(spark: SparkSession, path: String): Boolean =
-    StoreSwap.isUnified(spark, path) &&
-      StoreSwap.latestSnapshot(spark, path, "pq_meta").isDefined
-
-  /** The pinned store version EVERY artifact of one flavored read
+    * The pinned store version EVERY artifact of one flavored read
     * resolves at — the reader-atomicity point: three separate
     * latest-manifest resolutions could straddle a commit, a single
-    * pinned version cannot. None = legacy live-dir sidecar. */
+    * pinned version cannot. None = the store has no sidecar. */
   private def pqPin(spark: SparkSession, path: String): Option[Int] =
-    if (pqVersioned(spark, path))
-      Some(StoreSwap.snapshotVersions(spark, path, "pq_meta").last)
-    else None
+    StoreSwap.latestSnapshot(spark, path, "pq_meta")
+      .map(_ => StoreSwap.snapshotVersions(spark, path).last)
 
-  /** A sidecar artifact at the pinned version (or the legacy live
-    * dir). */
+  /** A sidecar artifact at the pinned version (the current view when
+    * unpinned). */
   private def pqDirDf(spark: SparkSession, path: String, dataDir: String,
                       partCol: String, pin: Option[Int]): DataFrame =
-    pin match {
-      case Some(v) =>
-        StoreSwap.readVersionedAt(spark, path, dataDir, partCol, v)
-      case None => spark.read.parquet(s"$path/$dataDir")
-    }
-
-  private def pqPending(path: String) =
-    new org.apache.hadoop.fs.Path(path + "/_pending_pq")
-
-  private[graft] def pqRecover(spark: SparkSession, path: String): Unit = {
-    val mark = pqPending(path)
-    val fs = mark.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(mark)) return
-    // a pending marker under a LIVE foreign lease is the writer
-    // mid-commit, not a crash: applying the swap from an unleased read
-    // path (pqFlavor, pqTopKStore) would race the writer's own
-    // pqApplySwap destructively — delete a just-swapped live artifact
-    // dir, then fail the rename. Fail fast; retry after the release.
-    StoreSwap.foreignLiveLease(spark, path).foreach { holder =>
-      sys.error(s"store $path has a pending PQ sidecar swap under a live" +
-        s" writer lease ($holder) — the writer is mid-commit; retry" +
-        " after it releases instead of racing its roll-forward")
-    }
-    pqApplySwap(spark, path)
-  }
-
-  /** Idempotent post-commit half: an absent staging dir = that artifact
-    * already swapped. */
-  private def pqApplySwap(spark: SparkSession, path: String): Unit = {
-    val fs = pqPending(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    PqSidecarDirs.foreach { d =>
-      val stg = new org.apache.hadoop.fs.Path(s"$path/.staging-$d")
-      val live = new org.apache.hadoop.fs.Path(s"$path/$d")
-      if (fs.exists(stg)) {
-        if (fs.exists(live)) fs.delete(live, true)
-        if (!fs.rename(stg, live)) sys.error(s"sidecar swap failed: $live")
-      }
-    }
-    fs.delete(pqPending(path), false)
-  }
+    pin.fold(StoreSwap.readDir(spark, path, dataDir, partCol))(v =>
+      StoreSwap.readVersionedAt(spark, path, dataDir, partCol, v))
 
   /** @param opqIters 0 (default) keeps the structured Walsh–Hadamard
     *                  rotation when `rotate` is set; > 0 TRAINS an OPQ
@@ -1351,11 +1214,8 @@ object Similarity {
                      residual: Boolean = false,
                      rotate: Boolean = false,
                      opqIters: Int = 0): Unit =
-    StoreSwap.withLease(spark, path) {
-    pqRecover(spark, path) // finish any interrupted predecessor first
+    StoreSwap.transact(spark, path) {
     val (df, buckets) = readStandingStore(spark, path)
-    val fs = pqPending(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val opq: Option[Seq[Seq[Double]]] =
       if (!rotate || opqIters <= 0) None
       else {
@@ -1390,54 +1250,15 @@ object Similarity {
     val codes = packedCodes(enc, cents, idCol, encCol, m, dsub)
       .withColumn("c_bucket",
         pmod(col("cluster"), lit(buckets.toLong)).cast("int"))
-    if (StoreSwap.isUnified(spark, path)) {
-      // Retire LEGACY artifact dirs of a store unified after its
-      // sidecar was built — but only once a versioned triple has
-      // ALREADY been serving reads (i.e. on the rewrite AFTER the
-      // cutover one): deleting them in the same call that publishes
-      // the first versioned triple would race a reader that resolved
-      // the legacy path just before the commit (pqVersioned was still
-      // false for it). Deferred, the dirs are dead weight for one
-      // rewrite cycle; a reader that began before the cutover commit
-      // and is STILL running at the next rewrite falls under the
-      // legacy maintenance-window contract it started under.
-      if (pqVersioned(spark, path))
-        PqSidecarDirs.foreach { d =>
-          val live = new org.apache.hadoop.fs.Path(s"$path/$d")
-          if (fs.exists(live)) fs.delete(live, true)
-        }
-      // READER-ATOMIC commit: the three artifacts become versioned
-      // dataDirs published by ONE manifest rename. A crash anywhere
-      // inside the txn leaves the previous triple fully live.
-      StoreSwap.transact(spark, path) {
-        StoreSwap.overwriteDir(spark, path, "pq_codebook", "part",
-          cents.withColumn("part", lit(0)), Seq(col("sub"), col("cid")),
-          forceVersioned = true)
-        StoreSwap.overwriteDir(spark, path, "pq_meta", "part",
-          meta.withColumn("part", lit(0)), Seq(col("residual")),
-          forceVersioned = true)
-        StoreSwap.overwriteDir(spark, path, "pq_codes", "c_bucket",
-          codes, Seq(col("cluster"), col("id")), forceVersioned = true)
-      }
-      return
-    }
-    PqSidecarDirs.foreach { d => // orphans of a pre-commit crash
-      val stg = new org.apache.hadoop.fs.Path(s"$path/.staging-$d")
-      if (fs.exists(stg)) fs.delete(stg, true)
-    }
-    cents.coalesce(1).write.mode("overwrite")
-      .parquet(path + "/.staging-pq_codebook")
-    meta.coalesce(1).write.mode("overwrite")
-      .parquet(path + "/.staging-pq_meta")
-    codes
-      .repartition(col("c_bucket"))
-      .sortWithinPartitions(col("cluster"), col("id"))
-      .write.mode("overwrite").partitionBy("c_bucket")
-      .parquet(path + "/.staging-pq_codes")
-    // commit point: all three artifacts swap or none do
-    val out = fs.create(pqPending(path), false)
-    try out.write("pq sidecar swap\n".getBytes("UTF-8")) finally out.close()
-    pqApplySwap(spark, path)
+    // the three artifacts publish in the ONE manifest rename of this
+    // transaction: a crash anywhere inside leaves the previous triple
+    // fully live
+    StoreSwap.overwriteDir(spark, path, "pq_codebook", "part",
+      cents.withColumn("part", lit(0)), Seq(col("sub"), col("cid")))
+    StoreSwap.overwriteDir(spark, path, "pq_meta", "part",
+      meta.withColumn("part", lit(0)), Seq(col("residual")))
+    StoreSwap.overwriteDir(spark, path, "pq_codes", "c_bucket",
+      codes, Seq(col("cluster"), col("id")))
   }
 
   /** What the PQ layer quantizes: the raw vector (vanilla PQ) or the
@@ -1633,17 +1454,10 @@ object Similarity {
   private def pqFlavor(spark: SparkSession, path: String,
                        pin: Option[Int] = None)
       : (Boolean, Boolean, Option[Seq[Seq[Double]]]) = {
-    // every flavored read/mutation funnels through here — roll a
-    // committed-but-unapplied sidecar swap forward before trusting the
-    // marker (the marker and the codes must never be read split-brain);
-    // a unified-store pin supersedes this: the triple resolves from one
-    // immutable manifest and there is no swap to roll forward
-    val effPin = pin.orElse { pqRecover(spark, path); pqPin(spark, path) }
-    if (effPin.isEmpty) {
-      val p = new org.apache.hadoop.fs.Path(path + "/pq_meta")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) return (false, false, None)
-    }
+    // every flavored read/mutation funnels through here; the marker
+    // resolves at the same pinned version as the codes it describes
+    val effPin = pin.orElse(pqPin(spark, path))
+    if (effPin.isEmpty) return (false, false, None)
     val meta = pqDirDf(spark, path, "pq_meta", "part", effPin)
     val row = meta.head
     val opq =
@@ -1689,12 +1503,11 @@ object Similarity {
     * assignment [[appendToStandingStore]] already requires. */
   def appendPqCodes(spark: SparkSession, path: String, delta: DataFrame,
                     idCol: String, vecCol: String, m: Int,
-                    dsub: Int): Unit = StoreSwap.withLease(spark, path) {
-    StoreSwap.recover(spark, path)
+                    dsub: Int): Unit = StoreSwap.transact(spark, path) {
     val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
     // a residual/rotated sidecar's deltas must be encoded the same way
     // — the flavor travels with the sidecar, not the caller. Pin the
-    // codebook and flavor to ONE version (versioned sidecars).
+    // codebook and flavor to ONE version.
     val pin = pqPin(spark, path)
     val pqcb = pqDirDf(spark, path, "pq_codebook", "part", pin)
     val (residual, rotated, opq) = pqFlavor(spark, path, pin)
@@ -1704,14 +1517,8 @@ object Similarity {
     val coded = packedCodes(enc, pqcb, idCol, encCol, m, dsub)
       .withColumn("c_bucket",
         pmod(col("cluster"), lit(buckets.toLong)).cast("int"))
-    if (pin.isDefined)
-      StoreSwap.appendDir(spark, path, "pq_codes", "c_bucket", coded,
-        Seq(col("cluster"), col("id")))
-    else coded
-      .repartition(col("c_bucket"))
-      .sortWithinPartitions(col("cluster"), col("id"))
-      .write.mode("append").partitionBy("c_bucket")
-      .parquet(path + "/pq_codes")
+    StoreSwap.appendDir(spark, path, "pq_codes", "c_bucket", coded,
+      Seq(col("cluster"), col("id")))
   }
 
   /** IVF-PQ top-k over the partitioned store — coarse probing decides
@@ -1781,9 +1588,7 @@ object Similarity {
                              queries: DataFrame, probes: DataFrame,
                              idCol: String, vecCol: String, m: Int,
                              dsub: Int, k: Int): DataFrame = {
-    // a search-only process must also roll forward a crashed mutation's
-    // committed swap, or "forgotten" codes keep being served
-    StoreSwap.recover(spark, storePath)
+    StoreSwap.open(spark, storePath)
     // materialized once: the probe-list ranking is the measured wall of
     // large query batches, and the collects below would otherwise
     // re-rank every query a second time inside the broadcast join
@@ -1957,13 +1762,13 @@ object Similarity {
     * files are re-written as one cluster-sorted file each; contents are
     * unchanged by construction. The rewrite goes through
     * [[StoreSwap.stagedRewrite]]: the compacted buckets are staged to
-    * disk and swapped in atomically behind a manifest commit, so a
-    * crash never leaves a bucket half-compacted and nothing is pinned
-    * in executor memory. Returns the bucket ids compacted. */
+    * disk and published by one manifest commit, so a crash never
+    * leaves a bucket half-compacted and nothing is pinned in executor
+    * memory. Returns the bucket ids compacted. */
   def compactStandingStore(spark: SparkSession, path: String,
                            maxFilesPerBucket: Int = 4): Seq[Int] = {
     require(maxFilesPerBucket >= 1, "need maxFilesPerBucket >= 1")
-    StoreSwap.recover(spark, path) // list AFTER any pending swap applies
+    StoreSwap.open(spark, path)
     val frag = fragBuckets(spark, path, "data", "c_bucket",
       maxFilesPerBucket)
     if (frag.isEmpty) return Seq.empty
@@ -1975,53 +1780,39 @@ object Similarity {
   }
 
   /** Buckets of `$path/$dataDir` holding more than `maxFiles` data
-    * files — the shared fragmentation detector of both compactors. A
-    * versioned dataDir counts each bucket's files ACROSS its
-    * generations (appends add a gen per batch — the fragmentation is
-    * the gen list); legacy dirs are listed directly. */
+    * files — the shared fragmentation detector of both compactors.
+    * Each bucket's files are counted ACROSS its generations (appends
+    * add a gen per batch — the fragmentation is the gen list). */
   private def fragBuckets(spark: SparkSession, path: String,
                           dataDir: String, partCol: String,
                           maxFiles: Int): Seq[Int] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    if (StoreSwap.dataDirVersioned(spark, path, dataDir))
-      StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap {
-        case (_, entries) => entries.toSeq.flatMap { case (d, gens) =>
-          d.stripPrefix(partCol + "=").toIntOption.filter { _ =>
-            gens.map { g =>
-              val p = new org.apache.hadoop.fs.Path(
-                s"$path/$dataDir.gens/g$g/$d")
-              val fs = p.getFileSystem(conf)
-              if (fs.exists(p)) fs.listStatus(p)
-                .count(_.getPath.getName.startsWith("part-"))
-              else 0
-            }.sum > maxFiles
-          }
+    StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap {
+      case (_, entries) => entries.toSeq.flatMap { case (d, gens) =>
+        d.stripPrefix(partCol + "=").toIntOption.filter { _ =>
+          gens.map { g =>
+            val p = new org.apache.hadoop.fs.Path(
+              s"$path/$dataDir.gens/g$g/$d")
+            val fs = p.getFileSystem(conf)
+            if (fs.exists(p)) fs.listStatus(p)
+              .count(_.getPath.getName.startsWith("part-"))
+            else 0
+          }.sum > maxFiles
         }
-      }.sorted
-    else {
-      val dataPath = new org.apache.hadoop.fs.Path(s"$path/$dataDir")
-      val fs = dataPath.getFileSystem(conf)
-      if (!fs.exists(dataPath)) return Seq.empty
-      fs.listStatus(dataPath)
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-        .filter(s => fs.listStatus(s.getPath)
-          .count(_.getPath.getName.startsWith("part-")) > maxFiles)
-        .map(_.getPath.getName.stripPrefix(partCol + "=").toInt)
-        .toSeq.sorted
-    }
+      }
+    }.sorted
   }
 
   /** Compact the PQ code sidecar's append-fragmented buckets — the
     * codes fragment exactly like the data files (one more file per
     * touched bucket per [[appendPqCodes]] batch) and their per-file
     * open cost eats the probe-pruning win the same way. Same detection
-    * and staged-swap discipline as [[compactStandingStore]]; a no-op
+    * and staged-rewrite discipline as [[compactStandingStore]]; a no-op
     * (empty) when the store has no sidecar. */
   def compactPqCodes(spark: SparkSession, path: String,
                      maxFilesPerBucket: Int = 4): Seq[Int] = {
     require(maxFilesPerBucket >= 1, "need maxFilesPerBucket >= 1")
-    StoreSwap.recover(spark, path)
-    pqRecover(spark, path)
+    StoreSwap.open(spark, path)
     val frag = fragBuckets(spark, path, "pq_codes", "c_bucket",
       maxFilesPerBucket)
     if (frag.isEmpty) return Seq.empty
@@ -2041,17 +1832,16 @@ object Similarity {
     * rows, through [[StoreSwap.stagedRewrite]] — untouched buckets'
     * files are never opened for the rewrite and never replaced (the
     * spec asserts their listings are byte-identical), the kept slice is
-    * staged to disk (nothing pinned in executor memory), and the swap
-    * is all-or-nothing behind a manifest commit: a crash at any point
-    * either leaves the store untouched or is rolled forward on the next
-    * read/mutation, so "forgotten" rows can never resurrect. A bucket
-    * the delete empties entirely is recorded in the manifest and its
-    * directory dropped at swap. `ids` is a DataFrame (an anti-join, not
-    * a driver literal), so the delete set itself scales. Returns the
+    * staged to disk (nothing pinned in executor memory), and the
+    * rewrite is all-or-nothing behind one manifest commit: a crash at
+    * any point leaves the store untouched, so "forgotten" rows can
+    * never resurrect. A bucket the delete empties entirely leaves the
+    * manifest. `ids` is a DataFrame (an anti-join, not a driver
+    * literal), so the delete set itself scales. Returns the
     * number of rows deleted. */
   def deleteFromStandingStore(spark: SparkSession, path: String,
                               ids: DataFrame,
-                              idCol: String): Long = StoreSwap.withLeaseAtomic(
+                              idCol: String): Long = StoreSwap.transact(
       spark, path) {
     val (df, buckets) = readStandingStore(spark, path)
     val idSet = ids.select(col(idCol)).distinct()
@@ -2062,10 +1852,7 @@ object Similarity {
     val slice = df.filter(col("c_bucket").isin(touched: _*))
     val kept = slice.join(idSet, Seq(idCol), "left_anti")
     val before = slice.count()
-    // sidecar FIRST: a crash between the two swaps must leave the ids
-    // still present in /data (the delete is simply incomplete — re-run
-    // it), never the reverse, where dangling codes keep serving
-    // "forgotten" vectors through the PQ search path
+    // the sidecar's codes leave in the same commit as the rows
     dropPqCodes(spark, path, touched,
       c => c.join(idSet.select(col(idCol).as("id")), Seq("id"), "left_anti"))
     before - StoreSwap.stagedRewrite(spark, path, "c_bucket", touched,
@@ -2094,7 +1881,6 @@ object Similarity {
   private def dropPqCodes(spark: SparkSession, path: String,
                           touched: Seq[Int],
                           keep: DataFrame => DataFrame): Unit = {
-    pqRecover(spark, path)
     if (!StoreSwap.dirExists(spark, path, "pq_codes")) return
     val slice = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
       .filter(col("c_bucket").isin(touched: _*))
@@ -2106,10 +1892,10 @@ object Similarity {
     * by-id delete, the touched buckets are DERIVED (cluster mod
     * buckets) — no discovery scan at all; only those buckets are read
     * and rewritten without the doomed clusters' rows, with the same
-    * staged, crash-atomic swap (and emptied-bucket handling) as
+    * staged, crash-atomic rewrite (and emptied-bucket handling) as
     * [[deleteFromStandingStore]]. Returns rows removed. */
   def deleteClustersFromStore(spark: SparkSession, path: String,
-                              clusters: Set[Long]): Long = StoreSwap.withLease(
+                              clusters: Set[Long]): Long = StoreSwap.transact(
       spark, path) {
     if (clusters.isEmpty) return 0L
     val (df, buckets) = readStandingStore(spark, path)
@@ -2118,7 +1904,6 @@ object Similarity {
     val slice = df.filter(col("c_bucket").isin(touched: _*))
     val kept = slice.filter(!col("cluster").isin(clusters.toSeq: _*))
     val before = slice.count()
-    // sidecar first — same crash-ordering rationale as the by-id delete
     dropPqCodes(spark, path, touched,
       c => c.filter(!col("cluster").isin(clusters.toSeq: _*)))
     before - StoreSwap.stagedRewrite(spark, path, "c_bucket", touched,
@@ -2138,13 +1923,11 @@ object Similarity {
     * (which re-assigns the whole corpus against the merged codebook and
     * renumbers): here membership of undrifted clusters is SETTLED — the
     * same invariant the incremental dedup flow already commits to.
-    * Each constituent step (the cluster delete's bucket swap, the
-    * append, the codebook write) is individually crash-safe, but the
-    * SEQUENCE is not one transaction: a crash between the delete and
-    * the append loses the drifted slice from the store while its copy
-    * survives at `$path/.refit-members`. Recovery is to RE-RUN the
-    * refit with the same `drifted` set — idempotent at ANY crash
-    * point: the fresh-id base is persisted with the backup
+    * The whole sequence (cluster delete, append, code refresh, codebook
+    * write) is ONE store transaction; the drifted slice is backed up at
+    * `$path/.refit-members` while it runs. Should that backup outlive
+    * the refit, RE-RUN it with the same `drifted` set — idempotent:
+    * the fresh-id base is persisted with the backup
     * (`_next_id`, so a post-codebook-write crash can't shift it), data
     * rows and sidecar codes already appended by a prior run are
     * anti-joined out before re-appending, and the codebook write
@@ -2156,23 +1939,17 @@ object Similarity {
                                 targetClusterSize: Long = 50,
                                 iters: Int = 2): Seq[(Long, Seq[Double])] = {
     if (drifted.isEmpty) return Seq.empty
-    // one lease across the whole delete→append→re-encode→codebook
-    // sequence (constituent mutations re-enter it). On a UNIFIED store
-    // the sequence additionally publishes as ONE manifest rename
-    // ([[StoreSwap.transact]]): a reader racing the refit sees the
-    // pre-refit store or the finished one — never the window where the
-    // drifted members are deleted but their re-clustered rows not yet
-    // appended (per-dataDir stores keep the documented idempotent
-    // re-run recovery; their intermediate commits are each
-    // crash-atomic but individually visible). A crash anywhere inside
-    // the txn rolls the store to its pre-refit version — the
+    // the whole delete→append→re-encode→codebook sequence publishes as
+    // ONE manifest rename ([[StoreSwap.transact]]): a reader racing the
+    // refit sees the pre-refit store or the finished one — never the
+    // window where the drifted members are deleted but their
+    // re-clustered rows not yet appended. A crash anywhere inside the
+    // txn leaves the store at its pre-refit version — the
     // `.refit-members` backup then just gets rebuilt from the intact
     // store on the re-run.
-    StoreSwap.withLease(spark, path) {
-      StoreSwap.atomicallyIfUnified(spark, path) {
-        refitLocked(spark, path, idCol, vecCol, drifted,
-          targetClusterSize, iters)
-      }
+    StoreSwap.transact(spark, path) {
+      refitLocked(spark, path, idCol, vecCol, drifted,
+        targetClusterSize, iters)
     }
   }
 

@@ -716,7 +716,7 @@ object StreamingQueries {
         Similarity.assignCluster(col("embedding"), cents).cast("long"))
       .withColumn("nrm", Similarity.norm(col("embedding")))
     Similarity.writeStandingStore(assigned(emb), store, "cluster",
-      buckets = 16, versioned = true)
+      buckets = 16)
     def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
       val stage = tmp.resolve(s"stage-$name")
       df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
@@ -876,7 +876,7 @@ object StreamingQueries {
     Files.createDirectories(in)
     // mutating ingest loop: a private clone of the shared base store
     val store = Fixtures.cloneDir(
-      ScaleQueries.sharedTextStore(spark, dir, versioned = false),
+      ScaleQueries.sharedTextStore(spark, dir),
       "graft-q212s-")
     def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
       val stage = tmp.resolve(s"stage-$name")
@@ -930,17 +930,16 @@ object StreamingQueries {
 
   /** q224: q212's STREAMING LSH INGEST LOOP under the at-least-once
     * redelivery contract — the text twin of q223's exactly-once gate.
-    * The store is VERSIONED and each micro-batch absorbs through
-    * [[Dedup.ingestBatchIntoStore]]: three idempotent merges, then a
-    * ledger ack in the data manifest ([[graft.operators.StoreSwap
-    * .ackBatch]]) as the LAST step. After the stream, batch 0 is
-    * REDELIVERED verbatim (same id, same rows); the acked ledger skips
-    * it before evaluation. The final delta2 judgment must equal q206's
-    * batch-flow oracle exactly. Honest scope: the merges' idempotence
-    * already makes redelivery content-harmless, so what this gate
-    * proves is the composed versioned flow end-to-end; the
-    * skip-without-evaluation half is proved in VersionedStoreSpec
-    * with a poisoned redelivery. */
+    * Each micro-batch absorbs through [[Dedup.ingestBatchIntoStore]]:
+    * three idempotent merges and a ledger ack
+    * ([[graft.operators.StoreSwap.ackBatch]]) in one manifest commit.
+    * After the stream, batch 0 is REDELIVERED verbatim (same id, same
+    * rows); the acked ledger skips it before evaluation. The final
+    * delta2 judgment must equal q206's batch-flow oracle exactly.
+    * Honest scope: the merges' idempotence already makes redelivery
+    * content-harmless, so what this gate proves is the composed flow
+    * end-to-end; the skip-without-evaluation half is proved in
+    * VersionedStoreSpec with a poisoned redelivery. */
   def q224StreamTextExactlyOnce(spark: SparkSession,
                                 dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -954,9 +953,9 @@ object StreamingQueries {
     val tmp = Fixtures.tempDir("graft-q224-")
     val in = tmp.resolve("in")
     Files.createDirectories(in)
-    // mutating ingest loop: a private clone of the shared VERSIONED base
+    // mutating ingest loop: a private clone of the shared base
     val store = Fixtures.cloneDir(
-      ScaleQueries.sharedTextStore(spark, dir, versioned = true),
+      ScaleQueries.sharedTextStore(spark, dir),
       "graft-q224s-")
     def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
       val stage = tmp.resolve(s"stage-$name")
@@ -997,16 +996,16 @@ object StreamingQueries {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  /** q230: q224's STREAMING EXACTLY-ONCE LOOP on the UNIFIED protocol
-    * — each micro-batch's composed ingest (signature MIN-merge +
+  /** q230: q224's STREAMING EXACTLY-ONCE LOOP, version-counted — each
+    * micro-batch's composed ingest (signature MIN-merge +
     * shingle replace-merge + band merge + ledger ack) publishes as ONE
     * `store.v<N>` manifest rename ([[graft.operators.StoreSwap
     * .transact]] inside [[Dedup.ingestBatchIntoStore]]), so the gate
     * REQUIRES exactly one version bump per micro-batch and zero for
     * the post-stream redelivery (skipped from the per-dataDir
     * namespaced ledger before evaluation). The final delta2 judgment
-    * must equal q206's batch-flow oracle exactly — the unified
-    * transactional flavor is content-invariant too. */
+    * must equal q206's batch-flow oracle exactly — the transactional
+    * flow is content-invariant too. */
   def q230StreamUnifiedTxn(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val standing = docs.select(col("doc_id"), col("text"))
@@ -1019,12 +1018,10 @@ object StreamingQueries {
     val tmp = Fixtures.tempDir("graft-q230-")
     val in = tmp.resolve("in")
     Files.createDirectories(in)
-    // mutating ingest loop: a private clone of the shared VERSIONED
-    // base, migrated to the unified manifest (the migration mutates)
+    // mutating ingest loop: a private clone of the shared base
     val store = Fixtures.cloneDir(
-      ScaleQueries.sharedTextStore(spark, dir, versioned = true),
+      ScaleQueries.sharedTextStore(spark, dir),
       "graft-q230s-")
-    Dedup.unifySignatureStore(spark, store)
     val preV = Dedup.signatureStoreVersions(spark, store).last
     def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
       val stage = tmp.resolve(s"stage-$name")

@@ -55,6 +55,8 @@ object BandIndexProbe {
     val idxBuildSec = t {
       Dedup.writeBandIndex(spark, store, "doc_id", bands = 8)
     }
+    // the sidecar-less twin: judging through it takes the text fallback
+    val storeText = graft.operators.Fixtures.cloneDir(store, "graft-bip-")
     val shBuildSec = t {
       Dedup.writeShingleSidecar(spark, store, docs, "doc_id", "text")
     }
@@ -84,18 +86,14 @@ object BandIndexProbe {
       Dedup.minhashSignatures(small, "doc_id", "text"),
       store10, "doc_id", buckets = 64)
     Dedup.writeBandIndex(spark, store10, "doc_id", bands = 8)
+    val store10Text = graft.operators.Fixtures.cloneDir(store10, "graft-bip-")
     Dedup.writeShingleSidecar(spark, store10, small, "doc_id", "text")
+    val textTwin = Map(store -> storeText, store10 -> store10Text)
     def judgeVia(path: String, standing: org.apache.spark.sql.DataFrame,
                  d: org.apache.spark.sql.DataFrame,
-                 sidecar: Boolean): Double = {
-      val shp = new org.apache.hadoop.fs.Path(path + "/shingles")
-      val shpTmp = new org.apache.hadoop.fs.Path(path + "/.shingles-off")
-      val fs = shp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!sidecar) fs.rename(shp, shpTmp) // hide the sidecar: fallback
-      try t { Dedup.lshJudgeStore(spark, path, standing, d,
-        "doc_id", "text").count() }
-      finally if (!sidecar) fs.rename(shpTmp, shp)
-    }
+                 sidecar: Boolean): Double =
+      t { Dedup.lshJudgeStore(spark, if (sidecar) path else textTwin(path),
+        standing, d, "doc_id", "text").count() }
     val judgeSide10 = judgeVia(store10, small, delta, sidecar = true)
     val judgeSideFull = judgeVia(store, docs, delta, sidecar = true)
     val judgeText10 = judgeVia(store10, small, delta, sidecar = false)

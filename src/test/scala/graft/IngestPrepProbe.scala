@@ -36,7 +36,7 @@ object IngestPrepProbe {
           regexp_replace(col("text"), pat, "").as("text"))
     val delta1 = shifted(3, 100000L, "^\\S+\\s+")
     val base = t("shared-store build (first call only)") {
-      ScaleQueries.sharedTextStore(spark, dir, versioned = false)
+      ScaleQueries.sharedTextStore(spark, dir)
     }
     val store = t("clone")(Fixtures.cloneDir(base, "graft-probe212-"))
     val halves = Seq(delta1.filter(col("doc_id") % 2 === 0),

@@ -68,9 +68,8 @@ object SemanticReplayProbe {
         .createTempDirectory("graft-srp-").resolve("standing").toString
       val buildSec = t {
         Similarity.writeStandingStore(assigned(corpus), store, "cluster",
-          buckets = 64, versioned = true)
+          buckets = 64)
         Similarity.writeCodebook(spark, store, cents)
-        Similarity.unifyStandingStore(spark, store)
       }
       val v0 = Similarity.standingStoreVersions(spark, store).last
       // post-pin: members appended AND the codebook refit (both must

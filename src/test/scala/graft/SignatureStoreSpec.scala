@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Fixtures}
+import graft.operators.{Dedup, Fixtures, StoreSwap}
 import org.apache.spark.sql.functions._
 
 /** Partitioned minhash-signature store (q196/q197's machinery):
@@ -19,29 +19,36 @@ class SignatureStoreSpec extends SparkSpec {
   private def sigs(df: org.apache.spark.sql.DataFrame) =
     Dedup.minhashSignatures(df, "doc_id", "text", n = 3, numHashes = 4)
 
-  private def listFiles(dir: java.nio.file.Path): Map[String, Seq[String]] =
-    dir.toFile.listFiles().filter(_.getName.startsWith("d_bucket=")).map { d =>
-      d.getName -> d.listFiles().map(_.getName).toSeq.sorted
-    }.toMap
+  /** Each live bucket of `dataDir` → the files of its generations.
+    * Generations are immutable, so an unchanged listing proves the
+    * bucket was not rewritten. */
+  private def listFiles(path: String,
+                        dataDir: String): Map[String, Seq[String]] =
+    StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap(_._2)
+      .collect { case (b, gens) if b.startsWith("d_bucket=") =>
+        b -> gens.flatMap(g =>
+          new java.io.File(s"$path/$dataDir.gens/g$g/$b").listFiles()
+            .map(f => s"g$g/${f.getName}")).sorted
+      }.toMap
 
   test("merge is bucket-local and re-ingest is idempotent") {
     val path = Fixtures.tempDir("graft-sigstore-").resolve("s").toString
     // standing: docs 0,1,3 → buckets 0,1,3 (mod 8)
     Dedup.writeSignatureStore(sigs(docs().filter(col("doc_id") < 4 &&
       col("doc_id") =!= 2L)), path, "doc_id", buckets = 8)
-    val before = listFiles(java.nio.file.Paths.get(path, "data"))
+    val before = listFiles(path, "data")
     // delta: new doc 2 (bucket 2), new doc 8 (bucket 0 — shared with
     // doc 0), and a RE-LOAD of doc 1 (identical text → identical sigs)
     val touched = Dedup.mergeIntoSignatureStore(spark, path,
       sigs(docs().filter(col("doc_id") === 2L || col("doc_id") === 8L ||
         col("doc_id") === 1L)), "doc_id")
     assert(touched == Seq(0, 1, 2))
-    val after = listFiles(java.nio.file.Paths.get(path, "data"))
+    val after = listFiles(path, "data")
     // bucket 3 (doc 3, untouched by the delta) keeps its exact listing
     assert(after("d_bucket=3") == before("d_bucket=3"))
     // the store equals the from-scratch whole-corpus signatures —
     // including the idempotent re-load of doc 1
-    val got = spark.read.parquet(path + "/data")
+    val got = StoreSwap.readDir(spark, path, "data", "d_bucket")
       .select("doc_id", "k", "mh").orderBy("doc_id", "k").collect().toSeq
     val want = sigs(docs()).orderBy("doc_id", "k").collect().toSeq
     assert(got == want)
@@ -50,16 +57,16 @@ class SignatureStoreSpec extends SparkSpec {
   test("forget derives buckets from ids and drops emptied directories") {
     val path = Fixtures.tempDir("graft-sigstore-").resolve("s").toString
     Dedup.writeSignatureStore(sigs(docs()), path, "doc_id", buckets = 8)
-    val before = listFiles(java.nio.file.Paths.get(path, "data"))
+    val before = listFiles(path, "data")
     // forget docs 2 and 3: buckets 2 and 3; bucket 2 holds only doc 2
     val n = Dedup.forgetDocsFromSignatureStore(spark, path,
       Seq(2L, 3L).toDF("doc_id"), "doc_id")
     assert(n == 8) // 2 docs x 4 hashes
-    val after = listFiles(java.nio.file.Paths.get(path, "data"))
+    val after = listFiles(path, "data")
     assert(!after.contains("d_bucket=2"), "emptied bucket dir survived")
     assert(after("d_bucket=0") == before("d_bucket=0"))
     assert(after("d_bucket=1") == before("d_bucket=1"))
-    val got = spark.read.parquet(path + "/data")
+    val got = StoreSwap.readDir(spark, path, "data", "d_bucket")
       .select("doc_id", "k", "mh").orderBy("doc_id", "k").collect().toSeq
     val want = sigs(docs().filter(col("doc_id") =!= 2L &&
       col("doc_id") =!= 3L)).orderBy("doc_id", "k").collect().toSeq
@@ -167,7 +174,7 @@ class SignatureStoreSpec extends SparkSpec {
     val path = Fixtures.tempDir("graft-sigstore-").resolve("s").toString
     Dedup.writeSignatureStore(sigs(docs()), path, "doc_id", buckets = 8)
     Dedup.writeShingleSidecar(spark, path, docs(), "doc_id", "text", n = 3)
-    val before = listFiles(java.nio.file.Paths.get(path, "shingles"))
+    val before = listFiles(path, "shingles")
     // re-ingest doc 0 with CHANGED text: REPLACE semantics — the
     // sidecar must hold exactly the new text's hashes (the signature
     // store, by contrast, MIN-merges to the union)
@@ -176,10 +183,10 @@ class SignatureStoreSpec extends SparkSpec {
     val touched = Dedup.mergeShinglesIntoStore(spark, path, changed,
       "doc_id", "text")
     assert(touched == Seq(0))
-    val after = listFiles(java.nio.file.Paths.get(path, "shingles"))
+    val after = listFiles(path, "shingles")
     assert(after("d_bucket=1") == before("d_bucket=1"))
     assert(after("d_bucket=3") == before("d_bucket=3"))
-    val got = spark.read.parquet(path + "/shingles")
+    val got = StoreSwap.readDir(spark, path, "shingles", "d_bucket")
       .filter(col("id") === 0L).select("x")
       .collect().map(_.getLong(0)).sorted.toSeq
     val want = Dedup.docShingles(changed, "doc_id", "text", 3)
@@ -190,7 +197,7 @@ class SignatureStoreSpec extends SparkSpec {
     // mutation
     Dedup.forgetDocsFromSignatureStore(spark, path,
       Seq(0L).toDF("doc_id"), "doc_id")
-    assert(spark.read.parquet(path + "/shingles")
+    assert(StoreSwap.readDir(spark, path, "shingles", "d_bucket")
       .filter(col("id") === 0L).count() == 0, "sidecar rows survived forget")
   }
 
@@ -225,7 +232,7 @@ class SignatureStoreSpec extends SparkSpec {
         n = 3, numHashes = 4), "doc_id")
     Dedup.mergeIntoBandIndex(spark, path,
       changed.select(col("doc_id")), "doc_id")
-    val rowsForDoc0 = spark.read.parquet(path + "/bands")
+    val rowsForDoc0 = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
       .filter(col("id") === 0L).count()
     assert(rowsForDoc0 > 2, // > bands ⇒ stale rows present
       s"fixture vacuous: doc 0 has only $rowsForDoc0 band rows")
@@ -234,9 +241,9 @@ class SignatureStoreSpec extends SparkSpec {
     val removed = Dedup.forgetFromBandIndex(spark, path,
       Seq(0L).toDF("doc_id"), "doc_id")
     assert(removed == rowsForDoc0)
-    assert(spark.read.parquet(path + "/bands")
+    assert(StoreSwap.readDir(spark, path, "bands", "bb_bucket")
       .filter(col("id") === 0L).count() == 0, "stale band rows survived")
-    assert(spark.read.parquet(path + "/bands_inv")
+    assert(StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
       .filter(col("id") === 0L).count() == 0, "inventory rows survived")
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Fixtures, Similarity}
+import graft.operators.{Fixtures, Similarity, StoreSwap}
 import org.apache.spark.sql.functions._
 
 /** Partitioned standing store (q187's machinery): bucket layout,
@@ -56,7 +56,7 @@ class StandingStoreSpec extends SparkSpec {
     val path = Fixtures.tempDir("graft-store-").resolve("s").toString
     Similarity.writeStandingStore(
       assigned(corpus().filter(col("vec_id") < 20), cents), path,
-      "cluster", buckets = 8, versioned = true)
+      "cluster", buckets = 8)
     // a second generation, so the snapshot read unions per-gen scans
     Similarity.appendToStandingStore(
       assigned(corpus().filter(col("vec_id") >= 20), cents), path,
@@ -75,30 +75,34 @@ class StandingStoreSpec extends SparkSpec {
     assert(Similarity.readStandingStore(spark, path)._1.count() == 40)
   }
 
-  private def listFiles(dir: java.nio.file.Path): Map[String, Seq[String]] = {
-    import scala.jdk.CollectionConverters._
-    val root = dir.toFile
-    root.listFiles().filter(_.getName.startsWith("c_bucket=")).map { d =>
-      d.getName -> d.listFiles().map(_.getName).toSeq.sorted
-    }.toMap
-  }
+  /** Each live bucket of `dataDir` → the files of its generations.
+    * Generations are immutable, so an unchanged listing proves the
+    * bucket was not rewritten. */
+  private def listFiles(path: String,
+                        dataDir: String): Map[String, Seq[String]] =
+    StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap(_._2)
+      .collect { case (b, gens) if b.startsWith("c_bucket=") =>
+        b -> gens.flatMap(g =>
+          new java.io.File(s"$path/$dataDir.gens/g$g/$b").listFiles()
+            .map(f => s"g$g/${f.getName}")).sorted
+      }.toMap
 
   test("semanticJudgeStoreAt: pinned replay ignores post-pin members AND codebook; per-dataDir stores refused") {
-    import graft.operators.StoreSwap
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
     val path = Fixtures.tempDir("graft-store-").resolve("sj").toString
     Similarity.writeStandingStore(assigned(corpus(), cents), path,
-      "cluster", buckets = 8, versioned = true)
+      "cluster", buckets = 8)
     Similarity.writeCodebook(spark, path, cents)
-    // a per-dataDir store cannot pin codebook + members together
+    // a version that cannot pin codebook + members together — here v0,
+    // committed before the codebook existed — is refused, never judged
+    // against another version's model
     val delta = corpus().select((col("vec_id") + 1000L).as("vec_id"),
       col("embedding"))
     val ex = intercept[IllegalArgumentException] {
       Similarity.semanticJudgeStoreAt(spark, path, delta, "vec_id",
         "embedding", 0, minCos = 0.99)
     }
-    assert(ex.getMessage.contains("UNIFIED"), ex.getMessage)
-    Similarity.unifyStandingStore(spark, path)
+    assert(ex.getMessage.contains("codebook"), ex.getMessage)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Similarity.standingStoreVersions(spark, path).last
@@ -143,13 +147,11 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("on a unified store the whole refit publishes as ONE version (reader-atomic)") {
-    import graft.operators.StoreSwap
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
     val path = Fixtures.tempDir("graft-store-").resolve("ur").toString
     Similarity.writeStandingStore(assigned(corpus(), cents), path,
-      "cluster", buckets = 8, versioned = true)
+      "cluster", buckets = 8)
     Similarity.writeCodebook(spark, path, cents)
-    Similarity.unifyStandingStore(spark, path)
     val v0 = Similarity.standingStoreVersions(spark, path).last
     val fresh = Similarity.refitStoreDriftedClusters(spark, path,
       "vec_id", "embedding", drifted = Set(0L),
@@ -178,7 +180,7 @@ class StandingStoreSpec extends SparkSpec {
     val path = Fixtures.tempDir("graft-store-").resolve("s").toString
     Similarity.writeStandingStore(assigned(base, cents), path,
       "cluster", buckets = 8)
-    val before = listFiles(java.nio.file.Paths.get(path, "data"))
+    val before = listFiles(path, "data")
     // vec_id 0 lives in the blob-0 cluster; its scaled twin is the delta
     val twin = Seq((1000L,
         Seq.tabulate(4)(d => ((0 + 0 * 0.1 + d * 0.01) * 2.0).toFloat)))
@@ -192,17 +194,17 @@ class StandingStoreSpec extends SparkSpec {
     val doomed = base.filter(col("vec_id") % 2 === 0).select("vec_id")
     val n = Similarity.deleteFromStandingStore(spark, path, doomed, "vec_id")
     assert(n == 20)
-    val after = listFiles(java.nio.file.Paths.get(path, "data"))
+    val after = listFiles(path, "data")
     // the two blobs are distinct clusters, so distinct buckets: the
     // surviving (odd-blob) bucket must keep its exact file listing
-    val survivorBuckets = spark.read.parquet(path + "/data")
+    val survivorBuckets = Similarity.readStandingStore(spark, path)._1
       .select("c_bucket").distinct()
       .collect().map(r => s"c_bucket=${r.getInt(0)}").toSet
     assert(survivorBuckets.nonEmpty)
     survivorBuckets.foreach(b => assert(after(b) == before(b),
       s"untouched bucket $b was rewritten"))
     // ids are gone
-    assert(spark.read.parquet(path + "/data")
+    assert(Similarity.readStandingStore(spark, path)._1
       .filter(col("vec_id") % 2 === 0).count() == 0)
     // and the twin's verdict flips to keep: its near-dups are gone
     val v1 = Similarity.semDedupIncrementalStore(spark, path, deltaAssigned,
@@ -221,8 +223,8 @@ class StandingStoreSpec extends SparkSpec {
     val n = Similarity.deleteFromStandingStore(spark, path,
       base.select("vec_id"), "vec_id")
     assert(n == 40)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "data", "c_bucket=0")))
+    assert(listFiles(path, "data").isEmpty,
+      "an emptied bucket stayed in the manifest")
   }
 
   test("compactStandingStore merges fragmented buckets, contents unchanged") {
@@ -238,22 +240,21 @@ class StandingStoreSpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     Similarity.appendToStandingStore(assigned(extra1, cents), path)
     Similarity.appendToStandingStore(assigned(extra2, cents), path)
-    val dataDir = java.nio.file.Paths.get(path, "data")
-    val before = listFiles(dataDir)
-    val fragged = before.filter(_._2.count(_.startsWith("part-")) > 1).keys
+    val before = listFiles(path, "data")
+    val fragged = before.filter(_._2.count(_.contains("/part-")) > 1).keys
     assert(fragged.nonEmpty, s"appends did not fragment: $before")
-    val want = spark.read.parquet(path + "/data")
+    val want = Similarity.readStandingStore(spark, path)._1
       .orderBy("vec_id").collect().toSeq
     val compacted = Similarity.compactStandingStore(spark, path,
       maxFilesPerBucket = 1)
     assert(compacted.map(b => s"c_bucket=$b").toSet == fragged.toSet)
-    val after = listFiles(dataDir)
+    val after = listFiles(path, "data")
     // fragmented buckets now hold exactly one data file
     fragged.foreach(b =>
-      assert(after(b).count(_.startsWith("part-")) == 1, s"$b: ${after(b)}"))
+      assert(after(b).count(_.contains("/part-")) == 1, s"$b: ${after(b)}"))
     // untouched buckets keep their listings; contents are unchanged
     (before.keySet -- fragged).foreach(b => assert(after(b) == before(b)))
-    assert(spark.read.parquet(path + "/data")
+    assert(Similarity.readStandingStore(spark, path)._1
       .orderBy("vec_id").collect().toSeq == want)
     // idempotent: nothing left to compact
     assert(Similarity.compactStandingStore(spark, path, 1).isEmpty)
@@ -286,7 +287,7 @@ class StandingStoreSpec extends SparkSpec {
     Similarity.writeStandingStore(assigned(base, cents), path,
       "cluster", buckets = 8)
     Similarity.writeCodebook(spark, path, cents)
-    val before = listFiles(java.nio.file.Paths.get(path, "data"))
+    val before = listFiles(path, "data")
     // which cluster holds the even blob? refit THAT one
     val evenCluster = assigned(base.filter(col("vec_id") === 0L), cents)
       .select("cluster").head.getLong(0)
@@ -295,11 +296,11 @@ class StandingStoreSpec extends SparkSpec {
       iters = 2)
     // 20 members / target 10 => 2 fresh clusters, ids appended past max
     assert(fresh.map(_._1) == Seq(2L, 3L))
-    val after = listFiles(java.nio.file.Paths.get(path, "data"))
+    val after = listFiles(path, "data")
     val survivorBucket = s"c_bucket=${1 - evenCluster}"
     assert(after(survivorBucket) == before(survivorBucket),
       "undrifted cluster's bucket was rewritten")
-    val data = spark.read.parquet(path + "/data")
+    val data = Similarity.readStandingStore(spark, path)._1
     // the drifted id is retired, never reused; all members re-homed
     assert(data.filter(col("cluster") === evenCluster).count() == 0)
     assert(data.filter(col("cluster") >= 2L).count() == 20)
@@ -375,19 +376,14 @@ class StandingStoreSpec extends SparkSpec {
     Similarity.writeCodebook(spark, path, cents)
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4)
-    def codeList(): Map[String, Seq[String]] = {
-      val root = java.nio.file.Paths.get(path, "pq_codes").toFile
-      root.listFiles().filter(_.getName.startsWith("c_bucket=")).map { d =>
-        d.getName -> d.listFiles().map(_.getName).toSeq.sorted
-      }.toMap
-    }
+    def codeList() = listFiles(path, "pq_codes")
     val before = codeList()
     // delete the even-id blob: its cluster's bucket is rewritten in the
     // sidecar too; the odd blob's code bucket must keep its exact files
     val n = Similarity.deleteFromStandingStore(spark, path,
       corpus().filter(col("vec_id") % 2 === 0).select("vec_id"), "vec_id")
     assert(n == 20)
-    val codes = spark.read.parquet(path + "/pq_codes")
+    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
     assert(codes.filter(col("id") % 2 === 0).count() == 0,
       "forgotten ids still have PQ codes")
     assert(codes.count() == 20)
@@ -414,15 +410,15 @@ class StandingStoreSpec extends SparkSpec {
       cents.zipWithIndex.map { case (c, i) => (i.toLong, c) })
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4)
-    val drifted = spark.read.parquet(path + "/data")
+    val drifted = Similarity.readStandingStore(spark, path)._1
       .select("cluster").distinct().orderBy("cluster")
       .limit(1).collect().map(_.getLong(0)).toSet
     val fresh = Similarity.refitStoreDriftedClusters(spark, path,
       "vec_id", "embedding", drifted, targetClusterSize = 10, iters = 1)
     assert(fresh.nonEmpty)
-    val data = spark.read.parquet(path + "/data")
+    val data = Similarity.readStandingStore(spark, path)._1
       .select(col("vec_id").as("id"), col("cluster").as("dc"))
-    val codes = spark.read.parquet(path + "/pq_codes")
+    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
       .select(col("id"), col("cluster").as("cc"))
     // exactly one code row per store row, and its cluster matches the
     // (possibly fresh) store assignment — no stale drifted-id codes
@@ -447,7 +443,7 @@ class StandingStoreSpec extends SparkSpec {
       cents.zipWithIndex.map { case (c, i) => (i.toLong, c) })
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4, residual = true)
-    val drifted = spark.read.parquet(path + "/data")
+    val drifted = Similarity.readStandingStore(spark, path)._1
       .select("cluster").distinct().orderBy("cluster")
       .limit(1).collect().map(_.getLong(0)).toSet
     val fresh = Similarity.refitStoreDriftedClusters(spark, path,
@@ -456,9 +452,9 @@ class StandingStoreSpec extends SparkSpec {
     // the residual encode joins on the coarse codebook — if the fresh
     // cids weren't written before the refresh, the refit members' code
     // rows would be silently dropped and this 1:1 check fails
-    val data = spark.read.parquet(path + "/data")
+    val data = Similarity.readStandingStore(spark, path)._1
       .select(col("vec_id").as("id"), col("cluster").as("dc"))
-    val codes = spark.read.parquet(path + "/pq_codes")
+    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
       .select(col("id"), col("cluster").as("cc"))
     assert(codes.count() == data.count())
     assert(data.join(codes, "id").filter(col("dc") =!= col("cc")).count() == 0)
@@ -474,7 +470,7 @@ class StandingStoreSpec extends SparkSpec {
       cents.zipWithIndex.map { case (c, i) => (i.toLong, c) })
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4, residual = true, rotate = true)
-    val drifted = spark.read.parquet(path + "/data")
+    val drifted = Similarity.readStandingStore(spark, path)._1
       .select("cluster").distinct().orderBy("cluster")
       .limit(1).collect().map(_.getLong(0)).toSet
     val fresh = Similarity.refitStoreDriftedClusters(spark, path,
@@ -484,9 +480,9 @@ class StandingStoreSpec extends SparkSpec {
     // BOTH persisted flavors (residualize against the fresh coarse
     // cids, then rotate) — a dropped flavor would yield wrong or
     // missing code rows
-    val data = spark.read.parquet(path + "/data")
+    val data = Similarity.readStandingStore(spark, path)._1
       .select(col("vec_id").as("id"), col("cluster").as("dc"))
-    val codes = spark.read.parquet(path + "/pq_codes")
+    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
       .select(col("id"), col("cluster").as("cc"))
     assert(codes.count() == data.count())
     assert(data.join(codes, "id").filter(col("dc") =!= col("cc")).count() == 0)
@@ -520,7 +516,7 @@ class StandingStoreSpec extends SparkSpec {
     // subvectors and disagree
     val rot = Similarity.whtRotate(
       delta.select(col("vec_id"), col("embedding")), "embedding", "r", 4)
-    val pqcb = spark.read.parquet(path + "/pq_codebook")
+    val pqcb = StoreSwap.readDir(spark, path, "pq_codebook", "part")
     val exp = rot.select(col("vec_id"), explode(array(
         struct(lit(0).as("sub"), slice(col("r"), 1, 2).as("sv")),
         struct(lit(1).as("sub"), slice(col("r"), 3, 2).as("sv")))).as("e"))
@@ -530,7 +526,7 @@ class StandingStoreSpec extends SparkSpec {
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(struct(col("d2"), col("cid"))).as("mn"))
       .select(col("vec_id"), col("sub"), col("mn.cid").as("exp_cid"))
-    val got = spark.read.parquet(path + "/pq_codes")
+    val got = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
       .filter(col("id") % 3 === 0)
       .select(col("id").as("vec_id"), col("codes"))
     assert(got.count() == delta.count())
@@ -557,7 +553,7 @@ class StandingStoreSpec extends SparkSpec {
       cents.zipWithIndex.map { case (c, i) => (i.toLong, c) })
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4)
-    val drifted = spark.read.parquet(path + "/data")
+    val drifted = Similarity.readStandingStore(spark, path)._1
       .select("cluster").distinct().orderBy("cluster")
       .limit(1).collect().map(_.getLong(0)).toSet
     // capture what the crashed run's backup held: the pre-refit drifted
@@ -569,19 +565,19 @@ class StandingStoreSpec extends SparkSpec {
     val preRows = Similarity.readStandingStorePruned(spark, path,
       drifted.toSeq).collect()
     assert(preRows.nonEmpty)
-    val preNextId = spark.read.parquet(path + "/codebook")
+    val preNextId = StoreSwap.readDir(spark, path, "codebook", "part")
       .agg(max(col("cid"))).head.getLong(0) + 1
     val fresh = Similarity.refitStoreDriftedClusters(spark, path,
       "vec_id", "embedding", drifted, targetClusterSize = 10, iters = 1)
     assert(fresh.nonEmpty)
     def snap() = (
-      spark.read.parquet(path + "/data")
+      Similarity.readStandingStore(spark, path)._1
         .select(col("vec_id"), col("cluster")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-      spark.read.parquet(path + "/pq_codes")
+      StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
         .select(col("id"), col("cluster")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-      spark.read.parquet(path + "/codebook")
+      StoreSwap.readDir(spark, path, "codebook", "part")
         .select(col("cid")).collect().map(_.getLong(0)).sorted.toSeq)
     val clean = snap()
     // fabricate the crash state: a run that died AFTER its appends and
@@ -604,66 +600,72 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("a swap committed but not applied (post-manifest crash) rolls forward on read") {
-    import graft.operators.StoreSwap
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
     val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    Similarity.writeStandingStore(assigned(corpus(), cents), path,
-      "cluster", buckets = 8)
+    LegacyStores.standingStore(assigned(corpus(), cents), path, "cluster", 8)
     val liveBuckets = spark.read.parquet(path + "/data")
       .select("c_bucket").distinct().collect().map(_.getInt(0)).sorted
     assert(liveBuckets.length == 2) // two blobs → two clusters → two buckets
     val (bSurvive, bEmpty) = (liveBuckets(0), liveBuckets(1))
-    // fabricate the crashed state: replacement content staged for one
-    // bucket, the other recorded as emptied, manifest committed — and
-    // "crash" before the swap applies
-    Seq((9999L, Seq(1f, 1f, 1f, 1f), bSurvive.toLong, 2.0))
-      .toDF("vec_id", "embedding", "cluster", "nrm")
-      .withColumn("c_bucket", lit(bSurvive))
-      .write.partitionBy("c_bucket").parquet(path + "/.staging")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_pending_swap"),
-      s"c_bucket\n$bSurvive\n$bEmpty")
-    // the next read rolls the commit forward
+    // the legacy layout a writer left when it crashed after committing a
+    // swap: replacement content staged for one bucket, the other
+    // recorded as emptied, `_pending_swap` down, swap not applied
+    LegacyStores.pendingSwap(path, "c_bucket", Seq(bSurvive), Seq(bEmpty),
+      Seq((9999L, Seq(1f, 1f, 1f, 1f), bSurvive.toLong, 2.0))
+        .toDF("vec_id", "embedding", "cluster", "nrm")
+        .withColumn("c_bucket", lit(bSurvive)))
+    // the first read rolls the commit forward, then migrates
     val (df, _) = Similarity.readStandingStore(spark, path)
     val rows = df.select("vec_id", "c_bucket").collect()
     assert(rows.length == 1 && rows.head.getLong(0) == 9999L)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_pending_swap")))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, ".staging")))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "data", s"c_bucket=$bEmpty")))
-    // idempotent: nothing pending now
-    assert(!StoreSwap.recover(spark, path))
+    Seq("_pending_swap", ".staging", "data").foreach(d =>
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, d)),
+        s"$d survived the migration"))
+    assert(!listFiles(path, "data").contains(s"c_bucket=$bEmpty"))
+    // idempotent: a second open finds nothing to do
+    val v = StoreSwap.snapshotVersions(spark, path)
+    StoreSwap.open(spark, path)
+    assert(StoreSwap.snapshotVersions(spark, path) == v)
+  }
+
+  /** A store in the legacy layout with a write-once codebook and a PQ
+    * triple in live dirs, copied from a store built over the same data
+    * (returned second). */
+  private def legacyPqStore(): (String, String) = {
+    val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
+    val ref = Fixtures.tempDir("graft-store-").resolve("ref").toString
+    Similarity.writeStandingStore(assigned(corpus(), cents), ref,
+      "cluster", buckets = 8)
+    Similarity.writeCodebook(spark, ref, cents)
+    Similarity.writePqSidecar(spark, ref, "vec_id", "embedding",
+      m = 2, dsub = 2, ksub = 4)
+    val path = Fixtures.tempDir("graft-store-").resolve("s").toString
+    LegacyStores.standingStore(assigned(corpus(), cents), path, "cluster", 8)
+    LegacyStores.flatDir(
+      StoreSwap.readDir(spark, ref, "codebook", "part").drop("part"),
+      path, "codebook")
+    LegacyStores.pqTriple(spark, ref, path)
+    (path, ref)
   }
 
   test("a committed sidecar-directory swap (4th manifest line) recovers into pq_codes") {
-    val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
-    val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    Similarity.writeStandingStore(assigned(corpus(), cents), path,
-      "cluster", buckets = 8)
-    Similarity.writeCodebook(spark, path, cents)
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
+    val (path, _) = legacyPqStore()
     val liveBuckets = spark.read.parquet(path + "/pq_codes")
       .select("c_bucket").distinct().collect().map(_.getInt(0)).sorted
     val b = liveBuckets.head
-    // fabricate a crashed CODE-sidecar mutation: replacement staged for
-    // one code bucket, manifest names pq_codes as the target directory
-    Seq((9999L, 123L, Seq(0, 1)))
-      .toDF("id", "cluster", "codes")
-      .withColumn("c_bucket", lit(b))
-      .write.partitionBy("c_bucket").parquet(path + "/.staging")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_pending_swap"),
-      s"c_bucket\n$b\n\npq_codes")
-    assert(graft.operators.StoreSwap.recover(spark, path))
-    val codes = spark.read.parquet(path + "/pq_codes")
+    // a crashed legacy CODE-sidecar mutation: replacement staged for one
+    // code bucket, manifest names pq_codes as the target directory
+    LegacyStores.pendingSwap(path, "c_bucket", Seq(b), Seq.empty,
+      Seq((9999L, 123L, Seq(0, 1))).toDF("id", "cluster", "codes")
+        .withColumn("c_bucket", lit(b)), "pq_codes")
+    StoreSwap.open(spark, path)
+    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
     // the staged row replaced bucket b's codes; other buckets untouched;
     // the DATA directory was not touched at all
     assert(codes.filter(col("c_bucket") === b)
       .collect().map(_.getLong(0)).toSeq == Seq(9999L))
-    assert(spark.read.parquet(path + "/data").count() == 40)
+    assert(codes.filter(col("c_bucket") =!= b).count() > 0)
+    assert(Similarity.readStandingStore(spark, path)._1.count() == 40)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "_pending_swap")))
   }
@@ -730,17 +732,19 @@ class StandingStoreSpec extends SparkSpec {
 
   // ---- writer lease: the single-mutator contract, enforced ----------
 
-  private def builtStore(): String = {
+  private def builtStore(legacyLayout: Boolean = false): String = {
     val base = corpus()
     val cents = Similarity.trainCentroids(base, "vec_id", "embedding", 2, 2)
     val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    Similarity.writeStandingStore(assigned(base, cents), path,
-      "cluster", buckets = 8)
+    if (legacyLayout)
+      LegacyStores.standingStore(assigned(base, cents), path, "cluster", 8)
+    else
+      Similarity.writeStandingStore(assigned(base, cents), path,
+        "cluster", buckets = 8)
     path
   }
 
   test("a second mutator fails fast while the writer lease is held") {
-    import graft.operators.StoreSwap
     val path = builtStore()
     // simulate a live foreign writer: its lease file exists and is fresh
     java.nio.file.Files.write(
@@ -775,7 +779,6 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("withLease is reentrant per thread and releases on exit, also on failure") {
-    import graft.operators.StoreSwap
     val path = Fixtures.tempDir("graft-lease-").resolve("s").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
     val lp = java.nio.file.Paths.get(path, "_writer_lease")
@@ -794,7 +797,6 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("lease release leaves no tombstone residue") {
-    import graft.operators.StoreSwap
     val path = Fixtures.tempDir("graft-lease-").resolve("s").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
     StoreSwap.withLease(spark, path) { 1 }
@@ -805,10 +807,9 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("a read path refuses to roll a pending swap forward under a live foreign lease") {
-    import graft.operators.StoreSwap
-    val path = builtStore()
-    // a writer MID-COMMIT: manifest down, lease live. A reader applying
-    // the swap itself would race the writer's own apply (delete a
+    val path = builtStore(legacyLayout = true)
+    // a legacy writer MID-COMMIT: manifest down, lease live. A reader
+    // migrating the store would race the writer's own apply (delete a
     // just-swapped dir, then fail the rename) — it must refuse instead.
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "_pending_swap"), "c_bucket\n\n\ndata")
@@ -827,13 +828,7 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("a flavored read refuses a pending PQ sidecar swap under a live foreign lease") {
-    val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
-    val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    Similarity.writeStandingStore(assigned(corpus(), cents), path,
-      "cluster", buckets = 8)
-    Similarity.writeCodebook(spark, path, cents)
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
+    val (path, _) = legacyPqStore()
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(path, "_pending_pq"), "pq sidecar swap\n")
     java.nio.file.Files.write(
@@ -852,7 +847,6 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("a writer whose lease was stale-broken does not release the new holder's lease") {
-    import graft.operators.StoreSwap
     val path = Fixtures.tempDir("graft-lease-").resolve("s").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
     val lp = java.nio.file.Paths.get(path, "_writer_lease")
@@ -871,50 +865,29 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("a committed-but-unapplied PQ SIDECAR swap rolls forward before any flavored read") {
-    val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
-    val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    Similarity.writeStandingStore(assigned(corpus(), cents), path,
-      "cluster", buckets = 8)
-    Similarity.writeCodebook(spark, path, cents)
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
-    val before = Similarity.pqTopKStore(spark, path,
+    val (path, ref) = legacyPqStore()
+    def serve(p: String) = Similarity.pqTopKStore(spark, p,
         corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
         m = 2, dsub = 2, k = 5, nProbe = 2)
       .collect().map(_.toSeq)
-    // fabricate the post-commit crash of a RE-FLAVOR to rotated: all
-    // three artifacts staged, marker created, none swapped. The staged
-    // sidecar is the current one re-encoded rotated (built via a temp
-    // store so the fabrication uses only public machinery).
-    val tmp = Fixtures.tempDir("graft-store-").resolve("s").toString
-    Similarity.writeStandingStore(assigned(corpus(), cents), tmp,
-      "cluster", buckets = 8)
-    Similarity.writeCodebook(spark, tmp, cents)
-    Similarity.writePqSidecar(spark, tmp, "vec_id", "embedding",
+    val before = serve(ref)
+    // the post-commit crash of a legacy RE-FLAVOR to rotated: all three
+    // artifacts staged, marker created, none swapped. The staged
+    // sidecar is the current one re-encoded rotated, built on a
+    // reference store.
+    Similarity.writePqSidecar(spark, ref, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4, rotate = true)
-    def mv(src: String, dst: String): Unit = {
-      val s = new org.apache.hadoop.fs.Path(src)
-      val fs = s.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.rename(s, new org.apache.hadoop.fs.Path(dst))
-    }
-    Seq("pq_codebook", "pq_meta", "pq_codes").foreach(d =>
-      mv(s"$tmp/$d", s"$path/.staging-$d"))
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "_pending_pq"),
-      "pq sidecar swap\n".getBytes("UTF-8"))
+    LegacyStores.pqTriple(spark, ref, path, pending = true)
     // any flavored read rolls the swap forward and serves the NEW
     // (rotated) sidecar — never the old codes under the old marker
-    val after = Similarity.pqTopKStore(spark, path,
-        corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
-        m = 2, dsub = 2, k = 5, nProbe = 2)
-      .collect().map(_.toSeq)
+    val after = serve(path)
     assert(!java.nio.file.Files.exists(
       java.nio.file.Paths.get(path, "_pending_pq")), "marker not consumed")
-    assert(spark.read.parquet(path + "/pq_meta")
+    assert(StoreSwap.readDir(spark, path, "pq_meta", "part")
       .head.getAs[Boolean]("rotated"), "rotated sidecar not swapped in")
-    // the rotated sidecar was built over the same store with the same
-    // geometry: same neighbor SET served, ADC values differ (rotated
-    // space), rows present
+    // same store, same geometry: the rotated sidecar serves exactly
+    // what the reference's rotated sidecar serves
     assert(after.nonEmpty && before.nonEmpty)
+    assert(after.toSeq == serve(ref).toSeq)
   }
 }

@@ -85,10 +85,9 @@ object StoreCdcProbe {
       val buildSec = t {
         Dedup.writeSignatureStore(
           Dedup.minhashSignatures(corpus, "doc_id", "text"),
-          store, "doc_id", buckets = 64, versioned = true)
+          store, "doc_id", buckets = 64)
         Dedup.writeBandIndex(spark, store, "doc_id", bands = 8)
         Dedup.writeShingleSidecar(spark, store, corpus, "doc_id", "text")
-        Dedup.unifySignatureStore(spark, store)
       }
       val v0 = Dedup.signatureStoreVersions(spark, store).last
       // inserts ride the composed exactly-once ingest (ONE txn

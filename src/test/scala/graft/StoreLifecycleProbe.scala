@@ -96,7 +96,7 @@ object StoreLifecycleProbe {
       Similarity.deleteFromStandingStore(spark, store,
         base.filter(col("vec_id") % 100 === 7).select("vec_id"), "vec_id")
     }
-    val live = spark.read.parquet(store + "/data")
+    val live = Similarity.readStandingStore(spark, store)._1
       .select(col("cluster")).distinct().orderBy(col("cluster"))
       .limit(8).collect().map(_.getLong(0)).toSet
     var nFresh = 0
@@ -225,16 +225,14 @@ object StoreLifecycleProbe {
       if (flCount == 0) 0L
       else pqTop256.join(flTop, pqTop256("query_id") === flTop("q2") &&
         pqTop256("neighbor_id") === flTop("n2")).count() * 100 / flCount
-    // UNIFIED-PROTOCOL tier (round 14): the sidecar write + search
-    // through the VERSIONED TRIPLE — writePqSidecar commits codebook/
+    // VERSIONED-TRIPLE tier (round 14): the sidecar write + search
+    // through the store manifest — writePqSidecar commits codebook/
     // meta/codes inside ONE StoreSwap.transact manifest rename and
     // pqTopKStoreTwoLevel resolves all three at one pinned version
-    // (pqPin). The r13 record's sidecar writes ran the legacy
-    // _pending_pq path; these rows are the same mechanisms on the
-    // unified protocol. The first write is the one-time CUTOVER
-    // (legacy dirs retained for in-flight readers), the second the
-    // steady-state reader-atomic rewrite a production store runs.
-    val unifyMigrateSec = t { Similarity.unifyStandingStore(spark, store) }
+    // (pqPin). `unifyMigrateSec` is the open of a store already on the
+    // manifest (the migration check); the two writes are the first and
+    // the steady-state reader-atomic rewrite a production store runs.
+    val unifyMigrateSec = t { graft.operators.StoreSwap.open(spark, store) }
     val pqWriteUnifiedCutoverSec = t {
       Similarity.writePqSidecar(spark, store, "vec_id", "embedding",
         m = 4, dsub = 16, ksub = 8)
@@ -247,7 +245,7 @@ object StoreLifecycleProbe {
     // the legacy live dirs: the triple is present in the unified
     // manifest line
     val pqUnifiedVersioned = graft.operators.StoreSwap
-      .snapshotVersions(spark, store, "pq_meta").nonEmpty
+      .latestSnapshot(spark, store, "pq_meta").nonEmpty
     val pqSearchUnifiedSec = t {
       Similarity.pqTopKStoreTwoLevel(spark, store, bigQueries,
         "vec_id", "embedding", m = 4, dsub = 16, k = 5, sProbe = 8,
@@ -281,7 +279,7 @@ object StoreLifecycleProbe {
           store, "cluster")
       }
     }
-    val gcVs = StoreSwap.snapshotVersions(spark, store, "data")
+    val gcVs = StoreSwap.snapshotVersions(spark, store)
     // oldest retained = 2 appends in: base + 200 rows, byte-exact
     val gcRetainedIntact = gcVs.size == 3 &&
       StoreSwap.readVersionedAt(spark, store, "data", "c_bucket",

@@ -67,7 +67,7 @@ object StoreReadProbe {
       spark.read.parquet(plain)
         .agg(sum(col("nrm"))).collect(); 0L
     }
-    t("full partitioned read")(spark.read.parquet(pstore + "/data").count())
+    t("full partitioned read")(Similarity.readStandingStore(spark, pstore)._1.count())
     t("pruned partitioned read") {
       Similarity.readStandingStorePruned(spark, pstore, touched).count()
     }

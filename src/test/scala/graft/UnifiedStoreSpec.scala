@@ -1,15 +1,15 @@
 package graft
 
-import graft.operators.{Dedup, Fixtures, StoreSwap}
+import graft.operators.{Dedup, Fixtures, Similarity, StoreSwap}
 import org.apache.spark.sql.functions._
 
-/** The UNIFIED store manifest ([[StoreSwap.unifyVersioning]]): one
-  * `store.v<N>` manifest spanning every dataDir, so composed
-  * multi-dataDir mutations commit with ONE rename
-  * ([[StoreSwap.transact]]) and any retained version is a CONSISTENT
-  * snapshot of the whole store — bands, sidecar, and signatures
-  * together, which is what makes historical judgment replay
-  * ([[Dedup.lshJudgeStoreAt]]) exact. */
+/** The store manifest ([[StoreSwap]]): one `store.v<N>` manifest
+  * spanning every dataDir, so composed multi-dataDir mutations commit
+  * with ONE rename ([[StoreSwap.transact]]) and any retained version is
+  * a CONSISTENT snapshot of the whole store — bands, sidecar, and
+  * signatures together, which is what makes historical judgment replay
+  * ([[Dedup.lshJudgeStoreAt]]) exact. Older on-disk layouts
+  * ([[LegacyStores]]) migrate once, at [[StoreSwap.open]]. */
 class UnifiedStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,52 +30,164 @@ class UnifiedStoreSpec extends SparkSpec {
   private def judgeRows(df: org.apache.spark.sql.DataFrame) =
     df.select("id_a", "id_b").orderBy("id_a", "id_b").collect().toSeq
 
-  /** A fully built versioned text store (data + bands + sidecar) over
-    * `standing`, migrated to the unified manifest. */
+  /** A fully built text store (data + bands + sidecar) over
+    * `standing`. */
   private def buildUnified(standing: org.apache.spark.sql.DataFrame): String = {
     val path = Fixtures.tempDir("graft-ustore-").resolve("s").toString
-    Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-      buckets = 8, versioned = true)
+    Dedup.writeSignatureStore(sigs(standing), path, "doc_id", buckets = 8)
     Dedup.writeBandIndex(spark, path, "doc_id", bands = 2)
     Dedup.writeShingleSidecar(spark, path, standing, "doc_id", "text",
       n = 3)
-    Dedup.unifySignatureStore(spark, path)
     path
   }
 
+  private def versions(path: String) = StoreSwap.snapshotVersions(spark, path)
+
+  /** Every dataDir of a built text store rewritten in the LEGACY layout
+    * under `path` (live partition dirs, sidecar metas copied). */
+  private def legacyTextStore(built: String, path: String): Unit = {
+    Seq("data" -> "d_bucket", "bands" -> "bb_bucket",
+        "bands_inv" -> "d_bucket", "shingles" -> "d_bucket").foreach {
+      case (d, pc) => LegacyStores.partitionDir(
+        StoreSwap.readDir(spark, built, d, pc), path, d, pc)
+    }
+    Seq("meta", "bands_meta", "shingles_meta").foreach { m =>
+      spark.read.parquet(s"$built/$m").write.parquet(s"$path/$m")
+    }
+  }
+
+  private def embCorpus() = (0L until 40L).map(i =>
+    (i, Seq.tabulate(4)(j => ((i * 7 % 13) + j).toFloat)))
+    .toDF("vec_id", "embedding")
+
+  private def embAssigned(cents: Seq[Seq[Double]]) = embCorpus()
+    .withColumn("cluster",
+      Similarity.assignCluster(col("embedding"), cents).cast("long"))
+    .withColumn("nrm", Similarity.norm(col("embedding")))
+
+  private def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+    df.select(cols.map(col): _*).orderBy(cols.map(col): _*)
+      .collect().map(_.toSeq).toSeq
+
   test("unify is content-invariant and idempotent; later mutations commit unified") {
     val standing = docs().filter(col("doc_id") < 4)
-    val before = sigRows(sigs(standing))
-    val path = buildUnified(standing)
-    assert(StoreSwap.isUnified(spark, path))
-    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == before)
-    // idempotent re-run changes nothing; the unified numbering starts
-    // ABOVE the per-dataDir versions (cutover anti-aliasing), one
-    // retained version right after migration
-    val v0 = StoreSwap.snapshotVersions(spark, path, "data")
-    Dedup.unifySignatureStore(spark, path)
-    assert(StoreSwap.snapshotVersions(spark, path, "data") == v0 &&
-      v0.size == 1)
-    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == before)
-    // data, bands, bands_inv, and shingles all resolve through the one
-    // manifest and report the SAME version line
-    Seq("bands", "bands_inv", "shingles").foreach { d =>
-      assert(StoreSwap.snapshotVersions(spark, path, d) ==
-        StoreSwap.snapshotVersions(spark, path, "data"), d)
+    val built = buildUnified(standing)
+    // every older on-disk layout migrates at the first open: the rows a
+    // read made BEFORE migration saw, the ledger, and (for the embedding
+    // store) the codebook and the PQ triple all survive; a second open
+    // changes nothing; the next mutation bumps the one store version
+    def checkOpen(path: String, open: () => Unit): Int = {
+      open()
+      val v0 = versions(path)
+      assert(v0.nonEmpty, s"$path: migration published no manifest")
+      open()
+      assert(versions(path) == v0, "a second open changed the store")
+      v0.last
     }
-    // a post-unify mutation bumps the ONE store version
-    Dedup.mergeIntoSignatureStore(spark, path,
+    def legacyDir(path: String, d: String) =
+      assert(!new java.io.File(s"$path/$d").exists,
+        s"$path/$d: a partition dir stayed live after migration")
+
+    // (1) a legacy signature store: live data/bands/bands_inv/shingles
+    val sigPath = Fixtures.tempDir("graft-ustore-").resolve("sig").toString
+    legacyTextStore(built, sigPath)
+    val preSigs = sigRows(spark.read.parquet(sigPath + "/data"))
+    val preBands = rows(spark.read.parquet(sigPath + "/bands"),
+      "id", "band", "bsig")
+    val v1 = checkOpen(sigPath, () => Dedup.unifySignatureStore(spark, sigPath))
+    Seq("data", "bands", "bands_inv", "shingles").foreach(legacyDir(sigPath, _))
+    assert(sigRows(Dedup.readSignatureStore(spark, sigPath)._1) == preSigs)
+    assert(preSigs == sigRows(sigs(standing)))
+    assert(rows(StoreSwap.readDir(spark, sigPath, "bands", "bb_bucket"),
+      "id", "band", "bsig") == preBands)
+    // the band layout constants were seeded into the migration manifest
+    assert(StoreSwap.storeMetaAt(spark, sigPath, "bands.b", Some(v1))
+      .contains(Seq(2L)))
+    Dedup.mergeIntoSignatureStore(spark, sigPath,
       sigs(docs().filter(col("doc_id") === 8L)), "doc_id")
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last ==
-      v0.head + 1)
-    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) ==
+    assert(versions(sigPath).last == v1 + 1)
+    assert(sigRows(Dedup.readSignatureStore(spark, sigPath)._1) ==
       sigRows(sigs(docs().filter(col("doc_id") < 4 || col("doc_id") === 8L))))
+
+    // (2) a legacy store with a committed-but-unapplied _pending_swap:
+    // bucket 0 is restaged with docs 0 and 8, bucket 3 emptied — the
+    // read before migration is the legacy roll-forward's result
+    val swapPath = Fixtures.tempDir("graft-ustore-").resolve("swap").toString
+    LegacyStores.signatureStore(sigs(standing), swapPath, "doc_id", 8)
+    val staged = sigs(docs().filter(col("doc_id").isin(0L, 8L)))
+      .withColumn("d_bucket", pmod(col("doc_id"), lit(8L)).cast("int"))
+    LegacyStores.pendingSwap(swapPath, "d_bucket", Seq(0), Seq(3), staged)
+    val preSwap = sigRows(spark.read.parquet(swapPath + "/data")
+      .filter(!col("d_bucket").isin(0, 3)).unionByName(staged))
+    checkOpen(swapPath, () => Dedup.readSignatureStore(spark, swapPath))
+    Seq("_pending_swap", ".staging", "data").foreach(legacyDir(swapPath, _))
+    assert(sigRows(Dedup.readSignatureStore(spark, swapPath)._1) == preSwap)
+    assert(preSwap == sigRows(sigs(docs().filter(col("doc_id").isin(0L, 1L, 2L, 8L)))))
+
+    // (3) a per-dataDir versioned store whose data carries a #batches
+    // ledger: the ledger survives, namespaced, and the store numbering
+    // starts above the per-dataDir version
+    val pdPath = Fixtures.tempDir("graft-ustore-").resolve("pd").toString
+    LegacyStores.signatureStore(sigs(standing), pdPath, "doc_id", 8)
+    LegacyStores.perDataDirVersioned(pdPath, "data", 3, batches = Seq(5L, 6L))
+    val prePd = sigRows(spark.read.parquet(pdPath + "/data.gens/g3"))
+    val vPd = checkOpen(pdPath, () => Dedup.unifySignatureStore(spark, pdPath))
+    assert(vPd > 3, s"store numbering must start above v3: $vPd")
+    assert(sigRows(Dedup.readSignatureStore(spark, pdPath)._1) == prePd)
+    assert(StoreSwap.committedBatches(spark, pdPath, "data") == Set(5L, 6L))
+    assert(!new java.io.File(s"$pdPath/_v/data.v3").exists,
+      "the per-dataDir manifest family was not retired")
+    Dedup.ingestBatchIntoStore(spark, pdPath,
+      docs().filter(col("doc_id") === 8L), "doc_id", "text",
+      batchId = Some(5L), n = 3, numHashes = 4)
+    assert(versions(pdPath).last == vPd, "a migrated ledger lost batch 5")
+
+    // (4) a legacy embedding store with a write-once codebook, a PQ
+    // triple, and a committed-but-unapplied _pending_pq re-flavoring
+    // it to rotated
+    val cents = Similarity.trainCentroids(embCorpus(), "vec_id",
+      "embedding", 2, 2)
+    def refStore(rotate: Boolean): String = {
+      val p = Fixtures.tempDir("graft-ustore-").resolve("ref").toString
+      Similarity.writeStandingStore(embAssigned(cents), p, "cluster",
+        buckets = 8)
+      Similarity.writeCodebook(spark, p, cents)
+      Similarity.writePqSidecar(spark, p, "vec_id", "embedding",
+        m = 2, dsub = 2, ksub = 4, rotate = rotate)
+      p
+    }
+    val (plain, rotated) = (refStore(false), refStore(true))
+    val embPath = Fixtures.tempDir("graft-ustore-").resolve("emb").toString
+    LegacyStores.standingStore(embAssigned(cents), embPath, "cluster", 8)
+    LegacyStores.flatDir(
+      StoreSwap.readDir(spark, plain, "codebook", "part").drop("part"),
+      embPath, "codebook")
+    LegacyStores.pqTriple(spark, plain, embPath)
+    LegacyStores.pqTriple(spark, rotated, embPath, pending = true)
+    val preData = rows(spark.read.parquet(embPath + "/data"),
+      "vec_id", "cluster")
+    val preCodes = rows(
+      StoreSwap.readDir(spark, rotated, "pq_codes", "c_bucket"),
+      "id", "cluster", "codes")
+    checkOpen(embPath, () => StoreSwap.open(spark, embPath))
+    legacyDir(embPath, "_pending_pq")
+    assert(rows(Similarity.readStandingStore(spark, embPath)._1,
+      "vec_id", "cluster") == preData)
+    assert(Similarity.readCodebook(spark, embPath) == cents)
+    assert(rows(StoreSwap.readDir(spark, embPath, "pq_codes", "c_bucket"),
+      "id", "cluster", "codes") == preCodes)
+    assert(StoreSwap.readDir(spark, embPath, "pq_meta", "part")
+      .head.getAs[Boolean]("rotated"), "the pending re-flavor was lost")
+    def served(p: String) = rows(Similarity.pqTopKStore(spark, p,
+        embCorpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
+        m = 2, dsub = 2, k = 5, nProbe = 2), "query_id", "rank", "neighbor_id")
+    assert(served(embPath) == served(rotated))
   }
 
   test("transact publishes a composed ingest (3 merges + ack) as ONE version; failure leaves the pre-txn state") {
     val standing = docs().filter(col("doc_id") < 4 && col("doc_id") =!= 2L)
     val path = buildUnified(standing)
-    val preV = StoreSwap.snapshotVersions(spark, path, "data").last
+    val preV = versions(path).last
     val preSigs = sigRows(Dedup.readSignatureStore(spark, path)._1)
     // a txn that fails mid-way must leave EVERY dataDir at the pre-txn
     // version — the first merge had already staged and recorded
@@ -87,7 +199,7 @@ class UnifiedStoreSpec extends SparkSpec {
       }
     }
     assert(boom.getMessage.contains("boom"))
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == preV,
+    assert(versions(path).last == preV,
       "failed txn bumped the store version")
     assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == preSigs,
       "failed txn changed visible data")
@@ -96,7 +208,7 @@ class UnifiedStoreSpec extends SparkSpec {
     val delta = docs().filter(col("doc_id") === 2L || col("doc_id") === 8L)
     Dedup.ingestBatchIntoStore(spark, path, delta, "doc_id", "text",
       batchId = Some(7L), n = 3, numHashes = 4)
-    val postV = StoreSwap.snapshotVersions(spark, path, "data").last
+    val postV = versions(path).last
     assert(postV == preV + 1,
       s"composed ingest took ${postV - preV} commits, wanted 1")
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L))
@@ -105,7 +217,7 @@ class UnifiedStoreSpec extends SparkSpec {
     // redelivery of the acked batch is skipped without a version bump
     Dedup.ingestBatchIntoStore(spark, path, delta, "doc_id", "text",
       batchId = Some(7L), n = 3, numHashes = 4)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == postV)
+    assert(versions(path).last == postV)
   }
 
   test("historical judgment replays bit-exactly from a pinned unified version") {
@@ -116,7 +228,7 @@ class UnifiedStoreSpec extends SparkSpec {
       .toDF("doc_id", "text")
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
-      val v0 = StoreSwap.snapshotVersions(spark, path, "data").last
+      val v0 = versions(path).last
       val liveVerdict = judgeRows(Dedup.lshJudgeStore(spark, path,
         standing, probe, "doc_id", "text", n = 3, numHashes = 4))
       // mutate the store: ingest doc 2 (a dup of doc 0) — the LIVE
@@ -133,19 +245,19 @@ class UnifiedStoreSpec extends SparkSpec {
         probe, "doc_id", "text", v0, n = 3, numHashes = 4))
       assert(replay == liveVerdict,
         "pinned replay diverged from the verdict at that version")
-      // per-dataDir versioned stores refuse asOf — signatures alone
-      // cannot replay a judgment
+      // a per-dataDir versioned layout migrates at open; its version
+      // numbers never alias a store version — asOf one of them fails
+      // fast with the cutover message instead of replaying signatures
+      // without their bands
       val perDir = Fixtures.tempDir("graft-ustore-").resolve("pd").toString
-      Dedup.writeSignatureStore(sigs(standing), perDir, "doc_id",
-        buckets = 8, versioned = true)
-      Dedup.writeBandIndex(spark, perDir, "doc_id", bands = 2)
-      Dedup.writeShingleSidecar(spark, perDir, standing, "doc_id",
-        "text", n = 3)
-      val ex = intercept[IllegalArgumentException] {
+      legacyTextStore(path, perDir)
+      Seq("data", "bands", "bands_inv", "shingles").foreach(d =>
+        LegacyStores.perDataDirVersioned(perDir, d, 0))
+      val ex = intercept[RuntimeException] {
         Dedup.lshJudgeStoreAt(spark, perDir, probe, "doc_id", "text",
           0, n = 3, numHashes = 4)
       }
-      assert(ex.getMessage.contains("UNIFIED"), ex.getMessage)
+      assert(ex.getMessage.contains("cutover"), ex.getMessage)
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
@@ -154,19 +266,18 @@ class UnifiedStoreSpec extends SparkSpec {
     // silently dropped #batches — a batch redelivered after a
     // mid-stream full rewrite was re-applied. Both protocols must
     // carry the ledger through replaceAll commits.
-    import graft.operators.Similarity
     def vecs(a: Long, b: Long) = (a until b).map(i =>
       (i, Seq.tabulate(4)(j => (i + j).toFloat), i % 4, 1.0))
       .toDF("vec_id", "embedding", "cluster", "nrm")
     val path = Fixtures.tempDir("graft-ustore-").resolve("emb").toString
     Similarity.writeStandingStore(vecs(0, 8), path, "cluster",
-      buckets = 4, versioned = true)
+      buckets = 4)
     Similarity.appendToStandingStore(vecs(8, 10), path, "cluster",
       batchId = Some(3L))
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(3L))
     // the mid-stream full rewrite (a refit's writeStandingStore)
     Similarity.writeStandingStore(vecs(0, 10), path, "cluster",
-      buckets = 4, versioned = true)
+      buckets = 4)
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(3L),
       "full overwrite dropped the exactly-once ledger")
     // redelivery after the rewrite must still be a no-op
@@ -176,21 +287,13 @@ class UnifiedStoreSpec extends SparkSpec {
   }
 
   test("unified PQ sidecar: the triple commits in ONE rename and a pinned reader never sees a mix") {
-    import graft.operators.Similarity
-    def corpus() = (0L until 40L).map(i =>
-      (i, Seq.tabulate(4)(j => ((i * 7 % 13) + j).toFloat)))
-      .toDF("vec_id", "embedding")
+    def corpus() = embCorpus()
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding",
       2, 2)
-    def assigned() = corpus()
-      .withColumn("cluster",
-        Similarity.assignCluster(col("embedding"), cents).cast("long"))
-      .withColumn("nrm", Similarity.norm(col("embedding")))
     val path = Fixtures.tempDir("graft-ustore-").resolve("pq").toString
-    Similarity.writeStandingStore(assigned(), path, "cluster",
-      buckets = 8, versioned = true)
+    Similarity.writeStandingStore(embAssigned(cents), path, "cluster",
+      buckets = 8)
     Similarity.writeCodebook(spark, path, cents)
-    Similarity.unifyStandingStore(spark, path)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
@@ -200,7 +303,7 @@ class UnifiedStoreSpec extends SparkSpec {
       Seq("pq_codebook", "pq_meta", "pq_codes").foreach { d =>
         assert(!new java.io.File(s"$path/$d").exists, s"legacy $d dir")
       }
-      val v0 = StoreSwap.snapshotVersions(spark, path, "pq_meta").last
+      val v0 = versions(path).last
       val servedV0 = Similarity.pqTopKStore(spark, path,
           corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
           m = 2, dsub = 2, k = 5, nProbe = 2)
@@ -209,7 +312,7 @@ class UnifiedStoreSpec extends SparkSpec {
       // FULL triple rewrite under a different flavor = ONE version bump
       Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
         m = 2, dsub = 2, ksub = 4, residual = true)
-      val v1 = StoreSwap.snapshotVersions(spark, path, "pq_meta").last
+      val v1 = versions(path).last
       assert(v1 == v0 + 1,
         s"triple rewrite took ${v1 - v0} commits, wanted 1")
       // the OLD triple stays resolvable AS A TRIPLE at v0: flavor,
@@ -235,11 +338,11 @@ class UnifiedStoreSpec extends SparkSpec {
         StoreSwap.transact(spark, path) {
           StoreSwap.overwriteDir(spark, path, "pq_meta", "part",
             Seq((false, false, 0)).toDF("residual", "rotated", "part"),
-            Seq(col("residual")), forceVersioned = true)
+            Seq(col("residual")))
           sys.error("crash between meta and codes")
         }
       }
-      assert(StoreSwap.snapshotVersions(spark, path, "pq_meta").last == v1)
+      assert(versions(path).last == v1)
       val liveMeta = StoreSwap.readDir(spark, path, "pq_meta", "part").head
       assert(liveMeta.getAs[Boolean]("residual"),
         "a crashed triple rewrite leaked a partial artifact")
@@ -251,15 +354,14 @@ class UnifiedStoreSpec extends SparkSpec {
     val path = Fixtures.tempDir("graft-ustore-").resolve("cut").toString
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
-      Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-        buckets = 8, versioned = true)
-      // a second per-dataDir version, so pre-migration history has
-      // MULTIPLE version numbers a user could remember
-      Dedup.mergeIntoSignatureStore(spark, path,
-        sigs(docs().filter(col("doc_id") === 8L)), "doc_id")
-      assert(StoreSwap.snapshotVersions(spark, path, "data") == Seq(0, 1))
+      // a per-dataDir layout at v1: pre-migration history has the
+      // version numbers 0 and 1 a user could remember
+      LegacyStores.signatureStore(
+        sigs(docs().filter(col("doc_id") < 4 || col("doc_id") === 8L)),
+        path, "doc_id", 8)
+      LegacyStores.perDataDirVersioned(path, "data", 1)
       Dedup.unifySignatureStore(spark, path)
-      val unifiedVs = StoreSwap.snapshotVersions(spark, path, "data")
+      val unifiedVs = versions(path)
       assert(unifiedVs.head > 1,
         s"unified numbering must start above pre-migration versions:" +
           s" $unifiedVs")
@@ -282,8 +384,7 @@ class UnifiedStoreSpec extends SparkSpec {
     val standing = docs().filter(col("doc_id") < 4)
     val before = sigRows(sigs(standing))
     val path = Fixtures.tempDir("graft-ustore-").resolve("crash").toString
-    Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-      buckets = 8, versioned = false)
+    LegacyStores.signatureStore(sigs(standing), path, "doc_id", 8)
     // simulate the predecessor's crash window: the live->g0 rename
     // completed but store.v<N> was never written — a re-run must adopt
     // g0 as the dataDir's state, not commit a manifest without it
@@ -292,7 +393,8 @@ class UnifiedStoreSpec extends SparkSpec {
     assert(g0.getParentFile.mkdirs())
     assert(live.renameTo(g0))
     Dedup.unifySignatureStore(spark, path)
-    assert(StoreSwap.isUnified(spark, path))
+    assert(versions(path).nonEmpty)
+    assert(!new java.io.File(s"$path/data").exists)
     assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == before,
       "re-run after the crashed migration orphaned the dataDir's data")
   }
@@ -311,46 +413,39 @@ class UnifiedStoreSpec extends SparkSpec {
   }
 
   test("the one-time PQ cutover keeps legacy dirs for in-flight readers; the next rewrite retires them") {
-    import graft.operators.Similarity
-    def corpus() = (0L until 40L).map(i =>
-      (i, Seq.tabulate(4)(j => ((i * 7 % 13) + j).toFloat)))
-      .toDF("vec_id", "embedding")
-    val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding",
-      2, 2)
-    val assigned = corpus()
-      .withColumn("cluster",
-        Similarity.assignCluster(col("embedding"), cents).cast("long"))
-      .withColumn("nrm", Similarity.norm(col("embedding")))
-    val path = Fixtures.tempDir("graft-ustore-").resolve("pqcut").toString
-    Similarity.writeStandingStore(assigned, path, "cluster",
-      buckets = 8, versioned = true)
-    Similarity.writeCodebook(spark, path, cents)
-    // a LEGACY sidecar exists before unification
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
+    val cents = Similarity.trainCentroids(embCorpus(), "vec_id",
+      "embedding", 2, 2)
+    val ref = Fixtures.tempDir("graft-ustore-").resolve("ref").toString
+    Similarity.writeStandingStore(embAssigned(cents), ref, "cluster",
+      buckets = 8)
+    Similarity.writeCodebook(spark, ref, cents)
+    Similarity.writePqSidecar(spark, ref, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4)
+    // a LEGACY store whose PQ sidecar lives in live dirs
+    val path = Fixtures.tempDir("graft-ustore-").resolve("pqcut").toString
+    LegacyStores.standingStore(embAssigned(cents), path, "cluster", 8)
+    LegacyStores.flatDir(
+      StoreSwap.readDir(spark, ref, "codebook", "part").drop("part"),
+      path, "codebook")
+    LegacyStores.pqTriple(spark, ref, path)
     def legacyDirs() = Seq("pq_codebook", "pq_meta", "pq_codes")
       .filter(d => new java.io.File(s"$path/$d").exists)
     assert(legacyDirs().size == 3)
-    Similarity.unifyStandingStore(spark, path)
-    // the CUTOVER rewrite publishes the versioned triple but must NOT
-    // delete the legacy dirs — a reader that resolved them just before
-    // the commit may still be scanning
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
+    // the migration at open recommits the triple as versioned dataDirs
+    // but must NOT delete the legacy dirs — a reader that resolved them
+    // just before the commit may still be scanning
+    def serve() = Similarity.pqTopKStore(spark, path,
+        embCorpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
+        m = 2, dsub = 2, k = 5, nProbe = 2)
+    assert(serve().count() == 5)
     assert(legacyDirs().size == 3,
-      "cutover rewrite deleted legacy dirs under a possible reader")
-    // serving goes through the pinned versioned triple regardless
-    assert(Similarity.pqTopKStore(spark, path,
-        corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
-        m = 2, dsub = 2, k = 5, nProbe = 2).count() == 5)
-    // the NEXT rewrite retires them (pre-cutover readers are gone or
-    // under the legacy maintenance-window contract)
+      "migration deleted legacy dirs under a possible reader")
+    assert(StoreSwap.dirExists(spark, path, "pq_codes"))
+    // the NEXT rewrite retires them (pre-migration readers are gone)
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4)
     assert(legacyDirs().isEmpty, "stale legacy dirs survived a rewrite")
-    assert(Similarity.pqTopKStore(spark, path,
-        corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
-        m = 2, dsub = 2, k = 5, nProbe = 2).count() == 5)
+    assert(serve().count() == 5)
   }
 
   test("signature-store CDC: doc-level insert/update/delete, unchanged buckets never read") {
@@ -358,8 +453,7 @@ class UnifiedStoreSpec extends SparkSpec {
     // bucket 1 stays untouched by every mutation below
     val standing = docs()
     val path = Fixtures.tempDir("graft-ustore-").resolve("cdc").toString
-    Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-      buckets = 8, versioned = true)
+    Dedup.writeSignatureStore(sigs(standing), path, "doc_id", buckets = 8)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       val v0 = Dedup.signatureStoreVersions(spark, path).last
@@ -397,7 +491,7 @@ class UnifiedStoreSpec extends SparkSpec {
           .select((col("doc_id") + id).as("doc_id"), col("text")),
         "doc_id", "text", n = 3, numHashes = 4)
       (1L to 5L).foreach(mut)
-      val vs = StoreSwap.snapshotVersions(spark, path, "data")
+      val vs = versions(path)
       assert(vs.size == 3, s"keep=2 must retain keep+1 versions: $vs")
       // every retained version resolves to a COMPLETE snapshot with
       // the expected doc population (v grows by one ingested doc each)
@@ -425,6 +519,15 @@ class UnifiedStoreSpec extends SparkSpec {
         .map(_.getName.stripPrefix("g").toLong).toSet
       assert(onDisk.subsetOf(referenced),
         s"orphan generations survived GC: ${onDisk -- referenced}")
+      // a retention value that is not a non-negative integer fails the
+      // commit loudly, before anything is staged — never a silent 1
+      Seq("eight", "-1").foreach { bad =>
+        spark.conf.set("graft.store.snapshotKeep", bad)
+        val e = intercept[IllegalArgumentException](mut(9L))
+        assert(e.getMessage.contains("graft.store.snapshotKeep") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      }
+      assert(versions(path) == vs, "a refused commit changed the store")
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
@@ -452,12 +555,12 @@ class UnifiedStoreSpec extends SparkSpec {
     new java.io.File(mf.getParentFile, s".${mf.getName}.crc").delete()
     // fallback read: the legacy store-wide window is still the window
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L))
-    val preV = StoreSwap.snapshotVersions(spark, path, "data").last
+    val preV = versions(path).last
     // a redelivered pre-upgrade batch is skipped, not re-applied
     Dedup.ingestBatchIntoStore(spark, path,
       docs().filter(col("doc_id") === 8L), "doc_id", "text",
       batchId = Some(7L), n = 3, numHashes = 4)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == preV,
+    assert(versions(path).last == preV,
       "redelivered batch was re-applied after the namespacing upgrade")
     // the first post-upgrade ack migrates the window into the
     // namespaced key (union, not replacement)
@@ -466,11 +569,11 @@ class UnifiedStoreSpec extends SparkSpec {
       batchId = Some(8L), n = 3, numHashes = 4)
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L, 8L))
     // and batch 7 redelivery is STILL a no-op after the migration
-    val v2 = StoreSwap.snapshotVersions(spark, path, "data").last
+    val v2 = versions(path).last
     Dedup.ingestBatchIntoStore(spark, path,
       docs().filter(col("doc_id") === 8L), "doc_id", "text",
       batchId = Some(7L), n = 3, numHashes = 4)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == v2)
+    assert(versions(path).last == v2)
   }
 
   test("a non-local return unwinding a dirty txn fails loudly instead of dropping the work") {
@@ -480,7 +583,7 @@ class UnifiedStoreSpec extends SparkSpec {
     // version. Dirty unwinds must be loud.
     val standing = docs().filter(col("doc_id") < 4)
     val path = buildUnified(standing)
-    val preV = StoreSwap.snapshotVersions(spark, path, "data").last
+    val preV = versions(path).last
     def bad(): Unit =
       StoreSwap.transact(spark, path) {
         Dedup.mergeIntoSignatureStore(spark, path,
@@ -490,7 +593,7 @@ class UnifiedStoreSpec extends SparkSpec {
       }
     val ex = intercept[RuntimeException](bad())
     assert(ex.getMessage.contains("non-local return"), ex.getMessage)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == preV,
+    assert(versions(path).last == preV,
       "dirty non-local return published anyway")
     // an early return BEFORE any mutation stays allowed (the
     // documented empty-work pattern)
@@ -500,7 +603,7 @@ class UnifiedStoreSpec extends SparkSpec {
         0
       }
     assert(ok() == 5)
-    assert(StoreSwap.snapshotVersions(spark, path, "data").last == preV)
+    assert(versions(path).last == preV)
   }
 
   test("historical replay resolves the band layout from the pinned manifest, not the live sidecar") {
@@ -513,9 +616,9 @@ class UnifiedStoreSpec extends SparkSpec {
     val path = buildUnified(standing)
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
-      val v0 = StoreSwap.snapshotVersions(spark, path, "data").last
-      // the cutover seeded the layout record into the migration
-      // manifest: bands=2, r=2, idxBuckets=store buckets=8
+      val v0 = versions(path).last
+      // the index build recorded the layout in the manifest: bands=2,
+      // r=2, idxBuckets=store buckets=8
       assert(StoreSwap.storeMetaAt(spark, path, "bands.b", Some(v0))
         .contains(Seq(2L)))
       assert(StoreSwap.storeMetaAt(spark, path, "bands.r", Some(v0))
@@ -548,11 +651,10 @@ class UnifiedStoreSpec extends SparkSpec {
       // one proves the index was rebuilt after the pin: fail fast
       val p2 = Fixtures.tempDir("graft-ustore-").resolve("nl").toString
       val s2 = docs().filter(col("doc_id") < 4)
-      Dedup.writeSignatureStore(sigs(s2), p2, "doc_id",
-        buckets = 8, versioned = true)
+      Dedup.writeSignatureStore(sigs(s2), p2, "doc_id", buckets = 8)
       Dedup.writeShingleSidecar(spark, p2, s2, "doc_id", "text", n = 3)
-      Dedup.unifySignatureStore(spark, p2) // no index yet: no record
-      val u0 = StoreSwap.snapshotVersions(spark, p2, "data").last
+      // no index yet: no record
+      val u0 = versions(p2).last
       Dedup.writeBandIndex(spark, p2, "doc_id", bands = 2) // records
       val ex = intercept[IllegalArgumentException] {
         Dedup.lshJudgeStoreAt(spark, p2, probe, "doc_id", "text", u0,
@@ -563,36 +665,26 @@ class UnifiedStoreSpec extends SparkSpec {
   }
 
   test("unifyStandingStore cleans a stale legacy codebook dir left by a crash after the versioned commit") {
-    // ADVICE r14: the legacy /codebook delete ran only when
-    // codebookVersioned was still false — a crash between
-    // writeCodebookDf's commit and the delete left the stale dir
-    // permanently because the re-run skipped the whole branch.
-    import graft.operators.Similarity
-    def corpus() = (0L until 40L).map(i =>
-      (i, Seq.tabulate(4)(j => ((i * 7 % 13) + j).toFloat)))
-      .toDF("vec_id", "embedding")
-    val cents = Similarity.trainCentroids(corpus(), "vec_id",
+    // a legacy codebook dir next to a versioned codebook — left by a
+    // migration (kept for in-flight readers) or by a crash — is never
+    // read, and the next codebook write retires it
+    val cents = Similarity.trainCentroids(embCorpus(), "vec_id",
       "embedding", 2, 2)
-    val assigned = corpus()
-      .withColumn("cluster",
-        Similarity.assignCluster(col("embedding"), cents).cast("long"))
-      .withColumn("nrm", Similarity.norm(col("embedding")))
     val path = Fixtures.tempDir("graft-ustore-").resolve("cbcr").toString
-    Similarity.writeStandingStore(assigned, path, "cluster",
-      buckets = 4, versioned = true)
+    Similarity.writeStandingStore(embAssigned(cents), path, "cluster",
+      buckets = 4)
     Similarity.writeCodebook(spark, path, cents)
-    Similarity.unifyStandingStore(spark, path)
     val before = Similarity.readCodebook(spark, path)
     val legacy = new java.io.File(s"$path/codebook")
-    assert(!legacy.exists(), "migration left the legacy codebook dir")
-    // simulate the crash window: versioned commit durable, delete lost
+    assert(!legacy.exists(), "the codebook write left a legacy dir")
     spark.range(1).select(lit(99L).as("cid"),
         array(lit(0.0), lit(0.0), lit(0.0), lit(0.0)).as("cent"))
       .write.parquet(s"$path/codebook")
-    assert(legacy.exists())
-    Similarity.unifyStandingStore(spark, path) // idempotent re-run
+    assert(Similarity.readCodebook(spark, path) == before,
+      "a stale legacy codebook dir was read")
+    Similarity.writeCodebook(spark, path, cents) // the next rewrite
     assert(!legacy.exists(),
-      "re-run left the stale legacy codebook dir in place")
+      "the rewrite left the stale legacy codebook dir in place")
     assert(Similarity.readCodebook(spark, path) == before,
       "cleanup damaged the versioned codebook")
   }

@@ -3,12 +3,9 @@ package graft
 import graft.operators.{Dedup, Fixtures, StoreSwap}
 import org.apache.spark.sql.functions._
 
-/** The versioned-manifest snapshot mode ([[StoreSwap]]): reader-atomic
-  * commits for the partitioned stores. A legacy store's swap instant
-  * deletes-then-renames a live bucket dir, so a concurrent listing
-  * reader can see the bucket missing; the versioned mode commits by
-  * renaming ONE manifest file over immutable generation dirs, so a
-  * reader that resolved a manifest always sees a complete store — old
+/** The store manifest's reader guarantees ([[StoreSwap]]): every
+  * commit renames ONE manifest file over immutable generation dirs, so
+  * a reader that resolved a manifest always sees a complete store — old
   * or new, never mid-swap — and keeps its resolved dirs through the GC
   * grace window (`graft.store.snapshotKeep` prior manifests). */
 class VersionedStoreSpec extends SparkSpec {
@@ -44,8 +41,8 @@ class VersionedStoreSpec extends SparkSpec {
     val path = Fixtures.tempDir("graft-vstore-").resolve("s").toString
     val standing = docs().filter(col("doc_id") < 4 && col("doc_id") =!= 2L)
     Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-      buckets = 8, versioned = true)
-    assert(StoreSwap.isVersioned(spark, path))
+      buckets = 8)
+    assert(StoreSwap.snapshotVersions(spark, path) == Seq(0))
     val (v0, entries0) = StoreSwap.latestSnapshot(spark, path, "data").get
     // the pre-mutation reader's view, fully materialized for comparison
     val before = sigRows(readResolved(path, "data", entries0))
@@ -71,7 +68,7 @@ class VersionedStoreSpec extends SparkSpec {
   test("GC keeps the grace window: one prior manifest survives, older gens are reclaimed") {
     val path = Fixtures.tempDir("graft-vstore-").resolve("s").toString
     Dedup.writeSignatureStore(sigs(docs()), path, "doc_id",
-      buckets = 8, versioned = true)
+      buckets = 8)
     // two mutations: forget doc 8 (bucket 0 rewritten), then forget
     // doc 3 (bucket 3 rewritten) — v0's touched gen-0 dirs become
     // unreferenced once v0's manifest ages out of the window
@@ -84,7 +81,7 @@ class VersionedStoreSpec extends SparkSpec {
     val manifests = try listing.toArray.map(_.toString)
       .filter { p => // skip the local FS's hidden .crc checksum twins
         val name = p.substring(p.lastIndexOf('/') + 1)
-        name.startsWith("data.v")
+        name.startsWith("store.v")
       }.sorted.toSeq finally listing.close()
     assert(manifests.size == 2, // latest + one prior (snapshotKeep = 1)
       s"expected a 2-manifest grace window, got $manifests")
@@ -101,7 +98,7 @@ class VersionedStoreSpec extends SparkSpec {
   test("a crashed versioned commit (gen dir, no manifest) is invisible and reclaimed") {
     val path = Fixtures.tempDir("graft-vstore-").resolve("s").toString
     Dedup.writeSignatureStore(sigs(docs()), path, "doc_id",
-      buckets = 8, versioned = true)
+      buckets = 8)
     val wantV0 = sigRows(Dedup.readSignatureStore(spark, path)._1)
     val (v0, _) = StoreSwap.latestSnapshot(spark, path, "data").get
     // simulate a mutator that staged and renamed its generation in but
@@ -128,7 +125,7 @@ class VersionedStoreSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "cluster", "nrm")
     val path = Fixtures.tempDir("graft-vstore-").resolve("emb").toString
     Similarity.writeStandingStore(vecs().filter(col("vec_id") < 10),
-      path, "cluster", buckets = 4, versioned = true)
+      path, "cluster", buckets = 4)
     val (v0, e0) = StoreSwap.latestSnapshot(spark, path, "data").get
     // APPEND = a new generation ADDED to the touched buckets' gen
     // lists — never a rewrite of standing files
@@ -169,7 +166,7 @@ class VersionedStoreSpec extends SparkSpec {
     spark.conf.set("graft.store.snapshotKeep", "8")
     try {
       Similarity.writeStandingStore(vecs(0, 10), path, "cluster",
-        buckets = 4, versioned = true)
+        buckets = 4)
       val v0 = Similarity.standingStoreVersions(spark, path).last
       Similarity.appendToStandingStore(vecs(10, 20), path, "cluster")
       val v1 = Similarity.standingStoreVersions(spark, path).last
@@ -204,7 +201,7 @@ class VersionedStoreSpec extends SparkSpec {
       .toDF("vec_id", "embedding", "cluster", "nrm")
     val path = Fixtures.tempDir("graft-vstore-").resolve("emb").toString
     Similarity.writeStandingStore(vecs(0, 8), path, "cluster",
-      buckets = 4, versioned = true)
+      buckets = 4)
     Similarity.appendToStandingStore(vecs(8, 12), path, "cluster",
       batchId = Some(0L))
     Similarity.appendToStandingStore(vecs(12, 16), path, "cluster",
@@ -226,19 +223,20 @@ class VersionedStoreSpec extends SparkSpec {
     val got = Similarity.readStandingStore(spark, path)._1
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
     assert(got == ((0L until 16L).toSeq.filterNot(_ == 2L)))
-    // a FRESH id still lands, and the gate refuses ledger use on a
-    // legacy (unversioned) store rather than silently at-least-once
+    // a FRESH id still lands
     Similarity.appendToStandingStore(vecs(16, 18), path, "cluster",
       batchId = Some(2L))
     assert(Similarity.readStandingStore(spark, path)._1.count() == 17)
+    // a store in the legacy on-disk layout migrates at its first open
+    // and is exactly-once from its first batch on
     val legacy = Fixtures.tempDir("graft-vstore-").resolve("leg").toString
-    Similarity.writeStandingStore(vecs(0, 4), legacy, "cluster",
-      buckets = 4)
-    val ex = intercept[IllegalArgumentException] {
-      Similarity.appendToStandingStore(vecs(4, 6), legacy, "cluster",
-        batchId = Some(0L))
-    }
-    assert(ex.getMessage.contains("not versioned"), ex.getMessage)
+    LegacyStores.standingStore(vecs(0, 4), legacy, "cluster", 4)
+    Similarity.appendToStandingStore(vecs(4, 6), legacy, "cluster",
+      batchId = Some(0L))
+    Similarity.appendToStandingStore(poisoned, legacy, "cluster",
+      batchId = Some(0L))
+    assert(StoreSwap.committedBatches(spark, legacy, "data") == Set(0L))
+    assert(Similarity.readStandingStore(spark, legacy)._1.count() == 6)
   }
 
   test("store diff: manifest-pruned CDC detects insert/delete/update and reads only changed buckets") {
@@ -253,7 +251,7 @@ class VersionedStoreSpec extends SparkSpec {
       // buckets = 4 and cluster = id % 4 ⇒ bucket b holds cluster b
       Similarity.writeStandingStore(
         df((0L until 10L).map(i => vec(i, i % 4)): _*), path,
-        "cluster", buckets = 4, versioned = true)
+        "cluster", buckets = 4)
       val v0 = Similarity.standingStoreVersions(spark, path).last
       // insert: two rows into cluster 1 (bucket 1)
       Similarity.appendToStandingStore(
@@ -287,7 +285,7 @@ class VersionedStoreSpec extends SparkSpec {
     val path = Fixtures.tempDir("graft-vstore-").resolve("s").toString
     val standing = docs().filter(col("doc_id") < 4 && col("doc_id") =!= 2L)
     Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-      buckets = 8, versioned = true)
+      buckets = 8)
     Dedup.writeBandIndex(spark, path, "doc_id", bands = 2)
     Dedup.writeShingleSidecar(spark, path, standing, "doc_id", "text",
       n = 3)
@@ -318,23 +316,32 @@ class VersionedStoreSpec extends SparkSpec {
     Dedup.ingestBatchIntoStore(spark, path,
       delta.withColumn("text", boom(col("text"))), "doc_id", "text",
       batchId = Some(0L), n = 3, numHashes = 4)
-    // the ledger refuses a legacy store instead of degrading
+    // a store in the legacy layout migrates at open and acks its first
+    // batch like any other
     val legacy = Fixtures.tempDir("graft-vstore-").resolve("leg").toString
-    Dedup.writeSignatureStore(sigs(standing), legacy, "doc_id",
-      buckets = 8)
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.ingestBatchIntoStore(spark, legacy, delta, "doc_id", "text",
-        batchId = Some(0L), n = 3, numHashes = 4)
-    }
-    assert(ex.getMessage.contains("not versioned"), ex.getMessage)
+    LegacyStores.signatureStore(sigs(standing), legacy, "doc_id", 8)
+    Dedup.ingestBatchIntoStore(spark, legacy, delta, "doc_id", "text",
+      batchId = Some(0L), n = 3, numHashes = 4)
+    assert(StoreSwap.committedBatches(spark, legacy, "data") == Set(0L))
+    Dedup.ingestBatchIntoStore(spark, legacy,
+      delta.withColumn("text", boom(col("text"))), "doc_id", "text",
+      batchId = Some(0L), n = 3, numHashes = 4)
+    assert(sigRows(Dedup.readSignatureStore(spark, legacy)._1) ==
+      sigRows(sigs(standing.unionByName(delta))))
   }
 
   test("full text lifecycle on a versioned store matches the legacy store") {
-    def lifecycle(versioned: Boolean): (Seq[Any], Seq[Any]) = {
+    // a store that starts in the legacy on-disk layout (migrated at
+    // its first open) and a store created on the manifest run the same
+    // lifecycle to the same verdicts and content
+    def lifecycle(legacyLayout: Boolean): (Seq[Any], Seq[Any]) = {
       val path = Fixtures.tempDir("graft-vstore-").resolve("s").toString
       val standing = docs()
-      Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-        buckets = 8, versioned = versioned)
+      if (legacyLayout)
+        LegacyStores.signatureStore(sigs(standing), path, "doc_id", 8)
+      else
+        Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
+          buckets = 8)
       Dedup.writeBandIndex(spark, path, "doc_id", bands = 2)
       Dedup.writeShingleSidecar(spark, path, standing, "doc_id", "text",
         n = 3)
@@ -356,8 +363,8 @@ class VersionedStoreSpec extends SparkSpec {
       val store = sigRows(Dedup.readSignatureStore(spark, path)._1)
       (verdicts, store)
     }
-    val legacy = lifecycle(versioned = false)
-    val vsn = lifecycle(versioned = true)
+    val legacy = lifecycle(legacyLayout = true)
+    val vsn = lifecycle(legacyLayout = false)
     assert(vsn._1 == legacy._1, "verdicts diverged across commit protocols")
     assert(vsn._2 == legacy._2, "store content diverged across commit protocols")
     assert(vsn._1.nonEmpty)
