@@ -44,18 +44,17 @@ object StreamingQueries {
     * `graft.stream.statePartitions`. Results are partition-count-
     * invariant: every streaming gate's output is an exact
     * aggregate/join/dedup state, sorted before hashing — only task
-    * count changes. The behavioral confs the caller's session may have
-    * set at runtime (AQE, timezone, plan cuts...) are copied over, since
-    * `newSession()` only inherits builder-time config. */
-  private def streamSession(spark: SparkSession, stagedDirs: Path*): SparkSession = {
+    * count changes. Every `graft.*` conf and every modifiable
+    * `spark.sql.*` conf of the caller's session (AQE, timezone, ANSI,
+    * plan cuts...) is copied over, since `newSession()` only inherits
+    * builder-time config. */
+  private[graft] def streamSession(spark: SparkSession, stagedDirs: Path*): SparkSession = {
     val ss = spark.newSession()
-    Seq("spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.coalescePartitions.enabled",
-        "spark.sql.session.timeZone",
-        "spark.sql.legacy.parquet.nanosAsLong",
-        "spark.sql.parquet.pushdown.inFilterThreshold",
-        Lineage.ModeKey)
-      .foreach(k => spark.conf.getOption(k).foreach(ss.conf.set(k, _)))
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (k.startsWith("graft.") ||
+          (k.startsWith("spark.sql.") && spark.conf.isModifiable(k)))
+        ss.conf.set(k, v)
+    }
     val n = spark.conf.getOption("graft.stream.statePartitions")
       .flatMap(_.toIntOption)
       .getOrElse {

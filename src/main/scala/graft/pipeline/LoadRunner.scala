@@ -30,6 +30,9 @@ object LoadRunner {
 
   case class LoadResult(rows: Long, errors: Seq[String], stored: Boolean)
 
+  /** Errors a [[LoadResult]] reports: the first ones in scan order. */
+  private val ErrorSample = 100
+
   /** Read staged paths through the configured source (`readFileData`
     * dispatch, `Wrap.pm:312-331`). */
   def read(spark: SparkSession, paths: Seq[String], load: Load): DataFrame =
@@ -80,21 +83,31 @@ object LoadRunner {
       if (load.db.targetSchema.nonEmpty) SchemaCoercion(hooked, load.db.targetSchema)
       else hooked.withColumn("_errors", array().cast("array<string>"))
 
-    // cache: error collection and store read the same plan once
+    // cache: the error job and the store read the same plan once. One
+    // job over every row builds the cache and returns, per partition, its
+    // first 100 errors and its first severity-2 error (string overflow,
+    // the abort rides the same `_errors` channel — no width-scan job).
+    // In partition order, the first 100 are the sample and the first
+    // severity-2 error aborts the load.
     val materialized = coerced.cache()
-    val errors = materialized.filter(size(col("_errors")) > 0)
-      .select(explode(col("_errors"))).limit(100)
-      .collect().map(_.getString(0)).toSeq
-    // severity-2 gate (string overflow) rides the same cached error
-    // channel — no separate width-scan job. The sample is capped at 100,
-    // so only a full sample needs the existence re-check (on the cache).
-    val sev2: Option[String] =
-      errors.find(_.startsWith(SchemaCoercion.Severity2Prefix)).orElse {
-        if (errors.length < 100) None
-        else materialized.select(explode(col("_errors")).as("e"))
-          .filter(col("e").startsWith(SchemaCoercion.Severity2Prefix))
-          .limit(1).collect().headOption.map(_.getString(0))
-      }
+    val perPartition = materialized.select(col("_errors"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val sample = Vector.newBuilder[String]
+        var sampled = 0
+        var sev2: Option[String] = None
+        rows.filterNot(_.isNullAt(0)).foreach { r =>
+          val es = r.getArray(0)
+          for (i <- 0 until es.numElements()) {
+            val e = es.getUTF8String(i).toString
+            if (sampled < ErrorSample) { sample += e; sampled += 1 }
+            if (sev2.isEmpty && e.startsWith(SchemaCoercion.Severity2Prefix))
+              sev2 = Some(e)
+          }
+        }
+        Iterator((sample.result(), sev2))
+      }.collect()
+    val errors = perPartition.iterator.flatMap(_._1).take(ErrorSample).toSeq
+    val sev2 = perPartition.iterator.flatMap(_._2).nextOption()
     sev2.foreach { msg =>
       materialized.unpersist()
       throw new IllegalStateException(msg)

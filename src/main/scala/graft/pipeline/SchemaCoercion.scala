@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import graft.functions.{Coerce, EtlFunctions}
 import graft.pipeline.Config.TargetColumn
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -90,22 +89,5 @@ object SchemaCoercion {
       perCol.get(c).map(_._1.as(c)).getOrElse(col(c))
     }
     df.select(projected :+ errs.as("_errors"): _*)
-  }
-
-  /** Standalone severity-2 gate: any string column over its declared size
-    * aborts (`Wrap/DB.pm:305-308`). [[LoadRunner.run]] no longer needs
-    * this extra job — [[apply]] fuses the check into the `_errors`
-    * channel; kept for callers validating a DataFrame outside the load
-    * pipeline. */
-  def validateWidths(df: DataFrame, schema: Seq[TargetColumn]): Unit = {
-    val over = schema.filter(c => typeClass(c.typeName) == "string" && c.size > 0)
-      .filter(c => df.columns.contains(c.name))
-    if (over.nonEmpty) {
-      val cond = over.map(c => length(col(c.name)) > c.size).reduce(_ || _)
-      val bad = df.filter(cond).limit(1).collect()
-      if (bad.nonEmpty)
-        throw new IllegalStateException(
-          s"severity-2: content too long for declared field size (first bad row: ${bad.head})")
-    }
   }
 }

@@ -3,8 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import org.apache.spark.sql.expressions.Window
-import graft.functions.EtlFunctions
+import graft.plans.GraftExtensions
 
 /** Declarative text-file format — the engine's `LoadConfig.File` subset for
   * delimited / quoted-CSV / fixed-width text (SURVEY.md §2.1 S1/S2,
@@ -57,10 +56,12 @@ case class TextFormat(
 /** Order-faithful text scan: each input file becomes `(_file, _lineno,
   * columns…)` rows with the reference's skip/split/trim/normalize pipeline.
   *
-  * Implementation is per-file (Spark `binaryFile` source + `decode` +
-  * regex record split): one task per file, preserving exact line numbers —
-  * the property the reference's `previousline` / first-line semantics need
-  * (SURVEY.md §4.2). For loads that don't need line fidelity, the plain
+  * Implementation is per-file (Spark `binaryFile` source + JVM-charset
+  * decode + regex record split): a file is one row until its lines are
+  * exploded, so the skip prefix, the empty-line drop and the 1-based line
+  * numbers are all computed inside that row — the reference's per-file
+  * line index (`Wrap/File.pm:102,109`, SURVEY.md §4.2) with no exchange
+  * and no sort. For loads that don't need line fidelity, the plain
   * splittable CSV reader path (`readCsv`) scales to arbitrarily large
   * single files; both return the same schema.
   */
@@ -70,35 +71,42 @@ object TextSource {
     * surrogate, unusable for last-wins upsert resolution. */
   val OrderSurrogateKey = "graft_order_surrogate"
 
-  /** Line-faithful read (binaryFile path). Files parallelize 1 task/file —
-    * right for the reference's many-medium-files shape; use [[readCsv]]
-    * for huge single files. */
-  def read(spark: SparkSession, paths: Seq[String], fmt: TextFormat): DataFrame = {
-    val recSep = if (fmt.allowLinefeedInData) "\r\n" else fmt.eol
-    // Spark 4's decode() whitelists charsets (no windows-1252 without a
-    // legacy conf) — decode via UDF: one call per file, cost-free
+  /** A `binaryFile` row's content as its array of raw lines. Spark 4's
+    * `decode()` whitelists charsets (no windows-1252 without a legacy
+    * conf), so the bytes go through the JVM charset: one call per file. */
+  private def rawLines(fmt: TextFormat): Column = {
     val decodeUdf = udf((b: Array[Byte]) =>
       new String(b, java.nio.charset.Charset.forName(fmt.encoding)))
-    val raw = spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path").as("_file"), decodeUdf(col("content")).as("_text"))
-      .select(col("_file"),
-        posexplode(split(col("_text"), recSep)).as(Seq("_idx", "_raw")))
+    val recSep = if (fmt.allowLinefeedInData) "\r\n" else fmt.eol
+    split(decodeUdf(col("content")), recSep)
+  }
 
-    // skip prefix: k lines, or everything up to and incl. the matching line
-    val afterSkip = fmt.skipUntil match {
+  /** Line-faithful read (binaryFile path). Each file is parsed, numbered
+    * and cleaned in the scan stage, one task per file — right for the
+    * reference's many-medium-files shape; use [[readCsv]] for huge single
+    * files. */
+  def read(spark: SparkSession, paths: Seq[String], fmt: TextFormat): DataFrame = {
+    val files = spark.read.format("binaryFile").load(paths: _*)
+      .select(col("path").as("_file"), rawLines(fmt).as("_lines"))
+
+    // drop the skip prefix (k lines, or up to and incl. the first
+    // matching line) and the empty lines by raw line index `i`; the
+    // filter feeds posexplode directly — exploding a column would let the
+    // optimizer infer a non-empty filter on it and push the whole
+    // per-file expression below the projection
+    val (withSkip, kept) = fmt.skipUntil match {
       case Some(pattern) =>
-        val wf = Window.partitionBy(col("_file"))
-        raw.withColumn("_matchIdx",
-            min(when(col("_raw").rlike(pattern), col("_idx"))).over(wf))
-          .filter(col("_matchIdx").isNotNull && col("_idx") > col("_matchIdx"))
-          .drop("_matchIdx")
-      case None => raw.filter(col("_idx") >= fmt.skip)
+        // 1-based index of the first match, 0 when none: a column of its
+        // own, so it is computed once per file, not once per line
+        val at = col("_at")
+        (files.withColumn("_at",
+            array_position(transform(col("_lines"), _.rlike(pattern)), true)),
+          filter(col("_lines"), (l, i) => l =!= "" && at > 0 && i >= at))
+      case None =>
+        (files, filter(col("_lines"), (l, i) => l =!= "" && i >= fmt.skip))
     }
-
-    // drop empty lines, then 1-based per-file line numbers in file order
-    val wOrd = Window.partitionBy(col("_file")).orderBy(col("_idx"))
-    val numbered = afterSkip.filter(col("_raw") =!= "")
-      .withColumn("_lineno", row_number().over(wOrd))
+    val numbered = withSkip.select(col("_file"),
+      posexplode(kept).as(Seq("_pos", "_raw")))
 
     // field extraction
     val fields: Seq[Column] =
@@ -117,20 +125,23 @@ object TextSource {
       } else {
         val sepRegex = if (fmt.sepIsRegex) fmt.sep else java.util.regex.Pattern.quote(fmt.sep)
         val arr = split(col("_raw"), sepRegex)
-        fmt.header.indices.map(i => element_at(arr, i + 1))
+        // a short line's missing fields are NULL (element_at throws
+        // under ANSI)
+        fmt.header.indices.map(i => try_element_at(arr, lit(i + 1)))
       }
 
     // trim + locale normalization (Wrap/File.pm:454-456), rename to target
     val cleaned = fields.zip(fmt.targets).map { case (f, name) =>
       val t = trim(f)
       val n = if (fmt.normalizeNumerics)
-        EtlFunctions.normalizeNumericsUdf(t, lit(fmt.thousandSep), lit(fmt.decimalSep))
+        GraftExtensions.normalize_numerics(t, fmt.thousandSep, fmt.decimalSep)
       else t
       n.as(name)
     }
 
+    // 1-based per-file line numbers in file order
     val projected = numbered.select(
-      col("_file") +: col("_lineno").cast("long").as("_lineno") +: cleaned: _*)
+      col("_file") +: (col("_pos") + 1).cast("long").as("_lineno") +: cleaned: _*)
     if (fmt.dropEmptyFirstField)
       projected.filter(coalesce(col(fmt.targets.head), lit("")) =!= "")
     else projected
@@ -165,13 +176,10 @@ object TextSource {
   }
 
   /** First line of a file (for `firstLineProc`-style hooks,
-    * `Wrap/File.pm:77-83`): extracted driver-side, to be broadcast as a
-    * literal into the load. */
-  def firstLine(spark: SparkSession, path: String, fmt: TextFormat): String = {
-    val row = spark.read.format("binaryFile").load(path)
-      .select(decode(col("content"), fmt.encoding).as("_text"))
-      .select(split(col("_text"), fmt.eol).getItem(0))
-      .head()
-    row.getString(0)
-  }
+    * `Wrap/File.pm:77-83`): decoded and split like [[read]], extracted
+    * driver-side, to be broadcast as a literal into the load. */
+  def firstLine(spark: SparkSession, path: String, fmt: TextFormat): String =
+    spark.read.format("binaryFile").load(path)
+      .select(rawLines(fmt).getItem(0))
+      .head().getString(0)
 }

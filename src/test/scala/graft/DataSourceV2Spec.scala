@@ -154,6 +154,56 @@ class DataSourceV2Spec extends SparkSpec {
     assert(v2Rx.toSeq == classicRx.toSeq)
   }
 
+  test("graft-text and TextSource.read agree on every (file, _lineno, fields)") {
+    // one case per format: files cover CRLF ends, blank lines in the
+    // middle and at the end, an empty first field (dropped AFTER
+    // numbering, so numbers keep their gap), skipUntil with and without
+    // a match (and a second marker line kept as data), and bare LFs kept
+    // inside values under allowLinefeedInData
+    val cases: Seq[(TextFormat, Map[String, String], Seq[String])] = Seq(
+      (TextFormat(header = header, sep = ";", skip = 1),
+        Map("skip" -> "1"),
+        Seq("h1;h2;h3\r\n1;x;10\r\n\r\n2;y;20\r\n;z;30\r\n3;w;30\r\n\r\n\r\n",
+          "hdr\n\n4;a;1\n5;b;2\n\n   \n6;c;3")),
+      (TextFormat(header = header, sep = ";", skipUntil = Some("^--data--$")),
+        Map("skipUntil" -> "^--data--$"),
+        Seq("junk\n--data--\n\n1;a;1\n2;b;2\n",
+          "junk\nno marker here\n1;a;1\n",
+          "--data--\n--data--\n7;c;3\r\n\r\n8;d;4")),
+      (TextFormat(header = header, sep = ";", allowLinefeedInData = true),
+        Map("allowLinefeedInData" -> "true"),
+        Seq("1;multi\nline;10\r\n\r\n2;b;20\r\n;e;5\r\n3;c;30",
+          "\r\n9;lf\n\nin;1\r\n")))
+    cases.zipWithIndex.foreach { case ((fmt, opts, contents), c) =>
+      val dir = tmp(s"graft-v2-lineno-$c-")
+      val files = contents.zipWithIndex.map { case (body, i) =>
+        val f = dir.resolve(s"f$i.txt")
+        Files.write(f, body.getBytes("UTF-8"))
+        f.toString
+      }
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(col("_file"), col("_lineno"), col("k"), col("name"), col("grp"))
+          .collect().map(r => (new org.apache.hadoop.fs.Path(r.getString(0)).getName,
+            r.getLong(1), r.getString(2), r.getString(3), r.getString(4)))
+          .sortBy(r => (r._1, r._2)).toSeq
+      val classic = rows(TextSource.read(spark, files, fmt))
+      val v2 = rows(spark.read.format("graft-text")
+        .option("header", header.mkString(",")).option("sep", ";")
+        .options(opts).load(files: _*))
+      assert(classic == v2, s"case $c")
+      assert(classic.nonEmpty, s"case $c")
+    }
+    // pinned numbers for the first case: the empty-first-field line keeps
+    // its number (3) when dropped; blank lines are never numbered
+    val dir = tmp("graft-v2-lineno-pin-")
+    val f = dir.resolve("f.txt")
+    Files.write(f, "h\r\n1;x;10\r\n\r\n2;y;20\r\n;z;30\r\n3;w;30\r\n\r\n".getBytes("UTF-8"))
+    val pinned = TextSource.read(spark, Seq(f.toString),
+        TextFormat(header = header, sep = ";", skip = 1))
+      .select("_lineno", "k").collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(pinned.sorted == Seq((1L, "1"), (2L, "2"), (4L, "3")))
+  }
+
   test("DSv2 statistics make a small source broadcastable in joins") {
     val dir = tmp("graft-v2-stats-")
     val f = dir.resolve("dim.fix")

@@ -67,6 +67,60 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
+  test("a severity-2 value beyond the 100-error sample still aborts the load") {
+    val work = tmpDir("graft-sev2-")
+    // files 1 and 2 carry 160 severity-1 errors each (non-numeric
+    // amounts); file 3, the smallest and so the last partition scanned,
+    // holds the only over-wide name
+    def write(name: String, lines: Seq[String]): String = {
+      val f = java.nio.file.Paths.get(work, name)
+      Files.write(f, ("id;name;amount\n" + lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      f.toString
+    }
+    val bad = (1 to 160).map(i => s"$i;n$i;N/A")
+    val f1 = write("f1.csv", bad)
+    val f2 = write("f2.csv", bad.map(l => "1" + l))
+    val fmt = TextFormat(header = Seq("id", "name", "amount"), sep = ";", skip = 1)
+    val load = Load(source = TextSpec(fmt), db = DbConfig(targetSchema = Seq(
+      TargetColumn("id", "bigint"), TargetColumn("name", "varchar", size = 5),
+      TargetColumn("amount", "double"))))
+    val table = tmpDir("graft-table-") + "/t"
+    val base = write("base.csv", Seq("1;a;1"))
+    LoadRunner.run(spark, Seq(base), load, table)
+    def content = ParquetTable.load(spark, table).collect().map(_.toSeq).toSeq
+    val before = content
+
+    val f3 = write("f3.csv", Seq("9;waytoolong;1"))
+    val ex = intercept[IllegalStateException] {
+      LoadRunner.run(spark, Seq(f1, f2, f3), load, table)
+    }
+    assert(ex.getMessage.startsWith(SchemaCoercion.Severity2Prefix), ex.getMessage)
+    assert(ex.getMessage.contains("waytoolong"))
+    assert(content == before)
+
+    val f3ok = write("f3ok.csv", Seq("9;ok;1"))
+    val result = LoadRunner.run(spark, Seq(f1, f2, f3ok), load, table)
+    assert(result.stored && result.rows == 160 + 160 + 1) // replaces: no keepContent
+    assert(result.errors.size == 100)
+    assert(result.errors.forall(_.startsWith("non-numeric value for amount: ")))
+  }
+
+  test("firstLine hook reads a windows-1252 file's first line") {
+    val work = tmpDir("graft-cp1252-")
+    val f = java.nio.file.Paths.get(work, "d.csv")
+    Files.write(f, "Stand: März 2024\r\nid;name\r\n1;Müller\r\n".getBytes("windows-1252"))
+    val fmt = TextFormat(header = Seq("id", "name"), sep = ";", skip = 2,
+      encoding = "windows-1252")
+    assert(graft.sources.TextSource.firstLine(spark, f.toString, fmt) == "Stand: März 2024")
+    val load = Load(source = TextSpec(fmt), db = DbConfig(),
+      hooks = LoadHooks(firstLine = Some(line => Map("stand" -> line.stripPrefix("Stand: ")))))
+    val table = tmpDir("graft-table-") + "/t"
+    LoadRunner.run(spark, Seq(f.toString), load, table)
+    val rows = ParquetTable.load(spark, table).select("id", "name", "stand")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    assert(rows.toSeq == Seq(("1", "Müller", "März 2024")))
+  }
+
   test("previous-row context reaches the row hook (W1)") {
     val work = tmpDir("graft-e2e-")
     val csv = java.nio.file.Paths.get(work, "d.csv")

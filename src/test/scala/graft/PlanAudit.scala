@@ -186,6 +186,26 @@ object PlanAudit {
       check("q52 chunking stays in codegen", p52.contains("*("))
     }
 
+    // q26 text roundtrip: lines are numbered inside each file's row
+    // (posexplode), so the scan needs no window and no hash exchange —
+    // only the gate orderBy's range exchange remains. q26 selects no
+    // `_lineno`, which lets the optimizer prune a numbering window, so a
+    // skipUntil read that keeps every column is planned alongside
+    audit("q26") {
+      val p26 = plan("q26_text_roundtrip")
+      val file = java.nio.file.Files.createTempFile("graft-audit-text-", ".txt")
+      java.nio.file.Files.write(file, "junk\n--data--\n1;a\n".getBytes("UTF-8"))
+      val numbered = graft.sources.TextSource.read(spark, Seq(file.toString),
+          graft.sources.TextFormat(header = Seq("k", "v"), sep = ";",
+            skipUntil = Some("^--data--$")))
+        .queryExecution.executedPlan.toString
+      check("q26 text scan numbers lines without a window or hash exchange",
+        Seq(p26, numbered).forall(p =>
+          !p.contains("Window") && !p.contains("Exchange hashpartitioning")) &&
+          p26.contains("Exchange rangepartitioning"),
+        s"q26:\n$p26\nnumbered read:\n$numbered")
+    }
+
     // q51 sampling: bernoulli is a filter (no agg); quota's only
     // exchange is the stratum window + gate sort
     audit("q51") {

@@ -13,6 +13,21 @@ import java.sql.Timestamp
   * loads, watermark windowed aggregation, flatMapGroupsWithState. */
 class StreamingSpec extends SparkSpec {
 
+  test("streamSession carries the caller's graft.* and SQL confs to the child") {
+    val parent = spark.newSession()
+    parent.conf.set("graft.test.marker", "carried")
+    parent.conf.set("spark.sql.ansi.enabled", "false") // default is true
+    parent.conf.set("spark.sql.shuffle.partitions", "7")
+    val child = graft.operators.StreamingQueries.streamSession(parent,
+      Files.createTempDirectory("graft-stream-session-"))
+    assert(child.conf.get("graft.test.marker") == "carried")
+    assert(child.conf.get("spark.sql.ansi.enabled") == "false")
+    // the state-partition override still wins: an empty staging dir
+    // derives the floor, min(4, cores)
+    val floor = math.min(4, spark.sparkContext.defaultParallelism)
+    assert(child.conf.get("spark.sql.shuffle.partitions") == floor.toString)
+  }
+
   test("file stream: each arriving file is one upsert micro-batch (R1/R4)") {
     val in = Files.createTempDirectory("graft-stream-in-").toString
     val table = Files.createTempDirectory("graft-stream-t-").toString + "/t"
