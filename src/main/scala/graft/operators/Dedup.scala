@@ -657,7 +657,6 @@ object Dedup {
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, numHashes: Int = 16,
                         seed: Long = 7L): DataFrame = {
-    val p = 2147483647L
     val coefs = minhashCoefs(numHashes, seed)
     // NO distinct before the aggregate: min over the shingle multiset
     // equals min over its set, so deduplicating first would buy a full
@@ -667,9 +666,7 @@ object Dedup {
     // (q88) gates
     val hashed = df.select(col(idCol).as("id"),
         explode(shingleHashArr(col(textCol), n, poly = true)).as("x"))
-    val coefArr = typedlit(coefs)
-    val sigRow = transform(coefArr,
-      c => pmod(col("x") * c.getField("_1") + c.getField("_2"), lit(p)))
+    val sigRow = transform(typedlit(coefs), c => permute(col("x"), c))
     val sigAgg = {
       import org.apache.spark.sql.GraftColumnBridge
       GraftColumnBridge.column(
@@ -681,6 +678,20 @@ object Dedup {
       .select(col(idCol), col("k").cast("long").as("k"), col("mh"))
   }
 
+  /** The universal-hash permutation (a·x + b) mod p of shingle hash
+    * `x` under coefficient pair `c` ([[minhashCoefs]]). */
+  private def permute(x: Column, c: Column): Column =
+    pmod(x * c.getField("_1") + c.getField("_2"), lit(2147483647L))
+
+  /** The minhash signature of a DISTINCT shingle-hash set `xs`: per
+    * permutation k, the min over the set — the law [[minhashSignatures]]
+    * aggregates row by row (the min over a multiset is the min over its
+    * set), evaluated on one doc's row. Null for an empty set: a doc
+    * without shingles has no signature. */
+  private def signatureOf(xs: Column, numHashes: Int, seed: Long): Column =
+    when(size(xs) > 0, transform(typedlit(minhashCoefs(numHashes, seed)),
+      c => array_min(transform(xs, x => permute(x, c)))))
+
   /** PARTITIONED SIGNATURE STORE — the [[minhashSignatures]] relation
     * laid out for its two standing-corpus duties: absorbing loads via
     * the per-(doc, k) MIN merge law, and forgetting documents. The
@@ -691,7 +702,8 @@ object Dedup {
     * buckets are DERIVED from the ids (no discovery scan at all). The
     * banded LSH join key, by contrast, spreads every doc across all
     * bands — an index derived at join time, not a storage layout.
-    * Bucket count rides in a `meta` sidecar (same contract as the
+    * The bucket count is a layout constant of the store manifest,
+    * recorded in the same commit as the data (same contract as the
     * embedding store's [[Similarity.writeStandingStore]]). Every
     * dataDir (`data`, `bands`, `bands_inv`, `shingles`) commits
     * through [[StoreSwap]]'s store manifest.
@@ -706,12 +718,96 @@ object Dedup {
       " commits through the store manifest")
     require(buckets >= 1, s"need buckets >= 1, got $buckets")
     val spark = sigs.sparkSession
-    StoreSwap.overwriteDir(spark, path, "data", "d_bucket",
-      sigs.withColumn("d_bucket",
-        pmod(col(idCol), lit(buckets.toLong)).cast("int")),
+    StoreSwap.transact(spark, path) {
+      StoreSwap.overwriteDir(spark, path, "data", "d_bucket",
+        sigs.withColumn("d_bucket", docBucket(col(idCol), buckets)),
+        Seq(col(idCol), col("k")))
+      StoreSwap.putBucketCount(spark, path, buckets)
+    }
+  }
+
+  /** A doc's store bucket: id mod buckets. */
+  private def docBucket(id: Column, buckets: Int): Column =
+    pmod(id, lit(buckets.toLong)).cast("int")
+
+  /** Manifest name of the shingle sidecar's width
+    * ([[StoreSwap.layoutConstant]]). */
+  private val ShingleWidthKey = "shingles.n"
+
+  /** The shingle sidecar's width at `asOf` (None = the current view). */
+  private def shingleWidth(spark: SparkSession, path: String,
+                           asOf: Option[Int] = None): Int =
+    StoreSwap.layoutConstant(spark, path, ShingleWidthKey, asOf).getOrElse(
+      sys.error(s"$path records no shingle width — build the sidecar" +
+        " with writeShingleSidecar")).toInt
+
+  /** The distinct values of `df`'s one int column, sorted, in ONE job —
+    * a per-partition distinct merged on the driver, where
+    * `distinct().collect()` plans a shuffle stage of its own. */
+  private def distinctInts(df: DataFrame): Seq[Int] =
+    df.rdd.mapPartitions(_.map(_.getInt(0)).toSet.iterator)
+      .collect().distinct.sorted.toSeq
+
+  /** ONE ROW PER DOC of `docs` — the form a micro-batch is read into,
+    * once: `id`, `d_bucket`, and for each shingle width w of `widths`
+    * the doc's distinct [[polyHash]] shingle set `xs<w>`. A doc that
+    * occurs twice in `docs` gets the union of its rows' sets (what the
+    * row-wise explode + distinct of [[shinglePolyHashes]] gives); a doc
+    * without shingles keeps its row, with an empty set. */
+  private def docShingleSets(docs: DataFrame, idCol: String,
+                             textCol: String, buckets: Int,
+                             widths: Seq[Int]): DataFrame = {
+    val ws = widths.distinct
+    val sets = ws.map(w =>
+      array_distinct(flatten(collect_list(col(s"xs$w")))).as(s"xs$w"))
+    docs.select(col(idCol).as("id") +: ws.map(w =>
+        shingleHashArr(col(textCol), w, poly = true).as(s"xs$w")): _*)
+      .groupBy(col("id")).agg(sets.head, sets.tail: _*)
+      .withColumn("d_bucket", docBucket(col("id"), buckets))
+  }
+
+  /** The signature MIN-merge — the one law of [[mergeIntoSignatureStore]]
+    * and [[ingestBatchIntoStore]]: the `touched` doc buckets' rows ∪
+    * `rows` (idCol, k, mh, d_bucket), re-aggregated per (doc, k) by MIN
+    * and committed through [[StoreSwap.stagedRewrite]]. Partitioned on
+    * d_bucket BEFORE the aggregate, so aggregate and staged write share
+    * one exchange. */
+  private def rewriteSignatures(spark: SparkSession, path: String,
+                                idCol: String, touched: Seq[Int],
+                                rows: DataFrame): Unit = {
+    val merged = StoreSwap.readDir(spark, path, "data", "d_bucket")
+      .filter(col("d_bucket").isin(touched: _*))
+      .unionByName(rows)
+      .repartition(col("d_bucket"))
+      .groupBy(col("d_bucket"), col(idCol), col("k"))
+      .agg(min(col("mh")).as("mh"))
+    StoreSwap.stagedRewrite(spark, path, "d_bucket", touched, merged,
       Seq(col(idCol), col("k")))
-    spark.range(1).select(lit(buckets).as("buckets"))
-      .write.mode("overwrite").parquet(path + "/meta")
+  }
+
+  /** The sidecar REPLACE — the one law of [[mergeShinglesIntoStore]] and
+    * [[ingestBatchIntoStore]]: in the `touched` doc buckets, each doc of
+    * `docs` (id, d_bucket, set column `xsCol`) holds exactly its fresh
+    * set afterwards (an empty set clears it), every other doc its
+    * stored rows. One exchange on d_bucket serves the per-doc pick and
+    * the staged write. */
+  private def rewriteShingles(spark: SparkSession, path: String,
+                              touched: Seq[Int], docs: DataFrame,
+                              xsCol: String): Unit = {
+    val stored = StoreSwap.readDir(spark, path, "shingles", "d_bucket")
+      .filter(col("d_bucket").isin(touched: _*))
+      .select(col("id"), col("x"), col("d_bucket"), lit(false).as("fresh"))
+    val fresh = docs.select(col("id"), explode_outer(col(xsCol)).as("x"),
+      col("d_bucket"), lit(true).as("fresh"))
+    val replaced = max(col("fresh"))
+      .over(Window.partitionBy(col("d_bucket"), col("id")))
+    val merged = stored.unionByName(fresh)
+      .repartition(col("d_bucket"))
+      .withColumn("replaced", replaced)
+      .filter(col("fresh") === col("replaced") && col("x").isNotNull)
+      .select(col("id"), col("x"), col("d_bucket"))
+    StoreSwap.stagedRewrite(spark, path, "d_bucket", touched, merged,
+      Seq(col("id"), col("x")), "shingles")
   }
 
   /** Absorb a load into the signature store via the q109 merge law,
@@ -726,35 +822,34 @@ object Dedup {
     * touched buckets' contents — delta-footprint, not corpus. Returns
     * the touched bucket ids. */
   def mergeIntoSignatureStore(spark: SparkSession, path: String,
-                              delta: DataFrame, idCol: String): Seq[Int] = {
-    val (standing, buckets) = readSignatureStore(spark, path)
-    val withB = delta
-      .withColumn("d_bucket",
-        pmod(col(idCol), lit(buckets.toLong)).cast("int"))
-    val touched = withB.select(col("d_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return Seq.empty
-    val standingSlice = standing
-      .filter(col("d_bucket").isin(touched: _*))
-    val merged = standingSlice.unionByName(withB)
-      .groupBy(col("d_bucket"), col(idCol), col("k"))
-      .agg(min(col("mh")).as("mh"))
-    StoreSwap.stagedRewrite(spark, path, "d_bucket", touched, merged,
-      Seq(col(idCol), col("k")))
+                              delta: DataFrame, idCol: String): Seq[Int] =
+    storeTxn(spark, path) {
+    val rows = delta.withColumn("d_bucket",
+      docBucket(col(idCol), StoreSwap.bucketCount(spark, path)))
+    val touched = distinctInts(rows.select(col("d_bucket")))
+    if (touched.nonEmpty)
+      rewriteSignatures(spark, path, idCol, touched, rows)
     touched
   }
 
   /** EXACTLY-ONCE composed ingest of a delta batch into the signature
     * store and its serving structures — the foreachBatch body of a
     * streaming text-ingest loop (q212's flow), hardened for the
-    * at-least-once redelivery contract. The three merges are each
+    * at-least-once redelivery contract. It applies the laws of the
+    * three public merges ([[mergeIntoSignatureStore]],
+    * [[mergeShinglesIntoStore]], [[mergeIntoBandIndex]]) in ONE PASS
+    * over the batch: the batch is read once into one row per doc
+    * ([[docShingleSets]]: its shingle set(s), doc bucket, and minhash
+    * signature, checkpointed), the touched doc buckets are collected
+    * once and serve the signature, sidecar and inventory rewrites, and
+    * every layout constant comes from the manifest. The merges are each
     * idempotent for identical batch content (signatures MIN to
     * themselves, the shingle sidecar REPLACEs per doc, band rows
     * collapse in the distinct), so redelivery was already
     * content-harmless; what the ledger adds is the SKIP — an acked
     * batchId returns before `deltaDocs` is even evaluated, so a
     * redelivered batch costs one manifest read instead of three
-    * store mutations. The three merges AND the ledger ack are ONE
+    * store mutations. The merges AND the ledger ack are ONE
     * [[StoreSwap.transact]]: a crash anywhere inside leaves the store
     * at its pre-batch version with the batch unacked, so redelivery
     * re-runs from scratch against unchanged state. */
@@ -766,34 +861,43 @@ object Dedup {
     storeTxn(spark, path) {
     if (!batchId.exists(
         StoreSwap.committedBatches(spark, path, "data").contains)) {
-      mergeIntoSignatureStore(spark, path,
-        minhashSignatures(deltaDocs, idCol, textCol, n, numHashes), idCol)
-      if (shingleSidecarExists(spark, path))
-        mergeShinglesIntoStore(spark, path, deltaDocs, idCol, textCol)
-      if (StoreSwap.dirExists(spark, path, "bands"))
-        mergeIntoBandIndex(spark, path,
-          deltaDocs.select(col(idCol)), idCol)
+      val buckets = StoreSwap.bucketCount(spark, path)
+      val sideN =
+        if (shingleSidecarExists(spark, path)) Some(shingleWidth(spark, path))
+        else None
+      val layout =
+        if (StoreSwap.dirExists(spark, path, "bands"))
+          Some(bandLayout(spark, path, buckets))
+        else None
+      val docs = docShingleSets(deltaDocs, idCol, textCol, buckets,
+          n +: sideN.toSeq)
+        .withColumn("sig", signatureOf(col(s"xs$n"), numHashes, 7L))
+        .localCheckpoint(true) // the batch, read once: |docs| rows
+      val touched = distinctInts(docs.select(col("d_bucket")))
+      if (touched.nonEmpty) {
+        rewriteSignatures(spark, path, idCol, touched,
+          docs.select(col("id").as(idCol), col("d_bucket"),
+              posexplode(col("sig")).as(Seq("k", "mh")))
+            .select(col(idCol), col("k").cast("long").as("k"), col("mh"),
+              col("d_bucket")))
+        sideN.foreach(w =>
+          rewriteShingles(spark, path, touched, docs, s"xs$w"))
+        layout.foreach(l => rewriteBandIndex(spark, path, buckets, touched,
+          bandRowsForDocs(spark, path, broadcast(docs.select(col("id"))),
+            idCol, touched, l)))
+      }
       batchId.foreach(StoreSwap.ackBatch(spark, path, "data", _))
     } // else: redelivered batch, already fully absorbed and acked
   }
 
   /** [[StoreSwap.open]] for a signature store: an older on-disk layout
-    * migrates once, with the band index's layout constants seeded from
-    * the live `bands_meta` sidecar INTO the migration manifest — so
-    * historical judgments of the cutover snapshot survive a later
-    * rebuild under a different graft.lsh.bandIndexBuckets
-    * ([[bandsMetaAt]] would otherwise have to fail fast on them).
+    * migrates once, with the layout constants of its sidecars (bucket
+    * count, shingle width, band layout) seeded INTO the migration
+    * manifest — so historical judgments of the cutover snapshot survive
+    * a later rebuild under a different graft.lsh.bandIndexBuckets.
     * Idempotent; a no-op on a store already on the manifest. */
   def unifySignatureStore(spark: SparkSession, path: String): Unit =
-    StoreSwap.open(spark, path, {
-      val bm = new org.apache.hadoop.fs.Path(path + "/bands_meta")
-      if (bm.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            .exists(bm)) {
-        val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-        val (b, r, ib) = bandsMeta(spark, path, buckets)
-        bandsMetaEntries(b, r, ib)
-      } else Map.empty[String, Seq[Long]]
-    })
+    StoreSwap.open(spark, path)
 
   /** One commit of the signature store ([[StoreSwap.transact]]), opened
     * through [[unifySignatureStore]] first. */
@@ -807,8 +911,8 @@ object Dedup {
   def readSignatureStore(spark: SparkSession,
                          path: String): (DataFrame, Int) = {
     unifySignatureStore(spark, path)
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    (StoreSwap.readDir(spark, path, "data", "d_bucket"), buckets)
+    (StoreSwap.readDir(spark, path, "data", "d_bucket"),
+      StoreSwap.bucketCount(spark, path))
   }
 
   /** TIME-TRAVEL read of the signature store — the text twin of
@@ -819,12 +923,12 @@ object Dedup {
     * replays whole judgments; this read serves the signature state
     * itself — audits, diffs, forget verification. Schema-equal to
     * [[readSignatureStore]]: the `d_bucket` partition column is kept
-    * in both. */
+    * in both. The bucket count is the one recorded at `version`. */
   def readSignatureStoreAt(spark: SparkSession, path: String,
                            version: Int): (DataFrame, Int) = {
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    (StoreSwap.readVersionedAt(spark, path, "data", "d_bucket", version),
-      buckets)
+    val data = StoreSwap.readVersionedAt(spark, path, "data", "d_bucket",
+      version)
+    (data, StoreSwap.bucketCount(spark, path, Some(version)))
   }
 
   /** Retained (readable) manifest versions of the signature store,
@@ -894,9 +998,7 @@ object Dedup {
     storeTxn(spark, path) {
     val (standing, buckets) = readSignatureStore(spark, path)
     val ids = docIds.select(col(idCol)).distinct()
-    val touched = ids
-      .select(pmod(col(idCol), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    val touched = distinctInts(ids.select(docBucket(col(idCol), buckets)))
     if (touched.isEmpty) return 0L
     val slice = standing
       .filter(col("d_bucket").isin(touched: _*))
@@ -924,8 +1026,9 @@ object Dedup {
     * This persists the per-doc distinct [[polyHash]](shingle) rows
     * (id, x) partitioned by the doc's own bucket (`d_bucket = id mod
     * buckets`, like `data` and `bands_inv`), so verification reads
-    * ONLY candidate docs' buckets. Shingle width n rides in
-    * `shingles_meta`; [[lshJudgeStore]] auto-uses the sidecar when
+    * ONLY candidate docs' buckets. Shingle width n is a layout constant
+    * of the manifest, recorded in the sidecar's commit;
+    * [[lshJudgeStore]] auto-uses the sidecar when
     * present and fails fast if a candidate doc is missing from it
     * (an incomplete sidecar must never silently drop verdicts).
     *
@@ -938,14 +1041,12 @@ object Dedup {
   def writeShingleSidecar(spark: SparkSession, path: String,
                           docs: DataFrame, idCol: String, textCol: String,
                           n: Int = 3): Unit = storeTxn(spark, path) {
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    val buckets = StoreSwap.bucketCount(spark, path)
     StoreSwap.overwriteDir(spark, path, "shingles", "d_bucket",
       shinglePolyHashes(docs, idCol, textCol, n)
-        .withColumn("d_bucket",
-          pmod(col("id"), lit(buckets.toLong)).cast("int")),
+        .withColumn("d_bucket", docBucket(col("id"), buckets)),
       Seq(col("id"), col("x")))
-    spark.range(1).select(lit(n).as("n"))
-      .write.mode("overwrite").parquet(path + "/shingles_meta")
+    StoreSwap.putStoreMeta(spark, path, Map(ShingleWidthKey -> Seq(n.toLong)))
   }
 
   /** Whether `path` carries the shingle-hash sidecar. */
@@ -967,21 +1068,13 @@ object Dedup {
     storeTxn(spark, path) {
     require(shingleSidecarExists(spark, path),
       s"$path has no shingle sidecar — build it with writeShingleSidecar")
-    val n = spark.read.parquet(path + "/shingles_meta").head.getInt(0)
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    val ids = deltaDocs.select(col(idCol).as("id")).distinct()
-    val touched = ids
-      .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return Seq.empty
-    val fresh = shinglePolyHashes(deltaDocs, idCol, textCol, n)
-      .withColumn("d_bucket", pmod(col("id"), lit(buckets.toLong)).cast("int"))
-    val kept = StoreSwap.readDir(spark, path, "shingles", "d_bucket")
-      .filter(col("d_bucket").isin(touched: _*))
-      .join(ids, Seq("id"), "left_anti")
-      .select(col("id"), col("x"), col("d_bucket"))
-    StoreSwap.stagedRewrite(spark, path, "d_bucket", touched,
-      kept.unionByName(fresh), Seq(col("id"), col("x")), "shingles")
+    val n = shingleWidth(spark, path)
+    val docs = docShingleSets(deltaDocs, idCol, textCol,
+        StoreSwap.bucketCount(spark, path), Seq(n))
+      .localCheckpoint(true) // |docs| rows, read twice
+    val touched = distinctInts(docs.select(col("d_bucket")))
+    if (touched.nonEmpty)
+      rewriteShingles(spark, path, touched, docs, s"xs$n")
     touched
   }
 
@@ -1006,10 +1099,15 @@ object Dedup {
     * (idCol, k, mh). */
   private def bandRows(sigs: DataFrame, idCol: String, bands: Int,
                        rowsPerBand: Int, buckets: Int): DataFrame =
-    sigs.groupBy(col(idCol).as("id"))
+    bandRowsOfSigs(sigs.groupBy(col(idCol).as("id"))
       .agg(transform(array_sort(collect_list(struct(col("k"), col("mh")))),
-        e => e.getField("mh")).as("sig"))
-      .select(col("id"),
+        e => e.getField("mh")).as("sig")), bands, rowsPerBand, buckets)
+
+  /** (id, band, bsig, bb_bucket) band rows for per-doc k-ordered
+    * signature arrays (id, sig). */
+  private def bandRowsOfSigs(docs: DataFrame, bands: Int, rowsPerBand: Int,
+                             buckets: Int): DataFrame =
+    docs.select(col("id"),
         posexplode(bandSigArray(col("sig"), bands, rowsPerBand))
           .as(Seq("band", "bsig")))
       .withColumn("bb_bucket",
@@ -1024,7 +1122,8 @@ object Dedup {
     * partitions them by `bb_bucket = bsig mod buckets`: a delta's band
     * values prune the index read to min(|delta bands|, buckets)
     * directories — the text twin of the embedding store's probe-pruned
-    * search. Bands/rowsPerBand ride in a `bands_meta` sidecar. */
+    * search. Bands/rowsPerBand/idxBuckets are layout constants of the
+    * manifest, recorded in the index's commit. */
   def writeBandIndex(spark: SparkSession, path: String, idCol: String,
                      bands: Int = 8): Unit =
     storeTxn(spark, path) {
@@ -1058,9 +1157,8 @@ object Dedup {
     // count at the measured crossover ([[autoBandIndexBuckets]]): the
     // store bucket count below it (= r14's measured best at 50k/500k),
     // scaling as docs/125k past ≥500M docs per the recorded break-even.
-    // The manual knob stays as override. Recorded in bands_meta and the
-    // store manifest so every later mutation/judgment derives the same
-    // layout.
+    // The manual knob stays as override. Recorded in the store manifest
+    // so every later mutation/judgment derives the same layout.
     val nDocs = aggRow.getLong(1) / numHashes // one row per (doc, k)
     val idxBuckets = spark.conf.getOption("graft.lsh.bandIndexBuckets")
       .flatMap(_.toIntOption).filter(_ >= 1)
@@ -1084,10 +1182,7 @@ object Dedup {
         .withColumn("d_bucket",
           pmod(col("id"), lit(buckets.toLong)).cast("int")),
       Seq(col("id"), col("band")))
-    spark.range(1).select(lit(bands).as("bands"),
-        lit(r).as("rows_per_band"), lit(idxBuckets).as("idx_buckets"))
-      .write.mode("overwrite").parquet(path + "/bands_meta")
-    // The layout constants ALSO version through the manifest (same
+    // The layout constants version through the manifest (same
     // rename as the band rows): a historical judgment resolves
     // bands/r/idx_buckets from its pinned version, so a rebuild under a
     // different graft.lsh.bandIndexBuckets inside the retention window
@@ -1124,97 +1219,96 @@ object Dedup {
   private val RowsPerBandKey = "bands.r"
   private val IdxBucketsKey = "bands.idx"
 
-  private def bandsMetaEntries(bands: Int, r: Int,
-                               idxBuckets: Int): Map[String, Seq[Long]] =
-    Map(BandsKey -> Seq(bands.toLong), RowsPerBandKey -> Seq(r.toLong),
-      IdxBucketsKey -> Seq(idxBuckets.toLong))
-
   private def putBandsMeta(spark: SparkSession, path: String,
                            bands: Int, r: Int, idxBuckets: Int): Unit =
     StoreSwap.putStoreMeta(spark, path,
-      bandsMetaEntries(bands, r, idxBuckets))
+      Map(BandsKey -> Seq(bands.toLong), RowsPerBandKey -> Seq(r.toLong),
+        IdxBucketsKey -> Seq(idxBuckets.toLong)))
+
+  /** (bands, rowsPerBand, idxBuckets) a reader at `asOf` (None = the
+    * current view) must derive band rows with, from the manifest
+    * ([[StoreSwap.layoutConstant]]) — a PINNED read takes the pinned
+    * manifest's layout: a [[writeBandIndex]] rebuild under a different
+    * `graft.lsh.bandIndexBuckets` inside the retention window changes
+    * the live one, and deriving delta `bb_bucket`s from it against
+    * band rows PINNED under the old layout silently drops candidates.
+    * idxBuckets falls back to the store's bucket count for indexes
+    * written before the layout knob existed. */
+  private def bandLayout(spark: SparkSession, path: String,
+                         storeBuckets: Int,
+                         asOf: Option[Int] = None): (Int, Int, Int) = {
+    def constant(name: String) =
+      StoreSwap.layoutConstant(spark, path, name, asOf).map(_.toInt)
+    (constant(BandsKey), constant(RowsPerBandKey)) match {
+      case (Some(b), Some(r)) =>
+        (b, r, constant(IdxBucketsKey).getOrElse(storeBuckets))
+      case _ => sys.error(s"$path has no band index — build it with" +
+        " writeBandIndex")
+    }
+  }
 
   /** Whether `path` carries the per-doc band inventory (indexes built
     * before it existed lack one until the next [[writeBandIndex]]). */
   private def bandInvExists(spark: SparkSession, path: String): Boolean =
     StoreSwap.dirExists(spark, path, "bands_inv")
 
-  /** The inventory's rows for `docIds` — doc-bucket pruned. */
+  /** The inventory's rows for the docs `ids` (column `id`) — pruned to
+    * their doc buckets `db`. */
   private def invRowsForDocs(spark: SparkSession, path: String,
-                             docIds: DataFrame, idCol: String,
-                             buckets: Int): DataFrame = {
-    val ids = docIds.select(col(idCol).as("id")).distinct()
-    val db = ids
-      .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
+                             ids: DataFrame, db: Seq[Int]): DataFrame =
     StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .join(ids, Seq("id"), "left_semi")
       .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
-  }
 
-  /** (bands, rowsPerBand, idxBuckets) — idxBuckets falls back to the
-    * store's bucket count for indexes written before the layout knob
-    * existed (their bands_meta has two columns). */
-  private def bandsMeta(spark: SparkSession, path: String,
-                        storeBuckets: Int): (Int, Int, Int) = {
-    val df = spark.read.parquet(path + "/bands_meta")
-    val m = df.head
-    val idx = if (df.columns.contains("idx_buckets"))
-      m.getAs[Int]("idx_buckets") else storeBuckets
-    (m.getInt(0), m.getInt(1), idx)
-  }
-
-  /** The layout constants a reader at `asOf` must derive band rows
-    * with. Live reads use the `bands_meta` sidecar; PINNED reads
-    * resolve from the pinned manifest ([[StoreSwap.storeMetaAt]]) —
-    * a [[writeBandIndex]] rebuild under a different
-    * `graft.lsh.bandIndexBuckets` inside the retention window rewrites
-    * the live sidecar, and deriving delta `bb_bucket`s from it against
-    * band rows PINNED under the old layout silently drops candidates.
-    * A pinned manifest that predates the first recorded layout falls
-    * back to the live sidecar only when NO retained manifest carries a
-    * record (index never rebuilt since the recording began — live
-    * still describes the pinned rows); otherwise it fails fast. */
-  private def bandsMetaAt(spark: SparkSession, path: String,
-                          storeBuckets: Int,
-                          asOf: Option[Int]): (Int, Int, Int) =
-    asOf match {
-      case Some(v) =>
-        (StoreSwap.storeMetaAt(spark, path, BandsKey, Some(v)),
-         StoreSwap.storeMetaAt(spark, path, RowsPerBandKey, Some(v)),
-         StoreSwap.storeMetaAt(spark, path, IdxBucketsKey, Some(v))) match {
-          case (Some(Seq(b)), Some(Seq(r)), Some(Seq(ib))) =>
-            (b.toInt, r.toInt, ib.toInt)
-          case _ =>
-            require(!StoreSwap.storeMetaRecordedEver(spark, path,
-                BandsKey),
-              s"$path: the band index was rebuilt AFTER version $v (a" +
-                " later retained manifest records layout constants this" +
-                " one lacks) - the live bands_meta may not describe the" +
-                " pinned band rows, so this replay would silently drop" +
-                " candidates. Re-pin at a post-rebuild version or" +
-                " restore the pre-rebuild index from archive")
-            bandsMeta(spark, path, storeBuckets)
-        }
-      case None => bandsMeta(spark, path, storeBuckets)
-    }
-
-  /** Current doc-pruned band rows for `docIds` — reads the docs'
-    * POST-merge signatures through the store's doc-bucket pruning. */
+  /** The docs' CURRENT band rows (id, band, bsig, bb_bucket) under
+    * `layout`: their post-merge signatures read from their doc buckets
+    * `db` (the docs `ids`, column `id`), checkpointed — |docs|·bands
+    * rows, which every caller reads more than once. */
   private def bandRowsForDocs(spark: SparkSession, path: String,
-                              docIds: DataFrame,
-                              idCol: String): DataFrame = {
-    val (sigs, buckets) = readSignatureStore(spark, path)
-    val (bands, r, idxBuckets) = bandsMeta(spark, path, buckets)
-    val ids = docIds.select(col(idCol)).distinct()
-    val db = ids
-      .select(pmod(col(idCol), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    val docSigs = sigs.filter(col("d_bucket").isin(db: _*))
-      .join(ids, Seq(idCol), "left_semi")
+                              ids: DataFrame, idCol: String, db: Seq[Int],
+                              layout: (Int, Int, Int)): DataFrame = {
+    val (bands, r, idxBuckets) = layout
+    val docSigs = StoreSwap.readDir(spark, path, "data", "d_bucket")
+      .filter(col("d_bucket").isin(db: _*))
+      .join(ids.select(col("id").as(idCol)), Seq(idCol), "left_semi")
       .select(col(idCol), col("k"), col("mh"))
-    bandRows(docSigs, idCol, bands, r, idxBuckets)
+    bandRows(docSigs, idCol, bands, r, idxBuckets).localCheckpoint(true)
+  }
+
+  /** The band-index merge — the one law of [[mergeIntoBandIndex]] and
+    * [[ingestBatchIntoStore]]: the docs' current band `rows` are
+    * union-distinct-merged into the index's touched `bb_bucket`s and,
+    * with the inventory present, into the inventory's doc buckets `db`
+    * (after the merge the docs own old ∪ fresh rows in the index —
+    * recorded exactly so, so a later repair or forget finds the old rows
+    * without a corpus scan). Both rewrites join the open commit; each
+    * partitions on its bucket before the distinct, so distinct and
+    * staged write share one exchange. Returns the touched index
+    * buckets. */
+  private def rewriteBandIndex(spark: SparkSession, path: String,
+                               buckets: Int, db: Seq[Int],
+                               rows: DataFrame): Seq[Int] = {
+    val touched = distinctInts(rows.select(col("bb_bucket")))
+    if (touched.nonEmpty) {
+      val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
+        .filter(col("bb_bucket").isin(touched: _*))
+        .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
+      StoreSwap.stagedRewrite(spark, path, "bb_bucket", touched,
+        slice.unionByName(rows).repartition(col("bb_bucket")).distinct(),
+        Seq(col("band"), col("bsig"), col("id")), "bands")
+      if (bandInvExists(spark, path)) {
+        val invSlice = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+          .filter(col("d_bucket").isin(db: _*))
+          .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
+        StoreSwap.stagedRewrite(spark, path, "d_bucket", db,
+          invSlice.unionByName(rows)
+            .withColumn("d_bucket", docBucket(col("id"), buckets))
+            .repartition(col("d_bucket")).distinct(),
+          Seq(col("id"), col("band")), "bands_inv")
+      }
+    }
+    touched
   }
 
   /** Absorb docs into the band index AFTER their
@@ -1231,37 +1325,12 @@ object Dedup {
   def mergeIntoBandIndex(spark: SparkSession, path: String,
                          docIds: DataFrame,
                          idCol: String): Seq[Int] = storeTxn(spark, path) {
-    val rows = bandRowsForDocs(spark, path, docIds, idCol)
-      .localCheckpoint(true) // |docs|·bands rows, referenced twice
-    val touched = rows.select(col("bb_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return Seq.empty
-    val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
-      .filter(col("bb_bucket").isin(touched: _*))
-    val merged = slice.select(col("id"), col("band"), col("bsig"),
-        col("bb_bucket"))
-      .unionByName(rows).distinct()
-    StoreSwap.stagedRewrite(spark, path, "bb_bucket", touched, merged,
-      Seq(col("band"), col("bsig"), col("id")), "bands")
-    // inventory upkeep: after the merge the docs own old ∪ fresh rows
-    // in the index — record exactly that (same commit), so a later
-    // repair or forget can find the old rows without a corpus scan
-    if (bandInvExists(spark, path)) {
-      val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-      val ids = docIds.select(col(idCol).as("id")).distinct()
-      val db = ids
-        .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      val invSlice = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
-        .filter(col("d_bucket").isin(db: _*))
-        .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
-      val invMerged = invSlice.unionByName(rows).distinct()
-        .withColumn("d_bucket",
-          pmod(col("id"), lit(buckets.toLong)).cast("int"))
-      StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invMerged,
-        Seq(col("id"), col("band")), "bands_inv")
-    }
-    touched
+    val buckets = StoreSwap.bucketCount(spark, path)
+    val ids = docIds.select(col(idCol).as("id")).distinct()
+    val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
+    rewriteBandIndex(spark, path, buckets, db,
+      bandRowsForDocs(spark, path, ids, idCol, db,
+        bandLayout(spark, path, buckets)))
   }
 
   /** Drop docs from the band index. With the band inventory present,
@@ -1275,15 +1344,15 @@ object Dedup {
                           docIds: DataFrame,
                           idCol: String): Long = storeTxn(spark, path) {
     val hasInv = bandInvExists(spark, path)
-    val rows =
-      if (hasInv) {
-        val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-        invRowsForDocs(spark, path, docIds, idCol, buckets)
-      } else bandRowsForDocs(spark, path, docIds, idCol)
-    val touched = rows.select(col("bb_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (touched.isEmpty) return 0L
+    val buckets = StoreSwap.bucketCount(spark, path)
     val ids = docIds.select(col(idCol).as("id")).distinct()
+    val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
+    val rows =
+      if (hasInv) invRowsForDocs(spark, path, ids, db)
+      else bandRowsForDocs(spark, path, ids, idCol, db,
+        bandLayout(spark, path, buckets))
+    val touched = distinctInts(rows.select(col("bb_bucket")))
+    if (touched.isEmpty) return 0L
     val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
     val kept = slice.join(ids, Seq("id"), "left_anti")
@@ -1293,17 +1362,11 @@ object Dedup {
       Seq(col("band"), col("bsig"), col("id")), "bands")
     // drop the docs' inventory rows too, in the same commit
     if (hasInv) {
-      val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-      val db = ids
-        .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq.sorted
-      if (db.nonEmpty) {
-        val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
-          .filter(col("d_bucket").isin(db: _*))
-          .join(ids, Seq("id"), "left_anti")
-        StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invKept,
-          Seq(col("id"), col("band")), "bands_inv")
-      }
+      val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+        .filter(col("d_bucket").isin(db: _*))
+        .join(ids, Seq("id"), "left_anti")
+      StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invKept,
+        Seq(col("id"), col("band")), "bands_inv")
     }
     removed
   }
@@ -1325,16 +1388,17 @@ object Dedup {
                              idCol: String): Long = storeTxn(spark, path) {
     require(bandInvExists(spark, path),
       s"$path has no band inventory — rebuild with writeBandIndex first")
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    val fresh = bandRowsForDocs(spark, path, docIds, idCol)
-      .localCheckpoint(true) // |docs|·bands rows, referenced three times
-    val stale = invRowsForDocs(spark, path, docIds, idCol, buckets)
+    val buckets = StoreSwap.bucketCount(spark, path)
+    val ids = docIds.select(col(idCol).as("id")).distinct()
+    val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
+    val fresh = bandRowsForDocs(spark, path, ids, idCol, db,
+      bandLayout(spark, path, buckets))
+    val stale = invRowsForDocs(spark, path, ids, db)
       .join(fresh.select(col("id"), col("band"), col("bsig")),
         Seq("id", "band", "bsig"), "left_anti")
       .localCheckpoint(true)
-    val touched = stale.select(col("bb_bucket"))
-      .unionByName(fresh.select(col("bb_bucket")))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    val touched = distinctInts(stale.select(col("bb_bucket"))
+      .unionByName(fresh.select(col("bb_bucket"))))
     if (touched.isEmpty) return 0L
     val nStale = stale.count()
     val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
@@ -1348,17 +1412,12 @@ object Dedup {
     StoreSwap.stagedRewrite(spark, path, "bb_bucket", touched, merged,
       Seq(col("band"), col("bsig"), col("id")), "bands")
     // inventory := exactly the fresh rows for these docs
-    val ids = docIds.select(col(idCol).as("id")).distinct()
-    val db = ids
-      .select(pmod(col("id"), lit(buckets.toLong)).cast("int").as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
     val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
       .join(ids, Seq("id"), "left_anti")
     val invNew = invKept.unionByName(fresh)
-      .withColumn("d_bucket",
-        pmod(col("id"), lit(buckets.toLong)).cast("int"))
+      .withColumn("d_bucket", docBucket(col("id"), buckets))
     StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invNew,
       Seq(col("id"), col("band")), "bands_inv")
     nStale
@@ -1391,7 +1450,6 @@ object Dedup {
                     threshold: Double = 0.5,
                     asOf: Option[Int] = None): DataFrame = {
     unifySignatureStore(spark, path)
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
     // resolved first: a version outside the retained window fails here
     // with the retention/cutover message
     val sidecarPresent = asOf match {
@@ -1399,13 +1457,13 @@ object Dedup {
         StoreSwap.snapshotEntriesAt(spark, path, "shingles", v).nonEmpty
       case None => shingleSidecarExists(spark, path)
     }
-    // layout constants resolve from the PINNED manifest on historical
-    // replays (a post-pin rebuild may have changed them); live from the
-    // bands_meta sidecar
-    val (bands, r, idxBuckets) = bandsMetaAt(spark, path, buckets, asOf)
+    // every layout constant resolves from the manifest the read pins:
+    // the PINNED one on historical replays (a post-pin rebuild may have
+    // changed them), the current one live
+    val buckets = StoreSwap.bucketCount(spark, path, asOf)
+    val (bands, r, idxBuckets) = bandLayout(spark, path, buckets, asOf)
     require(bands * r == numHashes, "band geometry must match the store")
-    // version-pinned store reads for the historical replay (meta stays
-    // live - store bucket count fixed at build time)
+    // version-pinned store reads for the historical replay
     def storeDir(dataDir: String, partCol: String): DataFrame = asOf match {
       case Some(v) =>
         StoreSwap.readVersionedAt(spark, path, dataDir, partCol, v)
@@ -1416,24 +1474,27 @@ object Dedup {
         " judgment has no text fallback (the corpus text of that moment" +
         " is gone); only sidecar-carrying versions replay")
     if (sidecarPresent) {
-      val sn = spark.read.parquet(path + "/shingles_meta").head.getInt(0)
+      val sn = shingleWidth(spark, path, asOf)
       require(sn == n,
         s"shingle width n=$n must match the sidecar's (n=$sn)")
     }
-    // DELTA-SIDE RELATIONS, computed ONCE for every chunk: the
-    // signatures/band rows and the distinct shingle hashes are the
-    // delta's whole footprint - materializing them here means a chunk
+    // THE DELTA, read ONCE for every chunk into one row per doc with a
+    // signature (a doc without shingles can collide with nothing): its
+    // distinct shingle set and signature ([[docShingleSets]], the
+    // ingest's form) - the delta's whole footprint; its band rows and
+    // shingle sets are projections of this one checkpoint, so a chunk
     // costs only its own store reads and joins, not a re-derivation of
     // the delta (the round-13 probe measured per-chunk re-derivation at
     // ~4 s fixed cost x chunk count before this hoist)
-    val dSigs = minhashSignatures(delta, idCol, textCol, n, numHashes, seed)
-    val dRowsAll = bandRows(dSigs, idCol, bands, r, idxBuckets)
-      .select(col("id").as("d_id"), col("band"), col("bsig"),
-        col("bb_bucket"))
-      .localCheckpoint(true) // bounded: |delta| x bands rows
-    val dShAll = shinglePolyHashes(delta, idCol, textCol, n)
+    val dDocs = docShingleSets(delta, idCol, textCol, buckets, Seq(n))
+      .withColumn("sig", signatureOf(col(s"xs$n"), numHashes, seed))
+      .filter(col("sig").isNotNull)
+      .select(col("id").as("d_id"), col(s"xs$n").as("d_xs"), col("sig"))
+      .localCheckpoint(true) // bounded: |delta| rows
+    val dRowsAll = bandRowsOfSigs(
+        dDocs.select(col("d_id").as("id"), col("sig")), bands, r, idxBuckets)
       .withColumnRenamed("id", "d_id")
-      .localCheckpoint(true) // bounded: the delta's distinct shingles
+    val dSetsAll = dDocs.select(col("d_id"), col("d_xs"))
     // sidecar-less fallback: the standing corpus' shingle hashes,
     // derived from text - corpus-footprint, shared by every chunk (lazy;
     // each chunk semi-joins its own candidates against it)
@@ -1452,7 +1513,7 @@ object Dedup {
       .getOption("graft.lsh.maxBroadcastMb")
       .flatMap(v => scala.util.Try(v.toDouble).toOption)
       .getOrElse(64.0) * 1024 * 1024)
-    val nDelta = dRowsAll.select(col("d_id")).distinct().count()
+    val nDelta = dDocs.rdd.count()
     val bcChunks = math.max(1L,
       math.ceil(nDelta.toDouble * bands * 112L / targetBytes).toLong).toInt
     // PUSHDOWN-SIZED sub-chunking, the second chunking driver: each
@@ -1478,14 +1539,14 @@ object Dedup {
     val chunks =
       if (pdChunks > bcChunks && pdChunks <= maxJudgeChunks) pdChunks
       else bcChunks
-    def slice(dRows: DataFrame, dSh: DataFrame): DataFrame =
-      lshJudgeSlice(spark, path, dRows, dSh, standingSh, sidecarPresent,
+    def slice(dRows: DataFrame, dSets: DataFrame): DataFrame =
+      lshJudgeSlice(spark, path, dRows, dSets, standingSh, sidecarPresent,
         buckets, threshold, storeDir)
-    if (chunks == 1) slice(dRowsAll, dShAll)
+    if (chunks == 1) slice(dRowsAll, dSetsAll)
     else
       (0 until chunks).map { i =>
         val in = pmod(xxhash64(col("d_id")), lit(chunks.toLong)) === i
-        slice(dRowsAll.filter(in), dShAll.filter(in))
+        slice(dRowsAll.filter(in), dSetsAll.filter(in))
           .localCheckpoint(true) // run now; free this chunk's broadcast
       }.reduce(_ unionByName _)
   }
@@ -1508,16 +1569,19 @@ object Dedup {
       asOf = Some(version))
 
   /** One bounded-broadcast slice of the store judgment, over the
-    * PRE-COMPUTED delta relations (band rows + distinct shingle
-    * hashes) - a chunk pays only its own store reads and joins. */
+    * PRE-COMPUTED delta relations (band rows + per-doc shingle sets) - a
+    * chunk pays only its own store reads and joins. */
   private def lshJudgeSlice(spark: SparkSession, path: String,
-                            dRows: DataFrame, dSh: DataFrame,
+                            dRows: DataFrame, dSets: DataFrame,
                             standingSh: => DataFrame,
                             sidecarPresent: Boolean, buckets: Int,
                             threshold: Double,
                             storeDir: (String, String) => DataFrame): DataFrame = {
-    val touched = dRows.select(col("bb_bucket")).distinct()
-      .collect().map(_.getInt(0)).toSeq
+    // the delta's index buckets and band signatures, in one job: the
+    // chunk's band rows are broadcast below, so they fit on the driver
+    val dBands = dRows.select(col("bb_bucket"), col("bsig")).collect()
+    val touched = dBands.map(_.getInt(0)).distinct.sorted.toSeq
+    val dSigVals = dBands.map(_.getLong(1)).distinct.toSeq
     // same two pruning rungs as the sidecar read below: bucket dirs
     // always, plus the delta's band-signature list pushed into the
     // scan when it fits [[PushdownCap]] - the index files are
@@ -1531,25 +1595,38 @@ object Dedup {
     // graft.lsh.maxJudgeChunks amortize the unpruned scan instead.
     val idx0 = storeDir("bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
-    val dSigVals = dRows.select(col("bsig")).distinct()
-      .collect().map(_.getLong(0)).toSeq
     val idx = if (dSigVals.length <= PushdownCap)
       idx0.filter(col("bsig").isin(dSigVals: _*)) else idx0
     val cand = idx.join(broadcast(dRows), Seq("band", "bsig"))
       .filter(col("id") =!= col("d_id"))
       .select(col("id").as("s_id"), col("d_id")).distinct()
-      .localCheckpoint(true) // candidate pairs - read 3-4x below
+      .localCheckpoint(true) // candidate pairs - read 2-3x below
+    // the candidate DOCS: their doc buckets and, while they fit
+    // [[PushdownCap]], their ids - one job, a per-partition distinct
+    // merged on the driver
+    val (db, candIds) = {
+      val parts = cand.select(col("s_id")).rdd.mapPartitions { rows =>
+        val ids = scala.collection.mutable.Set.empty[Long]
+        val bs = scala.collection.mutable.Set.empty[Int]
+        rows.foreach { row =>
+          val id = row.getLong(0)
+          bs += Math.floorMod(id, buckets.toLong).toInt
+          if (ids.size <= PushdownCap) ids += id
+        }
+        Iterator((bs.toSet, ids.toSet))
+      }.collect()
+      val ids = parts.flatMap(_._2).distinct
+      (parts.flatMap(_._1).distinct.sorted.toSeq,
+        if (ids.length <= PushdownCap) Some(ids.toSeq) else None)
+    }
+    lazy val sIds = cand.select(col("s_id")).distinct()
     // exact verification at the polyHash level (oracle-exact even under
-    // 31-bit hash collisions - both engines count the same x values)
-    val sIds = cand.select(col("s_id")).distinct()
-      .localCheckpoint(true) // candidate DOCS - bounded, read 2-3x below
+    // 31-bit hash collisions - both engines count the same x values):
+    // each candidate doc's distinct shingle set, one row per doc
     val sSh = if (sidecarPresent) {
       // DOC-FOOTPRINT verification: candidate docs' hash sets from their
-      // own sidecar buckets - the standing corpus text never opens
-      val db = sIds
-        .select(pmod(col("s_id"), lit(buckets.toLong)).cast("int").as("b"))
-        .distinct().collect().map(_.getInt(0)).toSeq
-      // two pruning rungs: directory-level (the candidates' d_buckets)
+      // own sidecar buckets - the standing corpus text never opens.
+      // Two pruning rungs: directory-level (the candidates' d_buckets)
       // always; and - when the candidate set is bounded - the ids
       // PUSHED DOWN into the parquet scan itself, where the id-sorted
       // files' page stats skip non-candidate pages (dir pruning alone
@@ -1562,34 +1639,37 @@ object Dedup {
       // spark.sql.parquet.pushdown.inFilterThreshold (default 10) to
       // the cap so the IN list actually reaches the parquet reader as
       // OR-of-equals rather than a min/max range.
-      val ids = sIds.limit(PushdownCap + 1)
-        .collect().map(_.getLong(0)).toSeq
       val base = storeDir("shingles", "d_bucket")
         .filter(col("d_bucket").isin(db: _*))
-      val rows = (if (ids.length <= PushdownCap)
-        base.filter(col("id").isin(ids: _*))
-      else base.join(sIds.withColumnRenamed("s_id", "id"),
-        Seq("id"), "left_semi"))
-        .select(col("id").as("s_id"), col("x"))
-      // an incomplete sidecar must fail, not silently drop verdicts
-      // (the inner join on per-doc sizes would). Candidate-bounded job.
-      val nMissing = sIds
-        .join(rows.select(col("s_id")).distinct(), Seq("s_id"), "left_anti")
-        .count()
+      (candIds match {
+        case Some(ids) => base.filter(col("id").isin(ids: _*))
+        case None => base.join(sIds.withColumnRenamed("s_id", "id"),
+          Seq("id"), "left_semi")
+      }).select(col("id").as("s_id"), col("x"))
+    } else standingSh.join(sIds, Seq("s_id"), "left_semi")
+    val sSets = sSh.groupBy(col("s_id")).agg(collect_list(col("x")).as("s_xs"))
+      .localCheckpoint(true) // candidate docs' sets - read twice
+    // an incomplete sidecar must fail, not silently drop verdicts (the
+    // inner join below would). Candidate-bounded job.
+    if (sidecarPresent) {
+      val nMissing = candIds match {
+        case Some(ids) => ids.length - sSets.rdd.count()
+        case None => sIds.join(sSets.select(col("s_id")), Seq("s_id"),
+          "left_anti").count()
+      }
       if (nMissing > 0) sys.error(
         s"$nMissing candidate doc(s) have no shingle sidecar rows under" +
           s" $path/shingles - the sidecar is incomplete; merge the" +
           " missing docs with mergeShinglesIntoStore (or rebuild with" +
           " writeShingleSidecar) before judging")
-      rows
-    } else standingSh.join(sIds, Seq("s_id"), "left_semi")
-    val sizesD = dSh.groupBy(col("d_id")).agg(count(lit(1)).as("n_d"))
-    val sizesS = sSh.groupBy(col("s_id")).agg(count(lit(1)).as("n_s"))
-    cand.join(sSh, "s_id").join(dSh, Seq("d_id", "x"))
-      .groupBy(col("s_id"), col("d_id")).agg(count(lit(1)).as("common"))
-      .join(sizesS, "s_id").join(sizesD, "d_id")
-      .withColumn("jaccard", col("common").cast("double") /
-        (col("n_s") + col("n_d") - col("common")).cast("double"))
+    }
+    // |S ∩ D| of two distinct sets, and the sets' sizes: the pair's
+    // shared-shingle count and per-doc counts
+    val common = size(array_intersect(col("s_xs"), col("d_xs")))
+    cand.join(sSets, "s_id").join(broadcast(dSets), "d_id")
+      .filter(common > 0)
+      .withColumn("jaccard", common.cast("double") /
+        (size(col("s_xs")) + size(col("d_xs")) - common).cast("double"))
       .filter(col("jaccard") >= threshold)
       .select(col("s_id").as("id_a"), col("d_id").as("id_b"),
         col("jaccard"))

@@ -460,7 +460,9 @@ object ScaleQueries {
     Dedup.readSignatureStore(spark, merged)._1
       .repartition(col("d_bucket"))
       .write.partitionBy("d_bucket").parquet(store + "/data")
-    spark.read.parquet(merged + "/meta").write.parquet(store + "/meta")
+    spark.range(1)
+      .select(lit(StoreSwap.bucketCount(spark, merged)).as("buckets"))
+      .write.parquet(store + "/meta") // the legacy layout's bucket count
     // the crashed mutation's committed-but-unapplied state
     Dedup.minhashSignatures(
         docs.filter(col("doc_id") % 11 === 5 &&

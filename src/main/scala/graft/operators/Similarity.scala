@@ -789,8 +789,10 @@ object Similarity {
     * rewriting old ones, unlike range bucketing whose boundaries move)
     * and cluster-sorts within each, so a delta batch touching t
     * clusters reads at most min(t, buckets) directories and skips
-    * row groups inside them via min/max stats. The bucket count is
-    * recorded in a `meta` sidecar so readers derive the same hash —
+    * row groups inside them via min/max stats. The bucket count is a
+    * layout constant of the store manifest ([[StoreSwap.bucketCount]]),
+    * recorded in the same commit as the data, so readers derive the
+    * same hash —
     * at 100 TB, buckets ≈ corpus size / (a few GB) keeps partition
     * dirs coarse enough for the driver and fine enough to prune.
     * `assigned` must carry (idCol, vecCol, clusterCol, nrmCol) —
@@ -804,12 +806,13 @@ object Similarity {
                          buckets: Int = 64): Unit = {
     require(buckets >= 1, s"need buckets >= 1, got $buckets")
     val spark = assigned.sparkSession
-    StoreSwap.overwriteDir(spark, path, "data", "c_bucket",
-      assigned.withColumn("c_bucket",
-        pmod(col(clusterCol), lit(buckets.toLong)).cast("int")),
-      Seq(col(clusterCol)))
-    spark.range(1).select(lit(buckets).as("buckets"))
-      .write.mode("overwrite").parquet(path + "/meta")
+    StoreSwap.transact(spark, path) {
+      StoreSwap.overwriteDir(spark, path, "data", "c_bucket",
+        assigned.withColumn("c_bucket",
+          pmod(col(clusterCol), lit(buckets.toLong)).cast("int")),
+        Seq(col(clusterCol)))
+      StoreSwap.putBucketCount(spark, path, buckets)
+    }
   }
 
   /** The full standing store plus its recorded bucket count. The
@@ -819,9 +822,8 @@ object Similarity {
     * paths are schema-equal. */
   def readStandingStore(spark: SparkSession, path: String): (DataFrame, Int) = {
     StoreSwap.open(spark, path)
-    val buckets = spark.read.parquet(path + "/meta")
-      .head.getInt(0)
-    (StoreSwap.readDir(spark, path, "data", "c_bucket"), buckets)
+    (StoreSwap.readDir(spark, path, "data", "c_bucket"),
+      StoreSwap.bucketCount(spark, path))
   }
 
   /** TIME-TRAVEL read of a standing store: the data AS OF
@@ -830,15 +832,14 @@ object Similarity {
     * mutating underneath. Only versions inside the GC grace window
     * ([[standingStoreVersions]]; widen with `graft.store.snapshotKeep`
     * BEFORE the mutations) are readable; a GC'd version fails fast.
-    * The bucket count is layout state shared by every version (appends
-    * and rewrites derive it from `meta`, never change it). Schema-equal
+    * The bucket count is the one recorded at `version`. Schema-equal
     * to [[readStandingStore]]: the `c_bucket` partition column is kept
     * in both. */
   def readStandingStoreAt(spark: SparkSession, path: String,
                           version: Int): (DataFrame, Int) = {
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
-    (StoreSwap.readVersionedAt(spark, path, "data", "c_bucket", version),
-      buckets)
+    val data = StoreSwap.readVersionedAt(spark, path, "data", "c_bucket",
+      version)
+    (data, StoreSwap.bucketCount(spark, path, Some(version)))
   }
 
   /** Retained (readable) manifest versions of a standing store,
@@ -927,7 +928,7 @@ object Similarity {
         // as-of judgment scaled with the STORE (SemanticReplayProbe
         // first cut: 2.4×/decade vs live 1.07×), exactly the
         // store-size coupling this operator exists to avoid
-        val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+        val buckets = StoreSwap.bucketCount(spark, path, Some(version))
         val touched = d.select(col("__cluster")).distinct()
           .collect().map(_.getLong(0)).toSeq
         val tb = touched
@@ -959,7 +960,7 @@ object Similarity {
 
   /** APPEND to the partitioned standing store — the ingest side of the
     * lifecycle: a judged batch's keepers land in their clusters'
-    * buckets (hash derived from the recorded `meta`, so appends and the
+    * buckets (hash derived from the recorded bucket count, so appends and the
     * original write agree on layout forever — the stability property
     * the mod-bucket choice buys). Appends never rewrite existing files;
     * fragmentation from many small batches is the compaction job's
@@ -976,7 +977,7 @@ object Similarity {
                             batchId: Option[Long] = None): Unit = {
     val spark = assigned.sparkSession
     StoreSwap.transact(spark, path) {
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    val buckets = StoreSwap.bucketCount(spark, path)
     StoreSwap.appendDir(spark, path, "data", "c_bucket",
       assigned.withColumn("c_bucket",
         pmod(col(clusterCol), lit(buckets.toLong)).cast("int")),
@@ -1504,7 +1505,7 @@ object Similarity {
   def appendPqCodes(spark: SparkSession, path: String, delta: DataFrame,
                     idCol: String, vecCol: String, m: Int,
                     dsub: Int): Unit = StoreSwap.transact(spark, path) {
-    val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+    val buckets = StoreSwap.bucketCount(spark, path)
     // a residual/rotated sidecar's deltas must be encoded the same way
     // — the flavor travels with the sidecar, not the caller. Pin the
     // codebook and flavor to ONE version.
@@ -1665,7 +1666,7 @@ object Similarity {
                          opq: Option[Seq[Seq[Double]]] = None,
                          pin: Option[Int] = None,
                          broadcastTables: Boolean = true): DataFrame = {
-    val buckets = spark.read.parquet(storePath + "/meta").head.getInt(0)
+    val buckets = StoreSwap.bucketCount(spark, storePath, pin)
     val probed = probesM.select(col("qc")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val tb = probed.map(c => (((c % buckets) + buckets) % buckets).toInt)
@@ -2021,7 +2022,7 @@ object Similarity {
     // path (codes absent), never wrongly served — re-run the refresh
     val codesToRefresh =
       if (!StoreSwap.dirExists(spark, path, "pq_codes")) reassigned else {
-      val buckets = spark.read.parquet(path + "/meta").head.getInt(0)
+      val buckets = StoreSwap.bucketCount(spark, path)
       val fb = freshIds
         .map(c => (((c % buckets) + buckets) % buckets).toInt).distinct
       val present = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")

@@ -2,7 +2,12 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import scala.jdk.CollectionConverters._
 
 /** The ONE commit protocol of the partitioned standing stores
   * ([[Similarity.writeStandingStore]]'s embedding store and
@@ -17,6 +22,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * (the generations holding that bucket's files — a set, so appends
   * stay O(delta)), plus reserved `#` entries: the per-dataDir
   * exactly-once batch ledgers and versioned model/layout constants.
+  * Layout constants (a store's bucket count, its shingle sidecar's
+  * width, its band layout) live ONLY there: [[layoutConstant]] resolves
+  * them from the manifest a reader already holds, with no Spark job.
   *
   * '''Commit.''' Every mutation — a bucket rewrite, an append, a full
   * overwrite, a ledger ack — runs inside [[transact]]: its rows are
@@ -48,7 +56,9 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * under the writer lease: pending legacy swaps roll forward, partition
   * dirs are renamed in as generation 0, per-dataDir manifest state is
   * adopted, and the codebook / PQ triple are recommitted as versioned
-  * dataDirs, all published by one manifest rename.
+  * dataDirs, all published by one manifest rename. The layout constants
+  * the old layouts kept in one-row parquet sidecars (`meta`,
+  * `shingles_meta`, `bands_meta`) are seeded into that manifest.
   *
   * Directory renames are atomic on HDFS-semantics filesystems (HDFS,
   * local, ABFS); on raw S3 they are copy+delete, where a production
@@ -219,12 +229,11 @@ object StoreSwap {
     * migrates again (a completed live→g0 rename is adopted, not lost).
     * The first manifest is numbered ABOVE every per-dataDir version,
     * so an old version number fails fast ([[readVersionedAt]]'s
-    * cutover message) instead of aliasing a later snapshot.
-    * `seedMeta` (evaluated only when migrating a legacy layout) pins
-    * model/layout constants ([[putStoreMeta]]) into that manifest, so
-    * the cutover snapshot is historically replayable. */
-  def open(spark: SparkSession, path: String,
-           seedMeta: => Map[String, Seq[Long]] = Map.empty): Unit = {
+    * cutover message) instead of aliasing a later snapshot. The layout
+    * constants of the legacy sidecars ([[LegacySidecars]]) are pinned
+    * into that manifest, so the cutover snapshot is historically
+    * replayable. */
+  def open(spark: SparkSession, path: String): Unit = {
     if (activeTxn.get.contains(path)) return
     val marker = openMarker(path)
     val fs = fsOf(spark, marker)
@@ -235,12 +244,12 @@ object StoreSwap {
         " after it releases instead of racing its roll-forward")
     }
     withLease(spark, path) {
-      if (!fs.exists(marker)) migrate(spark, fs, path, seedMeta)
+      if (!fs.exists(marker)) migrate(spark, fs, path)
     }
   }
 
-  private def migrate(spark: SparkSession, fs: FileSystem, path: String,
-                      seedMeta: => Map[String, Seq[Long]]): Unit = {
+  private def migrate(spark: SparkSession, fs: FileSystem,
+                      path: String): Unit = {
     val keep = snapshotKeep(spark)
     rollForwardSwap(fs, path)
     rollForwardPq(fs, path)
@@ -252,7 +261,9 @@ object StoreSwap {
         val (startV, entries) = adoptDataDirs(fs, path)
         val t = new Txn(startV - 1,
           if (entries.isEmpty) entries
-          else entries ++ seedMeta.map { case (n, vs) => storeMetaKey(n) -> vs })
+          else entries ++ LegacySidecars.keys.flatMap(n =>
+            legacyConstant(spark, fs, path, n)
+              .map(v => storeMetaKey(n) -> Seq(v))))
         t.dirty = entries.nonEmpty
         t
     }
@@ -551,7 +562,10 @@ object StoreSwap {
   /** Stage `df` partitioned by `partCol`, rename the staged buckets in
     * as a fresh generation of `dataDir`, and fold `remap(entries,
     * stagedEntries)` into the open transaction. Returns the staged row
-    * count (metadata-only). */
+    * count, summed from the staged files' parquet footers on the driver
+    * (no Spark job). A `df` already hash-partitioned on `partCol` (a
+    * merge that repartitioned before aggregating) keeps that one
+    * exchange: the planner drops the repartition below as redundant. */
   private def stageAndCommit(spark: SparkSession, path: String,
                              dataDir: String, partCol: String,
                              df: DataFrame, sortCols: Seq[Column])
@@ -566,10 +580,9 @@ object StoreSwap {
     val buckets = fs.listStatus(stg)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
       .map(_.getPath.getName).toSeq
-    // a write that stages no bucket at all (every touched bucket
-    // emptied) has no schema to read back — the answer is simply 0
-    val kept = if (buckets.isEmpty) 0L
-      else spark.read.parquet(stg.toString).count()
+    val kept = parquetFiles(fs, stg)
+      .map(f => footer(spark, f).getBlocks.asScala.map(_.getRowCount).sum)
+      .sum
     val t = activeTxn.get()(path)
     val staged =
       if (buckets.isEmpty) Map.empty[String, Seq[Long]]
@@ -680,11 +693,11 @@ object StoreSwap {
       .map(_.toSet)
       .getOrElse(Set.empty)
 
-  /** The `#meta:<name>` constants at a pinned manifest `version`, or
+  /** The raw `#meta:<name>` record at a pinned manifest `version`, or
     * the current view when `version` is None. None when the manifest
-    * predates the first [[putStoreMeta]] of this name — the caller
-    * decides whether a live-sidecar fallback is safe (see
-    * [[storeMetaRecordedEver]]). */
+    * predates the first [[putStoreMeta]] of this name. Readers of
+    * layout constants use [[layoutConstant]], which also covers stores
+    * written before the constants were recorded. */
   def storeMetaAt(spark: SparkSession, path: String, name: String,
                   version: Option[Int] = None): Option[Seq[Long]] = {
     val key = storeMetaKey(name)
@@ -703,13 +716,89 @@ object StoreSwap {
     * later retained version HAS it proves the constants were
     * (re)recorded after the pin, so a live-sidecar fallback could
     * apply post-pin constants to pinned data. */
-  def storeMetaRecordedEver(spark: SparkSession, path: String,
-                            name: String): Boolean = {
+  private def storeMetaRecordedEver(spark: SparkSession, path: String,
+                                    name: String): Boolean = {
     val key = storeMetaKey(name)
     val fs = fsOf(spark, versionsDir(path))
     manifests(fs, path, StoreFamily)
       .exists { case (_, p) => readManifest(fs, p).contains(key) }
   }
+
+  /** THE resolver of a store's LAYOUT CONSTANTS — the bucket count
+    * (`buckets`), the shingle sidecar's width (`shingles.n`), the band
+    * layout (`bands.b`, `bands.r`, `bands.idx`): the `#meta:` entry of
+    * the current view, or of the pinned manifest `version`. The writer
+    * of a dataDir records its constants in the same commit as the data
+    * ([[putStoreMeta]]), so this is a manifest lookup and runs no Spark
+    * job. A store whose manifests never recorded `name` was written
+    * before the constants moved into the manifest: it falls back to
+    * the legacy sidecar ([[LegacySidecars]]). A PINNED manifest lacking
+    * the record while a later retained one has it fails fast — the
+    * constant was rewritten after the pin, and no sidecar can say what
+    * it was at `version`. None when the store has no such constant
+    * (e.g. no band index). */
+  def layoutConstant(spark: SparkSession, path: String, name: String,
+                     version: Option[Int] = None): Option[Long] = {
+    val entries = version match {
+      case Some(v) => retainedManifest(spark, path, name, v)
+      case None => view(spark, path).fold(Map.empty[String, Seq[Long]])(_._2)
+    }
+    entries.get(storeMetaKey(name)) match {
+      case Some(Seq(v)) => Some(v)
+      case Some(vs) =>
+        sys.error(s"$path: layout constant $name holds ${vs.size} values")
+      case None =>
+        version.foreach { v =>
+          require(!storeMetaRecordedEver(spark, path, name),
+            s"$path: `$name` was rebuilt AFTER version $v (a later" +
+              " retained manifest records the constant, this one lacks" +
+              " it) - the live value may not describe the pinned" +
+              " snapshot, and deriving with it would silently misread" +
+              " it. Re-pin at a post-rebuild version or restore the" +
+              " pre-rebuild store from archive")
+        }
+        legacyConstant(spark, fsOf(spark, new Path(path)), path, name)
+    }
+  }
+
+  /** The store's bucket count at `version`, or the current view. */
+  def bucketCount(spark: SparkSession, path: String,
+                  version: Option[Int] = None): Int =
+    layoutConstant(spark, path, BucketsKey, version).getOrElse(
+      sys.error(s"$path records no bucket count — not a store (write it" +
+        " with its store writer first)")).toInt
+
+  /** Record the store's bucket count — its writer's part of the commit
+    * that lays the data out in that many buckets. */
+  def putBucketCount(spark: SparkSession, path: String, buckets: Int): Unit =
+    putStoreMeta(spark, path, Map(BucketsKey -> Seq(buckets.toLong)))
+
+  private val BucketsKey = "buckets"
+
+  /** Where stores written before the layout constants moved into the
+    * manifest kept each one: a one-row parquet sidecar under the store
+    * path, and its column. Read only by the one-time migration
+    * ([[open]]) and by [[layoutConstant]]'s fallback. */
+  private val LegacySidecars: Map[String, (String, String)] = Map(
+    BucketsKey -> ("meta", "buckets"),
+    "shingles.n" -> ("shingles_meta", "n"),
+    "bands.b" -> ("bands_meta", "bands"),
+    "bands.r" -> ("bands_meta", "rows_per_band"),
+    // band indexes older than the layout knob have no idx_buckets
+    // column: their directories follow the store's bucket count
+    "bands.idx" -> ("bands_meta", "idx_buckets"))
+
+  private def legacyConstant(spark: SparkSession, fs: FileSystem,
+                             path: String, name: String): Option[Long] =
+    LegacySidecars.get(name).filter { case (file, _) =>
+      fs.exists(new Path(s"$path/$file"))
+    }.flatMap { case (file, column) =>
+      val df = spark.read.parquet(s"$path/$file")
+      if (df.columns.contains(column))
+        Some(df.select(col(column).cast("long")).head.getLong(0))
+      else if (name == "bands.idx") legacyConstant(spark, fs, path, BucketsKey)
+      else None
+    }
 
   /** The current (version, bucketDir → gens) view of `dataDir` — its
     * slice of the store manifest — or None when the dataDir holds no
@@ -753,7 +842,14 @@ object StoreSwap {
     * migration cutover). */
   private def manifestAt(spark: SparkSession, path: String,
                          dataDir: String,
-                         version: Int): Map[String, Seq[Long]] = {
+                         version: Int): Map[String, Seq[Long]] =
+    sliceDataDir(retainedManifest(spark, path, dataDir, version), dataDir)
+
+  /** Every entry of the retained manifest `version`; `what` names the
+    * dataDir or constant asked for in the error. */
+  private def retainedManifest(spark: SparkSession, path: String,
+                               what: String,
+                               version: Int): Map[String, Seq[Long]] = {
     val fs = fsOf(spark, versionsDir(path))
     val all = manifests(fs, path, StoreFamily)
     val p = all.collectFirst { case (v, mp) if v == version => mp }
@@ -769,10 +865,10 @@ object StoreSwap {
           else
             " (raise graft.store.snapshotKeep before mutating to widen" +
               " the time-travel window)"
-        sys.error(s"$path/$dataDir has no retained manifest" +
+        sys.error(s"$path/$what has no retained manifest" +
           s" v$version — retained: ${all.map(_._1).mkString(",")}" + hint)
       }
-    sliceDataDir(readManifest(fs, p), dataDir)
+    readManifest(fs, p)
   }
 
   /** TIME-TRAVEL read: the snapshot of `dataDir` AS OF committed
@@ -811,13 +907,66 @@ object StoreSwap {
       // entries at all has no schema to offer)
       val any = snapshotDirs(path, dataDir, entries, partCol, None)
       require(any.nonEmpty, s"$path/$dataDir snapshot is empty")
-      return spark.read.option("basePath", any.head._1)
-        .parquet(any.head._2.head).filter(lit(false))
+      return readGeneration(spark, any.head._1, any.head._2.take(1),
+        partCol).filter(lit(false))
     }
     groups.map { case (base, dirs) =>
-      spark.read.option("basePath", base).parquet(dirs: _*)
+      readGeneration(spark, base, dirs, partCol)
     }.reduce(_ unionByName _)
   }
+
+  /** One generation's bucket dirs as a DataFrame, planned with the
+    * schema of one of its files' footers: a parquet read without a
+    * schema runs a Spark job to infer one, and a store read is planned
+    * several times per commit. */
+  private def readGeneration(spark: SparkSession, base: String,
+                             dirs: Seq[String], partCol: String): DataFrame = {
+    val reader = spark.read.option("basePath", base)
+    footerSchema(spark, new Path(dirs.head), partCol)
+      .fold(reader)(reader.schema).parquet(dirs: _*)
+  }
+
+  // ---- parquet footers (read on the driver, no Spark job) ----------------
+
+  /** The parquet part files under `dir`, recursively. */
+  private def parquetFiles(fs: FileSystem, dir: Path): Seq[Path] = {
+    if (!fs.exists(dir)) return Seq.empty
+    val it = fs.listFiles(dir, true)
+    val files = Seq.newBuilder[Path]
+    while (it.hasNext) {
+      val p = it.next().getPath
+      val name = p.getName
+      if (name.endsWith(".parquet") && !name.startsWith(".") &&
+          !name.startsWith("_")) files += p
+    }
+    files.result()
+  }
+
+  private def footer(spark: SparkSession, file: Path): ParquetMetadata = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
+    try reader.getFooter finally reader.close()
+  }
+
+  /** The schema Spark infers for the bucket dir `dir` (`<partCol>=<b>`):
+    * the row schema Spark writes into every file's footer, plus the int
+    * partition column. None when that is not there to take (no file, a
+    * footer without Spark's schema, a non-int partition value) — the
+    * read then infers as usual. */
+  private def footerSchema(spark: SparkSession, dir: Path,
+                           partCol: String): Option[StructType] = {
+    if (dir.getName.stripPrefix(partCol + "=").toIntOption.isEmpty)
+      return None
+    parquetFiles(fsOf(spark, dir), dir).headOption
+      .flatMap(f => Option(footer(spark, f).getFileMetaData
+        .getKeyValueMetaData.get(SparkSchemaKey)))
+      .map(json => DataType.fromJson(json).asInstanceOf[StructType]
+        .add(partCol, IntegerType))
+  }
+
+  /** The footer key under which Spark's parquet writer records the row
+    * schema. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Resolved leaf-dir paths of a snapshot, grouped by generation (one
     * group per basePath for partition-column inference), restricted to

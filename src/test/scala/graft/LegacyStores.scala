@@ -10,7 +10,8 @@ import org.apache.spark.sql.functions._
   * here writes files directly, never through the commit protocol:
   *
   *  - live partition dirs `$path/<dataDir>/<partCol>=<b>/` (the legacy
-  *    in-place bucket-swap layout), with a `meta` sidecar;
+  *    in-place bucket-swap layout), with the one-row sidecars that held
+  *    layout constants (`meta`, `bands_meta`, `shingles_meta`);
   *  - a committed-but-unapplied `_pending_swap` (staged buckets under
   *    `.staging`, the manifest naming surviving and emptied buckets);
   *  - per-dataDir manifests `_v/<dataDir>.v<N>` over `<dataDir>.gens`
@@ -30,6 +31,34 @@ object LegacyStores {
   private def meta(spark: SparkSession, path: String, buckets: Int): Unit =
     spark.range(1).select(lit(buckets).as("buckets"))
       .write.mode("overwrite").parquet(path + "/meta")
+
+  /** The one-row sidecars a legacy text store kept its layout constants
+    * in, beside `meta`: `bands_meta` (bands, rows per band, index
+    * buckets) and `shingles_meta` (shingle width). */
+  def textStoreSidecars(spark: SparkSession, path: String, buckets: Int,
+                        bands: Int, rowsPerBand: Int, idxBuckets: Int,
+                        shingleN: Int): Unit = {
+    meta(spark, path, buckets)
+    spark.range(1).select(lit(bands).as("bands"),
+        lit(rowsPerBand).as("rows_per_band"),
+        lit(idxBuckets).as("idx_buckets"))
+      .write.mode("overwrite").parquet(path + "/bands_meta")
+    spark.range(1).select(lit(shingleN).as("n"))
+      .write.mode("overwrite").parquet(path + "/shingles_meta")
+  }
+
+  /** Strip the layout constants (`#meta:` entries) from every manifest
+    * of the store at `path` — the manifests of a store written before
+    * the constants moved out of the sidecars. */
+  def dropLayoutConstants(path: String): Unit =
+    new java.io.File(s"$path/_v").listFiles()
+      .filter(_.getName.startsWith("store.v")).foreach { f =>
+        val kept = java.nio.file.Files.readAllLines(f.toPath)
+          .toArray(Array.empty[String]).filterNot(_.startsWith("#meta:"))
+        java.nio.file.Files.writeString(f.toPath, kept.mkString("\n"))
+        // the local filesystem's checksum of the old content
+        new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
+      }
 
   /** A legacy signature store: `data/d_bucket=…` plus `meta`. */
   def signatureStore(sigs: DataFrame, path: String, idCol: String,

@@ -848,25 +848,10 @@ object PlanAudit {
     // graft.dedup.bandedAbove is unset — a corpus-scale count bought to
     // decide a statically-false branch)
     audit("q163") {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val counter = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet()
-          descs.add(Option(js.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .orElse(js.stageInfos.headOption.map(_.name))
-            .getOrElse("?"))
-        }
-      }
-      spark.sparkContext.addSparkListener(counter)
-      val p = try {
-        val s = plan("q163_dedup_cascade")
-        Thread.sleep(500) // listener delivery is async; a count() job
-                          // would have blocked plan() until long past this
-        s
-      } finally spark.sparkContext.removeSparkListener(counter)
+      // the listener bus is drained, not slept on: every job plan()
+      // started is counted
+      val (p, descs) = org.apache.spark.graft.Bus.jobsOf(spark.sparkContext)(
+        plan("q163_dedup_cascade"))
       check("q163 cascade stays equi-join across all three stages",
         !p.contains("CartesianProduct"))
       // parquet schema-inference jobs ("parquet at ...") read one
@@ -874,10 +859,9 @@ object PlanAudit {
       // NOT appear is a corpus-scale ACTION at plan time (the routing
       // count() this check was added for).
       check("q163 planning launches no corpus-scale job (routing count removed)",
-        descs.toArray(Array.empty[String])
-          .forall(_.startsWith("parquet at")),
-        s"${jobs.get} jobs during plan construction:" +
-          s" ${descs.toArray.mkString("; ")}")
+        descs.forall(_.startsWith("parquet at")),
+        s"${descs.size} jobs during plan construction:" +
+          s" ${descs.mkString("; ")}")
     }
 
     // q164 HITS: same Pregel discipline as q146 — partial-aggregated

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
   * (`Test/runMain graft.StoreReadProbe`): where do the seconds go when
   * a pruned read loses to a full scan? Times, against the sf10 tier:
   * full unpartitioned read, full partitioned read, pruned partitioned
-  * read (32 clusters), the touched-cluster collect, and the meta read.
+  * read (32 clusters), the touched-cluster collect, and the bucket-count
+  * read.
   */
 object StoreReadProbe {
   def main(args: Array[String]): Unit = {
@@ -21,7 +22,7 @@ object StoreReadProbe {
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    import graft.operators.Similarity
+    import graft.operators.{Similarity, StoreSwap}
 
     val dir = "/tmp/graft_sf10"
     if (!java.nio.file.Files.exists(
@@ -79,7 +80,7 @@ object StoreReadProbe {
       spark.read.parquet(plain)
         .filter(col("cluster").isin(touched: _*)).count()
     }
-    t("meta read")(spark.read.parquet(pstore + "/meta").count())
+    t("bucket count read")(StoreSwap.bucketCount(spark, pstore).toLong)
     spark.stop()
   }
 }

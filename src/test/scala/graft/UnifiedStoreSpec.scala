@@ -44,16 +44,19 @@ class UnifiedStoreSpec extends SparkSpec {
   private def versions(path: String) = StoreSwap.snapshotVersions(spark, path)
 
   /** Every dataDir of a built text store rewritten in the LEGACY layout
-    * under `path` (live partition dirs, sidecar metas copied). */
+    * under `path` (live partition dirs, its layout constants in sidecar
+    * metas). */
   private def legacyTextStore(built: String, path: String): Unit = {
     Seq("data" -> "d_bucket", "bands" -> "bb_bucket",
         "bands_inv" -> "d_bucket", "shingles" -> "d_bucket").foreach {
       case (d, pc) => LegacyStores.partitionDir(
         StoreSwap.readDir(spark, built, d, pc), path, d, pc)
     }
-    Seq("meta", "bands_meta", "shingles_meta").foreach { m =>
-      spark.read.parquet(s"$built/$m").write.parquet(s"$path/$m")
-    }
+    def constant(name: String) =
+      StoreSwap.layoutConstant(spark, built, name).get.toInt
+    LegacyStores.textStoreSidecars(spark, path, constant("buckets"),
+      constant("bands.b"), constant("bands.r"), constant("bands.idx"),
+      constant("shingles.n"))
   }
 
   private def embCorpus() = (0L until 40L).map(i =>
