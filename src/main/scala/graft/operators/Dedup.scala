@@ -1509,10 +1509,8 @@ object Dedup {
     // time) and prunes its own index buckets. Budget from
     // `graft.lsh.maxBroadcastMb` (default 64) at ~112 bytes per band
     // row.
-    val targetBytes = math.max(1.0, spark.conf
-      .getOption("graft.lsh.maxBroadcastMb")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption)
-      .getOrElse(64.0) * 1024 * 1024)
+    val targetBytes = math.max(1.0,
+      StoreSwap.positiveMb(spark, "graft.lsh.maxBroadcastMb") * 1024 * 1024)
     val nDelta = dDocs.rdd.count()
     val bcChunks = math.max(1L,
       math.ceil(nDelta.toDouble * bands * 112L / targetBytes).toLong).toInt

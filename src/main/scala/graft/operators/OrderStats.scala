@@ -268,4 +268,23 @@ object OrderStats {
     }
     cum.groupBy(g: _*).agg(aggs.head, aggs.tail: _*)
   }
+
+  /** The top-k kernel every "k best rows per group" operator runs: one
+    * `row_number` window partitioned by `by`, ordered by `order` (which
+    * must end in a unique tie-break for a deterministic result), and one
+    * `rank <= k` filter. Adds a long `rank` column (1-based) and keeps
+    * every input column. The filter sits directly on the window, so
+    * Spark plans a `WindowGroupLimit` below the window exchange and each
+    * task keeps at most k rows per group before the sort.
+    *
+    * @throws IllegalArgumentException when k < 1 */
+  private[operators] def topKPer(df: DataFrame, by: Column, k: Int)(
+      order: Column*): DataFrame = {
+    if (k < 1)
+      throw new IllegalArgumentException(s"topKPer: k must be >= 1, got $k")
+    df.withColumn("rank",
+        row_number().over(Window.partitionBy(by).orderBy(order: _*))
+          .cast("long"))
+      .filter(col("rank") <= k)
+  }
 }

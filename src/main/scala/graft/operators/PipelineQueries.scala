@@ -492,13 +492,10 @@ object PipelineQueries {
     * explode-heavy shape of vocabulary building at scale: one shuffle on
     * (lang, token) with partial counts, then a per-lang top-k window). */
   def q41Vocab(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(spark, dir)
       .select(col("lang"), explode(TextOps.tokens(col("text"))).as("token"))
       .groupBy(col("lang"), col("token")).agg(count(lit(1)).as("n"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("n").desc, col("token"))
-    toks.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
+    OrderStats.topKPer(toks, col("lang"), 5)(col("n").desc, col("token"))
       .orderBy(col("lang"), col("rank"))
   }
 

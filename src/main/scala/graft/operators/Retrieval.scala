@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import Lineage.CutOps
 
 /** Sparse lexical retrieval over the corpus: BM25-shaped scoring with a
@@ -70,10 +69,8 @@ object Retrieval {
         aggregate(sort_array(collect_list(col("s"))), lit(0.0),
           (acc, x) => acc + x).as("score"),
         count(lit(1)).cast("long").as("n_terms"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    OrderStats.topKPer(scored, col("query_id"), k)(
+        col("score").desc, col("doc_id"))
       .select(col("query_id"), col("doc_id"), col("score"),
         col("n_terms"), col("rank"))
   }

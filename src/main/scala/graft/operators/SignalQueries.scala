@@ -63,15 +63,11 @@ object SignalQueries {
     * English-vs-all token ratio ([[Signals.importanceWeights]], 1024
     * buckets), top-5 docs per source by truncated mean weight. */
   def q147ImportanceRank(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir)
     val iw = Signals.importanceWeights(docs, "doc_id", "text",
       col("lang") === "en", buckets = 1024)
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("imp_ppm").desc, col("doc_id"))
-    iw.join(docs.select(col("doc_id"), col("source")), "doc_id")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
+    OrderStats.topKPer(iw.join(docs.select(col("doc_id"), col("source")),
+        "doc_id"), col("source"), 5)(col("imp_ppm").desc, col("doc_id"))
       .select(col("source"), col("rank"), col("doc_id"), col("n_toks"),
         col("imp_ppm"))
       .orderBy(col("source"), col("rank"))

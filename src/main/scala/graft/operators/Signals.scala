@@ -247,10 +247,8 @@ object Signals {
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("pts")).cast("long").as("rrf"),
         count(lit(1)).cast("long").as("n_rankers"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-    fused.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    OrderStats.topKPer(fused, col("query_id"), k)(
+        col("rrf").desc, col("doc_id"))
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("rrf"), col("n_rankers"))
   }
@@ -284,10 +282,8 @@ object Signals {
     val scored = tf.join(dfr, "term").join(dl, "doc_id")
       .crossJoin(broadcast(nd))
       .withColumn("tfidf_ppm", expr("(tf * n_docs * 1000000) div (df * dl)"))
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("tfidf_ppm").desc, col("term"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    OrderStats.topKPer(scored, col("doc_id"), k)(
+        col("tfidf_ppm").desc, col("term"))
       .select(col("doc_id"), col("rank"), col("term"), col("tf"),
         col("df"), col("tfidf_ppm"))
   }

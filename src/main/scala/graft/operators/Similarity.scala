@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import Lineage.CutOps
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -39,6 +38,27 @@ object Similarity {
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** The exact verify step of every cosine top-k entry. The entries differ
+    * only in their candidate generator — all pairs, own cluster, probe
+    * list, two-level probe list, LSH bucket, store probe — which joins
+    * queries (query_id, qv) to corpus rows (neighbor_id, cv) into
+    * `pairs`. Self-matches are dropped, each pair is scored by [[cosine]]
+    * and ranked per query by (cos desc, neighbor_id) through
+    * [[OrderStats.topKPer]]. Returns (query_id, neighbor_id, cos, rank). */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    OrderStats.topKPer(
+        pairs.filter(col("query_id") =!= col("neighbor_id"))
+          .withColumn("cos", cosine(col("qv"), col("cv"))),
+        col("query_id"), k)(col("cos").desc, col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
+
+  /** The query side of the probe-list generators: (query_id, qv) with one
+    * row per probed cluster `qc` of `probes(qv)`. */
+  private def probeRows(queries: DataFrame, idCol: String, vecCol: String,
+                        probes: Column => Column): DataFrame =
+    queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      .withColumn("qc", explode(probes(col("qv"))))
+
   /** Brute-force cosine top-k: for each query vector, the k nearest corpus
     * vectors (self-match excluded), deterministic tie-break on neighbor id.
     * `queries` and `corpus` need (idCol, vecCol). */
@@ -46,15 +66,7 @@ object Similarity {
                      idCol: String, vecCol: String, k: Int): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val scored = c.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    cosineTopK(c.crossJoin(broadcast(q)), k)
   }
 
   /** IVF-style probe: restrict the scan to the query's own cluster
@@ -66,15 +78,7 @@ object Similarity {
       col(clusterCol).as("qc"))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
       col(clusterCol).as("cc"))
-    val scored = c.join(broadcast(q), col("qc") === col("cc"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    cosineTopK(c.join(broadcast(q), col("qc") === col("cc")), k)
   }
 
   /** Cluster-blocked k-NN graph: within each coarse cluster, every
@@ -97,8 +101,6 @@ object Similarity {
       col(clusterCol).as("cluster"))
     val b = emb.select(col(idCol).as("dst"), col(vecCol).as("bv"),
       col(clusterCol).as("cluster"))
-    val w = Window.partitionBy(col("src"))
-      .orderBy(col("cos").desc, col("dst"))
     // the top-k relation is read three times below (both sides of the
     // mutuality semi-join + the per-vector aggregate); without a cut
     // the Σ|cluster|² pair scan + window re-executes per reference —
@@ -108,11 +110,11 @@ object Similarity {
     // is a Scan ExistingRDD stub — PlanAudit audits this subtree with
     // graft.plan.cuts=off so the blocked-join property stays checked
     // for real (see [[Lineage]]).
-    val topk = a.join(b, "cluster")
-      .filter(col("src") =!= col("dst"))
-      .withColumn("cos", cosine(col("av"), col("bv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val topk = OrderStats.topKPer(
+        a.join(b, "cluster")
+          .filter(col("src") =!= col("dst"))
+          .withColumn("cos", cosine(col("av"), col("bv"))),
+        col("src"), k)(col("cos").desc, col("dst"))
       .select(col("src"), col("cluster"), col("dst"), col("cos"), col("rank"))
       .planCut
     val reversed = topk.select(col("dst").as("src"), col("src").as("dst"))
@@ -161,12 +163,9 @@ object Similarity {
       .withColumn("qcos",
         intDot(col("qa"), col("qb")).cast("double") /
           sqrt((intNorm2(col("qa")) * intNorm2(col("qb"))).cast("double")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("qcos"),
-        col("rank").cast("long").as("rank"))
+    OrderStats.topKPer(scored, col("query_id"), k)(
+        col("qcos").desc, col("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("qcos"), col("rank"))
   }
 
   /** Squared L2 distance as a deterministic left fold (codegen'd
@@ -310,19 +309,11 @@ object Similarity {
                         iters: Int = 5): DataFrame = {
     require(nProbe >= 1 && nProbe <= nlist, "need 1 <= nProbe <= nlist")
     val cents = trainCentroids(corpus, idCol, vecCol, nlist, iters)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qc", explode(probeClusters(col("qv"), cents, nProbe)))
+    val q = probeRows(queries, idCol, vecCol,
+      probeClusters(_, cents, nProbe))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .withColumn("cc", assignCluster(col("cv"), cents))
-    val scored = c.join(broadcast(q), col("qc") === col("cc"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    cosineTopK(c.join(broadcast(q), col("qc") === col("cc")), k)
   }
 
   /** IVF with a *learned* quantizer: train the codebook, assign corpus and
@@ -340,10 +331,6 @@ object Similarity {
       idCol, vecCol, "__cluster", k)
   }
 
-  /** Random-hyperplane LSH bucketing: `numBits` sign-projections against
-    * deterministic ±1 hyperplanes (seeded), giving a bucket id; near
-    * neighbors collide with high probability. Candidates are then scored
-    * exactly within buckets — the scan cost drops to the bucket size. */
   /** Deterministic ±1 hyperplanes for [[lshTopK]] — also consumed by the
     * oracle-SQL generator so both engines project against the same planes. */
   def hyperplanes(dim: Int, numBits: Int, seed: Long): Seq[Seq[Int]] = {
@@ -367,6 +354,9 @@ object Similarity {
   def embedNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
                         dim: Int, bands: Int, bitsPerBand: Int,
                         minCos: Double, seed: Long = 42L): DataFrame = {
+    require(bands >= 1, s"embedNearDupPairs: bands must be >= 1, got $bands")
+    require(bitsPerBand >= 1,
+      s"embedNearDupPairs: bitsPerBand must be >= 1, got $bitsPerBand")
     val planes = hyperplanes(dim, bands * bitsPerBand, seed)
     def bandBucket(vec: Column, band: Int): Column =
       (0 until bitsPerBand).map { bi =>
@@ -401,9 +391,14 @@ object Similarity {
       .select(col("id_a"), col("id_b"), col("cos"))
   }
 
+  /** Random-hyperplane LSH bucketing: `numBits` sign-projections against
+    * deterministic ±1 hyperplanes (seeded), giving a bucket id; near
+    * neighbors collide with high probability. Candidates are then scored
+    * exactly within buckets — the scan cost drops to the bucket size. */
   def lshTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
               vecCol: String, dim: Int, numBits: Int, k: Int,
               seed: Long = 42L): DataFrame = {
+    require(numBits >= 1, s"lshTopK: numBits must be >= 1, got $numBits")
     // hyperplane p = vector of ±1; bucket bit p = sign(dot(v, plane))
     val planes: Seq[Seq[Int]] = hyperplanes(dim, numBits, seed)
     def bucket(vec: Column): Column = {
@@ -417,15 +412,7 @@ object Similarity {
       .withColumn("bucket", bucket(col("qv")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .withColumn("bucket", bucket(col("cv")))
-    val scored = c.join(broadcast(q), "bucket")
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    cosineTopK(c.join(broadcast(q), "bucket"), k)
   }
 
   /** The distributed relation behind [[labelCentroids]] — exposed so the
@@ -476,6 +463,33 @@ object Similarity {
     * @return (idCol, cluster, keep) — keep=false iff a lower-id same-
     *         cluster vector is cosine-≥-minCos close.
     */
+  def semDedup(corpus: DataFrame, idCol: String, vecCol: String,
+               centroids: Seq[Seq[Double]], minCos: Double): DataFrame =
+    semDedupWithin(corpus, idCol, vecCol, minCos)(
+      assignCluster(_, centroids))
+
+  /** The within-cluster verify core of [[semDedup]] and
+    * [[semDedupTwoLevel]], which differ only in how a row gets its
+    * cluster (`cluster(v)`): pairs are joined on the cluster id, and
+    * the higher id of every pair at cosine ≥ `minCos` is dropped. */
+  private def semDedupWithin(corpus: DataFrame, idCol: String,
+                             vecCol: String, minCos: Double)(
+                             cluster: Column => Column): DataFrame = {
+    val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .withColumn("cluster", cluster(col("v")).cast("long"))
+      .withColumn("nrm", norm(col("v")))
+    val a = assigned.select(col("id").as("id_a"), col("v").as("va"),
+      col("nrm").as("na"), col("cluster"))
+    val b = assigned.select(col("id").as("id_b"), col("v").as("vb"),
+      col("nrm").as("nb"), col("cluster"))
+    val dropped = a.join(b, Seq("cluster"))
+      .filter(col("id_a") < col("id_b"))
+      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= minCos)
+      .select(col("id_b").as("id")).distinct()
+    assigned.join(dropped.withColumn("__drop", lit(1)), Seq("id"), "left")
+      .select(col("id").as(idCol), col("cluster"), col("__drop").isNull.as("keep"))
+  }
+
   /** [[semDedup]] with the codebook sized to the corpus — the production
     * configuration the sf10 tier measures (BENCH_sf10.json): a FIXED
     * codebook makes the within-cluster pair space Σ|cluster|² grow
@@ -630,22 +644,12 @@ object Similarity {
                            iters: Int = 5): DataFrame = {
     val cents = trainCentroids(corpus, idCol, vecCol, nlist, iters)
     val (supers, children) = superQuantize(cents)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qc",
-        explode(probeClustersTwoLevel(col("qv"), supers, children,
-          sProbe, nProbe)))
+    val q = probeRows(queries, idCol, vecCol,
+      probeClustersTwoLevel(_, supers, children, sProbe, nProbe))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .withColumn("cc",
         assignClusterTwoLevel(col("cv"), supers, children).cast("int"))
-    val scored = c.join(broadcast(q), col("qc") === col("cc"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    cosineTopK(c.join(broadcast(q), col("qc") === col("cc")), k)
   }
 
   /** [[semDedup]] with the corpus assigned through the two-level
@@ -656,20 +660,8 @@ object Similarity {
   def semDedupTwoLevel(corpus: DataFrame, idCol: String, vecCol: String,
                        centroids: Seq[Seq[Double]], minCos: Double): DataFrame = {
     val (supers, children) = superQuantize(centroids)
-    val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cluster",
-        assignClusterTwoLevel(col("v"), supers, children).cast("long"))
-      .withColumn("nrm", norm(col("v")))
-    val a = assigned.select(col("id").as("id_a"), col("v").as("va"),
-      col("nrm").as("na"), col("cluster"))
-    val b = assigned.select(col("id").as("id_b"), col("v").as("vb"),
-      col("nrm").as("nb"), col("cluster"))
-    val dropped = a.join(b, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= minCos)
-      .select(col("id_b").as("id")).distinct()
-    assigned.join(dropped.withColumn("__drop", lit(1)), Seq("id"), "left")
-      .select(col("id").as(idCol), col("cluster"), col("__drop").isNull.as("keep"))
+    semDedupWithin(corpus, idCol, vecCol, minCos)(
+      assignClusterTwoLevel(_, supers, children))
   }
 
   /** INCREMENTAL semantic dedup — the daily-ingest flow of a standing
@@ -919,24 +911,11 @@ object Similarity {
     val baseAt =
       if (!pruneBaseByDeltaClusters)
         readStandingStoreAt(spark, path, version)._1
-      else {
-        // the SAME two pruning rungs as the live daily flow
-        // (semDedupIncrementalStore → readStandingStorePruned): the
-        // delta's clusters restrict c_bucket PARTITION DIRS and the
-        // cluster row groups — without the bucket rung the pinned read
-        // opened every bucket dir of the pinned generation and the
-        // as-of judgment scaled with the STORE (SemanticReplayProbe
-        // first cut: 2.4×/decade vs live 1.07×), exactly the
-        // store-size coupling this operator exists to avoid
-        val buckets = StoreSwap.bucketCount(spark, path, Some(version))
-        val touched = d.select(col("__cluster")).distinct()
-          .collect().map(_.getLong(0)).toSeq
-        val tb = touched
-          .map(c => (((c % buckets) + buckets) % buckets).toInt).distinct
-        StoreSwap.readVersionedAt(spark, path, "data", "c_bucket",
-            version, buckets = Some(tb))
-          .filter(col("cluster").isin(touched: _*))
-      }
+      else // the live daily flow's pruned read, at the pinned version
+        prunedStoreRead(spark, path,
+          d.select(col("__cluster")).distinct()
+            .collect().map(_.getLong(0)).toSeq,
+          "cluster", Some(version))
     semDedupIncrementalPrepped(baseAt, d, idCol, vecCol,
       "cluster", "nrm", "__cluster", "__nrm", minCos)
   }
@@ -949,14 +928,33 @@ object Similarity {
     * absent from the delta contribute no pairs. */
   def readStandingStorePruned(spark: SparkSession, path: String,
                               touched: Seq[Long],
-                              clusterCol: String = "cluster"): DataFrame = {
-    val (df, buckets) = readStandingStore(spark, path)
-    val tb = touched.map(c => (((c % buckets) + buckets) % buckets).toInt)
-      .distinct
-    df.filter(col("c_bucket").isin(tb: _*) &&
+                              clusterCol: String = "cluster"): DataFrame =
+    prunedStoreRead(spark, path, touched, clusterCol, None)
+
+  /** [[readStandingStorePruned]] of the live view (`pin` = None) or of
+    * the retained manifest `pin`. A pinned read hands the touched
+    * buckets to the manifest read, so it never lists the other bucket
+    * dirs of the pinned generation — without that rung the as-of
+    * judgment scaled with the STORE (SemanticReplayProbe first cut:
+    * 2.4×/decade vs live 1.07×). */
+  private def prunedStoreRead(spark: SparkSession, path: String,
+                              touched: Seq[Long], clusterCol: String,
+                              pin: Option[Int]): DataFrame = {
+    StoreSwap.open(spark, path)
+    val buckets = StoreSwap.bucketCount(spark, path, pin)
+    val tb = touched.map(bucketOf(_, buckets)).distinct
+    pin.fold(StoreSwap.readDir(spark, path, "data", "c_bucket"))(v =>
+        StoreSwap.readVersionedAt(spark, path, "data", "c_bucket", v,
+          buckets = Some(tb)))
+      .filter(col("c_bucket").isin(tb: _*) &&
         col(clusterCol).isin(touched: _*))
       .drop("c_bucket")
   }
+
+  /** The `c_bucket` partition of cluster id `c` in a store of `buckets`
+    * buckets — the writers' `pmod(cluster, buckets)`. */
+  private def bucketOf(c: Long, buckets: Int): Int =
+    Math.floorMod(c, buckets.toLong).toInt
 
   /** APPEND to the partitioned standing store — the ingest side of the
     * lifecycle: a judged batch's keepers land in their clusters'
@@ -1092,22 +1090,24 @@ object Similarity {
     val cents = readCodebook(spark, storePath)
     require(nProbe >= 1 && nProbe <= cents.length,
       "need 1 <= nProbe <= nlist")
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qc", explode(probeClusters(col("qv"), cents, nProbe)))
+    storeTopK(spark, storePath, probeRows(queries, idCol, vecCol,
+      probeClusters(_, cents, nProbe)), idCol, vecCol, k)
+  }
+
+  /** Shared tail of the store float searches, which differ only in how
+    * the probe column `qc` of `q` (query_id, qv, qc) is built: collect
+    * the probed cluster ids, read only their buckets and row groups
+    * ([[readStandingStorePruned]]), and verify the probe-joined
+    * candidates with [[cosineTopK]]. */
+  private def storeTopK(spark: SparkSession, storePath: String,
+                        q: DataFrame, idCol: String, vecCol: String,
+                        k: Int): DataFrame = {
     val probed = q.select(col("qc").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val c = readStandingStorePruned(spark, storePath, probed)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
         col("cluster").cast("int").as("cc"))
-    val scored = c.join(broadcast(q), col("qc") === col("cc"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    cosineTopK(c.join(broadcast(q), col("qc") === col("cc")), k)
   }
 
   /** [[ivfTopKStore]] with the probe lists built through the √k ladder
@@ -1125,27 +1125,27 @@ object Similarity {
                            queries: DataFrame, idCol: String,
                            vecCol: String, k: Int, sProbe: Int,
                            nProbe: Int): DataFrame = {
-    val cents = readCodebook(spark, storePath)
-    val (supers, children) = superQuantize(cents)
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qc",
-        explode(probeClustersTwoLevel(col("qv"), supers, children,
-          sProbe, nProbe)))
-    val probed = q.select(col("qc").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val c = readStandingStorePruned(spark, storePath, probed)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
-        col("cluster").cast("int").as("cc"))
-    val scored = c.join(broadcast(q), col("qc") === col("cc"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", cosine(col("qv"), col("cv")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    val (supers, children) = superQuantize(readCodebook(spark, storePath))
+    storeTopK(spark, storePath, probeRows(queries, idCol, vecCol,
+        probeClustersTwoLevel(_, supers, children, sProbe, nProbe)),
+      idCol, vecCol, k)
   }
+
+  /** The pinned store version EVERY artifact of one flavored read of
+    * the PQ triple ([[writePqSidecar]]) resolves at — the
+    * reader-atomicity point: three separate latest-manifest resolutions
+    * could straddle a commit, a single pinned version cannot. None =
+    * the store has no sidecar. */
+  private def pqPin(spark: SparkSession, path: String): Option[Int] =
+    StoreSwap.latestSnapshot(spark, path, "pq_meta")
+      .map(_ => StoreSwap.snapshotVersions(spark, path).last)
+
+  /** A sidecar artifact at the pinned version (the current view when
+    * unpinned). */
+  private def pqDirDf(spark: SparkSession, path: String, dataDir: String,
+                      partCol: String, pin: Option[Int]): DataFrame =
+    pin.fold(StoreSwap.readDir(spark, path, dataDir, partCol))(v =>
+      StoreSwap.readVersionedAt(spark, path, dataDir, partCol, v))
 
   /** Train PQ codebooks from the standing store's OWN vectors and
     * persist them plus the corpus codes beside it — the missing half of
@@ -1161,8 +1161,9 @@ object Similarity {
     * Training is [[pqCodebooks]]'s fixed-point Lloyd step — replayable
     * in SQL, and parquet round-trips the double centroids bit-exactly,
     * so search through the sidecar equals [[pqTopK]] over the same
-    * corpus restricted to the probed clusters. */
-  /** The PQ sidecar's three artifacts — codebook, flavor marker, codes
+    * corpus restricted to the probed clusters.
+    *
+    * The PQ sidecar's three artifacts — codebook, flavor marker, codes
     * — must change TOGETHER: any live mix of old and new (old codes
     * under a new flavor marker, old codes under a new codebook) serves
     * silently wrong distances. They are dataDirs of the store manifest
@@ -1174,22 +1175,7 @@ object Similarity {
     * `part=0` partition column (the manifest reader infers partition
     * columns from dir names; harmless to every consumer).
     *
-    * The pinned store version EVERY artifact of one flavored read
-    * resolves at — the reader-atomicity point: three separate
-    * latest-manifest resolutions could straddle a commit, a single
-    * pinned version cannot. None = the store has no sidecar. */
-  private def pqPin(spark: SparkSession, path: String): Option[Int] =
-    StoreSwap.latestSnapshot(spark, path, "pq_meta")
-      .map(_ => StoreSwap.snapshotVersions(spark, path).last)
-
-  /** A sidecar artifact at the pinned version (the current view when
-    * unpinned). */
-  private def pqDirDf(spark: SparkSession, path: String, dataDir: String,
-                      partCol: String, pin: Option[Int]): DataFrame =
-    pin.fold(StoreSwap.readDir(spark, path, dataDir, partCol))(v =>
-      StoreSwap.readVersionedAt(spark, path, dataDir, partCol, v))
-
-  /** @param opqIters 0 (default) keeps the structured Walsh–Hadamard
+    * @param opqIters 0 (default) keeps the structured Walsh–Hadamard
     *                  rotation when `rotate` is set; > 0 TRAINS an OPQ
     *                  rotation instead ([[trainOpqRotation]], that many
     *                  alternating-minimization iterations over a
@@ -1541,9 +1527,8 @@ object Similarity {
     val coarse = readCodebook(spark, storePath)
     require(nProbe >= 1 && nProbe <= coarse.length,
       "need 1 <= nProbe <= nlist")
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qc", explode(probeClusters(col("qv"), coarse, nProbe)))
+    val probes = probeRows(queries, idCol, vecCol,
+        probeClusters(_, coarse, nProbe))
       .select(col("query_id"), col("qc").cast("long").as("qc"))
     pqAdcOverStore(spark, storePath, queries, probes, idCol, vecCol,
       m, dsub, k)
@@ -1565,11 +1550,8 @@ object Similarity {
                           sProbe: Int, nProbe: Int): DataFrame = {
     val coarse = readCodebook(spark, storePath)
     val (supers, children) = superQuantize(coarse)
-    val probes = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-      .withColumn("qc",
-        explode(probeClustersTwoLevel(col("qv"), supers, children,
-          sProbe, nProbe)))
+    val probes = probeRows(queries, idCol, vecCol,
+        probeClustersTwoLevel(_, supers, children, sProbe, nProbe))
       .select(col("query_id"), col("qc").cast("long").as("qc"))
     pqAdcOverStore(spark, storePath, queries, probes, idCol, vecCol,
       m, dsub, k)
@@ -1606,10 +1588,8 @@ object Similarity {
     // against `graft.pq.maxBroadcastMb` (default 64).
     val pin = pqPin(spark, storePath)
     val (residual, rotated, opq) = pqFlavor(spark, storePath, pin)
-    val targetBytes = math.max(1.0, spark.conf
-      .getOption("graft.pq.maxBroadcastMb")
-      .flatMap(v => scala.util.Try(v.toDouble).toOption)
-      .getOrElse(64.0) * 1024 * 1024)
+    val targetBytes = math.max(1.0,
+      StoreSwap.positiveMb(spark, "graft.pq.maxBroadcastMb") * 1024 * 1024)
     val ksub = pqDirDf(spark, storePath, "pq_codebook", "part", pin)
       .count() / m
     // BOTH flavors broadcast one m×ksub distance map per PROBE row —
@@ -1634,8 +1614,8 @@ object Similarity {
     // batch over the broadcast budget goes straight to the shuffle;
     // raise the knob on clusters where re-scanning the pruned codes
     // is cheaper than exchanging them.
-    val maxSerial = spark.conf.getOption("graft.pq.maxSerialChunks")
-      .flatMap(_.toIntOption).getOrElse(1)
+    val maxSerial = StoreSwap.confValue(spark, "graft.pq.maxSerialChunks", 1,
+      "a positive integer")(_.toIntOption.filter(_ > 0))
     if (chunks == 1)
       pqAdcChunk(spark, storePath, queries, probesM, idCol, vecCol,
         m, dsub, k, residual, rotated, opq, pin)
@@ -1669,8 +1649,7 @@ object Similarity {
     val buckets = StoreSwap.bucketCount(spark, storePath, pin)
     val probed = probesM.select(col("qc")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val tb = probed.map(c => (((c % buckets) + buckets) % buckets).toInt)
-      .distinct
+    val tb = probed.map(bucketOf(_, buckets)).distinct
     val pqcb = pqDirDf(spark, storePath, "pq_codebook", "part", pin)
     val codes = pqDirDf(spark, storePath, "pq_codes", "c_bucket", pin)
       .filter(col("c_bucket").isin(tb: _*) &&
@@ -1748,9 +1727,7 @@ object Similarity {
           element_at(element_at(col("dts"), lit(s)),
             element_at(col("codes"), s + 1).cast("long")))
         .reduce(_ + _))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("nid"))
-    adc.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    OrderStats.topKPer(adc, col("query_id"), k)(col("adc"), col("nid"))
       .select(col("query_id"), col("rank"), col("nid").as("neighbor_id"),
         col("adc"))
   }
@@ -1900,8 +1877,7 @@ object Similarity {
       spark, path) {
     if (clusters.isEmpty) return 0L
     val (df, buckets) = readStandingStore(spark, path)
-    val touched = clusters.map(c => (((c % buckets) + buckets) % buckets).toInt)
-      .toSeq.sorted
+    val touched = clusters.map(bucketOf(_, buckets)).toSeq.sorted
     val slice = df.filter(col("c_bucket").isin(touched: _*))
     val kept = slice.filter(!col("cluster").isin(clusters.toSeq: _*))
     val before = slice.count()
@@ -2023,8 +1999,7 @@ object Similarity {
     val codesToRefresh =
       if (!StoreSwap.dirExists(spark, path, "pq_codes")) reassigned else {
       val buckets = StoreSwap.bucketCount(spark, path)
-      val fb = freshIds
-        .map(c => (((c % buckets) + buckets) % buckets).toInt).distinct
+      val fb = freshIds.map(bucketOf(_, buckets)).distinct
       val present = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
         .filter(col("c_bucket").isin(fb: _*) &&
           col("cluster").isin(freshIds: _*))
@@ -2298,27 +2273,8 @@ object Similarity {
       .groupBy(col("query_id"), col("nid"))
       .agg(sums.head, sums.tail: _*)
       .withColumn("adc", (0 until m).map(s => col(s"s$s")).reduce(_ + _))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("nid"))
-    adc.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    OrderStats.topKPer(adc, col("query_id"), k)(col("adc"), col("nid"))
       .select(col("query_id"), col("rank"), col("nid").as("neighbor_id"),
         col("adc"))
-  }
-
-  def semDedup(corpus: DataFrame, idCol: String, vecCol: String,
-               centroids: Seq[Seq[Double]], minCos: Double): DataFrame = {
-    val assigned = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("cluster", assignCluster(col("v"), centroids).cast("long"))
-      .withColumn("nrm", norm(col("v")))
-    val a = assigned.select(col("id").as("id_a"), col("v").as("va"),
-      col("nrm").as("na"), col("cluster"))
-    val b = assigned.select(col("id").as("id_b"), col("v").as("vb"),
-      col("nrm").as("nb"), col("cluster"))
-    val dropped = a.join(b, Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(dot(col("va"), col("vb")) / (col("na") * col("nb")) >= minCos)
-      .select(col("id_b").as("id")).distinct()
-    assigned.join(dropped.withColumn("__drop", lit(1)), Seq("id"), "left")
-      .select(col("id").as(idCol), col("cluster"), col("__drop").isNull.as("keep"))
   }
 }

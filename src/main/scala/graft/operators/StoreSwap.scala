@@ -452,13 +452,27 @@ object StoreSwap {
     * the reader grace window, `graft.store.snapshotKeep` (default 1).
     * Anything but a non-negative integer is a configuration error. */
   private def snapshotKeep(spark: SparkSession): Int =
-    spark.conf.getOption("graft.store.snapshotKeep") match {
-      case None => 1
-      case Some(s) => s.trim.toIntOption.filter(_ >= 0).getOrElse(
+    confValue(spark, "graft.store.snapshotKeep", 1,
+      "a non-negative integer")(_.toIntOption.filter(_ >= 0))
+
+  /** The value of conf `key`, `default` when unset. A value `parse`
+    * rejects is a configuration error naming the key, the value and
+    * `what` the key takes — never a silent fall-back to the default. */
+  private[operators] def confValue[T](spark: SparkSession, key: String,
+                                      default: T, what: String)(
+                                      parse: String => Option[T]): T =
+    spark.conf.getOption(key) match {
+      case None => default
+      case Some(s) => parse(s.trim).getOrElse(
         throw new IllegalArgumentException(
-          s"graft.store.snapshotKeep must be a non-negative integer," +
-            s" got '$s'"))
+          s"$key must be $what, got '$s'"))
     }
+
+  /** A broadcast budget in MB (`graft.pq.maxBroadcastMb`,
+    * `graft.lsh.maxBroadcastMb`): a positive number, default 64. */
+  private[operators] def positiveMb(spark: SparkSession, key: String): Double =
+    confValue(spark, key, 64.0, "a positive number of MB")(
+      _.toDoubleOption.filter(_ > 0))
 
   // ---- commits -----------------------------------------------------------
 

@@ -129,6 +129,26 @@ object PlanAudit {
       check("q24 IVF probe is an equi-join (pruned scan)",
         p24.contains("BroadcastHashJoin") && !p24.contains("CartesianProduct"))
     }
+    // the top-k kernel (OrderStats.topKPer): its rank filter sits on the
+    // window, so Spark plans a WindowGroupLimit that keeps <= k rows per
+    // group in each task before the window's exchange and sort. Checked
+    // per Window node: q67/q148 also rank their query terms with a
+    // limited window of their own, which a plan-wide `contains` would
+    // count for the kernel's
+    audit("top-k") {
+      import org.apache.spark.sql.execution.window.{WindowExec,
+        WindowGroupLimitExec}
+      val missing = Seq("q23_sim_topk", "q24_sim_ivf", "q25_sim_lsh",
+          "q67_bm25_topk", "q148_hybrid_rrf", "q171_ivf_multiprobe")
+        .filterNot { q =>
+          val windows = SparkEntry.queries(q)(spark, sfDir)
+            .queryExecution.executedPlan.collect { case w: WindowExec => w }
+          windows.nonEmpty &&
+            windows.forall(_.child.isInstanceOf[WindowGroupLimitExec])
+        }
+      check("top-k queries plan every Window over a WindowGroupLimit",
+        missing.isEmpty, s"missing in ${missing.mkString(", ")}")
+    }
 
     // q19 dedup: aggregation on fingerprint, partial first
     audit("q19") {

@@ -92,6 +92,16 @@ class SignatureStoreSpec extends SparkSpec {
     spark.conf.set("graft.lsh.maxBroadcastMb", "0.0008")
     try assert(run() == single)
     finally spark.conf.unset("graft.lsh.maxBroadcastMb")
+    // an unparsable or non-positive budget is a named error, never a
+    // silent fall-back to the default
+    for (bad <- Seq("lots", "-2")) {
+      spark.conf.set("graft.lsh.maxBroadcastMb", bad)
+      try {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains("graft.lsh.maxBroadcastMb") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset("graft.lsh.maxBroadcastMb")
+    }
   }
 
   test("band-index directory granularity is layout-only: judge and merge verdicts invariant") {

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** ANN trainer path: k-means codebook recovery and the trained IVF probe
   * agreeing with brute force on cluster-separated data. */
@@ -343,5 +344,80 @@ class SimilaritySpec extends SparkSpec {
       assert(math.abs(before - after) <= 1e-9 * math.max(1.0, before),
         s"distance drift $i-$j: $before vs $after")
     }
+  }
+
+  test("every cosine top-k entry is one kernel") {
+    val df = blobs()
+    val queries = df.filter(col("vec_id") < 2)
+    val k = 4
+    // a standing store over the same corpus, flat-assigned to the
+    // nlist = 2 codebook; probing both clusters reads all of it
+    val cents = Similarity.trainCentroids(df, "vec_id", "embedding", 2, 4)
+    val path = graft.operators.Fixtures.tempDir("graft-topk-")
+      .resolve("s").toString
+    Similarity.writeStandingStore(df
+        .withColumn("cluster",
+          Similarity.assignCluster(col("embedding"), cents).cast("long"))
+        .withColumn("nrm", Similarity.norm(col("embedding"))),
+      path, "cluster", buckets = 4)
+    Similarity.writeCodebook(spark, path, cents)
+    val brute = Similarity.bruteForceTopK(queries, df, "vec_id",
+      "embedding", k)
+    val complete = Seq(
+      "ivfTopK, one constant cluster" -> Similarity.ivfTopK(
+        queries.withColumn("c", lit(0)), df.withColumn("c", lit(0)),
+        "vec_id", "embedding", "c", k),
+      "ivfTopKMultiProbe, nProbe = nlist" -> Similarity.ivfTopKMultiProbe(
+        queries, df, "vec_id", "embedding", k, nlist = 2, nProbe = 2,
+        iters = 4),
+      "ivfTopKTwoLevelProbe, every super" -> Similarity.ivfTopKTwoLevelProbe(
+        queries, df, "vec_id", "embedding", k, nlist = 2, sProbe = 2,
+        nProbe = 2, iters = 4),
+      "ivfTopKStore, full probing" -> Similarity.ivfTopKStore(spark, path,
+        queries, "vec_id", "embedding", k, nProbe = 2),
+      "ivfTopKStoreTwoLevel, full probing" -> Similarity.ivfTopKStoreTwoLevel(
+        spark, path, queries, "vec_id", "embedding", k, sProbe = 2,
+        nProbe = 2))
+    val lsh = Similarity.lshTopK(queries, df, "vec_id", "embedding",
+      dim = 4, numBits = 2, k = k)
+    def cols(d: org.apache.spark.sql.DataFrame) =
+      d.schema.map(f => (f.name, f.dataType))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("query_id", "rank").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
+        .toSeq
+    // one output contract for all seven entries
+    assert(cols(brute) == Seq("query_id" -> LongType,
+      "neighbor_id" -> LongType, "cos" -> DoubleType, "rank" -> LongType))
+    (complete.map(_._2) :+ lsh).foreach(d => assert(cols(d) == cols(brute)))
+    // a complete candidate set makes every generator exact
+    val want = rows(brute)
+    assert(want.length == 2 * k)
+    complete.foreach { case (name, d) => assert(rows(d) == want, name) }
+    // blobs() repeats every vector ten ids later, so the brute-force
+    // ranking holds equal-cos neighbors: they rank by neighbor_id
+    val ties = want.sliding(2).collect {
+      case Seq(a, b) if a._1 == b._1 && a._3 == b._3 => (a, b)
+    }.toSeq
+    assert(ties.nonEmpty, "fixture has no tied neighbors")
+    ties.foreach { case (a, b) => assert(a._2 < b._2 && a._4 + 1 == b._4) }
+    // k < 1 is the kernel's named error, not an empty result
+    val e = intercept[IllegalArgumentException] {
+      Similarity.bruteForceTopK(queries, df, "vec_id", "embedding", 0)
+    }
+    assert(e.getMessage.contains("k must be >= 1, got 0"), e.getMessage)
+  }
+
+  test("lshTopK and embedNearDupPairs name a bit or band count below 1") {
+    val df = blobs()
+    def msg(body: => Any) = intercept[IllegalArgumentException](body).getMessage
+    assert(msg(Similarity.lshTopK(df, df, "vec_id", "embedding", dim = 4,
+      numBits = 0, k = 3)).contains("numBits must be >= 1, got 0"))
+    assert(msg(Similarity.embedNearDupPairs(df, "vec_id", "embedding",
+      dim = 4, bands = 0, bitsPerBand = 4, minCos = 0.9))
+      .contains("bands must be >= 1, got 0"))
+    assert(msg(Similarity.embedNearDupPairs(df, "vec_id", "embedding",
+      dim = 4, bands = 4, bitsPerBand = 0, minCos = 0.9))
+      .contains("bitsPerBand must be >= 1, got 0"))
   }
 }

@@ -728,6 +728,18 @@ class StandingStoreSpec extends SparkSpec {
       spark.conf.unset("graft.pq.maxBroadcastMb")
       spark.conf.unset("graft.pq.maxSerialChunks")
     }
+    // an unparsable or non-positive budget is a named error, never a
+    // silent fall-back to the default
+    for ((key, bad) <- Seq("graft.pq.maxBroadcastMb" -> "64MB",
+        "graft.pq.maxBroadcastMb" -> "0", "graft.pq.maxSerialChunks" -> "x",
+        "graft.pq.maxSerialChunks" -> "-1")) {
+      spark.conf.set(key, bad)
+      try {
+        val e = intercept[IllegalArgumentException](run())
+        assert(e.getMessage.contains(key) &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset(key)
+    }
   }
 
   // ---- writer lease: the single-mutator contract, enforced ----------
