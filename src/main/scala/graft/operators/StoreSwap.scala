@@ -2,12 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructType}
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import scala.jdk.CollectionConverters._
+import graft.sinks.ParquetFooters
 
 /** The ONE commit protocol of the partitioned standing stores
   * ([[Similarity.writeStandingStore]]'s embedding store and
@@ -594,9 +591,7 @@ object StoreSwap {
     val buckets = fs.listStatus(stg)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
       .map(_.getPath.getName).toSeq
-    val kept = parquetFiles(fs, stg)
-      .map(f => footer(spark, f).getBlocks.asScala.map(_.getRowCount).sum)
-      .sum
+    val kept = ParquetFooters.rowCount(spark, stg)
     val t = activeTxn.get()(path)
     val staged =
       if (buckets.isEmpty) Map.empty[String, Seq[Long]]
@@ -940,28 +935,6 @@ object StoreSwap {
       .fold(reader)(reader.schema).parquet(dirs: _*)
   }
 
-  // ---- parquet footers (read on the driver, no Spark job) ----------------
-
-  /** The parquet part files under `dir`, recursively. */
-  private def parquetFiles(fs: FileSystem, dir: Path): Seq[Path] = {
-    if (!fs.exists(dir)) return Seq.empty
-    val it = fs.listFiles(dir, true)
-    val files = Seq.newBuilder[Path]
-    while (it.hasNext) {
-      val p = it.next().getPath
-      val name = p.getName
-      if (name.endsWith(".parquet") && !name.startsWith(".") &&
-          !name.startsWith("_")) files += p
-    }
-    files.result()
-  }
-
-  private def footer(spark: SparkSession, file: Path): ParquetMetadata = {
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(file, spark.sparkContext.hadoopConfiguration))
-    try reader.getFooter finally reader.close()
-  }
-
   /** The schema Spark infers for the bucket dir `dir` (`<partCol>=<b>`):
     * the row schema Spark writes into every file's footer, plus the int
     * partition column. None when that is not there to take (no file, a
@@ -971,16 +944,10 @@ object StoreSwap {
                            partCol: String): Option[StructType] = {
     if (dir.getName.stripPrefix(partCol + "=").toIntOption.isEmpty)
       return None
-    parquetFiles(fsOf(spark, dir), dir).headOption
-      .flatMap(f => Option(footer(spark, f).getFileMetaData
-        .getKeyValueMetaData.get(SparkSchemaKey)))
-      .map(json => DataType.fromJson(json).asInstanceOf[StructType]
-        .add(partCol, IntegerType))
+    ParquetFooters.files(spark, dir).headOption
+      .flatMap(ParquetFooters.sparkSchema(spark, _))
+      .map(_.add(partCol, IntegerType))
   }
-
-  /** The footer key under which Spark's parquet writer records the row
-    * schema. */
-  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   /** Resolved leaf-dir paths of a snapshot, grouped by generation (one
     * group per basePath for partition-column inference), restricted to

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.pipeline.Config._
-import graft.sinks.ParquetTable
+import graft.sinks.{ParquetFooters, ParquetTable}
 import graft.sources.{TextFormat, TextSource, XlsSource, XlsxFormat, XlsxSource, XmlFormat, XmlSource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -118,7 +118,7 @@ object LoadRunner {
       if (keep.nonEmpty) materialized.select((keep.map(col) :+ col("_lineno")): _*)
       else materialized.drop("_file", "_errors")
     ParquetTable.store(spark, toStore, table, load.db)
-    val n = ParquetTable.load(spark, table).count()
+    val n = ParquetFooters.rowCount(spark, new org.apache.hadoop.fs.Path(table))
     materialized.unpersist()
     LoadResult(n, errors, stored = true)
   }

@@ -4,6 +4,8 @@ import graft.operators.MergeOps
 import graft.pipeline.Config._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.{Path => HPath}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 /** Parquet-backed "table" with the reference's sink contract (SURVEY.md
@@ -24,7 +26,24 @@ object ParquetTable {
 
   def load(spark: SparkSession, table: String): DataFrame = {
     recoverCrash(Paths.get(table).toAbsolutePath)
-    spark.read.parquet(table)
+    val reader = spark.read
+    footerSchema(spark, Paths.get(table)).fold(reader)(reader.schema).parquet(table)
+  }
+
+  /** The schema a read of `table` would infer, from one part file's
+    * footer: a parquet read without a schema runs a Spark job to infer
+    * one. None for a partitioned layout (its partition columns come from
+    * the directory names) and for a footer without Spark's schema. */
+  private def footerSchema(spark: SparkSession, table: Path): Option[StructType] = {
+    if (!Files.isDirectory(table)) return None
+    val s = Files.list(table)
+    val visible = try s.toArray.map(_.asInstanceOf[Path]).toSeq.filterNot { p =>
+      val name = p.getFileName.toString
+      name.startsWith("_") || name.startsWith(".")
+    } finally s.close()
+    if (visible.exists(Files.isDirectory(_))) None
+    else visible.find(_.getFileName.toString.endsWith(".parquet"))
+      .flatMap(f => ParquetFooters.sparkSchema(spark, new HPath(f.toUri)))
   }
 
   def exists(table: String): Boolean = {

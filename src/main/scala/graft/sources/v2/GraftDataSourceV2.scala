@@ -2,16 +2,20 @@ package graft.sources.v2
 
 import graft.functions.Coerce
 import graft.sources.{ExcelRows, TextFormat, XlsSource, XlsxFormat, XlsxSource, XmlFormat, XmlSource}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, In, LessThan, LessThanOrEqual, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 import java.util
 import scala.jdk.CollectionConverters._
@@ -39,10 +43,13 @@ import scala.jdk.CollectionConverters._
   * Scale shape: one [[InputPartition]] per file (these container formats
   * are not splittable — parallelism is across files, the reference's
   * many-medium-files model, `Wrap/File.pm:154-187`). Readers stream bytes
-  * through Hadoop `FileSystem`, so any cluster filesystem works; executors
-  * resolve the filesystem from their own Hadoop site config.
+  * through Hadoop `FileSystem`, so any cluster filesystem works; readers
+  * resolve it from the session's Hadoop conf, shipped with the scan.
   *
-  * All four schemas are `(_file string, _lineno long, <declared>string…)`
+  * `graft-text`/`graft-fixed` are the one implementation of the
+  * [[TextFormat]] law: `TextSource.read` is [[GraftDataSourceV2.textScan]].
+  *
+  * All schemas are `(_file string, _lineno long, <declared>string…)`
   * — identical to the classic paths; coercion stays a downstream concern
   * ([[graft.pipeline.SchemaCoercion]]).
   */
@@ -100,21 +107,9 @@ object GraftDataSourceV2 {
     decimalSep = o.getOrElse("decimalSep", "."),
     normalizeNumerics = o.getOrElse("normalizeNumerics", "true").toBoolean)
 
-  def fixedFormat(o: Opts): TextFormat = TextFormat(
-    header = csvList(o("header")),
-    targetHeader = o.get("targetHeader").map(csvList).getOrElse(Nil),
-    poslen = poslenList(o("poslen")),
-    skip = o.getOrElse("skip", "0").toInt,
-    skipUntil = o.get("skipUntil"),
-    eol = o.getOrElse("eol", "\r?\n"),
-    encoding = o.getOrElse("encoding", "UTF-8"),
-    allowLinefeedInData = o.getOrElse("allowLinefeedInData", "false").toBoolean,
-    thousandSep = o.getOrElse("thousandSep", ","),
-    decimalSep = o.getOrElse("decimalSep", "."),
-    normalizeNumerics = o.getOrElse("normalizeNumerics", "true").toBoolean,
-    dropEmptyFirstField = o.getOrElse("dropEmptyFirstField", "true").toBoolean)
-
-  def textFormat(o: Opts): TextFormat = TextFormat(
+  /** A `graft-text` / `graft-fixed` option map as its [[TextFormat]];
+    * `graft-fixed` requires `poslen`, `graft-text` ignores it. */
+  def textFormat(kind: String, o: Opts): TextFormat = TextFormat(
     header = csvList(o("header")),
     targetHeader = o.get("targetHeader").map(csvList).getOrElse(Nil),
     sep = o.getOrElse("sep", "\t"),
@@ -122,6 +117,7 @@ object GraftDataSourceV2 {
     quoted = o.getOrElse("quoted", "false").toBoolean,
     skip = o.getOrElse("skip", "0").toInt,
     skipUntil = o.get("skipUntil"),
+    poslen = if (kind == "graft-fixed") poslenList(o("poslen")) else Nil,
     eol = o.getOrElse("eol", "\r?\n"),
     encoding = o.getOrElse("encoding", "UTF-8"),
     allowLinefeedInData = o.getOrElse("allowLinefeedInData", "false").toBoolean,
@@ -132,40 +128,33 @@ object GraftDataSourceV2 {
 
   def dataColumns(kind: String, o: Opts): Seq[String] = kind match {
     case "graft-xml" => xmlFormat(o).header
-    case "graft-fixed" => fixedFormat(o).targets
-    case "graft-text" => textFormat(o).targets
+    case "graft-fixed" | "graft-text" => textFormat(kind, o).targets
     case _ => excelFormat(o).targets
   }
 
-  def fullSchema(kind: String, o: Opts): StructType = StructType(
+  def fullSchema(kind: String, o: Opts): StructType = schemaOf(dataColumns(kind, o))
+
+  /** `(_file, _lineno, columns…)`, the columns all strings. */
+  def schemaOf(columns: Seq[String]): StructType = StructType(
     StructField("_file", StringType) +: StructField("_lineno", LongType) +:
-      dataColumns(kind, o).map(StructField(_, StringType)))
+      columns.map(StructField(_, StringType)))
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   /** `load(paths…)` → `paths` JSON array; `load(path)` → `path`. */
   def inputPaths(o: Opts): Seq[String] = {
-    val multi = o.get("paths").map { json =>
-      // minimal JSON string-array parse (values are paths, no escapes in
-      // practice; tolerate \" and \\ anyway)
-      val s = json.trim.stripPrefix("[").stripSuffix("]")
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      val sb = new StringBuilder
-      var inStr = false; var esc = false
-      s.foreach { c =>
-        if (esc) { sb.append(c); esc = false }
-        else if (c == '\\') esc = true
-        else if (c == '"') { if (inStr) { out += sb.toString; sb.clear() }; inStr = !inStr }
-        else if (inStr) sb.append(c)
-      }
-      out.toSeq
-    }.getOrElse(Seq.empty)
+    val multi = o.get("paths").toSeq
+      .flatMap(js => json.readValue(js, classOf[Array[String]]).toSeq)
     val single = o.get("path").toSeq
     val all = multi ++ single
     if (all.isEmpty) throw new IllegalArgumentException("no path given to load()")
     all
   }
 
+  // ---- the TextFormat law: graft-text, graft-fixed and TextSource.read ----
+
   /** Spark-`trim` parity: strip ' ' only (Java `trim` also strips
-    * control chars — a semantic the classic fixed-width path never had). */
+    * control chars). */
   def trimSpaces(s: String): String = {
     var i = 0; var j = s.length
     while (i < j && s.charAt(i) == ' ') i += 1
@@ -173,9 +162,9 @@ object GraftDataSourceV2 {
     s.substring(i, j)
   }
 
-  /** Minimal quoted-CSV line split (Text::CSV semantics like the classic
-    * path's `from_csv`: quotes only where needed, doubled quote inside a
-    * quoted field = literal quote). `sep` is a literal string here. */
+  /** Minimal quoted-CSV line split (Text::CSV semantics: quotes only where
+    * needed, doubled quote inside a quoted field = literal quote). `sep`
+    * is a literal string here. */
   def splitQuoted(line: String, sep: String): IndexedSeq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     var i = 0
@@ -205,13 +194,47 @@ object GraftDataSourceV2 {
     out.toIndexedSeq
   }
 
-  /** Per-file text parse with projection — mirrors
-    * [[graft.sources.TextSource.read]]'s semantics (skip/skipUntil, empty
-    * lines dropped before numbering, trim + normalizeNumerics,
-    * dropEmptyFirstField after numbering) for all three line modes:
-    * fixed-width spans, quoted CSV, and plain/regex separator split. Only
-    * `wanted` columns pay per-field cleanup (and fixed-width only
-    * substrings wanted spans). */
+  /** `Pattern.split(line, -1)` of the quoted, non-empty `sep`, without
+    * the regex engine. */
+  def splitLiteral(line: String, sep: String): Array[String] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[String]
+    var from = 0
+    var at = line.indexOf(sep)
+    while (at >= 0) {
+      out += line.substring(from, at)
+      from = at + sep.length
+      at = line.indexOf(sep, from)
+    }
+    out += line.substring(from)
+    out.toArray
+  }
+
+  /** A file's raw records: its bytes decoded in the format's charset
+    * (the JVM charset, so cp1252 works), split on the record separator —
+    * CRLF alone under `allowLinefeedInData`, so bare LFs stay inside
+    * values. Empty records are kept; the parse drops them. */
+  def records(content: Array[Byte], fmt: TextFormat): Array[String] =
+    new String(content, java.nio.charset.Charset.forName(fmt.encoding))
+      .split(if (fmt.allowLinefeedInData) "\r\n" else fmt.eol, -1)
+
+  /** A file's bytes, through the Hadoop FileSystem `conf` resolves. */
+  def readBytes(path: String, conf: Configuration): Array[Byte] = {
+    val p = new Path(path)
+    val in = p.getFileSystem(conf).open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** `TextSource.read`'s scan: the `graft-text` table of `fmt` itself
+    * (`graft-fixed` for a fixed-width format), so the header stays
+    * verbatim where a `header` option would be split and trimmed. It is
+    * planned like a `spark.read.format(...)` load, pushdowns included. */
+  def textScan(spark: SparkSession, paths: Seq[String], fmt: TextFormat): DataFrame = {
+    val kind = if (fmt.isFixedWidth) "graft-fixed" else "graft-text"
+    val table = new GraftFormatTable(kind, schemaOf(fmt.targets),
+      Map("paths" -> json.writeValueAsString(paths.toArray)).asJava, Some(fmt))
+    GraftColumnBridge.ofRows(spark, DataSourceV2Relation.create(table, None, None))
+  }
+
   /** Which pushed filters this source can exploit, and how:
     *
     *  - `_file` predicates (equality, IN, prefix/suffix/contains) prune
@@ -264,11 +287,18 @@ object GraftDataSourceV2 {
       case _ => true // _lineno filters don't constrain the file set
     }
 
+  /** One file's rows under the law, projected to `wanted`: the skip
+    * prefix (`skip` raw lines, or up to and including the first
+    * `skipUntil` match) goes, empty lines are dropped, the rest numbered
+    * from 1 as `_lineno`; fields (fixed-width spans, quoted-CSV fields or
+    * separator splits) are trimmed and locale-normalized; a field past a
+    * short line's end is NULL, a span past it ""; in quoted mode an empty
+    * field, bare or `""`, is NULL as in Spark's CSV reader;
+    * `dropEmptyFirstField` drops rows after numbering. Only `wanted`
+    * columns pay per-field cleanup, and parsing stops after `maxLineno`. */
   def textProjected(path: String, content: Array[Byte], fmt: TextFormat,
                     wanted: Seq[String], maxLineno: Long = Long.MaxValue): Iterator[Seq[Any]] = {
-    val text = new String(content, java.nio.charset.Charset.forName(fmt.encoding))
-    val recSep = if (fmt.allowLinefeedInData) "\r\n" else fmt.eol
-    val lines = text.split(recSep, -1).iterator.zipWithIndex
+    val lines = records(content, fmt).iterator.zipWithIndex
     val afterSkip: Iterator[String] = fmt.skipUntil match {
       case Some(pattern) =>
         val rx = pattern.r
@@ -284,12 +314,12 @@ object GraftDataSourceV2 {
       else t
     }
     // raw line → positional field lookup (fixed: lazy per-span substring;
-    // split modes: one split, then per-index access — nulls past the end
-    // like the classic path's element_at)
+    // split modes: one split, then per-index access; a regex or the
+    // degenerate empty separator needs the regex engine)
     val sepRegex =
       if (fmt.isFixedWidth || fmt.quoted) null
-      else if (fmt.sepIsRegex) fmt.sep.r.pattern
-      else java.util.regex.Pattern.compile(java.util.regex.Pattern.quote(fmt.sep))
+      else if (fmt.sepIsRegex || fmt.sep.isEmpty) java.util.regex.Pattern.compile(fmt.sep)
+      else null
     def fields(raw: String): Int => String =
       if (fmt.isFixedWidth) { i =>
         val (start, end) = fmt.poslen(i)
@@ -298,14 +328,21 @@ object GraftDataSourceV2 {
         clean(if (e > s) raw.substring(s, e) else "")
       } else if (fmt.quoted) {
         val parts = splitQuoted(raw, fmt.sep)
-        i => if (i < parts.length) clean(parts(i)) else null
+        i => if (i < parts.length && parts(i).nonEmpty) clean(parts(i)) else null
       } else {
-        val parts = sepRegex.split(raw, -1)
+        val parts = if (sepRegex != null) sepRegex.split(raw, -1) else splitLiteral(raw, fmt.sep)
         i => if (i < parts.length) clean(parts(i)) else null
       }
     val idxByTarget: Map[String, Int] = fmt.targets.zipWithIndex.toMap
+    // per output column: -1 `_file`, -2 `_lineno`, else the field index
+    val slots: Array[Int] = wanted.map {
+      case "_file" => -1
+      case "_lineno" => -2
+      case t => idxByTarget.getOrElse(t,
+        throw new IllegalArgumentException(s"unknown column $t"))
+    }.toArray
     var lineno = 0L
-    // `lineno` counts rows already emitted; once it reaches the pushed
+    // `lineno` counts lines already numbered; once it reaches the pushed
     // upper bound, no later line can satisfy the filters — stop parsing
     afterSkip.filter(_.nonEmpty).takeWhile(_ => lineno < maxLineno).flatMap { raw =>
       lineno += 1
@@ -313,13 +350,11 @@ object GraftDataSourceV2 {
       if (fmt.dropEmptyFirstField && {
         val v = f(0); v == null || v.isEmpty }) None
       else {
-        val n = lineno
-        Some(wanted.map {
-          case "_file"   => path
-          case "_lineno" => n
-          case t => f(idxByTarget.getOrElse(t,
-            throw new IllegalArgumentException(s"unknown column $t")))
-        })
+        Some(scala.collection.immutable.ArraySeq.unsafeWrapArray(slots.map[Any] {
+          case -1 => path
+          case -2 => lineno
+          case k => f(k)
+        }))
       }
     }
   }
@@ -328,9 +363,11 @@ object GraftDataSourceV2 {
 /** One file = one non-splittable partition. */
 final case class GraftInputPartition(path: String) extends InputPartition
 
+/** Parses one file per reader; `text` is a text scan's format. `conf` is
+  * the session's Hadoop conf: its file-system settings reach executors. */
 final class GraftPartitionReaderFactory(
-    kind: String, options: Map[String, String], wanted: Seq[String],
-    maxLineno: Long = Long.MaxValue)
+    kind: String, options: Map[String, String], text: Option[TextFormat],
+    wanted: Seq[String], maxLineno: Long, conf: SerializableConfiguration)
   extends PartitionReaderFactory {
   import GraftDataSourceV2._
 
@@ -338,54 +375,33 @@ final class GraftPartitionReaderFactory(
     val filePath = p.asInstanceOf[GraftInputPartition].path
     new PartitionReader[InternalRow] {
       private val rows: Iterator[Seq[Any]] = {
-        val o = opts(options.asJava)
-        val hPath = new org.apache.hadoop.fs.Path(filePath)
-        // executors resolve the FS from their own site config — no driver
-        // state needs shipping, and every Hadoop-compatible FS works
-        val fs = hPath.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = fs.open(hPath)
-        val content = try {
-          val out = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](1 << 16)
-          var n = in.read(buf)
-          while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-          out.toByteArray
-        } finally in.close()
-        kind match {
-          case "graft-xlsx" =>
+        val content = readBytes(filePath, conf.value)
+        lazy val o = opts(options.asJava)
+        (kind, text) match {
+          case (_, Some(fmt)) =>
+            textProjected(filePath, content, fmt, wanted, maxLineno)
+          case ("graft-xlsx", _) =>
             val fmt = excelFormat(o)
             val (cells, maxRow) = XlsxSource.sheetCells(content, fmt)
             ExcelRows.emitProjected(filePath, cells, maxRow, fmt, wanted)
-          case "graft-xls" =>
+          case ("graft-xls", _) =>
             val fmt = excelFormat(o)
             val (cells, maxRow) = XlsSource.sheetCells(filePath, content, fmt)
             ExcelRows.emitProjected(filePath, cells, maxRow, fmt, wanted)
-          case "graft-xml" =>
+          case ("graft-xml", _) =>
             XmlSource.parseProjected(filePath, content, xmlFormat(o), wanted)
-          case "graft-fixed" =>
-            textProjected(filePath, content, fixedFormat(o), wanted, maxLineno)
-          case "graft-text" =>
-            textProjected(filePath, content, textFormat(o), wanted, maxLineno)
-          case other =>
+          case (other, _) =>
             throw new IllegalStateException(s"unknown graft format $other")
         }
       }
       private var current: InternalRow = _
-      override def next(): Boolean =
-        if (rows.hasNext) {
-          val vs = rows.next()
-          val arr = new Array[Any](vs.length)
-          var i = 0
-          vs.foreach { v =>
-            arr(i) = v match {
-              case s: String => UTF8String.fromString(s)
-              case other => other // Long _lineno or null
-            }
-            i += 1
-          }
-          current = new GenericInternalRow(arr)
-          true
-        } else false
+      override def next(): Boolean = rows.hasNext && {
+        current = new GenericInternalRow(rows.next().iterator.map {
+          case s: String => UTF8String.fromString(s)
+          case other => other // Long _lineno or null
+        }.toArray)
+        true
+      }
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
@@ -393,17 +409,17 @@ final class GraftPartitionReaderFactory(
 }
 
 final class GraftScan(kind: String, options: Map[String, String],
-                      required: StructType,
+                      text: Option[TextFormat], required: StructType,
                       pushed: Seq[Filter] = Seq.empty)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
   import GraftDataSourceV2._
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  private lazy val conf = SparkSession.active.sessionState.newHadoopConf()
   // one driver-side listing serves partition planning AND statistics;
   // pushed `_file` predicates prune it BEFORE partitions are planned
   private lazy val files: Seq[org.apache.hadoop.fs.FileStatus] = {
-    val conf = SparkSession.active.sessionState.newHadoopConf()
     inputPaths(opts(options.asJava)).flatMap { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(conf)
@@ -421,8 +437,8 @@ final class GraftScan(kind: String, options: Map[String, String],
   override def planInputPartitions(): Array[InputPartition] =
     files.map(st => GraftInputPartition(st.getPath.toString): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftPartitionReaderFactory(kind, options, required.fieldNames.toSeq,
-      linenoBound(pushed))
+    new GraftPartitionReaderFactory(kind, options, text, required.fieldNames.toSeq,
+      linenoBound(pushed), new SerializableConfiguration(conf))
   /** Without statistics a DSv2 relation reports `defaultSizeInBytes`
     * (effectively infinite), so a small workbook/XML dim joined to a fact
     * table would never broadcast. Total file size is an upper bound on
@@ -440,7 +456,8 @@ final class GraftScan(kind: String, options: Map[String, String],
 }
 
 final class GraftScanBuilder(kind: String, schema: StructType,
-                             options: Map[String, String])
+                             options: Map[String, String],
+                             text: Option[TextFormat])
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with SupportsPushDownFilters {
   import GraftDataSourceV2._
@@ -459,12 +476,16 @@ final class GraftScanBuilder(kind: String, schema: StructType,
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan =
-    new GraftScan(kind, options, required, pushed.toSeq)
+    new GraftScan(kind, options, text, required, pushed.toSeq)
 }
 
+/** `text`: the format [[GraftDataSourceV2.textScan]] hands over; a
+  * provider's text table reads it from the options. */
 final class GraftFormatTable(kind: String, tableSchema: StructType,
-                             properties: util.Map[String, String])
+                             properties: util.Map[String, String],
+                             text: Option[TextFormat] = None)
   extends Table with SupportsRead {
+  import GraftDataSourceV2._
   override def name(): String = kind
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
@@ -474,8 +495,9 @@ final class GraftFormatTable(kind: String, tableSchema: StructType,
     // scan's map carries the read paths
     val merged = new util.HashMap[String, String](properties)
     merged.putAll(caseInsensitiveOptions.asCaseSensitiveMap())
-    new GraftScanBuilder(kind, tableSchema,
-      merged.asScala.toMap)
+    val fmt = text.orElse(Option.when(kind == "graft-text" || kind == "graft-fixed")(
+      textFormat(kind, opts(merged))))
+    new GraftScanBuilder(kind, tableSchema, merged.asScala.toMap, fmt)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources._
+import graft.sources.v2.GraftDataSourceV2
 import graft.sinks.{TextSink, TextWriteFormat, XlsSink, XlsxSink}
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -204,6 +205,80 @@ class DataSourceV2Spec extends SparkSpec {
     assert(pinned.sorted == Seq((1L, "1"), (2L, "2"), (4L, "3")))
   }
 
+  test("the TextFormat law's pinned rows: quoted, fixed-width, locale numerics, verbatim headers") {
+    // expected rows are the parse of the expression-based TextSource.read
+    // that the law replaced; NULL is printed as "NULL"
+    val dir = tmp("graft-v2-pin-")
+    def parse(name: String, body: String, fmt: TextFormat,
+              opts: Map[String, String] = Map.empty): (Seq[String], Seq[String], Seq[String]) = {
+      val f = dir.resolve(name)
+      Files.write(f, body.getBytes("UTF-8"))
+      def show(df: org.apache.spark.sql.DataFrame) = df.drop("_file").collect().toSeq
+        .map(_.toSeq.map(v => if (v == null) "NULL" else v.toString).mkString("|"))
+      val v2 = if (opts.isEmpty) Nil else show(spark.read.format(
+        if (fmt.isFixedWidth) "graft-fixed" else "graft-text").options(opts).load(f.toString))
+      val df = TextSource.read(spark, Seq(f.toString), fmt)
+      (df.columns.toSeq, show(df), v2)
+    }
+    // quoted mode: an empty field, bare (`,,`) or quoted (`""`), is NULL —
+    // the value SchemaCoercion logs no error for; a blank field trims to
+    // ""; a doubled quote is a literal quote; a trailing separator ends
+    // in an empty (NULL) field; fields past the header are dropped
+    val (_, quoted, quotedV2) = parse("q.csv",
+      "1,,10\n2,\"\",20\n3,\"say \"\"hi\"\"\",30\n4,b,\n5, ,50\n6,\" x \",60\n7,c,70,\n8,\"\"\n9\n",
+      TextFormat(header = header, sep = ",", quoted = true),
+      Map("header" -> "k,name,grp", "sep" -> ",", "quoted" -> "true"))
+    val quotedRows = Seq("1|1|NULL|10", "2|2|NULL|20", "3|3|say \"hi\"|30", "4|4|b|NULL",
+      "5|5||50", "6|6|x|60", "7|7|c|70", "8|8|NULL|NULL", "9|9|NULL|NULL")
+    assert(quoted == quotedRows)
+    assert(quotedV2 == quotedRows)
+    // fixed width: a short line's spans are "" (not NULL), also a span
+    // that starts past the line's end
+    val (_, fixed, fixedV2) = parse("f.fix", "1  alpha 10\n2  be\n3\n4  gamma 40   \n",
+      TextFormat(header = header, poslen = Seq((0, 3), (3, 9), (9, 12))),
+      Map("header" -> "k,name,grp", "poslen" -> "0-3,3-9,9-12"))
+    val fixedRows = Seq("1|1|alpha|10", "2|2|be|", "3|3||", "4|4|gamma|40")
+    assert(fixed == fixedRows)
+    assert(fixedV2 == fixedRows)
+    // locale numerics: grouped thousands, a postfix minus, a `,00` tail
+    val (_, locale, _) = parse("n.txt", "1;1.234,56;x\n2;234,56-;y\n3;17,00;z\n4; 1.000.000,5 ;w\n",
+      TextFormat(header = header, sep = ";", thousandSep = ".", decimalSep = ","))
+    assert(locale == Seq("1|1|1234.56|x", "2|2|234.56-|y", "3|3|17.00|z", "4|4|1000000.5|w"))
+    // header and target names are kept verbatim: a `,` inside a name and
+    // a leading space survive (a `header` option would split and trim them)
+    val (names, rows, _) = parse("h.txt", "1;a\n2;b\n",
+      TextFormat(header = Seq("a,b", " c"), sep = ";"))
+    assert(names == Seq("_file", "_lineno", "a,b", " c"))
+    assert(rows == Seq("1|1|a", "2|2|b"))
+    val (renamed, _, _) = parse("h2.txt", "1;a\n",
+      TextFormat(header = Seq("k", "v"), targetHeader = Seq("x,y", " z"), sep = ";"))
+    assert(renamed == Seq("_file", "_lineno", "x,y", " z"))
+    // a literal separator splits like the regex split of its quoted form
+    for ((line, sep) <- Seq(("a|||b", "||"), ("|x||", "|"), ("1.234,5", "."), ("ab", "ab"), ("a", ";")))
+      assert(GraftDataSourceV2.splitLiteral(line, sep).toSeq ==
+        java.util.regex.Pattern.compile(java.util.regex.Pattern.quote(sep)).split(line, -1).toSeq)
+  }
+
+  test("graft-text and TextSource.read read through the session's Hadoop conf") {
+    // a file-system scheme registered only in the session conf, uncached,
+    // so a reader that builds its own Configuration cannot resolve it
+    val dir = tmp("graft-v2-sessionfs-")
+    Files.write(dir.resolve("d.txt"), "1;a\n2;b\n".getBytes("UTF-8"))
+    val file = "sessionfs://" + dir.resolve("d.txt").toString
+    val keys = Seq("fs.sessionfs.impl" -> classOf[SessionOnlyFs].getName,
+      "fs.sessionfs.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val fmt = TextFormat(header = Seq("k", "v"), sep = ";")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("k", "v").collect().map(r => (r.getString(0), r.getString(1))).toSeq
+      assert(rows(TextSource.read(spark, Seq(file), fmt)) == Seq(("1", "a"), ("2", "b")))
+      assert(rows(spark.read.format("graft-text").option("header", "k,v")
+        .option("sep", ";").load(file)) == Seq(("1", "a"), ("2", "b")))
+      assert(TextSource.firstLine(spark, file, fmt) == "1;a")
+    } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
+  }
+
   test("DSv2 statistics make a small source broadcastable in joins") {
     val dir = tmp("graft-v2-stats-")
     val f = dir.resolve("dim.fix")
@@ -287,4 +362,11 @@ class DataSourceV2Spec extends SparkSpec {
     val one = v2.filter(col("_lineno") === 42L)
     assert(one.select("k").collect().map(_.getString(0)).toSeq == Seq("42"))
   }
+}
+
+/** The local file system under a scheme of its own, `sessionfs:`, for a
+  * test that registers it in the session conf only. */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("sessionfs:///")
+  override def getScheme: String = "sessionfs"
 }

@@ -105,6 +105,36 @@ class PipelineSpec extends SparkSpec {
     assert(result.errors.forall(_.startsWith("non-numeric value for amount: ")))
   }
 
+  test("an Append text load then a keyed Upsert load run within their Spark-job budget") {
+    // each load's cached error job, the Append's write, the Upsert's
+    // shuffle and write; the row counts come from the written footers
+    // and the Upsert's target read plans with a footer's schema, so
+    // neither runs a job
+    val work = tmpDir("graft-jobs-")
+    def write(name: String, lines: Seq[String]): String = {
+      val f = java.nio.file.Paths.get(work, name)
+      Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+      f.toString
+    }
+    val first = Seq(write("a1.csv", (1 to 40).map(i => s"$i;n$i;$i,5")),
+      write("a2.csv", (41 to 80).map(i => s"$i;n$i;$i,5")))
+    val second = Seq(write("b1.csv", (60 to 100).map(i => s"$i;m$i;$i")))
+    val fmt = TextFormat(header = Seq("id", "name", "amount"), sep = ";",
+      thousandSep = ".", decimalSep = ",")
+    val schema = Seq(TargetColumn("id", "bigint"), TargetColumn("name", "varchar", 10),
+      TargetColumn("amount", "double"))
+    val table = tmpDir("graft-table-") + "/t"
+    val (results, jobs) = org.apache.spark.graft.Bus.jobsOf(spark.sparkContext) {
+      Seq(LoadRunner.run(spark, first, Load(TextSpec(fmt),
+          DbConfig(targetSchema = schema, strategy = Append)), table),
+        LoadRunner.run(spark, second, Load(TextSpec(fmt),
+          DbConfig(targetSchema = schema, strategy = Upsert(Seq("id")), keepContent = true)), table))
+    }
+    assert(results.map(_.rows) == Seq(80L, 100L))
+    assert(ParquetTable.load(spark, table).count() == 100)
+    assert(jobs.size <= JobBudget, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+  }
+
   test("firstLine hook reads a windows-1252 file's first line") {
     val work = tmpDir("graft-cp1252-")
     val f = java.nio.file.Paths.get(work, "d.csv")
@@ -279,4 +309,8 @@ class PipelineSpec extends SparkSpec {
     assert(members == Seq("inner.csv"))
     assert(Files.exists(java.nio.file.Paths.get(work, "inner.csv")))
   }
+
+  /** Spark jobs of the Append + Upsert load pair above (12 when the row
+    * count and the target read each ran their own jobs). */
+  private val JobBudget = 5
 }
