@@ -134,8 +134,9 @@ object Dedup {
     // (threshold = Long.MaxValue); set graft.dedup.bandedAbove for
     // corpora where the shingle join's candidate space, not the pair
     // output, is the bottleneck (high shingle-df, low dup density).
-    val bandedAbove = spark.conf.getOption("graft.dedup.bandedAbove")
-      .flatMap(_.toLongOption).getOrElse(Long.MaxValue)
+    val bandedAbove = StoreSwap.confValue(spark, "graft.dedup.bandedAbove",
+      Long.MaxValue, "a non-negative document count")(
+      _.toLongOption.filter(_ >= 0))
     // The count is a full corpus pass; with the knob unset the branch is
     // statically decidable (n <= MaxValue always), so don't buy a scan
     // to compute it — at 100 TB that count is an extra job per cascade.
@@ -228,39 +229,18 @@ object Dedup {
                             threshold: Double = 0.5): CachedResult = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
-    // 31-bit lanes: products stay < 2^62, so the universal-hash arithmetic
-    // never wraps and the min-hash collision property holds exactly
-    val p = 2147483647L // 2^31 - 1 (Mersenne prime)
-    val rnd = new scala.util.Random(42)
-    val coefs = Seq.fill(numHashes)((rnd.nextInt((p - 1).toInt).toLong + 1,
-                                     rnd.nextInt(p.toInt).toLong))
-    // one shingle-hash relation shared by signature build AND verification
-    // (recomputing it would redo the explode+distinct shuffle twice)
+    // one shingle-hash relation shared by the verification joins (the
+    // candidate side and the sizes), cached so its distinct exchange
+    // runs once; the signatures come from the row-wise kernel
     val hashed = shingleHashes(df, idCol, textCol, n).cache()
-    val x = pmod(col("h"), lit(p))
-    // per-row signature array h_k(x) for all K permutations at once, folded
-    // to the per-document element-wise minimum by ONE ArrayMinAgg aggregate
-    // (instead of K separate min columns widening plan + agg buffer K-fold)
-    val coefArr = typedlit(coefs)
-    val sigRow = transform(coefArr,
-      c => pmod(x * c.getField("_1") + c.getField("_2"), lit(p)))
-    val sigAgg = {
-      import org.apache.spark.sql.GraftColumnBridge
-      GraftColumnBridge.column(
-        graft.plans.ArrayMinAgg(GraftColumnBridge.expression(sigRow), numHashes)
-          .toAggregateExpression())
-    }
-    val sigs = hashed.groupBy(col("id")).agg(sigAgg.as("sig"))
-    // banding: one row per (id, band, band-signature), carrying the full
-    // band-signature array so the join can emit each pair exactly once (at
-    // its first colliding band) instead of deduplicating with a distinct;
-    // hash inputs are the same minhash values as the per-column
-    // formulation, so buckets (and therefore candidates) are unchanged
-    val bandSigArr = array((0 until bands).map { bi =>
-      hash((bi * rowsPerBand until (bi + 1) * rowsPerBand)
-        .map(i => element_at(col("sig"), i + 1)): _*)
-    }: _*)
-    val banded = sigs.select(col("id"), bandSigArr.as("sigs"))
+    val sigs = idSignatures(df, idCol, textCol, n, poly = false,
+      minhashCoefs(numHashes, 42L))
+    // banding: one row per (id, band, band-signature) under the store's
+    // band law, carrying the full band-signature array so the join can
+    // emit each pair exactly once (at its first colliding band) instead
+    // of deduplicating with a distinct
+    val banded = sigs
+      .select(col("id"), bandSigArray(col("sig"), bands, rowsPerBand).as("sigs"))
       .select(col("id"), col("sigs"), posexplode(col("sigs")).as(Seq("band", "bsig")))
     val candidates = banded.as("a")
       .join(banded.as("b"),
@@ -271,11 +251,10 @@ object Dedup {
     // exact verification of candidates only (reuses the cached relation);
     // the h column joins as an equi-key — an id-only join would explode
     // each pair into |shingles|² rows before filtering
-    val ds = hashed
-    val sizes = ds.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
+    val sizes = hashed.groupBy(col("id")).agg(count(lit(1)).as("n_sh"))
     val common = candidates
-      .join(ds.withColumnRenamed("id", "id_a"), "id_a")
-      .join(ds.withColumnRenamed("id", "id_b"), Seq("id_b", "h"))
+      .join(hashed.withColumnRenamed("id", "id_a"), "id_a")
+      .join(hashed.withColumnRenamed("id", "id_b"), Seq("id_b", "h"))
       .groupBy(col("id_a"), col("id_b")).agg(count(lit(1)).as("common"))
     val verified = common
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
@@ -465,18 +444,15 @@ object Dedup {
     */
   /** Pick each dup group's surviving document by an arbitrary quality
     * criterion (longest text, highest quality score, …) instead of
-    * [[dupGroups]]'s default lowest-id label: one window over the group —
-    * ties broken by id so the choice is deterministic. Returns the
-    * corpus rows that survive dedup. */
+    * [[dupGroups]]'s default lowest-id label: the top-1 per group
+    * ([[OrderStats.topKPer]]), ties broken by id so the choice is
+    * deterministic. Returns the corpus rows that survive dedup. */
   def selectCanonical(corpus: DataFrame, idCol: String, groups: DataFrame,
-                      preferBy: Column): DataFrame = {
-    val w = Window.partitionBy(col("group_id"))
-      .orderBy(preferBy.desc, col(idCol).asc)
-    corpus.join(groups.select(col("id").as(idCol), col("group_id")), idCol)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1)
-      .drop("__rk", "group_id")
-  }
+                      preferBy: Column): DataFrame =
+    OrderStats.topKPer(
+        corpus.join(groups.select(col("id").as(idCol), col("group_id")), idCol),
+        col("group_id"), 1)(preferBy.desc, col(idCol).asc)
+      .drop("rank", "group_id")
 
   /** Cross-document line-level deduplication (the CCNet/RefinedWeb
     * boilerplate-removal shape, re-derived): a line occurring in at least
@@ -649,48 +625,61 @@ object Dedup {
     * with the signature value min over shingles of (a_k·h + b_k) mod p,
     * where h is the SQL-replayable [[polyHash]] — so the signature
     * VALUES gate against a DuckDB oracle, not just the pair sets they
-    * induce (q21). The relation is the persistent form of near-dup
+    * induce (q88). The relation is the persistent form of near-dup
     * state for incremental ingestion: signatures of two loads merge by
-    * per-(doc, k) MIN, the same element-wise law [[graft.plans.ArrayMinAgg]]
-    * applies inside one load — so a standing signature table is updated
-    * by union + re-aggregate, never by re-reading old text. */
+    * per-(doc, k) MIN, the same law [[idSignatures]] applies to rows
+    * sharing an id inside one load — so a standing signature table is
+    * updated by union + re-aggregate, never by re-reading old text. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         n: Int = 3, numHashes: Int = 16,
-                        seed: Long = 7L): DataFrame = {
-    val coefs = minhashCoefs(numHashes, seed)
-    // NO distinct before the aggregate: min over the shingle multiset
-    // equals min over its set, so deduplicating first would buy a full
-    // (id, shingle) exchange for nothing (guide §2.4 — the per-(id, k)
-    // MIN is already the partial-aggregated reduction); signature
-    // values are bit-identical either way, which the per-value oracle
-    // (q88) gates
-    val hashed = df.select(col(idCol).as("id"),
-        explode(shingleHashArr(col(textCol), n, poly = true)).as("x"))
-    val sigRow = transform(typedlit(coefs), c => permute(col("x"), c))
-    val sigAgg = {
-      import org.apache.spark.sql.GraftColumnBridge
-      GraftColumnBridge.column(
-        graft.plans.ArrayMinAgg(GraftColumnBridge.expression(sigRow), numHashes)
-          .toAggregateExpression())
-    }
-    hashed.groupBy(col("id")).agg(sigAgg.as("sig"))
+                        seed: Long = 7L): DataFrame =
+    idSignatures(df, idCol, textCol, n, poly = true,
+        minhashCoefs(numHashes, seed))
       .select(col("id").as(idCol), posexplode(col("sig")).as(Seq("k", "mh")))
       .select(col(idCol), col("k").cast("long").as("k"), col("mh"))
+
+  /** THE minhash signature law: for a DISTINCT shingle-hash set `xs`
+    * (every value below p) and each coefficient pair (a, b) of `coefs`
+    * ([[minhashCoefs]]), the min over the set of the universal-hash
+    * permutation (a·x + b) mod p — each distinct shingle is permuted
+    * once per k, in the doc's row. x and a are below 2^31, so products
+    * stay below 2^62 and the arithmetic never wraps. Null for an empty
+    * set: a doc without shingles has no signature. Every signature in
+    * this object is formed here. */
+  private def signatureOf(xs: Column, coefs: Seq[(Long, Long)]): Column =
+    when(size(xs) > 0, transform(typedlit(coefs), c => array_min(transform(xs,
+      x => pmod(x * c.getField("_1") + c.getField("_2"), lit(2147483647L))))))
+
+  /** (id, sig) per id of `df` that has shingles: each row's signature
+    * over its distinct shingle-hash set ([[signatureOf]]; xxhash64
+    * lanes, `poly = false`, are first reduced mod p — polyHash values
+    * already are), and the rows that share an id merged by the
+    * element-wise MIN — a minhash signature is a mergeable sketch, so
+    * the merge of the rows' signatures is the signature of the union of
+    * their sets. The aggregate sees one row per input row.
+    *
+    * The set is its own column (referenced twice by [[signatureOf]], so
+    * the projections do not collapse): inlined, it would be recomputed
+    * inside the per-k lambda. The merge skips rows without a signature,
+    * and ids without one are dropped above the aggregate by a count: a
+    * filter on the row's signature would be pushed below its projection
+    * and evaluate the signature twice. */
+  private def idSignatures(df: DataFrame, idCol: String, textCol: String,
+                           n: Int, poly: Boolean,
+                           coefs: Seq[(Long, Long)]): DataFrame = {
+    import org.apache.spark.sql.GraftColumnBridge
+    val hs = array_distinct(shingleHashArr(col(textCol), n, poly))
+    val merge = GraftColumnBridge.column(graft.plans.ArrayMinAgg(
+      GraftColumnBridge.expression(col("sig")), coefs.size)
+      .toAggregateExpression())
+    df.select(col(idCol).as("id"),
+        (if (poly) hs else transform(hs, h => pmod(h, lit(2147483647L))))
+          .as("xs"))
+      .select(col("id"), signatureOf(col("xs"), coefs).as("sig"))
+      .groupBy(col("id")).agg(merge.as("sig"), count(col("sig")).as("n"))
+      .filter(col("n") > 0)
+      .select(col("id"), col("sig"))
   }
-
-  /** The universal-hash permutation (a·x + b) mod p of shingle hash
-    * `x` under coefficient pair `c` ([[minhashCoefs]]). */
-  private def permute(x: Column, c: Column): Column =
-    pmod(x * c.getField("_1") + c.getField("_2"), lit(2147483647L))
-
-  /** The minhash signature of a DISTINCT shingle-hash set `xs`: per
-    * permutation k, the min over the set — the law [[minhashSignatures]]
-    * aggregates row by row (the min over a multiset is the min over its
-    * set), evaluated on one doc's row. Null for an empty set: a doc
-    * without shingles has no signature. */
-  private def signatureOf(xs: Column, numHashes: Int, seed: Long): Column =
-    when(size(xs) > 0, transform(typedlit(minhashCoefs(numHashes, seed)),
-      c => array_min(transform(xs, x => permute(x, c)))))
 
   /** PARTITIONED SIGNATURE STORE — the [[minhashSignatures]] relation
     * laid out for its two standing-corpus duties: absorbing loads via
@@ -871,7 +860,8 @@ object Dedup {
         else None
       val docs = docShingleSets(deltaDocs, idCol, textCol, buckets,
           n +: sideN.toSeq)
-        .withColumn("sig", signatureOf(col(s"xs$n"), numHashes, 7L))
+        .withColumn("sig",
+          signatureOf(col(s"xs$n"), minhashCoefs(numHashes, 7L)))
         .localCheckpoint(true) // the batch, read once: |docs| rows
       val touched = distinctInts(docs.select(col("d_bucket")))
       if (touched.nonEmpty) {
@@ -1160,8 +1150,9 @@ object Dedup {
     // The manual knob stays as override. Recorded in the store manifest
     // so every later mutation/judgment derives the same layout.
     val nDocs = aggRow.getLong(1) / numHashes // one row per (doc, k)
-    val idxBuckets = spark.conf.getOption("graft.lsh.bandIndexBuckets")
-      .flatMap(_.toIntOption).filter(_ >= 1)
+    val idxBuckets = StoreSwap.confValue[Option[Int]](spark,
+        "graft.lsh.bandIndexBuckets", None, "a positive integer")(
+        _.toIntOption.filter(_ >= 1).map(Some(_)))
       .getOrElse(autoBandIndexBuckets(buckets, nDocs))
     StoreSwap.overwriteDir(spark, path, "bands", "bb_bucket",
       bandRows(sigs.select(col(idCol), col("k"), col("mh")),
@@ -1487,8 +1478,9 @@ object Dedup {
     // the delta (the round-13 probe measured per-chunk re-derivation at
     // ~4 s fixed cost x chunk count before this hoist)
     val dDocs = docShingleSets(delta, idCol, textCol, buckets, Seq(n))
-      .withColumn("sig", signatureOf(col(s"xs$n"), numHashes, seed))
-      .filter(col("sig").isNotNull)
+      .filter(size(col(s"xs$n")) > 0) // the docs that have a signature
+      .withColumn("sig",
+        signatureOf(col(s"xs$n"), minhashCoefs(numHashes, seed)))
       .select(col("id").as("d_id"), col(s"xs$n").as("d_xs"), col("sig"))
       .localCheckpoint(true) // bounded: |delta| rows
     val dRowsAll = bandRowsOfSigs(
@@ -1531,8 +1523,9 @@ object Dedup {
     // pushdown sizing off) keeps the lever for deployments where a
     // chunk's fixed cost is cheaper than an index-slice exchange;
     // the broadcast budget below still chunks huge batches.
-    val maxJudgeChunks = spark.conf.getOption("graft.lsh.maxJudgeChunks")
-      .flatMap(_.toIntOption).getOrElse(1)
+    val maxJudgeChunks = StoreSwap.confValue(spark,
+      "graft.lsh.maxJudgeChunks", 1, "a positive integer")(
+      _.toIntOption.filter(_ >= 1))
     val pdChunks = math.ceil(nDelta.toDouble * bands / PushdownCap).toInt
     val chunks =
       if (pdChunks > bcChunks && pdChunks <= maxJudgeChunks) pdChunks

@@ -138,17 +138,13 @@ object Events {
   def ewmaRecent(df: DataFrame, userCol: String, tsCol: String,
                  orderCol: String, valCol: String, k: Int): DataFrame = {
     require(k >= 1 && k <= 40, s"k=$k outside int64-safe dyadic range")
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col(userCol))
-      .orderBy(col(tsCol).desc, col(orderCol).desc)
-    df.select(col(userCol), col(tsCol), col(orderCol),
-        floor(col(valCol) * 1000).cast("long").as("v_milli"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    OrderStats.topKPer(df.select(col(userCol), col(tsCol), col(orderCol),
+          floor(col(valCol) * 1000).cast("long").as("v_milli")),
+        col(userCol), k)(col(tsCol).desc, col(orderCol).desc)
       .groupBy(col(userCol))
       .agg(count(lit(1)).as("n_recent"),
-        sum(expr(s"v_milli * shiftleft(1L, $k - rn)")).as("__s"),
-        sum(expr(s"shiftleft(1L, $k - rn)")).as("__w"))
+        sum(expr(s"v_milli * shiftleft(1L, CAST($k - rank AS INT))")).as("__s"),
+        sum(expr(s"shiftleft(1L, CAST($k - rank AS INT))")).as("__w"))
       // dividing by the weights actually present (2^k − 2^(k−m)) keeps
       // the average unbiased for keys with fewer than k events
       .withColumn("ewma_milli", expr("__s div __w"))

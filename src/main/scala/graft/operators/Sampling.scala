@@ -66,14 +66,14 @@ object Sampling {
 
   /** Exactly min(k, |stratum|) rows per stratum, chosen by hash order
     * (deterministic tiebreak on the key): balanced quota sampling.
-    * Adds `sample_rank` (1-based within stratum). */
+    * Adds `sample_rank` (1-based within stratum).
+    *
+    * @throws IllegalArgumentException when k < 1 */
   def stratifiedQuota(df: DataFrame, strataCol: String, idCol: String,
-                      k: Int, seed: Long = 42L): DataFrame = {
-    val w = Window.partitionBy(col(strataCol))
-      .orderBy(keyHashFor(df, idCol, seed), col(idCol))
-    df.withColumn("sample_rank", row_number().over(w).cast("long"))
-      .filter(col("sample_rank") <= k)
-  }
+                      k: Int, seed: Long = 42L): DataFrame =
+    OrderStats.topKPer(df, col(strataCol), k)(
+        keyHashFor(df, idCol, seed), col(idCol))
+      .withColumnRenamed("rank", "sample_rank")
 
   /** Stable named splits by cumulative weight thresholds on the key hash
     * (e.g. Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)). Adds

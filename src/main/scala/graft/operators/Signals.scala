@@ -316,15 +316,13 @@ object Signals {
       .agg(count(lit(1)).cast("long").as("in_deg"),
         countDistinct(col("lsrc")).cast("long").as("n_sources"))
     // argmax by (count desc, keyword asc): max(struct(n, kw)) can't
-    // reverse a string order, so the pick is a row_number window — but
-    // over the per-(dst, kw) COUNTS (already combined, ≤ distinct
+    // reverse a string order, so the pick is the top-k kernel at k = 1,
+    // but over the per-(dst, kw) COUNTS (already combined, ≤ distinct
     // keywords per target), never the raw edge set.
     val kwCounts = joined.groupBy(col("dst"), col("kw"))
       .agg(count(lit(1)).cast("long").as("n"))
-    val w = Window.partitionBy(col("dst"))
-      .orderBy(col("n").desc, col("kw"))
-    val top = kwCounts.withColumn("r", row_number().over(w))
-      .filter(col("r") === 1)
+    val top = OrderStats.topKPer(kwCounts, col("dst"), 1)(
+        col("n").desc, col("kw"))
       .select(col("dst"), col("kw").as("top_anchor"), col("n").as("anchor_n"))
     base.join(top, "dst").withColumnRenamed("dst", "id")
   }

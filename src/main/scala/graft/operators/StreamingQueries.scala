@@ -55,8 +55,9 @@ object StreamingQueries {
           (k.startsWith("spark.sql.") && spark.conf.isModifiable(k)))
         ss.conf.set(k, v)
     }
-    val n = spark.conf.getOption("graft.stream.statePartitions")
-      .flatMap(_.toIntOption)
+    val n = StoreSwap.confValue[Option[Int]](spark,
+        "graft.stream.statePartitions", None, "a positive integer")(
+        _.toIntOption.filter(_ >= 1).map(Some(_)))
       .getOrElse {
         val per = 32L << 20 // 32 MB of staged input per state partition
         // floor of 4, not 1: a single state partition serializes the

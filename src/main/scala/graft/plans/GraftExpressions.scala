@@ -937,9 +937,10 @@ case class ArraySumAgg(child: Expression, n: Int)
 }
 
 /** Element-wise minimum over fixed-length `array<long>` rows — the MinHash
-  * signature fold as ONE aggregate column instead of `numHashes` separate
-  * `min` aggregates (which widen the plan and the aggregation buffer
-  * schema 32-fold). Declarative: update/merge are Catalyst expressions
+  * signature merge of rows that share an id (the signature of a union of
+  * shingle sets is the element-wise MIN of the sets' signatures) as ONE
+  * aggregate column instead of `numHashes` separate `min` aggregates
+  * (which widen the plan and the aggregation buffer schema 32-fold). Declarative: update/merge are Catalyst expressions
   * (`zip_with(buf, row, least)`), so map-side partial aggregation and
   * buffer merging come for free, exactly like the built-in `min`.
   */

@@ -27,6 +27,11 @@ class SamplingSpec extends SparkSpec {
     // small stratum: takes all of it
     val tiny = Seq((1L, "x"), (2L, "x")).toDF("id", "stratum")
     assert(Sampling.stratifiedQuota(tiny, "stratum", "id", k = 7).count() == 2)
+    // a quota below 1 is the top-k kernel's named error (it used to
+    // return an empty sample)
+    val e = intercept[IllegalArgumentException](
+      Sampling.stratifiedQuota(df, "stratum", "id", k = 0))
+    assert(e.getMessage.contains("topKPer: k must be >= 1, got 0"))
   }
 
   test("string keys hash through polyHash instead of a null-ing cast") {

@@ -139,7 +139,77 @@ class ScaleOpsSpec extends SparkSpec {
       .union(Dedup.minhashSignatures(b, "id", "t"))
       .groupBy(col("id"), col("k")).agg(min(col("mh")).as("mh"))
     assert(whole.except(merged).isEmpty && merged.except(whole).isEmpty)
+    // rows that add no shingles leave an id's signature as it was: a
+    // second row with empty text, and an exact repeat of a row; an id
+    // whose only row is empty has no signature rows at all
+    val fox = "the quick brown fox jumps over the lazy dog"
+    def sigRows(rows: Seq[(Long, String)]) =
+      Dedup.minhashSignatures(rows.toDF("id", "t"), "id", "t")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        .sorted.toSeq
+    val once = sigRows(Seq((2L, fox)))
+    assert(once.size == 16)
+    assert(sigRows(Seq((2L, fox), (2L, ""))) == once)
+    assert(sigRows(Seq((2L, fox), (2L, fox))) == once)
+    assert(sigRows(Seq((3L, ""))).isEmpty)
+    assert(sigRows(Seq((2L, fox), (3L, ""))) == once)
   }
+
+  test("minhashLshPairs emits the pinned q21-shaped pair rows") {
+    import spark.implicits._
+    // q21's shape: each doc plus a copy without its first word (id +
+    // 100000), 5-shingles, 32 hashes in 8 bands of 4, threshold 0.5.
+    // Edited copies (id + 200000) swap 1-4 words, so their Jaccard to
+    // the original spans the threshold and banding recall is partial:
+    // the rows below are the banded output, not the exact pair set
+    val vocab = ("alpha beta gamma delta epsilon zeta eta theta iota kappa" +
+      " lambda mu nu xi omicron pi rho sigma tau upsilon phi chi psi" +
+      " omega red green blue cyan magenta yellow black white").split(" ")
+    val rnd = new scala.util.Random(11)
+    val base = (1L to 16L).map(i =>
+      i -> Seq.fill(60)(vocab(rnd.nextInt(vocab.length))))
+    val docs = base.flatMap { case (i, ws) =>
+      val swaps = (0 until (i % 4).toInt + 1).map(j => 7 + j * 14)
+      Seq(i -> ws.mkString(" "),
+        (i + 100000L) -> ws.tail.mkString(" "),
+        (i + 200000L) -> ws.zipWithIndex.map { case (w, j) =>
+          if (swaps.contains(j)) "zzz" + j else w }.mkString(" "))
+    }.toDF("doc_id", "text")
+    val got = Dedup.minhashLshPairs(docs, "doc_id", "text",
+        n = 5, numHashes = 32, bands = 8, threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .sorted.toSeq
+    assert(got == q21Pinned)
+  }
+
+  // the output of the murmur band law this function used before it
+  // banded through the store's polynomial fold: the edited copies of
+  // docs 1 (0.70) and 10 (0.58) share no band with their originals,
+  // those of docs 3/7/11/15 fall below 0.5
+  private val q21Pinned = Seq(
+    (1L, 100001L, 0.9821428571428571), (2L, 100002L, 0.9821428571428571),
+    (2L, 200002L, 0.5774647887323944), (3L, 100003L, 0.9821428571428571),
+    (4L, 100004L, 0.9821428571428571), (4L, 200004L, 0.8360655737704918),
+    (5L, 100005L, 0.9821428571428571), (5L, 200005L, 0.696969696969697),
+    (6L, 100006L, 0.9821428571428571), (6L, 200006L, 0.5774647887323944),
+    (7L, 100007L, 0.9821428571428571), (8L, 100008L, 0.9821428571428571),
+    (8L, 200008L, 0.8360655737704918), (9L, 100009L, 0.9821428571428571),
+    (9L, 200009L, 0.696969696969697), (10L, 100010L, 0.9821428571428571),
+    (11L, 100011L, 0.9821428571428571), (12L, 100012L, 0.9821428571428571),
+    (12L, 200012L, 0.8360655737704918), (13L, 100013L, 0.9821428571428571),
+    (13L, 200013L, 0.696969696969697), (14L, 100014L, 0.9821428571428571),
+    (14L, 200014L, 0.5774647887323944), (15L, 100015L, 0.9821428571428571),
+    (16L, 100016L, 0.9821428571428571), (16L, 200016L, 0.8360655737704918),
+    (100002L, 200002L, 0.5633802816901409),
+    (100004L, 200004L, 0.819672131147541),
+    (100005L, 200005L, 0.6818181818181818),
+    (100006L, 200006L, 0.5633802816901409),
+    (100008L, 200008L, 0.819672131147541),
+    (100009L, 200009L, 0.6818181818181818),
+    (100012L, 200012L, 0.819672131147541),
+    (100013L, 200013L, 0.6818181818181818),
+    (100014L, 200014L, 0.5633802816901409),
+    (100016L, 200016L, 0.819672131147541))
 
   test("funnelCounts enforces order and the max gap") {
     import spark.implicits._

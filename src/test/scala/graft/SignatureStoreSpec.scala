@@ -92,15 +92,17 @@ class SignatureStoreSpec extends SparkSpec {
     spark.conf.set("graft.lsh.maxBroadcastMb", "0.0008")
     try assert(run() == single)
     finally spark.conf.unset("graft.lsh.maxBroadcastMb")
-    // an unparsable or non-positive budget is a named error, never a
-    // silent fall-back to the default
-    for (bad <- Seq("lots", "-2")) {
-      spark.conf.set("graft.lsh.maxBroadcastMb", bad)
+    // an unparsable or non-positive budget or chunk cap is a named
+    // error, never a silent fall-back to the default
+    for ((key, bad) <- Seq("graft.lsh.maxBroadcastMb" -> "lots",
+        "graft.lsh.maxBroadcastMb" -> "-2", "graft.lsh.maxJudgeChunks" -> "x",
+        "graft.lsh.maxJudgeChunks" -> "0")) {
+      spark.conf.set(key, bad)
       try {
         val e = intercept[IllegalArgumentException](run())
-        assert(e.getMessage.contains("graft.lsh.maxBroadcastMb") &&
+        assert(e.getMessage.contains(key) &&
           e.getMessage.contains(s"'$bad'"), e.getMessage)
-      } finally spark.conf.unset("graft.lsh.maxBroadcastMb")
+      } finally spark.conf.unset(key)
     }
   }
 
@@ -122,6 +124,18 @@ class SignatureStoreSpec extends SparkSpec {
     spark.conf.set("graft.lsh.bandIndexBuckets", "128")
     try Dedup.writeBandIndex(spark, path, "doc_id", bands = 2)
     finally spark.conf.unset("graft.lsh.bandIndexBuckets")
+    assert(run() == at8)
+    // a granularity that is not a positive integer is a named error,
+    // not a silent switch to the auto layout
+    for (bad <- Seq("0", "fine")) {
+      spark.conf.set("graft.lsh.bandIndexBuckets", bad)
+      try {
+        val e = intercept[IllegalArgumentException](
+          Dedup.writeBandIndex(spark, path, "doc_id", bands = 2))
+        assert(e.getMessage.contains("graft.lsh.bandIndexBuckets") &&
+          e.getMessage.contains(s"'$bad'"), e.getMessage)
+      } finally spark.conf.unset("graft.lsh.bandIndexBuckets")
+    }
     assert(run() == at8)
     // a post-rebuild merge derives the RECORDED granularity (not the
     // session conf, which is unset again) and the judge still agrees

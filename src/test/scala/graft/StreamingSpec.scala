@@ -26,6 +26,15 @@ class StreamingSpec extends SparkSpec {
     // derives the floor, min(4, cores)
     val floor = math.min(4, spark.sparkContext.defaultParallelism)
     assert(child.conf.get("spark.sql.shuffle.partitions") == floor.toString)
+    // a state-partition count that is not a positive integer is a named
+    // error, not a silent fall-back to the derived count
+    for (bad <- Seq("auto", "0")) {
+      parent.conf.set("graft.stream.statePartitions", bad)
+      val e = intercept[IllegalArgumentException](
+        graft.operators.StreamingQueries.streamSession(parent))
+      assert(e.getMessage.contains("graft.stream.statePartitions") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 
   test("file stream: each arriving file is one upsert micro-batch (R1/R4)") {
