@@ -451,8 +451,8 @@ object Dedup {
                       preferBy: Column): DataFrame =
     OrderStats.topKPer(
         corpus.join(groups.select(col("id").as(idCol), col("group_id")), idCol),
-        col("group_id"), 1)(preferBy.desc, col(idCol).asc)
-      .drop("rank", "group_id")
+        col("group_id"), 1, "__canonical_rank")(preferBy.desc, col(idCol).asc)
+      .drop("__canonical_rank", "group_id")
 
   /** Cross-document line-level deduplication (the CCNet/RefinedWeb
     * boilerplate-removal shape, re-derived): a line occurring in at least
@@ -856,7 +856,7 @@ object Dedup {
         else None
       val layout =
         if (StoreSwap.dirExists(spark, path, "bands"))
-          Some(bandLayout(spark, path, buckets))
+          Some(bandLayout(spark, path))
         else None
       val docs = docShingleSets(deltaDocs, idCol, textCol, buckets,
           n +: sideN.toSeq)
@@ -880,12 +880,11 @@ object Dedup {
     } // else: redelivered batch, already fully absorbed and acked
   }
 
-  /** [[StoreSwap.open]] for a signature store: an older on-disk layout
-    * migrates once, with the layout constants of its sidecars (bucket
-    * count, shingle width, band layout) seeded INTO the migration
-    * manifest — so historical judgments of the cutover snapshot survive
-    * a later rebuild under a different graft.lsh.bandIndexBuckets.
-    * Idempotent; a no-op on a store already on the manifest. */
+  /** [[StoreSwap.open]] for a signature store: an older store is
+    * upgraded once to the current protocol, with the layout constants of
+    * its sidecars (bucket count, shingle width, band layout) seeded INTO
+    * the upgrade manifest and a missing band inventory derived.
+    * Idempotent; one `exists` call on a current store. */
   def unifySignatureStore(spark: SparkSession, path: String): Unit =
     StoreSwap.open(spark, path)
 
@@ -1158,21 +1157,7 @@ object Dedup {
       bandRows(sigs.select(col(idCol), col("k"), col("mh")),
         idCol, bands, r, idxBuckets),
       Seq(col("band"), col("bsig"), col("id")))
-    // per-doc BAND INVENTORY, partitioned by the doc's OWN bucket: the
-    // index rows a doc currently owns stay DERIVABLE FROM ITS ID even
-    // after a re-ingest changes its signature (the band values — hence
-    // the index buckets — of the old rows are otherwise unrecoverable).
-    // This is what makes [[reindexDocsInBandIndex]] doc-footprint
-    // instead of the full rebuild that used to be the only stale-row
-    // remedy. Derived from the JUST-WRITTEN index (a cheap column scan)
-    // rather than re-running the corpus-scale band derivation a second
-    // time — the rebuild's dominant compute would otherwise double.
-    StoreSwap.overwriteDir(spark, path, "bands_inv", "d_bucket",
-      StoreSwap.readDir(spark, path, "bands", "bb_bucket")
-        .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
-        .withColumn("d_bucket",
-          pmod(col("id"), lit(buckets.toLong)).cast("int")),
-      Seq(col("id"), col("band")))
+    writeBandInventory(spark, path, buckets)
     // The layout constants version through the manifest (same
     // rename as the band rows): a historical judgment resolves
     // bands/r/idx_buckets from its pinned version, so a rebuild under a
@@ -1182,6 +1167,26 @@ object Dedup {
     // silently drops candidates).
     putBandsMeta(spark, path, bands, r, idxBuckets)
   }
+
+  /** The per-doc BAND INVENTORY of the store's band index, partitioned
+    * by the doc's OWN bucket (of `buckets`): the index rows a doc
+    * currently owns stay DERIVABLE FROM ITS ID even after a re-ingest
+    * changes its signature (the band values — hence the index buckets —
+    * of the old rows are otherwise unrecoverable). This is what makes
+    * [[reindexDocsInBandIndex]] and [[forgetFromBandIndex]]
+    * doc-footprint instead of a full rebuild. Derived from the index
+    * itself (a cheap column scan) rather than re-running the
+    * corpus-scale band derivation a second time. Run by
+    * [[writeBandIndex]] and by the store upgrade ([[StoreSwap.open]])
+    * for an index written before the inventory existed. */
+  private[operators] def writeBandInventory(spark: SparkSession,
+                                            path: String,
+                                            buckets: Int): Unit =
+    StoreSwap.overwriteDir(spark, path, "bands_inv", "d_bucket",
+      StoreSwap.readDir(spark, path, "bands", "bb_bucket")
+        .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
+        .withColumn("d_bucket", docBucket(col("id"), buckets)),
+      Seq(col("id"), col("band")))
 
   /** AUTO band-index directory granularity from the standing doc
     * count — the pure rule derived from BandLayoutProbe's measured
@@ -1222,26 +1227,16 @@ object Dedup {
     * manifest's layout: a [[writeBandIndex]] rebuild under a different
     * `graft.lsh.bandIndexBuckets` inside the retention window changes
     * the live one, and deriving delta `bb_bucket`s from it against
-    * band rows PINNED under the old layout silently drops candidates.
-    * idxBuckets falls back to the store's bucket count for indexes
-    * written before the layout knob existed. */
+    * band rows PINNED under the old layout silently drops candidates. */
   private def bandLayout(spark: SparkSession, path: String,
-                         storeBuckets: Int,
                          asOf: Option[Int] = None): (Int, Int, Int) = {
     def constant(name: String) =
       StoreSwap.layoutConstant(spark, path, name, asOf).map(_.toInt)
-    (constant(BandsKey), constant(RowsPerBandKey)) match {
-      case (Some(b), Some(r)) =>
-        (b, r, constant(IdxBucketsKey).getOrElse(storeBuckets))
-      case _ => sys.error(s"$path has no band index — build it with" +
-        " writeBandIndex")
-    }
+    (for (b <- constant(BandsKey); r <- constant(RowsPerBandKey);
+          idx <- constant(IdxBucketsKey)) yield (b, r, idx))
+      .getOrElse(sys.error(s"$path has no band index — build it with" +
+        " writeBandIndex"))
   }
-
-  /** Whether `path` carries the per-doc band inventory (indexes built
-    * before it existed lack one until the next [[writeBandIndex]]). */
-  private def bandInvExists(spark: SparkSession, path: String): Boolean =
-    StoreSwap.dirExists(spark, path, "bands_inv")
 
   /** The inventory's rows for the docs `ids` (column `id`) — pruned to
     * their doc buckets `db`. */
@@ -1269,8 +1264,8 @@ object Dedup {
 
   /** The band-index merge — the one law of [[mergeIntoBandIndex]] and
     * [[ingestBatchIntoStore]]: the docs' current band `rows` are
-    * union-distinct-merged into the index's touched `bb_bucket`s and,
-    * with the inventory present, into the inventory's doc buckets `db`
+    * union-distinct-merged into the index's touched `bb_bucket`s and
+    * into the inventory's doc buckets `db`
     * (after the merge the docs own old ∪ fresh rows in the index —
     * recorded exactly so, so a later repair or forget finds the old rows
     * without a corpus scan). Both rewrites join the open commit; each
@@ -1288,16 +1283,14 @@ object Dedup {
       StoreSwap.stagedRewrite(spark, path, "bb_bucket", touched,
         slice.unionByName(rows).repartition(col("bb_bucket")).distinct(),
         Seq(col("band"), col("bsig"), col("id")), "bands")
-      if (bandInvExists(spark, path)) {
-        val invSlice = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
-          .filter(col("d_bucket").isin(db: _*))
-          .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
-        StoreSwap.stagedRewrite(spark, path, "d_bucket", db,
-          invSlice.unionByName(rows)
-            .withColumn("d_bucket", docBucket(col("id"), buckets))
-            .repartition(col("d_bucket")).distinct(),
-          Seq(col("id"), col("band")), "bands_inv")
-      }
+      val invSlice = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+        .filter(col("d_bucket").isin(db: _*))
+        .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
+      StoreSwap.stagedRewrite(spark, path, "d_bucket", db,
+        invSlice.unionByName(rows)
+          .withColumn("d_bucket", docBucket(col("id"), buckets))
+          .repartition(col("d_bucket")).distinct(),
+        Seq(col("id"), col("band")), "bands_inv")
     }
     touched
   }
@@ -1320,29 +1313,22 @@ object Dedup {
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
     rewriteBandIndex(spark, path, buckets, db,
-      bandRowsForDocs(spark, path, ids, idCol, db,
-        bandLayout(spark, path, buckets)))
+      bandRowsForDocs(spark, path, ids, idCol, db, bandLayout(spark, path)))
   }
 
-  /** Drop docs from the band index. With the band inventory present,
-    * the docs' rows (INCLUDING stale ones from signature-changing
-    * re-ingests) are found through their own d_buckets; a pre-inventory
-    * index falls back to deriving from the docs' current signatures, in
-    * which case this MUST run BEFORE [[forgetDocsFromSignatureStore]]
-    * (the signature forget destroys the derivation) and stale rows from
-    * changed signatures are missed. Returns rows removed. */
+  /** Drop docs from the band index. The docs' rows (INCLUDING stale
+    * ones from signature-changing re-ingests) are found through the
+    * band inventory's rows in their own d_buckets, so this needs no
+    * signature and may run before or after
+    * [[forgetDocsFromSignatureStore]]. Returns rows removed. */
   def forgetFromBandIndex(spark: SparkSession, path: String,
                           docIds: DataFrame,
                           idCol: String): Long = storeTxn(spark, path) {
-    val hasInv = bandInvExists(spark, path)
     val buckets = StoreSwap.bucketCount(spark, path)
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
-    val rows =
-      if (hasInv) invRowsForDocs(spark, path, ids, db)
-      else bandRowsForDocs(spark, path, ids, idCol, db,
-        bandLayout(spark, path, buckets))
-    val touched = distinctInts(rows.select(col("bb_bucket")))
+    val touched = distinctInts(invRowsForDocs(spark, path, ids, db)
+      .select(col("bb_bucket")))
     if (touched.isEmpty) return 0L
     val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
@@ -1352,13 +1338,11 @@ object Dedup {
       "bb_bucket", touched, kept,
       Seq(col("band"), col("bsig"), col("id")), "bands")
     // drop the docs' inventory rows too, in the same commit
-    if (hasInv) {
-      val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
-        .filter(col("d_bucket").isin(db: _*))
-        .join(ids, Seq("id"), "left_anti")
-      StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invKept,
-        Seq(col("id"), col("band")), "bands_inv")
-    }
+    val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+      .filter(col("d_bucket").isin(db: _*))
+      .join(ids, Seq("id"), "left_anti")
+    StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invKept,
+      Seq(col("id"), col("band")), "bands_inv")
     removed
   }
 
@@ -1377,13 +1361,11 @@ object Dedup {
   def reindexDocsInBandIndex(spark: SparkSession, path: String,
                              docIds: DataFrame,
                              idCol: String): Long = storeTxn(spark, path) {
-    require(bandInvExists(spark, path),
-      s"$path has no band inventory — rebuild with writeBandIndex first")
     val buckets = StoreSwap.bucketCount(spark, path)
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
     val fresh = bandRowsForDocs(spark, path, ids, idCol, db,
-      bandLayout(spark, path, buckets))
+      bandLayout(spark, path))
     val stale = invRowsForDocs(spark, path, ids, db)
       .join(fresh.select(col("id"), col("band"), col("bsig")),
         Seq("id", "band", "bsig"), "left_anti")
@@ -1452,7 +1434,7 @@ object Dedup {
     // the PINNED one on historical replays (a post-pin rebuild may have
     // changed them), the current one live
     val buckets = StoreSwap.bucketCount(spark, path, asOf)
-    val (bands, r, idxBuckets) = bandLayout(spark, path, buckets, asOf)
+    val (bands, r, idxBuckets) = bandLayout(spark, path, asOf)
     require(bands * r == numHashes, "band geometry must match the store")
     // version-pinned store reads for the historical replay
     def storeDir(dataDir: String, partCol: String): DataFrame = asOf match {

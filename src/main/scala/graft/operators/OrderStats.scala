@@ -272,19 +272,25 @@ object OrderStats {
   /** The top-k kernel every "k best rows per group" operator runs: one
     * `row_number` window partitioned by `by`, ordered by `order` (which
     * must end in a unique tie-break for a deterministic result), and one
-    * `rank <= k` filter. Adds a long `rank` column (1-based) and keeps
-    * every input column. The filter sits directly on the window, so
-    * Spark plans a `WindowGroupLimit` below the window exchange and each
-    * task keeps at most k rows per group before the sort.
+    * `rank <= k` filter. Adds the long rank column `rankCol` (1-based)
+    * and keeps every input column. The filter sits directly on the
+    * window, so Spark plans a `WindowGroupLimit` below the window
+    * exchange and each task keeps at most k rows per group before the
+    * sort.
     *
-    * @throws IllegalArgumentException when k < 1 */
-  private[operators] def topKPer(df: DataFrame, by: Column, k: Int)(
+    * @throws IllegalArgumentException when k < 1, or when `df` already
+    *         has a column named `rankCol` */
+  private[operators] def topKPer(df: DataFrame, by: Column, k: Int,
+                                 rankCol: String = "rank")(
       order: Column*): DataFrame = {
     if (k < 1)
       throw new IllegalArgumentException(s"topKPer: k must be >= 1, got $k")
-    df.withColumn("rank",
+    if (df.columns.contains(rankCol))
+      throw new IllegalArgumentException(s"topKPer: the input already has" +
+        s" a column `$rankCol`; name the rank column something else")
+    df.withColumn(rankCol,
         row_number().over(Window.partitionBy(by).orderBy(order: _*))
           .cast("long"))
-      .filter(col("rank") <= k)
+      .filter(col(rankCol) <= k)
   }
 }

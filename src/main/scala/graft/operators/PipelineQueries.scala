@@ -266,15 +266,12 @@ object PipelineQueries {
     * score's expression tree parenthesis-for-parenthesis (pure IEEE
     * `+ * /`, no ln) and the order-canonicalized term-score fold. */
   def q67Bm25(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("term"))
-    val qterms = docs.filter(col("doc_id") < 8)
-      .select(col("doc_id").as("query_id"),
-        explode(TextOps.tokens(col("text"))).as("term"))
-      .distinct()
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= 4).drop("r")
+    val qterms = OrderStats.topKPer(docs.filter(col("doc_id") < 8)
+        .select(col("doc_id").as("query_id"),
+          explode(TextOps.tokens(col("text"))).as("term"))
+        .distinct(), col("query_id"), 4, "r")(col("term"))
+      .drop("r")
     Retrieval.bm25TopK(docs, "doc_id", "text", qterms, "query_id", "term",
         k = 10)
       .orderBy(col("query_id"), col("rank"))

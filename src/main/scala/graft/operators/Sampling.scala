@@ -71,9 +71,8 @@ object Sampling {
     * @throws IllegalArgumentException when k < 1 */
   def stratifiedQuota(df: DataFrame, strataCol: String, idCol: String,
                       k: Int, seed: Long = 42L): DataFrame =
-    OrderStats.topKPer(df, col(strataCol), k)(
-        keyHashFor(df, idCol, seed), col(idCol))
-      .withColumnRenamed("rank", "sample_rank")
+    OrderStats.topKPer(df, col(strataCol), k, "sample_rank")(
+      keyHashFor(df, idCol, seed), col(idCol))
 
   /** Stable named splits by cumulative weight thresholds on the key hash
     * (e.g. Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)). Adds

@@ -78,15 +78,12 @@ object SignalQueries {
     * embeddings, fused by reciprocal rank ([[Signals.rrfFuse]], top-10).
     * The oracle replays BOTH rankers and the fusion arithmetic. */
   def q148HybridRrf(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("term"))
-    val qterms = docs.filter(col("doc_id") < 5)
-      .select(col("doc_id").as("query_id"),
-        explode(TextOps.tokens(col("text"))).as("term"))
-      .distinct()
-      .withColumn("r", row_number().over(w))
-      .filter(col("r") <= 4).drop("r")
+    val qterms = OrderStats.topKPer(docs.filter(col("doc_id") < 5)
+        .select(col("doc_id").as("query_id"),
+          explode(TextOps.tokens(col("text"))).as("term"))
+        .distinct(), col("query_id"), 4, "r")(col("term"))
+      .drop("r")
     val sparse = Retrieval.bm25TopK(docs, "doc_id", "text", qterms,
         "query_id", "term", k = 20)
       .select(col("query_id"), col("doc_id"), col("rank"))

@@ -1764,7 +1764,7 @@ object Similarity {
   private def fragBuckets(spark: SparkSession, path: String,
                           dataDir: String, partCol: String,
                           maxFiles: Int): Seq[Int] = {
-    val conf = spark.sparkContext.hadoopConfiguration
+    val conf = spark.sessionState.newHadoopConf()
     StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap {
       case (_, entries) => entries.toSeq.flatMap { case (d, gens) =>
         d.stripPrefix(partCol + "=").toIntOption.filter { _ =>
@@ -1950,7 +1950,7 @@ object Similarity {
     // already appended and the duplicate guards below would miss them.
     val memTmp = path + "/.refit-members"
     val tmpPath = new org.apache.hadoop.fs.Path(memTmp)
-    val tmpFs = tmpPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmpFs = tmpPath.getFileSystem(spark.sessionState.newHadoopConf())
     val nextIdFile = new org.apache.hadoop.fs.Path(memTmp + "/_next_id")
     val pruned = readStandingStorePruned(spark, path, drifted.toSeq)
     if (pruned.count() > 0L) {

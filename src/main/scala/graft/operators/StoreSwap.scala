@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.sinks.ParquetFooters
 
@@ -44,18 +45,27 @@ import graft.sinks.ParquetFooters
   * no manifest of the `graft.store.snapshotKeep` grace window (default
   * 1 prior version) references.
   *
-  * '''Open = migrate.''' Every store entry point calls [[open]] first.
-  * On a store this protocol created or already migrated it costs one
-  * `exists` call. An older on-disk layout — the legacy in-place bucket
-  * swap (`$path/data/d_bucket=…` with a `_pending_swap` manifest),
-  * per-dataDir `_v/<dataDir>.v<N>` manifests, a write-once `codebook`
-  * dir, or a PQ triple swapped behind `_pending_pq` — is migrated ONCE
-  * under the writer lease: pending legacy swaps roll forward, partition
-  * dirs are renamed in as generation 0, per-dataDir manifest state is
-  * adopted, and the codebook / PQ triple are recommitted as versioned
-  * dataDirs, all published by one manifest rename. The layout constants
-  * the old layouts kept in one-row parquet sidecars (`meta`,
-  * `shingles_meta`, `bands_meta`) are seeded into that manifest.
+  * '''Protocol.''' Every manifest records the store protocol as the
+  * reserved entry `#meta:protocol|2` ([[Protocol]]). Every read and
+  * write refuses a manifest above it with a named
+  * `IllegalStateException` instead of misreading it. Every store entry
+  * point calls [[open]] first; on a protocol-2 store that is one
+  * `exists` call, of the `_v/_protocol2` marker. Anything older is
+  * upgraded ONCE, under the writer lease, by one manifest rename:
+  *  - a protocol-1 store (the `_v/_open` marker, manifests without the
+  *    entry);
+  *  - a layout from before the manifest: the legacy in-place bucket
+  *    swap (`$path/data/d_bucket=…` with a `_pending_swap` manifest),
+  *    per-dataDir `_v/<dataDir>.v<N>` manifests, a write-once
+  *    `codebook` dir, or a PQ triple swapped behind `_pending_pq`.
+  *    Pending legacy swaps roll forward, partition dirs are renamed in
+  *    as generation 0, per-dataDir manifest state is adopted, and the
+  *    codebook / PQ triple are recommitted as versioned dataDirs.
+  * The upgrade seeds the layout constants the old stores kept in
+  * one-row parquet sidecars (`meta`, `shingles_meta`, `bands_meta`),
+  * splits a store-wide batch ledger per dataDir and derives a missing
+  * band inventory. Only [[open]] knows what an older store looks like;
+  * reads and merges assume protocol 2.
   *
   * Directory renames are atomic on HDFS-semantics filesystems (HDFS,
   * local, ABFS); on raw S3 they are copy+delete, where a production
@@ -65,8 +75,27 @@ import graft.sinks.ParquetFooters
   * same store path fails fast instead of clobbering the staging dir.
   */
 object StoreSwap {
+  /** The Hadoop conf of the store operation this thread runs
+    * ([[operation]]); null outside one. */
+  private val opConf = new ThreadLocal[Configuration]
+
+  /** Run `body` as one store operation: the session's Hadoop conf is
+    * resolved once for all of it. Each resolution copies the conf, and
+    * one commit makes dozens of file-system calls. */
+  private def operation[T](spark: SparkSession)(body: => T): T =
+    if (opConf.get != null) body
+    else {
+      opConf.set(spark.sessionState.newHadoopConf())
+      try body finally opConf.remove()
+    }
+
+  /** The session's Hadoop conf — the conf Spark's own parquet reads and
+    * writes of the store use. */
+  private def hadoopConf(spark: SparkSession): Configuration =
+    Option(opConf.get).getOrElse(spark.sessionState.newHadoopConf())
+
   private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    p.getFileSystem(hadoopConf(spark))
 
   private def staging(path: String) = new Path(path + "/.staging")
   private def lease(path: String) = new Path(path + "/_writer_lease")
@@ -192,15 +221,24 @@ object StoreSwap {
     }
   }
 
-  // ---- open = migrate ------------------------------------------------
+  // ---- open = protocol check + one-time upgrade ------------------------
 
   /** The manifest family name — reserved; no dataDir may be called
     * this. */
   private val StoreFamily = "store"
 
-  /** Written once a store is on this protocol (created fresh or
-    * migrated); its presence is all [[open]] checks. */
-  private def openMarker(path: String) = new Path(path + "/_v/_open")
+  /** The store protocol this build reads and writes, recorded in every
+    * manifest as `#meta:protocol`. One integer: graft has one reader
+    * and one writer, so there is no reader/writer split and no feature
+    * set. A manifest above it is refused ([[readManifest]]). */
+  val Protocol: Int = 2
+
+  private val ProtocolKey = storeMetaKey("protocol")
+
+  /** Written once a store is on [[Protocol]] (created fresh or
+    * upgraded); its presence is all [[open]] checks. */
+  private def protocolMarker(path: String) =
+    new Path(s"$path/_v/_protocol$Protocol")
 
   /** Legacy partition dirs migrated by RENAME into generation 0. */
   private val LegacyDataDirs = Seq("data", "bands", "bands_inv", "shingles")
@@ -213,30 +251,32 @@ object StoreSwap {
   private val LegacyModelDirs = Seq("codebook", "pq_codebook", "pq_meta",
     "pq_codes")
 
-  /** Make `path` a store of this protocol before any read or write of
+  /** Make `path` a store of [[Protocol]] before any read or write of
     * it. On a store that already is one, this is one `exists` call. A
-    * nonexistent path is left alone (its first commit creates it). Any
-    * older on-disk layout is migrated ONCE, under the writer lease: a
-    * `_pending_swap` or `_pending_pq` committed by a crashed legacy
-    * writer is rolled forward, partition dirs are renamed in as
-    * generation 0 (or a per-dataDir manifest's latest state is
-    * adopted), the codebook and PQ triple are recommitted as versioned
-    * dataDirs, and one manifest rename publishes the lot. A crash
-    * before that rename leaves the old layout, which the next open
-    * migrates again (a completed live→g0 rename is adopted, not lost).
-    * The first manifest is numbered ABOVE every per-dataDir version,
-    * so an old version number fails fast ([[readVersionedAt]]'s
-    * cutover message) instead of aliasing a later snapshot. The layout
-    * constants of the legacy sidecars ([[LegacySidecars]]) are pinned
-    * into that manifest, so the cutover snapshot is historically
-    * replayable. */
+    * nonexistent path is left alone (its first commit creates it). An
+    * older store is upgraded ONCE, under the writer lease, and one
+    * manifest rename publishes the lot:
+    *  - a layout from before the manifest is migrated first: a
+    *    `_pending_swap` or `_pending_pq` committed by a crashed legacy
+    *    writer is rolled forward, partition dirs are renamed in as
+    *    generation 0 (or a per-dataDir manifest's latest state is
+    *    adopted), and the codebook and PQ triple are recommitted as
+    *    versioned dataDirs. The first manifest is numbered ABOVE every
+    *    per-dataDir version, so an old version number fails fast
+    *    ([[readVersionedAt]]'s cutover message) instead of aliasing a
+    *    later snapshot;
+    *  - then [[upgrade]] brings the entries to protocol 2.
+    * A crash before the rename leaves the old store, which the next
+    * open upgrades again (a completed live→g0 rename is adopted, not
+    * lost; a staged generation is an orphan the commit reclaims). A
+    * store of a newer protocol is refused before anything is touched. */
   def open(spark: SparkSession, path: String): Unit = {
     if (activeTxn.get.contains(path)) return
-    val marker = openMarker(path)
+    val marker = protocolMarker(path)
     val fs = fsOf(spark, marker)
     if (fs.exists(marker) || !fs.exists(new Path(path))) return
     foreignLiveLease(spark, path).foreach { holder =>
-      sys.error(s"store $path needs its one-time migration but a writer" +
+      sys.error(s"store $path needs its one-time upgrade but a writer" +
         s" holds a live lease ($holder) — the writer is mid-commit; retry" +
         " after it releases instead of racing its roll-forward")
     }
@@ -248,42 +288,80 @@ object StoreSwap {
   private def migrate(spark: SparkSession, fs: FileSystem,
                       path: String): Unit = {
     val keep = snapshotKeep(spark)
+    // read first: a newer protocol's manifest is refused untouched
+    val current = latest(fs, path)
     rollForwardSwap(fs, path)
     rollForwardPq(fs, path)
     (staging(path) +: LegacyModelDirs.map(d => new Path(s"$path/.staging-$d")))
       .foreach(p => if (fs.exists(p)) fs.delete(p, true)) // pre-commit orphans
-    val t = manifests(fs, path, StoreFamily).lastOption match {
-      case Some((v, p)) => new Txn(v, readManifest(fs, p))
+    val t = current match {
+      case Some((v, entries)) => new Txn(v, entries)
       case None =>
         val (startV, entries) = adoptDataDirs(fs, path)
-        val t = new Txn(startV - 1,
-          if (entries.isEmpty) entries
-          else entries ++ LegacySidecars.keys.flatMap(n =>
-            legacyConstant(spark, fs, path, n)
-              .map(v => storeMetaKey(n) -> Seq(v))))
-        t.dirty = entries.nonEmpty
-        t
+        new Txn(startV - 1, entries)
     }
     activeTxn.get(path) = t
-    try LegacyModelDirs.foreach { d =>
-      val live = new Path(s"$path/$d")
-      if (fs.exists(live) && !hasBuckets(t.entries, d)) {
-        val partCol = fs.listStatus(live).map(_.getPath.getName)
-          .find(_.contains("=")).map(_.takeWhile(_ != '='))
-        val df = spark.read.parquet(live.toString)
-        stageAndCommit(spark, path, d, partCol.getOrElse("part"),
-          if (partCol.isEmpty) df.withColumn("part", lit(0)) else df,
-          Seq.empty)(replaceAll(d))
+    try {
+      LegacyModelDirs.foreach { d =>
+        val live = new Path(s"$path/$d")
+        if (fs.exists(live) && !hasBuckets(t.entries, d)) {
+          val partCol = fs.listStatus(live).map(_.getPath.getName)
+            .find(_.contains("=")).map(_.takeWhile(_ != '='))
+          val df = spark.read.parquet(live.toString)
+          stageAndCommit(spark, path, d, partCol.getOrElse("part"),
+            if (partCol.isEmpty) df.withColumn("part", lit(0)) else df,
+            Seq.empty)(replaceAll(d))
+        }
       }
+      if (t.entries.nonEmpty && !t.entries.contains(ProtocolKey))
+        upgrade(spark, fs, path, t)
     } finally activeTxn.get.remove(path)
     if (t.dirty) publish(spark, fs, path, t, keep)
     // retire the per-dataDir manifest families (also the cleanup path
-    // after a crash between the commit above and this line)
+    // after a crash between the commit above and these lines)
     (LegacyDataDirs ++ LegacyModelDirs).foreach { d =>
       manifests(fs, path, d).foreach { case (_, p) => fs.delete(p, false) }
     }
     fs.mkdirs(versionsDir(path))
-    fs.create(openMarker(path), true).close()
+    fs.create(protocolMarker(path), true).close()
+    fs.delete(new Path(path + "/_v/_open"), false) // protocol 1's marker
+  }
+
+  /** Bring a protocol-1 (or just migrated) store's entries, the open
+    * transaction `t`, to protocol 2; the publish records the protocol.
+    *  1. Each layout constant the manifest lacks is seeded from its
+    *     legacy sidecar ([[LegacySidecars]]). A band layout recorded
+    *     without `bands.idx` predates the directory-granularity knob:
+    *     its directories follow the store's bucket count.
+    *  2. A store-wide `#batches` ledger (written before ledgers were
+    *     per dataDir) becomes the ledger of every dataDir holding
+    *     buckets that has none of its own, and the store-wide key goes.
+    *  3. A band index without its per-doc inventory gets one, derived
+    *     from the index by [[Dedup.writeBandInventory]] — the code its
+    *     writer runs. */
+  private def upgrade(spark: SparkSession, fs: FileSystem, path: String,
+                      t: Txn): Unit = {
+    LegacySidecars.foreach { case (name, (file, column)) =>
+      val sidecar = new Path(s"$path/$file")
+      if (!t.entries.contains(storeMetaKey(name)) && fs.exists(sidecar)) {
+        val df = spark.read.parquet(sidecar.toString)
+        if (df.columns.contains(column)) t.entries += storeMetaKey(name) ->
+          Seq(df.select(col(column).cast("long")).head.getLong(0))
+      }
+    }
+    val (bandsB, bandsIdx) = (storeMetaKey("bands.b"), storeMetaKey("bands.idx"))
+    if (t.entries.contains(bandsB) && !t.entries.contains(bandsIdx))
+      t.entries.get(storeMetaKey(BucketsKey))
+        .foreach(b => t.entries += bandsIdx -> b)
+    t.entries.get(BatchesKey).foreach { ids =>
+      val dirs = t.entries.keys.filter(k => !isReservedKey(k) && k.contains("/"))
+        .map(k => unifiedBatchesKey(k.takeWhile(_ != '/'))).toSet
+      t.entries = t.entries - BatchesKey ++
+        dirs.filterNot(t.entries.contains).map(_ -> ids)
+    }
+    t.dirty = true
+    if (hasBuckets(t.entries, "bands") && !hasBuckets(t.entries, "bands_inv"))
+      Dedup.writeBandInventory(spark, path, bucketCount(spark, path))
   }
 
   /** The legacy partition dirs' state as the first manifest's entries:
@@ -401,7 +479,7 @@ object StoreSwap {
     * safe only before the first mutation — a non-local return
     * unwinding a dirty txn fails loudly instead of dropping the work. */
   def transact[T](spark: SparkSession, path: String)(body: => T): T =
-    withLease(spark, path) {
+    operation(spark)(withLease(spark, path) {
       if (activeTxn.get.contains(path)) body
       else {
         open(spark, path)
@@ -436,12 +514,14 @@ object StoreSwap {
         if (t.dirty) publish(spark, fs, path, t, keep)
         result
       }
-    }
+    })
 
-  /** The commit point: manifest baseV+1, then GC. */
+  /** The commit point: manifest baseV+1, recording [[Protocol]], then
+    * GC. */
   private def publish(spark: SparkSession, fs: FileSystem, path: String,
                       t: Txn, keep: Int): Unit = {
-    writeManifest(fs, path, StoreFamily, t.baseV + 1, t.entries)
+    writeManifest(fs, path, StoreFamily, t.baseV + 1,
+      t.entries + (ProtocolKey -> Seq(Protocol.toLong)))
     gc(fs, path, keep)
   }
 
@@ -552,12 +632,8 @@ object StoreSwap {
   private def recordBatch(path: String, dataDir: String, id: Long): Unit =
     update(path) { all =>
       val bk = unifiedBatchesKey(dataDir)
-      // seed from the pre-namespacing store-wide key when the
-      // namespaced one doesn't exist yet: the first post-upgrade ack
-      // migrates the window into the namespaced key. The old key stays
-      // — it may still be another dataDir's only ledger.
-      val prior = all.getOrElse(bk, all.getOrElse(BatchesKey, Seq.empty))
-      all + (bk -> (prior :+ id).distinct.takeRight(BatchLedgerKeep))
+      all + (bk -> (all.getOrElse(bk, Seq.empty) :+ id).distinct
+        .takeRight(BatchLedgerKeep))
     }
 
   /** Fold `f` into the open transaction's entries (callers run inside
@@ -591,7 +667,7 @@ object StoreSwap {
     val buckets = fs.listStatus(stg)
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
       .map(_.getPath.getName).toSeq
-    val kept = ParquetFooters.rowCount(spark, stg)
+    val kept = ParquetFooters.rowCount(hadoopConf(spark), stg)
     val t = activeTxn.get()(path)
     val staged =
       if (buckets.isEmpty) Map.empty[String, Seq[Long]]
@@ -692,81 +768,62 @@ object StoreSwap {
   /** Streaming batch ids already committed into `dataDir`'s stream —
     * the tail window of [[BatchLedgerKeep]] most-recent ids, read from
     * the current view (one file read, atomic with the data it
-    * acknowledges). Falls back to the pre-namespacing store-wide
-    * ledger key (same window, written before ledgers were per
-    * dataDir). */
+    * acknowledges). A store-wide ledger of protocol 1 was split per
+    * dataDir by the upgrade ([[open]]). */
   def committedBatches(spark: SparkSession, path: String,
                        dataDir: String): Set[Long] =
-    view(spark, path).map(_._2)
-      .flatMap(m => m.get(unifiedBatchesKey(dataDir)).orElse(m.get(BatchesKey)))
-      .map(_.toSet)
-      .getOrElse(Set.empty)
+    view(spark, path)
+      .flatMap(_._2.get(unifiedBatchesKey(dataDir)))
+      .fold(Set.empty[Long])(_.toSet)
 
-  /** The raw `#meta:<name>` record at a pinned manifest `version`, or
+  /** The entries of the retained manifest `version`, or of the current
+    * view when it is None; `what` names the dataDir or constant asked
+    * for in the error. */
+  private def entriesAt(spark: SparkSession, path: String, what: String,
+                        version: Option[Int]): Map[String, Seq[Long]] =
+    version.fold(view(spark, path).fold(Map.empty[String, Seq[Long]])(_._2))(
+      retainedManifest(spark, path, what, _))
+
+  /** The raw `#meta:<name>` record at a retained manifest `version`, or
     * the current view when `version` is None. None when the manifest
     * predates the first [[putStoreMeta]] of this name. Readers of
-    * layout constants use [[layoutConstant]], which also covers stores
-    * written before the constants were recorded. */
+    * layout constants use [[layoutConstant]]. */
   def storeMetaAt(spark: SparkSession, path: String, name: String,
-                  version: Option[Int] = None): Option[Seq[Long]] = {
-    val key = storeMetaKey(name)
-    version match {
-      case Some(v) =>
-        val fs = fsOf(spark, versionsDir(path))
-        manifests(fs, path, StoreFamily)
-          .collectFirst { case (mv, p) if mv == v => readManifest(fs, p) }
-          .flatMap(_.get(key))
-      case None => view(spark, path).flatMap(_._2.get(key))
-    }
-  }
-
-  /** Whether ANY retained manifest carries `#meta:<name>` — the
-    * postdating check: a pinned version WITHOUT the record while a
-    * later retained version HAS it proves the constants were
-    * (re)recorded after the pin, so a live-sidecar fallback could
-    * apply post-pin constants to pinned data. */
-  private def storeMetaRecordedEver(spark: SparkSession, path: String,
-                                    name: String): Boolean = {
-    val key = storeMetaKey(name)
-    val fs = fsOf(spark, versionsDir(path))
-    manifests(fs, path, StoreFamily)
-      .exists { case (_, p) => readManifest(fs, p).contains(key) }
-  }
+                  version: Option[Int] = None): Option[Seq[Long]] =
+    entriesAt(spark, path, name, version).get(storeMetaKey(name))
 
   /** THE resolver of a store's LAYOUT CONSTANTS — the bucket count
     * (`buckets`), the shingle sidecar's width (`shingles.n`), the band
     * layout (`bands.b`, `bands.r`, `bands.idx`): the `#meta:` entry of
-    * the current view, or of the pinned manifest `version`. The writer
-    * of a dataDir records its constants in the same commit as the data
-    * ([[putStoreMeta]]), so this is a manifest lookup and runs no Spark
-    * job. A store whose manifests never recorded `name` was written
-    * before the constants moved into the manifest: it falls back to
-    * the legacy sidecar ([[LegacySidecars]]). A PINNED manifest lacking
-    * the record while a later retained one has it fails fast — the
-    * constant was rewritten after the pin, and no sidecar can say what
-    * it was at `version`. None when the store has no such constant
-    * (e.g. no band index). */
+    * the current view (None when the store has no such artifact, e.g.
+    * no band index), or of the pinned manifest `version`. The writer of
+    * an artifact records its constants in the same commit as the data
+    * ([[putStoreMeta]]), and the upgrade ([[open]]) seeded those of
+    * older stores, so this is a manifest lookup and runs no Spark job.
+    * A PINNED manifest without the constant fails with a named
+    * `IllegalArgumentException`: either the version predates the
+    * store's upgrade to protocol 2 (a protocol-1 manifest did not
+    * always record the constants), or the artifact did not exist at
+    * that version. */
   def layoutConstant(spark: SparkSession, path: String, name: String,
                      version: Option[Int] = None): Option[Long] = {
-    val entries = version match {
-      case Some(v) => retainedManifest(spark, path, name, v)
-      case None => view(spark, path).fold(Map.empty[String, Seq[Long]])(_._2)
+    val key = storeMetaKey(name)
+    val entries = entriesAt(spark, path, name, version)
+    version.filterNot(_ => entries.contains(key)).foreach { v =>
+      throw new IllegalArgumentException(s"$path v$v records no layout" +
+        s" constant `$name`: " + (
+        if (!entries.contains(ProtocolKey))
+          "the version predates the store's upgrade to protocol" +
+            s" $Protocol, and its constants were not recorded before it." +
+            " Re-pin at a version from after the upgrade"
+        else "the artifact it describes did not exist at that version" +
+          " (it was built later). Re-pin at a version from after it was" +
+          " built"))
     }
-    entries.get(storeMetaKey(name)) match {
-      case Some(Seq(v)) => Some(v)
-      case Some(vs) =>
-        sys.error(s"$path: layout constant $name holds ${vs.size} values")
-      case None =>
-        version.foreach { v =>
-          require(!storeMetaRecordedEver(spark, path, name),
-            s"$path: `$name` was rebuilt AFTER version $v (a later" +
-              " retained manifest records the constant, this one lacks" +
-              " it) - the live value may not describe the pinned" +
-              " snapshot, and deriving with it would silently misread" +
-              " it. Re-pin at a post-rebuild version or restore the" +
-              " pre-rebuild store from archive")
-        }
-        legacyConstant(spark, fsOf(spark, new Path(path)), path, name)
+    entries.get(key).map {
+      case Seq(v) => v
+      case vs => sys.error(s"$path: layout constant $name holds" +
+        s" ${vs.size} values")
     }
   }
 
@@ -786,28 +843,13 @@ object StoreSwap {
 
   /** Where stores written before the layout constants moved into the
     * manifest kept each one: a one-row parquet sidecar under the store
-    * path, and its column. Read only by the one-time migration
-    * ([[open]]) and by [[layoutConstant]]'s fallback. */
+    * path, and its column. Read only by the upgrade ([[open]]). */
   private val LegacySidecars: Map[String, (String, String)] = Map(
     BucketsKey -> ("meta", "buckets"),
     "shingles.n" -> ("shingles_meta", "n"),
     "bands.b" -> ("bands_meta", "bands"),
     "bands.r" -> ("bands_meta", "rows_per_band"),
-    // band indexes older than the layout knob have no idx_buckets
-    // column: their directories follow the store's bucket count
     "bands.idx" -> ("bands_meta", "idx_buckets"))
-
-  private def legacyConstant(spark: SparkSession, fs: FileSystem,
-                             path: String, name: String): Option[Long] =
-    LegacySidecars.get(name).filter { case (file, _) =>
-      fs.exists(new Path(s"$path/$file"))
-    }.flatMap { case (file, column) =>
-      val df = spark.read.parquet(s"$path/$file")
-      if (df.columns.contains(column))
-        Some(df.select(col(column).cast("long")).head.getLong(0))
-      else if (name == "bands.idx") legacyConstant(spark, fs, path, BucketsKey)
-      else None
-    }
 
   /** The current (version, bucketDir → gens) view of `dataDir` — its
     * slice of the store manifest — or None when the dataDir holds no
@@ -817,7 +859,7 @@ object StoreSwap {
                      dataDir: String): Option[(Int, Map[String, Seq[Long]])] =
     view(spark, path)
       .map { case (v, all) => (v, sliceDataDir(all, dataDir)) }
-      .filter(_._2.keys.exists(k => !isReservedKey(k)))
+      .filter(_._2.nonEmpty)
 
   /** Whether `dataDir` holds any bucket in the current view. */
   def dirExists(spark: SparkSession, path: String,
@@ -894,7 +936,7 @@ object StoreSwap {
       manifestAt(spark, path, dataDir, version), buckets)
 
   /** The bucket-dir → generation-list entries of `dataDir` at a
-    * RETAINED manifest version (reserved keys excluded) — the metadata
+    * RETAINED manifest version — the metadata
     * a manifest-pruned diff compares: generations are immutable once
     * committed, so two versions' entries being EQUAL for a bucket
     * proves its files (hence rows) are byte-identical without opening
@@ -903,24 +945,24 @@ object StoreSwap {
                         dataDir: String,
                         version: Int): Map[String, Seq[Long]] =
     manifestAt(spark, path, dataDir, version)
-      .filter { case (k, _) => !isReservedKey(k) }
 
   private def readEntries(spark: SparkSession, path: String,
                           dataDir: String, partCol: String,
                           entries: Map[String, Seq[Long]],
                           buckets: Option[Seq[Int]]): DataFrame = {
     val groups = snapshotDirs(path, dataDir, entries, partCol, buckets)
+    val conf = hadoopConf(spark)
     if (groups.isEmpty) {
       // bucket-pruned read with no surviving bucket: empty relation
       // with the store's schema (from any live dir; a store with NO
       // entries at all has no schema to offer)
       val any = snapshotDirs(path, dataDir, entries, partCol, None)
       require(any.nonEmpty, s"$path/$dataDir snapshot is empty")
-      return readGeneration(spark, any.head._1, any.head._2.take(1),
+      return readGeneration(spark, conf, any.head._1, any.head._2.take(1),
         partCol).filter(lit(false))
     }
     groups.map { case (base, dirs) =>
-      readGeneration(spark, base, dirs, partCol)
+      readGeneration(spark, conf, base, dirs, partCol)
     }.reduce(_ unionByName _)
   }
 
@@ -928,10 +970,11 @@ object StoreSwap {
     * schema of one of its files' footers: a parquet read without a
     * schema runs a Spark job to infer one, and a store read is planned
     * several times per commit. */
-  private def readGeneration(spark: SparkSession, base: String,
-                             dirs: Seq[String], partCol: String): DataFrame = {
+  private def readGeneration(spark: SparkSession, conf: Configuration,
+                             base: String, dirs: Seq[String],
+                             partCol: String): DataFrame = {
     val reader = spark.read.option("basePath", base)
-    footerSchema(spark, new Path(dirs.head), partCol)
+    footerSchema(conf, new Path(dirs.head), partCol)
       .fold(reader)(reader.schema).parquet(dirs: _*)
   }
 
@@ -940,12 +983,12 @@ object StoreSwap {
     * partition column. None when that is not there to take (no file, a
     * footer without Spark's schema, a non-int partition value) — the
     * read then infers as usual. */
-  private def footerSchema(spark: SparkSession, dir: Path,
+  private def footerSchema(conf: Configuration, dir: Path,
                            partCol: String): Option[StructType] = {
     if (dir.getName.stripPrefix(partCol + "=").toIntOption.isEmpty)
       return None
-    ParquetFooters.files(spark, dir).headOption
-      .flatMap(ParquetFooters.sparkSchema(spark, _))
+    ParquetFooters.files(conf, dir).headOption
+      .flatMap(ParquetFooters.sparkSchema(conf, _))
       .map(_.add(partCol, IntegerType))
   }
 
@@ -958,7 +1001,7 @@ object StoreSwap {
                            buckets: Option[Seq[Int]]): Seq[(String, Seq[String])] = {
     val want = buckets.map(_.map(b => s"$partCol=$b").toSet)
     entries.toSeq
-      .filter { case (d, _) => !isReservedKey(d) && want.forall(_.contains(d)) }
+      .filter { case (d, _) => want.forall(_.contains(d)) }
       .flatMap { case (d, gens) => gens.map(g => g -> d) }
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map { case (g, ds) =>
@@ -994,21 +1037,12 @@ object StoreSwap {
   private def hasBuckets(all: Map[String, Seq[Long]], dataDir: String): Boolean =
     all.keys.exists(_.startsWith(dataDir + "/"))
 
-  /** A dataDir's slice of the store entries: bare partDir keys, plus
-    * the dataDir's OWN ledger under the bare `#batches` key (other
-    * dataDirs' ledgers are not its business). A store whose manifest
-    * still carries the pre-namespacing store-wide `#batches` key keeps
-    * it as every dataDir's ledger until that dataDir's first ack. */
+  /** A dataDir's slice of the store entries: its buckets, keyed by the
+    * bare partDir. */
   private def sliceDataDir(all: Map[String, Seq[Long]],
                            dataDir: String): Map[String, Seq[Long]] = {
     val pfx = dataDir + "/"
-    val bk = unifiedBatchesKey(dataDir)
-    val sliced: Map[String, Seq[Long]] = all.collect {
-      case (k, v) if k == bk => BatchesKey -> v
-      case (k, v) if k.startsWith(pfx) => k.stripPrefix(pfx) -> v
-    }
-    if (sliced.contains(BatchesKey)) sliced
-    else all.get(BatchesKey).fold(sliced)(v => sliced + (BatchesKey -> v))
+    all.collect { case (k, v) if k.startsWith(pfx) => k.stripPrefix(pfx) -> v }
   }
 
   /** Parsed manifests of `family`, ascending by version. */
@@ -1027,15 +1061,23 @@ object StoreSwap {
   /** Manifest values are LONGS: generation numbers fit comfortably in
     * Int, but the batch ledgers share this value slot and Structured
     * Streaming batch ids are unbounded longs — a stream past 2^31
-    * batches must keep committing, not throw. */
+    * batches must keep committing, not throw. A manifest of a protocol
+    * above [[Protocol]] raises an `IllegalStateException` naming it,
+    * before any caller reads or writes by it. */
   private def readManifest(fs: FileSystem, p: Path): Map[String, Seq[Long]] = {
     val in = fs.open(p)
     val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
-    body.split("\n").iterator.filter(_.nonEmpty).map { line =>
+    val entries = body.split("\n").iterator.filter(_.nonEmpty).map { line =>
       val Array(dir, gens) = line.split("\\|", 2)
       dir -> gens.split(",").toSeq.map(_.toLong)
     }.toMap
+    entries.get(ProtocolKey).map(_.max).filter(_ > Protocol).foreach { found =>
+      throw new IllegalStateException(s"store manifest $p is at protocol" +
+        s" $found; this build supports protocol $Protocol and below, and" +
+        " does not read or write it")
+    }
+    entries
   }
 
   private def writeManifest(fs: FileSystem, path: String, family: String,

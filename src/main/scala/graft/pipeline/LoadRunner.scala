@@ -118,7 +118,8 @@ object LoadRunner {
       if (keep.nonEmpty) materialized.select((keep.map(col) :+ col("_lineno")): _*)
       else materialized.drop("_file", "_errors")
     ParquetTable.store(spark, toStore, table, load.db)
-    val n = ParquetFooters.rowCount(spark, new org.apache.hadoop.fs.Path(table))
+    val n = ParquetFooters.rowCount(spark.sessionState.newHadoopConf(),
+      new org.apache.hadoop.fs.Path(table))
     materialized.unpersist()
     LoadResult(n, errors, stored = true)
   }

@@ -43,7 +43,8 @@ object ParquetTable {
     } finally s.close()
     if (visible.exists(Files.isDirectory(_))) None
     else visible.find(_.getFileName.toString.endsWith(".parquet"))
-      .flatMap(f => ParquetFooters.sparkSchema(spark, new HPath(f.toUri)))
+      .flatMap(f => ParquetFooters.sparkSchema(spark.sessionState.newHadoopConf(),
+        new HPath(f.toUri)))
   }
 
   def exists(table: String): Boolean = {

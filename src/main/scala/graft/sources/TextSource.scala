@@ -5,6 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.sources.v2.GraftDataSourceV2
 
+/** A parsed source format, the one thing a graft DSv2 scan
+  * ([[graft.sources.v2.GraftDataSourceV2.scan]]) needs to read a file:
+  * the scan yields `(_file, _lineno, columns…)`. */
+trait SourceFormat {
+  def columns: Seq[String]
+}
+
 /** Declarative text-file format — the engine's `LoadConfig.File` subset for
   * delimited / quoted-CSV / fixed-width text (SURVEY.md §2.1 S1/S2,
   * reference `Wrap/File.pm:12-140`).
@@ -48,8 +55,9 @@ case class TextFormat(
     thousandSep: String = ",",
     decimalSep: String = ".",
     normalizeNumerics: Boolean = true,
-    dropEmptyFirstField: Boolean = true) {
+    dropEmptyFirstField: Boolean = true) extends SourceFormat {
   def targets: Seq[String] = if (targetHeader.nonEmpty) targetHeader else header
+  def columns: Seq[String] = targets
   def isFixedWidth: Boolean = poslen.nonEmpty
 }
 
@@ -76,7 +84,8 @@ object TextSource {
     * `_file` predicates, `_lineno` upper bounds and column pruning reach
     * the parser. */
   def read(spark: SparkSession, paths: Seq[String], fmt: TextFormat): DataFrame =
-    GraftDataSourceV2.textScan(spark, paths, fmt)
+    GraftDataSourceV2.scan(spark,
+      if (fmt.isFixedWidth) "graft-fixed" else "graft-text", paths, fmt)
 
   /** Splittable CSV path for huge files: Spark's native reader (predicate
     * pushdown, parallel splits) — same column contract, but `_lineno` is a

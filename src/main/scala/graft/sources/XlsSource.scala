@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.collection.mutable
 
@@ -17,27 +16,16 @@ import scala.collection.mutable
   * JDK-only BIFF8 record parser over the [[CfbFile]] container: BOF /
   * BOUNDSHEET locate worksheet substreams; SST (+CONTINUE, with re-stated
   * option flags at each continuation) feeds LABELSST; NUMBER / RK / MULRK
-  * / LABEL / FORMULA(+STRING) produce cell values. One file per task via
-  * `binaryFile` (xls is not splittable; parallelism is across files, the
-  * reference's many-medium-files shape).
+  * / LABEL / FORMULA(+STRING) produce cell values. One file per task
+  * through the `graft-xls` DSv2 scan (xls is not splittable; parallelism is
+  * across files, the reference's many-medium-files shape).
   */
 object XlsSource {
 
-  def read(spark: SparkSession, paths: Seq[String], fmt: XlsxFormat): DataFrame = {
-    require(fmt.headerColumns.isEmpty ||
-      (fmt.headerColumns.length == fmt.header.length &&
-       fmt.headerColumns.length == fmt.targets.length),
-      "format_headerColumns has different length than header/targetheader")
-    val schema = StructType(
-      StructField("_file", StringType) +: StructField("_lineno", LongType) +:
-        fmt.targets.map(StructField(_, StringType)))
-    val bin = spark.read.format("binaryFile").load(paths: _*)
-      .selectExpr("path", "content")
-      .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-    bin.mapPartitions { files =>
-      files.flatMap { case (path, content) => parseWorkbook(path, content, fmt) }
-    }(Encoders.row(schema)).toDF()
-  }
+  /** The `graft-xls` scan of `paths` in `fmt`: column pruning and `_file`
+    * pushdown reach the parser. */
+  def read(spark: SparkSession, paths: Seq[String], fmt: XlsxFormat): DataFrame =
+    XlsxSource.excelScan(spark, "graft-xls", paths, fmt)
 
   // ---- BIFF8 record plumbing -------------------------------------------
 
@@ -146,14 +134,8 @@ object XlsSource {
 
   // ---- workbook parse --------------------------------------------------
 
-  private def parseWorkbook(path: String, content: Array[Byte],
-                            fmt: XlsxFormat): Iterator[Row] = {
-    val (cells, maxRow) = sheetCells(path, content, fmt)
-    ExcelRows.emit(path, cells, maxRow, fmt)
-  }
-
-  /** BIFF8 sheet extraction alone (cells + max row) — shared by the
-    * classic read path and the DSv2 scan ([[graft.sources.v2]]). */
+  /** BIFF8 sheet extraction alone (cells + max row) for the DSv2 scan
+    * ([[graft.sources.v2]]). */
   private[sources] def sheetCells(path: String, content: Array[Byte],
       fmt: XlsxFormat): (collection.Map[(Int, Int), String], Int) = {
     val cfb = CfbFile.parse(content)

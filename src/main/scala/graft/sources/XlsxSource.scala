@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.Coerce
+import graft.sources.v2.GraftDataSourceV2
 import java.io.ByteArrayInputStream
 import java.util.zip.ZipInputStream
 import javax.xml.parsers.DocumentBuilderFactory
@@ -15,10 +15,10 @@ import scala.collection.mutable
   * selection (`format_headerColumns`), date columns (Excel serial →
   * `YYYYMMDD`), `stopOnEmptyValueColumn` truncation.
   *
-  * No Excel connector exists in `/opt/spark/jars` (offline build); this is
-  * a JDK-only reader (java.util.zip + DOM over the sheet XML), one file per
-  * task via the `binaryFile` source. ETL-sized workbooks parse comfortably
-  * in-memory per task; a StAX streaming variant is the upgrade path for
+  * No Excel connector ships with Spark; this is a JDK-only reader
+  * (java.util.zip + DOM over the sheet XML), one file per task through the
+  * `graft-xlsx` DSv2 scan. ETL-sized workbooks parse comfortably in-memory
+  * per task; a StAX streaming variant is the upgrade path for
   * pathological sheet sizes.
   *
   * @param headerColumns 1-based physical column positions; empty → 1..n
@@ -41,26 +41,28 @@ case class XlsxFormat(
     stopOnEmptyValueColumn: Option[Int] = None,
     thousandSep: String = ",",
     decimalSep: String = ".",
-    normalizeNumerics: Boolean = true) {
+    normalizeNumerics: Boolean = true) extends SourceFormat {
   def targets: Seq[String] = if (targetHeader.nonEmpty) targetHeader else header
+  def columns: Seq[String] = targets
 }
 
 object XlsxSource {
 
-  def read(spark: SparkSession, paths: Seq[String], fmt: XlsxFormat): DataFrame = {
+  /** The `graft-xlsx` scan of `paths` in `fmt`: column pruning and
+    * `_file` pushdown reach the parser. */
+  def read(spark: SparkSession, paths: Seq[String], fmt: XlsxFormat): DataFrame =
+    excelScan(spark, "graft-xlsx", paths, fmt)
+
+  /** The `kind` (`graft-xlsx` / `graft-xls`) scan of `paths` in `fmt`,
+    * after the eager check that positional `headerColumns` match the
+    * declared header. */
+  private[sources] def excelScan(spark: SparkSession, kind: String,
+                                 paths: Seq[String], fmt: XlsxFormat): DataFrame = {
     require(fmt.headerColumns.isEmpty ||
       (fmt.headerColumns.length == fmt.header.length &&
        fmt.headerColumns.length == fmt.targets.length),
       "format_headerColumns has different length than header/targetheader")
-    val schema = StructType(
-      StructField("_file", StringType) +: StructField("_lineno", LongType) +:
-        fmt.targets.map(StructField(_, StringType)))
-    val bin = spark.read.format("binaryFile").load(paths: _*)
-      .selectExpr("path", "content")
-      .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-    bin.mapPartitions { files =>
-      files.flatMap { case (path, content) => parseWorkbook(path, content, fmt) }
-    }(Encoders.row(schema)).toDF()
+    GraftDataSourceV2.scan(spark, kind, paths, fmt)
   }
 
   /** "B3" → (3, 2): 1-based (row, col). */
@@ -97,15 +99,9 @@ object XlsxSource {
     }
   }
 
-  private def parseWorkbook(path: String, content: Array[Byte],
-                            fmt: XlsxFormat): Iterator[Row] = {
-    val (cells, maxRow) = sheetCells(content, fmt)
-    ExcelRows.emit(path, cells, maxRow, fmt)
-  }
-
-  /** Sheet extraction alone (cells + max row) — shared by the classic read
-    * path above and the DSv2 scan ([[graft.sources.v2]]), whose column
-    * pruning then drives [[ExcelRows.emitProjected]]. */
+  /** Sheet extraction alone (cells + max row) for the DSv2 scan
+    * ([[graft.sources.v2]]), whose column pruning then drives
+    * [[ExcelRows.emitProjected]]. */
   private[sources] def sheetCells(content: Array[Byte],
                                   fmt: XlsxFormat): (collection.Map[(Int, Int), String], Int) = {
     val entries = zipEntries(content)
@@ -180,12 +176,6 @@ object XlsxSource {
   * numeric normalization — `Wrap/File.pm:154-187` (xls handler) and
   * `:190-230` (xlsx handler) implement these twice; the engine once. */
 private[sources] object ExcelRows {
-
-  def emit(path: String, cells: collection.Map[(Int, Int), String],
-           maxRow: Int, fmt: XlsxFormat): Iterator[Row] = {
-    val wanted = "_file" +: "_lineno" +: fmt.targets
-    emitProjected(path, cells, maxRow, fmt, wanted).map(Row.fromSeq)
-  }
 
   /** Projected emit: only the `wanted` fields (`_file` / `_lineno` /
     * target names, in output order) are materialized — the per-cell work

@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.functions.Coerce
+import graft.sources.v2.GraftDataSourceV2
 import javax.xml.namespace.NamespaceContext
 import javax.xml.parsers.DocumentBuilderFactory
 import javax.xml.xpath.{XPathConstants, XPathFactory}
@@ -16,10 +16,10 @@ import java.io.ByteArrayInputStream
   * re-evaluate against the document root, yielding a constant
   * "broadcast" column (e.g. a header value repeated on every row).
   *
-  * No XML datasource ships in `/opt/spark/jars` (offline build), so this is
-  * a compact JDK-only implementation (`javax.xml` DOM + XPath) distributed
-  * one file per task over the `binaryFile` source — the scan parallelizes
-  * across files, which matches the reference's many-files shape. Each
+  * No XML datasource ships with Spark, so this is a compact JDK-only
+  * implementation (`javax.xml` DOM + XPath) distributed one file per task
+  * through the `graft-xml` DSv2 scan — the scan parallelizes across
+  * files, which matches the reference's many-files shape. Each
   * field passes through the trim + normalizeNumerics pipeline like text
   * sources.
   */
@@ -30,27 +30,17 @@ case class XmlFormat(
     namespaces: Map[String, String] = Map.empty,
     thousandSep: String = ",",
     decimalSep: String = ".",
-    normalizeNumerics: Boolean = true)
+    normalizeNumerics: Boolean = true) extends SourceFormat {
+  def columns: Seq[String] = header
+}
 
 object XmlSource {
 
-  def read(spark: SparkSession, paths: Seq[String], fmt: XmlFormat): DataFrame = {
-    val schema = StructType(
-      StructField("_file", StringType) +: StructField("_lineno", LongType) +:
-        fmt.header.map(StructField(_, StringType)))
-    val bin = spark.read.format("binaryFile").load(paths: _*)
-      .selectExpr("path", "content")
-      .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
-    val rows = bin.mapPartitions { files =>
-      files.flatMap { case (path, content) => parseFile(path, content, fmt) }
-    }(Encoders.row(schema))
-    rows.toDF()
-  }
-
-  private def parseFile(path: String, content: Array[Byte], fmt: XmlFormat): Iterator[Row] = {
-    val wanted = "_file" +: "_lineno" +: fmt.header
-    parseProjected(path, content, fmt, wanted).map(Row.fromSeq)
-  }
+  /** The `graft-xml` scan of `paths` in `fmt`: column pruning (only the
+    * selected XPaths are evaluated) and `_file` pushdown reach the
+    * parser. */
+  def read(spark: SparkSession, paths: Seq[String], fmt: XmlFormat): DataFrame =
+    GraftDataSourceV2.scan(spark, "graft-xml", paths, fmt)
 
   /** Projected parse for the DSv2 scan ([[graft.sources.v2]]): only the
     * `wanted` fields' XPaths are COMPILED and EVALUATED — pruning a column

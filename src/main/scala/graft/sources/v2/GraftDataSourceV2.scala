@@ -1,7 +1,7 @@
 package graft.sources.v2
 
 import graft.functions.Coerce
-import graft.sources.{ExcelRows, TextFormat, XlsSource, XlsxFormat, XlsxSource, XmlFormat, XmlSource}
+import graft.sources.{ExcelRows, SourceFormat, TextFormat, XlsSource, XlsxFormat, XlsxSource, XmlFormat, XmlSource}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
@@ -37,8 +37,7 @@ import scala.jdk.CollectionConverters._
   * `SupportsPushDownRequiredColumns`), so a 2-column projection over a
   * 40-column workbook only pays per-cell conversion for 2 columns, an XML
   * query only evaluates the XPaths it selects, and a fixed-width scan only
-  * substrings requested spans. The classic `binaryFile`+`mapPartitions`
-  * path parses every declared column regardless of the query.
+  * substrings requested spans.
   *
   * Scale shape: one [[InputPartition]] per file (these container formats
   * are not splittable — parallelism is across files, the reference's
@@ -46,8 +45,10 @@ import scala.jdk.CollectionConverters._
   * through Hadoop `FileSystem`, so any cluster filesystem works; readers
   * resolve it from the session's Hadoop conf, shipped with the scan.
   *
-  * `graft-text`/`graft-fixed` are the one implementation of the
-  * [[TextFormat]] law: `TextSource.read` is [[GraftDataSourceV2.textScan]].
+  * Each format has one reader: the object entries `TextSource.read`,
+  * `XlsxSource.read`, `XlsSource.read` and `XmlSource.read` are
+  * [[GraftDataSourceV2.scan]]s of their format (`graft-text`/`graft-fixed`
+  * are the one implementation of the [[TextFormat]] law).
   *
   * All schemas are `(_file string, _lineno long, <declared>string…)`
   * — identical to the classic paths; coercion stays a downstream concern
@@ -126,13 +127,14 @@ object GraftDataSourceV2 {
     normalizeNumerics = o.getOrElse("normalizeNumerics", "true").toBoolean,
     dropEmptyFirstField = o.getOrElse("dropEmptyFirstField", "true").toBoolean)
 
-  def dataColumns(kind: String, o: Opts): Seq[String] = kind match {
-    case "graft-xml" => xmlFormat(o).header
-    case "graft-fixed" | "graft-text" => textFormat(kind, o).targets
-    case _ => excelFormat(o).targets
+  /** A provider's option map as its parsed format. */
+  def formatOf(kind: String, o: Opts): SourceFormat = kind match {
+    case "graft-xml" => xmlFormat(o)
+    case "graft-fixed" | "graft-text" => textFormat(kind, o)
+    case _ => excelFormat(o)
   }
 
-  def fullSchema(kind: String, o: Opts): StructType = schemaOf(dataColumns(kind, o))
+  def fullSchema(kind: String, o: Opts): StructType = schemaOf(formatOf(kind, o).columns)
 
   /** `(_file, _lineno, columns…)`, the columns all strings. */
   def schemaOf(columns: Seq[String]): StructType = StructType(
@@ -224,13 +226,13 @@ object GraftDataSourceV2 {
     try in.readAllBytes() finally in.close()
   }
 
-  /** `TextSource.read`'s scan: the `graft-text` table of `fmt` itself
-    * (`graft-fixed` for a fixed-width format), so the header stays
-    * verbatim where a `header` option would be split and trimmed. It is
-    * planned like a `spark.read.format(...)` load, pushdowns included. */
-  def textScan(spark: SparkSession, paths: Seq[String], fmt: TextFormat): DataFrame = {
-    val kind = if (fmt.isFixedWidth) "graft-fixed" else "graft-text"
-    val table = new GraftFormatTable(kind, schemaOf(fmt.targets),
+  /** The object readers' scan: the `kind` table of the parsed `fmt`
+    * itself, so a text header stays verbatim where a `header` option
+    * would be split and trimmed. It is planned like a
+    * `spark.read.format(kind)` load, pushdowns included. */
+  def scan(spark: SparkSession, kind: String, paths: Seq[String],
+           fmt: SourceFormat): DataFrame = {
+    val table = new GraftFormatTable(kind, schemaOf(fmt.columns),
       Map("paths" -> json.writeValueAsString(paths.toArray)).asJava, Some(fmt))
     GraftColumnBridge.ofRows(spark, DataSourceV2Relation.create(table, None, None))
   }
@@ -363,10 +365,11 @@ object GraftDataSourceV2 {
 /** One file = one non-splittable partition. */
 final case class GraftInputPartition(path: String) extends InputPartition
 
-/** Parses one file per reader; `text` is a text scan's format. `conf` is
-  * the session's Hadoop conf: its file-system settings reach executors. */
+/** Parses one file per reader in the scan's parsed format `fmt`. `conf`
+  * is the session's Hadoop conf: its file-system settings reach
+  * executors. */
 final class GraftPartitionReaderFactory(
-    kind: String, options: Map[String, String], text: Option[TextFormat],
+    kind: String, fmt: SourceFormat,
     wanted: Seq[String], maxLineno: Long, conf: SerializableConfiguration)
   extends PartitionReaderFactory {
   import GraftDataSourceV2._
@@ -376,20 +379,17 @@ final class GraftPartitionReaderFactory(
     new PartitionReader[InternalRow] {
       private val rows: Iterator[Seq[Any]] = {
         val content = readBytes(filePath, conf.value)
-        lazy val o = opts(options.asJava)
-        (kind, text) match {
-          case (_, Some(fmt)) =>
-            textProjected(filePath, content, fmt, wanted, maxLineno)
-          case ("graft-xlsx", _) =>
-            val fmt = excelFormat(o)
-            val (cells, maxRow) = XlsxSource.sheetCells(content, fmt)
-            ExcelRows.emitProjected(filePath, cells, maxRow, fmt, wanted)
-          case ("graft-xls", _) =>
-            val fmt = excelFormat(o)
-            val (cells, maxRow) = XlsSource.sheetCells(filePath, content, fmt)
-            ExcelRows.emitProjected(filePath, cells, maxRow, fmt, wanted)
-          case ("graft-xml", _) =>
-            XmlSource.parseProjected(filePath, content, xmlFormat(o), wanted)
+        (kind, fmt) match {
+          case (_, f: TextFormat) =>
+            textProjected(filePath, content, f, wanted, maxLineno)
+          case ("graft-xls", f: XlsxFormat) =>
+            val (cells, maxRow) = XlsSource.sheetCells(filePath, content, f)
+            ExcelRows.emitProjected(filePath, cells, maxRow, f, wanted)
+          case (_, f: XlsxFormat) =>
+            val (cells, maxRow) = XlsxSource.sheetCells(content, f)
+            ExcelRows.emitProjected(filePath, cells, maxRow, f, wanted)
+          case (_, f: XmlFormat) =>
+            XmlSource.parseProjected(filePath, content, f, wanted)
           case (other, _) =>
             throw new IllegalStateException(s"unknown graft format $other")
         }
@@ -409,7 +409,7 @@ final class GraftPartitionReaderFactory(
 }
 
 final class GraftScan(kind: String, options: Map[String, String],
-                      text: Option[TextFormat], required: StructType,
+                      fmt: SourceFormat, required: StructType,
                       pushed: Seq[Filter] = Seq.empty)
   extends Scan with Batch
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -437,7 +437,7 @@ final class GraftScan(kind: String, options: Map[String, String],
   override def planInputPartitions(): Array[InputPartition] =
     files.map(st => GraftInputPartition(st.getPath.toString): InputPartition).toArray
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftPartitionReaderFactory(kind, options, text, required.fieldNames.toSeq,
+    new GraftPartitionReaderFactory(kind, fmt, required.fieldNames.toSeq,
       linenoBound(pushed), new SerializableConfiguration(conf))
   /** Without statistics a DSv2 relation reports `defaultSizeInBytes`
     * (effectively infinite), so a small workbook/XML dim joined to a fact
@@ -457,7 +457,7 @@ final class GraftScan(kind: String, options: Map[String, String],
 
 final class GraftScanBuilder(kind: String, schema: StructType,
                              options: Map[String, String],
-                             text: Option[TextFormat])
+                             fmt: SourceFormat)
   extends ScanBuilder with SupportsPushDownRequiredColumns
   with SupportsPushDownFilters {
   import GraftDataSourceV2._
@@ -476,14 +476,14 @@ final class GraftScanBuilder(kind: String, schema: StructType,
   }
   override def pushedFilters(): Array[Filter] = pushed
   override def build(): Scan =
-    new GraftScan(kind, options, text, required, pushed.toSeq)
+    new GraftScan(kind, options, fmt, required, pushed.toSeq)
 }
 
-/** `text`: the format [[GraftDataSourceV2.textScan]] hands over; a
-  * provider's text table reads it from the options. */
+/** `format`: the parsed format [[GraftDataSourceV2.scan]] hands over; a
+  * provider's table parses it from the options. */
 final class GraftFormatTable(kind: String, tableSchema: StructType,
                              properties: util.Map[String, String],
-                             text: Option[TextFormat] = None)
+                             format: Option[SourceFormat] = None)
   extends Table with SupportsRead {
   import GraftDataSourceV2._
   override def name(): String = kind
@@ -495,9 +495,8 @@ final class GraftFormatTable(kind: String, tableSchema: StructType,
     // scan's map carries the read paths
     val merged = new util.HashMap[String, String](properties)
     merged.putAll(caseInsensitiveOptions.asCaseSensitiveMap())
-    val fmt = text.orElse(Option.when(kind == "graft-text" || kind == "graft-fixed")(
-      textFormat(kind, opts(merged))))
-    new GraftScanBuilder(kind, tableSchema, merged.asScala.toMap, fmt)
+    new GraftScanBuilder(kind, tableSchema, merged.asScala.toMap,
+      format.getOrElse(formatOf(kind, opts(merged))))
   }
 }
 

@@ -300,7 +300,7 @@ object StreamingLoad {
     * sketchPath with a cleared checkpoint). */
   def checkpointQueryId(spark: SparkSession, checkpoint: String): Option[String] = {
     val path = new org.apache.hadoop.fs.Path(checkpoint, "metadata")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(path)) None
     else {
       val in = fs.open(path)

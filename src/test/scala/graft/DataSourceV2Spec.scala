@@ -50,6 +50,8 @@ class DataSourceV2Spec extends SparkSpec {
     val file = dir.resolve("data.xlsx").toString
     XlsxSink.write(df, header, file)
     val fmt = XlsxFormat(header = header, worksheetId = Some(1))
+    // the rows the binaryFile reader that XlsxSource.read replaced gave
+    val pinned = Seq(Seq("1", "alpha", "10"), Seq("2", "beta", "20"))
     val classic = XlsxSource.read(spark, Seq(file), fmt)
       .select("k", "name", "grp").collect().map(_.toSeq).sortBy(_.head.toString)
     val v2df = spark.read.format("graft-xlsx")
@@ -57,7 +59,8 @@ class DataSourceV2Spec extends SparkSpec {
       .option("worksheetId", "1").load(file)
     val v2 = v2df.select("k", "name", "grp")
       .collect().map(_.toSeq).sortBy(_.head.toString)
-    assert(v2.toSeq == classic.toSeq)
+    assert(classic.toSeq == pinned)
+    assert(v2.toSeq == pinned)
     // service columns survive when asked for
     val withMeta = v2df.select("_file", "_lineno", "k").collect()
     assert(withMeta.forall(_.getString(0).nonEmpty))
@@ -71,13 +74,16 @@ class DataSourceV2Spec extends SparkSpec {
     val file = dir.resolve("data.xls").toString
     XlsSink.write(df, header, file, sheetName = "sheetz")
     val fmt = XlsxFormat(header = header, worksheet = Some("sheetz"))
+    // the rows the binaryFile reader that XlsSource.read replaced gave
+    val pinned = Seq(Seq("1", "alpha", "10"), Seq("2", "beta", "20"))
     val classic = XlsSource.read(spark, Seq(file), fmt)
       .select("k", "name", "grp").collect().map(_.toSeq).sortBy(_.head.toString)
     val v2 = spark.read.format("graft-xls")
       .option("header", header.mkString(","))
       .option("worksheet", "sheetz").load(file)
       .select("k", "name", "grp").collect().map(_.toSeq).sortBy(_.head.toString)
-    assert(v2.toSeq == classic.toSeq)
+    assert(classic.toSeq == pinned)
+    assert(v2.toSeq == pinned)
   }
 
   test("graft-xml matches XmlSource.read; pruned scan skips absent XPaths") {
@@ -89,8 +95,11 @@ class DataSourceV2Spec extends SparkSpec {
     val fmt = XmlFormat(header = Seq("src", "a", "b"),
       xpathRecordLevel = "//root/list/r",
       fieldXpath = Map("src" -> "/root/meta/src", "a" -> "a", "b" -> "b"))
+    // the rows the binaryFile reader that XmlSource.read replaced gave
+    val pinned = Seq(Seq("m", "1", "x"), Seq("m", "2", "y"))
     val classic = XmlSource.read(spark, Seq(file.toString), fmt)
       .select("src", "a", "b").collect().map(_.toSeq).sortBy(_(1).toString)
+    assert(classic.toSeq == pinned)
     val v2df = spark.read.format("graft-xml")
       .option("header", "src,a,b")
       .option("xpathRecordLevel", "//root/list/r")

@@ -22,6 +22,18 @@ class DupGroupsSpec extends SparkSpec {
     assert(kept == Seq(2L, 4L, 7L))
   }
 
+  test("selectCanonical keeps a caller's own rank column") {
+    val corpus = Seq((1L, "short", 30L), (2L, "the longest text here", 10L),
+      (4L, "solo", 20L)).toDF("doc_id", "text", "rank")
+    val groups = Dedup.dupGroups(corpus, "doc_id",
+      Seq((1L, 2L)).toDF("id_a", "id_b"))
+    val kept = Dedup.selectCanonical(corpus, "doc_id", groups,
+        length(col("text")))
+    assert(kept.columns.toSeq == Seq("doc_id", "text", "rank"))
+    assert(kept.orderBy("doc_id").collect().map(r => (r.getLong(0), r.getLong(2)))
+      .toSeq == Seq((2L, 10L), (4L, 20L)))
+  }
+
   test("chains merge transitively; singletons self-group") {
     val corpus = (1L to 8L).toDF("doc_id").withColumn("text", lit("x"))
     // pairs: 1-2, 2-3 (chain), 7-8; 4,5,6 untouched

@@ -16,6 +16,8 @@ import org.apache.spark.sql.functions._
   *    `.staging`, the manifest naming surviving and emptied buckets);
   *  - per-dataDir manifests `_v/<dataDir>.v<N>` over `<dataDir>.gens`
   *    generation dirs, with an optional `#batches` ledger;
+  *  - protocol 1 of the store manifest: manifests without the
+  *    `#meta:protocol` entry, under the `_v/_open` marker;
   *  - flat model dirs (`codebook`, `pq_codebook`, `pq_meta`) and the PQ
   *    triple's `.staging-pq_*` dirs behind a `_pending_pq` marker. */
 object LegacyStores {
@@ -47,18 +49,26 @@ object LegacyStores {
       .write.mode("overwrite").parquet(path + "/shingles_meta")
   }
 
-  /** Strip the layout constants (`#meta:` entries) from every manifest
-    * of the store at `path` — the manifests of a store written before
-    * the constants moved out of the sidecars. */
-  def dropLayoutConstants(path: String): Unit =
-    new java.io.File(s"$path/_v").listFiles()
-      .filter(_.getName.startsWith("store.v")).foreach { f =>
-        val kept = java.nio.file.Files.readAllLines(f.toPath)
-          .toArray(Array.empty[String]).filterNot(_.startsWith("#meta:"))
-        java.nio.file.Files.writeString(f.toPath, kept.mkString("\n"))
-        // the local filesystem's checksum of the old content
-        new java.io.File(f.getParentFile, s".${f.getName}.crc").delete()
-      }
+  /** Turn the protocol-2 store at `path` into the protocol-1 store an
+    * older graft left: every manifest loses its `#meta:protocol` entry
+    * and the entries `drop` selects (e.g. `#meta:` for a store written
+    * before the layout constants moved out of the sidecars, `bands_inv/`
+    * for a band index older than its inventory), and the `_v/_protocol2`
+    * marker gives way to protocol 1's `_v/_open`. */
+  def protocol1(path: String, drop: String => Boolean = _ => false): Unit = {
+    val v = new java.io.File(s"$path/_v")
+    v.listFiles().filter(_.getName.startsWith("store.v")).foreach { f =>
+      val kept = java.nio.file.Files.readAllLines(f.toPath)
+        .toArray(Array.empty[String])
+        .filterNot(l => l.startsWith("#meta:protocol|") || drop(l))
+      java.nio.file.Files.writeString(f.toPath, kept.mkString("\n"))
+      // the local filesystem's checksum of the old content
+      new java.io.File(v, s".${f.getName}.crc").delete()
+    }
+    new java.io.File(v, "_protocol2").delete()
+    new java.io.File(v, "._protocol2.crc").delete()
+    new java.io.File(v, "_open").createNewFile()
+  }
 
   /** A legacy signature store: `data/d_bucket=…` plus `meta`. */
   def signatureStore(sigs: DataFrame, path: String, idCol: String,

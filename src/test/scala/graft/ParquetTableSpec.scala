@@ -24,7 +24,8 @@ class ParquetTableSpec extends SparkSpec {
     if (!partitioned) assert(jobs.isEmpty, s"load of $t planned with jobs: $jobs")
     assert(loaded.schema == spark.read.parquet(t).schema)
     assert(loaded.count() == expectedRows)
-    assert(ParquetFooters.rowCount(spark, new Path(t)) == expectedRows)
+    assert(ParquetFooters.rowCount(spark.sessionState.newHadoopConf(), new Path(t)) ==
+      expectedRows)
   }
 
   test("Append, Upsert and DeleteInsert tables: footer count and schema match the data") {

@@ -34,6 +34,19 @@ class SamplingSpec extends SparkSpec {
     assert(e.getMessage.contains("topKPer: k must be >= 1, got 0"))
   }
 
+  test("stratifiedQuota keeps a caller's own rank column") {
+    val ranked = df.withColumn("rank", col("id") * 10)
+    val s = Sampling.stratifiedQuota(ranked, "stratum", "id", k = 3, seed = 5)
+    assert(s.columns.toSeq == Seq("id", "stratum", "rank", "sample_rank"))
+    assert(s.collect().forall(r => r.getAs[Long]("rank") == r.getAs[Long]("id") * 10))
+    assert(s.select("sample_rank").distinct().collect().map(_.getLong(0))
+      .sorted.toSeq == Seq(1L, 2L, 3L))
+    // the kernel refuses to overwrite an input column with its rank
+    val e = intercept[IllegalArgumentException](Sampling.stratifiedQuota(
+      df.withColumn("sample_rank", lit(0L)), "stratum", "id", k = 3))
+    assert(e.getMessage.contains("`sample_rank`"), e.getMessage)
+  }
+
   test("string keys hash through polyHash instead of a null-ing cast") {
     // a bare cast("long") on these ids is null for every row — bernoulli
     // would silently keep nothing and withSplit would send all rows to

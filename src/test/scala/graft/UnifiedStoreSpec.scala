@@ -538,16 +538,18 @@ class UnifiedStoreSpec extends SparkSpec {
     // ADVICE r14: committedBatches read ONLY the namespaced
     // '#batches:<dataDir>' key — a store whose manifest still carries
     // the pre-namespacing store-wide '#batches' silently lost its
-    // ledger on upgrade and re-applied a redelivered batch.
+    // ledger on upgrade and re-applied a redelivered batch. Such a
+    // store is protocol 1; the upgrade to protocol 2 splits the ledger.
     val standing = docs().filter(col("doc_id") < 4)
     val path = buildUnified(standing)
     Dedup.ingestBatchIntoStore(spark, path,
       docs().filter(col("doc_id") === 8L), "doc_id", "text",
       batchId = Some(7L), n = 3, numHashes = 4)
     // rewrite the latest manifest to the PRE-NAMESPACING layout
-    val mf = new java.io.File(s"$path/_v").listFiles()
+    def latestManifest() = new java.io.File(s"$path/_v").listFiles()
       .filter(_.getName.startsWith("store.v"))
       .maxBy(_.getName.stripPrefix("store.v").toInt)
+    val mf = latestManifest()
     val body = new String(
       java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
     assert(body.contains("#batches:data|"), body)
@@ -556,7 +558,13 @@ class UnifiedStoreSpec extends SparkSpec {
     // the raw rewrite invalidates Hadoop LocalFileSystem's checksum
     // sidecar; drop it (a real pre-namespacing store's crc matches)
     new java.io.File(mf.getParentFile, s".${mf.getName}.crc").delete()
-    // fallback read: the legacy store-wide window is still the window
+    LegacyStores.protocol1(path)
+    // the upgrade gives every dataDir the store-wide window as its own
+    StoreSwap.open(spark, path)
+    val upgraded = java.nio.file.Files.readAllLines(latestManifest().toPath)
+    assert(!upgraded.contains("#batches|7"), upgraded)
+    Seq("data", "bands", "bands_inv", "shingles").foreach(d =>
+      assert(upgraded.contains(s"#batches:$d|7"), upgraded))
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L))
     val preV = versions(path).last
     // a redelivered pre-upgrade batch is skipped, not re-applied
@@ -565,8 +573,8 @@ class UnifiedStoreSpec extends SparkSpec {
       batchId = Some(7L), n = 3, numHashes = 4)
     assert(versions(path).last == preV,
       "redelivered batch was re-applied after the namespacing upgrade")
-    // the first post-upgrade ack migrates the window into the
-    // namespaced key (union, not replacement)
+    // the first post-upgrade ack extends the window (union, not
+    // replacement)
     Dedup.ingestBatchIntoStore(spark, path,
       docs().filter(col("doc_id") === 2L), "doc_id", "text",
       batchId = Some(8L), n = 3, numHashes = 4)
@@ -650,8 +658,8 @@ class UnifiedStoreSpec extends SparkSpec {
       assert(judgeRows(Dedup.lshJudgeStoreAt(spark, path, probe,
         "doc_id", "text", v0, n = 3, numHashes = 4)) == liveV0,
         "pinned replay used the post-rebuild layout")
-      // a pinned version WITHOUT a layout record while a later one HAS
-      // one proves the index was rebuilt after the pin: fail fast
+      // a pinned version WITHOUT a layout record predates the index
+      // build: fail fast
       val p2 = Fixtures.tempDir("graft-ustore-").resolve("nl").toString
       val s2 = docs().filter(col("doc_id") < 4)
       Dedup.writeSignatureStore(sigs(s2), p2, "doc_id", buckets = 8)
@@ -663,7 +671,8 @@ class UnifiedStoreSpec extends SparkSpec {
         Dedup.lshJudgeStoreAt(spark, p2, probe, "doc_id", "text", u0,
           n = 3, numHashes = 4)
       }
-      assert(ex.getMessage.contains("rebuilt AFTER"), ex.getMessage)
+      assert(ex.getMessage.contains("did not exist at that version"),
+        ex.getMessage)
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
