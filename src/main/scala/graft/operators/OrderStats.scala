@@ -270,7 +270,8 @@ object OrderStats {
   }
 
   /** The top-k kernel every "k best rows per group" operator runs: one
-    * `row_number` window partitioned by `by`, ordered by `order` (which
+    * `row_number` window partitioned by `by` (a `struct` of columns
+    * partitions by several), ordered by `order` (which
     * must end in a unique tie-break for a deterministic result), and one
     * `rank <= k` filter. Adds the long rank column `rankCol` (1-based)
     * and keeps every input column. The filter sits directly on the

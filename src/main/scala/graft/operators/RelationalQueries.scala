@@ -102,18 +102,15 @@ object RelationalQueries {
   }
 
   /** Window top-N: each customer's 3 largest orders (deterministic tiebreak
-    * on o_orderkey). Models the reference's need for ordered per-group
-    * processing at scale: one shuffle on o_custkey, no driver collect. */
-  def q6WindowTopN(spark: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    Tables.orders(spark, dir)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= 3)
+    * on o_orderkey), ranked by the top-k kernel [[OrderStats.topKPer]].
+    * Models the reference's need for ordered per-group processing at
+    * scale: one shuffle on o_custkey, no driver collect. */
+  def q6WindowTopN(spark: SparkSession, dir: String): DataFrame =
+    OrderStats.topKPer(Tables.orders(spark, dir), col("o_custkey"), 3,
+        rankCol = "rn")(col("o_totalprice").desc, col("o_orderkey"))
       .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        col("rn").cast("long").as("rn"))
+        col("rn"))
       .orderBy(col("o_custkey"), col("rn"))
-  }
 
   /** Rollup aggregate with an explicit sentinel for the ALL level (avoids
     * cross-engine NULL-ordering ambiguity). */

@@ -479,8 +479,9 @@ object ScaleQueries {
 
   /** The q205-q207 delta batch: near-dup copies (first token dropped,
     * ids shifted by `shift`) of the docs with `doc_id % mod = 0`. */
-  private def nearDupDelta(docs: DataFrame, mod: Int, shift: Long,
-                           dropTokens: Int): DataFrame = {
+  private[operators] def nearDupDelta(docs: DataFrame, mod: Int,
+                                      shift: Long,
+                                      dropTokens: Int): DataFrame = {
     val pat = "^" + ("\\S+\\s+" * dropTokens)
     docs.filter(col("doc_id") % mod === 0)
       .select((col("doc_id") + shift).as("doc_id"),

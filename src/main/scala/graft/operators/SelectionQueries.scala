@@ -405,7 +405,7 @@ object SelectionQueries {
     * and checkpointing it instead trips the LogicalRDD self-join
     * attribute-rewrite bug the q171 gate hit. An exploded single-scan
     * plan is also what a real augmentation pipeline runs. */
-  private def augmentDelta(emb: DataFrame): DataFrame = {
+  private[operators] def augmentDelta(emb: DataFrame): DataFrame = {
     val tagged = emb
       .select(col("vec_id"), col("embedding"),
         explode(typedlit(Seq(1, 2, 3))).as("variant"))

@@ -1901,14 +1901,9 @@ object Similarity {
     * renumbers): here membership of undrifted clusters is SETTLED — the
     * same invariant the incremental dedup flow already commits to.
     * The whole sequence (cluster delete, append, code refresh, codebook
-    * write) is ONE store transaction; the drifted slice is backed up at
-    * `$path/.refit-members` while it runs. Should that backup outlive
-    * the refit, RE-RUN it with the same `drifted` set — idempotent:
-    * the fresh-id base is persisted with the backup
-    * (`_next_id`, so a post-codebook-write crash can't shift it), data
-    * rows and sidecar codes already appended by a prior run are
-    * anti-joined out before re-appending, and the codebook write
-    * strips a prior run's fresh entries before re-adding them.
+    * write) is ONE store transaction: a crash anywhere before its
+    * manifest rename leaves the store at its pre-refit version, and a
+    * re-run with the same `drifted` set is a clean refit.
     * Returns the fresh (cid, centroid) entries. */
   def refitStoreDriftedClusters(spark: SparkSession, path: String,
                                 idCol: String, vecCol: String,
@@ -1920,10 +1915,7 @@ object Similarity {
     // ONE manifest rename ([[StoreSwap.transact]]): a reader racing the
     // refit sees the pre-refit store or the finished one — never the
     // window where the drifted members are deleted but their
-    // re-clustered rows not yet appended. A crash anywhere inside the
-    // txn leaves the store at its pre-refit version — the
-    // `.refit-members` backup then just gets rebuilt from the intact
-    // store on the re-run.
+    // re-clustered rows not yet appended
     StoreSwap.transact(spark, path) {
       refitLocked(spark, path, idCol, vecCol, drifted,
         targetClusterSize, iters)
@@ -1935,39 +1927,12 @@ object Similarity {
                           drifted: Set[Long], targetClusterSize: Long,
                           iters: Int): Seq[(Long, Seq[Double])] = {
     val cb = readCodebookIds(spark, path)
-    // The drifted slice must outlive the delete that destroys its source
-    // files; stage it to disk (not executor memory) so the refit is
-    // neither OOM-bound nor lost with an executor. The tmp dir lives
-    // under the store (dot-name: invisible to readers) and is reclaimed
-    // at the end. A re-run after a mid-refit crash finds the pruned
-    // read EMPTY (the delete already ran) while the backup still holds
-    // the slice — so the backup is only REPLACED when the store still
-    // has the rows; overwriting unconditionally would destroy the one
-    // copy the documented recovery path depends on. The fresh-id base is
-    // PERSISTED with the backup (`_next_id`): a crash after the codebook
-    // write would otherwise shift `max(cid)+1` on the re-run, so the
-    // recomputed fresh ids would no longer match the rows a prior run
-    // already appended and the duplicate guards below would miss them.
-    val memTmp = path + "/.refit-members"
-    val tmpPath = new org.apache.hadoop.fs.Path(memTmp)
-    val tmpFs = tmpPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val nextIdFile = new org.apache.hadoop.fs.Path(memTmp + "/_next_id")
-    val pruned = readStandingStorePruned(spark, path, drifted.toSeq)
-    if (pruned.count() > 0L) {
-      pruned.write.mode("overwrite").parquet(memTmp)
-      val out = tmpFs.create(nextIdFile, true)
-      try out.write((cb.map(_._1).max + 1).toString.getBytes("UTF-8"))
-      finally out.close()
-    } else if (!tmpFs.exists(tmpPath))
-      return Seq.empty // nothing standing AND no crashed predecessor
-    val nextId: Long = if (tmpFs.exists(nextIdFile)) {
-      val in = tmpFs.open(nextIdFile)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    } else cb.map(_._1).max + 1 // backup from a pre-marker build
-    val members = spark.read.parquet(memTmp)
+    // read before the delete: the files it lists are the pre-delete
+    // generations, which stay on disk until the transaction publishes
+    val members = readStandingStorePruned(spark, path, drifted.toSeq)
     val nMem = members.count()
     if (nMem == 0L) return Seq.empty
+    val nextId = cb.map(_._1).max + 1
     val kRefit = math.max(1L,
       (nMem + targetClusterSize - 1) / targetClusterSize).toInt
     val refit = trainCentroids(members, idCol, vecCol, kRefit, iters)
@@ -1976,50 +1941,17 @@ object Similarity {
       .withColumn("cluster",
         assignCluster(col(vecCol), refit).cast("long") + lit(nextId))
     deleteClustersFromStore(spark, path, drifted) // drops sidecar codes too
-    // Re-run idempotency: a crash AFTER an append but BEFORE the backup
-    // cleanup re-enters here with the SAME deterministic training (same
-    // backup bytes, same `_next_id`) — same fresh ids, same assignments.
-    // Any member id already standing in the fresh clusters is a prior
-    // run's append; blindly re-appending would duplicate it. Data rows
-    // and sidecar codes are probed INDEPENDENTLY (their appends are
-    // separate jobs — a crash between them must re-run the codes while
-    // skipping the data). Both probes read only the fresh clusters'
-    // buckets, so the guard is delta-footprint.
-    val freshIds = fresh.map(_._1)
-    val standingFresh = readStandingStorePruned(spark, path, freshIds)
-      .select(col(idCol))
     appendToStandingStore(reassigned
-      .select(col(idCol), col(vecCol), col("cluster"), col("nrm"))
-      .join(standingFresh, Seq(idCol), "left_anti"),
+      .select(col(idCol), col(vecCol), col("cluster"), col("nrm")),
       path, "cluster")
-    // re-encode the refit members against the FROZEN PQ codebook (its
-    // geometry didn't move — only coarse ids did); a crash between the
-    // append and this leaves the fresh clusters under-served by the PQ
-    // path (codes absent), never wrongly served — re-run the refresh
-    val codesToRefresh =
-      if (!StoreSwap.dirExists(spark, path, "pq_codes")) reassigned else {
-      val buckets = StoreSwap.bucketCount(spark, path)
-      val fb = freshIds.map(bucketOf(_, buckets)).distinct
-      val present = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
-        .filter(col("c_bucket").isin(fb: _*) &&
-          col("cluster").isin(freshIds: _*))
-        .select(col("id").as(idCol))
-      reassigned.join(present, Seq(idCol), "left_anti")
-    }
     // codebook BEFORE the code refresh: a residual sidecar re-encodes
     // against the coarse codebook, which must already hold the fresh
     // cids or the encode's centroid join silently drops every refit
-    // member. `cid >= nextId` strips a crashed prior run's fresh
-    // entries (ids are never reused, so every legitimate survivor is
-    // below nextId) — without it the re-run's codebook would carry
-    // duplicate cids. A crash between this write and the refresh
-    // leaves the fresh clusters under-served by the PQ path (codes
-    // absent), never wrongly served — the re-run completes them.
+    // member. The refit members are re-encoded against the FROZEN PQ
+    // codebook (its geometry didn't move — only coarse ids did)
     writeCodebookIds(spark, path,
-      cb.filterNot { case (cid, _) => drifted(cid) || cid >= nextId }
-        ++ fresh)
-    refreshPqCodes(spark, path, codesToRefresh, idCol, vecCol)
-    tmpFs.delete(tmpPath, true)
+      cb.filterNot { case (cid, _) => drifted(cid) } ++ fresh)
+    refreshPqCodes(spark, path, reassigned, idCol, vecCol)
     fresh
   }
 

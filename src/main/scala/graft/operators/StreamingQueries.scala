@@ -4,20 +4,27 @@ import graft.Tables
 import graft.pipeline.Config._
 import graft.sinks.ParquetTable
 import graft.streaming.StreamingLoad
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery}
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Path}
 import java.nio.file.attribute.FileTime
 
-/** Driver gate for the streaming load path (SURVEY.md §2.7): the SAME
-  * keyed-upsert table contract the batch pipeline proves (q14) must hold
-  * when the load arrives as a FILE STREAM — each arriving file one
-  * micro-batch through `foreachBatch` → [[ParquetTable.store]]. The gate
-  * stages chunk files with forced arrival order, runs the stream to
-  * completion, and returns the final table; the DuckDB oracle recomputes
-  * the expected end state relationally. StreamingSpec proves the
-  * equivalences in-test; this puts one under the driver's value gate. */
+/** Driver gates for the streaming load path (SURVEY.md §2.7): each
+  * arriving file is one micro-batch, the Spark form of the reference's
+  * incoming file drops. The 16 gates cover the keyed upsert (q114, the
+  * batch pipeline's q14 table contract as a file stream), stateful
+  * dedup, budget admission and sketches under redelivery (q127, q141,
+  * q162), event-time joins, sessions and the watermark drop path (q170,
+  * q174, q180, q182), and foreachBatch ingest into the standing
+  * embedding, PQ and text stores, exactly-once included (q184, q189,
+  * q204, q215, q212, q223, q224, q230). Every gate stages, runs and
+  * reads back through one fixture, [[StreamFixture]]: chunk files with a
+  * forced arrival order, the stream run to completion, then the final
+  * table; the DuckDB oracle recomputes the expected end state
+  * relationally. StreamingSpec proves the operators' equivalences
+  * in-test; these put them under the driver's value gate. */
 object StreamingQueries {
 
   /** Total bytes of regular files under `dirs` — the staged input size
@@ -39,11 +46,11 @@ object StreamingQueries {
     * state-store delta files regardless of batch volume: pure per-batch
     * overhead when batches are small, and the wrong sizing principle at
     * any scale (the data, not the box, should size a shuffle — guide
-    * §2.2). Partitions = staged bytes / 32 MB, clamped to
-    * [1, defaultParallelism]; override per session with
-    * `graft.stream.statePartitions`. Results are partition-count-
-    * invariant: every streaming gate's output is an exact
-    * aggregate/join/dedup state, sorted before hashing — only task
+    * §2.2). Partitions = staged bytes / 32 MB, at least
+    * min(4, defaultParallelism) and at most defaultParallelism; override
+    * per session with `graft.stream.statePartitions`. Results are
+    * partition-count-invariant: every streaming gate's output is an
+    * exact aggregate/join/dedup state, sorted before hashing — only task
     * count changes. Every `graft.*` conf and every modifiable
     * `spark.sql.*` conf of the caller's session (AQE, timezone, ANSI,
     * plan cuts...) is copied over, since `newSession()` only inherits
@@ -73,15 +80,102 @@ object StreamingQueries {
     ss
   }
 
+  /** The one streaming fixture of these gates, in a temp dir of its own.
+    * Staged chunks are the gate's test FIXTURE (the reference's incoming
+    * file drops, written driver-side), not a data path: the data movement
+    * is the stream's distributed micro-batches. Arrival order is forced
+    * by mtime (the i-th file arrives at t0 + i·2000 ms; Spark's file
+    * source takes the oldest first), and every source reads one file per
+    * micro-batch. A returned DataFrame may read staged or stored files
+    * lazily, so the dir must outlive the caller's consumption —
+    * [[Fixtures]] reclaims it at JVM exit. Stage BEFORE taking a
+    * [[streamSession]]: the staged bytes size its state partitions. */
+  private final class StreamFixture(tag: String) {
+    private val t0 = 1600000000000L
+    val tmp: Path = Fixtures.tempDir(s"graft-$tag-")
+    val checkpoint: String = tmp.resolve("cp").toString
+
+    /** A fresh input directory `name` under the temp dir. */
+    def inbox(name: String = "in"): Path =
+      Files.createDirectories(tmp.resolve(name))
+
+    /** Give `p` the mtime of the i-th arrival. */
+    def arrive(p: Path, i: Int): Unit =
+      Files.setLastModifiedTime(p, FileTime.fromMillis(t0 + i * 2000L))
+
+    /** Write `df` as the single parquet file `<into>/<name>.parquet`
+      * (`coalesce(1)`, then its one part file moved), arriving i-th. */
+    def stage(df: DataFrame, into: Path, name: String, i: Int): Unit = {
+      val stage = tmp.resolve(s"stage-$name")
+      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+      val listing = Files.list(stage)
+      val part = try listing.filter(p =>
+        p.getFileName.toString.startsWith("part-")).findFirst().get()
+      finally listing.close()
+      val dest = into.resolve(s"$name.parquet")
+      Files.move(part, dest)
+      arrive(dest, i)
+    }
+
+    /** Two micro-batches: `df`'s rows where `first` holds as d1, then
+      * the rest as d2. */
+    def stagePair(df: DataFrame, into: Path, first: Column): Unit = {
+      stage(df.filter(first), into, "d1", 0)
+      stage(df.filter(!first), into, "d2", 1)
+    }
+
+    /** q127/q141/q162's chunks: the rows with `id` ≡ 0, 1, 2 (mod 3) in
+      * that order, then a redelivery of every 7th id. */
+    def stageMod3(df: DataFrame, id: String, into: Path): Unit = {
+      (0 until 3).foreach { i =>
+        stage(df.filter(col(id) % 3 === i), into, s"chunk$i", i)
+      }
+      stage(df.filter(col(id) % 7 === 0), into, "redelivery", 3)
+    }
+
+    /** The event-time quartile (0-3) of each row's `ts` over `ev`, and
+      * `ev`'s max ts in µs — two longs of driver state. Quartile chunks
+      * arrive in time order: q170/q174/q180/q182's staging. */
+    def quartiles(ev: DataFrame): (Column, Long) = {
+      val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
+        max(unix_micros(col("ts"))).as("hi")).collect().head
+      val lo = mm.getLong(0)
+      val span = mm.getLong(1) - lo + 1
+      (least(lit(3),
+        floor((unix_micros(col("ts")) - lit(lo)) * 4 / lit(span))).cast("int"),
+        mm.getLong(1))
+    }
+
+    /** The files of `in` as a stream through session `s`, one file per
+      * micro-batch. */
+    def source(s: SparkSession, in: Path, schema: StructType): DataFrame =
+      s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(in.toString)
+
+    /** Run a started query to completion, then stop it. */
+    def await(q: StreamingQuery): Unit =
+      try q.processAllAvailable() finally q.stop()
+
+    /** Start `w` with its checkpoint under the temp dir and run it to
+      * completion. */
+    def run(w: DataStreamWriter[_]): Unit =
+      await(w.option("checkpointLocation", checkpoint).start())
+
+    /** Run `out` into a memory sink of a unique name and return the
+      * sink's table, read through `ss`. */
+    def memory(ss: SparkSession, out: Dataset[_], mode: String): DataFrame = {
+      val qn = s"${tag}_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      run(out.writeStream.format("memory").queryName(qn).outputMode(mode))
+      ss.table(qn)
+    }
+  }
+
   /** lineitem subset → 3 base chunks (disjoint keys) + 1 overlay chunk
     * (every 80th order re-delivered with bumped quantity) staged as
-    * delimited files with strictly increasing mtimes (Spark's file
-    * source processes oldest-first) → streaming upsert → read back.
-    *
-    * The chunk files are written driver-side: they are the gate's test
-    * FIXTURE (the reference's incoming file drops), not a data path —
-    * the actual data movement is the stream's distributed micro-batches.
-    */
+    * delimited files in arrival order → streaming upsert → read back.
+    * The one text gate: its chunks are `|`-delimited lines, written
+    * through the fixture's temp dir, arrival times and run step. */
   def q114StreamUpsert(spark: SparkSession, dir: String): DataFrame = {
     // persisted: the fixture staging below collects four disjoint slices
     // of this aggregate — uncached, each collect would re-run the full
@@ -96,43 +190,35 @@ object StreamingQueries {
     // unpersist must run however staging or the stream fails — an
     // orphaned cache entry would occupy storage memory for the session
     try {
-      // the returned DataFrame lazily reads the staged table, so the
-      // fixture dir must outlive the caller's consumption — Fixtures
-      // reclaims it at JVM exit instead of leaking it past the process
-      val tmp = Fixtures.tempDir("graft-q114-")
-      val in = tmp.resolve("in")
-      Files.createDirectories(in)
-      val table = tmp.resolve("table").toString
-      val checkpoint = tmp.resolve("cp").toString
+      val fx = new StreamFixture("q114")
+      val in = fx.inbox()
+      val table = fx.tmp.resolve("table").toString
 
-      def writeChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
+      def writeChunk(df: DataFrame, name: String, i: Int): Unit = {
         val rows = df.collect().map { r =>
           s"${r.getLong(0)}|${r.getInt(1)}|${r.getDouble(2)}|${r.getString(3)}"
         }
         val p = in.resolve(name)
         Files.write(p, rows.mkString("", "\n", "\n").getBytes("UTF-8"))
-        Files.setLastModifiedTime(p, FileTime.fromMillis(mtimeMs))
+        fx.arrive(p, i)
       }
 
-      // three disjoint base chunks, then the overlay re-delivery — mtimes
-      // force the arrival order the upsert semantics depend on
-      val t0 = 1600000000000L
+      // three disjoint base chunks, then the overlay re-delivery — the
+      // arrival order the upsert semantics depend on
       (0 until 3).foreach { i =>
-        writeChunk(base.filter(col("l_orderkey") % 3 === i), s"chunk$i.csv",
-          t0 + i * 2000L)
+        writeChunk(base.filter(col("l_orderkey") % 3 === i), s"chunk$i.csv", i)
       }
       writeChunk(base.filter(col("l_orderkey") % 80 === 0)
           .withColumn("l_quantity", col("l_quantity") + lit(50.0))
           .withColumn("l_returnflag", lit("S")),
-        "overlay.csv", t0 + 3 * 2000L)
+        "overlay.csv", 3)
 
       val schema = StructType(Seq(
         StructField("l_orderkey", LongType), StructField("l_linenumber", IntegerType),
         StructField("l_quantity", DoubleType), StructField("l_returnflag", StringType)))
-      val q = StreamingLoad.fileLoadStream(spark, in.toString, schema, "|",
+      fx.await(StreamingLoad.fileLoadStream(spark, in.toString, schema, "|",
         table, DbConfig(strategy = Upsert(Seq("l_orderkey", "l_linenumber")),
-          keepContent = true), checkpoint)
-      try q.processAllAvailable() finally q.stop()
+          keepContent = true), fx.checkpoint))
 
       ParquetTable.load(spark, table)
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -144,8 +230,8 @@ object StreamingQueries {
   /** q127: streaming first-seen dedup — the corpus-ingest memory of
     * q19/q82 as a STATEFUL STREAM ([[StreamingLoad.dedupStream]],
     * `flatMapGroupsWithState` keyed by content fingerprint). Documents
-    * arrive as four mtime-ordered parquet micro-batches (ids ≡0,1,2 mod 3,
-    * then a REDELIVERY of every 7th doc); each doc gets exactly one
+    * arrive as four parquet micro-batches (ids ≡0,1,2 mod 3, then a
+    * REDELIVERY of every 7th doc); each doc gets exactly one
     * decision row — first-seen keeps, later copies flag as dupes, and
     * redelivery of a kept doc emits nothing (idempotent under
     * at-least-once delivery). The oracle replays the arrival order
@@ -154,46 +240,14 @@ object StreamingQueries {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       .persist()
     try {
-      val tmp = Fixtures.tempDir("graft-q127-")
-      val in = tmp.resolve("in")
-      Files.createDirectories(in)
-
-      def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val stage = tmp.resolve(s"stage-$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val listing = Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        finally listing.close()
-        val dest = in.resolve(s"$name.parquet")
-        Files.move(part, dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
-
-      val t0 = 1600000000000L
-      (0 until 3).foreach { i =>
-        stageChunk(docs.filter(col("doc_id") % 3 === i), s"chunk$i",
-          t0 + i * 2000L)
-      }
-      stageChunk(docs.filter(col("doc_id") % 7 === 0), "redelivery",
-        t0 + 3 * 2000L)
-
+      val fx = new StreamFixture("q127")
+      val in = fx.inbox()
+      fx.stageMod3(docs, "doc_id", in)
       val ss = streamSession(spark, in) // state partitions from staged size
-      val stream = ss.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType))))
-        .option("maxFilesPerTrigger", 1) // one chunk = one micro-batch
-        .parquet(in.toString)
-      val qn = "q127_dedup_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = StreamingLoad.dedupStream(stream, "doc_id", "text")
-        .writeStream.format("memory").queryName(qn).outputMode("append")
-        .option("checkpointLocation", tmp.resolve("cp").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
       // redelivered non-kept docs re-emit their (identical) dupe verdict;
       // distinct folds replays to the one decision per doc
-      ss.table(qn)
+      fx.memory(ss, StreamingLoad.dedupStream(fx.source(ss, in, docs.schema),
+          "doc_id", "text"), "append")
         .select(col("doc_id"), col("fp"), col("is_first"))
         .distinct()
         .orderBy(col("doc_id"))
@@ -203,9 +257,9 @@ object StreamingQueries {
   /** q141: streaming BUDGET ADMISSION — the q134 plan (half-corpus token
     * budget, Hamilton-split per source) enforced against an ARRIVING
     * corpus ([[StreamingLoad.budgetStream]], keyed state per source).
-    * Same staging as q127: three mtime-ordered micro-batches by
-    * doc_id mod 3, then a redelivery of every 7th doc that must change
-    * nothing (the decided-id state absorbs at-least-once delivery). The
+    * Same staging as q127: three micro-batches by doc_id mod 3, then a
+    * redelivery of every 7th doc that must change nothing (the
+    * decided-id state absorbs at-least-once delivery). The
     * oracle replays arrival order relationally — admission is a PREFIX
     * of (chunk, doc_id) order per source, so `running total < alloc`
     * reproduces every decision. */
@@ -219,45 +273,12 @@ object StreamingQueries {
           "n_tokens", num = 1, den = 2)
         .select(col("source"), col("alloc_tokens")).collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val tmp = Fixtures.tempDir("graft-q141-")
-      val in = tmp.resolve("in")
-      Files.createDirectories(in)
-
-      def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val stage = tmp.resolve(s"stage-$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val listing = Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        finally listing.close()
-        val dest = in.resolve(s"$name.parquet")
-        Files.move(part, dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
-
-      val t0 = 1600000000000L
-      (0 until 3).foreach { i =>
-        stageChunk(docs.filter(col("doc_id") % 3 === i), s"chunk$i",
-          t0 + i * 2000L)
-      }
-      stageChunk(docs.filter(col("doc_id") % 7 === 0), "redelivery",
-        t0 + 3 * 2000L)
-
+      val fx = new StreamFixture("q141")
+      val in = fx.inbox()
+      fx.stageMod3(docs, "doc_id", in)
       val ss = streamSession(spark, in) // state partitions from staged size
-      val stream = ss.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("source", StringType),
-          StructField("n_tokens", LongType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-      val qn = "q141_budget_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = StreamingLoad.budgetStream(stream, alloc)
-        .writeStream.format("memory").queryName(qn).outputMode("append")
-        .option("checkpointLocation", tmp.resolve("cp").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(qn)
+      fx.memory(ss, StreamingLoad.budgetStream(fx.source(ss, in, docs.schema),
+          alloc), "append")
         .select(col("doc_id"), col("source"), col("n_tokens"),
           col("admitted"), col("tokens_before"))
         .orderBy(col("doc_id"))
@@ -279,52 +300,39 @@ object StreamingQueries {
         col("user_id").cast("long").as("user_id"), col("event_type"))
       .persist()
     try {
-      val tmp = Fixtures.tempDir("graft-q162-")
-      val in = tmp.resolve("in")
-      Files.createDirectories(in)
-      def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val stage = tmp.resolve(s"stage-$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val listing = Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        finally listing.close()
-        val dest = in.resolve(s"$name.parquet")
-        Files.move(part, dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
-      val t0 = 1600000000000L
-      (0 until 3).foreach { i =>
-        stageChunk(ev.filter(col("event_id") % 3 === i), s"chunk$i",
-          t0 + i * 2000L)
-      }
-      stageChunk(ev.filter(col("event_id") % 7 === 0), "redelivery",
-        t0 + 3 * 2000L)
-
+      val fx = new StreamFixture("q162")
+      val in = fx.inbox()
+      fx.stageMod3(ev, "event_id", in)
       val ss = streamSession(spark, in) // state partitions from staged size
-      val stream = ss.readStream
-        .schema(StructType(Seq(StructField("event_id", LongType),
-          StructField("user_id", LongType),
-          StructField("event_type", StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
       val (j, rho) = Sketches.hllColumns(col("user_id"))
-      val qn = "q162_hll_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = stream
-        .select(col("event_type"), j.as("j"), rho.as("rho"))
-        .groupBy(col("event_type"), col("j"))
-        .agg(max(col("rho")).as("mj"))
-        .writeStream.format("memory").queryName(qn).outputMode("update")
-        .option("checkpointLocation", tmp.resolve("cp").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val regs = ss.table(qn)
+      val regs = fx.memory(ss, fx.source(ss, in, ev.schema)
+          .select(col("event_type"), j.as("j"), rho.as("rho"))
+          .groupBy(col("event_type"), col("j"))
+          .agg(max(col("rho")).as("mj")), "update")
         .groupBy(col("event_type"), col("j"))
         .agg(max(col("mj")).as("mj"))
       Sketches.hllEstimate(regs, Seq("event_type"))
         .orderBy(col("event_type"))
     } finally ev.unpersist()
+  }
+
+  /** q170/q182's sides: `ev`'s views and purchases as (event_id,
+    * user_id, ts), each staged as the four event-time quartile chunks
+    * (v0-v3 and b0-b3, chunk i of both sides arriving i-th). Returns the
+    * two inboxes, the sides' schema and max ts in µs. */
+  private def stageJoinSides(fx: StreamFixture,
+                             ev: DataFrame): (Path, Path, StructType, Long) = {
+    val inV = fx.inbox("views")
+    val inB = fx.inbox("buys")
+    val (chunkOf, hi) = fx.quartiles(ev)
+    def side(t: String) = ev.filter(col("event_type") === t)
+      .select(col("event_id"), col("user_id"), col("ts"))
+    val (views, buys) = (side("view"), side("purchase"))
+    (0 until 4).foreach { i =>
+      fx.stage(views.filter(chunkOf === i), inV, s"v$i", i)
+      fx.stage(buys.filter(chunkOf === i), inB, s"b$i", i)
+    }
+    (inV, inB, views.schema, hi)
   }
 
   /** q170: the watermarked STREAM-STREAM interval join
@@ -341,65 +349,18 @@ object StreamingQueries {
     * static interval join, which is what the DuckDB oracle computes —
     * the equivalence a 100 TB ingest pipeline otherwise trusts blind.
     * Inner-join matches emit in the batch they occur (no watermark
-    * wait), so the memory sink holds the full result after
-    * `processAllAvailable`. */
+    * wait), so the memory sink holds the full result after the run. */
   def q170StreamIntervalJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
       .persist()
     try {
-      val tmp = Fixtures.tempDir("graft-q170-")
-      val inV = tmp.resolve("views")
-      val inB = tmp.resolve("buys")
-      Files.createDirectories(inV)
-      Files.createDirectories(inB)
-
-      def stageChunk(df: DataFrame, into: Path, name: String,
-                     mtimeMs: Long): Unit = {
-        val stage = tmp.resolve(s"stage-$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val listing = Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        finally listing.close()
-        val dest = into.resolve(s"$name.parquet")
-        Files.move(part, dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
-
-      // global event-time quartiles — two longs of driver state
-      val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).collect().head
-      val lo = mm.getLong(0)
-      val span = mm.getLong(1) - lo + 1
-      val chunkOf = least(lit(3),
-        floor((unix_micros(col("ts")) - lit(lo)) * 4 / lit(span))).cast("int")
-
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val t0 = 1600000000000L
-      (0 until 4).foreach { i =>
-        stageChunk(views.filter(chunkOf === i), inV, s"v$i", t0 + i * 2000L)
-        stageChunk(buys.filter(chunkOf === i), inB, s"b$i", t0 + i * 2000L)
-      }
-
-      val schema = StructType(Seq(StructField("event_id", LongType),
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
+      val fx = new StreamFixture("q170")
+      val (inV, inB, schema, _) = stageJoinSides(fx, ev)
       val ss = streamSession(spark, inV, inB) // state partitions from staged size
-      def src(dir: Path): DataFrame = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1) // one time-quartile per batch
-        .parquet(dir.toString)
-      val qn = "q170_ij_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = StreamingLoad.intervalJoinStreams(src(inV), src(inB),
-          "user_id", window = "1 hour", watermark = "2 hours")
-        .writeStream.format("memory").queryName(qn).outputMode("append")
-        .option("checkpointLocation", tmp.resolve("cp").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(qn)
+      fx.memory(ss, StreamingLoad.intervalJoinStreams(fx.source(ss, inV, schema),
+          fx.source(ss, inB, schema), "user_id", window = "1 hour",
+          watermark = "2 hours"), "append")
         .select(col("user_id"), col("event_id").as("view_event"),
           col("event_id_r").as("buy_event"),
           unix_micros(col("ts")).as("view_us"),
@@ -426,65 +387,20 @@ object StreamingQueries {
       .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
       .persist()
     try {
-      val tmp = Fixtures.tempDir("graft-q182-")
-      val inV = tmp.resolve("views")
-      val inB = tmp.resolve("buys")
-      Files.createDirectories(inV)
-      Files.createDirectories(inB)
-      def stageChunk(df: DataFrame, into: Path, name: String,
-                     mtimeMs: Long): Unit = {
-        val stage = tmp.resolve(s"stage-$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val listing = Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        finally listing.close()
-        val dest = into.resolve(s"$name.parquet")
-        Files.move(part, dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
-      val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).collect().head
-      val lo = mm.getLong(0)
-      val hi = mm.getLong(1)
-      val span = hi - lo + 1
-      val chunkOf = least(lit(3),
-        floor((unix_micros(col("ts")) - lit(lo)) * 4 / lit(span))).cast("int")
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      val buys = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      def sentinel(offsetUs: Long): DataFrame =
-        ev.sparkSession.range(1).select(lit(-1L).as("event_id"),
-          lit(-1L).as("user_id"),
-          timestamp_micros(lit(hi + offsetUs)).as("ts"))
-      val t0 = 1600000000000L
-      (0 until 4).foreach { i =>
-        stageChunk(views.filter(chunkOf === i), inV, s"v$i", t0 + i * 2000L)
-        stageChunk(buys.filter(chunkOf === i), inB, s"b$i", t0 + i * 2000L)
-      }
+      val fx = new StreamFixture("q182")
+      val (inV, inB, schema, hi) = stageJoinSides(fx, ev)
       val H = 3600L * 1000000L
       Seq(4, 5).foreach { i =>
-        stageChunk(sentinel(4 * H + (i - 4) * 1000000L), inV, s"v$i",
-          t0 + i * 2000L)
-        stageChunk(sentinel(4 * H + (i - 4) * 1000000L), inB, s"b$i",
-          t0 + i * 2000L)
+        val sentinel = ev.sparkSession.range(1).select(lit(-1L).as("event_id"),
+          lit(-1L).as("user_id"),
+          timestamp_micros(lit(hi + 4 * H + (i - 4) * 1000000L)).as("ts"))
+        fx.stage(sentinel, inV, s"v$i", i)
+        fx.stage(sentinel, inB, s"b$i", i)
       }
-      val schema = StructType(Seq(StructField("event_id", LongType),
-        StructField("user_id", LongType), StructField("ts", TimestampType)))
       val ss = streamSession(spark, inV, inB) // state partitions from staged size
-      def src(d: Path): DataFrame = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(d.toString)
-      val qn = "q182_oj_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = StreamingLoad.intervalJoinStreamsOuter(src(inV), src(inB),
-          "user_id", window = "1 hour", watermark = "2 hours")
-        .writeStream.format("memory").queryName(qn).outputMode("append")
-        .option("checkpointLocation", tmp.resolve("cp").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(qn)
+      fx.memory(ss, StreamingLoad.intervalJoinStreamsOuter(
+          fx.source(ss, inV, schema), fx.source(ss, inB, schema), "user_id",
+          window = "1 hour", watermark = "2 hours"), "append")
         .filter(col("user_id") >= 0)
         .select(col("user_id"), col("event_id").as("view_event"),
           col("event_id_r").as("buy_event"),
@@ -493,6 +409,37 @@ object StreamingQueries {
         .orderBy(col("user_id").asc, col("view_event").asc,
           col("buy_event").asc_nulls_first)
     } finally ev.unpersist()
+  }
+
+  /** q184/q189/q223's embedding ingest flow: the embeddings, the
+    * standing quantizer (k = ⌈n/50⌉, two iterations) and the q177
+    * augmentation delta ([[SelectionQueries.augmentDelta]]), which
+    * [[stream]] stages as two micro-batches — the scaled twins (ids below
+    * 200000), then the reversed novelties and their 2× copies — and runs
+    * through a foreachBatch body in the caller's session. */
+  private final class EmbeddingFlow(spark: SparkSession, dir: String,
+                                    tag: String) {
+    val emb: DataFrame = Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding"))
+    val cents: Seq[Seq[Double]] = Similarity.trainCentroids(emb, "vec_id",
+      "embedding", ((emb.count() + 49) / 50).toInt, iters = 2)
+    val fx = new StreamFixture(tag)
+    val store: String = fx.tmp.resolve("standing").toString
+    val delta: DataFrame = SelectionQueries.augmentDelta(emb)
+    val firstBatch: Column = col("vec_id") < 200000L
+
+    /** `df` with its standing `cluster` and `nrm`. */
+    def assigned(df: DataFrame): DataFrame = df
+      .withColumn("cluster",
+        Similarity.assignCluster(col("embedding"), cents).cast("long"))
+      .withColumn("nrm", Similarity.norm(col("embedding")))
+
+    def stream(perBatch: (DataFrame, Long) => Unit): Unit = {
+      val in = fx.inbox()
+      fx.stagePair(delta, in, firstBatch)
+      fx.run(fx.source(spark, in, delta.schema).writeStream
+        .foreachBatch(perBatch))
+    }
   }
 
   /** q184: STREAMING SEMANTIC INGEST against a standing store — the
@@ -511,83 +458,29 @@ object StreamingQueries {
     * so the store read in batch N sees exactly the batch-(N-1) append
     * — the same settled-membership invariant q177 states. */
   def q184StreamIngestDedup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val nBase = emb.count()
-    val k = ((nBase + 49) / 50).toInt
-    val cents = Similarity.trainCentroids(emb, "vec_id",
-      "embedding", k, iters = 2)
-    val tmp = Fixtures.tempDir("graft-q184-")
-    val in = tmp.resolve("in")
-    Files.createDirectories(in)
-    val store = tmp.resolve("standing").toString
-    val verdicts = tmp.resolve("verdicts").toString
-    emb
-      .withColumn("cluster",
-        Similarity.assignCluster(col("embedding"), cents)
-          .cast("long"))
-      .withColumn("nrm", Similarity.norm(col("embedding")))
-      .write.mode("overwrite").parquet(store)
-    def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val stage = tmp.resolve(s"stage-$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally listing.close()
-      val dest = in.resolve(s"$name.parquet")
-      Files.move(part, dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-    }
-    val delta = emb
-      .select(col("vec_id"), col("embedding"),
-        explode(typedlit(Seq(1, 2, 3))).as("variant"))
-      .filter((col("variant") === 1 && col("vec_id") % 5 === 0) ||
-        (col("variant") === 2 && col("vec_id") % 7 === 0) ||
-        (col("variant") === 3 && col("vec_id") % 14 === 0))
-      .select((col("vec_id") + col("variant") * 100000L).as("vec_id"),
-        when(col("variant") === 3,
-          transform(reverse(col("embedding")), v => v * lit(2.0f)))
-          .when(col("variant") === 2, reverse(col("embedding")))
-          .otherwise(transform(col("embedding"), v => v * lit(1.5f)))
-          .as("embedding"))
-    val t0 = 1600000000000L
-    stageChunk(delta.filter(col("vec_id") < 200000L), "d1", t0)
-    stageChunk(delta.filter(col("vec_id") >= 200000L), "d2", t0 + 2000L)
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // the batch's assignment is an interpreted literal argmin
-        // referenced by both joins and the verdict — materialize ONCE
-        // (the prepped core's contract)
-        val d = batch
-          .withColumn("cluster",
-            Similarity.assignCluster(col("embedding"), cents)
-              .cast("long"))
-          .withColumn("nrm", Similarity.norm(col("embedding")))
-          .cache()
+    val f = new EmbeddingFlow(spark, dir, "q184")
+    val verdicts = f.fx.tmp.resolve("verdicts").toString
+    f.assigned(f.emb).write.mode("overwrite").parquet(f.store)
+    f.stream { (batch, _) =>
+      // the batch's assignment is an interpreted literal argmin
+      // referenced by both joins and the verdict — materialize ONCE
+      // (the prepped core's contract)
+      val d = f.assigned(batch).cache()
+      try {
+        val standing = batch.sparkSession.read.parquet(f.store)
+        val v = Similarity.semDedupIncrementalPrepped(
+          standing, d, "vec_id", "embedding", "cluster", "nrm",
+          "cluster", "nrm", minCos = 0.99).cache()
         try {
-          val standing = batch.sparkSession.read.parquet(store)
-          val v = Similarity.semDedupIncrementalPrepped(
-            standing, d, "vec_id", "embedding", "cluster", "nrm",
-            "cluster", "nrm", minCos = 0.99).cache()
-          try {
-            v.write.mode("append").parquet(verdicts)
-            // keepers join the standing corpus BEFORE the next batch
-            d.join(v.filter(col("keep")).select(col("vec_id")), "vec_id")
-              .select(col("vec_id"), col("embedding"), col("cluster"),
-                col("nrm"))
-              .write.mode("append").parquet(store)
-          } finally v.unpersist()
-        } finally d.unpersist()
-      }
-      .option("checkpointLocation", tmp.resolve("cp").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+          v.write.mode("append").parquet(verdicts)
+          // keepers join the standing corpus BEFORE the next batch
+          d.join(v.filter(col("keep")).select(col("vec_id")), "vec_id")
+            .select(col("vec_id"), col("embedding"), col("cluster"),
+              col("nrm"))
+            .write.mode("append").parquet(f.store)
+        } finally v.unpersist()
+      } finally d.unpersist()
+    }
     spark.read.parquet(verdicts)
       .select(col("vec_id"), col("cluster"), col("keep"))
       .orderBy(col("vec_id"))
@@ -606,79 +499,26 @@ object StreamingQueries {
     * this gate adds is that the bucket layout survives judge → append
     * → judge cycles bit-exactly. */
   def q189StreamIngestStore(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val nBase = emb.count()
-    val k = ((nBase + 49) / 50).toInt
-    val cents = Similarity.trainCentroids(emb, "vec_id",
-      "embedding", k, iters = 2)
-    val tmp = Fixtures.tempDir("graft-q189-")
-    val in = tmp.resolve("in")
-    Files.createDirectories(in)
-    val store = tmp.resolve("standing").toString
-    val verdicts = tmp.resolve("verdicts").toString
-    Similarity.writeStandingStore(
-      emb
-        .withColumn("cluster",
-          Similarity.assignCluster(col("embedding"), cents).cast("long"))
-        .withColumn("nrm", Similarity.norm(col("embedding"))),
-      store, "cluster", buckets = 16)
-    def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val stage = tmp.resolve(s"stage-$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally listing.close()
-      val dest = in.resolve(s"$name.parquet")
-      Files.move(part, dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-    }
-    val delta = emb
-      .select(col("vec_id"), col("embedding"),
-        explode(typedlit(Seq(1, 2, 3))).as("variant"))
-      .filter((col("variant") === 1 && col("vec_id") % 5 === 0) ||
-        (col("variant") === 2 && col("vec_id") % 7 === 0) ||
-        (col("variant") === 3 && col("vec_id") % 14 === 0))
-      .select((col("vec_id") + col("variant") * 100000L).as("vec_id"),
-        when(col("variant") === 3,
-          transform(reverse(col("embedding")), v => v * lit(2.0f)))
-          .when(col("variant") === 2, reverse(col("embedding")))
-          .otherwise(transform(col("embedding"), v => v * lit(1.5f)))
-          .as("embedding"))
-    val t0 = 1600000000000L
-    stageChunk(delta.filter(col("vec_id") < 200000L), "d1", t0)
-    stageChunk(delta.filter(col("vec_id") >= 200000L), "d2", t0 + 2000L)
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val d = batch
-          .withColumn("cluster",
-            Similarity.assignCluster(col("embedding"), cents)
-              .cast("long"))
-          .withColumn("nrm", Similarity.norm(col("embedding")))
-          .cache()
+    val f = new EmbeddingFlow(spark, dir, "q189")
+    val verdicts = f.fx.tmp.resolve("verdicts").toString
+    Similarity.writeStandingStore(f.assigned(f.emb), f.store, "cluster",
+      buckets = 16)
+    f.stream { (batch, _) =>
+      val d = f.assigned(batch).cache()
+      try {
+        val v = Similarity.semDedupIncrementalStore(
+          batch.sparkSession, f.store, d, "vec_id", "embedding",
+          "cluster", "nrm", minCos = 0.99).cache()
         try {
-          val v = Similarity.semDedupIncrementalStore(
-            batch.sparkSession, store, d, "vec_id", "embedding",
-            "cluster", "nrm", minCos = 0.99).cache()
-          try {
-            v.write.mode("append").parquet(verdicts)
-            Similarity.appendToStandingStore(
-              d.join(v.filter(col("keep")).select(col("vec_id")), "vec_id")
-                .select(col("vec_id"), col("embedding"), col("cluster"),
-                  col("nrm")),
-              store, "cluster")
-          } finally v.unpersist()
-        } finally d.unpersist()
-      }
-      .option("checkpointLocation", tmp.resolve("cp").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+          v.write.mode("append").parquet(verdicts)
+          Similarity.appendToStandingStore(
+            d.join(v.filter(col("keep")).select(col("vec_id")), "vec_id")
+              .select(col("vec_id"), col("embedding"), col("cluster"),
+                col("nrm")),
+            f.store, "cluster")
+        } finally v.unpersist()
+      } finally d.unpersist()
+    }
     spark.read.parquet(verdicts)
       .select(col("vec_id"), col("cluster"), col("keep"))
       .orderBy(col("vec_id"))
@@ -701,72 +541,18 @@ object StreamingQueries {
     * evaluating the redelivered DataFrame (VersionedStoreSpec proves
     * that with a poisoned batch). */
   def q223StreamExactlyOnce(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-    val nBase = emb.count()
-    val k = ((nBase + 49) / 50).toInt
-    val cents = Similarity.trainCentroids(emb, "vec_id",
-      "embedding", k, iters = 2)
-    val tmp = Fixtures.tempDir("graft-q223-")
-    val in = tmp.resolve("in")
-    Files.createDirectories(in)
-    val store = tmp.resolve("standing").toString
-    def assigned(df: DataFrame) = df
-      .withColumn("cluster",
-        Similarity.assignCluster(col("embedding"), cents).cast("long"))
-      .withColumn("nrm", Similarity.norm(col("embedding")))
-    Similarity.writeStandingStore(assigned(emb), store, "cluster",
+    val f = new EmbeddingFlow(spark, dir, "q223")
+    def append(df: DataFrame, id: Long): Unit =
+      Similarity.appendToStandingStore(f.assigned(df)
+          .select(col("vec_id"), col("embedding"), col("cluster"), col("nrm")),
+        f.store, "cluster", batchId = Some(id))
+    Similarity.writeStandingStore(f.assigned(f.emb), f.store, "cluster",
       buckets = 16)
-    def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val stage = tmp.resolve(s"stage-$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally listing.close()
-      val dest = in.resolve(s"$name.parquet")
-      Files.move(part, dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-    }
-    val delta = emb
-      .select(col("vec_id"), col("embedding"),
-        explode(typedlit(Seq(1, 2, 3))).as("variant"))
-      .filter((col("variant") === 1 && col("vec_id") % 5 === 0) ||
-        (col("variant") === 2 && col("vec_id") % 7 === 0) ||
-        (col("variant") === 3 && col("vec_id") % 14 === 0))
-      .select((col("vec_id") + col("variant") * 100000L).as("vec_id"),
-        when(col("variant") === 3,
-          transform(reverse(col("embedding")), v => v * lit(2.0f)))
-          .when(col("variant") === 2, reverse(col("embedding")))
-          .otherwise(transform(col("embedding"), v => v * lit(1.5f)))
-          .as("embedding"))
-    val t0 = 1600000000000L
-    stageChunk(delta.filter(col("vec_id") < 200000L), "d1", t0)
-    stageChunk(delta.filter(col("vec_id") >= 200000L), "d2", t0 + 2000L)
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        Similarity.appendToStandingStore(
-          assigned(batch)
-            .select(col("vec_id"), col("embedding"), col("cluster"),
-              col("nrm")),
-          store, "cluster", batchId = Some(id))
-      }
-      .option("checkpointLocation", tmp.resolve("cp").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    f.stream(append)
     // the at-least-once case: batch 0 redelivered verbatim after an
     // "unacknowledged epoch" — the ledger must make it a no-op
-    Similarity.appendToStandingStore(
-      assigned(delta.filter(col("vec_id") < 200000L))
-        .select(col("vec_id"), col("embedding"), col("cluster"),
-          col("nrm")),
-      store, "cluster", batchId = Some(0L))
-    Similarity.readStandingStore(spark, store)._1
+    append(f.delta.filter(f.firstBatch), 0L)
+    Similarity.readStandingStore(spark, f.store)._1
       .select(col("vec_id"), col("cluster"))
       .orderBy(col("vec_id"))
   }
@@ -796,36 +582,17 @@ object StreamingQueries {
                              tag: String, residual: Boolean): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    val tmp = Fixtures.tempDir(s"graft-$tag-")
-    val in = tmp.resolve("in")
-    Files.createDirectories(in)
+    val fx = new StreamFixture(tag)
+    val in = fx.inbox()
     // mutating ingest loop: a private clone of the shared partial base
     // (q200/q213's batch-flow twin — the same store those gates clone)
     val store = Fixtures.cloneDir(
       SelectionQueries.sharedPqStorePartial(spark, dir, residual),
       s"graft-${tag}s-")
-    def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val stage = tmp.resolve(s"stage-$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally listing.close()
-      val dest = in.resolve(s"$name.parquet")
-      Files.move(part, dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-    }
     val delta = emb.filter(col("vec_id") % 3 === 0)
-    val t0 = 1600000000000L
-    stageChunk(delta.filter(col("vec_id") % 2 === 0), "d1", t0)
-    stageChunk(delta.filter(col("vec_id") % 2 =!= 0), "d2", t0 + 2000L)
+    fx.stagePair(delta, in, col("vec_id") % 2 === 0)
     val reloaded = Similarity.readCodebook(spark, store)
-    val schema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(FloatType))))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = stream.writeStream
+    fx.run(fx.source(spark, in, delta.schema).writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val d = batch
           .withColumn("cluster",
@@ -841,14 +608,56 @@ object StreamingQueries {
             d.select(col("vec_id"), col("embedding"), col("cluster")),
             "vec_id", "embedding", m = 4, dsub = 16)
         } finally d.unpersist()
-      }
-      .option("checkpointLocation", tmp.resolve("cp").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      })
     Similarity.compactPqCodes(spark, store, maxFilesPerBucket = 1)
     Similarity.pqTopKStore(spark, store, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", m = 4, dsub = 16, k = 5, nProbe = 2)
       .orderBy(col("query_id"), col("rank"))
+  }
+
+  /** q212/q224/q230's text ingest flow, q206's daily flow as a stream:
+    * the standing corpus, q206's deltas ([[ScaleQueries.nearDupDelta]]:
+    * delta1 = every 3rd doc without its first token, delta2 = every 5th
+    * without its first two) and a private clone of the shared text
+    * store (the loop mutates it). [[stream]] stages delta1 as two
+    * micro-batches (even ids, then odd) and runs them through a
+    * foreachBatch body in the caller's session; [[judgeDelta2]] is the
+    * gates' result, which must equal q206's batch-flow oracle EXACTLY —
+    * micro-batching the ingest is content-invariant. */
+  private final class TextFlow(spark: SparkSession, dir: String,
+                               tag: String) {
+    val standing: DataFrame = Tables.documents(spark, dir)
+      .select(col("doc_id"), col("text"))
+    val delta1: DataFrame = ScaleQueries.nearDupDelta(standing, 3, 100000L, 1)
+    val delta2: DataFrame = ScaleQueries.nearDupDelta(standing, 5, 200000L, 2)
+    val fx = new StreamFixture(tag)
+    val store: String = Fixtures.cloneDir(
+      ScaleQueries.sharedTextStore(spark, dir), s"graft-${tag}s-")
+    val firstBatch: Column = col("doc_id") % 2 === 0
+
+    def stream(perBatch: (DataFrame, Long) => Unit): Unit = {
+      val in = fx.inbox()
+      fx.stagePair(delta1, in, firstBatch)
+      fx.run(fx.source(spark, in, delta1.schema).writeStream
+        .foreachBatch(perBatch))
+    }
+
+    /** The streamed (or redelivered) batch `b` absorbed through
+      * [[Dedup.ingestBatchIntoStore]] under its batch id. */
+    def ingest(b: DataFrame, id: Long): Unit =
+      Dedup.ingestBatchIntoStore(b.sparkSession, store, b, "doc_id", "text",
+        batchId = Some(id))
+
+    /** foreachBatch's ingest: the batch cached for its merges. */
+    def ingestCached(batch: DataFrame, id: Long): Unit = {
+      val b = batch.cache()
+      try ingest(b, id) finally b.unpersist()
+    }
+
+    def judgeDelta2: DataFrame =
+      Dedup.lshJudgeStore(spark, store, standing.unionByName(delta1),
+          delta2, "doc_id", "text")
+        .orderBy(col("id_a"), col("id_b"))
   }
 
   /** q212: STREAMING NEAR-DUP JUDGMENT LOOP over the band index — the
@@ -863,69 +672,29 @@ object StreamingQueries {
     * content-invariant (a lost batch, a dropped band row, or a
     * mis-merged signature all break the hash). */
   def q212StreamLshIngest(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val standing = docs.select(col("doc_id"), col("text"))
-    def shifted(mod: Int, shift: Long, pat: String) =
-      standing.filter(col("doc_id") % mod === 0)
-        .select((col("doc_id") + shift).as("doc_id"),
-          regexp_replace(col("text"), pat, "").as("text"))
-    val delta1 = shifted(3, 100000L, "^\\S+\\s+")
-    val delta2 = shifted(5, 200000L, "^\\S+\\s+\\S+\\s+")
-    val tmp = Fixtures.tempDir("graft-q212-")
-    val in = tmp.resolve("in")
-    Files.createDirectories(in)
-    // mutating ingest loop: a private clone of the shared base store
-    val store = Fixtures.cloneDir(
-      ScaleQueries.sharedTextStore(spark, dir),
-      "graft-q212s-")
-    def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val stage = tmp.resolve(s"stage-$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally listing.close()
-      val dest = in.resolve(s"$name.parquet")
-      Files.move(part, dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
+    val f = new TextFlow(spark, dir, "q212")
+    val verdicts = f.fx.tmp.resolve("verdicts").toString
+    f.stream { (batch, _) =>
+      val b = batch.cache()
+      try {
+        val s = b.sparkSession
+        // serve first: judge the arriving batch against the standing
+        // corpus through the index (the loop's read path)
+        Dedup.lshJudgeStore(s, f.store, f.standing, b, "doc_id", "text")
+          .write.mode("append").parquet(verdicts)
+        // then absorb it: signature MIN-merge, shingle sidecar
+        // replace-merge (so the NEXT batch's verification reads this
+        // one's docs from their buckets), index + inventory merge
+        Dedup.mergeIntoSignatureStore(s, f.store,
+          Dedup.minhashSignatures(b, "doc_id", "text"), "doc_id")
+        Dedup.mergeShinglesIntoStore(s, f.store, b, "doc_id", "text")
+        Dedup.mergeIntoBandIndex(s, f.store,
+          b.select(col("doc_id")), "doc_id")
+      } finally b.unpersist()
     }
-    val t0 = 1600000000000L
-    stageChunk(delta1.filter(col("doc_id") % 2 === 0), "d1", t0)
-    stageChunk(delta1.filter(col("doc_id") % 2 =!= 0), "d2", t0 + 2000L)
-    val verdicts = tmp.resolve("verdicts").toString
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val b = batch.cache()
-        try {
-          val s = b.sparkSession
-          // serve first: judge the arriving batch against the standing
-          // corpus through the index (the loop's read path)
-          Dedup.lshJudgeStore(s, store, standing, b, "doc_id", "text")
-            .write.mode("append").parquet(verdicts)
-          // then absorb it: signature MIN-merge, shingle sidecar
-          // replace-merge (so the NEXT batch's verification reads this
-          // one's docs from their buckets), index + inventory merge
-          Dedup.mergeIntoSignatureStore(s, store,
-            Dedup.minhashSignatures(b, "doc_id", "text"), "doc_id")
-          Dedup.mergeShinglesIntoStore(s, store, b, "doc_id", "text")
-          Dedup.mergeIntoBandIndex(s, store,
-            b.select(col("doc_id")), "doc_id")
-          () // foreachBatch wants Unit
-        } finally b.unpersist()
-      }
-      .option("checkpointLocation", tmp.resolve("cp").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
     // the content-invariance claim: the streamed store must judge
     // delta2 exactly as q206's batch-built store does
-    Dedup.lshJudgeStore(spark, store, standing.unionByName(delta1),
-        delta2, "doc_id", "text")
-      .orderBy(col("id_a"), col("id_b"))
+    f.judgeDelta2
   }
 
   /** q224: q212's STREAMING LSH INGEST LOOP under the at-least-once
@@ -942,58 +711,12 @@ object StreamingQueries {
     * VersionedStoreSpec with a poisoned redelivery. */
   def q224StreamTextExactlyOnce(spark: SparkSession,
                                 dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val standing = docs.select(col("doc_id"), col("text"))
-    def shifted(mod: Int, shift: Long, pat: String) =
-      standing.filter(col("doc_id") % mod === 0)
-        .select((col("doc_id") + shift).as("doc_id"),
-          regexp_replace(col("text"), pat, "").as("text"))
-    val delta1 = shifted(3, 100000L, "^\\S+\\s+")
-    val delta2 = shifted(5, 200000L, "^\\S+\\s+\\S+\\s+")
-    val tmp = Fixtures.tempDir("graft-q224-")
-    val in = tmp.resolve("in")
-    Files.createDirectories(in)
-    // mutating ingest loop: a private clone of the shared base
-    val store = Fixtures.cloneDir(
-      ScaleQueries.sharedTextStore(spark, dir),
-      "graft-q224s-")
-    def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val stage = tmp.resolve(s"stage-$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally listing.close()
-      val dest = in.resolve(s"$name.parquet")
-      Files.move(part, dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-    }
-    val t0 = 1600000000000L
-    stageChunk(delta1.filter(col("doc_id") % 2 === 0), "d1", t0)
-    stageChunk(delta1.filter(col("doc_id") % 2 =!= 0), "d2", t0 + 2000L)
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = batch.cache()
-        try Dedup.ingestBatchIntoStore(b.sparkSession, store, b,
-          "doc_id", "text", batchId = Some(id))
-        finally b.unpersist()
-      }
-      .option("checkpointLocation", tmp.resolve("cp").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val f = new TextFlow(spark, dir, "q224")
+    f.stream(f.ingestCached)
     // redeliver batch 0 after an "unacknowledged epoch": the acked
     // ledger must make it a no-op
-    Dedup.ingestBatchIntoStore(spark, store,
-      delta1.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-      batchId = Some(0L))
-    Dedup.lshJudgeStore(spark, store, standing.unionByName(delta1),
-        delta2, "doc_id", "text")
-      .orderBy(col("id_a"), col("id_b"))
+    f.ingest(f.delta1.filter(f.firstBatch), 0L)
+    f.judgeDelta2
   }
 
   /** q230: q224's STREAMING EXACTLY-ONCE LOOP, version-counted — each
@@ -1007,65 +730,19 @@ object StreamingQueries {
     * must equal q206's batch-flow oracle exactly — the transactional
     * flow is content-invariant too. */
   def q230StreamUnifiedTxn(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val standing = docs.select(col("doc_id"), col("text"))
-    def shifted(mod: Int, shift: Long, pat: String) =
-      standing.filter(col("doc_id") % mod === 0)
-        .select((col("doc_id") + shift).as("doc_id"),
-          regexp_replace(col("text"), pat, "").as("text"))
-    val delta1 = shifted(3, 100000L, "^\\S+\\s+")
-    val delta2 = shifted(5, 200000L, "^\\S+\\s+\\S+\\s+")
-    val tmp = Fixtures.tempDir("graft-q230-")
-    val in = tmp.resolve("in")
-    Files.createDirectories(in)
-    // mutating ingest loop: a private clone of the shared base
-    val store = Fixtures.cloneDir(
-      ScaleQueries.sharedTextStore(spark, dir),
-      "graft-q230s-")
-    val preV = Dedup.signatureStoreVersions(spark, store).last
-    def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-      val stage = tmp.resolve(s"stage-$name")
-      df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-      val listing = Files.list(stage)
-      val part = try listing.filter(p =>
-        p.getFileName.toString.startsWith("part-")).findFirst().get()
-      finally listing.close()
-      val dest = in.resolve(s"$name.parquet")
-      Files.move(part, dest)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-    }
-    val t0 = 1600000000000L
-    stageChunk(delta1.filter(col("doc_id") % 2 === 0), "d1", t0)
-    stageChunk(delta1.filter(col("doc_id") % 2 =!= 0), "d2", t0 + 2000L)
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(in.toString)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        val b = batch.cache()
-        try Dedup.ingestBatchIntoStore(b.sparkSession, store, b,
-          "doc_id", "text", batchId = Some(id))
-        finally b.unpersist()
-      }
-      .option("checkpointLocation", tmp.resolve("cp").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val postV = Dedup.signatureStoreVersions(spark, store).last
+    val f = new TextFlow(spark, dir, "q230")
+    val preV = Dedup.signatureStoreVersions(spark, f.store).last
+    f.stream(f.ingestCached)
+    val postV = Dedup.signatureStoreVersions(spark, f.store).last
     require(postV == preV + 2,
       s"unified streaming ingest took ${postV - preV} commits for 2" +
         " micro-batches — the composed ingest must be ONE txn each")
     // redelivery after an "unacknowledged epoch": the namespaced
     // unified ledger must skip it WITHOUT a version bump
-    Dedup.ingestBatchIntoStore(spark, store,
-      delta1.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-      batchId = Some(0L))
-    require(Dedup.signatureStoreVersions(spark, store).last == postV,
+    f.ingest(f.delta1.filter(f.firstBatch), 0L)
+    require(Dedup.signatureStoreVersions(spark, f.store).last == postV,
       "redelivered batch bumped the unified store version")
-    Dedup.lshJudgeStore(spark, store, standing.unionByName(delta1),
-        delta2, "doc_id", "text")
-      .orderBy(col("id_a"), col("id_b"))
+    f.judgeDelta2
   }
 
   /** q174: STREAMING event-time session windows
@@ -1086,46 +763,13 @@ object StreamingQueries {
           / lit(1048576.0)).as("value"))
       .persist()
     try {
-      val tmp = Fixtures.tempDir("graft-q174-")
-      val in = tmp.resolve("in")
-      Files.createDirectories(in)
-      def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val stage = tmp.resolve(s"stage-$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val listing = Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        finally listing.close()
-        val dest = in.resolve(s"$name.parquet")
-        Files.move(part, dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
-      val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).collect().head
-      val lo = mm.getLong(0)
-      val span = mm.getLong(1) - lo + 1
-      val chunkOf = least(lit(3),
-        floor((unix_micros(col("ts")) - lit(lo)) * 4 / lit(span))).cast("int")
-      val t0 = 1600000000000L
-      (0 until 4).foreach { i =>
-        stageChunk(ev.filter(chunkOf === i), s"c$i", t0 + i * 2000L)
-      }
-      val schema = StructType(Seq(StructField("user_id", LongType),
-        StructField("ts", TimestampType),
-        StructField("value", DoubleType)))
+      val fx = new StreamFixture("q174")
+      val in = fx.inbox()
+      val (chunkOf, _) = fx.quartiles(ev)
+      (0 until 4).foreach { i => fx.stage(ev.filter(chunkOf === i), in, s"c$i", i) }
       val ss = streamSession(spark, in) // state partitions from staged size
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-      val qn = "q174_sess_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = StreamingLoad.sessionCounts(stream, gap = "30 minutes",
-          watermark = "2 hours")
-        .writeStream.format("memory").queryName(qn).outputMode("complete")
-        .option("checkpointLocation", tmp.resolve("cp").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      ss.table(qn)
+      fx.memory(ss, StreamingLoad.sessionCounts(fx.source(ss, in, ev.schema),
+          gap = "30 minutes", watermark = "2 hours"), "complete")
         .select(col("user_id"),
           unix_micros(col("sess_start")).as("sess_start_us"),
           unix_micros(col("sess_end")).as("sess_end_us"),
@@ -1149,7 +793,8 @@ object StreamingQueries {
     * from the same predicate — the gate fails if the engine's drop
     * boundary moves. Update-mode memory sink: per key the update
     * stream's count strictly increases, so the final state is the
-    * max-n row ([[StreamingLoad.windowedCounts]], 1 h tumbling
+    * max-n row, the top 1 by n of each (window, event type)
+    * ([[StreamingLoad.windowedCounts]], 1 h tumbling
     * windows, 1 h watermark; values dyadic-rounded as in q174 so the
     * double sums are exact under any accumulation order). */
   def q180WatermarkDrop(spark: SparkSession, dir: String): DataFrame = {
@@ -1159,30 +804,10 @@ object StreamingQueries {
           / lit(1048576.0)).as("value"))
       .persist()
     try {
-      val tmp = Fixtures.tempDir("graft-q180-")
-      val in = tmp.resolve("in")
-      Files.createDirectories(in)
-      def stageChunk(df: DataFrame, name: String, mtimeMs: Long): Unit = {
-        val stage = tmp.resolve(s"stage-$name")
-        df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-        val listing = Files.list(stage)
-        val part = try listing.filter(p =>
-          p.getFileName.toString.startsWith("part-")).findFirst().get()
-        finally listing.close()
-        val dest = in.resolve(s"$name.parquet")
-        Files.move(part, dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeMs))
-      }
-      val mm = ev.agg(min(unix_micros(col("ts"))).as("lo"),
-        max(unix_micros(col("ts"))).as("hi")).collect().head
-      val lo = mm.getLong(0)
-      val span = mm.getLong(1) - lo + 1
-      val chunkOf = least(lit(3),
-        floor((unix_micros(col("ts")) - lit(lo)) * 4 / lit(span))).cast("int")
-      val t0 = 1600000000000L
-      (0 until 4).foreach { i =>
-        stageChunk(ev.filter(chunkOf === i), s"c$i", t0 + i * 2000L)
-      }
+      val fx = new StreamFixture("q180")
+      val in = fx.inbox()
+      val (chunkOf, hi) = fx.quartiles(ev)
+      (0 until 4).foreach { i => fx.stage(ev.filter(chunkOf === i), in, s"c$i", i) }
       // buffer batch: the max-ts row(s) redelivered on-time. Spark
       // applies to batch N the watermark computed from stats through
       // batch N-2 (the stats a batch reports reach the tracker one
@@ -1191,29 +816,16 @@ object StreamingQueries {
       // late batch after it sees watermark = global max − 1 h whether
       // the tracker lags one batch or two, so the oracle's closed form
       // doesn't depend on that internal cadence
-      stageChunk(ev.filter(unix_micros(col("ts")) === mm.getLong(1)),
-        "c4buffer", t0 + 8 * 2000L)
+      fx.stage(ev.filter(unix_micros(col("ts")) === hi), in, "c4buffer", 8)
       // the late chunk: the whole timeline again, arriving last
-      stageChunk(ev, "c5late", t0 + 10 * 2000L)
-      val schema = StructType(Seq(StructField("event_type", StringType),
-        StructField("ts", TimestampType), StructField("value", DoubleType)))
+      fx.stage(ev, in, "c5late", 10)
       val ss = streamSession(spark, in) // state partitions from staged size
-      val stream = ss.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(in.toString)
-      val qn = "q180_wm_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = StreamingLoad.windowedCounts(stream, watermark = "1 hour",
-          window_ = "1 hour")
-        .writeStream.format("memory").queryName(qn).outputMode("update")
-        .option("checkpointLocation", tmp.resolve("cp").toString)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("win_start"), col("event_type"))
-        .orderBy(col("n").desc)
-      ss.table(qn)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      val counts = fx.memory(ss, StreamingLoad.windowedCounts(
+        fx.source(ss, in, ev.schema), watermark = "1 hour",
+        window_ = "1 hour"), "update")
+      // the (window, event type) pair as one partition key
+      OrderStats.topKPer(counts, struct(col("win_start"), col("event_type")),
+          1, rankCol = "rn")(col("n").desc)
         .select(unix_micros(col("win_start")).as("win_start_us"),
           col("event_type"), col("n").cast("long").as("n"),
           col("sum_value"))

@@ -138,8 +138,9 @@ object PlanAudit {
     audit("top-k") {
       import org.apache.spark.sql.execution.window.{WindowExec,
         WindowGroupLimitExec}
-      val missing = Seq("q23_sim_topk", "q24_sim_ivf", "q25_sim_lsh",
-          "q67_bm25_topk", "q148_hybrid_rrf", "q171_ivf_multiprobe")
+      val missing = Seq("q6_window_topn", "q23_sim_topk", "q24_sim_ivf",
+          "q25_sim_lsh", "q67_bm25_topk", "q148_hybrid_rrf",
+          "q171_ivf_multiprobe")
         .filterNot { q =>
           val windows = SparkEntry.queries(q)(spark, sfDir)
             .queryExecution.executedPlan.collect { case w: WindowExec => w }

@@ -544,59 +544,57 @@ class StandingStoreSpec extends SparkSpec {
   }
 
   test("refit re-run after a post-append crash duplicates nothing (data, codes, codebook)") {
+    // the refit's delete, appends, code refresh and codebook write are
+    // one store transaction: a crash before its manifest rename (here the
+    // rename fails, through FaultFs) publishes none of them
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
-    val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    Similarity.writeStandingStore(assigned(corpus(), cents), path,
-      "cluster", buckets = 8)
-    Similarity.writeCodebook(spark, path, cents)
-    Similarity.writeCodebookIds(spark, path,
-      cents.zipWithIndex.map { case (c, i) => (i.toLong, c) })
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
-    val drifted = Similarity.readStandingStore(spark, path)._1
-      .select("cluster").distinct().orderBy("cluster")
-      .limit(1).collect().map(_.getLong(0)).toSet
-    // capture what the crashed run's backup held: the pre-refit drifted
-    // members and the pre-refit fresh-id base. Collected to the driver —
-    // a cached plan over path/data would be auto-RECACHED (empty) when
-    // the refit appends to that path, silently losing the snapshot.
-    val preSchema = Similarity.readStandingStorePruned(spark, path,
-      drifted.toSeq).schema
-    val preRows = Similarity.readStandingStorePruned(spark, path,
-      drifted.toSeq).collect()
-    assert(preRows.nonEmpty)
-    val preNextId = StoreSwap.readDir(spark, path, "codebook", "part")
-      .agg(max(col("cid"))).head.getLong(0) + 1
-    val fresh = Similarity.refitStoreDriftedClusters(spark, path,
-      "vec_id", "embedding", drifted, targetClusterSize = 10, iters = 1)
-    assert(fresh.nonEmpty)
-    def snap() = (
+    def build(path: String): Set[Long] = {
+      Similarity.writeStandingStore(assigned(corpus(), cents), path,
+        "cluster", buckets = 8)
+      Similarity.writeCodebook(spark, path, cents)
+      Similarity.writeCodebookIds(spark, path,
+        cents.zipWithIndex.map { case (c, i) => (i.toLong, c) })
+      Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
+        m = 2, dsub = 2, ksub = 4)
       Similarity.readStandingStore(spark, path)._1
-        .select(col("vec_id"), col("cluster")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-      StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
-        .select(col("id"), col("cluster")).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq,
-      StoreSwap.readDir(spark, path, "codebook", "part")
-        .select(col("cid")).collect().map(_.getLong(0)).sorted.toSeq)
-    val clean = snap()
-    // fabricate the crash state: a run that died AFTER its appends and
-    // codebook write but BEFORE cleaning the backup — store mutated,
-    // `.refit-members` (with its `_next_id` marker) still present
-    spark.createDataFrame(java.util.Arrays.asList(preRows: _*), preSchema)
-      .write.mode("overwrite").parquet(path + "/.refit-members")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, ".refit-members", "_next_id"),
-      preNextId.toString.getBytes("UTF-8"))
-    // the documented recovery: re-run the refit with the same set
-    val fresh2 = Similarity.refitStoreDriftedClusters(spark, path,
-      "vec_id", "embedding", drifted, targetClusterSize = 10, iters = 1)
-    assert(fresh2.map(_._1) == fresh.map(_._1),
-      "re-run must reuse the persisted fresh-id base")
-    assert(snap() == clean, "re-run changed the store: duplicate rows," +
-      " duplicate codes, or duplicate codebook entries")
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, ".refit-members")))
+        .select("cluster").distinct().orderBy("cluster")
+        .limit(1).collect().map(_.getLong(0)).toSet
+    }
+    def refit(path: String, drifted: Set[Long]) =
+      Similarity.refitStoreDriftedClusters(spark, path,
+        "vec_id", "embedding", drifted, targetClusterSize = 10, iters = 1)
+    def rows(path: String, dataDir: String, partCol: String) =
+      StoreSwap.readDir(spark, path, dataDir, partCol).collect()
+        .map(_.toSeq.mkString("|")).sorted.toSeq
+    // rows, codes and codebook (ids and centroids)
+    def snap(path: String) = (rows(path, "data", "c_bucket"),
+      rows(path, "pq_codes", "c_bucket"), rows(path, "codebook", "part"))
+    val reference = Fixtures.tempDir("graft-store-").resolve("s").toString
+    val fresh = refit(reference, build(reference))
+    assert(fresh.nonEmpty)
+    val clean = snap(reference)
+    spark.conf.set("fs.faultfs.impl", classOf[FaultFs].getName)
+    spark.conf.set("fs.faultfs.impl.disable.cache", "true")
+    try {
+      val path = "faultfs://" +
+        Fixtures.tempDir("graft-store-").resolve("s").toString
+      val drifted = build(path)
+      val v0 = StoreSwap.snapshotVersions(spark, path)
+      val before = snap(path)
+      FaultFs.failRenameTo.set(_.startsWith("store.v"))
+      intercept[RuntimeException](refit(path, drifted))
+      assert(FaultFs.failRenameTo.get == null, "no manifest rename was tried")
+      assert(StoreSwap.snapshotVersions(spark, path) == v0)
+      assert(snap(path) == before, "the failed refit changed the store")
+      // the re-run is a clean refit: no duplicate rows, codes or
+      // codebook entries
+      assert(refit(path, drifted) == fresh)
+      assert(snap(path) == clean)
+    } finally {
+      FaultFs.failRenameTo.set(null)
+      Seq("fs.faultfs.impl", "fs.faultfs.impl.disable.cache")
+        .foreach(spark.conf.unset)
+    }
   }
 
   test("a swap committed but not applied (post-manifest crash) rolls forward on read") {
