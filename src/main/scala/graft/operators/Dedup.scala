@@ -107,46 +107,6 @@ object Dedup {
                         maxShingleFreq: Int = 1000): DataFrame =
     ngramJaccardPairsScoped(df, idCol, textCol, n, threshold, maxShingleFreq).df
 
-  /** [[ngramJaccardPairs]] with a SCALE ESCAPE HATCH — the cascade's
-    * near-dup stage at 100 TB: the exact shingle self-join's candidate
-    * space grows with DUPLICATE DENSITY (every doc pair sharing any
-    * shingle is a candidate), which is what made the q163 cascade 29×
-    * for 100× data at sf10. Above `graft.dedup.bandedAbove` documents
-    * (default 100000) pair GENERATION routes through MinHash banding
-    * (the q21 machinery, 32 hashes × 16 bands = 2 rows/band —
-    * collision probability s² per band, ≥99% recall at the 0.5
-    * threshold and →1 above it) while verification stays EXACT
-    * Jaccard over the shingle hashes, so emitted pairs carry true
-    * scores and false candidates are discarded; the only deviation
-    * from the exact path is banding recall on near-threshold pairs.
-    * Below the threshold the exact join runs unchanged (the oracle
-    * gates the exact path at sf0.01). */
-  def ngramJaccardPairsAuto(df: DataFrame, idCol: String, textCol: String,
-                            n: Int, threshold: Double,
-                            maxShingleFreq: Int = 1000): DataFrame = {
-    val spark = df.sparkSession
-    // MEASURED (round 13, sf10, 1M docs, quiet box): the banded route
-    // ran 81-102s vs the exact join's 43-61s on the benchmark corpus —
-    // its 32-minhash build outweighs the candidate-space saving when
-    // duplicate multiplicity is low (1 partner/doc), and HIGH-
-    // multiplicity clusters blow up BOTH generators (every cluster
-    // member collides in every band). Default is therefore OFF
-    // (threshold = Long.MaxValue); set graft.dedup.bandedAbove for
-    // corpora where the shingle join's candidate space, not the pair
-    // output, is the bottleneck (high shingle-df, low dup density).
-    val bandedAbove = StoreSwap.confValue(spark, "graft.dedup.bandedAbove",
-      Long.MaxValue, "a non-negative document count")(
-      _.toLongOption.filter(_ >= 0))
-    // The count is a full corpus pass; with the knob unset the branch is
-    // statically decidable (n <= MaxValue always), so don't buy a scan
-    // to compute it — at 100 TB that count is an extra job per cascade.
-    if (bandedAbove == Long.MaxValue || df.count() <= bandedAbove)
-      ngramJaccardPairs(df, idCol, textCol, n, threshold, maxShingleFreq)
-    else
-      minhashLshPairs(df, idCol, textCol, n, numHashes = 32, bands = 16,
-        threshold = threshold)
-  }
-
   /** [[ngramJaccardPairs]] with an owned cache handle (see the class doc's
     * cache-lifecycle paragraph). */
   def ngramJaccardPairsScoped(df: DataFrame, idCol: String, textCol: String,
@@ -1149,9 +1109,7 @@ object Dedup {
     // The manual knob stays as override. Recorded in the store manifest
     // so every later mutation/judgment derives the same layout.
     val nDocs = aggRow.getLong(1) / numHashes // one row per (doc, k)
-    val idxBuckets = StoreSwap.confValue[Option[Int]](spark,
-        "graft.lsh.bandIndexBuckets", None, "a positive integer")(
-        _.toIntOption.filter(_ >= 1).map(Some(_)))
+    val idxBuckets = GraftConf.BandIndexBuckets(spark)
       .getOrElse(autoBandIndexBuckets(buckets, nDocs))
     StoreSwap.overwriteDir(spark, path, "bands", "bb_bucket",
       bandRows(sigs.select(col(idCol), col("k"), col("mh")),
@@ -1484,34 +1442,16 @@ object Dedup {
     // `graft.lsh.maxBroadcastMb` (default 64) at ~112 bytes per band
     // row.
     val targetBytes = math.max(1.0,
-      StoreSwap.positiveMb(spark, "graft.lsh.maxBroadcastMb") * 1024 * 1024)
+      GraftConf.LshMaxBroadcastMb(spark) * 1024 * 1024)
     val nDelta = dDocs.rdd.count()
-    val bcChunks = math.max(1L,
+    // one chunk unless the budget forces more: chunking to keep each
+    // chunk's band-signature and candidate-id lists under [[PushdownCap]]
+    // was MEASURED AND REJECTED (round 13, BandIndexProbe at 500k docs:
+    // 500-doc deltas 18.8 s in 4 pushdown chunks vs 8.3 s unchunked,
+    // 5000-doc deltas 95 s in 40 chunks vs 8.1 s) - per-chunk fixed cost
+    // dwarfs the page-skip win, and the unpruned slice scan amortizes
+    val chunks = math.max(1L,
       math.ceil(nDelta.toDouble * bands * 112L / targetBytes).toLong).toInt
-    // PUSHDOWN-SIZED sub-chunking, the second chunking driver: each
-    // chunk's band-signature list (<= chunkDocs x bands values) and
-    // candidate-id list only reach the parquet readers while they fit
-    // [[PushdownCap]] - past it the scans fall back to the unpruned
-    // band-index slice. MEASURED AND REJECTED as the default
-    // (round 13, BandIndexProbe at 500k docs, quiet box, delta
-    // relations hoisted): 500-doc deltas 18.8s in 4 pushdown chunks vs
-    // 8.3s unchunked; 5000-doc deltas 95s in 40 chunks vs 8.1s
-    // unchunked - per-chunk fixed cost (store listings, candidate
-    // collects, verify joins) dwarfs the page-skip win, and the
-    // unpruned slice scan AMORTIZES: flatness per 10x standing is
-    // 1.14x at 100 docs (pushdown engaged, single chunk), 1.60x at
-    // 500 (the worst point - scan not yet amortized), and 1.19x at
-    // 5000 (amortized). `graft.lsh.maxJudgeChunks` (default 1 =
-    // pushdown sizing off) keeps the lever for deployments where a
-    // chunk's fixed cost is cheaper than an index-slice exchange;
-    // the broadcast budget below still chunks huge batches.
-    val maxJudgeChunks = StoreSwap.confValue(spark,
-      "graft.lsh.maxJudgeChunks", 1, "a positive integer")(
-      _.toIntOption.filter(_ >= 1))
-    val pdChunks = math.ceil(nDelta.toDouble * bands / PushdownCap).toInt
-    val chunks =
-      if (pdChunks > bcChunks && pdChunks <= maxJudgeChunks) pdChunks
-      else bcChunks
     def slice(dRows: DataFrame, dSets: DataFrame): DataFrame =
       lshJudgeSlice(spark, path, dRows, dSets, standingSh, sidecarPresent,
         buckets, threshold, storeDir)
@@ -1563,9 +1503,7 @@ object Dedup {
     // Beyond the cap (a 4000-value OR chain overflowed the parquet
     // evaluator's stack; splitting per band into 8 unioned scans paid
     // more in scan setup than it pruned) the single unpruned scan
-    // stands for THIS chunk - the caller sizes chunks to the cap
-    // (pdChunks) so mid-size deltas never get here; only batches past
-    // graft.lsh.maxJudgeChunks amortize the unpruned scan instead.
+    // stands for THIS chunk, and a large delta amortizes it.
     val idx0 = storeDir("bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
     val idx = if (dSigVals.length <= PushdownCap)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Plan cuts for relations read several times inside one query (inverted
   * indexes, Pregel iteration states, per-doc feature tables): without a
@@ -9,7 +8,8 @@ import org.apache.spark.storage.StorageLevel
   * subtree, exchange reuse never fires, and the shared computation
   * re-executes once per consumer.
   *
-  * The mechanism is selectable per session via `graft.plan.cuts`:
+  * The mechanism is selectable per session via `graft.plan.cuts`
+  * ([[GraftConf]]):
   *
   *  - `"checkpoint"` (default): LAZY `localCheckpoint`. CAVEAT — under
   *    AQE this is only lazy for the FINAL stage: `Dataset
@@ -21,37 +21,24 @@ import org.apache.spark.storage.StorageLevel
   *    exec alone. Checkpoint blocks are non-replicated and lineage is
   *    discarded, so on a multi-node cluster an executor loss makes the
   *    job unrecoverable — acceptable for interactive analytics; a
-  *    long-running 100 TB pipeline should run with `persist` (lineage
-  *    kept, recompute on loss) or a reliable `checkpoint` directory.
-  *  - `"persist"`: `MEMORY_AND_DISK` cache. Keeps lineage (fault
-  *    tolerant), is CacheManager-managed (`spark.catalog.clearCache`
-  *    frees it), and materializes inside the first action (no
-  *    plan-construction phase shift). The logical plan is NOT truncated,
-  *    so the plan-size relief the iterative operators (pageRank/HITS)
-  *    need — rank_k's subtree nests rank_{k-1}'s whole tree — does not
-  *    apply; planning cost grows with iteration count.
+  *    long-running pipeline that must survive executor loss needs a
+  *    reliable `checkpoint` directory instead.
   *  - `"off"`: identity — every consumer re-executes the subtree, and
   *    the FULL operator tree stays visible in the static plan.
   *    PlanAudit and PlanDump run in this mode: a checkpoint replaces
   *    the subtree with a `Scan ExistingRDD` stub, which had made the
   *    blocked-join / partial-agg audits on q133/q146/q164-style plans
   *    vacuously green (r15 advisor finding).
+  *
+  * Any other value, and any undeclared `graft.*` key in the session,
+  * is a configuration error naming the key.
   */
 object Lineage {
 
-  /** Session conf key selecting the cut mechanism (see class doc). */
-  val ModeKey = "graft.plan.cuts"
-
-  /** Cut `df` with the session's mechanism. Any value other than the
-    * three documented ones is a configuration error, not a default. */
+  /** Cut `df` with the session's mechanism. */
   def cut(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get(ModeKey, "checkpoint") match {
-      case "checkpoint" => df.localCheckpoint(false)
-      case "persist"    => df.persist(StorageLevel.MEMORY_AND_DISK)
-      case "off"        => df
-      case other => throw new IllegalArgumentException(
-        s"$ModeKey must be one of checkpoint, persist, off; got '$other'")
-    }
+    if (GraftConf.PlanCuts(df.sparkSession) == "off") df
+    else df.localCheckpoint(false)
 
   /** Chain-friendly syntax: `relation.planCut` ≡ `Lineage.cut(relation)`. */
   implicit class CutOps(private val df: DataFrame) extends AnyVal {

@@ -681,8 +681,7 @@ object ScaleQueries {
     // not touch data's version line
     val store = Fixtures.cloneDir(
       sharedTextStore(spark, dir), "graft-q226-")
-    spark.conf.set("graft.store.snapshotKeep", "8")
-    try {
+    GraftConf.SnapshotKeep.withValue(spark, "8") {
       val v0 = Dedup.signatureStoreVersions(spark, store).last
       Dedup.mergeIntoSignatureStore(spark, store,
         Dedup.minhashSignatures(delta1, "doc_id", "text"), "doc_id")
@@ -694,7 +693,7 @@ object ScaleQueries {
       val live = Dedup.signatureStoreVersions(spark, store).last
       Dedup.signatureStoreDiff(spark, store, "doc_id", v0, live)
         .orderBy(col("change"), col("doc_id"))
-    } finally spark.conf.unset("graft.store.snapshotKeep")
+    }
   }
 
   /** q227: HISTORICAL JUDGMENT REPLAY over the text store — `data`,
@@ -717,14 +716,13 @@ object ScaleQueries {
     // mutating gate: a private clone of the shared base
     val store = Fixtures.cloneDir(
       sharedTextStore(spark, dir), "graft-q227-")
-    spark.conf.set("graft.store.snapshotKeep", "8")
-    try {
+    GraftConf.SnapshotKeep.withValue(spark, "8") {
       val v0 = Dedup.signatureStoreVersions(spark, store).last
       Dedup.ingestBatchIntoStore(spark, store, delta1, "doc_id", "text",
         batchId = Some(0L))
       Dedup.lshJudgeStoreAt(spark, store, delta2, "doc_id", "text", v0)
         .orderBy(col("id_a"), col("id_b"))
-    } finally spark.conf.unset("graft.store.snapshotKeep")
+    }
   }
 
   /** q110: native `session_window` semantics — Spark's merging-window

@@ -564,8 +564,7 @@ object SelectionQueries {
     Similarity.writeStandingStore(assigned(base, cents), store, "cluster",
       buckets = 8)
     Similarity.writeCodebook(spark, store, cents)
-    spark.conf.set("graft.store.snapshotKeep", "8")
-    try {
+    GraftConf.SnapshotKeep.withValue(spark, "8") {
       val v0 = Similarity.standingStoreVersions(spark, store).last
       // post-pin member mutation: reversed copies of every base vector
       val delta2 = emb().select((col("vec_id") + 500000L).as("vec_id"),
@@ -581,7 +580,7 @@ object SelectionQueries {
       Similarity.semanticJudgeStoreAt(spark, store, delta, "vec_id",
           "embedding", v0, minCos = 0.99)
         .orderBy(col("vec_id"))
-    } finally spark.conf.unset("graft.store.snapshotKeep")
+    }
   }
 
   /** q231: q229's replay with a CLUSTER-SPARSE delta, so the pruned
@@ -632,8 +631,7 @@ object SelectionQueries {
       s"q231's delta must be non-empty and cluster-sparse (fewer rows" +
         s" than buckets), got $n rows: an empty delta gates nothing and" +
         " a dense one degenerates to q229's full read")
-    spark.conf.set("graft.store.snapshotKeep", "8")
-    try {
+    GraftConf.SnapshotKeep.withValue(spark, "8") {
       val v0 = Similarity.standingStoreVersions(spark, store).last
       val delta2 = emb().select((col("vec_id") + 500000L).as("vec_id"),
         reverse(col("embedding")).as("embedding"))
@@ -647,7 +645,7 @@ object SelectionQueries {
       Similarity.semanticJudgeStoreAt(spark, store, sparse, "vec_id",
           "embedding", v0, minCos = 0.99)
         .orderBy(col("vec_id"))
-    } finally spark.conf.unset("graft.store.snapshotKeep")
+    }
   }
 
   /** q187: incremental dedup over the PARTITIONED standing store
@@ -851,8 +849,7 @@ object SelectionQueries {
       .withColumn("cluster",
         Similarity.assignCluster(col("embedding"), cents).cast("long"))
       .withColumn("nrm", Similarity.norm(col("embedding")))
-    spark.conf.set("graft.store.snapshotKeep", "8")
-    try {
+    GraftConf.SnapshotKeep.withValue(spark, "8") {
       Similarity.writeStandingStore(assigned(base), store, "cluster",
         buckets = 16)
       val v0 = Similarity.standingStoreVersions(spark, store).last
@@ -866,7 +863,7 @@ object SelectionQueries {
           min(col("vec_id")).cast("long").as("min_vec"),
           max(col("vec_id")).cast("long").as("max_vec"))
         .orderBy(col("cluster"))
-    } finally spark.conf.unset("graft.store.snapshotKeep")
+    }
   }
 
   /** q225: MANIFEST-PRUNED CDC over the versioned store — q222's
@@ -894,8 +891,7 @@ object SelectionQueries {
       .withColumn("cluster",
         Similarity.assignCluster(col("embedding"), cents).cast("long"))
       .withColumn("nrm", Similarity.norm(col("embedding")))
-    spark.conf.set("graft.store.snapshotKeep", "8")
-    try {
+    GraftConf.SnapshotKeep.withValue(spark, "8") {
       Similarity.writeStandingStore(assigned(base), store, "cluster",
         buckets = 16)
       val v0 = Similarity.standingStoreVersions(spark, store).last
@@ -906,7 +902,7 @@ object SelectionQueries {
       val live = Similarity.standingStoreVersions(spark, store).last
       Similarity.standingStoreDiff(spark, store, v0, live)
         .orderBy(col("change"), col("vec_id"))
-    } finally spark.conf.unset("graft.store.snapshotKeep")
+    }
   }
 
   /** q191: ANN SEARCH over the partitioned standing store

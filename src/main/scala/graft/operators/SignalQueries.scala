@@ -337,11 +337,7 @@ object SignalQueries {
     val withFp = corpus.withColumn("fp", TextOps.fingerprint(col("text")))
     val keeper = withFp.groupBy(col("fp"))
       .agg(min(col("doc_id")).as("keeper"))
-    // the near stage routes through MinHash banding past
-    // graft.dedup.bandedAbove docs (exact below — the sf0.01 oracle
-    // gates the exact path; the banded path bounds the sf10 candidate
-    // space, see ngramJaccardPairsAuto's scaladoc)
-    val near = Dedup.ngramJaccardPairsAuto(corpus, "doc_id", "text",
+    val near = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
         n = 5, threshold = 0.5)
       .select(col("id_b").as("doc_id")).distinct()
       .withColumn("nr", lit(true))

@@ -1576,76 +1576,28 @@ object Similarity {
     // large query batches, and the collects below would otherwise
     // re-rank every query a second time inside the broadcast join
     val probesM = probes.localCheckpoint(true) // |queries|·nProbe rows
-    // QUERY-BATCH CHUNKING: the query side of the ADC join is
-    // broadcast (per-query m×ksub distance maps × the probe rows), so
-    // an unbounded query batch would exceed any broadcast budget — and
-    // the per-chunk `cluster IN (probed)` literal scales with the
-    // chunk, not the batch. Queries are whole per chunk (hash of
-    // query_id), each chunk executes EAGERLY (localCheckpoint) so at
-    // most one chunk's broadcast is alive at a time, and the union of
-    // per-query-complete top-k results is exact. The budget is
-    // per-query bytes (map entries × residual's nProbe multiplier)
-    // against `graft.pq.maxBroadcastMb` (default 64).
+    // BROADCAST BUDGET: the query side of the ADC join (per-query
+    // m×ksub distance maps × the probe rows) is broadcast while it fits
+    // `graft.pq.maxBroadcastMb` (default 64). A batch over the budget
+    // runs ONE pass with the distance tables SHUFFLED instead: both
+    // sides exchange on the cluster key and the ADC join runs as a
+    // shuffled hash/sort-merge join, so cost scales with (codes + query
+    // tables). Measured (round 12 probe, 200k-vector store): the
+    // shuffle already beat a serial loop of budget-sized broadcast
+    // chunks at TWO chunks (39.8 vs 48.9 s at 100k queries).
     val pin = pqPin(spark, storePath)
     val (residual, rotated, opq) = pqFlavor(spark, storePath, pin)
     val targetBytes = math.max(1.0,
-      StoreSwap.positiveMb(spark, "graft.pq.maxBroadcastMb") * 1024 * 1024)
+      GraftConf.PqMaxBroadcastMb(spark) * 1024 * 1024)
     val ksub = pqDirDf(spark, storePath, "pq_codebook", "part", pin)
       .count() / m
     // BOTH flavors broadcast one m×ksub distance map per PROBE row —
     // the vanilla side builds one map per query but joins it onto
     // probesM before broadcasting, duplicating it into every probe row
     // (a distinct-query count would undercount by nProbe× and blow the
-    // budget the chunking exists to enforce)
-    val bcRows = probesM.count()
+    // budget)
     val rowBytes = m * ksub * 32L + 256L
-    val chunks = math.max(1L,
-      math.ceil(bcRows * rowBytes / targetBytes).toLong).toInt
-    // OVER-BUDGET FALLBACK: the serial chunk loop holds wall time
-    // hostage to chunk count (each chunk is a full probe-pruned code
-    // scan — 1M queries at the 64 MB budget is ~80 sequential scans).
-    // Past `graft.pq.maxSerialChunks` the right plan is ONE pass with
-    // the distance tables SHUFFLED instead of broadcast: both sides
-    // exchange on the cluster key and the ADC join runs as a shuffled
-    // hash/sort-merge join, so cost scales with (codes + query
-    // tables), not chunks × codes. Default 1 — measured (round 12
-    // probe, 200k-vector store): the shuffle already beat the serial
-    // loop at TWO chunks (39.8 vs 48.9 s at 100k queries), so any
-    // batch over the broadcast budget goes straight to the shuffle;
-    // raise the knob on clusters where re-scanning the pruned codes
-    // is cheaper than exchanging them.
-    val maxSerial = StoreSwap.confValue(spark, "graft.pq.maxSerialChunks", 1,
-      "a positive integer")(_.toIntOption.filter(_ > 0))
-    if (chunks == 1)
-      pqAdcChunk(spark, storePath, queries, probesM, idCol, vecCol,
-        m, dsub, k, residual, rotated, opq, pin)
-    else if (chunks <= maxSerial)
-      (0 until chunks).map { i =>
-        pqAdcChunk(spark, storePath,
-          queries.filter(
-            pmod(xxhash64(col(idCol)), lit(chunks.toLong)) === i),
-          probesM.filter(
-            pmod(xxhash64(col("query_id")), lit(chunks.toLong)) === i),
-          idCol, vecCol, m, dsub, k, residual, rotated, opq, pin)
-          .localCheckpoint(true) // run now; free this chunk's broadcast
-      }.reduce(_ unionByName _)
-    else
-      pqAdcChunk(spark, storePath, queries, probesM, idCol, vecCol,
-        m, dsub, k, residual, rotated, opq, pin,
-        broadcastTables = false)
-  }
-
-  /** One bounded-broadcast slice of the store ADC search — the whole
-    * algorithm for query batches under the broadcast budget, a chunk
-    * of [[pqAdcOverStore]]'s loop above it. */
-  private def pqAdcChunk(spark: SparkSession, storePath: String,
-                         queries: DataFrame, probesM: DataFrame,
-                         idCol: String, vecCol: String, m: Int,
-                         dsub: Int, k: Int, residual: Boolean,
-                         rotated: Boolean,
-                         opq: Option[Seq[Seq[Double]]] = None,
-                         pin: Option[Int] = None,
-                         broadcastTables: Boolean = true): DataFrame = {
+    val broadcastTables = probesM.count() * rowBytes <= targetBytes
     val buckets = StoreSwap.bucketCount(spark, storePath, pin)
     val probed = probesM.select(col("qc")).distinct()
       .collect().map(_.getLong(0)).toSeq
@@ -1719,8 +1671,8 @@ object Similarity {
     }
     val adc = codes
       .join(if (broadcastTables) broadcast(broadcastSide)
-            else broadcastSide, // huge batch: shuffle both sides on the
-                                // cluster key instead (see the caller)
+            else broadcastSide, // over budget: shuffle both sides on
+                                // the cluster key (see above)
         col("cluster") === col("qc"))
       .filter(col("query_id") =!= col("nid"))
       .withColumn("adc", (0 until m).map(s =>

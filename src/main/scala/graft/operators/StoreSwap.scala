@@ -287,7 +287,7 @@ object StoreSwap {
 
   private def migrate(spark: SparkSession, fs: FileSystem,
                       path: String): Unit = {
-    val keep = snapshotKeep(spark)
+    val keep = GraftConf.SnapshotKeep(spark)
     // read first: a newer protocol's manifest is refused untouched
     val current = latest(fs, path)
     rollForwardSwap(fs, path)
@@ -484,7 +484,7 @@ object StoreSwap {
       else {
         open(spark, path)
         // a bad retention value must fail BEFORE anything is staged
-        val keep = snapshotKeep(spark)
+        val keep = GraftConf.SnapshotKeep(spark)
         val fs = fsOf(spark, versionsDir(path))
         val (baseV, entries) = latest(fs, path)
           .getOrElse((-1, Map.empty[String, Seq[Long]]))
@@ -524,32 +524,6 @@ object StoreSwap {
       t.entries + (ProtocolKey -> Seq(Protocol.toLong)))
     gc(fs, path, keep)
   }
-
-  /** How many PRIOR manifests (and their gens) each commit preserves —
-    * the reader grace window, `graft.store.snapshotKeep` (default 1).
-    * Anything but a non-negative integer is a configuration error. */
-  private def snapshotKeep(spark: SparkSession): Int =
-    confValue(spark, "graft.store.snapshotKeep", 1,
-      "a non-negative integer")(_.toIntOption.filter(_ >= 0))
-
-  /** The value of conf `key`, `default` when unset. A value `parse`
-    * rejects is a configuration error naming the key, the value and
-    * `what` the key takes — never a silent fall-back to the default. */
-  private[operators] def confValue[T](spark: SparkSession, key: String,
-                                      default: T, what: String)(
-                                      parse: String => Option[T]): T =
-    spark.conf.getOption(key) match {
-      case None => default
-      case Some(s) => parse(s.trim).getOrElse(
-        throw new IllegalArgumentException(
-          s"$key must be $what, got '$s'"))
-    }
-
-  /** A broadcast budget in MB (`graft.pq.maxBroadcastMb`,
-    * `graft.lsh.maxBroadcastMb`): a positive number, default 64. */
-  private[operators] def positiveMb(spark: SparkSession, key: String): Double =
-    confValue(spark, key, 64.0, "a positive number of MB")(
-      _.toDoubleOption.filter(_ > 0))
 
   // ---- commits -----------------------------------------------------------
 

@@ -47,14 +47,16 @@ object StreamingQueries {
     * overhead when batches are small, and the wrong sizing principle at
     * any scale (the data, not the box, should size a shuffle — guide
     * §2.2). Partitions = staged bytes / 32 MB, at least
-    * min(4, defaultParallelism) and at most defaultParallelism; override
-    * per session with `graft.stream.statePartitions`. Results are
+    * min(4, defaultParallelism) and at most defaultParallelism, always
+    * derived (no conf key overrides it). Results are
     * partition-count-invariant: every streaming gate's output is an
     * exact aggregate/join/dedup state, sorted before hashing — only task
     * count changes. Every `graft.*` conf and every modifiable
     * `spark.sql.*` conf of the caller's session (AQE, timezone, ANSI,
     * plan cuts...) is copied over, since `newSession()` only inherits
-    * builder-time config. */
+    * builder-time config; a `graft.*` key [[GraftConf]] does not
+    * declare is copied too, and refused by the child's first graft
+    * conf read. */
   private[graft] def streamSession(spark: SparkSession, stagedDirs: Path*): SparkSession = {
     val ss = spark.newSession()
     spark.conf.getAll.foreach { case (k, v) =>
@@ -62,20 +64,15 @@ object StreamingQueries {
           (k.startsWith("spark.sql.") && spark.conf.isModifiable(k)))
         ss.conf.set(k, v)
     }
-    val n = StoreSwap.confValue[Option[Int]](spark,
-        "graft.stream.statePartitions", None, "a positive integer")(
-        _.toIntOption.filter(_ >= 1).map(Some(_)))
-      .getOrElse {
-        val per = 32L << 20 // 32 MB of staged input per state partition
-        // floor of 4, not 1: a single state partition serializes the
-        // CPU-bound state ops (measured on q174's session-window merge:
-        // prepare 3.98 s at 32 partitions -> 5.7 s at 1, back to ~4 s
-        // at 4) while the per-batch task/file overhead the derivation
-        // exists to kill is already 8x down from the core count
-        math.max(math.min(4L, spark.sparkContext.defaultParallelism.toLong),
-          math.min(spark.sparkContext.defaultParallelism.toLong,
-            (stagedBytes(stagedDirs) + per - 1) / per)).toInt
-      }
+    val per = 32L << 20 // 32 MB of staged input per state partition
+    val cores = spark.sparkContext.defaultParallelism.toLong
+    // floor of 4, not 1: a single state partition serializes the
+    // CPU-bound state ops (measured on q174's session-window merge:
+    // prepare 3.98 s at 32 partitions -> 5.7 s at 1, back to ~4 s at 4)
+    // while the per-batch task/file overhead the derivation exists to
+    // kill is already 8x down from the core count
+    val n = math.max(math.min(4L, cores),
+      math.min(cores, (stagedBytes(stagedDirs) + per - 1) / per))
     ss.conf.set("spark.sql.shuffle.partitions", n.toString)
     ss
   }
@@ -235,7 +232,12 @@ object StreamingQueries {
     * decision row — first-seen keeps, later copies flag as dupes, and
     * redelivery of a kept doc emits nothing (idempotent under
     * at-least-once delivery). The oracle replays the arrival order
-    * relationally: winner per fingerprint = min (chunk, doc_id). */
+    * relationally: winner per fingerprint = min (chunk, doc_id). On
+    * the gate data every document's fingerprint is distinct (500 of
+    * 500 at sf0.001 and sf0.01), so every row keeps and the arrival
+    * order decides nothing: the gate pins one decision per doc across
+    * the four batches and the silent redelivery. The dupe verdict of
+    * a later copy is pinned by StreamingSpec's `dedupStream` test. */
   def q127StreamDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
       .persist()
@@ -448,15 +450,18 @@ object StreamingQueries {
     * (materialized once per batch), judged by
     * [[Similarity.semDedupIncrementalPrepped]] against the standing
     * store PLUS every previously-kept delta, and the keepers are
-    * appended to the store before the next batch runs — so batch 2's
-    * verdicts depend on batch 1's, the property that makes ingest
-    * order semantics worth gating. Two staged batches: the scaled
-    * twins (dropped against the base), then the reversed novelties +
-    * their 2× copies (kept vs base and batch-1 keepers; the copies
-    * drop batch-internally). The oracle replays the standing training
-    * and BOTH sequential judgments. foreachBatch serializes batches,
-    * so the store read in batch N sees exactly the batch-(N-1) append
-    * — the same settled-membership invariant q177 states. */
+    * appended to the store before the next batch runs. Two staged
+    * batches: the scaled twins (judged against the base), then the
+    * reversed novelties + their 2× copies (judged against the base and
+    * the batch-1 keepers; the copies drop batch-internally). On the
+    * gate data no batch-2 row is near a batch-1 keeper, so the verdicts
+    * do not depend on the batch order (the two batches swapped give
+    * the same rows): the gate pins each batch's judgment against the
+    * standing store, the batch-internal drop and the keeper append.
+    * The oracle replays the standing training and BOTH sequential
+    * judgments. foreachBatch serializes batches, so the store read in
+    * batch N sees exactly the batch-(N-1) append — the same
+    * settled-membership invariant q177 states. */
   def q184StreamIngestDedup(spark: SparkSession, dir: String): DataFrame = {
     val f = new EmbeddingFlow(spark, dir, "q184")
     val verdicts = f.fx.tmp.resolve("verdicts").toString
@@ -495,7 +500,7 @@ object StreamingQueries {
     * I/O tracks the batch's footprint), and keepers are appended into
     * their buckets by [[Similarity.appendToStandingStore]] before the
     * next batch. Identical math to q184 — same staged batches, same
-    * sequential dependence — so the oracle is q184's verbatim; what
+    * sequential judgments — so the oracle is q184's verbatim; what
     * this gate adds is that the bucket layout survives judge → append
     * → judge cycles bit-exactly. */
   def q189StreamIngestStore(spark: SparkSession, dir: String): DataFrame = {

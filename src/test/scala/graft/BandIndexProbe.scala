@@ -110,29 +110,6 @@ object BandIndexProbe {
     val nMicro = micro.count()
     val judgeMicro10 = judgeVia(store10, small, micro, sidecar = true)
     val judgeMicroFull = judgeVia(store, docs, micro, sidecar = true)
-    // MESO tier (5000 docs): pushdown-sized chunking needs 40 chunks
-    // here (5000·8/1000), above the default graft.lsh.maxJudgeChunks
-    // cap of 16 — measure BOTH policies at both standing sizes so the
-    // cap default is a recorded tradeoff, not a guess: capped =
-    // broadcast-budget chunking with the unpruned slice scan,
-    // chunked = 40 pushdown-engaged scans
-    val meso = docs.filter(col("doc_id") % 100 === 3)
-      .select((col("doc_id") + 30000000L).as("doc_id"),
-        regexp_replace(col("text"), "^\\S+\\s+", "").as("text"))
-      .cache()
-    val nMeso = meso.count()
-    def withChunkCap[T](cap: Int)(body: => T): T = {
-      spark.conf.set("graft.lsh.maxJudgeChunks", cap.toString)
-      try body finally spark.conf.unset("graft.lsh.maxJudgeChunks")
-    }
-    val judgeMesoCapped10 = withChunkCap(16) {
-      judgeVia(store10, small, meso, sidecar = true) }
-    val judgeMesoCappedFull = withChunkCap(16) {
-      judgeVia(store, docs, meso, sidecar = true) }
-    val judgeMesoChunked10 = withChunkCap(64) {
-      judgeVia(store10, small, meso, sidecar = true) }
-    val judgeMesoChunkedFull = withChunkCap(64) {
-      judgeVia(store, docs, meso, sidecar = true) }
     val sigMergeSec = t {
       Dedup.mergeIntoSignatureStore(spark, store,
         Dedup.minhashSignatures(delta, "doc_id", "text"), "doc_id")
@@ -192,11 +169,6 @@ object BandIndexProbe {
       f""""n_micro":$nMicro,""" +
       f""""judge_micro_sidecar_small_sec":$judgeMicro10%.2f,""" +
       f""""judge_micro_sidecar_full_sec":$judgeMicroFull%.2f,""" +
-      f""""n_meso":$nMeso,""" +
-      f""""judge_meso_capped_small_sec":$judgeMesoCapped10%.2f,""" +
-      f""""judge_meso_capped_full_sec":$judgeMesoCappedFull%.2f,""" +
-      f""""judge_meso_chunked_small_sec":$judgeMesoChunked10%.2f,""" +
-      f""""judge_meso_chunked_full_sec":$judgeMesoChunkedFull%.2f,""" +
       f""""sig_merge_sec":$sigMergeSec%.2f,""" +
       f""""shingle_merge_sec":$shMergeSec%.2f,""" +
       f""""idx_merge_sec":$idxMergeSec%.2f,""" +

@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Stage breakdown of the q163 dedup cascade at the sf10 tier — which
   * of the three stages (exact fingerprint, n-gram near-dup, portable
-  * SimHash) carries the 100×-data cost, and what the banded near-dup
-  * route (`ngramJaccardPairsAuto` past `graft.dedup.bandedAbove`)
-  * buys relative to the exact shingle join. */
+  * SimHash) carries the 100×-data cost, and what MinHash banding
+  * (`minhashLshPairs`, 32 hashes × 16 bands) costs relative to the
+  * exact shingle join. */
 object CascadeProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")

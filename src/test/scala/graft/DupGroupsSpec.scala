@@ -92,18 +92,5 @@ class DupGroupsSpec extends SparkSpec {
     val h2 = Dedup.minhashLshPairsScoped(docs, "doc_id", "text", 3, 16, 4, 0.1)
     h2.use(_.count())
     assert(!h2.isCached, "use() left the signature cache behind")
-    // the router between the two: unset routes to the exact join, and a
-    // threshold that is not a document count is a named error
-    assert(Dedup.ngramJaccardPairsAuto(docs, "doc_id", "text", 3, 0.1)
-      .count() == h.df.count())
-    for (bad <- Seq("many", "-1")) {
-      spark.conf.set("graft.dedup.bandedAbove", bad)
-      try {
-        val e = intercept[IllegalArgumentException](
-          Dedup.ngramJaccardPairsAuto(docs, "doc_id", "text", 3, 0.1))
-        assert(e.getMessage.contains("graft.dedup.bandedAbove") &&
-          e.getMessage.contains(s"'$bad'"), e.getMessage)
-      } finally spark.conf.unset("graft.dedup.bandedAbove")
-    }
   }
 }

@@ -52,13 +52,8 @@ object PlanAudit {
     // in the hidden subtree would have passed (r15 advisor finding).
     // `off` keeps every subtree in the static plan this audit reads;
     // restored afterwards so a shared test session is unaffected.
-    val priorCuts = spark.conf.getOption(graft.operators.Lineage.ModeKey)
-    spark.conf.set(graft.operators.Lineage.ModeKey, "off")
-    try runChecks(spark, sfDir)
-    finally priorCuts match {
-      case Some(v) => spark.conf.set(graft.operators.Lineage.ModeKey, v)
-      case None => spark.conf.unset(graft.operators.Lineage.ModeKey)
-    }
+    graft.operators.GraftConf.PlanCuts.withValue(spark, "off")(
+      runChecks(spark, sfDir))
   }
 
   private def runChecks(spark: SparkSession, sfDir: String): Int = {
@@ -878,10 +873,10 @@ object PlanAudit {
 
     // q163 cascade: three dedup stages over one corpus — the pair joins
     // are all banded/blocked equi-joins, no cartesian anywhere, and
-    // PLANNING the cascade launches no Spark job (round 14: the
-    // ngramJaccardPairsAuto routing count() is short-circuited when
-    // graft.dedup.bandedAbove is unset — a corpus-scale count bought to
-    // decide a statically-false branch)
+    // PLANNING the cascade launches no Spark job (round 14 found a
+    // corpus-scale count() run at plan time to pick the near-dup
+    // stage's pair generator; no stage may decide its plan by counting
+    // the corpus)
     audit("q163") {
       // the listener bus is drained, not slept on: every job plan()
       // started is counted

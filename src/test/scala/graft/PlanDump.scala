@@ -28,7 +28,7 @@ object PlanDump {
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.01"
     val cuts = if (args.length > 4) args(4) else "off"
     val spark = SparkSession.builder().master("local[8]")
-      .config(graft.operators.Lineage.ModeKey,
+      .config(graft.operators.GraftConf.PlanCuts.name,
         if (cuts == "on") "checkpoint" else "off")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false")

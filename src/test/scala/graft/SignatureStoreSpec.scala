@@ -92,11 +92,10 @@ class SignatureStoreSpec extends SparkSpec {
     spark.conf.set("graft.lsh.maxBroadcastMb", "0.0008")
     try assert(run() == single)
     finally spark.conf.unset("graft.lsh.maxBroadcastMb")
-    // an unparsable or non-positive budget or chunk cap is a named
-    // error, never a silent fall-back to the default
+    // an unparsable or non-positive budget is a named error, never a
+    // silent fall-back to the default
     for ((key, bad) <- Seq("graft.lsh.maxBroadcastMb" -> "lots",
-        "graft.lsh.maxBroadcastMb" -> "-2", "graft.lsh.maxJudgeChunks" -> "x",
-        "graft.lsh.maxJudgeChunks" -> "0")) {
+        "graft.lsh.maxBroadcastMb" -> "-2")) {
       spark.conf.set(key, bad)
       try {
         val e = intercept[IllegalArgumentException](run())

@@ -690,7 +690,7 @@ class StandingStoreSpec extends SparkSpec {
     assert(Similarity.readStandingStore(spark, path)._1.count() == 39)
   }
 
-  test("chunked PQ search under a tiny broadcast budget equals the single-chunk result") {
+  test("over-budget PQ search equals broadcast: vanilla and residual") {
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
     val path = Fixtures.tempDir("graft-store-").resolve("s").toString
     Similarity.writeStandingStore(assigned(corpus(), cents), path,
@@ -702,35 +702,23 @@ class StandingStoreSpec extends SparkSpec {
         "vec_id", "embedding", m = 2, dsub = 2, k = 3, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3))).sorted.toSeq
-    val single = run()
-    // ~0.01 MB budget forces multiple chunks for the 40-query batch;
-    // queries stay whole per chunk, so the union must be identical
+    val vanilla = run()
+    // a ~0.01 MB budget puts the 40-query batch over budget: its
+    // distance tables are shuffled, not broadcast — same rows exactly
     spark.conf.set("graft.pq.maxBroadcastMb", "0.01")
-    try {
-      val chunked = run()
-      assert(chunked == single)
-    } finally spark.conf.unset("graft.pq.maxBroadcastMb")
-    // residual flavor goes through the same chunk loop
+    try assert(run() == vanilla, "shuffled ADC diverged from broadcast")
+    finally spark.conf.unset("graft.pq.maxBroadcastMb")
+    // the residual flavor takes the same shuffled pass
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4, residual = true)
-    val singleR = run()
+    val residual = run()
     spark.conf.set("graft.pq.maxBroadcastMb", "0.01")
-    try assert(run() == singleR)
+    try assert(run() == residual, "shuffled residual ADC diverged")
     finally spark.conf.unset("graft.pq.maxBroadcastMb")
-    // HUGE-BATCH fallback: chunk count past graft.pq.maxSerialChunks
-    // switches to ONE shuffled-join pass — same rows exactly
-    spark.conf.set("graft.pq.maxBroadcastMb", "0.01")
-    spark.conf.set("graft.pq.maxSerialChunks", "1")
-    try assert(run() == singleR, "shuffled ADC diverged from broadcast")
-    finally {
-      spark.conf.unset("graft.pq.maxBroadcastMb")
-      spark.conf.unset("graft.pq.maxSerialChunks")
-    }
     // an unparsable or non-positive budget is a named error, never a
     // silent fall-back to the default
     for ((key, bad) <- Seq("graft.pq.maxBroadcastMb" -> "64MB",
-        "graft.pq.maxBroadcastMb" -> "0", "graft.pq.maxSerialChunks" -> "x",
-        "graft.pq.maxSerialChunks" -> "-1")) {
+        "graft.pq.maxBroadcastMb" -> "0")) {
       spark.conf.set(key, bad)
       try {
         val e = intercept[IllegalArgumentException](run())

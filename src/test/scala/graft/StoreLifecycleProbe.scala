@@ -169,31 +169,17 @@ object StoreLifecycleProbe {
         pqTop("neighbor_id") === flTop("n2")).count() * 100 / flCount
     // 100k-QUERY tier: bcRows·rowBytes ≈ 128 MB at m=4/ksub=8 exceeds
     // the 64 MB default broadcast budget, so this runs pqAdcOverStore's
-    // CHUNKED path (2 chunks, one broadcast alive at a time) at real
-    // batch scale — the production shape for bulk near-dup scoring
+    // SHUFFLED pass at real batch scale — the production shape for bulk
+    // near-dup scoring
     var search100kRows = 0L
     val pqSearch100kSec = t {
       search100kRows = Similarity.pqTopKStoreTwoLevel(spark, store,
         base.filter(col("vec_id") < 100000), "vec_id", "embedding",
         m = 4, dsub = 16, k = 5, sProbe = 8, nProbe = 4).count()
     }
-    // the same 100k batch FORCED onto the serial broadcast-chunk loop
-    // — the crossover measurement for graft.pq.maxSerialChunks: the
-    // default is now 1 (any over-budget batch shuffles, after round
-    // 12 measured the shuffle winning already at 2 chunks), so the
-    // AUTO tier above records the shuffle and this tier records what
-    // the old serial plan would have cost
-    spark.conf.set("graft.pq.maxSerialChunks", "99")
-    val pqSearch100kSerialSec = t {
-      Similarity.pqTopKStoreTwoLevel(spark, store,
-        base.filter(col("vec_id") < 100000), "vec_id", "embedding",
-        m = 4, dsub = 16, k = 5, sProbe = 8, nProbe = 4).count()
-    }
-    spark.conf.unset("graft.pq.maxSerialChunks")
     // 1M-QUERY tier: 5× the corpus under shifted ids ⇒ ~5 GB of
-    // distance tables = ~80 serial chunks at the 64 MB budget, so the
-    // auto path IS the shuffle fallback — bulk scoring at the scale
-    // the serial loop stops being a plan
+    // distance tables, ~80× the 64 MB budget — the shuffled pass at
+    // bulk-scoring scale
     val q1m = (0 until 5).map { i =>
       base.select((col("vec_id") + lit(i.toLong * 10000000L))
         .as("vec_id"), col("embedding"))
@@ -452,7 +438,6 @@ object StoreLifecycleProbe {
       f""""pq_vs_float_ladder_overlap_pct":$overlapPct,""" +
       f""""pq_search100k_auto_sec":$pqSearch100kSec%.2f,""" +
       f""""pq_search100k_rows":$search100kRows,""" +
-      f""""pq_search100k_serial_sec":$pqSearch100kSerialSec%.2f,""" +
       f""""pq_search1m_shuffle_sec":$pqSearch1mSec%.2f,""" +
       f""""pq_search1m_rows":$search1mRows,""" +
       f""""pq256_write_sec":$pqWrite256Sec%.2f,""" +

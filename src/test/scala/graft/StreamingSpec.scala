@@ -15,26 +15,17 @@ class StreamingSpec extends SparkSpec {
 
   test("streamSession carries the caller's graft.* and SQL confs to the child") {
     val parent = spark.newSession()
-    parent.conf.set("graft.test.marker", "carried")
+    parent.conf.set("graft.store.snapshotKeep", "3")
     parent.conf.set("spark.sql.ansi.enabled", "false") // default is true
     parent.conf.set("spark.sql.shuffle.partitions", "7")
     val child = graft.operators.StreamingQueries.streamSession(parent,
       Files.createTempDirectory("graft-stream-session-"))
-    assert(child.conf.get("graft.test.marker") == "carried")
+    assert(child.conf.get("graft.store.snapshotKeep") == "3")
     assert(child.conf.get("spark.sql.ansi.enabled") == "false")
-    // the state-partition override still wins: an empty staging dir
-    // derives the floor, min(4, cores)
+    // the state-partition count is derived, not copied: an empty
+    // staging dir derives the floor, min(4, cores)
     val floor = math.min(4, spark.sparkContext.defaultParallelism)
     assert(child.conf.get("spark.sql.shuffle.partitions") == floor.toString)
-    // a state-partition count that is not a positive integer is a named
-    // error, not a silent fall-back to the derived count
-    for (bad <- Seq("auto", "0")) {
-      parent.conf.set("graft.stream.statePartitions", bad)
-      val e = intercept[IllegalArgumentException](
-        graft.operators.StreamingQueries.streamSession(parent))
-      assert(e.getMessage.contains("graft.stream.statePartitions") &&
-        e.getMessage.contains(s"'$bad'"), e.getMessage)
-    }
   }
 
   test("file stream: each arriving file is one upsert micro-batch (R1/R4)") {
