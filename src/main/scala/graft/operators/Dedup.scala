@@ -772,7 +772,7 @@ object Dedup {
     * the touched bucket ids. */
   def mergeIntoSignatureStore(spark: SparkSession, path: String,
                               delta: DataFrame, idCol: String): Seq[Int] =
-    storeTxn(spark, path) {
+    StoreSwap.transact(spark, path) {
     val rows = delta.withColumn("d_bucket",
       docBucket(col(idCol), StoreSwap.bucketCount(spark, path)))
     val touched = distinctInts(rows.select(col("d_bucket")))
@@ -807,7 +807,7 @@ object Dedup {
                            textCol: String,
                            batchId: Option[Long] = None,
                            n: Int = 3, numHashes: Int = 16): Unit =
-    storeTxn(spark, path) {
+    StoreSwap.transact(spark, path) {
     if (!batchId.exists(
         StoreSwap.committedBatches(spark, path, "data").contains)) {
       val buckets = StoreSwap.bucketCount(spark, path)
@@ -840,29 +840,18 @@ object Dedup {
     } // else: redelivered batch, already fully absorbed and acked
   }
 
-  /** [[StoreSwap.open]] for a signature store: an older store is
-    * upgraded once to the current protocol, with the layout constants of
-    * its sidecars (bucket count, shingle width, band layout) seeded INTO
-    * the upgrade manifest and a missing band inventory derived.
-    * Idempotent; one `exists` call on a current store. */
+  /** [[StoreSwap.open]] for a signature store: one `exists` call on a
+    * protocol-2 store; any other store layout is refused with a named
+    * `IllegalStateException`, and nothing is written. Every read and
+    * commit of the store makes this check itself. */
   def unifySignatureStore(spark: SparkSession, path: String): Unit =
     StoreSwap.open(spark, path)
 
-  /** One commit of the signature store ([[StoreSwap.transact]]), opened
-    * through [[unifySignatureStore]] first. */
-  private def storeTxn[T](spark: SparkSession, path: String)
-                         (body: => T): T = {
-    unifySignatureStore(spark, path)
-    StoreSwap.transact(spark, path)(body)
-  }
-
   /** The full signature store plus its recorded bucket count. */
   def readSignatureStore(spark: SparkSession,
-                         path: String): (DataFrame, Int) = {
-    unifySignatureStore(spark, path)
+                         path: String): (DataFrame, Int) =
     (StoreSwap.readDir(spark, path, "data", "d_bucket"),
       StoreSwap.bucketCount(spark, path))
-  }
 
   /** TIME-TRAVEL read of the signature store — the text twin of
     * [[Similarity.readStandingStoreAt]]: any retained manifest version
@@ -944,7 +933,7 @@ object Dedup {
   def forgetDocsFromSignatureStore(spark: SparkSession, path: String,
                                    docIds: DataFrame,
                                    idCol: String): Long =
-    storeTxn(spark, path) {
+    StoreSwap.transact(spark, path) {
     val (standing, buckets) = readSignatureStore(spark, path)
     val ids = docIds.select(col(idCol)).distinct()
     val touched = distinctInts(ids.select(docBucket(col(idCol), buckets)))
@@ -989,7 +978,7 @@ object Dedup {
     * discards, and [[reindexDocsInBandIndex]] repairs.) */
   def writeShingleSidecar(spark: SparkSession, path: String,
                           docs: DataFrame, idCol: String, textCol: String,
-                          n: Int = 3): Unit = storeTxn(spark, path) {
+                          n: Int = 3): Unit = StoreSwap.transact(spark, path) {
     val buckets = StoreSwap.bucketCount(spark, path)
     StoreSwap.overwriteDir(spark, path, "shingles", "d_bucket",
       shinglePolyHashes(docs, idCol, textCol, n)
@@ -1014,7 +1003,7 @@ object Dedup {
   def mergeShinglesIntoStore(spark: SparkSession, path: String,
                              deltaDocs: DataFrame, idCol: String,
                              textCol: String): Seq[Int] =
-    storeTxn(spark, path) {
+    StoreSwap.transact(spark, path) {
     require(shingleSidecarExists(spark, path),
       s"$path has no shingle sidecar — build it with writeShingleSidecar")
     val n = shingleWidth(spark, path)
@@ -1075,7 +1064,7 @@ object Dedup {
     * manifest, recorded in the index's commit. */
   def writeBandIndex(spark: SparkSession, path: String, idCol: String,
                      bands: Int = 8): Unit =
-    storeTxn(spark, path) {
+    StoreSwap.transact(spark, path) {
     val (sigs, buckets) = readSignatureStore(spark, path)
     // one aggregation pass serves both constants: the hash count and
     // the standing doc count the layout auto-selection needs
@@ -1135,11 +1124,9 @@ object Dedup {
     * doc-footprint instead of a full rebuild. Derived from the index
     * itself (a cheap column scan) rather than re-running the
     * corpus-scale band derivation a second time. Run by
-    * [[writeBandIndex]] and by the store upgrade ([[StoreSwap.open]])
-    * for an index written before the inventory existed. */
-  private[operators] def writeBandInventory(spark: SparkSession,
-                                            path: String,
-                                            buckets: Int): Unit =
+    * [[writeBandIndex]], in the commit that writes the index. */
+  private def writeBandInventory(spark: SparkSession, path: String,
+                                 buckets: Int): Unit =
     StoreSwap.overwriteDir(spark, path, "bands_inv", "d_bucket",
       StoreSwap.readDir(spark, path, "bands", "bb_bucket")
         .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
@@ -1266,7 +1253,7 @@ object Dedup {
     * touched buckets. */
   def mergeIntoBandIndex(spark: SparkSession, path: String,
                          docIds: DataFrame,
-                         idCol: String): Seq[Int] = storeTxn(spark, path) {
+                         idCol: String): Seq[Int] = StoreSwap.transact(spark, path) {
     val buckets = StoreSwap.bucketCount(spark, path)
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
@@ -1281,7 +1268,7 @@ object Dedup {
     * [[forgetDocsFromSignatureStore]]. Returns rows removed. */
   def forgetFromBandIndex(spark: SparkSession, path: String,
                           docIds: DataFrame,
-                          idCol: String): Long = storeTxn(spark, path) {
+                          idCol: String): Long = StoreSwap.transact(spark, path) {
     val buckets = StoreSwap.bucketCount(spark, path)
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
@@ -1318,7 +1305,7 @@ object Dedup {
     * Returns the number of stale rows removed. */
   def reindexDocsInBandIndex(spark: SparkSession, path: String,
                              docIds: DataFrame,
-                             idCol: String): Long = storeTxn(spark, path) {
+                             idCol: String): Long = StoreSwap.transact(spark, path) {
     val buckets = StoreSwap.bucketCount(spark, path)
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
@@ -1380,9 +1367,8 @@ object Dedup {
                     numHashes: Int = 16, seed: Long = 7L,
                     threshold: Double = 0.5,
                     asOf: Option[Int] = None): DataFrame = {
-    unifySignatureStore(spark, path)
     // resolved first: a version outside the retained window fails here
-    // with the retention/cutover message
+    // with the retention message
     val sidecarPresent = asOf match {
       case Some(v) =>
         StoreSwap.snapshotEntriesAt(spark, path, "shingles", v).nonEmpty

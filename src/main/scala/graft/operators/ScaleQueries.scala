@@ -433,45 +433,48 @@ object ScaleQueries {
       .orderBy(col("doc_id"), col("k"))
   }
 
-  /** q198: MIGRATION of a legacy store with an interrupted mutation
-    * ([[graft.operators.StoreSwap.open]], value-gated) — the q196 store
-    * content written in the LEGACY on-disk layout (live
-    * `data/d_bucket=…` dirs, no manifest) with a fabricated "crashed
-    * mid-mutation" state layered on top: replacement content staged
-    * for buckets 2 and 5 (only the doc_id % 11 = 5 docs' signatures
-    * survive there), bucket 9 recorded as emptied, `_pending_swap`
-    * committed — and the process "dies" before the swap applies. The
-    * first open must roll that commit FORWARD and then migrate the
-    * store onto the manifest: buckets 2/5 hold exactly the staged rows,
-    * bucket 9 holds nothing, every other bucket is untouched. The
-    * oracle predicts the surviving set closed-form from the bucket
-    * arithmetic — if the migration replayed too little (stale rows
-    * resurrect), too much (untouched buckets change), or dropped a
-    * bucket, the hash breaks. */
+  /** q198: RECOVERY from a crashed store mutation
+    * ([[graft.operators.StoreSwap.transact]], value-gated) — the q196
+    * store (after its merge) forgets, inside one outer transaction, the
+    * docs of buckets 2 and 5 except the doc_id % 11 = 5 ones, and every
+    * doc of bucket 9; then the process "dies" before the manifest
+    * rename (the transaction body throws). The crash must leave the
+    * store at its pre-crash version with the staged generation an inert
+    * orphan on disk; the re-run of the forget alone must commit and
+    * reclaim the orphan. The result: buckets 2/5 hold exactly the
+    * doc_id % 11 = 5 rows, bucket 9 holds nothing, every other bucket is
+    * untouched. The oracle predicts the surviving set closed-form from
+    * the bucket arithmetic — if the crash leaked (a partial forget
+    * published), the re-run forgot too little (stale rows resurrect) or
+    * too much (untouched buckets change), or dropped a bucket, the hash
+    * breaks. */
   def q198SigStoreRecover(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val delta = Dedup.minhashSignatures(
       docs.filter(col("doc_id") % 3 === 0), "doc_id", "text")
-    val merged = Fixtures.cloneDir(
-      sharedPartialSigStore(spark, dir), "graft-q198m-")
-    Dedup.mergeIntoSignatureStore(spark, merged, delta, "doc_id")
-    // the same content in the legacy layout
-    val store = Fixtures.tempDir("graft-q198-").resolve("s").toString
-    Dedup.readSignatureStore(spark, merged)._1
-      .repartition(col("d_bucket"))
-      .write.partitionBy("d_bucket").parquet(store + "/data")
-    spark.range(1)
-      .select(lit(StoreSwap.bucketCount(spark, merged)).as("buckets"))
-      .write.parquet(store + "/meta") // the legacy layout's bucket count
-    // the crashed mutation's committed-but-unapplied state
-    Dedup.minhashSignatures(
-        docs.filter(col("doc_id") % 11 === 5 &&
-          pmod(col("doc_id"), lit(16L)).isin(2L, 5L)), "doc_id", "text")
-      .withColumn("d_bucket", pmod(col("doc_id"), lit(16L)).cast("int"))
-      .repartition(col("d_bucket"))
-      .write.partitionBy("d_bucket").parquet(store + "/.staging")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(store, "_pending_swap"), "d_bucket\n2,5\n9")
+    val store = Fixtures.cloneDir(
+      sharedPartialSigStore(spark, dir), "graft-q198-")
+    Dedup.mergeIntoSignatureStore(spark, store, delta, "doc_id")
+    val bucket = pmod(col("doc_id"), lit(16L))
+    val forget = docs.filter(
+        (bucket.isin(2L, 5L) && col("doc_id") % 11 =!= 5) || bucket === 9L)
+      .select(col("doc_id"))
+    def gens() = Option(new java.io.File(s"$store/data.gens").list())
+      .fold(Set.empty[String])(_.toSet)
+    val (versions, before) = (StoreSwap.snapshotVersions(spark, store), gens())
+    val crash = scala.util.Try(StoreSwap.transact(spark, store) {
+      Dedup.forgetDocsFromSignatureStore(spark, store, forget, "doc_id")
+      throw new IllegalStateException("q198: crash before the manifest rename")
+    })
+    require(crash.failed.toOption.exists(_.getMessage.startsWith("q198:")),
+      s"q198: the crashed transaction did not fail as staged: $crash")
+    require(StoreSwap.snapshotVersions(spark, store) == versions,
+      "q198: the crashed transaction published a version")
+    val orphans = gens() -- before
+    require(orphans.nonEmpty, "q198: the crash left no orphan generation")
+    Dedup.forgetDocsFromSignatureStore(spark, store, forget, "doc_id")
+    require(gens().intersect(orphans).isEmpty,
+      s"q198: the re-run left the orphan generations $orphans")
     Dedup.readSignatureStore(spark, store)._1
       .select(col("doc_id"), col("k"), col("mh"))
       .orderBy(col("doc_id"), col("k"))

@@ -813,7 +813,6 @@ object Similarity {
     * travel read [[readStandingStoreAt]] keeps it too, so the two
     * paths are schema-equal. */
   def readStandingStore(spark: SparkSession, path: String): (DataFrame, Int) = {
-    StoreSwap.open(spark, path)
     (StoreSwap.readDir(spark, path, "data", "c_bucket"),
       StoreSwap.bucketCount(spark, path))
   }
@@ -900,7 +899,6 @@ object Similarity {
                            vecCol: String, version: Int, minCos: Double,
                            pruneBaseByDeltaClusters: Boolean = true)
       : DataFrame = {
-    StoreSwap.open(spark, path)
     val cents = readCodebookAt(spark, path, version)
     val d = delta.select(col(idCol), col(vecCol))
       .withColumn("__cluster",
@@ -940,7 +938,6 @@ object Similarity {
   private def prunedStoreRead(spark: SparkSession, path: String,
                               touched: Seq[Long], clusterCol: String,
                               pin: Option[Int]): DataFrame = {
-    StoreSwap.open(spark, path)
     val buckets = StoreSwap.bucketCount(spark, path, pin)
     val tb = touched.map(bucketOf(_, buckets)).distinct
     pin.fold(StoreSwap.readDir(spark, path, "data", "c_bucket"))(v =>
@@ -1019,7 +1016,6 @@ object Similarity {
     * transaction. */
   private def codebookDf(spark: SparkSession, path: String,
                          pin: Option[Int] = None): DataFrame = {
-    StoreSwap.open(spark, path)
     pin.fold(StoreSwap.readDir(spark, path, "codebook", "part"))(v =>
       StoreSwap.readVersionedAt(spark, path, "codebook", "part", v))
       .drop("part")
@@ -1571,7 +1567,6 @@ object Similarity {
                              queries: DataFrame, probes: DataFrame,
                              idCol: String, vecCol: String, m: Int,
                              dsub: Int, k: Int): DataFrame = {
-    StoreSwap.open(spark, storePath)
     // materialized once: the probe-list ranking is the measured wall of
     // large query batches, and the collects below would otherwise
     // re-rank every query a second time inside the broadcast join
@@ -1698,7 +1693,6 @@ object Similarity {
   def compactStandingStore(spark: SparkSession, path: String,
                            maxFilesPerBucket: Int = 4): Seq[Int] = {
     require(maxFilesPerBucket >= 1, "need maxFilesPerBucket >= 1")
-    StoreSwap.open(spark, path)
     val frag = fragBuckets(spark, path, "data", "c_bucket",
       maxFilesPerBucket)
     if (frag.isEmpty) return Seq.empty
@@ -1742,7 +1736,6 @@ object Similarity {
   def compactPqCodes(spark: SparkSession, path: String,
                      maxFilesPerBucket: Int = 4): Seq[Int] = {
     require(maxFilesPerBucket >= 1, "need maxFilesPerBucket >= 1")
-    StoreSwap.open(spark, path)
     val frag = fragBuckets(spark, path, "pq_codes", "c_bucket",
       maxFilesPerBucket)
     if (frag.isEmpty) return Seq.empty

@@ -46,26 +46,17 @@ import graft.sinks.ParquetFooters
   * 1 prior version) references.
   *
   * '''Protocol.''' Every manifest records the store protocol as the
-  * reserved entry `#meta:protocol|2` ([[Protocol]]). Every read and
-  * write refuses a manifest above it with a named
-  * `IllegalStateException` instead of misreading it. Every store entry
-  * point calls [[open]] first; on a protocol-2 store that is one
-  * `exists` call, of the `_v/_protocol2` marker. Anything older is
-  * upgraded ONCE, under the writer lease, by one manifest rename:
-  *  - a protocol-1 store (the `_v/_open` marker, manifests without the
-  *    entry);
-  *  - a layout from before the manifest: the legacy in-place bucket
-  *    swap (`$path/data/d_bucket=…` with a `_pending_swap` manifest),
-  *    per-dataDir `_v/<dataDir>.v<N>` manifests, a write-once
-  *    `codebook` dir, or a PQ triple swapped behind `_pending_pq`.
-  *    Pending legacy swaps roll forward, partition dirs are renamed in
-  *    as generation 0, per-dataDir manifest state is adopted, and the
-  *    codebook / PQ triple are recommitted as versioned dataDirs.
-  * The upgrade seeds the layout constants the old stores kept in
-  * one-row parquet sidecars (`meta`, `shingles_meta`, `bands_meta`),
-  * splits a store-wide batch ledger per dataDir and derives a missing
-  * band inventory. Only [[open]] knows what an older store looks like;
-  * reads and merges assume protocol 2.
+  * reserved entry `#meta:protocol|2` ([[Protocol]]), and a store's
+  * first commit writes the `_v/_protocol2` marker before anything else.
+  * Protocol 2 is the floor: as with Delta's `minProtocolVersion`, a
+  * reader refuses what it cannot read instead of carrying every older
+  * reader. Every commit here calls [[open]] first, which on a
+  * protocol-2 store is one `exists` call, of the marker; a read sees the
+  * marker in the listing of `_v` it makes anyway and calls [[open]] only
+  * when it is missing. A store directory without the marker — a
+  * protocol-1 store, or a layout from before the store manifest — and a
+  * manifest above protocol 2 are refused with a named
+  * `IllegalStateException` before anything is touched.
   *
   * Directory renames are atomic on HDFS-semantics filesystems (HDFS,
   * local, ABFS); on raw S3 they are copy+delete, where a production
@@ -99,6 +90,8 @@ object StoreSwap {
 
   private def staging(path: String) = new Path(path + "/.staging")
   private def lease(path: String) = new Path(path + "/_writer_lease")
+  /** Name prefix of the lease's release tombstones ([[withLease]]). */
+  private val LeaseTomb = ".lease-tomb-"
   private def versionsDir(path: String) = new Path(path + "/_v")
 
   /** Store paths whose lease THIS thread currently holds — composite
@@ -178,7 +171,7 @@ object StoreSwap {
       // file is at the lease path; only a tombstone that verifies as
       // OURS is deleted — a successor's is renamed back intact.
       if (fs.exists(lp) && readLease() == token) {
-        val tomb = new Path(path + s"/.lease-tomb-${java.util.UUID.randomUUID()}")
+        val tomb = new Path(s"$path/$LeaseTomb${java.util.UUID.randomUUID()}")
         if (fs.rename(lp, tomb)) {
           val captured =
             try {
@@ -196,32 +189,7 @@ object StoreSwap {
     }
   }
 
-  /** The holder string of a LIVE lease on `path` owned by another
-    * thread/process, or None when the path is mutable by this caller
-    * (no lease, our own reentrant lease, or a stale one). */
-  private def foreignLiveLease(spark: SparkSession, path: String,
-                               staleMs: Long = DefaultLeaseStaleMs): Option[String] = {
-    if (heldByThread.get.contains(path)) return None
-    val lp = lease(path)
-    val fs = fsOf(spark, lp)
-    if (!fs.exists(lp)) return None
-    try {
-      val st = fs.getFileStatus(lp)
-      if (System.currentTimeMillis() - st.getModificationTime >= staleMs)
-        None // stale — the next mutator will break it
-      else {
-        val in = fs.open(lp)
-        val holder =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        Some(holder)
-      }
-    } catch {
-      case _: java.io.IOException => None // vanished between exists and read
-    }
-  }
-
-  // ---- open = protocol check + one-time upgrade ------------------------
+  // ---- open = the protocol floor -----------------------------------------
 
   /** The manifest family name — reserved; no dataDir may be called
     * this. */
@@ -235,220 +203,41 @@ object StoreSwap {
 
   private val ProtocolKey = storeMetaKey("protocol")
 
-  /** Written once a store is on [[Protocol]] (created fresh or
-    * upgraded); its presence is all [[open]] checks. */
+  /** Written by a store's first commit ([[transact]]), before anything
+    * else; its presence is all [[open]] checks. */
   private def protocolMarker(path: String) =
     new Path(s"$path/_v/_protocol$Protocol")
 
-  /** Legacy partition dirs migrated by RENAME into generation 0. */
-  private val LegacyDataDirs = Seq("data", "bands", "bands_inv", "shingles")
-
-  /** Legacy model dirs migrated by COPY into a versioned dataDir (the
-    * flat ones gain the constant `part=0` partition column the
-    * versioned reader infers). Their legacy dirs are left in place for
-    * readers that resolved them before the migration commit; the next
-    * full rewrite of the artifact ([[overwriteDir]]) retires them. */
-  private val LegacyModelDirs = Seq("codebook", "pq_codebook", "pq_meta",
-    "pq_codes")
-
-  /** Make `path` a store of [[Protocol]] before any read or write of
-    * it. On a store that already is one, this is one `exists` call. A
-    * nonexistent path is left alone (its first commit creates it). An
-    * older store is upgraded ONCE, under the writer lease, and one
-    * manifest rename publishes the lot:
-    *  - a layout from before the manifest is migrated first: a
-    *    `_pending_swap` or `_pending_pq` committed by a crashed legacy
-    *    writer is rolled forward, partition dirs are renamed in as
-    *    generation 0 (or a per-dataDir manifest's latest state is
-    *    adopted), and the codebook and PQ triple are recommitted as
-    *    versioned dataDirs. The first manifest is numbered ABOVE every
-    *    per-dataDir version, so an old version number fails fast
-    *    ([[readVersionedAt]]'s cutover message) instead of aliasing a
-    *    later snapshot;
-    *  - then [[upgrade]] brings the entries to protocol 2.
-    * A crash before the rename leaves the old store, which the next
-    * open upgrades again (a completed live→g0 rename is adopted, not
-    * lost; a staged generation is an orphan the commit reclaims). A
-    * store of a newer protocol is refused before anything is touched. */
+  /** Make sure `path` is a store this build reads, before any read or
+    * write of it (every commit here calls it first, and every read of a
+    * store without the marker; inside an open [[transact]] it is free).
+    * On a protocol-2 store this is one `exists` call, of its marker. A
+    * missing path, or one that holds only the writer lease (a first
+    * commit that crashed before writing the marker), is a store not yet
+    * created: its first commit creates it. Anything else is refused with
+    * a named `IllegalStateException` that lists what the path holds — a
+    * protocol-1 store, a layout from before the store manifest, or a
+    * directory that is not a store. A manifest of a newer protocol is
+    * refused as such ([[readManifest]]). `open` never writes and never
+    * takes the lease. */
   def open(spark: SparkSession, path: String): Unit = {
     if (activeTxn.get.contains(path)) return
     val marker = protocolMarker(path)
     val fs = fsOf(spark, marker)
-    if (fs.exists(marker) || !fs.exists(new Path(path))) return
-    foreignLiveLease(spark, path).foreach { holder =>
-      sys.error(s"store $path needs its one-time upgrade but a writer" +
-        s" holds a live lease ($holder) — the writer is mid-commit; retry" +
-        " after it releases instead of racing its roll-forward")
-    }
-    withLease(spark, path) {
-      if (!fs.exists(marker)) migrate(spark, fs, path)
-    }
-  }
-
-  private def migrate(spark: SparkSession, fs: FileSystem,
-                      path: String): Unit = {
-    val keep = GraftConf.SnapshotKeep(spark)
-    // read first: a newer protocol's manifest is refused untouched
-    val current = latest(fs, path)
-    rollForwardSwap(fs, path)
-    rollForwardPq(fs, path)
-    (staging(path) +: LegacyModelDirs.map(d => new Path(s"$path/.staging-$d")))
-      .foreach(p => if (fs.exists(p)) fs.delete(p, true)) // pre-commit orphans
-    val t = current match {
-      case Some((v, entries)) => new Txn(v, entries)
-      case None =>
-        val (startV, entries) = adoptDataDirs(fs, path)
-        new Txn(startV - 1, entries)
-    }
-    activeTxn.get(path) = t
-    try {
-      LegacyModelDirs.foreach { d =>
-        val live = new Path(s"$path/$d")
-        if (fs.exists(live) && !hasBuckets(t.entries, d)) {
-          val partCol = fs.listStatus(live).map(_.getPath.getName)
-            .find(_.contains("=")).map(_.takeWhile(_ != '='))
-          val df = spark.read.parquet(live.toString)
-          stageAndCommit(spark, path, d, partCol.getOrElse("part"),
-            if (partCol.isEmpty) df.withColumn("part", lit(0)) else df,
-            Seq.empty)(replaceAll(d))
-        }
-      }
-      if (t.entries.nonEmpty && !t.entries.contains(ProtocolKey))
-        upgrade(spark, fs, path, t)
-    } finally activeTxn.get.remove(path)
-    if (t.dirty) publish(spark, fs, path, t, keep)
-    // retire the per-dataDir manifest families (also the cleanup path
-    // after a crash between the commit above and these lines)
-    (LegacyDataDirs ++ LegacyModelDirs).foreach { d =>
-      manifests(fs, path, d).foreach { case (_, p) => fs.delete(p, false) }
-    }
-    fs.mkdirs(versionsDir(path))
-    fs.create(protocolMarker(path), true).close()
-    fs.delete(new Path(path + "/_v/_open"), false) // protocol 1's marker
-  }
-
-  /** Bring a protocol-1 (or just migrated) store's entries, the open
-    * transaction `t`, to protocol 2; the publish records the protocol.
-    *  1. Each layout constant the manifest lacks is seeded from its
-    *     legacy sidecar ([[LegacySidecars]]). A band layout recorded
-    *     without `bands.idx` predates the directory-granularity knob:
-    *     its directories follow the store's bucket count.
-    *  2. A store-wide `#batches` ledger (written before ledgers were
-    *     per dataDir) becomes the ledger of every dataDir holding
-    *     buckets that has none of its own, and the store-wide key goes.
-    *  3. A band index without its per-doc inventory gets one, derived
-    *     from the index by [[Dedup.writeBandInventory]] — the code its
-    *     writer runs. */
-  private def upgrade(spark: SparkSession, fs: FileSystem, path: String,
-                      t: Txn): Unit = {
-    LegacySidecars.foreach { case (name, (file, column)) =>
-      val sidecar = new Path(s"$path/$file")
-      if (!t.entries.contains(storeMetaKey(name)) && fs.exists(sidecar)) {
-        val df = spark.read.parquet(sidecar.toString)
-        if (df.columns.contains(column)) t.entries += storeMetaKey(name) ->
-          Seq(df.select(col(column).cast("long")).head.getLong(0))
-      }
-    }
-    val (bandsB, bandsIdx) = (storeMetaKey("bands.b"), storeMetaKey("bands.idx"))
-    if (t.entries.contains(bandsB) && !t.entries.contains(bandsIdx))
-      t.entries.get(storeMetaKey(BucketsKey))
-        .foreach(b => t.entries += bandsIdx -> b)
-    t.entries.get(BatchesKey).foreach { ids =>
-      val dirs = t.entries.keys.filter(k => !isReservedKey(k) && k.contains("/"))
-        .map(k => unifiedBatchesKey(k.takeWhile(_ != '/'))).toSet
-      t.entries = t.entries - BatchesKey ++
-        dirs.filterNot(t.entries.contains).map(_ -> ids)
-    }
-    t.dirty = true
-    if (hasBuckets(t.entries, "bands") && !hasBuckets(t.entries, "bands_inv"))
-      Dedup.writeBandInventory(spark, path, bucketCount(spark, path))
-  }
-
-  /** The legacy partition dirs' state as the first manifest's entries:
-    * a per-dataDir manifest family's latest version (its ledger
-    * namespaced per dataDir), else the live dir renamed in as g0. The
-    * returned start version lies above every per-dataDir version. */
-  private def adoptDataDirs(fs: FileSystem,
-                            path: String): (Int, Map[String, Seq[Long]]) = {
-    var all = Map.empty[String, Seq[Long]]
-    var startV = 0
-    LegacyDataDirs.foreach { d =>
-      val perDir = manifests(fs, path, d)
-      if (perDir.nonEmpty) {
-        startV = math.max(startV, perDir.last._1 + 1)
-        val e = readManifest(fs, perDir.last._2)
-        all ++= e.collect {
-          case (k, gs) if !isReservedKey(k) => s"$d/$k" -> gs
-        }
-        // each dataDir tracked its OWN batch stream pre-migration;
-        // keep them namespaced so overlapping batch ids from
-        // independent streams can't alias into one store-wide ledger
-        e.get(BatchesKey).foreach(ids => all += unifiedBatchesKey(d) -> ids)
-      } else {
-        val live = new Path(s"$path/$d")
-        val g0 = new Path(s"$path/$d.gens/g0")
-        if (fs.exists(live)) {
-          fs.mkdirs(g0.getParent)
-          if (fs.exists(g0)) fs.delete(g0, true) // crashed predecessor
-          if (!fs.rename(live, g0))
-            sys.error(s"could not migrate $live to $g0")
-        }
-        // adopt g0 whether THIS run renamed it or a crashed predecessor
-        // did (rename done, manifest not yet written) — skipping a
-        // live-less g0 would commit a manifest without the dataDir
-        if (fs.exists(g0))
-          all ++= fs.listStatus(g0)
-            .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-            .map(s => s"$d/${s.getPath.getName}" -> Seq(0L))
-      }
-    }
-    (startV, all)
-  }
-
-  /** Roll forward a legacy `_pending_swap` a crashed writer committed
-    * but did not apply: swap each surviving staged bucket into the live
-    * dir (one rename each), drop emptied buckets, clear the manifest.
-    * Idempotent — an absent staged bucket was already swapped. */
-  private def rollForwardSwap(fs: FileSystem, path: String): Unit = {
-    val mf = new Path(path + "/_pending_swap")
-    if (!fs.exists(mf)) return
-    val in = fs.open(mf)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      .split("\n", -1) finally in.close()
-    val partCol = lines(0)
-    def ints(s: String): Seq[Int] =
-      if (s.isEmpty) Seq.empty else s.split(",").toSeq.map(_.toInt)
-    val dataDir = if (lines.length > 3 && lines(3).nonEmpty) lines(3)
-      else "data"
-    ints(lines(1)).foreach { b =>
-      val src = new Path(s"$path/.staging/$partCol=$b")
-      val dst = new Path(s"$path/$dataDir/$partCol=$b")
-      if (fs.exists(src)) {
-        if (fs.exists(dst)) fs.delete(dst, true)
-        if (!fs.rename(src, dst)) sys.error(s"bucket swap failed: $dst")
-      }
-    }
-    ints(lines(2)).foreach { b =>
-      val dst = new Path(s"$path/$dataDir/$partCol=$b")
-      if (fs.exists(dst)) fs.delete(dst, true)
-    }
-    fs.delete(mf, false)
-  }
-
-  /** Roll forward a legacy PQ triple swap committed behind
-    * `_pending_pq`: each staged artifact replaces its live dir. */
-  private def rollForwardPq(fs: FileSystem, path: String): Unit = {
-    val mark = new Path(path + "/_pending_pq")
-    if (!fs.exists(mark)) return
-    Seq("pq_codebook", "pq_meta", "pq_codes").foreach { d =>
-      val stg = new Path(s"$path/.staging-$d")
-      val live = new Path(s"$path/$d")
-      if (fs.exists(stg)) {
-        if (fs.exists(live)) fs.delete(live, true)
-        if (!fs.rename(stg, live)) sys.error(s"sidecar swap failed: $live")
-      }
-    }
-    fs.delete(mark, false)
+    if (fs.exists(marker)) return
+    def names(p: Path) = children(fs, p).map(_.getName).sorted
+    val found = names(new Path(path))
+      .filterNot(n => n == lease(path).getName || n.startsWith(LeaseTomb))
+    if (found.isEmpty) return
+    // read first: a newer protocol's manifest is refused as such
+    latest(fs, manifests(fs, path))
+    val listed = found.flatMap(n =>
+      if (n == "_v") names(versionsDir(path)).map("_v/" + _) else Seq(n))
+    throw new IllegalStateException(s"store $path is not a protocol-" +
+      s"$Protocol store: it has no _v/_protocol$Protocol marker and holds" +
+      s" ${listed.mkString(", ")}. graft reads only protocol-$Protocol" +
+      " stores; rebuild this one from its source data with its store" +
+      " writer")
   }
 
   // ---- transactions ----------------------------------------------------
@@ -486,8 +275,11 @@ object StoreSwap {
         // a bad retention value must fail BEFORE anything is staged
         val keep = GraftConf.SnapshotKeep(spark)
         val fs = fsOf(spark, versionsDir(path))
-        val (baseV, entries) = latest(fs, path)
+        val (baseV, entries) = latest(fs, manifests(fs, path))
           .getOrElse((-1, Map.empty[String, Seq[Long]]))
+        // a new store is on the protocol before anything is staged, so a
+        // crash of its first commit leaves a store [[open]] accepts
+        if (baseV < 0) fs.create(protocolMarker(path), true).close()
         val t = new Txn(baseV, entries)
         activeTxn.get(path) = t
         val result =
@@ -520,7 +312,7 @@ object StoreSwap {
     * GC. */
   private def publish(spark: SparkSession, fs: FileSystem, path: String,
                       t: Txn, keep: Int): Unit = {
-    writeManifest(fs, path, StoreFamily, t.baseV + 1,
+    writeManifest(fs, path, t.baseV + 1,
       t.entries + (ProtocolKey -> Seq(Protocol.toLong)))
     gc(fs, path, keep)
   }
@@ -549,14 +341,10 @@ object StoreSwap {
     * (reserved entries — the batch ledgers — carry through, so a
     * mid-stream full rewrite can't re-apply a redelivered batch).
     * Readers snapshotted on the old manifest keep their gens through
-    * the grace window. A legacy live dir of the same name, kept by the
-    * migration for in-flight readers, is retired here. */
+    * the grace window. */
   def overwriteDir(spark: SparkSession, path: String, dataDir: String,
                    partCol: String, df: DataFrame,
                    sortCols: Seq[Column]): Unit = transact(spark, path) {
-    val live = new Path(s"$path/$dataDir")
-    val fs = fsOf(spark, live)
-    if (fs.exists(live)) fs.delete(live, true)
     stageAndCommit(spark, path, dataDir, partCol, df, sortCols)(
       replaceAll(dataDir))
   }
@@ -667,22 +455,19 @@ object StoreSwap {
     val pfx = dataDir + "/"
     def gensOf(m: Map[String, Seq[Long]]) =
       m.collect { case (k, gs) if k.startsWith(pfx) => gs }.flatten
-    val fromManifests = manifests(fs, path, StoreFamily)
+    val fromManifests = manifests(fs, path)
       .flatMap { case (_, p) => gensOf(readManifest(fs, p)) }
-    val root = new Path(s"$path/$dataDir.gens")
-    val fromDisk =
-      if (fs.exists(root)) fs.listStatus(root).toSeq
-        .flatMap(s => s.getPath.getName.stripPrefix("g").toLongOption)
-      else Seq.empty[Long]
+    val fromDisk = children(fs, new Path(s"$path/$dataDir.gens"))
+      .flatMap(_.getName.stripPrefix("g").toLongOption)
     (fromManifests ++ gensOf(current) ++ fromDisk).foldLeft(-1L)(math.max) + 1
   }
 
   /** Drop manifests beyond the grace window, then, PER dataDir the
     * kept manifests reference, delete unreferenced generation dirs. */
   private def gc(fs: FileSystem, path: String, keep: Int): Unit = {
-    manifests(fs, path, StoreFamily).dropRight(keep + 1)
+    manifests(fs, path).dropRight(keep + 1)
       .foreach { case (_, p) => fs.delete(p, false) }
-    val kept = manifests(fs, path, StoreFamily).map { case (_, p) =>
+    val kept = manifests(fs, path).map { case (_, p) =>
       readManifest(fs, p) }
     // NOTE: each manifest map must be flattened to a Seq BEFORE
     // collecting (dataDir, gens) pairs — collect on a Map would key the
@@ -693,13 +478,10 @@ object StoreSwap {
       })
       .groupBy(_._1).map { case (d, xs) => d -> xs.flatMap(_._2).toSet }
     byDir.foreach { case (d, live) =>
-      val root = new Path(s"$path/$d.gens")
-      if (fs.exists(root))
-        fs.listStatus(root)
-          .map(_.getPath)
-          .filter(p => p.getName.startsWith("g") &&
-            p.getName.stripPrefix("g").toLongOption.exists(!live.contains(_)))
-          .foreach(p => fs.delete(p, true))
+      children(fs, new Path(s"$path/$d.gens"))
+        .filter(p => p.getName.startsWith("g") &&
+          p.getName.stripPrefix("g").toLongOption.exists(!live.contains(_)))
+        .foreach(p => fs.delete(p, true))
     }
   }
 
@@ -731,19 +513,20 @@ object StoreSwap {
                    path: String): Option[(Int, Map[String, Seq[Long]])] =
     activeTxn.get.get(path) match {
       case Some(t) => Some((t.baseV, t.entries))
-      case None => latest(fsOf(spark, versionsDir(path)), path)
+      case None =>
+        val (fs, all) = openManifests(spark, path)
+        latest(fs, all)
     }
 
-  private def latest(fs: FileSystem,
-                     path: String): Option[(Int, Map[String, Seq[Long]])] =
-    manifests(fs, path, StoreFamily).lastOption
-      .map { case (v, p) => (v, readManifest(fs, p)) }
+  /** The newest of `all` (from [[manifests]]) and its entries. */
+  private def latest(fs: FileSystem, all: Seq[(Int, Path)])
+      : Option[(Int, Map[String, Seq[Long]])] =
+    all.lastOption.map { case (v, p) => (v, readManifest(fs, p)) }
 
   /** Streaming batch ids already committed into `dataDir`'s stream —
     * the tail window of [[BatchLedgerKeep]] most-recent ids, read from
     * the current view (one file read, atomic with the data it
-    * acknowledges). A store-wide ledger of protocol 1 was split per
-    * dataDir by the upgrade ([[open]]). */
+    * acknowledges). */
   def committedBatches(spark: SparkSession, path: String,
                        dataDir: String): Set[Long] =
     view(spark, path)
@@ -772,27 +555,19 @@ object StoreSwap {
     * the current view (None when the store has no such artifact, e.g.
     * no band index), or of the pinned manifest `version`. The writer of
     * an artifact records its constants in the same commit as the data
-    * ([[putStoreMeta]]), and the upgrade ([[open]]) seeded those of
-    * older stores, so this is a manifest lookup and runs no Spark job.
-    * A PINNED manifest without the constant fails with a named
-    * `IllegalArgumentException`: either the version predates the
-    * store's upgrade to protocol 2 (a protocol-1 manifest did not
-    * always record the constants), or the artifact did not exist at
-    * that version. */
+    * ([[putStoreMeta]]), so this is a manifest lookup and runs no Spark
+    * job. A PINNED manifest without the constant fails with a named
+    * `IllegalArgumentException`: the artifact did not exist at that
+    * version. */
   def layoutConstant(spark: SparkSession, path: String, name: String,
                      version: Option[Int] = None): Option[Long] = {
     val key = storeMetaKey(name)
     val entries = entriesAt(spark, path, name, version)
     version.filterNot(_ => entries.contains(key)).foreach { v =>
       throw new IllegalArgumentException(s"$path v$v records no layout" +
-        s" constant `$name`: " + (
-        if (!entries.contains(ProtocolKey))
-          "the version predates the store's upgrade to protocol" +
-            s" $Protocol, and its constants were not recorded before it." +
-            " Re-pin at a version from after the upgrade"
-        else "the artifact it describes did not exist at that version" +
-          " (it was built later). Re-pin at a version from after it was" +
-          " built"))
+        s" constant `$name`: the artifact it describes did not exist at" +
+        " that version (it was built later). Re-pin at a version from" +
+        " after it was built")
     }
     entries.get(key).map {
       case Seq(v) => v
@@ -814,16 +589,6 @@ object StoreSwap {
     putStoreMeta(spark, path, Map(BucketsKey -> Seq(buckets.toLong)))
 
   private val BucketsKey = "buckets"
-
-  /** Where stores written before the layout constants moved into the
-    * manifest kept each one: a one-row parquet sidecar under the store
-    * path, and its column. Read only by the upgrade ([[open]]). */
-  private val LegacySidecars: Map[String, (String, String)] = Map(
-    BucketsKey -> ("meta", "buckets"),
-    "shingles.n" -> ("shingles_meta", "n"),
-    "bands.b" -> ("bands_meta", "bands"),
-    "bands.r" -> ("bands_meta", "rows_per_band"),
-    "bands.idx" -> ("bands_meta", "idx_buckets"))
 
   /** The current (version, bucketDir → gens) view of `dataDir` — its
     * slice of the store manifest — or None when the dataDir holds no
@@ -860,11 +625,10 @@ object StoreSwap {
     * the knob BEFORE the mutations whose pre-states must stay
     * readable. */
   def snapshotVersions(spark: SparkSession, path: String): Seq[Int] =
-    manifests(fsOf(spark, versionsDir(path)), path, StoreFamily).map(_._1)
+    openManifests(spark, path)._2.map(_._1)
 
   /** A retained manifest `version`'s entries, or a fail-fast error
-    * naming the retained window (and, for versions below it, the
-    * migration cutover). */
+    * naming the retained window. */
   private def manifestAt(spark: SparkSession, path: String,
                          dataDir: String,
                          version: Int): Map[String, Seq[Long]] =
@@ -875,24 +639,12 @@ object StoreSwap {
   private def retainedManifest(spark: SparkSession, path: String,
                                what: String,
                                version: Int): Map[String, Seq[Long]] = {
-    val fs = fsOf(spark, versionsDir(path))
-    val all = manifests(fs, path, StoreFamily)
+    val (fs, all) = openManifests(spark, path)
     val p = all.collectFirst { case (v, mp) if v == version => mp }
-      .getOrElse {
-        val hint =
-          if (all.headOption.exists(version < _._1))
-            " — it was either GC'd past graft.store.snapshotKeep or" +
-              " PREDATES this store's migration cutover (per-dataDir" +
-              " history does not carry across migration; the first" +
-              " migrated manifest is numbered above every older version" +
-              " so old numbers fail here instead of aliasing. Runbook:" +
-              " restore from archive or re-run the producing mutation)"
-          else
-            " (raise graft.store.snapshotKeep before mutating to widen" +
-              " the time-travel window)"
-        sys.error(s"$path/$what has no retained manifest" +
-          s" v$version — retained: ${all.map(_._1).mkString(",")}" + hint)
-      }
+      .getOrElse(sys.error(s"$path/$what has no retained manifest" +
+        s" v$version — retained: ${all.map(_._1).mkString(",")} (raise" +
+        " graft.store.snapshotKeep before mutating to widen the" +
+        " time-travel window)"))
     readManifest(fs, p)
   }
 
@@ -986,13 +738,11 @@ object StoreSwap {
 
   // ---- manifest files --------------------------------------------------------
 
-  private val BatchesKey = "#batches"
-
   /** Ledger key for one dataDir's batch stream: the manifest is
     * store-wide, so the dataDir goes INTO the key — independent streams
     * with overlapping batch ids never alias. */
   private def unifiedBatchesKey(dataDir: String): String =
-    s"$BatchesKey:$dataDir"
+    s"#batches:$dataDir"
 
   private def storeMetaKey(name: String): String = s"#meta:$name"
 
@@ -1008,9 +758,6 @@ object StoreSwap {
     * generation GC skip them. */
   private def isReservedKey(k: String): Boolean = k.startsWith("#")
 
-  private def hasBuckets(all: Map[String, Seq[Long]], dataDir: String): Boolean =
-    all.keys.exists(_.startsWith(dataDir + "/"))
-
   /** A dataDir's slice of the store entries: its buckets, keyed by the
     * bare partDir. */
   private def sliceDataDir(all: Map[String, Seq[Long]],
@@ -1019,17 +766,32 @@ object StoreSwap {
     all.collect { case (k, v) if k.startsWith(pfx) => k.stripPrefix(pfx) -> v }
   }
 
-  /** Parsed manifests of `family`, ascending by version. */
-  private def manifests(fs: FileSystem, path: String,
-                        family: String): Seq[(Int, Path)] = {
-    val vd = versionsDir(path)
-    if (!fs.exists(vd)) return Seq.empty
-    val prefix = family + ".v"
-    fs.listStatus(vd).toSeq
-      .map(_.getPath)
-      .filter(_.getName.startsWith(prefix))
+  /** The entries of directory `dir`; none when it does not exist. */
+  private def children(fs: FileSystem, dir: Path): Seq[Path] =
+    try fs.listStatus(dir).toSeq.map(_.getPath)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** Parsed store manifests, ascending by version. */
+  private def manifests(fs: FileSystem, path: String): Seq[(Int, Path)] =
+    manifestsIn(children(fs, versionsDir(path)))
+
+  private def manifestsIn(files: Seq[Path]): Seq[(Int, Path)] = {
+    val prefix = StoreFamily + ".v"
+    files.filter(_.getName.startsWith(prefix))
       .flatMap(p => p.getName.stripPrefix(prefix).toIntOption.map(_ -> p))
       .sortBy(_._1)
+  }
+
+  /** [[manifests]] for a read: the one listing of `_v` also shows the
+    * protocol marker, so a protocol-2 store pays no separate [[open]]
+    * check, and any other store goes through it. */
+  private def openManifests(spark: SparkSession,
+                            path: String): (FileSystem, Seq[(Int, Path)]) = {
+    val fs = fsOf(spark, versionsDir(path))
+    val files = children(fs, versionsDir(path))
+    if (!files.exists(_.getName == protocolMarker(path).getName))
+      open(spark, path)
+    (fs, manifestsIn(files))
   }
 
   /** Manifest values are LONGS: generation numbers fit comfortably in
@@ -1054,16 +816,16 @@ object StoreSwap {
     entries
   }
 
-  private def writeManifest(fs: FileSystem, path: String, family: String,
-                            v: Int, entries: Map[String, Seq[Long]]): Unit = {
+  private def writeManifest(fs: FileSystem, path: String, v: Int,
+                            entries: Map[String, Seq[Long]]): Unit = {
     fs.mkdirs(versionsDir(path))
-    val tmp = new Path(path + s"/_v/.${family}.v$v.tmp")
+    val tmp = new Path(path + s"/_v/.$StoreFamily.v$v.tmp")
     val out = fs.create(tmp, true)
     try out.write(entries.toSeq.sortBy(_._1)
       .map { case (d, gs) => s"$d|${gs.sorted.mkString(",")}" }
       .mkString("\n").getBytes("UTF-8"))
     finally out.close()
-    val dst = new Path(path + s"/_v/$family.v$v")
+    val dst = new Path(path + s"/_v/$StoreFamily.v$v")
     if (fs.exists(dst) || !fs.rename(tmp, dst))
       sys.error(s"could not commit manifest $dst — concurrent mutator?")
   }

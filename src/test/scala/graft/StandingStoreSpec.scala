@@ -87,7 +87,7 @@ class StandingStoreSpec extends SparkSpec {
             .map(f => s"g$g/${f.getName}")).sorted
       }.toMap
 
-  test("semanticJudgeStoreAt: pinned replay ignores post-pin members AND codebook; per-dataDir stores refused") {
+  test("semanticJudgeStoreAt: pinned replay ignores post-pin members AND codebook") {
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
     val path = Fixtures.tempDir("graft-store-").resolve("sj").toString
     Similarity.writeStandingStore(assigned(corpus(), cents), path,
@@ -597,77 +597,6 @@ class StandingStoreSpec extends SparkSpec {
     }
   }
 
-  test("a swap committed but not applied (post-manifest crash) rolls forward on read") {
-    val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
-    val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    LegacyStores.standingStore(assigned(corpus(), cents), path, "cluster", 8)
-    val liveBuckets = spark.read.parquet(path + "/data")
-      .select("c_bucket").distinct().collect().map(_.getInt(0)).sorted
-    assert(liveBuckets.length == 2) // two blobs → two clusters → two buckets
-    val (bSurvive, bEmpty) = (liveBuckets(0), liveBuckets(1))
-    // the legacy layout a writer left when it crashed after committing a
-    // swap: replacement content staged for one bucket, the other
-    // recorded as emptied, `_pending_swap` down, swap not applied
-    LegacyStores.pendingSwap(path, "c_bucket", Seq(bSurvive), Seq(bEmpty),
-      Seq((9999L, Seq(1f, 1f, 1f, 1f), bSurvive.toLong, 2.0))
-        .toDF("vec_id", "embedding", "cluster", "nrm")
-        .withColumn("c_bucket", lit(bSurvive)))
-    // the first read rolls the commit forward, then migrates
-    val (df, _) = Similarity.readStandingStore(spark, path)
-    val rows = df.select("vec_id", "c_bucket").collect()
-    assert(rows.length == 1 && rows.head.getLong(0) == 9999L)
-    Seq("_pending_swap", ".staging", "data").foreach(d =>
-      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(path, d)),
-        s"$d survived the migration"))
-    assert(!listFiles(path, "data").contains(s"c_bucket=$bEmpty"))
-    // idempotent: a second open finds nothing to do
-    val v = StoreSwap.snapshotVersions(spark, path)
-    StoreSwap.open(spark, path)
-    assert(StoreSwap.snapshotVersions(spark, path) == v)
-  }
-
-  /** A store in the legacy layout with a write-once codebook and a PQ
-    * triple in live dirs, copied from a store built over the same data
-    * (returned second). */
-  private def legacyPqStore(): (String, String) = {
-    val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
-    val ref = Fixtures.tempDir("graft-store-").resolve("ref").toString
-    Similarity.writeStandingStore(assigned(corpus(), cents), ref,
-      "cluster", buckets = 8)
-    Similarity.writeCodebook(spark, ref, cents)
-    Similarity.writePqSidecar(spark, ref, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
-    val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    LegacyStores.standingStore(assigned(corpus(), cents), path, "cluster", 8)
-    LegacyStores.flatDir(
-      StoreSwap.readDir(spark, ref, "codebook", "part").drop("part"),
-      path, "codebook")
-    LegacyStores.pqTriple(spark, ref, path)
-    (path, ref)
-  }
-
-  test("a committed sidecar-directory swap (4th manifest line) recovers into pq_codes") {
-    val (path, _) = legacyPqStore()
-    val liveBuckets = spark.read.parquet(path + "/pq_codes")
-      .select("c_bucket").distinct().collect().map(_.getInt(0)).sorted
-    val b = liveBuckets.head
-    // a crashed legacy CODE-sidecar mutation: replacement staged for one
-    // code bucket, manifest names pq_codes as the target directory
-    LegacyStores.pendingSwap(path, "c_bucket", Seq(b), Seq.empty,
-      Seq((9999L, 123L, Seq(0, 1))).toDF("id", "cluster", "codes")
-        .withColumn("c_bucket", lit(b)), "pq_codes")
-    StoreSwap.open(spark, path)
-    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
-    // the staged row replaced bucket b's codes; other buckets untouched;
-    // the DATA directory was not touched at all
-    assert(codes.filter(col("c_bucket") === b)
-      .collect().map(_.getLong(0)).toSeq == Seq(9999L))
-    assert(codes.filter(col("c_bucket") =!= b).count() > 0)
-    assert(Similarity.readStandingStore(spark, path)._1.count() == 40)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_pending_swap")))
-  }
-
   test("a pre-commit crash (orphan staging, no manifest) leaves the store untouched") {
     val cents = Similarity.trainCentroids(corpus(), "vec_id", "embedding", 2, 2)
     val path = Fixtures.tempDir("graft-store-").resolve("s").toString
@@ -730,15 +659,12 @@ class StandingStoreSpec extends SparkSpec {
 
   // ---- writer lease: the single-mutator contract, enforced ----------
 
-  private def builtStore(legacyLayout: Boolean = false): String = {
+  private def builtStore(): String = {
     val base = corpus()
     val cents = Similarity.trainCentroids(base, "vec_id", "embedding", 2, 2)
     val path = Fixtures.tempDir("graft-store-").resolve("s").toString
-    if (legacyLayout)
-      LegacyStores.standingStore(assigned(base, cents), path, "cluster", 8)
-    else
-      Similarity.writeStandingStore(assigned(base, cents), path,
-        "cluster", buckets = 8)
+    Similarity.writeStandingStore(assigned(base, cents), path,
+      "cluster", buckets = 8)
     path
   }
 
@@ -804,46 +730,6 @@ class StandingStoreSpec extends SparkSpec {
     assert(leftovers.isEmpty, s"lease residue: ${leftovers.mkString(",")}")
   }
 
-  test("a read path refuses to roll a pending swap forward under a live foreign lease") {
-    val path = builtStore(legacyLayout = true)
-    // a legacy writer MID-COMMIT: manifest down, lease live. A reader
-    // migrating the store would race the writer's own apply (delete a
-    // just-swapped dir, then fail the rename) — it must refuse instead.
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_pending_swap"), "c_bucket\n\n\ndata")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "_writer_lease"),
-      "live-writer@elsewhere".getBytes("UTF-8"))
-    val e = intercept[RuntimeException] {
-      Similarity.readStandingStore(spark, path)
-    }
-    assert(e.getMessage.contains("mid-commit"))
-    // once the lease is released (writer finished its own apply — here
-    // simulated by clearing both), the read proceeds
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_writer_lease"))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_pending_swap"))
-    assert(Similarity.readStandingStore(spark, path)._1.count() == 40)
-  }
-
-  test("a flavored read refuses a pending PQ sidecar swap under a live foreign lease") {
-    val (path, _) = legacyPqStore()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(path, "_pending_pq"), "pq sidecar swap\n")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(path, "_writer_lease"),
-      "live-writer@elsewhere".getBytes("UTF-8"))
-    val queries = corpus().filter(col("vec_id") < 2)
-    val e = intercept[RuntimeException] {
-      Similarity.pqTopKStore(spark, path, queries, "vec_id", "embedding",
-        m = 2, dsub = 2, k = 3, nProbe = 2).collect()
-    }
-    assert(e.getMessage.contains("mid-commit"))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_writer_lease"))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(path, "_pending_pq"))
-    assert(Similarity.pqTopKStore(spark, path, queries, "vec_id",
-      "embedding", m = 2, dsub = 2, k = 3, nProbe = 2).count() > 0)
-  }
-
   test("a writer whose lease was stale-broken does not release the new holder's lease") {
     val path = Fixtures.tempDir("graft-lease-").resolve("s").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path))
@@ -860,32 +746,5 @@ class StandingStoreSpec extends SparkSpec {
     assert(new String(java.nio.file.Files.readAllBytes(lp), "UTF-8").trim
       == "new-holder#other-token")
     java.nio.file.Files.delete(lp)
-  }
-
-  test("a committed-but-unapplied PQ SIDECAR swap rolls forward before any flavored read") {
-    val (path, ref) = legacyPqStore()
-    def serve(p: String) = Similarity.pqTopKStore(spark, p,
-        corpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
-        m = 2, dsub = 2, k = 5, nProbe = 2)
-      .collect().map(_.toSeq)
-    val before = serve(ref)
-    // the post-commit crash of a legacy RE-FLAVOR to rotated: all three
-    // artifacts staged, marker created, none swapped. The staged
-    // sidecar is the current one re-encoded rotated, built on a
-    // reference store.
-    Similarity.writePqSidecar(spark, ref, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4, rotate = true)
-    LegacyStores.pqTriple(spark, ref, path, pending = true)
-    // any flavored read rolls the swap forward and serves the NEW
-    // (rotated) sidecar — never the old codes under the old marker
-    val after = serve(path)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path, "_pending_pq")), "marker not consumed")
-    assert(StoreSwap.readDir(spark, path, "pq_meta", "part")
-      .head.getAs[Boolean]("rotated"), "rotated sidecar not swapped in")
-    // same store, same geometry: the rotated sidecar serves exactly
-    // what the reference's rotated sidecar serves
-    assert(after.nonEmpty && before.nonEmpty)
-    assert(after.toSeq == serve(ref).toSeq)
   }
 }

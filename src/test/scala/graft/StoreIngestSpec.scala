@@ -144,43 +144,4 @@ class StoreIngestSpec extends SparkSpec {
         "the pinned rows are not the 4-bucket layout")
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
-
-  test("a store whose manifests predate recorded layout constants reads them from its sidecars") {
-    val standing = corpus(0L until 12L)
-    val path = textStore(standing, 4)
-    val probes = corpus(Seq(3L, 40L)).select(
-      (col("doc_id") + 500L).as("doc_id"), col("text"))
-    def judge() = Dedup.lshJudgeStore(spark, path, standing, probes,
-        "doc_id", "text")
-      .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
-    val before = judge()
-    assert(before.nonEmpty, "weak scenario: the probes matched nothing")
-    // a protocol-1 store from before the constants moved into the
-    // manifest: they live only in the sidecars
-    LegacyStores.textStoreSidecars(spark, path, buckets = 4, bands = 8,
-      rowsPerBand = 2, idxBuckets = 4, shingleN = 3)
-    LegacyStores.protocol1(path, _.startsWith("#meta:"))
-    assert(StoreSwap.storeMetaAt(spark, path, "buckets").isEmpty)
-    val v1 = Dedup.signatureStoreVersions(spark, path).last
-    // open upgrades it in one version, seeding the constants
-    StoreSwap.open(spark, path)
-    assert(Dedup.signatureStoreVersions(spark, path).last == v1 + 1)
-    Seq("buckets" -> 4L, "shingles.n" -> 3L, "bands.b" -> 8L,
-        "bands.r" -> 2L, "bands.idx" -> 4L, "protocol" -> 2L).foreach {
-      case (name, v) => assert(
-        StoreSwap.storeMetaAt(spark, path, name).contains(Seq(v)), name)
-    }
-    StoreSwap.open(spark, path)
-    assert(Dedup.signatureStoreVersions(spark, path).last == v1 + 1,
-      "a second open published a version")
-    // the sidecars are not read any more
-    Seq("meta", "bands_meta", "shingles_meta").foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$path/$d")))
-    assert(Dedup.readSignatureStore(spark, path)._2 == 4)
-    assert(judge() == before)
-    Dedup.ingestBatchIntoStore(spark, path, corpus(Seq(50L)), "doc_id",
-      "text", n = 3, numHashes = 16)
-    assert(Dedup.readSignatureStore(spark, path)._1
-      .filter(col("doc_id") === 50L).count() == 16)
-  }
 }

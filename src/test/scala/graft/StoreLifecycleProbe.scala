@@ -216,7 +216,7 @@ object StoreLifecycleProbe {
     // meta/codes inside ONE StoreSwap.transact manifest rename and
     // pqTopKStoreTwoLevel resolves all three at one pinned version
     // (pqPin). `unifyMigrateSec` is the open of a store already on the
-    // manifest (the migration check); the two writes are the first and
+    // manifest (the protocol check); the two writes are the first and
     // the steady-state reader-atomic rewrite a production store runs.
     val unifyMigrateSec = t { graft.operators.StoreSwap.open(spark, store) }
     val pqWriteUnifiedCutoverSec = t {
@@ -227,9 +227,8 @@ object StoreLifecycleProbe {
       Similarity.writePqSidecar(spark, store, "vec_id", "embedding",
         m = 4, dsub = 16, ksub = 8)
     }
-    // proof the searches below resolve through the pinned triple, not
-    // the legacy live dirs: the triple is present in the unified
-    // manifest line
+    // proof the searches below resolve through the pinned triple: the
+    // triple is present in the store manifest
     val pqUnifiedVersioned = graft.operators.StoreSwap
       .latestSnapshot(spark, store, "pq_meta").nonEmpty
     val pqSearchUnifiedSec = t {

@@ -6,12 +6,16 @@ import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
-/** Store protocol 2 ([[StoreSwap.Protocol]]): every manifest records the
-  * protocol, a newer one is refused, and [[StoreSwap.open]] upgrades an
-  * older store once. Failures are injected through [[FaultFs]], a file
-  * system registered in the session conf only — which also shows that
-  * the store resolves its files through the session's Hadoop conf. */
+/** Store protocol 2 ([[StoreSwap.Protocol]]) is the floor: every
+  * manifest records the protocol, a store's first commit writes the
+  * protocol marker, and [[StoreSwap.open]] refuses every other layout —
+  * an older one or a newer one — without touching it. Failures are
+  * injected through [[FaultFs]], a file system registered in the session
+  * conf only — which also shows that the store resolves its files
+  * through the session's Hadoop conf. */
 class StoreProtocolSpec extends SparkSpec {
   import spark.implicits._
 
@@ -114,41 +118,6 @@ class StoreProtocolSpec extends SparkSpec {
     assert(java.nio.file.Files.readString(mf.toPath).contains("#meta:protocol|3"))
   }
 
-  test("a protocol-1 band index without an inventory is upgraded; forget then removes a changed doc's stale rows") {
-    val path = Fixtures.tempDir("graft-protocol-").resolve("inv").toString
-    Dedup.writeSignatureStore(sigs(docs()), path, "doc_id", buckets = 8)
-    Dedup.writeBandIndex(spark, path, "doc_id", bands = 2)
-    // re-ingest doc 0 with PREPENDED text: its signature MIN-merges to
-    // new values, and the index merge leaves old + fresh rows
-    val changed = docs().filter(col("doc_id") === 0L)
-      .select(col("doc_id"),
-        concat(lit("zzz qqq xyz "), col("text")).as("text"))
-    Dedup.mergeIntoSignatureStore(spark, path, sigs(changed), "doc_id")
-    Dedup.mergeIntoBandIndex(spark, path,
-      changed.select(col("doc_id")), "doc_id")
-    def doc0(dataDir: String, partCol: String) =
-      StoreSwap.readDir(spark, path, dataDir, partCol)
-        .filter(col("id") === 0L).count()
-    val rowsForDoc0 = doc0("bands", "bb_bucket")
-    assert(rowsForDoc0 > 2, // > bands ⇒ stale rows present
-      s"fixture vacuous: doc 0 has only $rowsForDoc0 band rows")
-    // a band index written before the inventory existed
-    LegacyStores.protocol1(path, _.startsWith("bands_inv/"))
-    assert(!StoreSwap.dirExists(spark, path, "bands_inv"))
-    val v = versions(path).last
-    StoreSwap.open(spark, path)
-    assert(versions(path).last == v + 1)
-    assert(doc0("bands_inv", "d_bucket") == rowsForDoc0,
-      "the upgrade did not derive the inventory from the index")
-    // the forget must find the stale rows too — their buckets are NOT
-    // derivable from the current signature, only from the inventory
-    val removed = Dedup.forgetFromBandIndex(spark, path,
-      Seq(0L).toDF("doc_id"), "doc_id")
-    assert(removed == rowsForDoc0)
-    assert(doc0("bands", "bb_bucket") == 0, "stale band rows survived")
-    assert(doc0("bands_inv", "d_bucket") == 0, "inventory rows survived")
-  }
-
   test("a signature store is built, ingested and judged through the session's Hadoop conf") {
     // a scheme registered only in the session conf, uncached, so a
     // store that builds its own Configuration cannot resolve it
@@ -173,38 +142,128 @@ class StoreProtocolSpec extends SparkSpec {
     }
   }
 
-  test("a failed upgrade rename leaves the protocol-1 store as it was; the next open upgrades it") {
-    withFaultFs {
-      val (path, local) = faultPath()
-      build(path)
-      val before = judge(path)
-      assert(before.nonEmpty, "weak scenario: the probes matched nothing")
-      // protocol 1 with a band index older than its inventory, so the
-      // upgrade stages an inventory generation before its rename
-      LegacyStores.protocol1(local, _.startsWith("bands_inv/"))
-      val vs = versions(path)
-      val data = content(path, "data", "d_bucket")
-      val bands = content(path, "bands", "bb_bucket")
-      FaultFs.failRenameTo.set(name => isManifest(name))
-      intercept[RuntimeException](StoreSwap.open(spark, path))
-      assert(FaultFs.failRenameTo.get == null, "no manifest rename was tried")
-      assert(versions(path) == vs)
-      assert(new java.io.File(s"$local/_v/_open").exists &&
-        !new java.io.File(s"$local/_v/_protocol2").exists)
-      assert(content(path, "data", "d_bucket") == data)
-      assert(content(path, "bands", "bb_bucket") == bands)
-      assert(!StoreSwap.dirExists(spark, path, "bands_inv"))
-      val orphans = new java.io.File(s"$local/bands_inv.gens").list().toSeq
-      assert(orphans.nonEmpty)
-      StoreSwap.open(spark, path)
-      assert(versions(path).last == vs.last + 1)
-      assert(new java.io.File(s"$local/_v/_protocol2").exists &&
-        !new java.io.File(s"$local/_v/_open").exists)
-      assert(judge(path) == before)
-      val live = new java.io.File(s"$local/bands_inv.gens").list().toSeq
-      assert(live.nonEmpty && live.intersect(orphans).isEmpty,
-        s"orphan inventory generations survived: ${live.intersect(orphans)}")
+  /** Every file and dir under `local`, relative to it, sorted. */
+  private def tree(local: String): Seq[String] = {
+    val root = Paths.get(local)
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.map(p => root.relativize(p).toString)
+      .toSeq.sorted
+    finally walk.close()
+  }
+
+  /** A store directory of an older graft at a fresh path: `files`
+    * (relative path → content) written as they are. */
+  private def oldStore(files: (String, String)*): String = {
+    val path = Fixtures.tempDir("graft-protocol-").resolve("old").toString
+    files.foreach { case (f, body) =>
+      val p = Paths.get(path, f)
+      Files.createDirectories(p.getParent)
+      Files.writeString(p, body)
     }
+    path
+  }
+
+  /** `open`, a live and a pinned read and two commits of `path` each
+    * raise the named refusal, which lists `entry`; no file of the store
+    * changes. */
+  private def refusedUntouched(path: String, entry: String): Unit = {
+    val before = tree(path)
+    def refused(what: String)(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains(s"store $path is not a protocol-2 store") &&
+        e.getMessage.contains(entry) &&
+        e.getMessage.contains("graft reads only protocol-2 stores"),
+        s"$what: ${e.getMessage}")
+    }
+    refused("open")(StoreSwap.open(spark, path))
+    refused("read")(Dedup.readSignatureStore(spark, path))
+    refused("pinned read")(Dedup.readSignatureStoreAt(spark, path, 0))
+    refused("merge")(Dedup.mergeIntoSignatureStore(spark, path,
+      sigs(docs().filter(col("doc_id") === 8L)), "doc_id"))
+    refused("transact")(StoreSwap.transact(spark, path) {
+      StoreSwap.putStoreMeta(spark, path, Map("x" -> Seq(1L)))
+    })
+    assert(tree(path) == before, "a refused store was changed")
+  }
+
+  private val part = "part-00000.snappy.parquet"
+
+  test("a pre-manifest store (live bucket dirs, meta, a pending swap) is refused untouched") {
+    refusedUntouched(oldStore(
+      s"data/d_bucket=0/$part" -> "", s"data/d_bucket=2/$part" -> "",
+      s"meta/$part" -> "", s".staging/d_bucket=2/$part" -> "",
+      "_pending_swap" -> "d_bucket\n2\n9\ndata"), "_pending_swap")
+  }
+
+  test("a store of per-dataDir manifests is refused untouched") {
+    refusedUntouched(oldStore(
+      s"data.gens/g3/d_bucket=0/$part" -> "",
+      "_v/data.v3" -> "d_bucket=0|3"), "_v/data.v3")
+  }
+
+  test("a protocol-1 store (_v/_open, no protocol entry) is refused untouched") {
+    refusedUntouched(oldStore(
+      s"data.gens/g0/d_bucket=0/$part" -> "", "_v/_open" -> "",
+      "_v/store.v0" -> "#meta:buckets|8\ndata/d_bucket=0|0"), "_v/_open")
+  }
+
+  test("a store with a store-wide #batches ledger is refused untouched") {
+    refusedUntouched(oldStore(
+      s"data.gens/g0/d_bucket=0/$part" -> "",
+      "_v/store.v1" -> "#batches|5,6\ndata/d_bucket=0|0"), "_v/store.v1")
+  }
+
+  test("a new store whose first commit fails is not refused, and open on it writes nothing; the retry commits v0") {
+    val reference = Fixtures.tempDir("graft-protocol-").resolve("ref").toString
+    build(reference)
+    def write(path: String): Unit =
+      Dedup.writeSignatureStore(sigs(standing()), path, "doc_id", buckets = 4)
+    withFaultFs {
+      // the commit failed at its store.v0 rename, after the marker
+      val (path, local) = faultPath()
+      FaultFs.failRenameTo.set(name => name == "store.v0")
+      intercept[RuntimeException](write(path))
+      assert(FaultFs.failRenameTo.get == null, "no manifest rename was tried")
+      assert(versions(path).isEmpty)
+      val orphans = new java.io.File(s"$local/data.gens").list().toSeq
+      assert(orphans.nonEmpty, "the failed commit staged no generation")
+      FaultFs.writes.set(0)
+      StoreSwap.open(spark, path)
+      assert(FaultFs.writes.get == 0, s"open made ${FaultFs.writes.get} writes")
+      write(path)
+      assert(versions(path) == Seq(0))
+      assert(content(path, "data", "d_bucket") ==
+        content(reference, "data", "d_bucket"))
+      assert(new java.io.File(s"$local/data.gens").list().toSeq
+        .intersect(orphans).isEmpty, "the orphan generation survived")
+      // a crash before the marker leaves only the lease, stale by now
+      val (leased, leasedLocal) = faultPath()
+      val lp = Paths.get(leasedLocal, "_writer_lease")
+      Files.createDirectories(lp.getParent)
+      Files.writeString(lp, "dead-writer@gone")
+      Files.setLastModifiedTime(lp, java.nio.file.attribute.FileTime
+        .fromMillis(System.currentTimeMillis() - StoreSwap.DefaultLeaseStaleMs - 1000))
+      FaultFs.writes.set(0)
+      StoreSwap.open(spark, leased)
+      assert(FaultFs.writes.get == 0, s"open made ${FaultFs.writes.get} writes")
+      write(leased)
+      assert(versions(leased) == Seq(0))
+    }
+  }
+
+  test("src/main spells no file name of a pre-protocol-2 store layout") {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"no sources under ${root.toAbsolutePath}")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50)
+    val names = Seq("_pending_swap", "_pending_pq", ".staging-", "_v/_open",
+      "shingles_meta", "bands_meta")
+    val offences = files.flatMap { f =>
+      val src = new String(Files.readAllBytes(f), "UTF-8")
+      names.filter(src.contains).map(n => s"$f: spells $n")
+    }
+    assert(offences.isEmpty, offences.mkString("\n"))
   }
 
   test("a failed ingest commit rename leaves the store and its ledger at the pre-batch version") {
@@ -250,9 +309,11 @@ class StoreProtocolSpec extends SparkSpec {
 
 /** The local file system under the `faultfs:` scheme, a
   * `FilterFileSystem` over the raw local one, for tests that register it
-  * in the session conf. It counts calls ([[FaultFs.calls]]) and fails
-  * the next rename whose destination name [[FaultFs.failRenameTo]]
-  * accepts (returning false, as a failed Hadoop rename does). */
+  * in the session conf. It counts calls ([[FaultFs.calls]]) and the
+  * creates, deletes, mkdirs and renames among them ([[FaultFs.writes]]),
+  * and fails the next rename whose destination name
+  * [[FaultFs.failRenameTo]] accepts (returning false, as a failed Hadoop
+  * rename does). */
 class FaultFs extends FilterFileSystem(new RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("faultfs:///")
 }) {
@@ -270,21 +331,21 @@ class FaultFs extends FilterFileSystem(new RawLocalFileSystem {
   override def create(p: Path, permission: FsPermission, overwrite: Boolean,
                       bufferSize: Int, replication: Short, blockSize: Long,
                       progress: Progressable): FSDataOutputStream = {
-    calls.incrementAndGet()
+    calls.incrementAndGet(); writes.incrementAndGet()
     super.create(p, permission, overwrite, bufferSize, replication,
       blockSize, progress)
   }
   override def delete(p: Path, recursive: Boolean): Boolean = {
-    calls.incrementAndGet(); super.delete(p, recursive)
+    calls.incrementAndGet(); writes.incrementAndGet(); super.delete(p, recursive)
   }
   override def mkdirs(p: Path): Boolean = {
-    calls.incrementAndGet(); super.mkdirs(p)
+    calls.incrementAndGet(); writes.incrementAndGet(); super.mkdirs(p)
   }
   override def mkdirs(p: Path, permission: FsPermission): Boolean = {
-    calls.incrementAndGet(); super.mkdirs(p, permission)
+    calls.incrementAndGet(); writes.incrementAndGet(); super.mkdirs(p, permission)
   }
   override def rename(src: Path, dst: Path): Boolean = {
-    calls.incrementAndGet()
+    calls.incrementAndGet(); writes.incrementAndGet()
     val fail = failRenameTo.get
     if (fail != null && fail(dst.getName) && failRenameTo.compareAndSet(fail, null))
       false
@@ -294,6 +355,7 @@ class FaultFs extends FilterFileSystem(new RawLocalFileSystem {
 
 object FaultFs {
   val calls = new java.util.concurrent.atomic.AtomicLong
+  val writes = new java.util.concurrent.atomic.AtomicLong
   /** The next rename to a destination name this accepts fails; null
     * when no failure is armed. */
   val failRenameTo =

@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * with ONE rename ([[StoreSwap.transact]]) and any retained version is
   * a CONSISTENT snapshot of the whole store — bands, sidecar, and
   * signatures together, which is what makes historical judgment replay
-  * ([[Dedup.lshJudgeStoreAt]]) exact. Older on-disk layouts
-  * ([[LegacyStores]]) migrate once, at [[StoreSwap.open]]. */
+  * ([[Dedup.lshJudgeStoreAt]]) exact. */
 class UnifiedStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,22 +42,6 @@ class UnifiedStoreSpec extends SparkSpec {
 
   private def versions(path: String) = StoreSwap.snapshotVersions(spark, path)
 
-  /** Every dataDir of a built text store rewritten in the LEGACY layout
-    * under `path` (live partition dirs, its layout constants in sidecar
-    * metas). */
-  private def legacyTextStore(built: String, path: String): Unit = {
-    Seq("data" -> "d_bucket", "bands" -> "bb_bucket",
-        "bands_inv" -> "d_bucket", "shingles" -> "d_bucket").foreach {
-      case (d, pc) => LegacyStores.partitionDir(
-        StoreSwap.readDir(spark, built, d, pc), path, d, pc)
-    }
-    def constant(name: String) =
-      StoreSwap.layoutConstant(spark, built, name).get.toInt
-    LegacyStores.textStoreSidecars(spark, path, constant("buckets"),
-      constant("bands.b"), constant("bands.r"), constant("bands.idx"),
-      constant("shingles.n"))
-  }
-
   private def embCorpus() = (0L until 40L).map(i =>
     (i, Seq.tabulate(4)(j => ((i * 7 % 13) + j).toFloat)))
     .toDF("vec_id", "embedding")
@@ -67,125 +50,6 @@ class UnifiedStoreSpec extends SparkSpec {
     .withColumn("cluster",
       Similarity.assignCluster(col("embedding"), cents).cast("long"))
     .withColumn("nrm", Similarity.norm(col("embedding")))
-
-  private def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
-    df.select(cols.map(col): _*).orderBy(cols.map(col): _*)
-      .collect().map(_.toSeq).toSeq
-
-  test("unify is content-invariant and idempotent; later mutations commit unified") {
-    val standing = docs().filter(col("doc_id") < 4)
-    val built = buildUnified(standing)
-    // every older on-disk layout migrates at the first open: the rows a
-    // read made BEFORE migration saw, the ledger, and (for the embedding
-    // store) the codebook and the PQ triple all survive; a second open
-    // changes nothing; the next mutation bumps the one store version
-    def checkOpen(path: String, open: () => Unit): Int = {
-      open()
-      val v0 = versions(path)
-      assert(v0.nonEmpty, s"$path: migration published no manifest")
-      open()
-      assert(versions(path) == v0, "a second open changed the store")
-      v0.last
-    }
-    def legacyDir(path: String, d: String) =
-      assert(!new java.io.File(s"$path/$d").exists,
-        s"$path/$d: a partition dir stayed live after migration")
-
-    // (1) a legacy signature store: live data/bands/bands_inv/shingles
-    val sigPath = Fixtures.tempDir("graft-ustore-").resolve("sig").toString
-    legacyTextStore(built, sigPath)
-    val preSigs = sigRows(spark.read.parquet(sigPath + "/data"))
-    val preBands = rows(spark.read.parquet(sigPath + "/bands"),
-      "id", "band", "bsig")
-    val v1 = checkOpen(sigPath, () => Dedup.unifySignatureStore(spark, sigPath))
-    Seq("data", "bands", "bands_inv", "shingles").foreach(legacyDir(sigPath, _))
-    assert(sigRows(Dedup.readSignatureStore(spark, sigPath)._1) == preSigs)
-    assert(preSigs == sigRows(sigs(standing)))
-    assert(rows(StoreSwap.readDir(spark, sigPath, "bands", "bb_bucket"),
-      "id", "band", "bsig") == preBands)
-    // the band layout constants were seeded into the migration manifest
-    assert(StoreSwap.storeMetaAt(spark, sigPath, "bands.b", Some(v1))
-      .contains(Seq(2L)))
-    Dedup.mergeIntoSignatureStore(spark, sigPath,
-      sigs(docs().filter(col("doc_id") === 8L)), "doc_id")
-    assert(versions(sigPath).last == v1 + 1)
-    assert(sigRows(Dedup.readSignatureStore(spark, sigPath)._1) ==
-      sigRows(sigs(docs().filter(col("doc_id") < 4 || col("doc_id") === 8L))))
-
-    // (2) a legacy store with a committed-but-unapplied _pending_swap:
-    // bucket 0 is restaged with docs 0 and 8, bucket 3 emptied — the
-    // read before migration is the legacy roll-forward's result
-    val swapPath = Fixtures.tempDir("graft-ustore-").resolve("swap").toString
-    LegacyStores.signatureStore(sigs(standing), swapPath, "doc_id", 8)
-    val staged = sigs(docs().filter(col("doc_id").isin(0L, 8L)))
-      .withColumn("d_bucket", pmod(col("doc_id"), lit(8L)).cast("int"))
-    LegacyStores.pendingSwap(swapPath, "d_bucket", Seq(0), Seq(3), staged)
-    val preSwap = sigRows(spark.read.parquet(swapPath + "/data")
-      .filter(!col("d_bucket").isin(0, 3)).unionByName(staged))
-    checkOpen(swapPath, () => Dedup.readSignatureStore(spark, swapPath))
-    Seq("_pending_swap", ".staging", "data").foreach(legacyDir(swapPath, _))
-    assert(sigRows(Dedup.readSignatureStore(spark, swapPath)._1) == preSwap)
-    assert(preSwap == sigRows(sigs(docs().filter(col("doc_id").isin(0L, 1L, 2L, 8L)))))
-
-    // (3) a per-dataDir versioned store whose data carries a #batches
-    // ledger: the ledger survives, namespaced, and the store numbering
-    // starts above the per-dataDir version
-    val pdPath = Fixtures.tempDir("graft-ustore-").resolve("pd").toString
-    LegacyStores.signatureStore(sigs(standing), pdPath, "doc_id", 8)
-    LegacyStores.perDataDirVersioned(pdPath, "data", 3, batches = Seq(5L, 6L))
-    val prePd = sigRows(spark.read.parquet(pdPath + "/data.gens/g3"))
-    val vPd = checkOpen(pdPath, () => Dedup.unifySignatureStore(spark, pdPath))
-    assert(vPd > 3, s"store numbering must start above v3: $vPd")
-    assert(sigRows(Dedup.readSignatureStore(spark, pdPath)._1) == prePd)
-    assert(StoreSwap.committedBatches(spark, pdPath, "data") == Set(5L, 6L))
-    assert(!new java.io.File(s"$pdPath/_v/data.v3").exists,
-      "the per-dataDir manifest family was not retired")
-    Dedup.ingestBatchIntoStore(spark, pdPath,
-      docs().filter(col("doc_id") === 8L), "doc_id", "text",
-      batchId = Some(5L), n = 3, numHashes = 4)
-    assert(versions(pdPath).last == vPd, "a migrated ledger lost batch 5")
-
-    // (4) a legacy embedding store with a write-once codebook, a PQ
-    // triple, and a committed-but-unapplied _pending_pq re-flavoring
-    // it to rotated
-    val cents = Similarity.trainCentroids(embCorpus(), "vec_id",
-      "embedding", 2, 2)
-    def refStore(rotate: Boolean): String = {
-      val p = Fixtures.tempDir("graft-ustore-").resolve("ref").toString
-      Similarity.writeStandingStore(embAssigned(cents), p, "cluster",
-        buckets = 8)
-      Similarity.writeCodebook(spark, p, cents)
-      Similarity.writePqSidecar(spark, p, "vec_id", "embedding",
-        m = 2, dsub = 2, ksub = 4, rotate = rotate)
-      p
-    }
-    val (plain, rotated) = (refStore(false), refStore(true))
-    val embPath = Fixtures.tempDir("graft-ustore-").resolve("emb").toString
-    LegacyStores.standingStore(embAssigned(cents), embPath, "cluster", 8)
-    LegacyStores.flatDir(
-      StoreSwap.readDir(spark, plain, "codebook", "part").drop("part"),
-      embPath, "codebook")
-    LegacyStores.pqTriple(spark, plain, embPath)
-    LegacyStores.pqTriple(spark, rotated, embPath, pending = true)
-    val preData = rows(spark.read.parquet(embPath + "/data"),
-      "vec_id", "cluster")
-    val preCodes = rows(
-      StoreSwap.readDir(spark, rotated, "pq_codes", "c_bucket"),
-      "id", "cluster", "codes")
-    checkOpen(embPath, () => StoreSwap.open(spark, embPath))
-    legacyDir(embPath, "_pending_pq")
-    assert(rows(Similarity.readStandingStore(spark, embPath)._1,
-      "vec_id", "cluster") == preData)
-    assert(Similarity.readCodebook(spark, embPath) == cents)
-    assert(rows(StoreSwap.readDir(spark, embPath, "pq_codes", "c_bucket"),
-      "id", "cluster", "codes") == preCodes)
-    assert(StoreSwap.readDir(spark, embPath, "pq_meta", "part")
-      .head.getAs[Boolean]("rotated"), "the pending re-flavor was lost")
-    def served(p: String) = rows(Similarity.pqTopKStore(spark, p,
-        embCorpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
-        m = 2, dsub = 2, k = 5, nProbe = 2), "query_id", "rank", "neighbor_id")
-    assert(served(embPath) == served(rotated))
-  }
 
   test("transact publishes a composed ingest (3 merges + ack) as ONE version; failure leaves the pre-txn state") {
     val standing = docs().filter(col("doc_id") < 4 && col("doc_id") =!= 2L)
@@ -248,19 +112,6 @@ class UnifiedStoreSpec extends SparkSpec {
         probe, "doc_id", "text", v0, n = 3, numHashes = 4))
       assert(replay == liveVerdict,
         "pinned replay diverged from the verdict at that version")
-      // a per-dataDir versioned layout migrates at open; its version
-      // numbers never alias a store version — asOf one of them fails
-      // fast with the cutover message instead of replaying signatures
-      // without their bands
-      val perDir = Fixtures.tempDir("graft-ustore-").resolve("pd").toString
-      legacyTextStore(path, perDir)
-      Seq("data", "bands", "bands_inv", "shingles").foreach(d =>
-        LegacyStores.perDataDirVersioned(perDir, d, 0))
-      val ex = intercept[RuntimeException] {
-        Dedup.lshJudgeStoreAt(spark, perDir, probe, "doc_id", "text",
-          0, n = 3, numHashes = 4)
-      }
-      assert(ex.getMessage.contains("cutover"), ex.getMessage)
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
@@ -352,56 +203,6 @@ class UnifiedStoreSpec extends SparkSpec {
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
-  test("pre-migration version numbers fail fast with the cutover message (never alias)") {
-    val standing = docs().filter(col("doc_id") < 4)
-    val path = Fixtures.tempDir("graft-ustore-").resolve("cut").toString
-    spark.conf.set("graft.store.snapshotKeep", "8")
-    try {
-      // a per-dataDir layout at v1: pre-migration history has the
-      // version numbers 0 and 1 a user could remember
-      LegacyStores.signatureStore(
-        sigs(docs().filter(col("doc_id") < 4 || col("doc_id") === 8L)),
-        path, "doc_id", 8)
-      LegacyStores.perDataDirVersioned(path, "data", 1)
-      Dedup.unifySignatureStore(spark, path)
-      val unifiedVs = versions(path)
-      assert(unifiedVs.head > 1,
-        s"unified numbering must start above pre-migration versions:" +
-          s" $unifiedVs")
-      // the pre-migration v0/v1 must not resolve to ANY snapshot —
-      // fail fast, cutover named, runbook included
-      Seq(0, 1).foreach { v =>
-        val ex = intercept[RuntimeException] {
-          StoreSwap.readVersionedAt(spark, path, "data", "d_bucket", v)
-        }
-        assert(ex.getMessage.contains("cutover"), ex.getMessage)
-        assert(ex.getMessage.contains("Runbook"), ex.getMessage)
-      }
-      // the live unified read is intact
-      assert(Dedup.readSignatureStore(spark, path)._1
-        .select("doc_id").distinct().count() == 5)
-    } finally spark.conf.unset("graft.store.snapshotKeep")
-  }
-
-  test("a crashed migration's completed live->g0 rename is adopted, not orphaned") {
-    val standing = docs().filter(col("doc_id") < 4)
-    val before = sigRows(sigs(standing))
-    val path = Fixtures.tempDir("graft-ustore-").resolve("crash").toString
-    LegacyStores.signatureStore(sigs(standing), path, "doc_id", 8)
-    // simulate the predecessor's crash window: the live->g0 rename
-    // completed but store.v<N> was never written — a re-run must adopt
-    // g0 as the dataDir's state, not commit a manifest without it
-    val live = new java.io.File(s"$path/data")
-    val g0 = new java.io.File(s"$path/data.gens/g0")
-    assert(g0.getParentFile.mkdirs())
-    assert(live.renameTo(g0))
-    Dedup.unifySignatureStore(spark, path)
-    assert(versions(path).nonEmpty)
-    assert(!new java.io.File(s"$path/data").exists)
-    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == before,
-      "re-run after the crashed migration orphaned the dataDir's data")
-  }
-
   test("unified ledgers are namespaced per dataDir: overlapping batch ids don't alias") {
     val path = buildUnified(docs().filter(col("doc_id") < 4))
     StoreSwap.ackBatch(spark, path, "data", 5L)
@@ -413,42 +214,6 @@ class UnifiedStoreSpec extends SparkSpec {
     StoreSwap.ackBatch(spark, path, "bands", 5L)
     assert(StoreSwap.committedBatches(spark, path, "bands") == Set(5L))
     assert(StoreSwap.committedBatches(spark, path, "data") == Set(5L))
-  }
-
-  test("the one-time PQ cutover keeps legacy dirs for in-flight readers; the next rewrite retires them") {
-    val cents = Similarity.trainCentroids(embCorpus(), "vec_id",
-      "embedding", 2, 2)
-    val ref = Fixtures.tempDir("graft-ustore-").resolve("ref").toString
-    Similarity.writeStandingStore(embAssigned(cents), ref, "cluster",
-      buckets = 8)
-    Similarity.writeCodebook(spark, ref, cents)
-    Similarity.writePqSidecar(spark, ref, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
-    // a LEGACY store whose PQ sidecar lives in live dirs
-    val path = Fixtures.tempDir("graft-ustore-").resolve("pqcut").toString
-    LegacyStores.standingStore(embAssigned(cents), path, "cluster", 8)
-    LegacyStores.flatDir(
-      StoreSwap.readDir(spark, ref, "codebook", "part").drop("part"),
-      path, "codebook")
-    LegacyStores.pqTriple(spark, ref, path)
-    def legacyDirs() = Seq("pq_codebook", "pq_meta", "pq_codes")
-      .filter(d => new java.io.File(s"$path/$d").exists)
-    assert(legacyDirs().size == 3)
-    // the migration at open recommits the triple as versioned dataDirs
-    // but must NOT delete the legacy dirs — a reader that resolved them
-    // just before the commit may still be scanning
-    def serve() = Similarity.pqTopKStore(spark, path,
-        embCorpus().filter(col("vec_id") === 1L), "vec_id", "embedding",
-        m = 2, dsub = 2, k = 5, nProbe = 2)
-    assert(serve().count() == 5)
-    assert(legacyDirs().size == 3,
-      "migration deleted legacy dirs under a possible reader")
-    assert(StoreSwap.dirExists(spark, path, "pq_codes"))
-    // the NEXT rewrite retires them (pre-migration readers are gone)
-    Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
-      m = 2, dsub = 2, ksub = 4)
-    assert(legacyDirs().isEmpty, "stale legacy dirs survived a rewrite")
-    assert(serve().count() == 5)
   }
 
   test("signature-store CDC: doc-level insert/update/delete, unchanged buckets never read") {
@@ -532,59 +297,6 @@ class UnifiedStoreSpec extends SparkSpec {
       }
       assert(versions(path) == vs, "a refused commit changed the store")
     } finally spark.conf.unset("graft.store.snapshotKeep")
-  }
-
-  test("a store unified before the ledger was namespaced keeps its exactly-once window") {
-    // ADVICE r14: committedBatches read ONLY the namespaced
-    // '#batches:<dataDir>' key — a store whose manifest still carries
-    // the pre-namespacing store-wide '#batches' silently lost its
-    // ledger on upgrade and re-applied a redelivered batch. Such a
-    // store is protocol 1; the upgrade to protocol 2 splits the ledger.
-    val standing = docs().filter(col("doc_id") < 4)
-    val path = buildUnified(standing)
-    Dedup.ingestBatchIntoStore(spark, path,
-      docs().filter(col("doc_id") === 8L), "doc_id", "text",
-      batchId = Some(7L), n = 3, numHashes = 4)
-    // rewrite the latest manifest to the PRE-NAMESPACING layout
-    def latestManifest() = new java.io.File(s"$path/_v").listFiles()
-      .filter(_.getName.startsWith("store.v"))
-      .maxBy(_.getName.stripPrefix("store.v").toInt)
-    val mf = latestManifest()
-    val body = new String(
-      java.nio.file.Files.readAllBytes(mf.toPath), "UTF-8")
-    assert(body.contains("#batches:data|"), body)
-    java.nio.file.Files.write(mf.toPath,
-      body.replace("#batches:data|", "#batches|").getBytes("UTF-8"))
-    // the raw rewrite invalidates Hadoop LocalFileSystem's checksum
-    // sidecar; drop it (a real pre-namespacing store's crc matches)
-    new java.io.File(mf.getParentFile, s".${mf.getName}.crc").delete()
-    LegacyStores.protocol1(path)
-    // the upgrade gives every dataDir the store-wide window as its own
-    StoreSwap.open(spark, path)
-    val upgraded = java.nio.file.Files.readAllLines(latestManifest().toPath)
-    assert(!upgraded.contains("#batches|7"), upgraded)
-    Seq("data", "bands", "bands_inv", "shingles").foreach(d =>
-      assert(upgraded.contains(s"#batches:$d|7"), upgraded))
-    assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L))
-    val preV = versions(path).last
-    // a redelivered pre-upgrade batch is skipped, not re-applied
-    Dedup.ingestBatchIntoStore(spark, path,
-      docs().filter(col("doc_id") === 8L), "doc_id", "text",
-      batchId = Some(7L), n = 3, numHashes = 4)
-    assert(versions(path).last == preV,
-      "redelivered batch was re-applied after the namespacing upgrade")
-    // the first post-upgrade ack extends the window (union, not
-    // replacement)
-    Dedup.ingestBatchIntoStore(spark, path,
-      docs().filter(col("doc_id") === 2L), "doc_id", "text",
-      batchId = Some(8L), n = 3, numHashes = 4)
-    assert(StoreSwap.committedBatches(spark, path, "data") == Set(7L, 8L))
-    // and batch 7 redelivery is STILL a no-op after the migration
-    val v2 = versions(path).last
-    Dedup.ingestBatchIntoStore(spark, path,
-      docs().filter(col("doc_id") === 8L), "doc_id", "text",
-      batchId = Some(7L), n = 3, numHashes = 4)
-    assert(versions(path).last == v2)
   }
 
   test("a non-local return unwinding a dirty txn fails loudly instead of dropping the work") {
@@ -674,30 +386,5 @@ class UnifiedStoreSpec extends SparkSpec {
       assert(ex.getMessage.contains("did not exist at that version"),
         ex.getMessage)
     } finally spark.conf.unset("graft.store.snapshotKeep")
-  }
-
-  test("unifyStandingStore cleans a stale legacy codebook dir left by a crash after the versioned commit") {
-    // a legacy codebook dir next to a versioned codebook — left by a
-    // migration (kept for in-flight readers) or by a crash — is never
-    // read, and the next codebook write retires it
-    val cents = Similarity.trainCentroids(embCorpus(), "vec_id",
-      "embedding", 2, 2)
-    val path = Fixtures.tempDir("graft-ustore-").resolve("cbcr").toString
-    Similarity.writeStandingStore(embAssigned(cents), path, "cluster",
-      buckets = 4)
-    Similarity.writeCodebook(spark, path, cents)
-    val before = Similarity.readCodebook(spark, path)
-    val legacy = new java.io.File(s"$path/codebook")
-    assert(!legacy.exists(), "the codebook write left a legacy dir")
-    spark.range(1).select(lit(99L).as("cid"),
-        array(lit(0.0), lit(0.0), lit(0.0), lit(0.0)).as("cent"))
-      .write.parquet(s"$path/codebook")
-    assert(Similarity.readCodebook(spark, path) == before,
-      "a stale legacy codebook dir was read")
-    Similarity.writeCodebook(spark, path, cents) // the next rewrite
-    assert(!legacy.exists(),
-      "the rewrite left the stale legacy codebook dir in place")
-    assert(Similarity.readCodebook(spark, path) == before,
-      "cleanup damaged the versioned codebook")
   }
 }

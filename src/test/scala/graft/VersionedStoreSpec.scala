@@ -227,16 +227,6 @@ class VersionedStoreSpec extends SparkSpec {
     Similarity.appendToStandingStore(vecs(16, 18), path, "cluster",
       batchId = Some(2L))
     assert(Similarity.readStandingStore(spark, path)._1.count() == 17)
-    // a store in the legacy on-disk layout migrates at its first open
-    // and is exactly-once from its first batch on
-    val legacy = Fixtures.tempDir("graft-vstore-").resolve("leg").toString
-    LegacyStores.standingStore(vecs(0, 4), legacy, "cluster", 4)
-    Similarity.appendToStandingStore(vecs(4, 6), legacy, "cluster",
-      batchId = Some(0L))
-    Similarity.appendToStandingStore(poisoned, legacy, "cluster",
-      batchId = Some(0L))
-    assert(StoreSwap.committedBatches(spark, legacy, "data") == Set(0L))
-    assert(Similarity.readStandingStore(spark, legacy)._1.count() == 6)
   }
 
   test("store diff: manifest-pruned CDC detects insert/delete/update and reads only changed buckets") {
@@ -316,57 +306,6 @@ class VersionedStoreSpec extends SparkSpec {
     Dedup.ingestBatchIntoStore(spark, path,
       delta.withColumn("text", boom(col("text"))), "doc_id", "text",
       batchId = Some(0L), n = 3, numHashes = 4)
-    // a store in the legacy layout migrates at open and acks its first
-    // batch like any other
-    val legacy = Fixtures.tempDir("graft-vstore-").resolve("leg").toString
-    LegacyStores.signatureStore(sigs(standing), legacy, "doc_id", 8)
-    Dedup.ingestBatchIntoStore(spark, legacy, delta, "doc_id", "text",
-      batchId = Some(0L), n = 3, numHashes = 4)
-    assert(StoreSwap.committedBatches(spark, legacy, "data") == Set(0L))
-    Dedup.ingestBatchIntoStore(spark, legacy,
-      delta.withColumn("text", boom(col("text"))), "doc_id", "text",
-      batchId = Some(0L), n = 3, numHashes = 4)
-    assert(sigRows(Dedup.readSignatureStore(spark, legacy)._1) ==
-      sigRows(sigs(standing.unionByName(delta))))
-  }
-
-  test("full text lifecycle on a versioned store matches the legacy store") {
-    // a store that starts in the legacy on-disk layout (migrated at
-    // its first open) and a store created on the manifest run the same
-    // lifecycle to the same verdicts and content
-    def lifecycle(legacyLayout: Boolean): (Seq[Any], Seq[Any]) = {
-      val path = Fixtures.tempDir("graft-vstore-").resolve("s").toString
-      val standing = docs()
-      if (legacyLayout)
-        LegacyStores.signatureStore(sigs(standing), path, "doc_id", 8)
-      else
-        Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
-          buckets = 8)
-      Dedup.writeBandIndex(spark, path, "doc_id", bands = 2)
-      Dedup.writeShingleSidecar(spark, path, standing, "doc_id", "text",
-        n = 3)
-      val delta1 = standing.filter(col("doc_id") <= 1L)
-        .select((col("doc_id") + 100L).as("doc_id"), col("text"))
-      Dedup.mergeIntoSignatureStore(spark, path, sigs(delta1), "doc_id")
-      Dedup.mergeShinglesIntoStore(spark, path, delta1, "doc_id", "text")
-      Dedup.mergeIntoBandIndex(spark, path,
-        delta1.select(col("doc_id")), "doc_id")
-      val doomed = Seq(3L).toDF("doc_id")
-      Dedup.forgetFromBandIndex(spark, path, doomed, "doc_id")
-      Dedup.forgetDocsFromSignatureStore(spark, path, doomed, "doc_id")
-      val delta2 = standing.select((col("doc_id") + 200L).as("doc_id"),
-        col("text"))
-      val verdicts = Dedup.lshJudgeStore(spark, path,
-          standing.unionByName(delta1), delta2, "doc_id", "text",
-          n = 3, numHashes = 4)
-        .orderBy("id_a", "id_b").collect().map(_.toSeq).toSeq
-      val store = sigRows(Dedup.readSignatureStore(spark, path)._1)
-      (verdicts, store)
-    }
-    val legacy = lifecycle(legacyLayout = true)
-    val vsn = lifecycle(legacyLayout = false)
-    assert(vsn._1 == legacy._1, "verdicts diverged across commit protocols")
-    assert(vsn._2 == legacy._2, "store content diverged across commit protocols")
-    assert(vsn._1.nonEmpty)
+    assert(sigRows(Dedup.readSignatureStore(spark, path)._1) == afterCrash)
   }
 }
