@@ -1,7 +1,6 @@
 package graft.functions
 
-import java.util.regex.Pattern
-import java.util.concurrent.ConcurrentHashMap
+import java.time.{LocalDate, LocalDateTime, ZoneId}
 
 /** Parse-time numeric normalization and sink-side type coercion — behavioral
   * parity with the reference (SURVEY.md §1.2 / §2.2 T2+T8):
@@ -10,68 +9,112 @@ import java.util.concurrent.ConcurrentHashMap
   * `/root/reference/Wrap/DB.pm:238-312`. Pure string functions (no Spark
   * dependency); Column wrappers in [[EtlFunctions]].
   *
-  * All patterns are precompiled (these run per-field on the ingest hot
-  * path — `String.matches` would recompile per call).
+  * These run per field on the ingest hot path, so each rule set is a
+  * single-pass character scan over the value instead of the reference's
+  * regex cascade. CoerceSpec pins every scan to a literal regex
+  * transcription of the reference with differential properties.
   */
 object Coerce {
 
+  @inline private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+
+  /** End of the run of digits starting at `from`. */
+  private def digitsEnd(s: String, from: Int): Int = {
+    var i = from
+    while (i < s.length && isDigit(s.charAt(i))) i += 1
+    i
+  }
+
+  /** `s[from, to)` is all digits and lies inside `s`. */
+  private def digitsAt(s: String, from: Int, to: Int): Boolean =
+    to <= s.length && digitsEnd(s, from) >= to
+
   // ---- normalizeNumerics --------------------------------------------------
-  private case class SepPatterns(grouped: Pattern, plainDec: Pattern, sciDec: Pattern,
-                                 thousandAll: Pattern, decimalOne: Pattern)
-  private val sepCache = new ConcurrentHashMap[(String, String), SepPatterns]()
-  private def sepPatterns(t: String, d: String): SepPatterns =
-    sepCache.computeIfAbsent((t, d), { case (ts, ds) =>
-      val tq = Pattern.quote(ts); val dq = Pattern.quote(ds)
-      SepPatterns(
-        grouped = Pattern.compile(s"-?\\d{1,3}($tq\\d{3})+($dq\\d*)?"),
-        plainDec = Pattern.compile(s"-?\\d+$dq\\d+"),
-        sciDec = Pattern.compile(s"-*\\d*$dq?\\d+E*[-+]*\\d*"),
-        thousandAll = Pattern.compile(tq),
-        decimalOne = Pattern.compile(dq))
-    })
 
   /** Locale-aware numeric normalization (`Wrap/File.pm:427-434`): remove
-    * thousand separators when the string is a fully-grouped numeral, then
-    * rewrite the decimal separator to '.' when the string is a plain or
-    * scientific numeral. Non-numeric shapes pass through untouched.
-    * Defaults: thousand ',', decimal '.' (`Wrap/File.pm:445`). */
+    * thousand separators when the string is a fully-grouped numeral
+    * (`-?\d{1,3}(T\d{3})+(D\d*)?`), then rewrite the first decimal
+    * separator to '.' when the string is a plain (`-?\d+D\d+`) or
+    * scientific (`-*\d*D?\d+E*[-+]*\d*`) numeral. Non-numeric shapes pass
+    * through untouched. Defaults: thousand ',', decimal '.'
+    * (`Wrap/File.pm:445`).
+    *
+    * The scans decide those shapes without backtracking, which is exact
+    * when neither separator starts with a digit and the decimal one does
+    * not start with '-', '+' or 'E'; other separators are refused. */
   def normalizeNumerics(s0: String, thousandSep: String = ",", decimalSep: String = "."): String = {
     if (s0 == null) return null
-    // fast path: with neither separator present every rewrite below is a
-    // no-op (grouped needs a thousand sep; the decimal rewrite replaces a
-    // decimal sep) — skip the regex battery entirely
+    require(thousandSep.nonEmpty && !isDigit(thousandSep.charAt(0)) &&
+      decimalSep.nonEmpty && "0123456789-+E".indexOf(decimalSep.charAt(0)) < 0,
+      s"unsupported numeral separators '$thousandSep' / '$decimalSep'")
+    // with neither separator present every rewrite below is a no-op
     if (s0.indexOf(thousandSep) < 0 && s0.indexOf(decimalSep) < 0) return s0
     var s = s0
-    val p = sepPatterns(thousandSep, decimalSep)
-    if (p.grouped.matcher(s).matches())
-      s = p.thousandAll.matcher(s).replaceAll("")
-    if (decimalSep != ".") {
-      if (p.plainDec.matcher(s).matches() || p.sciDec.matcher(s).matches())
-        s = p.decimalOne.matcher(s).replaceFirst(".")
-    }
+    if (isGrouped(s, thousandSep, decimalSep)) s = s.replace(thousandSep, "")
+    val k = s.indexOf(decimalSep)
+    if (k >= 0 && decimalSep != "." && (isPlainDecimal(s, decimalSep) || isSciDecimal(s, decimalSep)))
+      s = s.substring(0, k) + "." + s.substring(k + decimalSep.length)
     s
   }
 
-  // ---- numeric ------------------------------------------------------------
-  private val trailingZeros = Pattern.compile(".*\\d+\\.0+")
-  private val trailingZerosStrip = Pattern.compile("\\.0+$")
-  private val postfixMinus = Pattern.compile("[\\d.]*-")
-  private val postfixMinusSwap = Pattern.compile("([\\d.]*)-")
-  private val percent = Pattern.compile("[\\d.]*%")
-  private val numericShape = Pattern.compile("-*\\d*\\.?\\d+E*[-+]*\\d*")
+  /** `-?\d{1,3}(T\d{3})+(D\d*)?`, full match. The group chain is forced
+    * (T starts with a non-digit), so the tail is tried after each group. */
+  private def isGrouped(s: String, t: String, d: String): Boolean = {
+    val lead = if (s.startsWith("-")) 1 else 0
+    var p = digitsEnd(s, lead)
+    if (p == lead || p - lead > 3) return false
+    while (s.startsWith(t, p) && digitsAt(s, p + t.length, p + t.length + 3)) {
+      p += t.length + 3
+      if (p == s.length ||
+          s.startsWith(d, p) && digitsEnd(s, p + d.length) == s.length) return true
+    }
+    false
+  }
 
-  /** Numeric coercion battery (`Wrap/DB.pm:244-256`): strip trailing ".0+",
-    * SAP postfix minus `123-` → `-123`, strip trailing '%', reject
-    * non-numeric shapes and "N/A" (→ None), flush subnormals (≤1.79E-308)
-    * to 0.
-    *
-    * Implemented as single-pass character scans (shape-classify, then
-    * dispatch) rather than the reference's regex cascade — this runs
-    * per-field on every load, so the per-row constant matters at scale.
-    * [[coerceNumericRegex]] keeps the literal regex transcription; a
-    * differential property test in CoerceSpec pins the two equal. */
-  def coerceNumeric(s0: String): Option[Double] = {
-    if (s0 == null) return None
+  /** `-?\d+D\d+`, full match. */
+  private def isPlainDecimal(s: String, d: String): Boolean = {
+    val lead = if (s.startsWith("-")) 1 else 0
+    val p = digitsEnd(s, lead)
+    p > lead && s.startsWith(d, p) && {
+      val q = p + d.length
+      q < s.length && digitsEnd(s, q) == s.length
+    }
+  }
+
+  /** `-*\d*D?\d+E*[-+]*\d*`, full match: the `\d*D?\d+` core needs a digit
+    * after D when D is taken, else at least one digit. */
+  private def isSciDecimal(s: String, d: String): Boolean = {
+    var i = 0
+    while (i < s.length && s.charAt(i) == '-') i += 1
+    val intStart = i
+    i = digitsEnd(s, i)
+    if (s.startsWith(d, i)) {
+      val fracStart = i + d.length
+      i = digitsEnd(s, fracStart)
+      if (i == fracStart) return false
+    } else if (i == intStart) return false
+    shapeTail(s, i) == s.length
+  }
+
+  /** End of the `E*[-+]*\d*` tail starting at `from`. */
+  private def shapeTail(s: String, from: Int): Int = {
+    var i = from
+    while (i < s.length && s.charAt(i) == 'E') i += 1
+    while (i < s.length && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+    digitsEnd(s, i)
+  }
+
+  // ---- numeric ------------------------------------------------------------
+
+  /** The numeral the numeric battery (`Wrap/DB.pm:244-256`) makes of `s0`,
+    * or null when it rejects `s0`: strip trailing ".0+", SAP postfix minus
+    * `123-` → `-123`, strip a trailing '%', then reject what is not
+    * numeric (the reference's `-*\d*\.?\d+E*[-+]*\d*` shape, narrowed to
+    * the numerals `toDouble` parses: one leading minus at most, an exponent
+    * only as `E`, an optional sign and digits). The reference's "N/A"
+    * check is subsumed: it has no digit. */
+  def numeral(s0: String): String = {
+    if (s0 == null) return null
     val n = s0.length
     // pass 1: digit presence (every accepting shape requires \d+) and the
     // plain optionally-negative integer fast path (takes no rewrites)
@@ -80,13 +123,13 @@ object Coerce {
     var i = 0
     while (i < n) {
       val c = s0.charAt(i)
-      val digit = c >= '0' && c <= '9'
+      val digit = isDigit(c)
       hasDigit |= digit
       pureInt &&= digit || (i == 0 && c == '-' && n > 1)
       i += 1
     }
-    if (!hasDigit) return None
-    if (pureInt) return Some(s0.toDouble)
+    if (!hasDigit) return null
+    if (pureInt) return s0
     var s = s0
     // ".*\d+\.0+$" → strip the "\.0+" tail: a run of '0's at the end,
     // preceded by '.', preceded by a digit
@@ -99,16 +142,20 @@ object Coerce {
     if ((last == '-' || last == '%') && digitsDotsOnly(s, s.length - 1))
       s = if (last == '-') "-" + s.substring(0, s.length - 1)
           else s.substring(0, s.length - 1)
-    // shape gate "-*\d*\.?\d+E*[-+]*\d*" as a hand-rolled scan (the regex
-    // is the reference's, oddities included: any number of leading
-    // minuses and 'E's — toDouble below rejects the nonsense ones)
-    if (!numericShapeScan(s)) return None
-    if (s == "N/A") return None
-    val v = try s.toDouble catch { case _: NumberFormatException => return None }
-    if (math.abs(v) <= 1.79e-308 && math.abs(v) > 0) Some(0.0) else Some(v)
+    if (isNumeral(s)) s else null
   }
 
-  @inline private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+  /** Numeric coercion battery (`Wrap/DB.pm:244-256`): the [[numeral]] as
+    * a double, subnormals (≤1.79E-308) flushed to 0; None for what the
+    * battery rejects. */
+  def coerceNumeric(s0: String): Option[Double] = {
+    val s = numeral(s0)
+    if (s == null) None
+    else {
+      val v = s.toDouble
+      if (math.abs(v) <= 1.79e-308 && math.abs(v) > 0) Some(0.0) else Some(v)
+    }
+  }
 
   private def digitsDotsOnly(s: String, end: Int): Boolean = {
     var i = 0
@@ -120,41 +167,23 @@ object Coerce {
     true
   }
 
-  /** Deterministic scan equivalent of `-*\d*\.?\d+E*[-+]*\d*` (full match).
-    * The `\d*\.?\d+` core requires ≥1 digit after the dot when a dot is
-    * taken, else ≥1 digit total. */
-  private def numericShapeScan(s: String): Boolean = {
+  /** `-?\d*\.?\d+(E[-+]?\d+)?`, full match: the shape gate
+    * `-*\d*\.?\d+E*[-+]*\d*` intersected with what `toDouble` parses. */
+  private def isNumeral(s: String): Boolean = {
     val n = s.length
-    var i = 0
-    while (i < n && s.charAt(i) == '-') i += 1              // -*
+    var i = if (s.startsWith("-")) 1 else 0
     val intStart = i
-    while (i < n && isDigit(s.charAt(i))) i += 1            // \d*
-    val intDigits = i - intStart
-    if (i < n && s.charAt(i) == '.') {                      // \.? \d+
-      i += 1
-      val fracStart = i
-      while (i < n && isDigit(s.charAt(i))) i += 1
+    i = digitsEnd(s, i)
+    if (i < n && s.charAt(i) == '.') {
+      val fracStart = i + 1
+      i = digitsEnd(s, fracStart)
       if (i == fracStart) return false
-    } else if (intDigits == 0) return false                 // bare \d+
-    while (i < n && s.charAt(i) == 'E') i += 1              // E*
-    while (i < n && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1 // [-+]*
-    while (i < n && isDigit(s.charAt(i))) i += 1            // \d*
-    i == n
-  }
-
-  /** Literal regex transcription of `Wrap/DB.pm:244-256` — the semantic
-    * reference for [[coerceNumeric]]'s scan version; differential property
-    * test in CoerceSpec. */
-  private[graft] def coerceNumericRegex(s0: String): Option[Double] = {
-    if (s0 == null) return None
-    var s = s0
-    if (trailingZeros.matcher(s).matches()) s = trailingZerosStrip.matcher(s).replaceAll("")
-    if (postfixMinus.matcher(s).matches()) s = postfixMinusSwap.matcher(s).replaceFirst("-$1")
-    if (percent.matcher(s).matches()) s = s.substring(0, s.length - 1)
-    if (!numericShape.matcher(s).matches()) return None
-    if (s == "N/A") return None
-    val v = try s.toDouble catch { case _: NumberFormatException => return None }
-    if (math.abs(v) <= 1.79e-308 && math.abs(v) > 0) Some(0.0) else Some(v)
+    } else if (i == intStart) return false
+    if (i == n) return true
+    if (s.charAt(i) != 'E') return false
+    i += 1
+    if (i < n && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
+    i < n && digitsEnd(s, i) == n
   }
 
   /** Boolean coercion (`Wrap/DB.pm:258-262`): WAHR/TRUE → true,
@@ -169,63 +198,149 @@ object Coerce {
   }
 
   // ---- datetime -----------------------------------------------------------
-  private def p(re: String) = Pattern.compile(re)
-  private val gate1 = p("^\\d{2}[./]*\\d{2}[./]*\\d{2,4}.*")
-  private val gate2 = p("^\\d{4}-\\d{2}-\\d{2}.*")
-  private val gate3 = p("^\\d{2}:\\d{2}:\\d{2}.*")
-  private val dmyTime = p("^(\\d{2})[./](\\d{2})[./](\\d{4}) (\\d{2}):(\\d{2}):(\\d{2})")
-  private val sap60 = p("^(\\d{4})(\\d{2})(\\d{2})(\\d{2})(\\d{2})(60)")
-  private val sapFull = p("^(\\d{4})(\\d{2})(\\d{2})(\\d{2})(\\d{2})(\\d{2})")
-  private val dmy = p("^(\\d{2})[./](\\d{2})[./](\\d{4})")
-  private val ymd8 = p("^(\\d{4})(\\d{2})(\\d{2})")
-  private val ymdDot = p("^(\\d{4})\\.(\\d{2})\\.(\\d{2})")
-  private val shortYear = p("^(\\d{2})[./](\\d{2})[./](\\d{2})")
-  private val zeroTime = p("^00:00:00$")
-  private val zeroDate = p("^0000-00-00 00:00:00$")
-  private val hms = p("^(\\d{2}):(\\d{2}):(\\d{2})")
-  private val hms6 = p("^(\\d{2})(\\d{2})(\\d{2})")
-  private val hmOnly = p("^(\\d{2}):(\\d{2})$")
-  private val canonical = p("^\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}$")
-  private val canonicalDate = p("^\\d{4}-\\d{2}-\\d{2}$")
-  private val digits8 = p("^\\d{8}.*")
-  private val digits6 = p("^\\d{6}.*")
-  private val digits14 = p("^\\d{14}.*")
+
+  /** [[scanDateTime]]'s result for a value the cascade rejects. */
+  final val NoDateTime = -1L
+
+  /** Flag on a [[scanDateTime]] result whose canonical string is the input
+    * itself (already `YYYY-MM-DD[ hh:mm:ss]`, no rule rewrote it). */
+  private final val AsIs = 1L << 50
+
+  private def sepAt(s: String, i: Int): Boolean = {
+    val c = s.charAt(i)
+    c == '.' || c == '/'
+  }
+  private def d2(s: String, i: Int): Int = (s.charAt(i) - '0') * 10 + s.charAt(i + 1) - '0'
+  private def d4(s: String, i: Int): Int = d2(s, i) * 100 + d2(s, i + 2)
+
+  private def pack(y: Int, mo: Int, d: Int, h: Int, mi: Int, sec: Int): Long =
+    ((((y.toLong * 100 + mo) * 100 + d) * 100 + h) * 100 + mi) * 100 + sec
+
+  /** `dd[./]dd[./]dd` at the start of `s`. */
+  private def dmyPrefix(s: String): Boolean =
+    s.length >= 8 && digitsAt(s, 0, 2) && sepAt(s, 2) && digitsAt(s, 3, 5) &&
+      sepAt(s, 5) && digitsAt(s, 6, 8)
+
+  /** `dddd-dd-dd` at the start of `s`. */
+  private def isoDatePrefix(s: String): Boolean =
+    s.length >= 10 && digitsAt(s, 0, 4) && s.charAt(4) == '-' && digitsAt(s, 5, 7) &&
+      s.charAt(7) == '-' && digitsAt(s, 8, 10)
+
+  /** `dd:dd:dd` at `from`. */
+  private def hmsAt(s: String, from: Int): Boolean =
+    s.length >= from + 8 && digitsAt(s, from, from + 2) && s.charAt(from + 2) == ':' &&
+      digitsAt(s, from + 3, from + 5) && s.charAt(from + 5) == ':' &&
+      digitsAt(s, from + 6, from + 8)
+
+  /** The date/time coercion cascade (`Wrap/DB.pm:264-301`) in one scan:
+    * the fields of the ODBC canonical `YYYY-MM-DD hh:mm:ss` it gives `s`,
+    * packed as decimal digits (year·10¹⁰ + month·10⁸ + … + second), or
+    * [[NoDateTime]]. Checks shape only, like the reference: a month 13
+    * passes here and fails [[isCalendarDate]].
+    *
+    * The reference rewrites a value's leading date/time into the
+    * canonical prefix with the first of its rules that fits, and no later
+    * rule fits that prefix; it then accepts the result only when nothing
+    * follows the prefix and the year does not start with '0'. So the scan
+    * tries the rules in the reference's order on the input and stops at
+    * the first that fits. Unrewritten values pass when they already are
+    * canonical (date-only too). The shape gate is implied: every rule's
+    * prefix passes it. The msec rule is an unreachable no-op in the
+    * reference and so is its bare `HH:MM` rule (its shape gate rejects
+    * `HH:MM` first); both are left out. */
+  def scanDateTime(s: String, cutoffYr2000: Int = 60): Long = {
+    if (s == null) return NoDateTime
+    val n = s.length
+    var fields = NoDateTime
+    var end = 0
+    if (n >= 19 && dmyPrefix(s) && digitsAt(s, 8, 10) && s.charAt(10) == ' ' && hmsAt(s, 11)) {
+      // dd.mm.yyyy hh:mm:ss
+      fields = pack(d4(s, 6), d2(s, 3), d2(s, 0), d2(s, 11), d2(s, 14), d2(s, 17)); end = 19
+    } else if (digitsAt(s, 0, 14)) {
+      // SAP yyyymmddhhmmss, second 60 → 59
+      val sec = d2(s, 12)
+      fields = pack(d4(s, 0), d2(s, 4), d2(s, 6), d2(s, 8), d2(s, 10), if (sec == 60) 59 else sec)
+      end = 14
+    } else if (n >= 10 && dmyPrefix(s) && digitsAt(s, 8, 10)) {
+      fields = pack(d4(s, 6), d2(s, 3), d2(s, 0), 0, 0, 0); end = 10  // dd.mm.yyyy
+    } else if (digitsAt(s, 0, 8)) {
+      fields = pack(d4(s, 0), d2(s, 4), d2(s, 6), 0, 0, 0); end = 8   // yyyymmdd
+    } else if (n >= 10 && digitsAt(s, 0, 4) && s.charAt(4) == '.' && digitsAt(s, 5, 7) &&
+        s.charAt(7) == '.' && digitsAt(s, 8, 10)) {
+      fields = pack(d4(s, 0), d2(s, 5), d2(s, 8), 0, 0, 0); end = 10  // yyyy.mm.dd
+    } else if (dmyPrefix(s)) {
+      // dd.mm.yy: two-digit years above the cutoff are 19yy, the rest 20yy
+      val yy = d2(s, 6)
+      fields = pack((if (yy > cutoffYr2000) 1900 else 2000) + yy, d2(s, 3), d2(s, 0), 0, 0, 0)
+      end = 8
+    } else if (s == "00:00:00") {
+      return NoDateTime
+    } else if (hmsAt(s, 0)) {
+      fields = pack(1900, 1, 1, d2(s, 0), d2(s, 3), d2(s, 6)); end = 8  // hh:mm:ss
+    } else if (digitsAt(s, 0, 6)) {
+      fields = pack(1900, 1, 1, d2(s, 0), d2(s, 2), d2(s, 4)); end = 6  // hhmmss
+    } else if (n == 19 && isoDatePrefix(s) && s.charAt(10) == ' ' && hmsAt(s, 11)) {
+      if (s.charAt(0) == '0') return NoDateTime
+      return AsIs | pack(d4(s, 0), d2(s, 5), d2(s, 8), d2(s, 11), d2(s, 14), d2(s, 17))
+    } else if (n == 10 && isoDatePrefix(s)) {
+      if (s.charAt(0) == '0') return NoDateTime
+      return AsIs | pack(d4(s, 0), d2(s, 5), d2(s, 8), 0, 0, 0)
+    } else return NoDateTime
+    if (end != n || fields / 10000000000L < 1000) NoDateTime else fields
+  }
+
+  private def year(p: Long): Int = ((p & (AsIs - 1)) / 10000000000L).toInt
+  private def field(p: Long, scale: Long): Int = ((p / scale) % 100).toInt
+
+  /** The ODBC canonical string of a [[scanDateTime]] result. */
+  private def canonical(s0: String, p: Long): String =
+    if ((p & AsIs) != 0) s0
+    else {
+      val out = "0000-00-00 00:00:00".toCharArray
+      def put(v: Int, end: Int, width: Int): Unit =
+        (1 to width).foldLeft(v) { (rest, k) => out(end - k) = ('0' + rest % 10).toChar; rest / 10 }
+      put(year(p), 4, 4)
+      put(field(p, 100000000L), 7, 2); put(field(p, 1000000L), 10, 2)
+      put(field(p, 10000L), 13, 2); put(field(p, 100L), 16, 2); put(field(p, 1L), 19, 2)
+      new String(out)
+    }
 
   /** Date/time coercion cascade (`Wrap/DB.pm:264-301`), normalizing ≥12
     * input shapes to the ODBC canonical `YYYY-MM-DD hh:mm:ss`. Returns the
     * canonical STRING (the reference passes strings to ODBC); None mirrors
-    * the reference's `undef` (with its severity-1 error channel). Rule
-    * order is kept exactly; the reference's msec rule is an unreachable
-    * no-op (replicated by omission) and so is its bare `HH:MM` rule (the
-    * shape gate rejects it first).
-    */
+    * the reference's `undef` (with its severity-1 error channel). Shape
+    * only: `31.02.2020` gives `2020-02-31 00:00:00`, as in the reference. */
   def coerceDateTime(s0: String, cutoffYr2000: Int = 60): Option[String] = {
-    if (s0 == null) return None
-    var s = s0
-    if (!(gate1.matcher(s).matches() || gate2.matcher(s).matches() || gate3.matcher(s).matches()))
-      return None
-    if (dmyTime.matcher(s).find())
-      s = dmyTime.matcher(s).replaceFirst("$3-$2-$1 $4:$5:$6")
-    if (digits14.matcher(s).matches()) {
-      if (sap60.matcher(s).find()) s = sap60.matcher(s).replaceFirst("$1-$2-$3 $4:$5:59")
-      if (sapFull.matcher(s).find()) s = sapFull.matcher(s).replaceFirst("$1-$2-$3 $4:$5:$6")
-    }
-    if (dmy.matcher(s).find()) s = dmy.matcher(s).replaceFirst("$3-$2-$1 00:00:00")
-    if (digits8.matcher(s).matches()) s = ymd8.matcher(s).replaceFirst("$1-$2-$3 00:00:00")
-    if (ymdDot.matcher(s).find()) s = ymdDot.matcher(s).replaceFirst("$1-$2-$3 00:00:00")
-    val sy = shortYear.matcher(s)
-    if (sy.find()) {
-      val prefix = if (sy.group(3).toInt > cutoffYr2000) "19" else "20"
-      s = shortYear.matcher(s).replaceFirst(s"$prefix$$3-$$2-$$1 00:00:00")
-    }
-    if (zeroTime.matcher(s).matches()) return None
-    if (zeroDate.matcher(s).matches()) return None
-    if (hms.matcher(s).find()) s = hms.matcher(s).replaceFirst("1900-01-01 $1:$2:$3")
-    else if (digits6.matcher(s).matches()) s = hms6.matcher(s).replaceFirst("1900-01-01 $1:$2:$3")
-    else if (hmOnly.matcher(s).matches()) s = hmOnly.matcher(s).replaceFirst("1900-01-01 $1:$2:00")
-    if (s.startsWith("0")) return None
-    if (!canonical.matcher(s).matches() && !canonicalDate.matcher(s).matches()) return None
-    Some(s)
+    val p = scanDateTime(s0, cutoffYr2000)
+    if (p == NoDateTime) None else Some(canonical(s0, p))
+  }
+
+  /** A [[scanDateTime]] result names a real date and a time of day
+    * (hour ≤ 23, minute and second ≤ 59). */
+  def isCalendarDate(p: Long): Boolean = p != NoDateTime && {
+    val (mo, d) = (field(p, 100000000L), field(p, 1000000L))
+    mo >= 1 && mo <= 12 && d >= 1 &&
+      d <= java.time.YearMonth.of(year(p), mo).lengthOfMonth() &&
+      field(p, 10000L) <= 23 && field(p, 100L) <= 59 && field(p, 1L) <= 59
+  }
+
+  /** Days since 1970-01-01 of a calendar-valid [[scanDateTime]] result. */
+  def epochDay(p: Long): Int =
+    LocalDate.of(year(p), field(p, 100000000L), field(p, 1000000L)).toEpochDay.toInt
+
+  /** Microseconds since the epoch of a calendar-valid [[scanDateTime]]
+    * result read as a local date-time in `zone` (a gap moves forward, an
+    * overlap takes the earlier offset, as `to_timestamp` does). */
+  def epochMicros(p: Long, zone: ZoneId): Long = {
+    val (h, mi, sec) = (field(p, 10000L), field(p, 100L), field(p, 1L))
+    val rules = zone.getRules
+    val seconds =
+      if (rules.isFixedOffset)
+        epochDay(p) * 86400L + h * 3600 + mi * 60 + sec -
+          rules.getOffset(java.time.Instant.EPOCH).getTotalSeconds
+      else LocalDateTime.of(year(p), field(p, 100000000L), field(p, 1000000L), h, mi, sec)
+        .atZone(zone).toEpochSecond
+    seconds * 1000000L
   }
 
   /** String coercion (`Wrap/DB.pm:304-310`): length check against the

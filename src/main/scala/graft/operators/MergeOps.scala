@@ -82,12 +82,30 @@ object MergeOps {
 
   /** Delete-before-insert (`deleteBeforeInsertSelector`,
     * `Wrap/DB.pm:337-347`): drop target rows whose key appears in the
-    * incoming batch, then append the batch. Anti join + union — both sides
-    * shuffle once on the key; with a broadcastable incoming batch Catalyst
-    * turns the anti join into a broadcast hash join. */
-  def deleteInsert(target: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame =
-    target.join(incoming.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .unionByName(incoming)
+    * incoming batch, then append the batch. A NULL key part never
+    * matches. The plan follows the batch's estimated size:
+    *  - keys small enough to broadcast: anti join + union. The target is
+    *    scanned without a shuffle; a batch that is a lazy parse (a load)
+    *    is parsed twice, which costs about the batch's size.
+    *  - otherwise, where the anti join would shuffle the target anyway:
+    *    one window over the union of target and batch, keyed like the
+    *    join. A target row survives unless its window holds an incoming
+    *    row, so the batch is read once, in the same shuffle. */
+  def deleteInsert(target: DataFrame, incoming: DataFrame, keys: Seq[String]): DataFrame = {
+    val incomingKeys = incoming.select(keys.map(col): _*).distinct()
+    val threshold = incoming.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold >= 0 &&
+        incomingKeys.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold)
+      target.join(incomingKeys, keys, "left_anti").unionByName(incoming)
+    else {
+      val staged = target.withColumn("__incoming", lit(false))
+        .unionByName(incoming.withColumn("__incoming", lit(true)))
+      val nullKey = keys.map(col(_).isNull).reduce(_ || _)
+      staged.withColumn("__hit", max(col("__incoming")).over(Window.partitionBy(keys.map(col): _*)))
+        .filter(col("__incoming") || nullKey || !col("__hit"))
+        .drop("__incoming", "__hit")
+    }
+  }
 
   /** Update-only merge (`updateInDB`, `Wrap/DB.pm:453-508`): overwrite the
     * listed value columns for target rows whose key appears in `updates`;

@@ -9,9 +9,11 @@ import org.apache.spark.sql.expressions.Window
 
 /** The import pipeline end-to-end (SURVEY.md §3.1): staged files → format
   * dispatch → field/row hooks (with optional previous-row context) →
-  * catalog-driven coercion → conflict-strategy store, atomically. The
-  * declarative middle (read → hooks → coerce) stays one Catalyst plan;
-  * only acquisition and the commit are driver-side.
+  * catalog-driven coercion → conflict-strategy store, atomically. A load
+  * is one pass: read → hooks → coerce → merge → write is one Catalyst
+  * plan that the store's write job runs, with the error sample and the
+  * severity-2 abort tapped inside it; only acquisition and the commit are
+  * driver-side.
   */
 object LoadRunner {
 
@@ -29,9 +31,6 @@ object LoadRunner {
       process: ProcessConfig = ProcessConfig())
 
   case class LoadResult(rows: Long, errors: Seq[String], stored: Boolean)
-
-  /** Errors a [[LoadResult]] reports: the first ones in scan order. */
-  private val ErrorSample = 100
 
   /** Read staged paths through the configured source (`readFileData`
     * dispatch, `Wrap.pm:312-331`). */
@@ -68,7 +67,14 @@ object LoadRunner {
     df.drop("_prev")
   }
 
-  /** Full run: read → hooks → coerce → severity gate → store. */
+  /** Full run: read → hooks → coerce → store, in one pass: the store's
+    * own job parses, coerces and writes the batch (nothing is cached). An
+    * [[ErrorSample]] taps the coerced batch before any merge shuffle; the
+    * result's errors are the first 100 in partition order. The first
+    * severity-2 error a task meets fails that job before the store commits
+    * anything, and `run` throws it as an `IllegalStateException`. With
+    * several severity-2 errors in different files it names the first in
+    * whichever task failed, not necessarily the first in partition order. */
   def run(spark: SparkSession, paths: Seq[String], load: Load,
           table: String): LoadResult = {
     val firstLine = load.hooks.firstLine.flatMap { _ =>
@@ -77,50 +83,26 @@ object LoadRunner {
         case _ => None
       }
     }
-    val ingest = read(spark, paths, load)
-    val hooked = applyHooks(spark, ingest, load, firstLine)
-    val coerced =
-      if (load.db.targetSchema.nonEmpty) SchemaCoercion(hooked, load.db.targetSchema)
-      else hooked.withColumn("_errors", array().cast("array<string>"))
-
-    // cache: the error job and the store read the same plan once. One
-    // job over every row builds the cache and returns, per partition, its
-    // first 100 errors and its first severity-2 error (string overflow,
-    // the abort rides the same `_errors` channel — no width-scan job).
-    // In partition order, the first 100 are the sample and the first
-    // severity-2 error aborts the load.
-    val materialized = coerced.cache()
-    val perPartition = materialized.select(col("_errors"))
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val sample = Vector.newBuilder[String]
-        var sampled = 0
-        var sev2: Option[String] = None
-        rows.filterNot(_.isNullAt(0)).foreach { r =>
-          val es = r.getArray(0)
-          for (i <- 0 until es.numElements()) {
-            val e = es.getUTF8String(i).toString
-            if (sampled < ErrorSample) { sample += e; sampled += 1 }
-            if (sev2.isEmpty && e.startsWith(SchemaCoercion.Severity2Prefix))
-              sev2 = Some(e)
-          }
-        }
-        Iterator((sample.result(), sev2))
-      }.collect()
-    val errors = perPartition.iterator.flatMap(_._1).take(ErrorSample).toSeq
-    val sev2 = perPartition.iterator.flatMap(_._2).nextOption()
-    sev2.foreach { msg =>
-      materialized.unpersist()
-      throw new IllegalStateException(msg)
-    }
-    val keep = load.db.targetSchema.filterNot(_.identity).map(_.name)
-      .filter(materialized.columns.contains)
+    val hooked = applyHooks(spark, read(spark, paths, load), load, firstLine)
+    val schema = load.db.targetSchema
+    val errors = new ErrorSample
     val toStore =
-      if (keep.nonEmpty) materialized.select((keep.map(col) :+ col("_lineno")): _*)
-      else materialized.drop("_file", "_errors")
-    ParquetTable.store(spark, toStore, table, load.db)
+      if (schema.isEmpty) hooked.drop("_file")
+      else {
+        spark.sparkContext.register(errors, "graft load errors")
+        val tapped = SchemaCoercion(hooked, schema, load.db.cutoffYr2000)
+          .filter(ErrorSample.tap(col("_errors"), errors))
+        val keep = schema.filterNot(_.identity).map(_.name).filter(tapped.columns.contains)
+        if (keep.nonEmpty) tapped.select((keep.map(col) :+ col("_lineno")): _*)
+        else tapped.drop("_file", "_errors")
+      }
+    try ParquetTable.store(spark, toStore, table, load.db)
+    catch {
+      case e: Exception =>
+        throw ErrorSample.severity2(e).fold[Throwable](e)(new IllegalStateException(_, e))
+    }
     val n = ParquetFooters.rowCount(spark.sessionState.newHadoopConf(),
       new org.apache.hadoop.fs.Path(table))
-    materialized.unpersist()
-    LoadResult(n, errors, stored = true)
+    LoadResult(n, errors.value, stored = true)
   }
 }

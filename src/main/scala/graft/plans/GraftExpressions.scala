@@ -4,16 +4,14 @@ import graft.functions.Coerce
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.types.{BooleanType, DataType, DoubleType, StringType}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the ingest hot path (SURVEY.md §7.3):
   * the coercion battery as codegen'd expressions instead of Scala UDFs —
   * no serialization boundary, null handling in generated code, and the
   * expression stays inside whole-stage codegen. The string work delegates
-  * to the shared [[Coerce]] implementations via a static call (the
-  * regex cascade itself doesn't benefit from inlining; eliminating the
-  * UDF wrapper does).
+  * to the shared [[Coerce]] scans via a static call.
   */
 object GraftExpressions {
 
@@ -39,6 +37,65 @@ object GraftExpressions {
       case Some(v) => java.lang.Boolean.valueOf(v)
       case None => null
     }
+
+  /** The battery's numeral (see [[Coerce.numeral]]) as a value of the
+    * integral or decimal type `dt` — integral: truncated toward zero;
+    * decimal: rounded half-up to its scale — or null when the battery
+    * rejects `s` or the value is out of `dt`'s range. Read from the
+    * numeral's digits, not through a double, so no digit is lost. */
+  def coerceNumberBoxed(s: UTF8String, dt: DataType): AnyRef = {
+    val n = Coerce.numeral(s.toString)
+    if (n == null) return null
+    dt match {
+      case d: DecimalType =>
+        // `17E2` parses to scale -2, which Spark's Decimal refuses
+        val bd = new java.math.BigDecimal(n) match {
+          case b if b.scale < 0 => b.setScale(0)
+          case b => b
+        }
+        val intDigits = bd.precision - bd.scale
+        if (intDigits > d.precision - d.scale) null
+        // below half a unit of the last place: 0 (skips a huge rescale)
+        else if (intDigits <= -d.scale - 1) Decimal(0L, d.precision, d.scale)
+        else {
+          val v = Decimal(bd)
+          if (v.changePrecision(d.precision, d.scale)) v else null
+        }
+      case _ =>
+        val whole =
+          if (n.length <= 18 && n.indexOf('.') < 0 && n.indexOf('E') < 0) n.toLong
+          else {
+            val bd = new java.math.BigDecimal(n)
+            val intDigits = bd.precision - bd.scale
+            if (intDigits > 19) return null
+            if (intDigits <= 0) 0L
+            else {
+              val w = bd.setScale(0, java.math.RoundingMode.DOWN).unscaledValue
+              if (w.bitLength > 63) return null
+              w.longValue
+            }
+          }
+        if (dt == LongType) java.lang.Long.valueOf(whole)
+        else if (whole.isValidInt) java.lang.Integer.valueOf(whole.toInt)
+        else null
+    }
+  }
+
+  /** Days since the epoch of the cascade's date for `s`, or null when the
+    * cascade rejects `s` or it is not a calendar date. */
+  def coerceDateBoxed(s: UTF8String, cutoffYr2000: Int): java.lang.Integer = {
+    val p = Coerce.scanDateTime(s.toString, cutoffYr2000)
+    if (Coerce.isCalendarDate(p)) java.lang.Integer.valueOf(Coerce.epochDay(p)) else null
+  }
+
+  /** Microseconds since the epoch of the cascade's date-time for `s` in
+    * `zone`, or null when the cascade rejects `s` or it is not a calendar
+    * date and time of day. */
+  def coerceTimestampBoxed(s: UTF8String, cutoffYr2000: Int,
+                           zone: java.time.ZoneId): java.lang.Long = {
+    val p = Coerce.scanDateTime(s.toString, cutoffYr2000)
+    if (Coerce.isCalendarDate(p)) java.lang.Long.valueOf(Coerce.epochMicros(p, zone)) else null
+  }
 
   private val WsPattern = java.util.regex.Pattern.compile("\\s+")
 
@@ -462,103 +519,102 @@ case class NormalizeNumeric(child: Expression, thousand: Expression, decimal: Ex
       f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
 }
 
-/** Numeric coercion battery (T8) as a codegen'd unary expression; returns
-  * NULL for non-numeric shapes like the reference's `undef`. */
-case class CoerceNumeric(child: Expression)
-    extends UnaryExpression {
+/** A coercion leg of the battery (T8) as a codegen'd unary expression
+  * over a string: a static helper of [[GraftExpressions]] does the work
+  * and returns the boxed value, or null — the reference's `undef`. */
+sealed trait StringCoercion extends UnaryExpression {
+  override def nullable: Boolean = true
+
+  /** The helper's result for a non-null input. */
+  protected def coerce(s: UTF8String): AnyRef
+
+  /** Java source of the same helper call on the input `arg`. */
+  protected def coerceCode(ctx: CodegenContext, arg: String): String
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = child.eval(input)
+    if (v == null) null else coerce(v.asInstanceOf[UTF8String])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val childGen = child.genCode(ctx)
+    val boxed = ctx.freshName("boxed")
+    val boxedType = CodeGenerator.boxedType(dataType)
+    val javaType = CodeGenerator.javaType(dataType)
+    val unboxed =
+      if (CodeGenerator.isPrimitiveType(dataType)) s"$boxed.${javaType}Value()" else boxed
+    ev.copy(code =
+      code"""
+        ${childGen.code}
+        boolean ${ev.isNull} = true;
+        $javaType ${ev.value} = ${CodeGenerator.defaultValue(dataType)};
+        if (!${childGen.isNull}) {
+          $boxedType $boxed = ($boxedType) ${coerceCode(ctx, childGen.value)};
+          if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $unboxed; }
+        }
+      """)
+  }
+}
+
+/** Numeric coercion battery to a double; NULL for non-numeric shapes. */
+case class CoerceNumeric(child: Expression) extends StringCoercion {
   override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else GraftExpressions.coerceNumericBoxed(v.asInstanceOf[UTF8String]) match {
-      case null => null
-      case d => d.doubleValue()
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val boxed = ctx.freshName("boxed")
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        double ${ev.value} = 0.0;
-        if (!${childGen.isNull}) {
-          java.lang.Double $boxed =
-            graft.plans.GraftExpressions.coerceNumericBoxed(${childGen.value});
-          if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.doubleValue(); }
-        }
-      """)
-  }
-
+  override protected def coerce(s: UTF8String): AnyRef = GraftExpressions.coerceNumericBoxed(s)
+  override protected def coerceCode(ctx: CodegenContext, arg: String): String =
+    s"graft.plans.GraftExpressions.coerceNumericBoxed($arg)"
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** Date/time coercion cascade (T8) to the canonical ODBC string. */
-case class CoerceDateTime(child: Expression)
-    extends UnaryExpression {
+/** Numeric coercion battery read into an integral or decimal target type
+  * ([[GraftExpressions.coerceNumberBoxed]]): NULL for non-numeric shapes
+  * and for values out of the type's range. */
+case class CoerceNumber(child: Expression, dataType: DataType) extends StringCoercion {
+  require(dataType.isInstanceOf[DecimalType] || dataType == LongType || dataType == IntegerType,
+    s"coerce_number targets a decimal, bigint or int type, not $dataType")
+  override protected def coerce(s: UTF8String): AnyRef =
+    GraftExpressions.coerceNumberBoxed(s, dataType)
+  override protected def coerceCode(ctx: CodegenContext, arg: String): String =
+    s"graft.plans.GraftExpressions.coerceNumberBoxed($arg, " +
+      s"${ctx.addReferenceObj("targetType", dataType, classOf[DataType].getName)})"
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Date/time coercion cascade to the canonical ODBC string (shape only). */
+case class CoerceDateTime(child: Expression) extends StringCoercion {
   override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else GraftExpressions.coerceDateTimeBoxed(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        UTF8String ${ev.value} = null;
-        if (!${childGen.isNull}) {
-          ${ev.value} = graft.plans.GraftExpressions.coerceDateTimeBoxed(${childGen.value});
-          ${ev.isNull} = (${ev.value} == null);
-        }
-      """)
-  }
-
+  override protected def coerce(s: UTF8String): AnyRef = GraftExpressions.coerceDateTimeBoxed(s)
+  override protected def coerceCode(ctx: CodegenContext, arg: String): String =
+    s"graft.plans.GraftExpressions.coerceDateTimeBoxed($arg)"
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 
-/** Boolean coercion cascade (T8: WAHR/FALSCH/true/false/0/1 forms) as a
-  * native expression — the UDF-free twin of [[CoerceNumeric]], keeping
-  * the boolean leg of the coercion battery inside whole-stage codegen. */
-case class CoerceBool(child: Expression)
-    extends UnaryExpression {
+/** Date/time coercion cascade straight to a `DateType` or `TimestampType`
+  * value (the timestamp in the session time zone), with no canonical
+  * string in between: NULL where the cascade rejects the value or its
+  * fields are not a calendar date and time of day. */
+case class CoerceDateTimeValue(child: Expression, dataType: DataType, cutoffYr2000: Int,
+                               timeZoneId: Option[String] = None)
+    extends StringCoercion with TimeZoneAwareExpression {
+  require(dataType == DateType || dataType == TimestampType,
+    s"coerce_datetime_value targets date or timestamp, not $dataType")
+  override def withTimeZone(tz: String): TimeZoneAwareExpression = copy(timeZoneId = Option(tz))
+  override protected def coerce(s: UTF8String): AnyRef =
+    if (dataType == DateType) GraftExpressions.coerceDateBoxed(s, cutoffYr2000)
+    else GraftExpressions.coerceTimestampBoxed(s, cutoffYr2000, zoneId)
+  override protected def coerceCode(ctx: CodegenContext, arg: String): String =
+    if (dataType == DateType) s"graft.plans.GraftExpressions.coerceDateBoxed($arg, $cutoffYr2000)"
+    else s"graft.plans.GraftExpressions.coerceTimestampBoxed($arg, $cutoffYr2000, " +
+      s"${ctx.addReferenceObj("zone", zoneId, "java.time.ZoneId")})"
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
+
+/** Boolean coercion cascade (T8: WAHR/FALSCH/true/false/0/1 forms). */
+case class CoerceBool(child: Expression) extends StringCoercion {
   override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else GraftExpressions.coerceBoolBoxed(v.asInstanceOf[UTF8String]) match {
-      case null => null
-      case b => b.booleanValue()
-    }
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val childGen = child.genCode(ctx)
-    val boxed = ctx.freshName("boxed")
-    ev.copy(code =
-      code"""
-        ${childGen.code}
-        boolean ${ev.isNull} = true;
-        boolean ${ev.value} = false;
-        if (!${childGen.isNull}) {
-          java.lang.Boolean $boxed =
-            graft.plans.GraftExpressions.coerceBoolBoxed(${childGen.value});
-          if ($boxed != null) { ${ev.isNull} = false; ${ev.value} = $boxed.booleanValue(); }
-        }
-      """)
-  }
-
+  override protected def coerce(s: UTF8String): AnyRef = GraftExpressions.coerceBoolBoxed(s)
+  override protected def coerceCode(ctx: CodegenContext, arg: String): String =
+    s"graft.plans.GraftExpressions.coerceBoolBoxed($arg)"
   override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }
 

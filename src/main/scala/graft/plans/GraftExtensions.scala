@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.DataType
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions for SQL use. Activate with
@@ -82,6 +83,10 @@ object GraftExtensions {
   def normalize_numerics(c: Column, thousandSep: String = ",", decimalSep: String = "."): Column =
     column(NormalizeNumeric(expression(c), Literal(thousandSep), Literal(decimalSep)))
   def coerce_numeric(c: Column): Column = column(CoerceNumeric(expression(c)))
+  def coerce_number(c: Column, dataType: DataType): Column =
+    column(CoerceNumber(expression(c), dataType))
   def coerce_datetime(c: Column): Column = column(CoerceDateTime(expression(c)))
+  def coerce_datetime_value(c: Column, dataType: DataType, cutoffYr2000: Int): Column =
+    column(CoerceDateTimeValue(expression(c), dataType, cutoffYr2000))
   def coerce_bool(c: Column): Column = column(CoerceBool(expression(c)))
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{Path => HPath}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import scala.util.control.NonFatal
 
 /** Parquet-backed "table" with the reference's sink contract (SURVEY.md
   * §2.5 K3-K6, K8): conflict strategies (append / upsert-last-wins /
@@ -21,6 +22,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   * Incoming rows must carry an ordering column when the strategy is
   * `Upsert` — statement order resolves last-wins like the reference's
   * per-row loop (`Wrap/DB.pm:386-412`).
+  *
+  * Every store stages through `.tmp-graft`, `noTransaction` or not: the
+  * incoming batch is often a lazy plan whose job can still fail (a load's
+  * severity-2 abort), and an in-place overwrite would have deleted the
+  * live table before that job ran.
   */
 object ParquetTable {
 
@@ -130,11 +136,7 @@ object ParquetTable {
         MergeOps.updateOnly(t, withId.drop(ordCol), keys, valueCols)
     }
 
-    if (db.noTransaction) {
-      merged.write.mode(SaveMode.Overwrite).parquet(table)
-    } else {
-      atomicOverwrite(merged, table)
-    }
+    atomicOverwrite(merged, table)
   }
 
   /** Small-file compaction: rewrite the table into ~`targetBytes` files
@@ -213,7 +215,15 @@ object ParquetTable {
     val tmp = tablePath.resolveSibling(tablePath.getFileName.toString + ".tmp-graft")
     val old = tablePath.resolveSibling(tablePath.getFileName.toString + ".old-graft")
     deleteRecursively(tmp)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    try df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    catch {
+      case e: Exception =>
+        // best effort: a cancelled task may still be writing; the next
+        // overwrite clears what is left. The write's failure stays the
+        // one thrown (a load's severity-2 abort is found in its causes).
+        try deleteRecursively(tmp) catch { case NonFatal(c) => e.addSuppressed(c) }
+        throw e
+    }
     deleteRecursively(old)
     if (Files.exists(tablePath)) Files.move(tablePath, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(tmp, tablePath, StandardCopyOption.ATOMIC_MOVE)

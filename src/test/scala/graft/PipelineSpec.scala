@@ -67,11 +67,13 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  test("a severity-2 value beyond the 100-error sample still aborts the load") {
+  /** Files 1 and 2 carry 160 severity-1 errors each (non-numeric
+    * amounts); file 3, the smallest and so the last partition scanned,
+    * holds the only over-wide name. The load aborts, names that value and
+    * leaves the table as it was; with file 3 fixed it stores and reports
+    * the first 100 errors. */
+  private def severity2BeyondTheSample(noTransaction: Boolean): Unit = {
     val work = tmpDir("graft-sev2-")
-    // files 1 and 2 carry 160 severity-1 errors each (non-numeric
-    // amounts); file 3, the smallest and so the last partition scanned,
-    // holds the only over-wide name
     def write(name: String, lines: Seq[String]): String = {
       val f = java.nio.file.Paths.get(work, name)
       Files.write(f, ("id;name;amount\n" + lines.mkString("\n") + "\n").getBytes("UTF-8"))
@@ -83,7 +85,7 @@ class PipelineSpec extends SparkSpec {
     val fmt = TextFormat(header = Seq("id", "name", "amount"), sep = ";", skip = 1)
     val load = Load(source = TextSpec(fmt), db = DbConfig(targetSchema = Seq(
       TargetColumn("id", "bigint"), TargetColumn("name", "varchar", size = 5),
-      TargetColumn("amount", "double"))))
+      TargetColumn("amount", "double")), noTransaction = noTransaction))
     val table = tmpDir("graft-table-") + "/t"
     val base = write("base.csv", Seq("1;a;1"))
     LoadRunner.run(spark, Seq(base), load, table)
@@ -105,11 +107,21 @@ class PipelineSpec extends SparkSpec {
     assert(result.errors.forall(_.startsWith("non-numeric value for amount: ")))
   }
 
+  test("a severity-2 value beyond the 100-error sample still aborts the load") {
+    severity2BeyondTheSample(noTransaction = false)
+  }
+
+  test("a severity-2 value beyond the 100-error sample still aborts a noTransaction load") {
+    // a noTransaction store used to overwrite the live table in place, so
+    // the failing job would have deleted it first
+    severity2BeyondTheSample(noTransaction = true)
+  }
+
   test("an Append text load then a keyed Upsert load run within their Spark-job budget") {
-    // each load's cached error job, the Append's write, the Upsert's
-    // shuffle and write; the row counts come from the written footers
-    // and the Upsert's target read plans with a footer's schema, so
-    // neither runs a job
+    // the Append's write, the Upsert's shuffle and write: each load is one
+    // pass, its error sample tapped inside the store's jobs; the row
+    // counts come from the written footers and the Upsert's target read
+    // plans with a footer's schema, so neither runs a job
     val work = tmpDir("graft-jobs-")
     def write(name: String, lines: Seq[String]): String = {
       val f = java.nio.file.Paths.get(work, name)
@@ -124,15 +136,173 @@ class PipelineSpec extends SparkSpec {
     val schema = Seq(TargetColumn("id", "bigint"), TargetColumn("name", "varchar", 10),
       TargetColumn("amount", "double"))
     val table = tmpDir("graft-table-") + "/t"
-    val (results, jobs) = org.apache.spark.graft.Bus.jobsOf(spark.sparkContext) {
-      Seq(LoadRunner.run(spark, first, Load(TextSpec(fmt),
-          DbConfig(targetSchema = schema, strategy = Append)), table),
-        LoadRunner.run(spark, second, Load(TextSpec(fmt),
-          DbConfig(targetSchema = schema, strategy = Upsert(Seq("id")), keepContent = true)), table))
+    val ((results, jobs), blocks) = org.apache.spark.graft.Bus.rddBlocksOf(spark.sparkContext) {
+      org.apache.spark.graft.Bus.jobsOf(spark.sparkContext) {
+        Seq(LoadRunner.run(spark, first, Load(TextSpec(fmt),
+            DbConfig(targetSchema = schema, strategy = Append)), table),
+          LoadRunner.run(spark, second, Load(TextSpec(fmt),
+            DbConfig(targetSchema = schema, strategy = Upsert(Seq("id")), keepContent = true)), table))
+      }
     }
     assert(results.map(_.rows) == Seq(80L, 100L))
     assert(ParquetTable.load(spark, table).count() == 100)
     assert(jobs.size <= JobBudget, s"${jobs.size} jobs:\n${jobs.mkString("\n")}")
+    assert(blocks.isEmpty, s"a load cached ${blocks.mkString(", ")}")
+  }
+
+  /** The physical plans of every query `body` executes. */
+  private def plansOf(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graft.Bus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  private val planHelper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+
+  /** Rows the `graft-text` scans of `plans` output (a file parsed twice
+    * counts its rows twice). */
+  private def textRowsScanned(plans: Seq[org.apache.spark.sql.execution.SparkPlan]): Long = {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    plans.flatMap(p => planHelper.collect(p) {
+      case scan: BatchScanExec => scan.metrics("numOutputRows").value
+    }).sum
+  }
+
+  /** Whether a parquet table scan of `plans` feeds a shuffle. */
+  private def tableShuffled(plans: Seq[org.apache.spark.sql.execution.SparkPlan]): Boolean = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    plans.exists(p => planHelper.collect(p) { case e: ShuffleExchangeExec => e }
+      .exists(e => planHelper.find(e)(_.isInstanceOf[FileSourceScanExec]).isDefined))
+  }
+
+  /** A DeleteInsert load of 3 lines (one NULL key) into a 4-row table,
+    * then one with an over-wide name, which aborts and leaves the table
+    * as it was. */
+  private def deleteInsertLoad(): (LoadResult, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    val work = tmpDir("graft-delins-")
+    def write(name: String, lines: Seq[String]): String = {
+      val f = java.nio.file.Paths.get(work, name)
+      Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+      f.toString
+    }
+    val fmt = TextFormat(header = Seq("id", "name"), sep = ";")
+    val schema = Seq(TargetColumn("id", "bigint"), TargetColumn("name", "varchar", 10))
+    val table = tmpDir("graft-table-") + "/t"
+    LoadRunner.run(spark, Seq(write("base.csv", Seq("1;a", "2;b", "3;c", "x;old"))),
+      Load(TextSpec(fmt), DbConfig(targetSchema = schema)), table)
+    val batch = Seq(write("d1.csv", Seq("2;B2", "9;new")), write("d2.csv", Seq("y;fresh")))
+    var result: LoadResult = null
+    val plans = plansOf {
+      result = LoadRunner.run(spark, batch, Load(TextSpec(fmt),
+        DbConfig(targetSchema = schema, strategy = DeleteInsert(Seq("id")), keepContent = true)), table)
+    }
+    assert(result.rows == 6)
+    assert(result.errors == Seq("non-numeric value for id: y"))
+    def content = ParquetTable.load(spark, table).collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getString(1))).toSet
+    val stored = Set((Some(1L), "a"), (Some(2L), "B2"), (Some(3L), "c"), (Some(9L), "new"),
+      (None, "old"), (None, "fresh"))
+    assert(content == stored)
+    val ex = intercept[IllegalStateException] {
+      LoadRunner.run(spark, Seq(write("d3.csv", Seq("1;A1", "4;waytoolongname"))), Load(TextSpec(fmt),
+        DbConfig(targetSchema = schema, strategy = DeleteInsert(Seq("id")), keepContent = true)), table)
+    }
+    assert(ex.getMessage.startsWith(SchemaCoercion.Severity2Prefix), ex.getMessage)
+    assert(content == stored)
+    (result, plans)
+  }
+
+  test("a small DeleteInsert batch broadcasts its keys and leaves the table unshuffled") {
+    // the batch is parsed twice (its keys, then its rows), and its
+    // errors are still reported once
+    val (_, plans) = deleteInsertLoad()
+    assert(!tableShuffled(plans))
+    assert(textRowsScanned(plans) == 6)
+  }
+
+  test("a DeleteInsert batch too large to broadcast is parsed once and never matches NULL keys") {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try {
+      val (_, plans) = deleteInsertLoad()
+      assert(tableShuffled(plans))
+      val scanned = textRowsScanned(plans)
+      assert(scanned == 3, s"the batch's 3 lines were scanned as $scanned rows")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("cutoffYr2000 decides the century of a two-digit year") {
+    val work = tmpDir("graft-cutoff-")
+    val f = java.nio.file.Paths.get(work, "d.csv")
+    Files.write(f, "1;02.01.55\n".getBytes("UTF-8"))
+    val fmt = TextFormat(header = Seq("id", "day"), sep = ";")
+    def loaded(db: DbConfig): LocalDate = {
+      val table = tmpDir("graft-table-") + "/t"
+      LoadRunner.run(spark, Seq(f.toString), Load(TextSpec(fmt), db.copy(
+        targetSchema = Seq(TargetColumn("id", "bigint"), TargetColumn("day", "date")))), table)
+      ParquetTable.load(spark, table).select("day").head().getDate(0).toLocalDate
+    }
+    assert(loaded(DbConfig()) == LocalDate.of(2055, 1, 2))
+    assert(loaded(DbConfig(cutoffYr2000 = 50)) == LocalDate.of(1955, 1, 2))
+  }
+
+  test("an impossible date or time is a severity-1 error, not a crash") {
+    val work = tmpDir("graft-baddate-")
+    val f = java.nio.file.Paths.get(work, "d.csv")
+    Files.write(f, "1;31.02.2020\n2;19950102250000\n3;25:61:00\n4;29.02.2020\n".getBytes("UTF-8"))
+    val table = tmpDir("graft-table-") + "/t"
+    val result = LoadRunner.run(spark, Seq(f.toString), Load(
+      TextSpec(TextFormat(header = Seq("id", "at"), sep = ";")),
+      DbConfig(targetSchema = Seq(TargetColumn("id", "bigint"), TargetColumn("at", "datetime")))),
+      table)
+    assert(result.stored && result.rows == 4)
+    assert(result.errors.toSet == Set("31.02.2020", "19950102250000", "25:61:00")
+      .map(v => s"invalid date/time for at: $v"))
+    val at = ParquetTable.load(spark, table).orderBy("id").collect()
+      .map(r => Option(r.getTimestamp(1)).map(_.toLocalDateTime)).toSeq
+    assert(at == Seq(None, None, None, Some(LocalDateTime.of(2020, 2, 29, 0, 0))))
+  }
+
+  test("decimal and integral columns keep every digit; out of range is a severity-1 error") {
+    val work = tmpDir("graft-numeral-")
+    val f = java.nio.file.Paths.get(work, "d.csv")
+    Files.write(f, ("1;1234567890123.456789;9007199254740993;1.5\n" +
+      "2;1E30;-9007199254740993;-2.5\n" +
+      "3;N/A;99999999999999999999;1E10\n" +
+      "4;17E2;1.5E3;17E2\n" +
+      "5;1.5E3;17E2;-1.5E3\n").getBytes("UTF-8"))
+    val table = tmpDir("graft-table-") + "/t"
+    val result = LoadRunner.run(spark, Seq(f.toString), Load(
+      TextSpec(TextFormat(header = Seq("id", "amount", "big", "small"), sep = ";")),
+      DbConfig(targetSchema = Seq(TargetColumn("id", "bigint"), TargetColumn("amount", "decimal"),
+        TargetColumn("big", "bigint"), TargetColumn("small", "smallint")))), table)
+    assert(result.stored && result.rows == 5)
+    assert(result.errors.toSet == Set(
+      "numeric value out of range for amount: 1E30",
+      "non-numeric value for amount: N/A",
+      "numeric value out of range for big: 99999999999999999999",
+      "numeric value out of range for small: 1E10"))
+    val rows = ParquetTable.load(spark, table).orderBy("id").collect().map(r =>
+      (Option(r.getDecimal(1)).map(BigDecimal(_)), Option(r.get(2)), Option(r.get(3)))).toSeq
+    assert(rows == Seq(
+      (Some(BigDecimal("1234567890123.456789")), Some(9007199254740993L), Some(1)),
+      (None, Some(-9007199254740993L), Some(-2)),
+      (None, None, None),
+      // an exponent beyond the fraction digits (a negative scale)
+      (Some(BigDecimal(1700)), Some(1500L), Some(1700)),
+      (Some(BigDecimal(1500)), Some(1700L), Some(-1500))))
   }
 
   test("firstLine hook reads a windows-1252 file's first line") {
@@ -310,7 +480,8 @@ class PipelineSpec extends SparkSpec {
     assert(Files.exists(java.nio.file.Paths.get(work, "inner.csv")))
   }
 
-  /** Spark jobs of the Append + Upsert load pair above (12 when the row
-    * count and the target read each ran their own jobs). */
-  private val JobBudget = 5
+  /** Spark jobs of the Append + Upsert load pair above (5 while each load
+    * cached its batch and ran an error job; 12 when the row count and the
+    * target read each ran their own jobs). */
+  private val JobBudget = 3
 }

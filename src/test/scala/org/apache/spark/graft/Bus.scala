@@ -1,7 +1,7 @@
 package org.apache.spark.graft
 
 import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobStart}
 import scala.jdk.CollectionConverters._
 
 /** Test access to the listener bus, which Spark keeps package-private. */
@@ -30,6 +30,25 @@ object Bus {
       val result = body
       drain(sc)
       (result, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `body`'s result and the RDD blocks (cached partitions) stored while
+    * it ran, by block name. */
+  def rddBlocksOf[T](sc: SparkContext)(body: => T): (T, Seq[String]) = {
+    val blocks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
+        val info = e.blockUpdatedInfo
+        if (info.blockId.isRDD && info.storageLevel.isValid) blocks.add(info.blockId.name)
+      }
+    }
+    drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      drain(sc)
+      (result, blocks.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }
