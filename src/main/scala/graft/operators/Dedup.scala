@@ -680,13 +680,12 @@ object Dedup {
     pmod(id, lit(buckets.toLong)).cast("int")
 
   /** Manifest name of the shingle sidecar's width
-    * ([[StoreSwap.layoutConstant]]). */
+    * ([[StoreSwap.Snapshot.layoutConstant]]). */
   private val ShingleWidthKey = "shingles.n"
 
-  /** The shingle sidecar's width at `asOf` (None = the current view). */
-  private def shingleWidth(spark: SparkSession, path: String,
-                           asOf: Option[Int] = None): Int =
-    StoreSwap.layoutConstant(spark, path, ShingleWidthKey, asOf).getOrElse(
+  /** The shingle sidecar's width in the store snapshot `snap` of `path`. */
+  private def shingleWidth(snap: StoreSwap.Snapshot, path: String): Int =
+    snap.layoutConstant(ShingleWidthKey).getOrElse(
       sys.error(s"$path records no shingle width — build the sidecar" +
         " with writeShingleSidecar")).toInt
 
@@ -724,7 +723,7 @@ object Dedup {
   private def rewriteSignatures(spark: SparkSession, path: String,
                                 idCol: String, touched: Seq[Int],
                                 rows: DataFrame): Unit = {
-    val merged = StoreSwap.readDir(spark, path, "data", "d_bucket")
+    val merged = StoreSwap.snapshot(spark, path).read("data", "d_bucket")
       .filter(col("d_bucket").isin(touched: _*))
       .unionByName(rows)
       .repartition(col("d_bucket"))
@@ -743,7 +742,7 @@ object Dedup {
   private def rewriteShingles(spark: SparkSession, path: String,
                               touched: Seq[Int], docs: DataFrame,
                               xsCol: String): Unit = {
-    val stored = StoreSwap.readDir(spark, path, "shingles", "d_bucket")
+    val stored = StoreSwap.snapshot(spark, path).read("shingles", "d_bucket")
       .filter(col("d_bucket").isin(touched: _*))
       .select(col("id"), col("x"), col("d_bucket"), lit(false).as("fresh"))
     val fresh = docs.select(col("id"), explode_outer(col(xsCol)).as("x"),
@@ -774,7 +773,7 @@ object Dedup {
                               delta: DataFrame, idCol: String): Seq[Int] =
     StoreSwap.transact(spark, path) {
     val rows = delta.withColumn("d_bucket",
-      docBucket(col(idCol), StoreSwap.bucketCount(spark, path)))
+      docBucket(col(idCol), StoreSwap.snapshot(spark, path).bucketCount))
     val touched = distinctInts(rows.select(col("d_bucket")))
     if (touched.nonEmpty)
       rewriteSignatures(spark, path, idCol, touched, rows)
@@ -810,13 +809,14 @@ object Dedup {
     StoreSwap.transact(spark, path) {
     if (!batchId.exists(
         StoreSwap.committedBatches(spark, path, "data").contains)) {
-      val buckets = StoreSwap.bucketCount(spark, path)
+      val buckets = StoreSwap.snapshot(spark, path).bucketCount
       val sideN =
-        if (shingleSidecarExists(spark, path)) Some(shingleWidth(spark, path))
+        if (shingleSidecarExists(spark, path))
+          Some(shingleWidth(StoreSwap.snapshot(spark, path), path))
         else None
       val layout =
-        if (StoreSwap.dirExists(spark, path, "bands"))
-          Some(bandLayout(spark, path))
+        if (StoreSwap.snapshot(spark, path).exists("bands"))
+          Some(bandLayout(StoreSwap.snapshot(spark, path), path))
         else None
       val docs = docShingleSets(deltaDocs, idCol, textCol, buckets,
           n +: sideN.toSeq)
@@ -847,11 +847,14 @@ object Dedup {
   def unifySignatureStore(spark: SparkSession, path: String): Unit =
     StoreSwap.open(spark, path)
 
-  /** The full signature store plus its recorded bucket count. */
+  /** The full signature store plus its recorded bucket count, both from
+    * one resolution of its manifest. */
   def readSignatureStore(spark: SparkSession,
                          path: String): (DataFrame, Int) =
-    (StoreSwap.readDir(spark, path, "data", "d_bucket"),
-      StoreSwap.bucketCount(spark, path))
+    signaturesIn(StoreSwap.snapshot(spark, path))
+
+  private def signaturesIn(s: StoreSwap.Snapshot): (DataFrame, Int) =
+    (s.read("data", "d_bucket"), s.bucketCount)
 
   /** TIME-TRAVEL read of the signature store — the text twin of
     * [[Similarity.readStandingStoreAt]]: any retained manifest version
@@ -863,11 +866,8 @@ object Dedup {
     * [[readSignatureStore]]: the `d_bucket` partition column is kept
     * in both. The bucket count is the one recorded at `version`. */
   def readSignatureStoreAt(spark: SparkSession, path: String,
-                           version: Int): (DataFrame, Int) = {
-    val data = StoreSwap.readVersionedAt(spark, path, "data", "d_bucket",
-      version)
-    (data, StoreSwap.bucketCount(spark, path, Some(version)))
-  }
+                           version: Int): (DataFrame, Int) =
+    signaturesIn(StoreSwap.snapshot(spark, path, Some(version)))
 
   /** Retained (readable) manifest versions of the signature store,
     * ascending; last = live. */
@@ -890,8 +890,8 @@ object Dedup {
   def signatureStoreDiff(spark: SparkSession, path: String,
                          idCol: String, fromV: Int,
                          toV: Int): DataFrame = {
-    val eA = StoreSwap.snapshotEntriesAt(spark, path, "data", fromV)
-    val eB = StoreSwap.snapshotEntriesAt(spark, path, "data", toV)
+    val eA = StoreSwap.snapshot(spark, path, Some(fromV)).entriesOf("data")
+    val eB = StoreSwap.snapshot(spark, path, Some(toV)).entriesOf("data")
     val changed = (eA.keySet ++ eB.keySet)
       .filter(d => eA.get(d) != eB.get(d))
       .map(_.stripPrefix("d_bucket=").toInt).toSeq.sorted
@@ -905,8 +905,7 @@ object Dedup {
     // from a feed a replica trusts). k longs per doc over the
     // mutation footprint is still delta-scale, not corpus-scale.
     def side(v: Int, as: String) =
-      StoreSwap.readVersionedAt(spark, path, "data", "d_bucket", v,
-          buckets = Some(changed))
+      StoreSwap.snapshot(spark, path, Some(v)).read("data", "d_bucket", Some(changed))
         .groupBy(col(idCol))
         .agg(transform(array_sort(collect_list(struct(col("k"), col("mh")))),
           e => e.getField("mh")).as(as))
@@ -945,7 +944,7 @@ object Dedup {
     val removed = before - StoreSwap.stagedRewrite(spark, path, "d_bucket",
       touched, kept, Seq(col(idCol), col("k")))
     if (shingleSidecarExists(spark, path)) {
-      val shKept = StoreSwap.readDir(spark, path, "shingles", "d_bucket")
+      val shKept = StoreSwap.snapshot(spark, path).read("shingles", "d_bucket")
         .filter(col("d_bucket").isin(touched: _*))
         .join(ids.select(col(idCol).as("id")), Seq("id"), "left_anti")
       StoreSwap.stagedRewrite(spark, path, "d_bucket", touched, shKept,
@@ -979,7 +978,7 @@ object Dedup {
   def writeShingleSidecar(spark: SparkSession, path: String,
                           docs: DataFrame, idCol: String, textCol: String,
                           n: Int = 3): Unit = StoreSwap.transact(spark, path) {
-    val buckets = StoreSwap.bucketCount(spark, path)
+    val buckets = StoreSwap.snapshot(spark, path).bucketCount
     StoreSwap.overwriteDir(spark, path, "shingles", "d_bucket",
       shinglePolyHashes(docs, idCol, textCol, n)
         .withColumn("d_bucket", docBucket(col("id"), buckets)),
@@ -990,7 +989,7 @@ object Dedup {
   /** Whether `path` carries the shingle-hash sidecar. */
   private[operators] def shingleSidecarExists(spark: SparkSession,
                                               path: String): Boolean =
-    StoreSwap.dirExists(spark, path, "shingles")
+    StoreSwap.snapshot(spark, path).exists("shingles")
 
   /** Absorb a delta load into the shingle sidecar — REPLACE semantics
     * per doc (the sidecar mirrors current text; see
@@ -1006,9 +1005,9 @@ object Dedup {
     StoreSwap.transact(spark, path) {
     require(shingleSidecarExists(spark, path),
       s"$path has no shingle sidecar — build it with writeShingleSidecar")
-    val n = shingleWidth(spark, path)
+    val n = shingleWidth(StoreSwap.snapshot(spark, path), path)
     val docs = docShingleSets(deltaDocs, idCol, textCol,
-        StoreSwap.bucketCount(spark, path), Seq(n))
+        StoreSwap.snapshot(spark, path).bucketCount, Seq(n))
       .localCheckpoint(true) // |docs| rows, read twice
     val touched = distinctInts(docs.select(col("d_bucket")))
     if (touched.nonEmpty)
@@ -1128,7 +1127,7 @@ object Dedup {
   private def writeBandInventory(spark: SparkSession, path: String,
                                  buckets: Int): Unit =
     StoreSwap.overwriteDir(spark, path, "bands_inv", "d_bucket",
-      StoreSwap.readDir(spark, path, "bands", "bb_bucket")
+      StoreSwap.snapshot(spark, path).read("bands", "bb_bucket")
         .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
         .withColumn("d_bucket", docBucket(col("id"), buckets)),
       Seq(col("id"), col("band")))
@@ -1166,17 +1165,16 @@ object Dedup {
       Map(BandsKey -> Seq(bands.toLong), RowsPerBandKey -> Seq(r.toLong),
         IdxBucketsKey -> Seq(idxBuckets.toLong)))
 
-  /** (bands, rowsPerBand, idxBuckets) a reader at `asOf` (None = the
-    * current view) must derive band rows with, from the manifest
-    * ([[StoreSwap.layoutConstant]]) — a PINNED read takes the pinned
+  /** (bands, rowsPerBand, idxBuckets) a reader of the store snapshot
+    * `snap` of `path` must derive band rows with, from its manifest
+    * ([[StoreSwap.Snapshot.layoutConstant]]) — a PINNED read takes the pinned
     * manifest's layout: a [[writeBandIndex]] rebuild under a different
     * `graft.lsh.bandIndexBuckets` inside the retention window changes
     * the live one, and deriving delta `bb_bucket`s from it against
     * band rows PINNED under the old layout silently drops candidates. */
-  private def bandLayout(spark: SparkSession, path: String,
-                         asOf: Option[Int] = None): (Int, Int, Int) = {
-    def constant(name: String) =
-      StoreSwap.layoutConstant(spark, path, name, asOf).map(_.toInt)
+  private def bandLayout(snap: StoreSwap.Snapshot,
+                         path: String): (Int, Int, Int) = {
+    def constant(name: String) = snap.layoutConstant(name).map(_.toInt)
     (for (b <- constant(BandsKey); r <- constant(RowsPerBandKey);
           idx <- constant(IdxBucketsKey)) yield (b, r, idx))
       .getOrElse(sys.error(s"$path has no band index — build it with" +
@@ -1187,7 +1185,7 @@ object Dedup {
     * their doc buckets `db`. */
   private def invRowsForDocs(spark: SparkSession, path: String,
                              ids: DataFrame, db: Seq[Int]): DataFrame =
-    StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+    StoreSwap.snapshot(spark, path).read("bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .join(ids, Seq("id"), "left_semi")
       .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
@@ -1200,7 +1198,7 @@ object Dedup {
                               ids: DataFrame, idCol: String, db: Seq[Int],
                               layout: (Int, Int, Int)): DataFrame = {
     val (bands, r, idxBuckets) = layout
-    val docSigs = StoreSwap.readDir(spark, path, "data", "d_bucket")
+    val docSigs = StoreSwap.snapshot(spark, path).read("data", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .join(ids.select(col("id").as(idCol)), Seq(idCol), "left_semi")
       .select(col(idCol), col("k"), col("mh"))
@@ -1222,13 +1220,13 @@ object Dedup {
                                rows: DataFrame): Seq[Int] = {
     val touched = distinctInts(rows.select(col("bb_bucket")))
     if (touched.nonEmpty) {
-      val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
+      val slice = StoreSwap.snapshot(spark, path).read("bands", "bb_bucket")
         .filter(col("bb_bucket").isin(touched: _*))
         .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
       StoreSwap.stagedRewrite(spark, path, "bb_bucket", touched,
         slice.unionByName(rows).repartition(col("bb_bucket")).distinct(),
         Seq(col("band"), col("bsig"), col("id")), "bands")
-      val invSlice = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+      val invSlice = StoreSwap.snapshot(spark, path).read("bands_inv", "d_bucket")
         .filter(col("d_bucket").isin(db: _*))
         .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
       StoreSwap.stagedRewrite(spark, path, "d_bucket", db,
@@ -1254,11 +1252,12 @@ object Dedup {
   def mergeIntoBandIndex(spark: SparkSession, path: String,
                          docIds: DataFrame,
                          idCol: String): Seq[Int] = StoreSwap.transact(spark, path) {
-    val buckets = StoreSwap.bucketCount(spark, path)
+    val buckets = StoreSwap.snapshot(spark, path).bucketCount
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
     rewriteBandIndex(spark, path, buckets, db,
-      bandRowsForDocs(spark, path, ids, idCol, db, bandLayout(spark, path)))
+      bandRowsForDocs(spark, path, ids, idCol, db,
+        bandLayout(StoreSwap.snapshot(spark, path), path)))
   }
 
   /** Drop docs from the band index. The docs' rows (INCLUDING stale
@@ -1269,13 +1268,13 @@ object Dedup {
   def forgetFromBandIndex(spark: SparkSession, path: String,
                           docIds: DataFrame,
                           idCol: String): Long = StoreSwap.transact(spark, path) {
-    val buckets = StoreSwap.bucketCount(spark, path)
+    val buckets = StoreSwap.snapshot(spark, path).bucketCount
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
     val touched = distinctInts(invRowsForDocs(spark, path, ids, db)
       .select(col("bb_bucket")))
     if (touched.isEmpty) return 0L
-    val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
+    val slice = StoreSwap.snapshot(spark, path).read("bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
     val kept = slice.join(ids, Seq("id"), "left_anti")
     val before = slice.count()
@@ -1283,7 +1282,7 @@ object Dedup {
       "bb_bucket", touched, kept,
       Seq(col("band"), col("bsig"), col("id")), "bands")
     // drop the docs' inventory rows too, in the same commit
-    val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+    val invKept = StoreSwap.snapshot(spark, path).read("bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .join(ids, Seq("id"), "left_anti")
     StoreSwap.stagedRewrite(spark, path, "d_bucket", db, invKept,
@@ -1306,11 +1305,11 @@ object Dedup {
   def reindexDocsInBandIndex(spark: SparkSession, path: String,
                              docIds: DataFrame,
                              idCol: String): Long = StoreSwap.transact(spark, path) {
-    val buckets = StoreSwap.bucketCount(spark, path)
+    val buckets = StoreSwap.snapshot(spark, path).bucketCount
     val ids = docIds.select(col(idCol).as("id")).distinct()
     val db = distinctInts(ids.select(docBucket(col("id"), buckets)))
     val fresh = bandRowsForDocs(spark, path, ids, idCol, db,
-      bandLayout(spark, path))
+      bandLayout(StoreSwap.snapshot(spark, path), path))
     val stale = invRowsForDocs(spark, path, ids, db)
       .join(fresh.select(col("id"), col("band"), col("bsig")),
         Seq("id", "band", "bsig"), "left_anti")
@@ -1319,7 +1318,7 @@ object Dedup {
       .unionByName(fresh.select(col("bb_bucket"))))
     if (touched.isEmpty) return 0L
     val nStale = stale.count()
-    val slice = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
+    val slice = StoreSwap.snapshot(spark, path).read("bands", "bb_bucket")
       .filter(col("bb_bucket").isin(touched: _*))
     val kept = slice
       .join(stale.select(col("id"), col("band"), col("bsig")),
@@ -1330,7 +1329,7 @@ object Dedup {
     StoreSwap.stagedRewrite(spark, path, "bb_bucket", touched, merged,
       Seq(col("band"), col("bsig"), col("id")), "bands")
     // inventory := exactly the fresh rows for these docs
-    val invKept = StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+    val invKept = StoreSwap.snapshot(spark, path).read("bands_inv", "d_bucket")
       .filter(col("d_bucket").isin(db: _*))
       .select(col("id"), col("band"), col("bsig"), col("bb_bucket"))
       .join(ids, Seq("id"), "left_anti")
@@ -1369,29 +1368,22 @@ object Dedup {
                     asOf: Option[Int] = None): DataFrame = {
     // resolved first: a version outside the retained window fails here
     // with the retention message
-    val sidecarPresent = asOf match {
-      case Some(v) =>
-        StoreSwap.snapshotEntriesAt(spark, path, "shingles", v).nonEmpty
-      case None => shingleSidecarExists(spark, path)
-    }
-    // every layout constant resolves from the manifest the read pins:
-    // the PINNED one on historical replays (a post-pin rebuild may have
-    // changed them), the current one live
-    val buckets = StoreSwap.bucketCount(spark, path, asOf)
-    val (bands, r, idxBuckets) = bandLayout(spark, path, asOf)
+    val snap = StoreSwap.snapshot(spark, path, asOf)
+    val sidecarPresent = snap.exists("shingles")
+    // every layout constant and dataDir resolves from the ONE manifest
+    // the read pins: the PINNED one on historical replays (a post-pin
+    // rebuild may have changed them), the current one live
+    val buckets = snap.bucketCount
+    val (bands, r, idxBuckets) = bandLayout(snap, path)
     require(bands * r == numHashes, "band geometry must match the store")
-    // version-pinned store reads for the historical replay
-    def storeDir(dataDir: String, partCol: String): DataFrame = asOf match {
-      case Some(v) =>
-        StoreSwap.readVersionedAt(spark, path, dataDir, partCol, v)
-      case None => StoreSwap.readDir(spark, path, dataDir, partCol)
-    }
+    def storeDir(dataDir: String, partCol: String): DataFrame =
+      snap.read(dataDir, partCol)
     if (asOf.isDefined) require(sidecarPresent,
       s"$path has no shingle sidecar at version ${asOf.get} - historical" +
         " judgment has no text fallback (the corpus text of that moment" +
         " is gone); only sidecar-carrying versions replay")
     if (sidecarPresent) {
-      val sn = shingleWidth(spark, path, asOf)
+      val sn = shingleWidth(snap, path)
       require(sn == n,
         s"shingle width n=$n must match the sidecar's (n=$sn)")
     }

@@ -619,7 +619,7 @@ object ScaleQueries {
       changed.select(col("doc_id")), "doc_id")
     Dedup.reindexDocsInBandIndex(spark, store,
       changed.select(col("doc_id")), "doc_id")
-    StoreSwap.readDir(spark, store, "bands", "bb_bucket")
+    StoreSwap.snapshot(spark, store).read("bands", "bb_bucket")
       .select(col("id").as("doc_id"), col("band").cast("long").as("band"),
         col("bsig"))
       .orderBy(col("doc_id"), col("band"), col("bsig"))

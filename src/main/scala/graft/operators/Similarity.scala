@@ -782,7 +782,7 @@ object Similarity {
     * and cluster-sorts within each, so a delta batch touching t
     * clusters reads at most min(t, buckets) directories and skips
     * row groups inside them via min/max stats. The bucket count is a
-    * layout constant of the store manifest ([[StoreSwap.bucketCount]]),
+    * layout constant of the store manifest ([[StoreSwap.Snapshot.bucketCount]]),
     * recorded in the same commit as the data, so readers derive the
     * same hash —
     * at 100 TB, buckets ≈ corpus size / (a few GB) keeps partition
@@ -812,10 +812,12 @@ object Similarity {
     * bucket filters prune files without recomputation) — the time-
     * travel read [[readStandingStoreAt]] keeps it too, so the two
     * paths are schema-equal. */
-  def readStandingStore(spark: SparkSession, path: String): (DataFrame, Int) = {
-    (StoreSwap.readDir(spark, path, "data", "c_bucket"),
-      StoreSwap.bucketCount(spark, path))
-  }
+  def readStandingStore(spark: SparkSession, path: String): (DataFrame, Int) =
+    standingIn(StoreSwap.snapshot(spark, path))
+
+  /** The store's data and bucket count, from one resolved manifest. */
+  private def standingIn(s: StoreSwap.Snapshot): (DataFrame, Int) =
+    (s.read("data", "c_bucket"), s.bucketCount)
 
   /** TIME-TRAVEL read of a standing store: the data AS OF
     * committed manifest `version` — the pre-mutation snapshot an
@@ -827,11 +829,8 @@ object Similarity {
     * to [[readStandingStore]]: the `c_bucket` partition column is kept
     * in both. */
   def readStandingStoreAt(spark: SparkSession, path: String,
-                          version: Int): (DataFrame, Int) = {
-    val data = StoreSwap.readVersionedAt(spark, path, "data", "c_bucket",
-      version)
-    (data, StoreSwap.bucketCount(spark, path, Some(version)))
-  }
+                          version: Int): (DataFrame, Int) =
+    standingIn(StoreSwap.snapshot(spark, path, Some(version)))
 
   /** Retained (readable) manifest versions of a standing store,
     * ascending; last = the live version. */
@@ -853,8 +852,8 @@ object Similarity {
     * changelog. */
   def standingStoreDiff(spark: SparkSession, path: String,
                         fromV: Int, toV: Int): DataFrame = {
-    val eA = StoreSwap.snapshotEntriesAt(spark, path, "data", fromV)
-    val eB = StoreSwap.snapshotEntriesAt(spark, path, "data", toV)
+    val eA = StoreSwap.snapshot(spark, path, Some(fromV)).entriesOf("data")
+    val eB = StoreSwap.snapshot(spark, path, Some(toV)).entriesOf("data")
     val changed = (eA.keySet ++ eB.keySet)
       .filter(d => eA.get(d) != eB.get(d))
       .map(_.stripPrefix("c_bucket=").toInt).toSeq.sorted
@@ -862,8 +861,7 @@ object Similarity {
       return spark.range(0).select(lit("").as("change"),
         lit(0L).as("vec_id"), lit(0L).as("cluster")).filter(lit(false))
     def side(v: Int, as: String) =
-      StoreSwap.readVersionedAt(spark, path, "data", "c_bucket", v,
-          buckets = Some(changed))
+      StoreSwap.snapshot(spark, path, Some(v)).read("data", "c_bucket", Some(changed))
         .select(col("vec_id"), col("cluster").as(as))
     side(fromV, "old_cluster")
       .join(side(toV, "new_cluster"), Seq("vec_id"), "full_outer")
@@ -938,11 +936,10 @@ object Similarity {
   private def prunedStoreRead(spark: SparkSession, path: String,
                               touched: Seq[Long], clusterCol: String,
                               pin: Option[Int]): DataFrame = {
-    val buckets = StoreSwap.bucketCount(spark, path, pin)
+    val snap = StoreSwap.snapshot(spark, path, pin)
+    val buckets = snap.bucketCount
     val tb = touched.map(bucketOf(_, buckets)).distinct
-    pin.fold(StoreSwap.readDir(spark, path, "data", "c_bucket"))(v =>
-        StoreSwap.readVersionedAt(spark, path, "data", "c_bucket", v,
-          buckets = Some(tb)))
+    snap.read("data", "c_bucket", pin.map(_ => tb))
       .filter(col("c_bucket").isin(tb: _*) &&
         col(clusterCol).isin(touched: _*))
       .drop("c_bucket")
@@ -972,7 +969,7 @@ object Similarity {
                             batchId: Option[Long] = None): Unit = {
     val spark = assigned.sparkSession
     StoreSwap.transact(spark, path) {
-    val buckets = StoreSwap.bucketCount(spark, path)
+    val buckets = StoreSwap.snapshot(spark, path).bucketCount
     StoreSwap.appendDir(spark, path, "data", "c_bucket",
       assigned.withColumn("c_bucket",
         pmod(col(clusterCol), lit(buckets.toLong)).cast("int")),
@@ -1016,8 +1013,7 @@ object Similarity {
     * transaction. */
   private def codebookDf(spark: SparkSession, path: String,
                          pin: Option[Int] = None): DataFrame = {
-    pin.fold(StoreSwap.readDir(spark, path, "codebook", "part"))(v =>
-      StoreSwap.readVersionedAt(spark, path, "codebook", "part", v))
+    StoreSwap.snapshot(spark, path, pin).read("codebook", "part")
       .drop("part")
   }
 
@@ -1033,7 +1029,7 @@ object Similarity {
     * the latest refit's. */
   def readCodebookAt(spark: SparkSession, path: String,
                      version: Int): Seq[(Long, Seq[Double])] =
-    StoreSwap.readVersionedAt(spark, path, "codebook", "part", version)
+    StoreSwap.snapshot(spark, path, Some(version)).read("codebook", "part")
       .orderBy(col("cid")).collect()
       .map(r => r.getAs[Long]("cid") ->
         r.getSeq[Double](r.fieldIndex("cent")).toSeq)
@@ -1132,16 +1128,16 @@ object Similarity {
     * reader-atomicity point: three separate latest-manifest resolutions
     * could straddle a commit, a single pinned version cannot. None =
     * the store has no sidecar. */
-  private def pqPin(spark: SparkSession, path: String): Option[Int] =
-    StoreSwap.latestSnapshot(spark, path, "pq_meta")
-      .map(_ => StoreSwap.snapshotVersions(spark, path).last)
+  private def pqPin(spark: SparkSession, path: String): Option[Int] = {
+    val s = StoreSwap.snapshot(spark, path)
+    Some(s.version).filter(_ => s.exists("pq_meta"))
+  }
 
   /** A sidecar artifact at the pinned version (the current view when
     * unpinned). */
   private def pqDirDf(spark: SparkSession, path: String, dataDir: String,
                       partCol: String, pin: Option[Int]): DataFrame =
-    pin.fold(StoreSwap.readDir(spark, path, dataDir, partCol))(v =>
-      StoreSwap.readVersionedAt(spark, path, dataDir, partCol, v))
+    StoreSwap.snapshot(spark, path, pin).read(dataDir, partCol)
 
   /** Train PQ codebooks from the standing store's OWN vectors and
     * persist them plus the corpus codes beside it — the missing half of
@@ -1487,7 +1483,7 @@ object Similarity {
   def appendPqCodes(spark: SparkSession, path: String, delta: DataFrame,
                     idCol: String, vecCol: String, m: Int,
                     dsub: Int): Unit = StoreSwap.transact(spark, path) {
-    val buckets = StoreSwap.bucketCount(spark, path)
+    val buckets = StoreSwap.snapshot(spark, path).bucketCount
     // a residual/rotated sidecar's deltas must be encoded the same way
     // — the flavor travels with the sidecar, not the caller. Pin the
     // codebook and flavor to ONE version.
@@ -1593,7 +1589,7 @@ object Similarity {
     // budget)
     val rowBytes = m * ksub * 32L + 256L
     val broadcastTables = probesM.count() * rowBytes <= targetBytes
-    val buckets = StoreSwap.bucketCount(spark, storePath, pin)
+    val buckets = StoreSwap.snapshot(spark, storePath, pin).bucketCount
     val probed = probesM.select(col("qc")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val tb = probed.map(bucketOf(_, buckets)).distinct
@@ -1711,19 +1707,12 @@ object Similarity {
                           dataDir: String, partCol: String,
                           maxFiles: Int): Seq[Int] = {
     val conf = spark.sessionState.newHadoopConf()
-    StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap {
-      case (_, entries) => entries.toSeq.flatMap { case (d, gens) =>
-        d.stripPrefix(partCol + "=").toIntOption.filter { _ =>
-          gens.map { g =>
-            val p = new org.apache.hadoop.fs.Path(
-              s"$path/$dataDir.gens/g$g/$d")
-            val fs = p.getFileSystem(conf)
-            if (fs.exists(p)) fs.listStatus(p)
-              .count(_.getPath.getName.startsWith("part-"))
-            else 0
-          }.sum > maxFiles
-        }
-      }
+    StoreSwap.snapshot(spark, path).entriesOf(dataDir).toSeq.flatMap {
+      case (d, gens) =>
+        d.stripPrefix(partCol + "=").toIntOption.filter(_ => gens.map(g =>
+          graft.sinks.ParquetFooters.files(conf,
+            new org.apache.hadoop.fs.Path(s"$path/$dataDir.gens/g$g/$d")).size
+        ).sum > maxFiles)
     }.sorted
   }
 
@@ -1739,7 +1728,7 @@ object Similarity {
     val frag = fragBuckets(spark, path, "pq_codes", "c_bucket",
       maxFilesPerBucket)
     if (frag.isEmpty) return Seq.empty
-    val slice = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
+    val slice = StoreSwap.snapshot(spark, path).read("pq_codes", "c_bucket")
       .filter(col("c_bucket").isin(frag: _*))
     StoreSwap.stagedRewrite(spark, path, "c_bucket", frag, slice,
       Seq(col("cluster"), col("id")), "pq_codes")
@@ -1789,8 +1778,9 @@ object Similarity {
   private def refreshPqCodes(spark: SparkSession, path: String,
                              df: DataFrame, idCol: String,
                              vecCol: String): Unit = {
-    if (!StoreSwap.dirExists(spark, path, "pq_codebook")) return
-    val geo = StoreSwap.readDir(spark, path, "pq_codebook", "part")
+    val snap = StoreSwap.snapshot(spark, path)
+    if (!snap.exists("pq_codebook")) return
+    val geo = snap.read("pq_codebook", "part")
       .agg(max(col("sub")).as("m1"), max(size(col("cent"))).as("d")).head
     appendPqCodes(spark, path,
       df.select(col(idCol), col(vecCol), col("cluster")),
@@ -1804,8 +1794,9 @@ object Similarity {
   private def dropPqCodes(spark: SparkSession, path: String,
                           touched: Seq[Int],
                           keep: DataFrame => DataFrame): Unit = {
-    if (!StoreSwap.dirExists(spark, path, "pq_codes")) return
-    val slice = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
+    val snap = StoreSwap.snapshot(spark, path)
+    if (!snap.exists("pq_codes")) return
+    val slice = snap.read("pq_codes", "c_bucket")
       .filter(col("c_bucket").isin(touched: _*))
     StoreSwap.stagedRewrite(spark, path, "c_bucket", touched, keep(slice),
       Seq(col("cluster"), col("id")), "pq_codes")

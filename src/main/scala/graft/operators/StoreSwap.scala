@@ -1,16 +1,22 @@
 package graft.operators
 
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd, SparkListenerTaskStart}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructType}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import graft.sinks.ParquetFooters
+import scala.util.control.NonFatal
 
-/** The ONE commit protocol of the partitioned standing stores
+/** The ONE commit protocol of graft: of the partitioned standing stores
   * ([[Similarity.writeStandingStore]]'s embedding store and
   * [[Dedup.writeSignatureStore]]'s minhash store, with their codebook,
-  * PQ sidecar, band index and shingle sidecar).
+  * PQ sidecar, band index and shingle sidecar) and of the tables
+  * ([[graft.sinks.ParquetTable]]: a store with one one-bucket dataDir,
+  * see [[writeTable]]).
   *
   * A store is a set of dataDirs (`data`, `bands`, `codebook`,
   * `pq_codes`, …), each laid out as IMMUTABLE generation dirs
@@ -21,7 +27,7 @@ import graft.sinks.ParquetFooters
   * stay O(delta)), plus reserved `#` entries: the per-dataDir
   * exactly-once batch ledgers and versioned model/layout constants.
   * Layout constants (a store's bucket count, its shingle sidecar's
-  * width, its band layout) live ONLY there: [[layoutConstant]] resolves
+  * width, its band layout) live ONLY there: [[Snapshot.layoutConstant]] resolves
   * them from the manifest a reader already holds, with no Spark job.
   *
   * '''Commit.''' Every mutation — a bucket rewrite, an append, a full
@@ -107,16 +113,41 @@ object StoreSwap {
     * writer and broken (1 h — far beyond any single mutation here). */
   val DefaultLeaseStaleMs: Long = 60L * 60 * 1000
 
+  /** This JVM as a lease names its holder: `<pid>@<host>`. */
+  private val ThisJvm =
+    java.lang.management.ManagementFactory.getRuntimeMXBean.getName
+
+  /** The lease tokens this JVM holds now ([[withLease]]). */
+  private val liveTokens = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Whether the lease `token` (`<pid>@<host>#<id>`) was left by a holder
+    * that is gone: this JVM, which holds no such lease, or another JVM of
+    * this host that no longer runs — a driver killed mid-commit. Asked
+    * only of a lease on the local file system: a pid and a host name name
+    * a process of this machine only where no other machine shares the
+    * store. Any other lease ages out after `staleMs`. */
+  private def holderGone(token: String): Boolean = {
+    val (jvm, self) = (token.takeWhile(_ != '#'), ThisJvm.split("@", 2))
+    jvm.split("@", 2) match {
+      case Array(pid, host) if self.length == 2 && host == self(1) =>
+        if (jvm == ThisJvm) !liveTokens.contains(token)
+        else pid.toLongOption.exists(p =>
+          !java.lang.ProcessHandle.of(p).map[Boolean](_.isAlive).orElse(false))
+      case _ => false
+    }
+  }
+
   /** Run `body` holding `path`'s WRITER LEASE — the stores are
     * single-mutator by contract: two concurrent mutators would
     * overwrite each other's staging dir and race the manifest rename.
     * The lease file (`$path/_writer_lease`) is created
     * create-if-absent; a second mutator fails fast with an error
     * naming the holder rather than corrupting state. A lease older
-    * than `staleMs` is presumed crashed and broken (a crashed
-    * writer's staged generations are unreferenced orphans the next
-    * commit reclaims). Reentrant per thread, so composite mutations
-    * acquire once. Best-effort on filesystems without atomic
+    * than `staleMs`, or a local one whose holder is gone ([[holderGone]]:
+    * a driver of this host killed mid-commit), is presumed crashed and
+    * broken (a crashed writer's staged generations are unreferenced
+    * orphans the next commit reclaims). Reentrant per thread, so
+    * composite mutations acquire once. Best-effort on filesystems without atomic
     * create-if-absent semantics (raw S3) — there, front the store
     * with a real lock service or table format. The stale-break itself
     * has a delete/create race window (two writers that both judged the
@@ -128,24 +159,28 @@ object StoreSwap {
     if (heldByThread.get.contains(path)) return body
     val lp = lease(path)
     val fs = fsOf(spark, lp)
-    if (fs.exists(lp)) {
-      val age = System.currentTimeMillis() -
-        fs.getFileStatus(lp).getModificationTime
-      if (age >= staleMs) fs.delete(lp, false) // crashed holder
-    }
-    // the token is unique per acquisition, not just per process: if THIS
-    // writer's lease is stale-broken by another mutator mid-run, release
-    // must NOT delete the new holder's lease (that would cascade a third
-    // mutator into the overlap the lease exists to prevent)
-    val token =
-      s"${java.lang.management.ManagementFactory.getRuntimeMXBean.getName}" +
-        s"#${java.util.UUID.randomUUID()}"
     def readLease(): String =
       try {
         val in = fs.open(lp)
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
         finally in.close()
       } catch { case _: java.io.IOException => "<unreadable>" }
+    if (fs.exists(lp)) {
+      val age = System.currentTimeMillis() -
+        fs.getFileStatus(lp).getModificationTime
+      val local = fs match {
+        case _: LocalFileSystem | _: RawLocalFileSystem => true
+        case _ => false
+      }
+      if (age >= staleMs || (local && holderGone(readLease())))
+        fs.delete(lp, false) // crashed holder
+    }
+    // the token is unique per acquisition, not just per process: if THIS
+    // writer's lease is stale-broken by another mutator mid-run, release
+    // must NOT delete the new holder's lease (that would cascade a third
+    // mutator into the overlap the lease exists to prevent)
+    val token = s"$ThisJvm#${java.util.UUID.randomUUID()}"
+    liveTokens.add(token)
     val acquired =
       try {
         val out = fs.create(lp, false) // atomic create-if-absent
@@ -153,38 +188,46 @@ object StoreSwap {
         finally out.close()
         true
       } catch { case _: java.io.IOException => false }
-    if (!acquired)
+    if (!acquired) {
+      liveTokens.remove(token)
       sys.error(s"store $path is already being mutated (writer lease held" +
         s" by ${readLease()}); stores are single-mutator — serialize" +
         s" mutations externally, or break a dead writer's lease by" +
         s" deleting $lp")
+    }
     heldByThread.get += path
     try body
     finally {
       heldByThread.get -= path
-      // release only a lease we still own — ours may have been
-      // stale-broken and replaced while we ran past staleMs. The check
-      // is rename-then-verify, not read-then-delete: a successor that
-      // stale-breaks and rewrites the lease BETWEEN a read and a delete
-      // would have its fresh lease deleted, re-opening the overlap the
-      // token exists to prevent. Rename atomically captures whatever
-      // file is at the lease path; only a tombstone that verifies as
-      // OURS is deleted — a successor's is renamed back intact.
-      if (fs.exists(lp) && readLease() == token) {
-        val tomb = new Path(s"$path/$LeaseTomb${java.util.UUID.randomUUID()}")
-        if (fs.rename(lp, tomb)) {
-          val captured =
-            try {
-              val in = fs.open(tomb)
-              try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-              finally in.close()
-            } catch { case _: java.io.IOException => "<unreadable>" }
-          if (captured == token) fs.delete(tomb, false)
-          else if (!fs.rename(tomb, lp)) fs.delete(tomb, false)
-          // rename-back can only fail if a THIRD writer re-created the
-          // lease meanwhile; dropping the orphaned tombstone then is the
-          // documented best-effort bound of this fail-fast guard
-        }
+      try release(fs, path, lp, token, readLease _)
+      finally liveTokens.remove(token)
+    }
+  }
+
+  private def release(fs: FileSystem, path: String, lp: Path, token: String,
+                      readLease: () => String): Unit = {
+    // release only a lease we still own — ours may have been
+    // stale-broken and replaced while we ran past staleMs. The check
+    // is rename-then-verify, not read-then-delete: a successor that
+    // stale-breaks and rewrites the lease BETWEEN a read and a delete
+    // would have its fresh lease deleted, re-opening the overlap the
+    // token exists to prevent. Rename atomically captures whatever
+    // file is at the lease path; only a tombstone that verifies as
+    // OURS is deleted — a successor's is renamed back intact.
+    if (fs.exists(lp) && readLease() == token) {
+      val tomb = new Path(s"$path/$LeaseTomb${java.util.UUID.randomUUID()}")
+      if (fs.rename(lp, tomb)) {
+        val captured =
+          try {
+            val in = fs.open(tomb)
+            try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
+            finally in.close()
+          } catch { case _: java.io.IOException => "<unreadable>" }
+        if (captured == token) fs.delete(tomb, false)
+        else if (!fs.rename(tomb, lp)) fs.delete(tomb, false)
+        // rename-back can only fail if a THIRD writer re-created the
+        // lease meanwhile; dropping the orphaned tombstone then is the
+        // documented best-effort bound of this fail-fast guard
       }
     }
   }
@@ -331,9 +374,11 @@ object StoreSwap {
                     sortCols: Seq[Column],
                     dataDir: String = "data"): Long = transact(spark, path) {
     val touchedDirs = touched.map(b => s"$dataDir/$partCol=$b").toSet
-    stageAndCommit(spark, path, dataDir, partCol, slice, sortCols) {
+    val conf = hadoopConf(spark)
+    stageAndCommit(spark, path, dataDir, Some(partCol), slice, sortCols) {
       (all, staged) => (all -- touchedDirs) ++ staged
-    }
+    }.fold(0L)(g => ParquetFooters.rowCount(conf,
+      ParquetFooters.files(conf, g).map(_.getPath)))
   }
 
   /** Full write of a store dataDir: the whole relation becomes the
@@ -345,7 +390,7 @@ object StoreSwap {
   def overwriteDir(spark: SparkSession, path: String, dataDir: String,
                    partCol: String, df: DataFrame,
                    sortCols: Seq[Column]): Unit = transact(spark, path) {
-    stageAndCommit(spark, path, dataDir, partCol, df, sortCols)(
+    stageAndCommit(spark, path, dataDir, Some(partCol), df, sortCols)(
       replaceAll(dataDir))
   }
 
@@ -373,11 +418,31 @@ object StoreSwap {
                 batchId: Option[Long] = None): Unit = transact(spark, path) {
     if (batchId.exists(committedBatches(spark, path, dataDir).contains))
       return // replayed micro-batch: already durably committed
-    stageAndCommit(spark, path, dataDir, partCol, df, sortCols) {
-      (all, staged) => all ++ staged.map { case (d, g) =>
-        d -> (all.getOrElse(d, Seq.empty) ++ g) }
-    }
+    stageAndCommit(spark, path, dataDir, Some(partCol), df, sortCols)(
+      addGeneration _)
     batchId.foreach(recordBatch(path, dataDir, _))
+  }
+
+  private def addGeneration(all: Map[String, Seq[Long]],
+                            staged: Map[String, Seq[Long]]): Map[String, Seq[Long]] =
+    all ++ staged.map { case (d, g) => d -> (all.getOrElse(d, Seq.empty) ++ g) }
+
+  // ---- tables ----------------------------------------------------------------
+
+  /** The one bucket of a table's dataDir: a generation's rows sit in
+    * `<dataDir>.gens/g<G>/rows/`. */
+  private val TableBucket = "rows"
+
+  /** Commit `df` into the TABLE dataDir `dataDir` of `path` — a dataDir of
+    * one bucket, with no partition column. `df` is written as its plan
+    * partitions it: no exchange, no sort, as many files as a plain
+    * parquet write of it. With `append` it becomes one more generation of
+    * the dataDir (readers union them); otherwise the dataDir's only
+    * generation. */
+  def writeTable(spark: SparkSession, path: String, dataDir: String,
+                 df: DataFrame, append: Boolean): Unit = transact(spark, path) {
+    stageAndCommit(spark, path, dataDir, None, df, Nil)(
+      if (append) addGeneration _ else replaceAll(dataDir))
   }
 
   /** Record `batchId` as committed into `dataDir`'s stream WITHOUT
@@ -408,31 +473,38 @@ object StoreSwap {
     t.dirty = true
   }
 
-  /** Stage `df` partitioned by `partCol`, rename the staged buckets in
-    * as a fresh generation of `dataDir`, and fold `remap(entries,
-    * stagedEntries)` into the open transaction. Returns the staged row
-    * count, summed from the staged files' parquet footers on the driver
-    * (no Spark job). A `df` already hash-partitioned on `partCol` (a
+  /** Stage `df` partitioned by `partCol` (a table's one bucket when
+    * None), rename the staged buckets in as a fresh generation of
+    * `dataDir`, and fold `remap(entries, stagedEntries)` into the open
+    * transaction. Returns the new generation's directory; None when `df`
+    * filled no bucket. A `df` already hash-partitioned on `partCol` (a
     * merge that repartitioned before aggregating) keeps that one
     * exchange: the planner drops the repartition below as redundant. */
   private def stageAndCommit(spark: SparkSession, path: String,
-                             dataDir: String, partCol: String,
+                             dataDir: String, partCol: Option[String],
                              df: DataFrame, sortCols: Seq[Column])
                             (remap: (Map[String, Seq[Long]],
-                              Map[String, Seq[Long]]) => Map[String, Seq[Long]]): Long = {
+                              Map[String, Seq[Long]]) => Map[String, Seq[Long]]): Option[Path] = {
     val stg = staging(path)
     val fs = fsOf(spark, stg)
     if (fs.exists(stg)) fs.delete(stg, true) // orphan of a crashed commit
-    df.repartition(col(partCol))
-      .sortWithinPartitions(sortCols: _*)
-      .write.partitionBy(partCol).parquet(stg.toString)
-    val buckets = fs.listStatus(stg)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(partCol + "="))
-      .map(_.getPath.getName).toSeq
-    val kept = ParquetFooters.rowCount(hadoopConf(spark), stg)
+    writeStaged(spark, fs, stg) {
+      partCol match {
+        case Some(pc) =>
+          df.repartition(col(pc)).sortWithinPartitions(sortCols: _*)
+            .write.partitionBy(pc).parquet(stg.toString)
+        case None => df.write.parquet(new Path(stg, TableBucket).toString)
+      }
+    }
+    val buckets = partCol match {
+      case Some(pc) => fs.listStatus(stg)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith(pc + "="))
+        .map(_.getPath.getName).toSeq
+      case None => Seq(TableBucket)
+    }
     val t = activeTxn.get()(path)
-    val staged =
-      if (buckets.isEmpty) Map.empty[String, Seq[Long]]
+    val gen =
+      if (buckets.isEmpty) None
       else {
         val g = nextGen(fs, path, dataDir, t.entries)
         val gDir = new Path(s"$path/$dataDir.gens/g$g")
@@ -440,10 +512,88 @@ object StoreSwap {
         if (fs.exists(gDir)) fs.delete(gDir, true)
         if (!fs.rename(stg, gDir))
           sys.error(s"could not commit staged generation $gDir")
-        buckets.map(b => s"$dataDir/$b" -> Seq(g)).toMap
+        Some(g -> gDir)
       }
-    update(path)(remap(_, staged))
-    kept
+    update(path)(remap(_, gen.fold(Map.empty[String, Seq[Long]]) { case (g, _) =>
+      buckets.map(b => s"$dataDir/$b" -> Seq(g)).toMap }))
+    gen.map(_._2)
+  }
+
+  /** Run `write`, the Spark write of the staging dir `stg`. Spark fails a
+    * job at its first failed task while sibling tasks may still be
+    * writing (and the committer's abort races them), so when the write
+    * fails, `stg` is deleted only after every task of its jobs has ended
+    * ([[StagingTasks]]): a failed commit leaves no file behind in the
+    * store. The write's failure stays the one thrown; a wait that gives
+    * up is attached to it as suppressed. */
+  private def writeStaged(spark: SparkSession, fs: FileSystem, stg: Path)
+                         (write: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tasks = new StagingTasks(s"graft-staging-${java.util.UUID.randomUUID()}")
+    sc.addSparkListener(tasks)
+    try {
+      sc.addJobTag(tasks.tag)
+      try write catch { case e: Exception =>
+        sc.removeJobTag(tasks.tag)
+        try {
+          if (!tasks.awaitIdle(sc, StagingWaitMs))
+            e.addSuppressed(new IllegalStateException(s"tasks of the failed" +
+              s" write of $stg were still running after ${StagingWaitMs / 1000}" +
+              " s; it was deleted anyway, and a file they write later is an" +
+              " orphan the next commit's staging replaces"))
+          fs.delete(stg, true)
+        } catch { case NonFatal(c) => e.addSuppressed(c) }
+        throw e
+      } finally sc.removeJobTag(tasks.tag)
+    } finally sc.removeSparkListener(tasks)
+  }
+
+  /** How long a failed staging write waits for its last task. */
+  private val StagingWaitMs = 60000L
+
+  /** The running tasks of the jobs tagged `tag`, counted from the
+    * listener bus: registered before the write, it sees every job and
+    * task of it start and end. */
+  private final class StagingTasks(val tag: String) extends SparkListener {
+    private val barrierTag = tag + "-barrier"
+    private var jobs = Set.empty[Int]
+    private var ended = Set.empty[Int]
+    private var stages = Set.empty[Int]
+    private var running = 0
+    private var barrier = false
+
+    private def tagged(e: SparkListenerJobStart, t: String) =
+      Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+        .exists(_.split(",").contains(t))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      if (tagged(e, tag)) { jobs += e.jobId; stages ++= e.stageIds }
+      if (tagged(e, barrierTag)) barrier = true
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      synchronized { if (jobs(e.jobId)) ended += e.jobId }
+    override def onTaskStart(e: SparkListenerTaskStart): Unit =
+      synchronized { if (stages(e.stageId)) running += 1 }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      synchronized { if (stages(e.stageId)) running -= 1 }
+
+    private def idle = synchronized { barrier && jobs == ended && running == 0 }
+
+    /** Wait, at most `ms`, until every tagged job has ended and every one
+      * of its tasks with it; false if it timed out. The listener bus
+      * delivers events in the order they are posted, and the scheduler
+      * posts the start of every task it launched before it fails the job.
+      * So once the bus has delivered a job without partitions run after
+      * the failure (Spark posts its start from this thread), the listener
+      * has seen every tagged job and task start: one not seen yet cannot
+      * pass for finished. */
+    def awaitIdle(sc: SparkContext, ms: Long): Boolean = {
+      sc.addJobTag(barrierTag)
+      try sc.emptyRDD[Int].count() finally sc.removeJobTag(barrierTag)
+      val deadline = System.currentTimeMillis() + ms
+      while (!idle && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      idle
+    }
   }
 
   /** Next free generation number for `dataDir` — strictly above every
@@ -465,10 +615,9 @@ object StoreSwap {
   /** Drop manifests beyond the grace window, then, PER dataDir the
     * kept manifests reference, delete unreferenced generation dirs. */
   private def gc(fs: FileSystem, path: String, keep: Int): Unit = {
-    manifests(fs, path).dropRight(keep + 1)
-      .foreach { case (_, p) => fs.delete(p, false) }
-    val kept = manifests(fs, path).map { case (_, p) =>
-      readManifest(fs, p) }
+    val all = manifests(fs, path)
+    all.dropRight(keep + 1).foreach { case (_, p) => fs.delete(p, false) }
+    val kept = all.takeRight(keep + 1).map { case (_, p) => readManifest(fs, p) }
     // NOTE: each manifest map must be flattened to a Seq BEFORE
     // collecting (dataDir, gens) pairs — collect on a Map would key the
     // result by dataDir and silently keep ONE bucket's gens per dir
@@ -533,55 +682,118 @@ object StoreSwap {
       .flatMap(_._2.get(unifiedBatchesKey(dataDir)))
       .fold(Set.empty[Long])(_.toSet)
 
-  /** The entries of the retained manifest `version`, or of the current
-    * view when it is None; `what` names the dataDir or constant asked
-    * for in the error. */
-  private def entriesAt(spark: SparkSession, path: String, what: String,
-                        version: Option[Int]): Map[String, Seq[Long]] =
-    version.fold(view(spark, path).fold(Map.empty[String, Seq[Long]])(_._2))(
-      retainedManifest(spark, path, what, _))
-
-  /** The raw `#meta:<name>` record at a retained manifest `version`, or
-    * the current view when `version` is None. None when the manifest
-    * predates the first [[putStoreMeta]] of this name. Readers of
-    * layout constants use [[layoutConstant]]. */
-  def storeMetaAt(spark: SparkSession, path: String, name: String,
-                  version: Option[Int] = None): Option[Seq[Long]] =
-    entriesAt(spark, path, name, version).get(storeMetaKey(name))
-
-  /** THE resolver of a store's LAYOUT CONSTANTS — the bucket count
-    * (`buckets`), the shingle sidecar's width (`shingles.n`), the band
-    * layout (`bands.b`, `bands.r`, `bands.idx`): the `#meta:` entry of
-    * the current view (None when the store has no such artifact, e.g.
-    * no band index), or of the pinned manifest `version`. The writer of
-    * an artifact records its constants in the same commit as the data
-    * ([[putStoreMeta]]), so this is a manifest lookup and runs no Spark
-    * job. A PINNED manifest without the constant fails with a named
-    * `IllegalArgumentException`: the artifact did not exist at that
-    * version. */
-  def layoutConstant(spark: SparkSession, path: String, name: String,
-                     version: Option[Int] = None): Option[Long] = {
-    val key = storeMetaKey(name)
-    val entries = entriesAt(spark, path, name, version)
-    version.filterNot(_ => entries.contains(key)).foreach { v =>
-      throw new IllegalArgumentException(s"$path v$v records no layout" +
-        s" constant `$name`: the artifact it describes did not exist at" +
-        " that version (it was built later). Re-pin at a version from" +
-        " after it was built")
+  /** ONE resolution of the store's manifest, from which every read of an
+    * operation is taken: the current view (this thread's open
+    * transaction, else the latest manifest: one listing of `_v` and one
+    * manifest read), or the retained manifest `version`. Its dataDirs,
+    * layout constants and table files all come from that one version,
+    * whatever commits meanwhile. A `version` outside the retained window
+    * fails fast, naming the window. */
+  def snapshot(spark: SparkSession, path: String,
+               version: Option[Int] = None): Snapshot =
+    version match {
+      case Some(v) => new Snapshot(spark, path, v, retainedManifest(spark, path, v),
+        pinned = true)
+      case None =>
+        val (v, entries) = view(spark, path).getOrElse((-1, Map.empty[String, Seq[Long]]))
+        new Snapshot(spark, path, v, entries, pinned = false)
     }
-    entries.get(key).map {
-      case Seq(v) => v
-      case vs => sys.error(s"$path: layout constant $name holds" +
-        s" ${vs.size} values")
-    }
-  }
 
-  /** The store's bucket count at `version`, or the current view. */
-  def bucketCount(spark: SparkSession, path: String,
-                  version: Option[Int] = None): Int =
-    layoutConstant(spark, path, BucketsKey, version).getOrElse(
+  /** A resolved manifest ([[snapshot]]) — `version`, -1 for a store
+    * with none yet; reads from it touch only the immutable generation
+    * dirs it references. */
+  final class Snapshot private[StoreSwap] (spark: SparkSession, path: String,
+                                           val version: Int,
+                                           entries: Map[String, Seq[Long]],
+                                           pinned: Boolean) {
+    /** `dataDir`'s bucketDir → generations entries — the metadata a
+      * manifest-pruned diff compares: generations are immutable once
+      * committed, so two versions' entries being EQUAL for a bucket
+      * proves its files (hence rows) are byte-identical without opening
+      * them. */
+    def entriesOf(dataDir: String): Map[String, Seq[Long]] =
+      sliceDataDir(entries, dataDir)
+
+    /** Whether `dataDir` holds any bucket. */
+    def exists(dataDir: String): Boolean = entriesOf(dataDir).nonEmpty
+
+    /** `dataDir`, restricted to `buckets` when given: only the immutable
+      * generation dirs this manifest references, so the plan never lists
+      * the live tree and a later commit is invisible to it. A pinned
+      * version listed by [[snapshotVersions]] is fully readable (GC keeps
+      * a retained manifest's generations as long as the manifest). Filters
+      * on `partCol` prune files (the partition column infers from the dir
+      * names). */
+    def read(dataDir: String, partCol: String,
+             buckets: Option[Seq[Int]] = None): DataFrame = {
+      val e = entriesOf(dataDir)
+      if (!pinned && e.isEmpty)
+        sys.error(s"$path/$dataDir has no committed manifest entry — not a" +
+          " store dataDir (or never written)")
+      readEntries(spark, path, dataDir, partCol, e, buckets)
+    }
+
+    /** The raw `#meta:<name>` record; None when the manifest predates the
+      * first [[putStoreMeta]] of this name. */
+    def storeMeta(name: String): Option[Seq[Long]] =
+      entries.get(storeMetaKey(name))
+
+    /** THE resolver of a store's LAYOUT CONSTANTS — the bucket count
+      * (`buckets`), the shingle sidecar's width (`shingles.n`), the band
+      * layout (`bands.b`, `bands.r`, `bands.idx`): the `#meta:` entry of
+      * this manifest (None when the store has no such artifact, e.g. no
+      * band index). The writer of an artifact records its constants in
+      * the same commit as the data ([[putStoreMeta]]), so this is a
+      * manifest lookup and runs no Spark job. A PINNED manifest without
+      * the constant fails with a named `IllegalArgumentException`: the
+      * artifact did not exist at that version. */
+    def layoutConstant(name: String): Option[Long] = {
+      if (pinned && !entries.contains(storeMetaKey(name)))
+        throw new IllegalArgumentException(s"$path v$version records no layout" +
+          s" constant `$name`: the artifact it describes did not exist at" +
+          " that version (it was built later). Re-pin at a version from" +
+          " after it was built")
+      storeMeta(name).map {
+        case Seq(v) => v
+        case vs => sys.error(s"$path: layout constant $name holds" +
+          s" ${vs.size} values")
+      }
+    }
+
+    /** The store's bucket count. */
+    def bucketCount: Int = layoutConstant(BucketsKey).getOrElse(
       sys.error(s"$path records no bucket count — not a store (write it" +
         " with its store writer first)")).toInt
+
+    /** The parquet files of the table dataDir `dataDir` ([[writeTable]]),
+      * oldest generation first; empty when it was never written. */
+    def tableFiles(dataDir: String): Seq[FileStatus] = {
+      val conf = hadoopConf(spark)
+      tableDirs(dataDir).flatMap(d => ParquetFooters.files(conf, new Path(d)))
+    }
+
+    /** The rows of the table dataDir `dataDir`, summed from its files'
+      * footers on the driver (no Spark job). */
+    def tableRows(dataDir: String): Long =
+      ParquetFooters.rowCount(hadoopConf(spark), tableFiles(dataDir).map(_.getPath))
+
+    /** The table dataDir `dataDir` ([[writeTable]]): every generation in
+      * one scan, planned with the schema from one footer (a parquet read
+      * without a schema runs a Spark job to infer one). */
+    def readTable(dataDir: String): DataFrame = {
+      val dirs = tableDirs(dataDir)
+      if (dirs.isEmpty)
+        sys.error(s"$path/$dataDir has no committed manifest entry — no" +
+          " table there (or never written)")
+      val reader = spark.read
+      footerSchema(hadoopConf(spark), new Path(dirs.head), None)
+        .fold(reader)(reader.schema).parquet(dirs: _*)
+    }
+
+    private def tableDirs(dataDir: String): Seq[String] =
+      entriesOf(dataDir).get(TableBucket).toSeq.flatten.sorted
+        .map(g => s"$path/$dataDir.gens/g$g/$TableBucket")
+  }
 
   /** Record the store's bucket count — its writer's part of the commit
     * that lays the data out in that many buckets. */
@@ -589,34 +801,6 @@ object StoreSwap {
     putStoreMeta(spark, path, Map(BucketsKey -> Seq(buckets.toLong)))
 
   private val BucketsKey = "buckets"
-
-  /** The current (version, bucketDir → gens) view of `dataDir` — its
-    * slice of the store manifest — or None when the dataDir holds no
-    * bucket ("never written"). Inside an open [[transact]] the txn's
-    * pending view is returned. */
-  def latestSnapshot(spark: SparkSession, path: String,
-                     dataDir: String): Option[(Int, Map[String, Seq[Long]])] =
-    view(spark, path)
-      .map { case (v, all) => (v, sliceDataDir(all, dataDir)) }
-      .filter(_._2.nonEmpty)
-
-  /** Whether `dataDir` holds any bucket in the current view. */
-  def dirExists(spark: SparkSession, path: String,
-                dataDir: String): Boolean =
-    latestSnapshot(spark, path, dataDir).isDefined
-
-  /** Snapshot read of `dataDir` — resolves the current view ONCE
-    * (atomic), reads only the referenced immutable dirs. The plan never
-    * lists the live tree, so a concurrent mutation is invisible to it.
-    * Filters on `partCol` prune files (the partition column infers
-    * from the dir names). */
-  def readDir(spark: SparkSession, path: String, dataDir: String,
-              partCol: String): DataFrame = {
-    val (_, entries) = latestSnapshot(spark, path, dataDir).getOrElse(
-      sys.error(s"$path/$dataDir has no committed manifest entry — not a" +
-        " store dataDir (or never written)"))
-    readEntries(spark, path, dataDir, partCol, entries, None)
-  }
 
   /** The RETAINED manifest versions of the store, ascending — the
     * time-travel horizon. Commits GC manifests beyond the
@@ -627,50 +811,18 @@ object StoreSwap {
   def snapshotVersions(spark: SparkSession, path: String): Seq[Int] =
     openManifests(spark, path)._2.map(_._1)
 
-  /** A retained manifest `version`'s entries, or a fail-fast error
-    * naming the retained window. */
-  private def manifestAt(spark: SparkSession, path: String,
-                         dataDir: String,
-                         version: Int): Map[String, Seq[Long]] =
-    sliceDataDir(retainedManifest(spark, path, dataDir, version), dataDir)
-
-  /** Every entry of the retained manifest `version`; `what` names the
-    * dataDir or constant asked for in the error. */
+  /** Every entry of the retained manifest `version`, or a fail-fast
+    * error naming the retained window. */
   private def retainedManifest(spark: SparkSession, path: String,
-                               what: String,
                                version: Int): Map[String, Seq[Long]] = {
     val (fs, all) = openManifests(spark, path)
     val p = all.collectFirst { case (v, mp) if v == version => mp }
-      .getOrElse(sys.error(s"$path/$what has no retained manifest" +
+      .getOrElse(sys.error(s"$path has no retained manifest" +
         s" v$version — retained: ${all.map(_._1).mkString(",")} (raise" +
         " graft.store.snapshotKeep before mutating to widen the" +
         " time-travel window)"))
     readManifest(fs, p)
   }
-
-  /** TIME-TRAVEL read: the snapshot of `dataDir` AS OF committed
-    * `version` — same single-manifest-resolution guarantee as
-    * [[readDir]], against a historical manifest. The generations a
-    * retained manifest references are kept by GC exactly as long as the
-    * manifest itself, so a version listed by [[snapshotVersions]] is
-    * fully readable. Reading a GC'd version fails fast naming the
-    * retained window. */
-  def readVersionedAt(spark: SparkSession, path: String, dataDir: String,
-                      partCol: String, version: Int,
-                      buckets: Option[Seq[Int]] = None): DataFrame =
-    readEntries(spark, path, dataDir, partCol,
-      manifestAt(spark, path, dataDir, version), buckets)
-
-  /** The bucket-dir → generation-list entries of `dataDir` at a
-    * RETAINED manifest version — the metadata
-    * a manifest-pruned diff compares: generations are immutable once
-    * committed, so two versions' entries being EQUAL for a bucket
-    * proves its files (hence rows) are byte-identical without opening
-    * them. */
-  def snapshotEntriesAt(spark: SparkSession, path: String,
-                        dataDir: String,
-                        version: Int): Map[String, Seq[Long]] =
-    manifestAt(spark, path, dataDir, version)
 
   private def readEntries(spark: SparkSession, path: String,
                           dataDir: String, partCol: String,
@@ -700,23 +852,21 @@ object StoreSwap {
                              base: String, dirs: Seq[String],
                              partCol: String): DataFrame = {
     val reader = spark.read.option("basePath", base)
-    footerSchema(conf, new Path(dirs.head), partCol)
+    footerSchema(conf, new Path(dirs.head), Some(partCol))
       .fold(reader)(reader.schema).parquet(dirs: _*)
   }
 
-  /** The schema Spark infers for the bucket dir `dir` (`<partCol>=<b>`):
-    * the row schema Spark writes into every file's footer, plus the int
-    * partition column. None when that is not there to take (no file, a
-    * footer without Spark's schema, a non-int partition value) — the
-    * read then infers as usual. */
+  /** The schema Spark infers for the bucket dir `dir` (`<partCol>=<b>`,
+    * or a table's bucket when `partCol` is None): the row schema Spark
+    * writes into every file's footer, plus the int partition column. None
+    * when that is not there to take (no file, a footer without Spark's
+    * schema, a non-int partition value) — the read then infers as usual. */
   private def footerSchema(conf: Configuration, dir: Path,
-                           partCol: String): Option[StructType] = {
-    if (dir.getName.stripPrefix(partCol + "=").toIntOption.isEmpty)
-      return None
-    ParquetFooters.files(conf, dir).headOption
-      .flatMap(ParquetFooters.sparkSchema(conf, _))
-      .map(_.add(partCol, IntegerType))
-  }
+                           partCol: Option[String]): Option[StructType] =
+    if (partCol.exists(pc => dir.getName.stripPrefix(pc + "=").toIntOption.isEmpty)) None
+    else ParquetFooters.files(conf, dir).headOption
+      .flatMap(f => ParquetFooters.sparkSchema(conf, f.getPath))
+      .map(s => partCol.fold(s)(s.add(_, IntegerType)))
 
   /** Resolved leaf-dir paths of a snapshot, grouped by generation (one
     * group per basePath for partition-column inference), restricted to

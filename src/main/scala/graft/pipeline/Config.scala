@@ -42,9 +42,6 @@ object Config {
       keepContent: Boolean = false,      // false → truncate before load (K4)
       addID: Map[String, String] = Map.empty, // constant ID columns (T10)
       cutoffYr2000: Int = 60,
-      /** Read from config files for parity (K8); no store honours it —
-        * `ParquetTable.store` always swaps atomically. */
-      noTransaction: Boolean = false,
       debugKeyIndicator: String = "",
       /** `incrementalStore` (`Wrap/DB.pm:318`): on Upsert, a NULL
         * incoming field leaves the target's existing value untouched

@@ -145,7 +145,7 @@ object ConfigFiles {
     s.get(k).map(_.toInt).getOrElse(dflt)
 
   private val dbKeys = Set("table", "strategy", "primkey", "selector",
-    "valueCols", "keepContent", "noTransaction", "cutoffYr2000",
+    "valueCols", "keepContent", "cutoffYr2000",
     "debugKeyIndicator", "incrementalStore") // addID.* validated by prefix
   private val fileKeys = Set("header", "targetHeader", "sep", "sepIsRegex",
     "quoted", "skip", "skipUntil", "poslen", "eol", "encoding",
@@ -159,6 +159,11 @@ object ConfigFiles {
 
   def toDbConfig(s: Section): Either[String, DbConfig] = {
     val plain = s.view.filterKeys(!_.startsWith("addID.")).toMap
+    // the reference's per-load switch off its transaction (K8): a table
+    // commit here is one manifest rename, so there is none to switch off
+    if (plain.contains("noTransaction"))
+      return Left("DB key noTransaction is not supported: every table" +
+        " commit is atomic (one manifest rename), whatever the load sets")
     Config.validateKeys(plain, dbKeys, "DB").flatMap { _ =>
       val strategy = s.getOrElse("strategy", "append").toLowerCase match {
         case "append"       => Right(Append)
@@ -187,7 +192,6 @@ object ConfigFiles {
           addID = s.collect { case (k, v) if k.startsWith("addID.") =>
             k.stripPrefix("addID.") -> v },
           cutoffYr2000 = int(s, "cutoffYr2000", 60),
-          noTransaction = bool(s, "noTransaction", dflt = false),
           debugKeyIndicator = s.getOrElse("debugKeyIndicator", ""),
           incrementalStore = bool(s, "incrementalStore", dflt = false)))
       }

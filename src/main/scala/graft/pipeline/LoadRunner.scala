@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.pipeline.Config._
-import graft.sinks.{ParquetFooters, ParquetTable}
+import graft.sinks.ParquetTable
 import graft.sources.{TextFormat, TextSource, XlsSource, XlsxFormat, XlsxSource, XmlFormat, XmlSource}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -96,13 +96,12 @@ object LoadRunner {
         if (keep.nonEmpty) tapped.select((keep.map(col) :+ col("_lineno")): _*)
         else tapped.drop("_file", "_errors")
       }
-    try ParquetTable.store(spark, toStore, table, load.db)
-    catch {
-      case e: Exception =>
-        throw ErrorSample.severity2(e).fold[Throwable](e)(new IllegalStateException(_, e))
-    }
-    val n = ParquetFooters.rowCount(spark.sessionState.newHadoopConf(),
-      new org.apache.hadoop.fs.Path(table))
+    val n =
+      try ParquetTable.store(spark, toStore, table, load.db)
+      catch {
+        case e: Exception =>
+          throw ErrorSample.severity2(e).fold[Throwable](e)(new IllegalStateException(_, e))
+      }
     LoadResult(n, errors.value, stored = true)
   }
 }

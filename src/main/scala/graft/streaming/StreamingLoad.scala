@@ -1,6 +1,7 @@
 package graft.streaming
 
-import graft.pipeline.Config.DbConfig
+import graft.operators.StoreSwap
+import graft.pipeline.Config.{Append, DbConfig}
 import graft.sinks.ParquetTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -21,8 +22,10 @@ object StreamingLoad {
     * `table` with the configured conflict strategy. Each micro-batch runs
     * the same merge path as the batch pipeline (`foreachBatch` →
     * [[ParquetTable.store]]), so batch and streaming loads share one sink
-    * contract — at-least-once delivery + keyed upsert = effectively-once
-    * table state (the reference's delete-before-insert idempotency, R4).
+    * contract and one commit — at-least-once delivery + keyed upsert =
+    * effectively-once table state (the reference's delete-before-insert
+    * idempotency, R4). Malformed lines are appended to `errorTable`, also
+    * a [[ParquetTable]], one generation per batch.
     */
   def fileLoadStream(spark: SparkSession, inputDir: String, schema: StructType,
                      sep: String, table: String, db: DbConfig,
@@ -53,11 +56,13 @@ object StreamingLoad {
             val bad = cached.filter(col("_corrupt").isNotNull)
               .select(col("_corrupt").as("raw"), lit(batchId).as("batch_id"))
             errorTable.foreach { et =>
-              if (!bad.isEmpty) bad.write.mode("append").parquet(et)
+              if (!bad.isEmpty)
+                ParquetTable.store(spark, bad, et, DbConfig(strategy = Append, keepContent = true))
             }
             val good = cached.filter(col("_corrupt").isNull).drop("_corrupt")
               .withColumn("_lineno", monotonically_increasing_id())
             if (!good.isEmpty) ParquetTable.store(spark, good, table, db)
+            ()
           } finally cached.unpersist()
         }
       }
@@ -264,16 +269,16 @@ object StreamingLoad {
   /** Streaming maintenance of a count-min sketch table: each micro-batch
     * is sketched ([[graft.operators.Sketches.cmsSketch]] — bounded
     * depth×width output however hot the batch keys run) and merged into
-    * the standing sketch parquet by counter addition, the same merge law
-    * the batch spec proves. The sketch table stays ≤ depth·width rows
-    * forever, so frequency estimates over an unbounded stream cost O(1)
-    * storage — the streaming twin of the q81 gate.
+    * the standing sketch, a [[ParquetTable]], by counter addition, the
+    * same merge law the batch spec proves. The sketch table stays ≤
+    * depth·width rows forever, so frequency estimates over an unbounded
+    * stream cost O(1) storage — the streaming twin of the q81 gate.
     *
     * foreachBatch is AT-LEAST-ONCE: after a failure between the sketch
-    * swap and the checkpoint commit, the restarted query re-delivers the
+    * commit and the checkpoint commit, the restarted query re-delivers the
     * same batchId. The merge is made idempotent by persisting the
     * last-applied batchId IN the sketch table (a `batch_id` column on
-    * every counter row, committed in the same atomic swap as the
+    * every counter row, committed in the same manifest rename as the
     * counters): a re-delivered batch with batchId ≤ the stored watermark
     * is skipped, so the streamed ≡ batch merge law survives crash
     * replay instead of double-counting the re-run delta. */
@@ -313,59 +318,58 @@ object StreamingLoad {
 
   /** One idempotent merge step of [[sketchStream]] — exposed so the
     * replay contract is directly testable. Returns true when the batch
-    * was applied, false when it was skipped as already-merged.
+    * was applied, false when it was skipped as already-merged. The read
+    * of the standing sketch and its rewrite are one
+    * [[StoreSwap.transact]]: the counters and the batch_id + run_id
+    * watermark publish together, or, if the commit fails, the sketch
+    * stays at its old version and the redelivered batch applies.
     *
     * `runId` scopes the batchId watermark to one checkpoint lifetime
     * (see [[checkpointQueryId]]): when the sketch's stored run id and the
     * current one are both known and differ, the watermark is reset so a
     * fresh checkpoint's batch 0 is applied rather than skipped. A missing
-    * run id on either side falls back to the bare batchId compare (legacy
-    * sketches and direct API callers). */
+    * run id on either side falls back to the bare batchId compare
+    * (direct API callers). A `sketchPath` that is not a table (a plain
+    * parquet directory) is refused by [[StoreSwap.open]]. */
   def mergeSketchBatch(batch: DataFrame, batchId: Long, keyCol: String,
                        sketchPath: String, depth: Int, width: Int,
                        runId: Option[String] = None): Boolean = {
     val spark = batch.sparkSession
-    // ParquetTable.exists heals the atomicOverwrite crash window first —
-    // a raw directory probe would miss a sketch parked at .old-graft and
-    // silently reset the accumulated counters to this batch's delta
-    val exists = ParquetTable.exists(sketchPath)
-    val standing = if (exists) Some(spark.read.parquet(sketchPath)) else None
-    // bounded read: the sketch is ≤ depth·width rows by construction.
-    // A sketch written before the replay watermark existed has no
-    // batch_id column (and an empty table has no max) — both mean
-    // "nothing known applied", not a crash.
-    val (applied: Long, storedRun: Option[String]) = standing match {
-      case Some(df) if df.columns.contains("batch_id") =>
-        val runCol = if (df.columns.contains("run_id")) max(col("run_id"))
-                     else lit(null).cast("string")
-        df.agg(max(col("batch_id")), runCol).head() match {
-          case r if r.isNullAt(0) => (Long.MinValue, None)
-          case r => (r.getLong(0), Option(r.getString(1)))
-        }
-      case _ => (Long.MinValue, None)
-    }
-    val sameRun = (runId, storedRun) match {
-      case (Some(a), Some(b)) => a == b
-      case _                  => true
-    }
-    if (sameRun && batchId <= applied) false
-    else {
-      val delta = graft.operators.Sketches.cmsSketch(batch, keyCol, depth, width)
-      val merged = {
-        standing match {
-          case Some(df) =>
-            df.drop("batch_id").drop("run_id")
-              .unionByName(delta)
-              .groupBy(col("depth"), col("bucket"))
-              .agg(sum(col("cnt")).as("cnt"))
-          case None => delta
-        }
-      }.withColumn("batch_id", lit(batchId))
-        .withColumn("run_id", lit(runId.orNull).cast("string"))
-      // the merge plan still READS sketchPath — swap atomically, so
-      // counters and the batch_id+run_id watermark commit together
-      ParquetTable.atomicOverwrite(merged.coalesce(1), sketchPath)
-      true
+    StoreSwap.transact(spark, sketchPath) {
+      val standing =
+        if (ParquetTable.exists(spark, sketchPath)) Some(ParquetTable.load(spark, sketchPath))
+        else None
+      // bounded read: the sketch is ≤ depth·width rows by construction;
+      // an empty sketch has no max, which means "nothing known applied"
+      val (applied: Long, storedRun: Option[String]) = standing match {
+        case Some(df) =>
+          df.agg(max(col("batch_id")), max(col("run_id"))).head() match {
+            case r if r.isNullAt(0) => (Long.MinValue, None)
+            case r => (r.getLong(0), Option(r.getString(1)))
+          }
+        case None => (Long.MinValue, None)
+      }
+      val sameRun = (runId, storedRun) match {
+        case (Some(a), Some(b)) => a == b
+        case _                  => true
+      }
+      if (sameRun && batchId <= applied) false
+      else {
+        val delta = graft.operators.Sketches.cmsSketch(batch, keyCol, depth, width)
+        val merged = {
+          standing match {
+            case Some(df) =>
+              df.drop("batch_id").drop("run_id")
+                .unionByName(delta)
+                .groupBy(col("depth"), col("bucket"))
+                .agg(sum(col("cnt")).as("cnt"))
+            case None => delta
+          }
+        }.withColumn("batch_id", lit(batchId))
+          .withColumn("run_id", lit(runId.orNull).cast("string"))
+        ParquetTable.store(spark, merged.coalesce(1), sketchPath, DbConfig())
+        true
+      }
     }
   }
 }

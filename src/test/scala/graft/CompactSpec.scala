@@ -1,72 +1,69 @@
 package graft
 
+import graft.operators.Fixtures
+import graft.pipeline.Config.{Append, DbConfig}
 import graft.sinks.ParquetTable
-import java.nio.file.{Files, Paths}
 
 /** Small-file compaction: many-fragment tables collapse to the computed
-  * file count with identical content, atomically. */
+  * file count with identical content, in one commit. */
 class CompactSpec extends SparkSpec {
   import spark.implicits._
 
+  private def fragmented(dir: String, n: Int, parts: Int, v: Int => String): Unit =
+    ParquetTable.store(spark, (1 to n).map(i => (i.toLong, v(i))).toDF("k", "v")
+      .repartition(parts), dir, DbConfig(strategy = Append))
+
+  private def partFiles(dir: String) = ParquetTable.files(spark, dir).size
+
+  private def content(dir: String) = ParquetTable.load(spark, dir).orderBy("k")
+    .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+
   test("compact collapses a fragmented table, content unchanged") {
-    val dir = Files.createTempDirectory("graft-compact-").toString + "/t"
-    // 32 tiny files
-    (1 to 320).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-      .repartition(32).write.parquet(dir)
-    def partFiles = Files.list(Paths.get(dir)).toArray.map(_.toString)
-      .count(p => p.contains("part-") && p.endsWith(".parquet"))
-    assert(partFiles == 32)
-    val before = ParquetTable.load(spark, dir).orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    val dir = Fixtures.tempDir("graft-compact-").resolve("t").toString
+    fragmented(dir, 320, 32, i => s"v$i")
+    assert(partFiles(dir) == 32)
+    val before = content(dir)
 
     ParquetTable.compact(spark, dir, targetBytes = Long.MaxValue)
-    assert(partFiles == 1, "tiny table must compact to a single file")
-    val after = ParquetTable.load(spark, dir).orderBy("k")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
-    assert(after == before)
+    assert(partFiles(dir) == 1, "tiny table must compact to a single file")
+    assert(content(dir) == before)
   }
 
-  test("partitioned compaction preserves layout, content, and pruning") {
-    val dir = Files.createTempDirectory("graft-compact3-").toString + "/t"
-    val df = (1 to 200).map(i => (i.toLong, if (i % 2 == 0) "a" else "b")).toDF("k", "p")
-      .repartition(8)
-    ParquetTable.storePartitioned(spark, df, dir, Seq("p"))
-    def files(part: String) = Files.list(Paths.get(dir, s"p=$part")).toArray
-      .map(_.toString).count(f => f.contains("part-") && f.endsWith(".parquet"))
-    assert(files("a") > 1 && files("b") > 1)
-    ParquetTable.compactPartitioned(spark, dir, targetBytes = Long.MaxValue)
-    assert(files("a") == 1 && files("b") == 1)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 200)
-    // partition pruning still applies after the rewrite
-    val plan = back.filter(org.apache.spark.sql.functions.col("p") === "a")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: ["))
-    assert(back.filter("p = 'a'").count() == 100)
-  }
-
-  test("crash between the two swap renames heals on next touch") {
-    val dir = Files.createTempDirectory("graft-recover-").toString + "/t"
-    (1 to 10).map(i => (i.toLong, s"v$i")).toDF("k", "v").write.parquet(dir)
-    // simulate the crash window: live table retired to .old-graft, new
-    // version never moved in (the state atomicOverwrite can die in)
-    Files.move(Paths.get(dir), Paths.get(dir + ".old-graft"))
-    assert(!Files.exists(Paths.get(dir)))
-    // any entry point must restore the retired version
-    assert(ParquetTable.exists(dir), "recovery probe did not restore the table")
-    assert(ParquetTable.load(spark, dir).count() == 10)
-    assert(!Files.exists(Paths.get(dir + ".old-graft")))
+  test("a failed compaction commit keeps the old table version; a re-run commits") {
+    withFaultFs {
+      val local = Fixtures.tempDir("graft-recover-").resolve("t").toString
+      val dir = "faultfs://" + local
+      fragmented(dir, 10, 4, i => s"v$i")
+      val before = content(dir)
+      val files = ParquetTable.files(spark, dir).map(_.getPath.toString)
+      FaultFs.failRenameTo.set(_.startsWith("store.v"))
+      intercept[RuntimeException](ParquetTable.compact(spark, dir, targetBytes = Long.MaxValue))
+      assert(FaultFs.failRenameTo.get == null, "no manifest rename was tried")
+      assert(ParquetTable.files(spark, dir).map(_.getPath.toString) == files)
+      assert(content(dir) == before)
+      ParquetTable.compact(spark, dir, targetBytes = Long.MaxValue)
+      assert(partFiles(dir) == 1)
+      assert(content(dir) == before)
+    }
   }
 
   test("compact file count scales with target size") {
-    val dir = Files.createTempDirectory("graft-compact2-").toString + "/t"
-    (1 to 1000).map(i => (i.toLong, "x" * 50)).toDF("k", "v")
-      .repartition(16).write.parquet(dir)
-    val total = Files.walk(Paths.get(dir)).filter(Files.isRegularFile(_))
-      .mapToLong(Files.size(_)).sum()
+    val dir = Fixtures.tempDir("graft-compact2-").resolve("t").toString
+    fragmented(dir, 1000, 16, _ => "x" * 50)
+    val total = ParquetTable.files(spark, dir).map(_.getLen).sum
     ParquetTable.compact(spark, dir, targetBytes = total / 4 + 1)
-    val n = Files.list(Paths.get(dir)).toArray.map(_.toString)
-      .count(p => p.contains("part-") && p.endsWith(".parquet"))
+    val n = partFiles(dir)
     assert(n == 4, s"expected 4 files, got $n")
+  }
+
+  private def withFaultFs[T](body: => T): T = {
+    val keys = Seq("fs.faultfs.impl" -> classOf[FaultFs].getName,
+      "fs.faultfs.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally {
+      FaultFs.failRenameTo.set(null)
+      keys.foreach { case (k, _) => spark.conf.unset(k) }
+    }
   }
 }

@@ -99,6 +99,14 @@ class ConfigFilesSpec extends SparkSpec {
     }
   }
 
+  test("noTransaction is refused by name: every table commit is atomic") {
+    Seq("true", "false").foreach { v =>
+      val refused = ConfigFiles.toDbConfig(Map("table" -> "t", "noTransaction" -> v))
+      assert(refused.left.exists(e => e.contains("noTransaction") &&
+        e.contains("every table commit is atomic")), refused)
+    }
+  }
+
   test("typed materialization covers strategies and addID") {
     val db = ConfigFiles.toDbConfig(Map(
       "table" -> "t", "strategy" -> "deleteInsert", "selector" -> "k1, k2",

@@ -285,6 +285,14 @@ class DataSourceV2Spec extends SparkSpec {
       assert(rows(spark.read.format("graft-text").option("header", "k,v")
         .option("sep", ";").load(file)) == Seq(("1", "a"), ("2", "b")))
       assert(TextSource.firstLine(spark, file, fmt) == "1;a")
+      // a text load into a table on the same scheme: the table commits,
+      // reads and counts its rows through the session conf too
+      val table = "sessionfs://" + dir.resolve("t").toString
+      val load = graft.pipeline.LoadRunner.Load(graft.pipeline.LoadRunner.TextSpec(fmt),
+        graft.pipeline.Config.DbConfig(strategy = graft.pipeline.Config.Upsert(Seq("k"))))
+      assert(graft.pipeline.LoadRunner.run(spark, Seq(file), load, table).rows == 2)
+      assert(rows(graft.sinks.ParquetTable.load(spark, table).orderBy("k")) ==
+        Seq(("1", "a"), ("2", "b")))
     } finally keys.foreach { case (k, _) => spark.conf.unset(k) }
   }
 

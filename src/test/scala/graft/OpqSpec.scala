@@ -78,7 +78,7 @@ class OpqSpec extends SparkSpec {
     // must return exactly the brute-force neighbor sets
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 40, rotate = true, opqIters = 3)
-    val meta = graft.operators.StoreSwap.readDir(spark, path, "pq_meta", "part")
+    val meta = graft.operators.StoreSwap.snapshot(spark, path).read("pq_meta", "part")
     assert(meta.columns.contains("opq_rotation"))
     assert(meta.head.getAs[Boolean]("rotated"))
     val storedR = meta.head.getAs[scala.collection.Seq[
@@ -136,7 +136,7 @@ class OpqSpec extends SparkSpec {
     Similarity.writeCodebook(spark, path, cents)
     Similarity.writePqSidecar(spark, path, "vec_id", "embedding",
       m = 2, dsub = 2, ksub = 4, rotate = true)
-    assert(!graft.operators.StoreSwap.readDir(spark, path, "pq_meta", "part").columns
+    assert(!graft.operators.StoreSwap.snapshot(spark, path).read("pq_meta", "part").columns
       .contains("opq_rotation"))
     assert(Similarity.pqTopKStore(spark, path,
       corpus().filter(col("vec_id") < 3), "vec_id", "embedding",

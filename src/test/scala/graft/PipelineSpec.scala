@@ -8,6 +8,7 @@ import graft.sinks.ParquetTable
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.time.{LocalDate, LocalTime, LocalDateTime}
+import scala.jdk.CollectionConverters._
 
 /** End-to-end import pipeline (SURVEY.md §3.1) plus the driver-side state
   * machines: run gates, retry scheduling, staging lifecycle. */
@@ -67,12 +68,23 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  /** Files 1 and 2 carry 160 severity-1 errors each (non-numeric
-    * amounts); file 3, the smallest and so the last partition scanned,
-    * holds the only over-wide name. The load aborts, names that value and
-    * leaves the table as it was; with file 3 fixed it stores and reports
-    * the first 100 errors. */
-  private def severity2BeyondTheSample(noTransaction: Boolean): Unit = {
+  /** Every regular file under `dir`, dot-directories included:
+    * path → (size, mtime, bytes). */
+  private def fileWalk(dir: String): Map[String, (Long, Long, Seq[Byte])] = {
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+      p.toString -> ((Files.size(p), Files.getLastModifiedTime(p).toMillis,
+        Files.readAllBytes(p).toSeq))
+    }.toMap
+    finally walk.close()
+  }
+
+  test("a severity-2 value beyond the 100-error sample still aborts the load") {
+    // files 1 and 2 carry 160 severity-1 errors each (non-numeric
+    // amounts); file 3, the smallest and so the last partition scanned,
+    // holds the only over-wide name. The load aborts, names that value and
+    // leaves every file of the table as it was (its staging dir too);
+    // with file 3 fixed it stores and reports the first 100 errors.
     val work = tmpDir("graft-sev2-")
     def write(name: String, lines: Seq[String]): String = {
       val f = java.nio.file.Paths.get(work, name)
@@ -85,12 +97,11 @@ class PipelineSpec extends SparkSpec {
     val fmt = TextFormat(header = Seq("id", "name", "amount"), sep = ";", skip = 1)
     val load = Load(source = TextSpec(fmt), db = DbConfig(targetSchema = Seq(
       TargetColumn("id", "bigint"), TargetColumn("name", "varchar", size = 5),
-      TargetColumn("amount", "double")), noTransaction = noTransaction))
+      TargetColumn("amount", "double"))))
     val table = tmpDir("graft-table-") + "/t"
     val base = write("base.csv", Seq("1;a;1"))
     LoadRunner.run(spark, Seq(base), load, table)
-    def content = ParquetTable.load(spark, table).collect().map(_.toSeq).toSeq
-    val before = content
+    val before = fileWalk(table)
 
     val f3 = write("f3.csv", Seq("9;waytoolong;1"))
     val ex = intercept[IllegalStateException] {
@@ -98,7 +109,10 @@ class PipelineSpec extends SparkSpec {
     }
     assert(ex.getMessage.startsWith(SchemaCoercion.Severity2Prefix), ex.getMessage)
     assert(ex.getMessage.contains("waytoolong"))
-    assert(content == before)
+    val after = fileWalk(table)
+    assert(after.keySet == before.keySet,
+      s"files appeared: ${after.keySet -- before.keySet}; vanished: ${before.keySet -- after.keySet}")
+    assert(after == before, "a file of the table changed")
 
     val f3ok = write("f3ok.csv", Seq("9;ok;1"))
     val result = LoadRunner.run(spark, Seq(f1, f2, f3ok), load, table)
@@ -107,14 +121,39 @@ class PipelineSpec extends SparkSpec {
     assert(result.errors.forall(_.startsWith("non-numeric value for amount: ")))
   }
 
-  test("a severity-2 value beyond the 100-error sample still aborts the load") {
-    severity2BeyondTheSample(noTransaction = false)
-  }
-
-  test("a severity-2 value beyond the 100-error sample still aborts a noTransaction load") {
-    // a noTransaction store used to overwrite the live table in place, so
-    // the failing job would have deleted it first
-    severity2BeyondTheSample(noTransaction = true)
+  test("an Append that keeps content plans no exchange, and its row count is the snapshot's") {
+    val work = tmpDir("graft-append-")
+    def write(name: String, lines: Seq[String]): String = {
+      val f = java.nio.file.Paths.get(work, name)
+      Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
+      f.toString
+    }
+    val fmt = TextFormat(header = Seq("id", "name"), sep = ";")
+    val schema = Seq(TargetColumn("id", "bigint"), TargetColumn("name", "varchar", 10))
+    def load(keep: Boolean) = Load(TextSpec(fmt),
+      DbConfig(targetSchema = schema, strategy = Append, keepContent = keep))
+    val table = tmpDir("graft-table-") + "/t"
+    graft.operators.GraftConf.SnapshotKeep.withValue(spark, "8") {
+      LoadRunner.run(spark, Seq(write("a.csv", (1 to 80).map(i => s"$i;a$i"))), load(false), table)
+      LoadRunner.run(spark, Seq(write("b.csv", (1 to 50).map(i => s"$i;b$i"))), load(false), table)
+      var result: LoadResult = null
+      val plans = plansOf {
+        result = LoadRunner.run(spark, Seq(write("c.csv", (51 to 60).map(i => s"$i;c$i"))),
+          load(true), table)
+      }
+      import org.apache.spark.sql.execution.exchange.Exchange
+      assert(plans.nonEmpty)
+      plans.foreach(p => assert(planHelper.collect(p) { case e: Exchange => e }.isEmpty,
+        s"an Append planned an exchange:\n$p"))
+      // the replaced 80-row version is still on disk; the count is the
+      // current version's: 50 + 10
+      val onDisk = graft.sinks.ParquetFooters.rowCount(spark.sessionState.newHadoopConf(),
+        graft.sinks.ParquetFooters.files(spark.sessionState.newHadoopConf(),
+          new org.apache.hadoop.fs.Path(table)).map(_.getPath))
+      assert(onDisk == 80 + 50 + 10, s"$onDisk rows on disk")
+      assert(result.rows == 60)
+      assert(ParquetTable.load(spark, table).count() == 60)
+    }
   }
 
   test("an Append text load then a keyed Upsert load run within their Spark-job budget") {

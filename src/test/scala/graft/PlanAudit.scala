@@ -1015,10 +1015,9 @@ object PlanAudit {
 
     // partitioned layout: a partition predicate must prune directories
     audit("partitioned-scan") {
-      import graft.sinks.ParquetTable
       val tmp = java.nio.file.Files.createTempDirectory("graft-part-").toString + "/events_p"
       val ev = graft.Tables.events(spark, sfDir)
-      ParquetTable.storePartitioned(spark, ev, tmp, Seq("event_type"))
+      ev.write.partitionBy("event_type").parquet(tmp)
       val scan = spark.read.parquet(tmp)
         .filter(org.apache.spark.sql.functions.col("event_type") === "click")
       val ps = scan.queryExecution.executedPlan.toString

@@ -24,7 +24,7 @@ class SignatureStoreSpec extends SparkSpec {
     * bucket was not rewritten. */
   private def listFiles(path: String,
                         dataDir: String): Map[String, Seq[String]] =
-    StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap(_._2)
+    StoreSwap.snapshot(spark, path).entriesOf(dataDir).toSeq
       .collect { case (b, gens) if b.startsWith("d_bucket=") =>
         b -> gens.flatMap(g =>
           new java.io.File(s"$path/$dataDir.gens/g$g/$b").listFiles()
@@ -48,7 +48,7 @@ class SignatureStoreSpec extends SparkSpec {
     assert(after("d_bucket=3") == before("d_bucket=3"))
     // the store equals the from-scratch whole-corpus signatures —
     // including the idempotent re-load of doc 1
-    val got = StoreSwap.readDir(spark, path, "data", "d_bucket")
+    val got = StoreSwap.snapshot(spark, path).read("data", "d_bucket")
       .select("doc_id", "k", "mh").orderBy("doc_id", "k").collect().toSeq
     val want = sigs(docs()).orderBy("doc_id", "k").collect().toSeq
     assert(got == want)
@@ -66,7 +66,7 @@ class SignatureStoreSpec extends SparkSpec {
     assert(!after.contains("d_bucket=2"), "emptied bucket dir survived")
     assert(after("d_bucket=0") == before("d_bucket=0"))
     assert(after("d_bucket=1") == before("d_bucket=1"))
-    val got = StoreSwap.readDir(spark, path, "data", "d_bucket")
+    val got = StoreSwap.snapshot(spark, path).read("data", "d_bucket")
       .select("doc_id", "k", "mh").orderBy("doc_id", "k").collect().toSeq
     val want = sigs(docs().filter(col("doc_id") =!= 2L &&
       col("doc_id") =!= 3L)).orderBy("doc_id", "k").collect().toSeq
@@ -209,7 +209,7 @@ class SignatureStoreSpec extends SparkSpec {
     val after = listFiles(path, "shingles")
     assert(after("d_bucket=1") == before("d_bucket=1"))
     assert(after("d_bucket=3") == before("d_bucket=3"))
-    val got = StoreSwap.readDir(spark, path, "shingles", "d_bucket")
+    val got = StoreSwap.snapshot(spark, path).read("shingles", "d_bucket")
       .filter(col("id") === 0L).select("x")
       .collect().map(_.getLong(0)).sorted.toSeq
     val want = Dedup.docShingles(changed, "doc_id", "text", 3)
@@ -220,7 +220,7 @@ class SignatureStoreSpec extends SparkSpec {
     // mutation
     Dedup.forgetDocsFromSignatureStore(spark, path,
       Seq(0L).toDF("doc_id"), "doc_id")
-    assert(StoreSwap.readDir(spark, path, "shingles", "d_bucket")
+    assert(StoreSwap.snapshot(spark, path).read("shingles", "d_bucket")
       .filter(col("id") === 0L).count() == 0, "sidecar rows survived forget")
   }
 
@@ -255,7 +255,7 @@ class SignatureStoreSpec extends SparkSpec {
         n = 3, numHashes = 4), "doc_id")
     Dedup.mergeIntoBandIndex(spark, path,
       changed.select(col("doc_id")), "doc_id")
-    val rowsForDoc0 = StoreSwap.readDir(spark, path, "bands", "bb_bucket")
+    val rowsForDoc0 = StoreSwap.snapshot(spark, path).read("bands", "bb_bucket")
       .filter(col("id") === 0L).count()
     assert(rowsForDoc0 > 2, // > bands ⇒ stale rows present
       s"fixture vacuous: doc 0 has only $rowsForDoc0 band rows")
@@ -264,9 +264,9 @@ class SignatureStoreSpec extends SparkSpec {
     val removed = Dedup.forgetFromBandIndex(spark, path,
       Seq(0L).toDF("doc_id"), "doc_id")
     assert(removed == rowsForDoc0)
-    assert(StoreSwap.readDir(spark, path, "bands", "bb_bucket")
+    assert(StoreSwap.snapshot(spark, path).read("bands", "bb_bucket")
       .filter(col("id") === 0L).count() == 0, "stale band rows survived")
-    assert(StoreSwap.readDir(spark, path, "bands_inv", "d_bucket")
+    assert(StoreSwap.snapshot(spark, path).read("bands_inv", "d_bucket")
       .filter(col("id") === 0L).count() == 0, "inventory rows survived")
   }
 }

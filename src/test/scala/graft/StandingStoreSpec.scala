@@ -80,7 +80,7 @@ class StandingStoreSpec extends SparkSpec {
     * bucket was not rewritten. */
   private def listFiles(path: String,
                         dataDir: String): Map[String, Seq[String]] =
-    StoreSwap.latestSnapshot(spark, path, dataDir).toSeq.flatMap(_._2)
+    StoreSwap.snapshot(spark, path).entriesOf(dataDir).toSeq
       .collect { case (b, gens) if b.startsWith("c_bucket=") =>
         b -> gens.flatMap(g =>
           new java.io.File(s"$path/$dataDir.gens/g$g/$b").listFiles()
@@ -141,8 +141,8 @@ class StandingStoreSpec extends SparkSpec {
         "pruned and unpruned pinned reads disagreed")
       // the codebook at v0 is the original; the latest is the refit
       assert(Similarity.readCodebookAt(spark, path, v0).size == 2)
-      assert(StoreSwap.readVersionedAt(spark, path, "codebook", "part",
-        Similarity.standingStoreVersions(spark, path).last).count() == 4)
+      assert(StoreSwap.snapshot(spark, path, Some(Similarity.standingStoreVersions(spark, path).last))
+        .read("codebook", "part").count() == 4)
     } finally spark.conf.unset("graft.store.snapshotKeep")
   }
 
@@ -170,7 +170,7 @@ class StandingStoreSpec extends SparkSpec {
     // serves the pre-refit codebook
     assert(Similarity.readCodebookAt(spark, path, v0)
       .exists(_._1 == 0L))
-    assert(StoreSwap.readVersionedAt(spark, path, "data", "c_bucket", v0)
+    assert(StoreSwap.snapshot(spark, path, Some(v0)).read("data", "c_bucket")
       .count() == 40)
   }
 
@@ -383,7 +383,7 @@ class StandingStoreSpec extends SparkSpec {
     val n = Similarity.deleteFromStandingStore(spark, path,
       corpus().filter(col("vec_id") % 2 === 0).select("vec_id"), "vec_id")
     assert(n == 20)
-    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
+    val codes = StoreSwap.snapshot(spark, path).read("pq_codes", "c_bucket")
     assert(codes.filter(col("id") % 2 === 0).count() == 0,
       "forgotten ids still have PQ codes")
     assert(codes.count() == 20)
@@ -418,7 +418,7 @@ class StandingStoreSpec extends SparkSpec {
     assert(fresh.nonEmpty)
     val data = Similarity.readStandingStore(spark, path)._1
       .select(col("vec_id").as("id"), col("cluster").as("dc"))
-    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
+    val codes = StoreSwap.snapshot(spark, path).read("pq_codes", "c_bucket")
       .select(col("id"), col("cluster").as("cc"))
     // exactly one code row per store row, and its cluster matches the
     // (possibly fresh) store assignment — no stale drifted-id codes
@@ -454,7 +454,7 @@ class StandingStoreSpec extends SparkSpec {
     // rows would be silently dropped and this 1:1 check fails
     val data = Similarity.readStandingStore(spark, path)._1
       .select(col("vec_id").as("id"), col("cluster").as("dc"))
-    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
+    val codes = StoreSwap.snapshot(spark, path).read("pq_codes", "c_bucket")
       .select(col("id"), col("cluster").as("cc"))
     assert(codes.count() == data.count())
     assert(data.join(codes, "id").filter(col("dc") =!= col("cc")).count() == 0)
@@ -482,7 +482,7 @@ class StandingStoreSpec extends SparkSpec {
     // missing code rows
     val data = Similarity.readStandingStore(spark, path)._1
       .select(col("vec_id").as("id"), col("cluster").as("dc"))
-    val codes = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
+    val codes = StoreSwap.snapshot(spark, path).read("pq_codes", "c_bucket")
       .select(col("id"), col("cluster").as("cc"))
     assert(codes.count() == data.count())
     assert(data.join(codes, "id").filter(col("dc") =!= col("cc")).count() == 0)
@@ -516,7 +516,7 @@ class StandingStoreSpec extends SparkSpec {
     // subvectors and disagree
     val rot = Similarity.whtRotate(
       delta.select(col("vec_id"), col("embedding")), "embedding", "r", 4)
-    val pqcb = StoreSwap.readDir(spark, path, "pq_codebook", "part")
+    val pqcb = StoreSwap.snapshot(spark, path).read("pq_codebook", "part")
     val exp = rot.select(col("vec_id"), explode(array(
         struct(lit(0).as("sub"), slice(col("r"), 1, 2).as("sv")),
         struct(lit(1).as("sub"), slice(col("r"), 3, 2).as("sv")))).as("e"))
@@ -526,7 +526,7 @@ class StandingStoreSpec extends SparkSpec {
       .groupBy(col("vec_id"), col("sub"))
       .agg(min(struct(col("d2"), col("cid"))).as("mn"))
       .select(col("vec_id"), col("sub"), col("mn.cid").as("exp_cid"))
-    val got = StoreSwap.readDir(spark, path, "pq_codes", "c_bucket")
+    val got = StoreSwap.snapshot(spark, path).read("pq_codes", "c_bucket")
       .filter(col("id") % 3 === 0)
       .select(col("id").as("vec_id"), col("codes"))
     assert(got.count() == delta.count())
@@ -564,7 +564,7 @@ class StandingStoreSpec extends SparkSpec {
       Similarity.refitStoreDriftedClusters(spark, path,
         "vec_id", "embedding", drifted, targetClusterSize = 10, iters = 1)
     def rows(path: String, dataDir: String, partCol: String) =
-      StoreSwap.readDir(spark, path, dataDir, partCol).collect()
+      StoreSwap.snapshot(spark, path).read(dataDir, partCol).collect()
         .map(_.toSeq.mkString("|")).sorted.toSeq
     // rows, codes and codebook (ids and centroids)
     def snap(path: String) = (rows(path, "data", "c_bucket"),

@@ -43,7 +43,7 @@ class StoreIngestSpec extends SparkSpec {
 
   private def content(path: String, dataDir: String,
                       partCol: String): Seq[Seq[Any]] = {
-    val df = StoreSwap.readDir(spark, path, dataDir, partCol)
+    val df = StoreSwap.snapshot(spark, path).read(dataDir, partCol)
     df.orderBy(df.columns.map(col): _*).collect().map(_.toSeq).toSeq
   }
 

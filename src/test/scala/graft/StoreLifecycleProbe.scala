@@ -230,7 +230,7 @@ object StoreLifecycleProbe {
     // proof the searches below resolve through the pinned triple: the
     // triple is present in the store manifest
     val pqUnifiedVersioned = graft.operators.StoreSwap
-      .latestSnapshot(spark, store, "pq_meta").nonEmpty
+      .snapshot(spark, store).exists("pq_meta")
     val pqSearchUnifiedSec = t {
       Similarity.pqTopKStoreTwoLevel(spark, store, bigQueries,
         "vec_id", "embedding", m = 4, dsub = 16, k = 5, sProbe = 8,
@@ -267,12 +267,11 @@ object StoreLifecycleProbe {
     val gcVs = StoreSwap.snapshotVersions(spark, store)
     // oldest retained = 2 appends in: base + 200 rows, byte-exact
     val gcRetainedIntact = gcVs.size == 3 &&
-      StoreSwap.readVersionedAt(spark, store, "data", "c_bucket",
-        gcVs.head).count() == gcC0 + 200
+      StoreSwap.snapshot(spark, store, Some(gcVs.head)).read("data", "c_bucket").count() ==
+        gcC0 + 200
     val gcRefusalOk =
       try {
-        StoreSwap.readVersionedAt(spark, store, "data", "c_bucket",
-          gcVs.head - 1)
+        StoreSwap.snapshot(spark, store, Some(gcVs.head - 1)).read("data", "c_bucket")
         false
       } catch {
         case e: RuntimeException =>

@@ -7,6 +7,7 @@ import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 import scala.jdk.CollectionConverters._
 
 /** Store protocol 2 ([[StoreSwap.Protocol]]) is the floor: every
@@ -55,7 +56,7 @@ class StoreProtocolSpec extends SparkSpec {
       "doc_id", "text", batchId = Some(batchId), n = 3, numHashes = 4)
 
   private def content(path: String, dataDir: String, partCol: String) =
-    StoreSwap.readDir(spark, path, dataDir, partCol).collect()
+    StoreSwap.snapshot(spark, path).read(dataDir, partCol).collect()
       .map(_.toSeq.mkString("|")).sorted.toSeq
 
   private def versions(path: String) = StoreSwap.snapshotVersions(spark, path)
@@ -108,7 +109,7 @@ class StoreProtocolSpec extends SparkSpec {
     }
     refused("open")(StoreSwap.open(spark, path))
     refused("read")(Dedup.readSignatureStore(spark, path))
-    refused("readDir")(StoreSwap.readDir(spark, path, "data", "d_bucket"))
+    refused("readDir")(StoreSwap.snapshot(spark, path).read("data", "d_bucket"))
     refused("merge")(Dedup.mergeIntoSignatureStore(spark, path,
       sigs(docs().filter(col("doc_id") === 8L)), "doc_id"))
     refused("transact")(StoreSwap.transact(spark, path) {
@@ -295,6 +296,69 @@ class StoreProtocolSpec extends SparkSpec {
     }
   }
 
+  test("a store read, a pinned read, a judgment and a table load each resolve one manifest") {
+    withFaultFs {
+      val (path, _) = faultPath()
+      build(path)
+      val (table, _) = faultPath()
+      graft.sinks.ParquetTable.store(spark, docs(), table,
+        graft.pipeline.Config.DbConfig())
+      /** (file-system calls, listings of `_v`, manifest reads) of `op`. */
+      def resolves(op: => Any): (Long, Long, Long) = {
+        FaultFs.calls.set(0)
+        FaultFs.byName.clear()
+        op
+        def named(what: String => Boolean) = FaultFs.byName.asScala
+          .collect { case (k, n) if what(k) => n.get }.sum
+        (FaultFs.calls.get, named(_ == "listStatus _v"),
+          named(_.startsWith("open store.v")))
+      }
+      val read = resolves(Dedup.readSignatureStore(spark, path))
+      val live = versions(path).last
+      val pinned = resolves(Dedup.readSignatureStoreAt(spark, path, live))
+      val load = resolves(graft.sinks.ParquetTable.load(spark, table))
+      val judged = resolves(Dedup.lshJudgeStore(spark, path, standing(), probes(),
+        "doc_id", "text", n = 3, numHashes = 4))
+      val stored = resolves(graft.sinks.ParquetTable.store(spark, docs(), table,
+        graft.pipeline.Config.DbConfig(keepContent = true)))
+      // one listing of _v and one manifest read each (readSignatureStore
+      // made 16 calls when it resolved the manifest twice)
+      assert(Seq(read, pinned, load) == Seq((13L, 1L, 1L), (13L, 1L, 1L), (8L, 1L, 1L)),
+        s"read $read, pinned $pinned, load $load")
+      // a judgment takes its bucket count, band layout, shingle width and
+      // three dataDirs from one manifest (45 calls when each resolved it)
+      assert((judged._2, judged._3) == (1L, 1L), s"judged $judged")
+      // a commit lists _v for its base version, its next generation and
+      // its GC, and reads the retained manifests; the row count it
+      // returns reads no manifest
+      assert((stored._2, stored._3) == (3L, 4L), s"stored $stored")
+    }
+  }
+
+  test("a dead holder's lease is broken on the local file system only") {
+    withFaultFs {
+      val (path, local) = faultPath()
+      graft.sinks.ParquetTable.store(spark, docs(), path, graft.pipeline.Config.DbConfig())
+      val lp = Paths.get(local, "_writer_lease")
+      val host = java.lang.management.ManagementFactory.getRuntimeMXBean.getName.split("@", 2)(1)
+      val dead = new ProcessBuilder("true").start()
+      dead.waitFor()
+      val token = s"${dead.pid}@$host#killed"
+      Files.writeString(lp, token)
+      // through FaultFs, a stand-in for a shared file system, the pid is
+      // not checked: the lease holds until it is stale
+      val e = intercept[RuntimeException](graft.sinks.ParquetTable.store(spark, docs(), path,
+        graft.pipeline.Config.DbConfig(keepContent = true)))
+      assert(e.getMessage.contains("writer lease") && e.getMessage.contains(token), e.getMessage)
+      assert(Files.readString(lp) == token)
+      // the same store through the local file system: broken, and the load commits
+      graft.sinks.ParquetTable.store(spark, docs(), local,
+        graft.pipeline.Config.DbConfig(keepContent = true))
+      assert(!Files.exists(lp))
+      assert(graft.sinks.ParquetTable.load(spark, path).count() == 2 * docs().count())
+    }
+  }
+
   test("open on a protocol-2 store makes one file-system call") {
     withFaultFs {
       val (path, _) = faultPath()
@@ -309,8 +373,9 @@ class StoreProtocolSpec extends SparkSpec {
 
 /** The local file system under the `faultfs:` scheme, a
   * `FilterFileSystem` over the raw local one, for tests that register it
-  * in the session conf. It counts calls ([[FaultFs.calls]]) and the
-  * creates, deletes, mkdirs and renames among them ([[FaultFs.writes]]),
+  * in the session conf. It counts calls ([[FaultFs.calls]]), the
+  * creates, deletes, mkdirs and renames among them ([[FaultFs.writes]])
+  * and the reads by file name ([[FaultFs.byName]]),
   * and fails the next rename whose destination name
   * [[FaultFs.failRenameTo]] accepts (returning false, as a failed Hadoop
   * rename does). */
@@ -319,14 +384,18 @@ class FaultFs extends FilterFileSystem(new RawLocalFileSystem {
 }) {
   import FaultFs._
   override def getScheme: String = "faultfs"
+  private def count(op: String, p: Path): Unit = {
+    calls.incrementAndGet()
+    byName.computeIfAbsent(s"$op ${p.getName}", _ => new AtomicLong).incrementAndGet()
+  }
   override def getFileStatus(p: Path): FileStatus = {
-    calls.incrementAndGet(); super.getFileStatus(p)
+    count("getFileStatus", p); super.getFileStatus(p)
   }
   override def listStatus(p: Path): Array[FileStatus] = {
-    calls.incrementAndGet(); super.listStatus(p)
+    count("listStatus", p); super.listStatus(p)
   }
   override def open(p: Path, bufferSize: Int): FSDataInputStream = {
-    calls.incrementAndGet(); super.open(p, bufferSize)
+    count("open", p); super.open(p, bufferSize)
   }
   override def create(p: Path, permission: FsPermission, overwrite: Boolean,
                       bufferSize: Int, replication: Short, blockSize: Long,
@@ -354,8 +423,10 @@ class FaultFs extends FilterFileSystem(new RawLocalFileSystem {
 }
 
 object FaultFs {
-  val calls = new java.util.concurrent.atomic.AtomicLong
-  val writes = new java.util.concurrent.atomic.AtomicLong
+  val calls = new AtomicLong
+  val writes = new AtomicLong
+  /** Reads by "<op> <file name>" (getFileStatus, listStatus, open). */
+  val byName = new java.util.concurrent.ConcurrentHashMap[String, AtomicLong]
   /** The next rename to a destination name this accepts fails; null
     * when no failure is armed. */
   val failRenameTo =

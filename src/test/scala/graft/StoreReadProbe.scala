@@ -80,7 +80,7 @@ object StoreReadProbe {
       spark.read.parquet(plain)
         .filter(col("cluster").isin(touched: _*)).count()
     }
-    t("bucket count read")(StoreSwap.bucketCount(spark, pstore).toLong)
+    t("bucket count read")(StoreSwap.snapshot(spark, pstore).bucketCount.toLong)
     spark.stop()
   }
 }

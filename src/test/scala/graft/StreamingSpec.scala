@@ -8,6 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Structured Streaming surface (SURVEY.md §2.7): file-source micro-batch
   * loads, watermark windowed aggregation, flatMapGroupsWithState. */
@@ -65,7 +66,7 @@ class StreamingSpec extends SparkSpec {
       val good = ParquetTable.load(spark, table).orderBy("k")
         .collect().map(r => (r.getLong(0), r.getString(1)))
       assert(good.toSeq == Seq((1L, "a"), (2L, "b"))) // no null-key row
-      val bad = spark.read.parquet(errs).collect().map(_.getString(0))
+      val bad = ParquetTable.load(spark, errs).collect().map(_.getString(0))
       assert(bad.toSeq == Seq("garbage;;;"))
     } finally q.stop()
   }
@@ -152,7 +153,7 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable()
       mem.addData(2L, 3L, 3L, 9L)
       q.processAllAvailable()
-      val streamed = spark.read.parquet(s"$dir/sketch").drop("batch_id", "run_id")
+      val streamed = ParquetTable.load(spark, s"$dir/sketch").drop("batch_id", "run_id")
       val batch = graft.operators.Sketches.cmsSketch(
         Seq(1L, 2L, 2L, 3L, 2L, 3L, 3L, 9L).toDF("k"), "k", 4, 64)
       assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty,
@@ -163,7 +164,7 @@ class StreamingSpec extends SparkSpec {
       // checkpoint replacement is detected as a new batchId lifetime
       val rid = StreamingLoad.checkpointQueryId(spark, s"$dir/cp")
       assert(rid.isDefined, "checkpoint metadata id not readable")
-      assert(spark.read.parquet(s"$dir/sketch")
+      assert(ParquetTable.load(spark, s"$dir/sketch")
         .select("run_id").head().getString(0) == rid.get,
         "sketch run_id != checkpoint query id")
     } finally q.stop()
@@ -178,12 +179,12 @@ class StreamingSpec extends SparkSpec {
     val b1 = Seq(2L, 3L, 3L, 9L).toDF("k")
     assert(StreamingLoad.mergeSketchBatch(b0, 0L, "k", path, 4, 64))
     assert(StreamingLoad.mergeSketchBatch(b1, 1L, "k", path, 4, 64))
-    val once = spark.read.parquet(path).drop("batch_id", "run_id").collect().toSet
+    val once = ParquetTable.load(spark, path).drop("batch_id", "run_id").collect().toSet
     // crash between swap and checkpoint commit → foreachBatch re-runs
     // batch 1; the batch_id watermark must reject the duplicate delta
     assert(!StreamingLoad.mergeSketchBatch(b1, 1L, "k", path, 4, 64),
       "redelivered batch was merged again")
-    val after = spark.read.parquet(path).drop("batch_id", "run_id").collect().toSet
+    val after = ParquetTable.load(spark, path).drop("batch_id", "run_id").collect().toSet
     assert(after == once, "replay double-counted the standing CMS counters")
     // and a genuinely new batch still applies
     assert(StreamingLoad.mergeSketchBatch(Seq(9L).toDF("k"), 2L, "k", path, 4, 64))
@@ -212,32 +213,53 @@ class StreamingSpec extends SparkSpec {
     assert(!StreamingLoad.mergeSketchBatch(b, 0L, "k", path, 4, 64))
   }
 
-  test("sketchStream migrates a pre-watermark sketch and heals the crash window") {
+  test("a plain parquet sketch (no batch_id watermark) is refused, every file unchanged") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("graft-sketch-migrate-").toString
-    // a sketch written BEFORE the batch_id watermark existed: counters
-    // only. The first merge on new code must treat it as "nothing known
-    // applied" and fold the delta in, not throw UNRESOLVED_COLUMN.
-    val legacy = s"$dir/legacy"
+    val dir = java.nio.file.Files.createTempDirectory("graft-sketch-plain-").toString
+    // a sketch written by a build before sketches were tables: counters
+    // only, a plain parquet directory
+    val plain = s"$dir/plain"
     graft.operators.Sketches.cmsSketch(Seq(1L, 2L).toDF("k"), "k", 4, 64)
-      .coalesce(1).write.parquet(legacy)
-    assert(StreamingLoad.mergeSketchBatch(Seq(2L, 3L).toDF("k"), 7L, "k", legacy, 4, 64))
-    val both = graft.operators.Sketches.cmsSketch(
-      Seq(1L, 2L, 2L, 3L).toDF("k"), "k", 4, 64).collect().toSet
-    assert(spark.read.parquet(legacy).drop("batch_id", "run_id").collect().toSet == both,
-      "legacy sketch was not folded into the merged result")
-    // crash window: live table parked at .old-graft (the state a crash
-    // between atomicOverwrite's two renames leaves). The merge must heal
-    // it and accumulate, not reset the counters to this batch's delta.
-    val parked = s"$dir/parked"
-    graft.operators.Sketches.cmsSketch(Seq(1L, 2L).toDF("k"), "k", 4, 64)
-      .withColumn("batch_id", lit(0L)).coalesce(1).write.parquet(parked)
-    java.nio.file.Files.move(java.nio.file.Paths.get(parked),
-      java.nio.file.Paths.get(parked + ".old-graft"))
-    assert(StreamingLoad.mergeSketchBatch(Seq(2L, 3L).toDF("k"), 1L, "k", parked, 4, 64))
-    assert(spark.read.parquet(parked).drop("batch_id", "run_id").collect().toSet == both,
-      "crash-window sketch was reset to the single batch's delta")
+      .coalesce(1).write.parquet(plain)
+    def files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(plain))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => p.toString -> java.nio.file.Files.readAllBytes(p).toSeq).toMap
+      finally walk.close()
+    }
+    val before = files
+    val e = intercept[IllegalStateException](
+      StreamingLoad.mergeSketchBatch(Seq(2L, 3L).toDF("k"), 7L, "k", plain, 4, 64))
+    assert(e.getMessage.contains(s"store $plain is not a protocol-2 store"), e.getMessage)
+    assert(files == before, "a refused sketch was changed")
+  }
+
+  test("a failed sketch commit keeps the old counters; a redelivered batch applies once") {
+    import spark.implicits._
+    val local = java.nio.file.Files.createTempDirectory("graft-sketch-crash-").toString
+    val path = s"faultfs://$local/sketch"
+    val keys = Seq("fs.faultfs.impl" -> classOf[FaultFs].getName,
+      "fs.faultfs.impl.disable.cache" -> "true")
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      def counters = ParquetTable.load(spark, path).drop("batch_id", "run_id").collect().toSet
+      assert(StreamingLoad.mergeSketchBatch(Seq(1L, 2L).toDF("k"), 0L, "k", path, 4, 64))
+      val first = counters
+      FaultFs.failRenameTo.set(_.startsWith("store.v"))
+      intercept[RuntimeException](
+        StreamingLoad.mergeSketchBatch(Seq(2L, 3L).toDF("k"), 1L, "k", path, 4, 64))
+      assert(FaultFs.failRenameTo.get == null, "no manifest rename was tried")
+      assert(counters == first, "a failed commit changed the sketch")
+      // foreachBatch redelivers batch 1: it applies, once
+      assert(StreamingLoad.mergeSketchBatch(Seq(2L, 3L).toDF("k"), 1L, "k", path, 4, 64))
+      assert(!StreamingLoad.mergeSketchBatch(Seq(2L, 3L).toDF("k"), 1L, "k", path, 4, 64))
+      val both = graft.operators.Sketches.cmsSketch(
+        Seq(1L, 2L, 2L, 3L).toDF("k"), "k", 4, 64).collect().toSet
+      assert(counters == both)
+    } finally {
+      FaultFs.failRenameTo.set(null)
+      keys.foreach { case (k, _) => spark.conf.unset(k) }
+    }
   }
 
   test("flatMapGroupsWithState running totals across batches") {

@@ -171,13 +171,10 @@ class UnifiedStoreSpec extends SparkSpec {
         s"triple rewrite took ${v1 - v0} commits, wanted 1")
       // the OLD triple stays resolvable AS A TRIPLE at v0: flavor,
       // codebook, and codes from the same pinned manifest
-      val oldMeta = StoreSwap.readVersionedAt(spark, path, "pq_meta",
-        "part", v0).head
+      val oldMeta = StoreSwap.snapshot(spark, path, Some(v0)).read("pq_meta", "part").head
       assert(!oldMeta.getAs[Boolean]("residual"))
-      assert(StoreSwap.readVersionedAt(spark, path, "pq_codes",
-        "c_bucket", v0).count() == 40)
-      val newMeta = StoreSwap.readVersionedAt(spark, path, "pq_meta",
-        "part", v1).head
+      assert(StoreSwap.snapshot(spark, path, Some(v0)).read("pq_codes", "c_bucket").count() == 40)
+      val newMeta = StoreSwap.snapshot(spark, path, Some(v1)).read("pq_meta", "part").head
       assert(newMeta.getAs[Boolean]("residual"))
       // the live search serves the new flavor end-to-end
       assert(Similarity.pqTopKStore(spark, path,
@@ -197,7 +194,7 @@ class UnifiedStoreSpec extends SparkSpec {
         }
       }
       assert(versions(path).last == v1)
-      val liveMeta = StoreSwap.readDir(spark, path, "pq_meta", "part").head
+      val liveMeta = StoreSwap.snapshot(spark, path).read("pq_meta", "part").head
       assert(liveMeta.getAs[Boolean]("residual"),
         "a crashed triple rewrite leaked a partial artifact")
     } finally spark.conf.unset("graft.store.snapshotKeep")
@@ -266,22 +263,21 @@ class UnifiedStoreSpec extends SparkSpec {
       // the oldest retained version is the 3rd mutation (4 base docs
       // + 3 ingested); each newer retained version adds one more
       vs.foreach { v =>
-        val n = StoreSwap.readVersionedAt(spark, path, "data",
-          "d_bucket", v).select("doc_id").distinct().count()
+        val n = StoreSwap.snapshot(spark, path, Some(v)).read("data", "d_bucket")
+          .select("doc_id").distinct().count()
         assert(n == 7 + (v - vs.head), s"v$v resolved to $n docs")
       }
       // a GC'd version refuses with the retention runbook, never a
       // partial or aliased snapshot
       val ex = intercept[RuntimeException] {
-        StoreSwap.readVersionedAt(spark, path, "data", "d_bucket",
-          vs.head - 1)
+        StoreSwap.snapshot(spark, path, Some(vs.head - 1)).read("data", "d_bucket")
       }
       assert(ex.getMessage.contains("snapshotKeep"), ex.getMessage)
       // generation dirs no retained manifest references are reclaimed:
       // every on-disk gen of `data` must be referenced by SOME kept
       // manifest
       val referenced = vs.flatMap(v =>
-        StoreSwap.snapshotEntriesAt(spark, path, "data", v).values.flatten)
+        StoreSwap.snapshot(spark, path, Some(v)).entriesOf("data").values.flatten)
         .toSet
       val onDisk = new java.io.File(s"$path/data.gens").listFiles()
         .map(_.getName.stripPrefix("g").toLong).toSet
@@ -342,11 +338,11 @@ class UnifiedStoreSpec extends SparkSpec {
       val v0 = versions(path).last
       // the index build recorded the layout in the manifest: bands=2,
       // r=2, idxBuckets=store buckets=8
-      assert(StoreSwap.storeMetaAt(spark, path, "bands.b", Some(v0))
+      assert(StoreSwap.snapshot(spark, path, Some(v0)).storeMeta("bands.b")
         .contains(Seq(2L)))
-      assert(StoreSwap.storeMetaAt(spark, path, "bands.r", Some(v0))
+      assert(StoreSwap.snapshot(spark, path, Some(v0)).storeMeta("bands.r")
         .contains(Seq(2L)))
-      assert(StoreSwap.storeMetaAt(spark, path, "bands.idx", Some(v0))
+      assert(StoreSwap.snapshot(spark, path, Some(v0)).storeMeta("bands.idx")
         .contains(Seq(8L)))
       val probe = Seq(
         (100L, "the quick brown fox jumps over the lazy dog"),
@@ -359,7 +355,7 @@ class UnifiedStoreSpec extends SparkSpec {
       spark.conf.set("graft.lsh.bandIndexBuckets", "3")
       try Dedup.writeBandIndex(spark, path, "doc_id", bands = 2)
       finally spark.conf.unset("graft.lsh.bandIndexBuckets")
-      assert(StoreSwap.storeMetaAt(spark, path, "bands.idx")
+      assert(StoreSwap.snapshot(spark, path).storeMeta("bands.idx")
         .contains(Seq(3L)))
       // live serves under the new layout
       assert(judgeRows(Dedup.lshJudgeStore(spark, path, standing, probe,

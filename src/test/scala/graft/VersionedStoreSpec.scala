@@ -34,6 +34,12 @@ class VersionedStoreSpec extends SparkSpec {
     }.reduce(_ unionByName _)
   }
 
+  /** The current (version, bucket entries) of the store's `data`. */
+  private def latestData(path: String): (Int, Map[String, Seq[Long]]) = {
+    val s = StoreSwap.snapshot(spark, path)
+    (s.version, s.entriesOf("data"))
+  }
+
   private def sigRows(df: org.apache.spark.sql.DataFrame) =
     df.select("doc_id", "k", "mh").orderBy("doc_id", "k").collect().toSeq
 
@@ -43,7 +49,7 @@ class VersionedStoreSpec extends SparkSpec {
     Dedup.writeSignatureStore(sigs(standing), path, "doc_id",
       buckets = 8)
     assert(StoreSwap.snapshotVersions(spark, path) == Seq(0))
-    val (v0, entries0) = StoreSwap.latestSnapshot(spark, path, "data").get
+    val (v0, entries0) = latestData(path)
     // the pre-mutation reader's view, fully materialized for comparison
     val before = sigRows(readResolved(path, "data", entries0))
     assert(before == sigRows(sigs(standing)))
@@ -51,7 +57,7 @@ class VersionedStoreSpec extends SparkSpec {
     Dedup.mergeIntoSignatureStore(spark, path,
       sigs(docs().filter(col("doc_id") === 2L || col("doc_id") === 8L)),
       "doc_id")
-    val (v1, entries1) = StoreSwap.latestSnapshot(spark, path, "data").get
+    val (v1, entries1) = latestData(path)
     assert(v1 == v0 + 1)
     // the OLD resolved snapshot is still complete and byte-identical —
     // its gen dirs were not touched by the commit (grace window)
@@ -91,7 +97,7 @@ class VersionedStoreSpec extends SparkSpec {
       sigRows(sigs(docs().filter(col("doc_id") =!= 8L &&
         col("doc_id") =!= 3L))))
     val (_, entriesPrev) =
-      StoreSwap.latestSnapshot(spark, path, "data").get
+      latestData(path)
     readResolved(path, "data", entriesPrev).count() // dirs all readable
   }
 
@@ -100,7 +106,7 @@ class VersionedStoreSpec extends SparkSpec {
     Dedup.writeSignatureStore(sigs(docs()), path, "doc_id",
       buckets = 8)
     val wantV0 = sigRows(Dedup.readSignatureStore(spark, path)._1)
-    val (v0, _) = StoreSwap.latestSnapshot(spark, path, "data").get
+    val (v0, _) = latestData(path)
     // simulate a mutator that staged and renamed its generation in but
     // died before the manifest rename: readers must not see it
     val orphan = java.nio.file.Paths.get(path, "data.gens", s"g${v0 + 1}",
@@ -126,12 +132,12 @@ class VersionedStoreSpec extends SparkSpec {
     val path = Fixtures.tempDir("graft-vstore-").resolve("emb").toString
     Similarity.writeStandingStore(vecs().filter(col("vec_id") < 10),
       path, "cluster", buckets = 4)
-    val (v0, e0) = StoreSwap.latestSnapshot(spark, path, "data").get
+    val (v0, e0) = latestData(path)
     // APPEND = a new generation ADDED to the touched buckets' gen
     // lists — never a rewrite of standing files
     Similarity.appendToStandingStore(vecs().filter(col("vec_id") >= 10),
       path, "cluster")
-    val (v1, e1) = StoreSwap.latestSnapshot(spark, path, "data").get
+    val (v1, e1) = latestData(path)
     assert(v1 == v0 + 1)
     assert(e1.values.exists(_.length == 2),
       "append did not extend any bucket's generation list")
@@ -142,7 +148,7 @@ class VersionedStoreSpec extends SparkSpec {
     val n = Similarity.deleteFromStandingStore(spark, path,
       Seq(0L, 1L).toDF("vec_id"), "vec_id")
     assert(n == 2)
-    val (_, e2) = StoreSwap.latestSnapshot(spark, path, "data").get
+    val (_, e2) = latestData(path)
     assert(e2("c_bucket=0").length == 1 && e2("c_bucket=1").length == 1,
       "delete rewrite did not replace the touched buckets' gen lists")
     assert(Similarity.readStandingStore(spark, path)._1.count() == 18)
@@ -150,7 +156,7 @@ class VersionedStoreSpec extends SparkSpec {
     val folded = Similarity.compactStandingStore(spark, path,
       maxFilesPerBucket = 1)
     assert(folded.nonEmpty, "cross-generation fragmentation undetected")
-    val (_, e3) = StoreSwap.latestSnapshot(spark, path, "data").get
+    val (_, e3) = latestData(path)
     assert(e3.values.forall(_.length == 1))
     val got = Similarity.readStandingStore(spark, path)._1
       .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
